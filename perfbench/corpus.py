@@ -2,11 +2,12 @@
 """Seeded analytics corpus and its DuckDB oracle hashes, for the `query`
 workload.
 
-    corpus.py gen --seed <n> --scale <x> --out <dir>
+    corpus.py gen --seed <n> --out <dir>
         Writes region, nation, customer, supplier, part, orders, lineitem,
         events, documents and embeddings as one parquet file each, in the
-        shape the engine's queries are declared over. scale 1.0 gives
-        60,000 lineitem rows. The same seed gives the same tables. The seed
+        shape the engine's queries are declared over: 120,000 lineitem
+        rows, 30,000 orders, 20,000 events, 500 documents and 500
+        embeddings. The same seed gives the same tables. The seed
         draws values only: row counts, lines per order, document lengths,
         which documents are near-duplicates and the label of each vector do
         not depend on it, so the work a query does varies little between
@@ -50,10 +51,10 @@ def cents(x):
     return (x / 100.0).astype("float64")
 
 
-def generate(seed, scale, out):
+def generate(seed, out):
     rng = np.random.default_rng(seed)
-    n_cust, n_supp, n_part = int(1500 * scale), max(10, int(100 * scale)), int(2000 * scale)
-    n_ord, n_evt, n_doc, n_vec = int(15000 * scale), int(10000 * scale), 500, 500
+    n_cust, n_supp, n_part = 3000, 200, 4000
+    n_ord, n_evt, n_doc, n_vec = 30000, 20000, 500, 500
     os.makedirs(out, exist_ok=True)
 
     def write(name, cols):
@@ -112,7 +113,7 @@ def generate(seed, scale, out):
         "event_id": np.arange(n_evt, dtype=np.int64),
         "ts": pa.array(np.datetime64("2024-01-01T00:00:00", "us") + ts.astype("timedelta64[us]"),
                        type=pa.timestamp("us")),
-        "user_id": rng.integers(0, min(150, n_cust), n_evt).astype(np.int64),
+        "user_id": rng.integers(0, 150, n_evt).astype(np.int64),
         "event_type": rng.choice(["click", "error", "purchase", "signup", "view"], n_evt),
         "value": cents(rng.integers(1, 49003, n_evt)),
         "props": [f'{{"k": {k}}}' for k in rng.integers(0, 100, n_evt)]})
@@ -195,7 +196,6 @@ def main():
     sub = ap.add_subparsers(dest="cmd", required=True)
     g = sub.add_parser("gen")
     g.add_argument("--seed", type=int, required=True)
-    g.add_argument("--scale", type=float, default=1.0)
     g.add_argument("--out", required=True)
     o = sub.add_parser("oracle")
     o.add_argument("--dir", required=True)
@@ -203,7 +203,7 @@ def main():
     o.add_argument("--out", required=True)
     a = ap.parse_args()
     if a.cmd == "gen":
-        generate(a.seed, a.scale, a.out)
+        generate(a.seed, a.out)
     else:
         oracle(a.dir, a.sql, a.out)
 

@@ -1,14 +1,15 @@
 #!/usr/bin/env python3
 """Traced-run report.
 
-    python3 perfbench/report.py [--seed <n>] [--seconds <s>] [--workloads load,maintain,query]
+    python3 perfbench/report.py [--seed <n>]
 
-Run from the repository root. For each workload it makes one untraced run
-(end-to-end metrics) and one traced run (per-layer metrics) on the same
-seed, and prints a markdown report: the end-to-end figures, self time per
-layer within the timed window, span coverage of that window, the share of
-it outside any Spark job (also within the sink calls alone), and the
-tracing overhead (traced minus untraced pass time). The span dumps stay in
+Run from the repository root. For each workload BENCHMARK.json declares, it
+makes one untraced run (end-to-end metrics) and one traced run (per-layer
+metrics) of its run_seconds on the same seed, and prints a markdown
+report: the end-to-end figures, self time per layer within the timed
+window, span coverage of that window, the share of it outside any Spark job
+(also within the sink calls alone), and the tracing overhead (traced minus
+untraced pass time). The span dumps stay in
 .bench_build/spans-<workload>-<seed>.json.
 """
 import argparse
@@ -18,6 +19,7 @@ import subprocess
 import sys
 
 HERE = os.path.dirname(os.path.abspath(__file__))
+BENCHMARK = json.load(open(os.path.join(os.path.dirname(HERE), "BENCHMARK.json")))
 
 
 def run(workload, seed, seconds, trace):
@@ -32,16 +34,13 @@ def run(workload, seed, seconds, trace):
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--seed", type=int, default=1)
-    ap.add_argument("--seconds", type=int,
-                    default=json.load(open(os.path.join(os.path.dirname(HERE), "BENCHMARK.json")))
-                    ["run_seconds"])
-    ap.add_argument("--workloads", default="load,maintain,query")
     a = ap.parse_args()
+    seconds = BENCHMARK["run_seconds"]
 
-    print(f"# perfbench report (seed {a.seed}, {a.seconds} s runs, local[4])\n")
-    for w in a.workloads.split(","):
-        plain_res, e2e = run(w, a.seed, a.seconds, 0)
-        traced_res, layer = run(w, a.seed, a.seconds, 1)
+    print(f"# perfbench report (seed {a.seed}, {seconds} s runs, local[4])\n")
+    for w in [wl["name"] for wl in BENCHMARK["workloads"]]:
+        plain_res, e2e = run(w, a.seed, seconds, 0)
+        traced_res, layer = run(w, a.seed, seconds, 1)
         overhead = layer["trace.pass_s"] / e2e["pass_s"] - 1
         print(f"## {w}\n")
         print(f"untraced: attempted {plain_res['attempted']}, failed {plain_res['failed']}; "

@@ -14,6 +14,7 @@ program cannot be built or a run does not complete.
 """
 import argparse
 import hashlib
+import json
 import os
 import shutil
 import subprocess
@@ -24,13 +25,6 @@ ROOT = os.path.dirname(HERE)
 BUILD = os.path.join(ROOT, ".bench_build")
 HEAP = "2g"
 RUN_TIMEOUT_S = 170
-JVM_OPENS = [
-    "java.base/java.lang", "java.base/java.lang.invoke", "java.base/java.lang.reflect",
-    "java.base/java.io", "java.base/java.net", "java.base/java.nio", "java.base/java.util",
-    "java.base/java.util.concurrent", "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs", "java.base/sun.security.action",
-    "java.base/sun.util.calendar",
-]
 
 
 def fail(msg):
@@ -57,36 +51,43 @@ def source_stamp():
 
 def build():
     """Compiles program and harness unless the stamp says they are current;
-    returns the runtime classpath sbt resolved."""
+    returns the runtime classpath sbt resolved and the program build's
+    --add-opens flags."""
     if not (os.path.isdir(os.path.join(ROOT, "src", "main", "scala"))
             and os.path.isfile(os.path.join(ROOT, "build.sbt"))):
         fail("no program sources next to the benchmark; nothing to build")
     os.makedirs(BUILD, exist_ok=True)
     stamp_file = os.path.join(BUILD, "stamp")
-    cp_file = os.path.join(BUILD, "classpath")
+    out_file = os.path.join(BUILD, "build.json")
     stamp = source_stamp()
-    if (os.path.exists(stamp_file) and os.path.exists(cp_file)
+    if (os.path.exists(stamp_file) and os.path.exists(out_file)
             and open(stamp_file).read() == stamp):
-        return open(cp_file).read().strip()
+        with open(out_file) as f:
+            out = json.load(f)
+        return out["classpath"], out["opens"]
     if shutil.which("sbt") is None:
         fail("sbt not found")
     env = dict(os.environ)
     env.setdefault("COURSIER_MODE", "offline")
     proc = subprocess.run(
         ["sbt", "--batch", "-Dsbt.log.noformat=true", "compile",
-         "export perfbench/Runtime/fullClasspath"],
+         "export perfbench/Runtime/fullClasspath", "print perfbench/javaOptions"],
         cwd=HERE, env=env, stdout=subprocess.PIPE, stderr=subprocess.STDOUT,
         text=True, timeout=700)
     lines = proc.stdout.strip().splitlines()
-    if proc.returncode != 0 or not lines:
+    # `print` lists the JVM flags as "* <flag>" lines after the classpath
+    flags = [l[2:].strip() for l in lines if l.startswith("* ")]
+    rest = [l for l in lines if not l.startswith("* ")]
+    if proc.returncode != 0 or not rest or not flags:
         sys.stderr.write(proc.stdout[-4000:])
         fail("build failed")
-    cp = lines[-1].strip()
-    with open(cp_file, "w") as f:
-        f.write(cp)
+    out = {"classpath": rest[-1].strip(),
+           "opens": [b for a, b in zip(flags, flags[1:]) if a == "--add-opens"]}
+    with open(out_file, "w") as f:
+        json.dump(out, f)
     with open(stamp_file, "w") as f:
         f.write(stamp)
-    return cp
+    return out["classpath"], out["opens"]
 
 
 def main():
@@ -97,7 +98,7 @@ def main():
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
     a = ap.parse_args()
 
-    classpath = build()
+    classpath, opens = build()
     work = os.path.join(BUILD, f"run-{a.workload}-{a.seed}-{a.trace}")
     shutil.rmtree(work, ignore_errors=True)
     tmp = os.path.join(work, "tmp")
@@ -105,7 +106,7 @@ def main():
     cmd = (["java", f"-Xms{HEAP}", f"-Xmx{HEAP}", "-XX:-UsePerfData",
             f"-Djava.io.tmpdir={tmp}",
             f"-Dlog4j2.configurationFile={os.path.join(HERE, 'log4j2.properties')}"]
-           + [x for p in JVM_OPENS for x in ("--add-opens", f"{p}=ALL-UNNAMED")]
+           + [x for p in opens for x in ("--add-opens", p)]
            + ["-cp", classpath, "perfbench.Main",
               "--workload", a.workload, "--seed", str(a.seed),
               "--seconds", str(a.seconds), "--trace", str(a.trace),

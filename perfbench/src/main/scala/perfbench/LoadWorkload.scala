@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path}
 import scala.collection.mutable.ArrayBuffer
 
 import graft.sinks.{CommitStore, DeltaSink, HttpObjectStore, IcebergSink}
-import graft.sources.{CopyTransport, FileTransport, PgCopyBinarySource}
+import graft.sources.PgCopyBinarySource
 
 /** `load`: the paper's pipeline. Seeded COPY BINARY streams are decoded by
   * `PgCopyBinarySource` and written to a fresh Delta table and a fresh
@@ -38,18 +38,13 @@ object LoadWorkload {
   def run(ctx: Ctx): Outcome = {
     val spark = ctx.spark
     val gen = CopyGen(ctx.seed, Streams, RowsPerStream)
-    val rows = Streams.toLong * RowsPerStream
 
-    // set-up: encode the streams and start a store; three times
-    var paths: Seq[String] = Nil
-    var store: Store = null
-    val setupTimes = (1 to SetupReps).map { i =>
-      Stats.time {
-        if (store != null) store.close()
-        paths = gen.writeAll(ctx.dir("streams"))
-        store = new Store(ctx.dir(s"bucket-$i"))
-      }._2
+    // set-up: encode the streams and start a store
+    val (sets, setupS) = Stats.setUp(SetupReps) { i =>
+      (gen.writeAll(ctx.dir("streams")), new Store(ctx.dir(s"bucket-$i")))
     }
+    sets.init.foreach(_._2.close())
+    val (paths, store) = sets.last
     ctx.log("set-up done")
     val copyBytes = paths.map(p => Files.size(java.nio.file.Paths.get(p))).sum.toDouble
     val expected = CopyGen.checksum(gen.expected(spark))
@@ -57,9 +52,9 @@ object LoadWorkload {
     val counters = new StoreCounters
     val sinkStore: CommitStore =
       if (ctx.traced) CountingStore(store.client, counters, ctx.tracer) else store.client
-    def source(ps: Seq[String]) = PgCopyBinarySource(ps.map { p =>
-      if (ctx.traced) CountingTransport(p) else FileTransport(p): CopyTransport
-    }, CopyGen.Cols)
+    def source(ps: Seq[String]) =
+      if (ctx.traced) PgCopyBinarySource(ps.map(CountingTransport(_)), CopyGen.Cols)
+      else PgCopyBinarySource.fromFiles(ps, CopyGen.Cols)
 
     var n = 0
     val opTimes = ArrayBuffer.empty[Double]
@@ -112,7 +107,7 @@ object LoadWorkload {
 
     ctx.log("expected checksums fixed")
     pass() // warm-up: JIT, first-touch class loading, store connections
-    opTimes.clear(); passTimes.clear(); peaks.clear()
+    opTimes.clear(); passTimes.clear(); peaks.clear(); counters.reset()
 
     val serverBefore = store.counters.toMap
     val transportBefore = (TransportCounters.bytes.get, TransportCounters.nanos.get)
@@ -123,7 +118,7 @@ object LoadWorkload {
     }
 
     val endToEnd = Map(
-      "setup_s" -> Stats.median(setupTimes),
+      "setup_s" -> setupS,
       "pass_s" -> Stats.median(passTimes.toSeq),
       "op_p50_ms" -> Stats.quantile(opTimes.toSeq, 0.5) * 1000,
       "op_p90_ms" -> Stats.quantile(opTimes.toSeq, 0.9) * 1000)
@@ -137,7 +132,6 @@ object LoadWorkload {
           selfTest(ctx, paths, expected) ++ Map(
           "sources.transport_s" -> (TransportCounters.nanos.get - transportBefore._2) / 1e9,
           "sources.bytes" -> (TransportCounters.bytes.get - transportBefore._1).toDouble,
-          "sources.rows" -> rows.toDouble * passTimes.size * 2,
           "trace.pass_s" -> Stats.median(passTimes.toSeq),
           "jvm.heap_peak_mb" -> Stats.median(peaks.toSeq))
       }
@@ -145,27 +139,29 @@ object LoadWorkload {
     Outcome(ctx.attempted, ctx.failed, endToEnd, perLayer, passTimes.toSeq)
   }
 
-  /** Decode-only probes, outside the timed window: the load's task time
-    * minus its transport time, and the old-generation peak's growth per MB
-    * of COPY input between half-size and full-size streams (near 0 for a
+  /** Decode-only probes, outside the timed window: the rows the decoder
+    * emits for the full-size streams, the load's task time minus its
+    * transport time, and the old-generation peak's growth per MB of COPY
+    * input between half-size and full-size streams (near 0 for a
     * bounded-memory source, near 1 for one that buffers each stream).
     */
   private def sourcesProbe(ctx: Ctx, paths: Seq[String]): Map[String, Double] = {
     val spark = ctx.spark
     val half = CopyGen(ctx.seed, Streams, RowsPerStream / 2).writeAll(ctx.dir("streams-half"))
-    def decode(ps: Seq[String]): (Double, Double, Long) = {
+    def decode(ps: Seq[String]): (Long, Double, Double, Long) = {
       Heap.reset()
       val before = ctx.jobs.snapshot
       val t0 = TransportCounters.nanos.get
-      PgCopyBinarySource(ps.map(CountingTransport(_)), CopyGen.Cols)
-        .load(spark).write.format("noop").mode("overwrite").save()
+      val rows = PgCopyBinarySource(ps.map(CountingTransport(_)), CopyGen.Cols)
+        .load(spark).queryExecution.toRdd.count()
       val d = ctx.jobs.snapshot - before
-      (Heap.peakMb, d.runMs / 1e3 - (TransportCounters.nanos.get - t0) / 1e9,
+      (rows, Heap.peakMb, d.runMs / 1e3 - (TransportCounters.nanos.get - t0) / 1e9,
         ps.map(p => Files.size(java.nio.file.Paths.get(p))).sum)
     }
-    val (peakHalf, _, bytesHalf) = decode(half)
-    val (peakFull, decodeS, bytesFull) = decode(paths)
-    Map("sources.decode_task_s" -> decodeS,
+    val (_, peakHalf, _, bytesHalf) = decode(half)
+    val (rows, peakFull, decodeS, bytesFull) = decode(paths)
+    ctx.attempt("sources probe decodes every generated row")(rows == Streams.toLong * RowsPerStream)
+    Map("sources.rows" -> rows.toDouble, "sources.decode_task_s" -> decodeS,
       "sources.heap_slope" -> (peakFull - peakHalf) / ((bytesFull - bytesHalf) / 1048576.0))
   }
 

@@ -110,13 +110,13 @@ object Main {
           case "query" => QueryWorkload.run(ctx)
           case other => throw new IllegalArgumentException(s"unknown workload: $other")
         }
-        System.err.println(s"[perfbench] pass seconds: ${out.passes.map(Json.num).mkString(" ")}; " +
+        System.err.println(s"[perfbench] pass seconds: ${out.passes.mkString(" ")}; " +
           f"process CPU ${Heap.cpuSeconds}%.2f s, workload wall ${(System.nanoTime() - t0) / 1e9}%.2f s")
         if (traced) ctx.tracer.dump(work.resolve("spans.json"), s"$workload-$seed")
         val (metrics, key) =
           if (traced) (out.perLayer, "per_layer") else (out.endToEnd, "end_to_end")
         if (traced) System.err.println("[perfbench] measured: " +
-          metrics.toSeq.sortBy(_._1).map { case (k, v) => s"$k=${Json.num(v)}" }.mkString(" "))
+          metrics.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString(" "))
         val declared = Json.declared(Paths.get(opts("benchmark")), key)
         println(Json.result(out.failed == 0, out.attempted, out.failed, metrics,
           declared, zeroFill = traced))
@@ -134,16 +134,10 @@ object Main {
 }
 
 object Json {
-  def num(v: Double): String =
-    if (v.isNaN || v.isInfinite) "0" else java.math.BigDecimal.valueOf(v).toPlainString
+  val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
-  def str(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+  /** A measured value as printed: a ratio over an empty base reads 0. */
+  def num(v: Double): Double = if (v.isNaN || v.isInfinite) 0.0 else v
 
   /** The result line. `declared` is BENCHMARK.json's list for
     * this mode, in order: every declared metric is printed, a per-layer one
@@ -154,19 +148,22 @@ object Json {
       zeroFill: Boolean): String = {
     val undeclared = metrics.keySet -- declared.map(_._1)
     require(undeclared.isEmpty, s"metrics missing from BENCHMARK.json: ${undeclared.toSeq.sorted}")
-    val ms = declared.map { case (k, unit) =>
+    val root = mapper.createObjectNode()
+    root.put("correct", correct).put("attempted", attempted).put("failed", failed)
+    val ms = root.putObject("metrics")
+    declared.foreach { case (k, unit) =>
       val v = metrics.getOrElse(k,
         if (zeroFill) 0.0 else throw new IllegalStateException(s"metric $k not measured"))
-      s"${str(k)}: {\"value\": ${num(v)}, \"unit\": ${str(unit)}}"
-    }.mkString(", ")
-    s"""{"correct": $correct, "attempted": $attempted, "failed": $failed, "metrics": {$ms}}"""
+      ms.putObject(k).put("value", num(v)).put("unit", unit)
+    }
+    mapper.writeValueAsString(root)
   }
 
   /** (name, unit) of the metrics BENCHMARK.json declares under `key`. */
   def declared(benchmarkJson: Path, key: String): Seq[(String, String)] = {
     import scala.jdk.CollectionConverters._
-    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(benchmarkJson.toFile)
-    root.get(key).elements().asScala.map(m => m.get("name").asText() -> m.get("unit").asText()).toSeq
+    mapper.readTree(benchmarkJson.toFile).get(key).elements().asScala
+      .map(m => m.get("name").asText() -> m.get("unit").asText()).toSeq
   }
 }
 
@@ -181,6 +178,15 @@ object Stats {
     s(lo) + (s(hi) - s(lo)) * (pos - lo)
   }
   def median(xs: Seq[Double]): Double = quantile(xs, 0.5)
+
+  /** Runs a workload's set-up `reps + 1` times and returns every result
+    * with `setup_s`: the median seconds of all but the first run, whose
+    * class loading and JIT would otherwise decide the spread.
+    */
+  def setUp[T](reps: Int)(body: Int => T): (Seq[T], Double) = {
+    val runs = (0 to reps).map(i => time(body(i)))
+    (runs.map(_._1), median(runs.tail.map(_._2)))
+  }
 
   def time[T](body: => T): (T, Double) = {
     val t0 = System.nanoTime()

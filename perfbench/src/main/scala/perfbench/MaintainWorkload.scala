@@ -20,8 +20,13 @@ object MaintainWorkload {
   val BaseRows = 50000L
   val AppendRows = 5000L
   val AppendsPerFormat = 5
+  /** The warm-up cycle's tables and appends per format: small, but enough
+    * to reach every verb, a range read included.
+    */
+  val WarmupBaseRows = 5000L
+  val WarmupAppends = 2
   val MergeRows = 2000
-  val SetupReps = 3
+  val SetupReps = 2
   /** Width of one row in fixed-width form: the "input byte" of the
     * bytes-per-input-byte ratio.
     */
@@ -74,18 +79,18 @@ object MaintainWorkload {
     val store: CommitStore =
       if (ctx.traced) CountingStore(CommitStore.Local, counters, ctx.tracer) else CommitStore.Local
 
-    def base(i: Int): (Table, Table) = {
+    def base(i: Int, n: Long): (Table, Table) = {
       val d = new Table("delta", ctx.dir(s"base-$i").resolve("delta").toString)
       val ib = new Table("iceberg", ctx.dir(s"base-$i").resolve("iceberg").toString)
-      val rows = rowsFor(spark.range(0, BaseRows).toDF(), ctx.seed, 0)
+      val rows = rowsFor(spark.range(0, n).toDF(), ctx.seed, 0)
       DeltaSink.write(rows, d.path)
       IcebergSink.writeWithRetry(rows, ib.path, IcebergSink.CreateExclusive)
-      d.add(0, BaseRows)
-      ib.add(0, BaseRows)
+      d.add(0, n)
+      ib.add(0, n)
       (d, ib)
     }
-    val built = (1 to SetupReps).map(i => Stats.time(base(i)))
-    val setupTimes = built.map(_._2)
+    // set-up: both base tables, from the same seeded rows each time
+    val (built, setupS) = Stats.setUp(SetupReps)(base(_, BaseRows))
     ctx.log("set-up done")
 
     val opTimes = ArrayBuffer.empty[Double]
@@ -110,12 +115,12 @@ object MaintainWorkload {
       (r.getLong(0), r.getLong(1))
     }
 
-    def cycle(c: Int, d: Table, ib: Table): Unit = {
+    def cycle(c: Int, d: Table, ib: Table, appends: Int): Unit = {
       ctx.tracer.span("bench/gc")(Heap.reset())
       val t0 = System.nanoTime()
       // burst of small appends, both formats, with range reads mixed in
-      (0 until AppendsPerFormat).foreach { j =>
-        val lo = BaseRows + (c.toLong * AppendsPerFormat + j) * AppendRows
+      (0 until appends).foreach { j =>
+        val lo = BaseRows + (c.toLong * appends + j) * AppendRows
         val batch = rowsFor(spark.range(lo, lo + AppendRows).toDF(), ctx.seed, 1)
         Seq(d, ib).foreach { t =>
           val (_, s) = Stats.time(op(t, "append") {
@@ -178,18 +183,22 @@ object MaintainWorkload {
       }
     }
 
-    // no warm-up cycle: the set-up's base writes warm the write path, and a
-    // cycle is longer than the measuring window
-    val (d, ib) = built(0)._1
+    // warm-up: a short cycle on a small spare pair of tables, so that the
+    // timed cycle is not the first call of any verb in this JVM
+    val (wd, wib) = base(-1, WarmupBaseRows)
+    cycle(0, wd, wib, WarmupAppends)
+    opTimes.clear(); cycleTimes.clear(); peaks.clear(); counters.reset()
+
+    val (d, ib) = built.last
     ctx.log("timed window starts")
     val deadline = System.nanoTime() + ctx.seconds * 1000000000L
     var c = 0
     val (_, _, window) = Layers.timed(ctx) {
-      while (cycleTimes.isEmpty || System.nanoTime() < deadline) { cycle(c, d, ib); c += 1 }
+      while (cycleTimes.isEmpty || System.nanoTime() < deadline) { cycle(c, d, ib, AppendsPerFormat); c += 1 }
     }
 
     val endToEnd = Map(
-      "setup_s" -> Stats.median(setupTimes),
+      "setup_s" -> setupS,
       "pass_s" -> Stats.median(cycleTimes.toSeq),
       "op_p50_ms" -> Stats.quantile(opTimes.toSeq, 0.5) * 1000,
       "op_p90_ms" -> Stats.quantile(opTimes.toSeq, 0.9) * 1000)

@@ -1,6 +1,6 @@
 package perfbench
 
-import java.nio.file.{FileAlreadyExistsException, Files, Path}
+import java.nio.file.{FileAlreadyExistsException, Path}
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
@@ -53,11 +53,12 @@ final class Tracer(val enabled: Boolean) {
 
   /** Writes every span as one JSON array (name, start, end, parent, run). */
   def dump(path: Path, runId: String): Unit = {
-    val rows = done.sortBy(_.id).map { s =>
-      s"""{"id": ${s.id}, "parent": ${s.parent}, "name": ${Json.str(s.name)}, """ +
-        s""""start_ns": ${s.start}, "end_ns": ${s.end}, "run": ${Json.str(runId)}}"""
+    val rows = Json.mapper.createArrayNode()
+    done.sortBy(_.id).foreach { s =>
+      rows.addObject().put("id", s.id).put("parent", s.parent).put("name", s.name)
+        .put("start_ns", s.start).put("end_ns", s.end).put("run", runId)
     }
-    Files.writeString(path, rows.mkString("[\n", ",\n", "\n]\n"))
+    Json.mapper.writeValue(path.toFile, rows)
   }
 }
 
@@ -153,6 +154,9 @@ object JobProbe {
 final class StoreCounters {
   private val counts = new ConcurrentHashMap[String, (AtomicLong, AtomicLong, AtomicLong)]()
   val conflicts = new AtomicLong()
+
+  /** Forgets every tally, so that a warm-up does not count. */
+  def reset(): Unit = { counts.clear(); conflicts.set(0L) }
 
   def record[T](op: String, bytes: => Long)(body: => T): T = {
     val t0 = System.nanoTime()

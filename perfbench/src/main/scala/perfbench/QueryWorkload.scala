@@ -1,9 +1,9 @@
 package perfbench
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path}
 
 import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.Row
 
@@ -24,8 +24,7 @@ object QueryWorkload {
   val Tpch: Seq[String] = Seq(1, 3, 13, 18).map(i => s"q_tpch_q$i")
   val Llm: Seq[String] = Seq("q_dedup_substring", "q_bm25", "q_hll_sketch")
   val Families: Seq[(String, Seq[String])] = Seq("tpch" -> Tpch, "llm" -> Llm)
-  val Scale = 2.0
-  val SetupReps = 3
+  val SetupReps = 2
 
   def run(ctx: Ctx): Outcome = {
     val spark = ctx.spark
@@ -34,27 +33,23 @@ object QueryWorkload {
     val names = Families.flatMap(_._2)
     names.foreach(n => require(queries.contains(n) && oracles.contains(n), s"no query or oracle for $n"))
 
-    // set-up: generate the corpus and register its tables; three times
-    var corpus: Path = null
-    val setupTimes = (1 to SetupReps).map { i =>
-      Stats.time {
-        corpus = ctx.dir(s"corpus-$i")
-        ctx.python("corpus.py", "gen", "--seed", ctx.seed.toString, "--scale", Scale.toString,
-          "--out", corpus.toString)
-        Tables.all.foreach(t => Tables(spark, corpus.toString, t).schema)
-      }._2
+    // set-up: generate the corpus and register its tables
+    val (corpora, setupS) = Stats.setUp(SetupReps) { i =>
+      val corpus = ctx.dir(s"corpus-$i")
+      ctx.python("corpus.py", "gen", "--seed", ctx.seed.toString, "--out", corpus.toString)
+      Tables.all.foreach(t => Tables(spark, corpus.toString, t).schema)
+      corpus
     }
-    val dir = corpus.toString
+    val dir = corpora.last.toString
     ctx.log("set-up done")
 
     // expected results, fixed before timing
     val sqlFile = ctx.work.resolve("oracle_sql.json")
-    Files.writeString(sqlFile, names.map(n => s"${Json.str(n)}: ${Json.str(oracles(n))}")
-      .mkString("{", ",\n", "}"))
+    Json.mapper.writeValue(sqlFile.toFile, names.map(n => n -> oracles(n)).toMap.asJava)
     val expectedFile = ctx.work.resolve("expected.json")
     ctx.python("corpus.py", "oracle", "--dir", dir, "--sql", sqlFile.toString,
       "--out", expectedFile.toString)
-    val expected = new com.fasterxml.jackson.databind.ObjectMapper().readTree(expectedFile.toFile)
+    val expected = Json.mapper.readTree(expectedFile.toFile)
 
     ctx.log("oracle hashes fixed")
     // warm-up pass, which is also the check: every result against its oracle
@@ -115,7 +110,7 @@ object QueryWorkload {
     }
 
     val endToEnd = Map(
-      "setup_s" -> Stats.median(setupTimes),
+      "setup_s" -> setupS,
       "pass_s" -> Stats.median(passTimes.toSeq),
       "op_p50_ms" -> Stats.quantile(opTimes.toSeq, 0.5) * 1000,
       "op_p90_ms" -> Stats.quantile(opTimes.toSeq, 0.9) * 1000)
