@@ -275,9 +275,8 @@ object Ops {
     // metrics × (sample + stats) fixed cost; a 100 TB frame gets MORE
     // partitions than the session constant. Rank values are exact under
     // any partitioning, so results are unchanged. Explicit `partitions`
-    // wins; rows-per-partition overridable for experiments.
-    val rowsPerPart = sys.props.get("graft.rank.rowsPerPartition")
-      .map(_.toLong).getOrElse(1000000L)
+    // wins.
+    val rowsPerPart = 1000000L
     val p =
       if (partitions > 0) partitions
       else math.max(1L, math.min((c + rowsPerPart - 1) / rowsPerPart, 65536L)).toInt

@@ -209,16 +209,12 @@ object SimilarityQueries extends QueryModule {
       // cosine 0.97 with 4× smaller buckets than the round-4 (8 × 12):
       // candidate cost scales with tables × n²/2^bits, so the two extra
       // bits cut the rerank's embedding-fetch joins — the dominant cost —
-      // 4× for a 2.4-point recall trade. The -Dgraft.lsh.* overrides
-      // exist for A/B runs (see SURVEY §4.5); signature computation is
-      // compute-bound, so the scan fans out to every core first (no-op at
-      // real scale). No oracle (approximate by construction); DedupSpec
+      // 4× for a 2.4-point recall trade (SURVEY §4.5); signature
+      // computation is compute-bound, so the scan fans out to every core
+      // first (no-op at real scale). No oracle (approximate by construction); DedupSpec
       // measures recall >= 0.9 on planted near-duplicates.
       (s, dir) => {
-        val cfg = graft.operators.AnnLsh.Config(
-          tables = sys.props.getOrElse("graft.lsh.tables", "8").toInt,
-          bits = sys.props.getOrElse("graft.lsh.bits", "14").toInt,
-          bucketCap = sys.props.getOrElse("graft.lsh.bucketCap", "128").toInt)
+        val cfg = graft.operators.AnnLsh.Config()
         graft.operators.AnnLsh
           .annCosineTopK(fanOutScan(t(s, dir, "embeddings")), "vec_id", "embedding", cfg)
           .select(col("qid"), col("cid"),
@@ -471,10 +467,7 @@ object SimilarityQueries extends QueryModule {
         // bits=14 keeps expected occupancy ~n/2^14 per table, and the gate
         // corpus is the embeddings table, not an adversarial constant-
         // vector feed (the cap's reason to exist).
-        val cfg = graft.operators.AnnLsh.Config(
-          tables = sys.props.getOrElse("graft.lsh.tables", "8").toInt,
-          bits = sys.props.getOrElse("graft.lsh.bits", "14").toInt,
-          bucketCap = sys.props.getOrElse("graft.lsh.bucketCap", "0").toInt)
+        val cfg = graft.operators.AnnLsh.Config(bucketCap = 0)
         val ann = graft.operators.AnnLsh.annCosineTopK(
           fanOutScan(emb.unionByName(twins)), "vec_id", "embedding", cfg)
         val found = ann.filter(col("qid") >= offset)

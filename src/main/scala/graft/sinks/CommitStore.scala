@@ -1,32 +1,39 @@
 package graft.sinks
 
-import java.nio.file.{FileAlreadyExistsException, Files, Path, StandardOpenOption}
+import java.io.File
+import java.nio.file.{FileAlreadyExistsException, Files, Path, StandardCopyOption, StandardOpenOption}
 import java.util.concurrent.ConcurrentHashMap
 
-/** The atomic commit primitive both table sinks build their optimistic
-  * concurrency on: put-if-absent of a fully-formed metadata object at a
-  * version-numbered key. Whoever creates the key owns that version; a loser
-  * sees [[FileAlreadyExistsException]], re-reads table state and retries at
-  * the next version.
+import scala.jdk.CollectionConverters._
+
+/** The one storage seam both table sinks drive: every byte a sink
+  * writes, reads back or reclaims goes through these members, so a sink
+  * verb has one code path whatever the table lives on.
   *
-  * This is the same primitive the reference negotiates with its object
-  * store: `copy_if_not_exists` / conditional put for the Delta commit
-  * (/root/reference/src/delta_destination.rs:377-402) and `write_exclusive`
-  * for the Iceberg metadata version (iceberg_destination.rs:349-367). The
-  * store-specific spellings:
+  * The commit primitive is put-if-absent of a fully-formed metadata
+  * object at a version-numbered key. Whoever creates the key owns that
+  * version; a loser sees [[FileAlreadyExistsException]], re-reads table
+  * state and retries at the next version. This is the primitive the
+  * reference negotiates with its object store: `copy_if_not_exists` /
+  * conditional put for the Delta commit (its
+  * `src/delta_destination.rs:377-402`) and `write_exclusive` for the
+  * Iceberg metadata version (`iceberg_destination.rs:349-367`).
+  * Store-specific spellings:
   *
-  *  - local/HDFS-like FS: `CREATE_NEW` open ([[CommitStore.Local]] — the
-  *    only impl runnable in this offline container);
-  *  - S3: `PutObject` with `If-None-Match: *` (natively supported since
-  *    2024; earlier S3 needed a DynamoDB lock table — that variant is out
-  *    of scope);
+  *  - local/HDFS-like FS: `CREATE_NEW` open ([[CommitStore.Local]]);
+  *  - S3: `PutObject` with `If-None-Match: *` ([[HttpObjectStore]] speaks
+  *    this over HTTP);
   *  - GCS: upload with `x-goog-if-generation-match: 0`;
   *  - Azure ADLS: create with `If-None-Match: *`.
   *
-  * Everything else the sinks write (data files, manifests, checkpoints) is
-  * staged under unique names where plain puts are safe; ONLY the
-  * version-claiming put needs the conditional semantics, which is why the
-  * interface is this narrow.
+  * Everything else the sinks write (data files, manifests, checkpoints)
+  * carries unique names or replaces atomically, so the data plane
+  * ([[putObject]], [[readObject]], [[deleteObject]], [[listPrefix]]) needs
+  * no conditional semantics. Its implementations here are the local
+  * filesystem's; an [[ObjectStore]] overrides them with the store
+  * protocol. The only other difference between the two is the
+  * [[stagingFor]]/[[publish]] pair: a local store lets Spark write in
+  * place and publishes by rename or not at all.
   */
 trait CommitStore {
 
@@ -46,6 +53,60 @@ trait CommitStore {
     * bounded at one shard in memory.
     */
   def taskIO: Option[TaskIO] = None
+
+  /** Writes `bytes` at `target`, replacing any object there atomically:
+    * a reader sees the old bytes or the new, never a partial file (a
+    * temp sibling, then an atomic rename).
+    */
+  def putObject(target: Path, bytes: Array[Byte]): Unit = {
+    Files.createDirectories(target.getParent)
+    val tmp = Files.createTempFile(target.getParent, ".graft-put-", ".tmp")
+    try {
+      Files.write(tmp, bytes)
+      Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING,
+        StandardCopyOption.ATOMIC_MOVE): Unit
+    } finally Files.deleteIfExists(tmp): Unit
+  }
+
+  /** The object's bytes; a missing object throws. */
+  def readObject(target: Path): Array[Byte] = Files.readAllBytes(target)
+
+  /** Removes the object at `target` — the abort/vacuum reclaim. Absent
+    * objects are a no-op (aborts may race their own failed uploads).
+    */
+  def deleteObject(target: Path): Unit = Files.deleteIfExists(target): Unit
+
+  /** Objects at or under `prefix`, empty when nothing is there — what a
+    * replace-in-place needs to find the stale parts at its target.
+    */
+  def listPrefix(prefix: Path): Seq[Path] = listPrefixMeta(prefix).map(_._1)
+
+  /** [[listPrefix]] with each object's last-modified millis — all an
+    * age-gated sweep ([[IcebergSink.removeOrphanFiles]]) needs per object.
+    */
+  def listPrefixMeta(prefix: Path): Seq[(Path, Long)] =
+    if (!Files.exists(prefix)) Nil
+    else {
+      val s = Files.walk(prefix)
+      try s.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(p => p -> Files.getLastModifiedTime(p).toMillis).toVector
+      finally s.close()
+    }
+
+  /** Where a writer puts the file or directory of files bound for
+    * `target`. A local store answers `target` itself: Spark writes in
+    * place and [[publish]] has nothing to move.
+    */
+  def stagingFor(target: File): File = target
+
+  /** Makes the staged file `staged` the object `target`: a rename here
+    * (none when the file was written in place).
+    */
+  def publish(staged: Path, target: Path): Unit =
+    if (staged != target) {
+      Files.createDirectories(target.getParent)
+      Files.move(staged, target, StandardCopyOption.REPLACE_EXISTING): Unit
+    }
 }
 
 /** The narrow read/write surface a TASK needs ([[CommitStore.taskIO]]).
@@ -61,56 +122,84 @@ trait TaskIO extends Serializable {
   def write(absPath: String, bytes: Array[Byte]): Unit
 }
 
-/** A [[CommitStore]] that ALSO transports data objects — the full
-  * object-store surface the reference's pipeline drives
-  * (/root/reference/src/delta_destination.rs:70-477 is one flow: multipart
-  * data-file uploads + a conditional-put log commit). When a sink is given
-  * an [[ObjectStore]], its staged parquet files are PUBLISHED through
-  * [[putObject]] (an [[HttpObjectStore.Client]] multiparts them over TCP)
-  * instead of a local rename, so every byte of the table — data and log —
-  * travels the store protocol.
+/** A [[CommitStore]] whose objects live behind a store protocol, not on a
+  * local filesystem — the reference's pipeline (its
+  * `src/delta_destination.rs:70-477` is one flow: multipart data-file
+  * uploads + a conditional-put log commit).
+  * Implementations override the five data-plane members
+  * ([[putObject]], [[readObject]], [[deleteObject]], [[listPrefix]],
+  * [[listPrefixMeta]]); staging and publishing are written here once over
+  * them: Spark writes into a private temp dir and each staged file is
+  * published with [[putObject]], so every byte of the table — data and
+  * log — travels the store protocol.
   */
 trait ObjectStore extends CommitStore {
 
-  /** Publishes a fully-staged data object at `target`. Data files carry
-    * txn-unique names, so plain-put overwrite semantics are safe (only the
-    * version-claiming log put needs [[putIfAbsent]]).
-    */
-  def putObject(target: Path, bytes: Array[Byte]): Unit
+  /** A fresh temp path (not yet created, as Spark's writer wants). */
+  override def stagingFor(target: File): File = {
+    val d = Files.createTempDirectory("graft-stage-")
+    Files.delete(d)
+    d.toFile
+  }
 
-  /** Removes the object at `target` — the abort/vacuum reclaim. Absent
-    * objects are a no-op (aborts may race their own failed uploads).
+  /** Uploads the staged bytes. Buffering one file is bounded by the
+    * sinks' maxRecordsPerFile; a production client would stream parts.
     */
-  def deleteObject(target: Path): Unit
-
-  /** Keys at or under `prefix` (the ListObjectsV2 analogue), empty when
-    * nothing is there. What a replace-in-place needs: the checkpoint
-    * publisher lists and deletes any stale parts at its target version
-    * before uploading, mirroring the local path's delete-then-rename —
-    * otherwise a failed partial upload or same-version re-checkpoint
-    * leaves orphan part files no vacuum ever reclaims.
-    */
-  def listPrefix(prefix: Path): Seq[Path]
-
-  /** Keys at or under `prefix` WITH their last-modified millis — the
-    * ListObjectsV2 metadata a store returns with every page anyway.
-    * What an age-gated sweep ([[IcebergSink.removeOrphanFiles]]) needs:
-    * the orphan decision is (key, mtime, referenced?) per object, so the
-    * whole sweep can run off one listing with no per-object HEAD calls.
-    */
-  def listPrefixMeta(prefix: Path): Seq[(Path, Long)]
-
-  /** The object's bytes (the GetObject analogue) — what the sinks' own
-    * metadata-plane reads (deletion-vector sidecars, manifest merges)
-    * travel when the table lives in a bucket: a real store has no local
-    * open, and routing these through the protocol is what makes the
-    * sink's every byte store-resident. Missing objects throw
-    * [[java.io.FileNotFoundException]].
-    */
-  def readObject(target: Path): Array[Byte]
+  override def publish(staged: Path, target: Path): Unit =
+    putObject(target, Files.readAllBytes(staged))
 }
 
 object CommitStore {
+
+  /** Spark's `part-*.parquet` output under `dir`, partition subdirs
+    * included (a `_delta_log` is not descended), in path order.
+    */
+  private[sinks] def partFiles(dir: File): Seq[File] = {
+    def walk(f: File): Seq[File] =
+      if (f.isDirectory && f.getName != "_delta_log")
+        Option(f.listFiles()).map(_.toSeq).getOrElse(Nil).flatMap(walk)
+      else if (f.getName.startsWith("part-") && f.getName.endsWith(".parquet")) Seq(f)
+      else Nil
+    walk(dir).sortBy(_.getPath)
+  }
+
+  /** Deletes a local file or directory tree, bottom-up. */
+  private[sinks] def deleteTree(f: File): Unit = {
+    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteTree))
+    f.delete(): Unit
+  }
+
+  /** The written-file harvester both sinks share: publishes the part files
+    * one Spark write left under `staging` into `tableDir`, at
+    * `relOf(stagedRelativePath, index)`. `describe(stagedFile, tableRel)`
+    * reads each file's footer before it is published; None drops the file
+    * (an empty part). A failed publish reclaims every object this harvest
+    * already published before rethrowing — an uncommitted write leaves
+    * zero bytes behind — and a staging dir apart from the table is always
+    * removed. Returns the published files' descriptions.
+    */
+  private[sinks] def harvest[A](store: CommitStore, staging: File, tableDir: File,
+      relOf: (Path, Int) => String = (rel, _) => rel.toString)(
+      describe: (File, String) => Option[A]): Seq[A] = {
+    val published = scala.collection.mutable.ArrayBuffer[Path]()
+    try {
+      new File(staging, "_SUCCESS").delete()
+      partFiles(staging).zipWithIndex.flatMap { case (f, i) =>
+        val rel = relOf(staging.toPath.relativize(f.toPath), i)
+        val described = describe(f, rel)
+        if (described.isEmpty) f.delete()
+        else {
+          val target = new File(tableDir, rel).toPath
+          store.publish(f.toPath, target)
+          published += target
+        }
+        described
+      }
+    } catch { case e: Throwable =>
+      published.foreach(p => scala.util.Try(store.deleteObject(p)))
+      throw e
+    } finally if (staging != tableDir) deleteTree(staging)
+  }
 
   /** Local-filesystem store: `CREATE_NEW` is the put-if-absent (POSIX
     * O_EXCL — atomic on local FS and NFSv3+).

@@ -8,9 +8,6 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.types._
@@ -236,7 +233,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     * r13-era tables replay.
     */
   private def dvBitmapBytes(table: String, dv: DvInfo, store: CommitStore): Array[Byte] =
-    dvBitmapBytesVia(table, dv, p => readBytes(store, new File(p)))
+    dvBitmapBytesVia(table, dv, p => store.readObject(Paths.get(p)))
 
   /** [[dvBitmapBytes]] with caller-supplied byte I/O — the form a TASK can
     * run (executors hold a [[TaskIO]], never the driver's store handle).
@@ -327,14 +324,6 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     (dvRel, fileBytes, uuid, descs)
   }
 
-  /** Sidecar bytes through the store protocol when one is given — a real
-    * bucket has no local open (VERDICT r13 item 2).
-    */
-  private def readBytes(store: CommitStore, f: File): Array[Byte] = store match {
-    case os: ObjectStore => os.readObject(f.toPath)
-    case _ => Files.readAllBytes(f.toPath)
-  }
-
   /** A data file's absolute location: add paths are table-relative,
     * except a SHALLOW CLONE's ([[cloneTable]]), which are absolute
     * pointers into the source table (spec: add.path may be either).
@@ -394,38 +383,18 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     val existing = Option(dir.listFiles()).map(_.toSeq).getOrElse(Nil)
     if (existing.nonEmpty) {
       if (!overwrite) return false
-      existing.foreach(deleteRecursively)
+      existing.foreach(CommitStore.deleteTree)
     }
-    val conf = df.sparkSession.sessionState.newHadoopConf()
-    def sparkWrite(target: String): Unit = {
-      // mode=overwrite only placates Spark's path-exists check: the
-      // refuse-unless-overwrite decision was already taken above, and the
-      // target has been emptied by then.
-      val writer = clusterByPartitions(df, partitionBy).write
-        .mode("overwrite")
-        .option("compression", "snappy")
-        .option("maxRecordsPerFile", maxRecordsPerFile)
-      (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
-        .parquet(target)
-      // Spark leaves a _SUCCESS marker; the Delta log is the commit record.
-      new File(target, "_SUCCESS").delete()
-    }
-    // Data-file placement: a plain store writes parquet straight into the
-    // table; an ObjectStore stages locally and PUBLISHES each file through
-    // the store's multipart upload — the reference's single pipeline
+    // Data files: a local store lets Spark write straight into the table;
+    // an ObjectStore stages them and PUBLISHES each through the store's
+    // multipart upload — the reference's single pipeline
     // (delta_destination.rs:70-229: upload data files, then conditionally
-    // put the commit), end to end over the store protocol.
-    val adds: Seq[AddEntry] = store match {
-      case _: ObjectStore =>
-        val staging = Files.createTempDirectory("graft-delta-write").toFile
-        try {
-          sparkWrite(staging.getPath)
-          publishAll(store, dir, staging, conf, (rel, _) => rel.toString)
-        } finally deleteRecursively(staging)
-      case _ =>
-        sparkWrite(table)
-        dataFiles(dir).map(f => toAddEntry(dir, f, conf))
-    }
+    // put the commit). Spark's mode=overwrite only placates its
+    // path-exists check: the refuse-unless-overwrite decision was already
+    // taken above, and the target has been emptied by then.
+    val adds = writeStaged(store, dir, clusterByPartitions(df, partitionBy),
+      partitionBy, maxRecordsPerFile, (rel, _) => rel.toString,
+      store.stagingFor(dir))
     Files.createDirectories(logDir(table))
 
     val now = System.currentTimeMillis()
@@ -518,8 +487,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     commitAtomic(store, versionFile(table, 0), commit0)
     try commitAtomic(store, versionFile(table, 1), adds.map(a => addJson(a)))
     catch { case e: Throwable =>
-      scala.util.Try(deleteData(store, dir, "_delta_log/" +
-        versionFile(table, 0).getFileName.toString))
+      scala.util.Try(store.deleteObject(versionFile(table, 0)))
       throw e
     }
     adds.size
@@ -732,33 +700,20 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     val evolvedSchema: Option[StructType] =
       if (!mergeSchema) { SchemaGate.enforce(df.schema, state.schema); None }
       else evolveAgainst(state.schema)
-    val staging = Files.createTempDirectory("graft-delta-txn").toFile
     val txn = java.util.UUID.randomUUID().toString
-    val adds = try {
-      // stage under the EVOLVED mapping: an added column's fresh physical
-      // name must reach the file, not its logical name
-      val writer = toPhysical(
-          clusterByPartitions(withConstraintCheck(df, state.configuration),
-            state.partitionColumns),
-          evolvedSchema.getOrElse(state.schema)).write
-        .mode("overwrite")
-        .option("compression", "snappy")
-        .option("maxRecordsPerFile", MaxRecordsPerFile)
-      (if (state.partitionColumns.nonEmpty)
-         writer.partitionBy(state.partitionColumns: _*)
-       else writer).parquet(staging.getPath)
-      val conf = df.sparkSession.sessionState.newHadoopConf()
-      // preserve the partition subpath; txn-unique base names
-      publishAll(store, dir, staging, conf, (rel, i) =>
-        Option(rel.getParent).map(_.toString + "/").getOrElse("") +
-          f"part-$i%05d-$txn.snappy.parquet")
-    } finally deleteRecursively(staging)
+    // stage under the EVOLVED mapping: an added column's fresh physical
+    // name must reach the file, not its logical name
+    val adds = writeStaged(store, dir, toPhysical(
+        clusterByPartitions(withConstraintCheck(df, state.configuration),
+          state.partitionColumns),
+        evolvedSchema.getOrElse(state.schema)),
+      state.partitionColumns, MaxRecordsPerFile, txnNames(txn, ".snappy.parquet"))
     val txnLine = txn0.map { case (appId, v) =>
       s"""{"txn":{"appId":${esc(appId)},"version":$v}}"""
     }
     // any abort path removes the already-published data files — they are
     // not in the log, so leaving them would only waste space until vacuum
-    def abort(): Unit = adds.foreach(a => deleteData(store, dir, a.path))
+    def abort(): Unit = reclaim(store, table, adds.map(_.path))
     var attempt = 0
     // Version through which the txn watermark has been validated. A replay
     // of THIS batch (two speculative executions of one foreachBatch) can
@@ -1005,29 +960,17 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     val current =
       if (clusterCols.isEmpty) source
       else ZOrder.cluster(source, clusterCols, nTailFiles) // shared with IcebergSink
-    val staging = Files.createTempDirectory("graft-delta-compact").toFile
-    val conf = spark.sessionState.newHadoopConf()
-    val adds = try {
-      // coalesce is shuffle-free and hits the bin-pack formula when the
-      // inputs are evenly sized (append-written files are); a DV-masked
-      // input's SURVIVORS are arbitrarily skewed, so only a round-robin
-      // repartition keeps every bin under maxRecordsPerFile — the shuffle
-      // is bounded by the live rows the compaction rewrites anyway
-      val packed =
-        if (clusterCols.nonEmpty) current // ZOrder.cluster already sized it
-        else if (tail.exists(_.dv.isDefined)) current.repartition(nTailFiles)
-        else current.coalesce(nTailFiles)
-      val writer = toPhysical(packed, state.schema).write
-        .mode("overwrite")
-        .option("compression", "snappy")
-        .option("maxRecordsPerFile", maxRecordsPerFile)
-      (if (state.partitionColumns.nonEmpty)
-         writer.partitionBy(state.partitionColumns: _*)
-       else writer).parquet(staging.getPath)
-      publishAll(store, dir, staging, conf, (rel, i) =>
-        Option(rel.getParent).map(_.toString + "/").getOrElse("") +
-          f"part-$i%05d-$txn.c000.snappy.parquet")
-    } finally deleteRecursively(staging)
+    // coalesce is shuffle-free and hits the bin-pack formula when the
+    // inputs are evenly sized (append-written files are); a DV-masked
+    // input's SURVIVORS are arbitrarily skewed, so only a round-robin
+    // repartition keeps every bin under maxRecordsPerFile — the shuffle
+    // is bounded by the live rows the compaction rewrites anyway
+    val packed =
+      if (clusterCols.nonEmpty) current // ZOrder.cluster already sized it
+      else if (tail.exists(_.dv.isDefined)) current.repartition(nTailFiles)
+      else current.coalesce(nTailFiles)
+    val adds = writeStaged(store, dir, toPhysical(packed, state.schema),
+      state.partitionColumns, maxRecordsPerFile, txnNames(txn))
     val now = System.currentTimeMillis()
     val removes = tail.map(a =>
       s"""{"remove":{"path":${esc(a.path)},"deletionTimestamp":$now,"dataChange":false}}""")
@@ -1068,7 +1011,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
         val liveNow = replay(spark, table, None).live.map(_.path).toSet
         validatedThrough = latest
         if (!inputPaths.subsetOf(liveNow)) {
-          adds.foreach(a => deleteData(store, dir, a.path))
+          reclaim(store, table, adds.map(_.path))
           throw new IllegalStateException(
             s"concurrent compaction of $table; compaction aborted")
         }
@@ -1080,7 +1023,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
       } catch {
         case e: java.nio.file.FileAlreadyExistsException =>
           if (attempt >= 3) {
-            adds.foreach(a => deleteData(store, dir, a.path))
+            reclaim(store, table, adds.map(_.path))
             throw new IllegalStateException(
               s"concurrent writers on $table; compaction aborted", e)
           }
@@ -1128,24 +1071,13 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     val nFiles = math.max(1,
       ((survivorRows + maxRecordsPerFile - 1) / maxRecordsPerFile).toInt)
     val survivors = readState(spark, table, state.copy(live = dvAdds), store)
-    val staging = Files.createTempDirectory("graft-delta-reorg").toFile
     val txn = java.util.UUID.randomUUID().toString
-    val conf = spark.sessionState.newHadoopConf()
-    val adds = try {
-      // DV-masked survivors are arbitrarily skewed across the touched
-      // files — round-robin repartition keeps every bin under the cap
-      // (the same reasoning as compact's DV branch)
-      val writer = toPhysical(survivors.repartition(nFiles), state.schema).write
-        .mode("overwrite")
-        .option("compression", "snappy")
-        .option("maxRecordsPerFile", maxRecordsPerFile)
-      (if (state.partitionColumns.nonEmpty)
-         writer.partitionBy(state.partitionColumns: _*)
-       else writer).parquet(staging.getPath)
-      publishAll(store, dir, staging, conf, (rel, i) =>
-        Option(rel.getParent).map(_.toString + "/").getOrElse("") +
-          f"part-$i%05d-$txn.c000.snappy.parquet")
-    } finally deleteRecursively(staging)
+    // DV-masked survivors are arbitrarily skewed across the touched
+    // files — round-robin repartition keeps every bin under the cap
+    // (the same reasoning as compact's DV branch)
+    val adds = writeStaged(store, dir,
+      toPhysical(survivors.repartition(nFiles), state.schema),
+      state.partitionColumns, maxRecordsPerFile, txnNames(txn))
     val now = System.currentTimeMillis()
     val removes = dvAdds.map(a =>
       s"""{"remove":{"path":${esc(a.path)},"deletionTimestamp":$now,"dataChange":false}}""")
@@ -1162,7 +1094,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
         val liveNow = replay(spark, table, None).live.map(_.path).toSet
         validatedThrough = latest
         if (!inputPaths.subsetOf(liveNow)) {
-          adds.foreach(a => deleteData(store, dir, a.path))
+          reclaim(store, table, adds.map(_.path))
           throw new IllegalStateException(
             s"concurrent rewrite of $table; reorg aborted")
         }
@@ -1174,7 +1106,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
       } catch {
         case e: java.nio.file.FileAlreadyExistsException =>
           if (attempt >= 3) {
-            adds.foreach(a => deleteData(store, dir, a.path))
+            reclaim(store, table, adds.map(_.path))
             throw new IllegalStateException(
               s"concurrent writers on $table; reorg aborted", e)
           }
@@ -1294,23 +1226,12 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     val kept = readState(spark, table, state.copy(live = touched), store)
       .join(srcKeys, keys, "left_anti")
     val newData = kept.unionByName(writes)
-    val staging = Files.createTempDirectory("graft-delta-merge").toFile
     val txn = java.util.UUID.randomUUID().toString
-    val conf = spark.sessionState.newHadoopConf()
-    val adds = try {
-      // CHECK constraints gate the merge's inserted/updated rows inside
-      // the same write job (kept rows re-pass trivially)
-      val writer = toPhysical(withConstraintCheck(newData, state.configuration),
-        state.schema).write.mode("overwrite")
-        .option("compression", "snappy")
-        .option("maxRecordsPerFile", MaxRecordsPerFile)
-      (if (state.partitionColumns.nonEmpty)
-         writer.partitionBy(state.partitionColumns: _*)
-       else writer).parquet(staging.getPath)
-      publishAll(store, dir, staging, conf, (rel, i) =>
-        Option(rel.getParent).map(_.toString + "/").getOrElse("") +
-          f"part-$i%05d-$txn.c000.snappy.parquet")
-    } finally deleteRecursively(staging)
+    // CHECK constraints gate the merge's inserted/updated rows inside the
+    // same write job (kept rows re-pass trivially)
+    val adds = writeStaged(store, dir,
+      toPhysical(withConstraintCheck(newData, state.configuration), state.schema),
+      state.partitionColumns, MaxRecordsPerFile, txnNames(txn))
     val now = System.currentTimeMillis()
     val removes = touched.map(a =>
       s"""{"remove":{"path":${esc(a.path)},"deletionTimestamp":$now,"dataChange":true}}""")
@@ -1349,27 +1270,15 @@ object DeltaSink extends org.apache.spark.internal.Logging {
         .withColumn(ct, lit("insert"))
       val cdcDf = (Seq(updPre) ++ delPre.toSeq ++ Seq(updPost, ins))
         .reduce(_.unionByName(_))
-      val cdcStaging = Files.createTempDirectory("graft-delta-cdc").toFile
-      try {
-        toPhysical(cdcDf, state.schema).write.mode("overwrite")
-          .option("compression", "snappy")
-          .option("maxRecordsPerFile", MaxRecordsPerFile)
-          .parquet(cdcStaging.getPath)
-        publishAll(store, dir, cdcStaging, conf,
-          (_, i) => f"_change_data/cdc-$i%05d-$txn.snappy.parquet")
-      } finally deleteRecursively(cdcStaging)
+      writeStaged(store, dir, toPhysical(cdcDf, state.schema), Nil,
+        MaxRecordsPerFile, cdcNames(txn))
     }
     val cdcLines = cdcAdds.map(a =>
       s"""{"cdc":{"path":${esc(a.path)},"partitionValues":{},""" +
         s""""size":${a.size},"dataChange":false}}""")
-    val lines = removes ++ adds.map(a => addJson(a)) ++ cdcLines
-    try commitAtomic(store, versionFile(table, state.version + 1), lines)
-    catch {
-      case e: java.nio.file.FileAlreadyExistsException =>
-        (adds ++ cdcAdds).foreach(a => deleteData(store, dir, a.path))
-        throw new IllegalStateException(
-          s"concurrent commit on $table during merge; re-run the merge", e)
-    }
+    commitOrFail(store, table, state.version + 1,
+      removes ++ adds.map(a => addJson(a)) ++ cdcLines, "merge",
+      (adds ++ cdcAdds).map(_.path))
     (touched.size, state.live.size - touched.size, adds.size)
   }
 
@@ -1431,33 +1340,14 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     val replacement = replacementOf(matched, state.schema)
     val keptRows = touchedRows.filter(!coalesce(expr(predicate), lit(false)))
     val rewrite = replacement.map(keptRows.unionByName(_)).getOrElse(keptRows)
-    val staging = Files.createTempDirectory(s"graft-delta-$opName").toFile
     val txn = java.util.UUID.randomUUID().toString
-    val conf = spark.sessionState.newHadoopConf()
-    val adds = try {
-      val writer = toPhysical(withConstraintCheck(rewrite, state.configuration),
-        state.schema).write.mode("overwrite")
-        .option("compression", "snappy")
-        .option("maxRecordsPerFile", MaxRecordsPerFile)
-      (if (state.partitionColumns.nonEmpty)
-         writer.partitionBy(state.partitionColumns: _*)
-       else writer).parquet(staging.getPath)
-      publishAll(store, dir, staging, conf, (rel, i) =>
-        Option(rel.getParent).map(_.toString + "/").getOrElse("") +
-          f"part-$i%05d-$txn.c000.snappy.parquet")
-    } finally deleteRecursively(staging)
-    val cdcAdds: Seq[AddEntry] = if (!changeDataFeed) Nil else {
-      val cdcStaging = Files.createTempDirectory("graft-delta-cdc").toFile
-      try {
-        toPhysical(imagesOf(matched, replacement), state.schema)
-          .write.mode("overwrite")
-          .option("compression", "snappy")
-          .option("maxRecordsPerFile", MaxRecordsPerFile)
-          .parquet(cdcStaging.getPath)
-        publishAll(store, dir, cdcStaging, conf,
-          (_, i) => f"_change_data/cdc-$i%05d-$txn.snappy.parquet")
-      } finally deleteRecursively(cdcStaging)
-    }
+    val adds = writeStaged(store, dir,
+      toPhysical(withConstraintCheck(rewrite, state.configuration), state.schema),
+      state.partitionColumns, MaxRecordsPerFile, txnNames(txn))
+    val cdcAdds: Seq[AddEntry] =
+      if (!changeDataFeed) Nil
+      else writeStaged(store, dir, toPhysical(imagesOf(matched, replacement),
+        state.schema), Nil, MaxRecordsPerFile, cdcNames(txn))
     val matchedRows =
       if (changeDataFeed)
         cdcAdds.map(a =>
@@ -1470,14 +1360,9 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     val cdcLines = cdcAdds.map(a =>
       s"""{"cdc":{"path":${esc(a.path)},"partitionValues":{},""" +
         s""""size":${a.size},"dataChange":false}}""")
-    val lines = removes ++ adds.map(a => addJson(a)) ++ cdcLines
-    try commitAtomic(store, versionFile(table, state.version + 1), lines)
-    catch {
-      case e: java.nio.file.FileAlreadyExistsException =>
-        (adds ++ cdcAdds).foreach(a => deleteData(store, dir, a.path))
-        throw new IllegalStateException(
-          s"concurrent commit on $table during $opName; re-run the $opName", e)
-    }
+    commitOrFail(store, table, state.version + 1,
+      removes ++ adds.map(a => addJson(a)) ++ cdcLines, opName,
+      (adds ++ cdcAdds).map(_.path))
     matchedRows
   }
 
@@ -1684,8 +1569,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
             // keys are a no-op) — zero bytes behind an aborted write
             (0 until shards).foreach { pid =>
               val uuid = new java.util.UUID(tMsb, tLsb ^ pid.toLong)
-              scala.util.Try(
-                deleteData(store, dir, s"$DvPrefix/deletion_vector_$uuid.bin"))
+              reclaim(store, table, Seq(s"$DvPrefix/deletion_vector_$uuid.bin"))
             }
             throw e
           } finally bOld.destroy()
@@ -1700,20 +1584,13 @@ object DeltaSink extends org.apache.spark.internal.Logging {
             fresh.toLocalIterator().asScala.grouped(FilesPerDvShard)
               .zipWithIndex.flatMap { case (chunk, i) =>
                 val (dvRel, fileBytes, _, ds) = packDvShard(tableAbs, tMsb,
-                  tLsb, i, chunk, oldByRel, p => readBytes(store, new File(p)))
-                val target = new File(dir, dvRel)
-                store match {
-                  case os: ObjectStore => os.putObject(target.toPath, fileBytes)
-                  case _ =>
-                    target.getParentFile.mkdirs()
-                    Files.write(target.toPath, fileBytes): Unit
-                }
+                  tLsb, i, chunk, oldByRel, p => store.readObject(Paths.get(p)))
+                store.putObject(new File(dir, dvRel).toPath, fileBytes)
                 publishedRels += dvRel
                 ds
               }.toVector
           } catch { case e: Throwable =>
-            publishedRels.foreach(p =>
-              scala.util.Try(deleteData(store, dir, p)))
+            reclaim(store, table, publishedRels.toSeq)
             throw e
           }
       }
@@ -1722,7 +1599,6 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     val publishedDv: Seq[String] = descs
       .map(d => s"$DvPrefix/deletion_vector_" +
         s"${new java.util.UUID(d.uuidMsb, d.uuidLsb)}.bin").distinct
-    val conf = spark.sessionState.newHadoopConf()
     val txn = java.util.UUID.randomUUID().toString.take(8)
     val matchedRows = matched.select(state.schema.fieldNames.map(col).toIndexedSeq: _*)
     val replacement = replacementOf(matchedRows, state.schema)
@@ -1731,43 +1607,20 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     // failure from here to the commit reclaims everything published so
     // far: an uncommitted transaction leaves zero bytes behind.
     val dataAdds: Seq[AddEntry] = try {
-      replacement match {
-        case None => Nil
-        case Some(rep) =>
-          val staging = Files.createTempDirectory("graft-delta-dv-rep").toFile
-          try {
-            // CHECK constraints gate an update's post-images too
-            val w = toPhysical(withConstraintCheck(rep, meta.configuration),
-              state.schema).write.mode("overwrite")
-              .option("compression", "snappy")
-              .option("maxRecordsPerFile", MaxRecordsPerFile)
-            (if (state.partitionColumns.nonEmpty)
-               w.partitionBy(state.partitionColumns: _*)
-             else w).parquet(staging.getPath)
-            publishAll(store, dir, staging, conf, (rel, i) =>
-              Option(rel.getParent).map(_.toString + "/").getOrElse("") +
-                f"part-$i%05d-$txn.c000.snappy.parquet")
-          } finally deleteRecursively(staging)
-      }
+      // CHECK constraints gate an update's post-images too
+      replacement.toSeq.flatMap(rep => writeStaged(store, dir,
+        toPhysical(withConstraintCheck(rep, meta.configuration), state.schema),
+        state.partitionColumns, MaxRecordsPerFile, txnNames(txn)))
     } catch { case e: Throwable =>
-      publishedDv.foreach(p => scala.util.Try(deleteData(store, dir, p)))
+      reclaim(store, table, publishedDv)
       throw e
     }
     // CDC images (cost ∝ matched rows, same as the CoW path)
     val cdcAdds: Seq[AddEntry] = if (!changeDataFeed) Nil else try {
-      val cdcStaging = Files.createTempDirectory("graft-delta-dv-cdc").toFile
-      try {
-        toPhysical(imagesOf(matchedRows, replacement), state.schema)
-          .write.mode("overwrite")
-          .option("compression", "snappy")
-          .option("maxRecordsPerFile", MaxRecordsPerFile)
-          .parquet(cdcStaging.getPath)
-        publishAll(store, dir, cdcStaging,
-          conf, (_, i) => f"_change_data/cdc-$i%05d-$txn.snappy.parquet")
-      } finally deleteRecursively(cdcStaging)
+      writeStaged(store, dir, toPhysical(imagesOf(matchedRows, replacement),
+        state.schema), Nil, MaxRecordsPerFile, cdcNames(txn))
     } catch { case e: Throwable =>
-      (publishedDv ++ dataAdds.map(_.path)).foreach(p =>
-        scala.util.Try(deleteData(store, dir, p)))
+      reclaim(store, table, publishedDv ++ dataAdds.map(_.path))
       throw e
     }
     // re-add each touched file (same path, new descriptor — last add per
@@ -1813,16 +1666,10 @@ object DeltaSink extends org.apache.spark.internal.Logging {
         (w, Seq(domainJson(RowTrackingDomain,
           s"""{"rowIdHighWaterMark":$newHwm}""")))
       }
-    val lines = bump ++ (newAdds ++ dataAddsFinal).map(a => addJson(a)) ++
-      cdcLines ++ domainLine
-    try commitAtomic(store, versionFile(table, state.version + 1), lines)
-    catch {
-      case e: java.nio.file.FileAlreadyExistsException =>
-        (publishedDv ++ cdcAdds.map(_.path) ++ dataAdds.map(_.path)).foreach(p =>
-          scala.util.Try(deleteData(store, dir, p)))
-        throw new IllegalStateException(
-          s"concurrent commit on $table during $opName; re-run", e)
-    }
+    commitOrFail(store, table, state.version + 1,
+      bump ++ (newAdds ++ dataAddsFinal).map(a => addJson(a)) ++ cdcLines ++
+        domainLine, opName,
+      publishedDv ++ cdcAdds.map(_.path) ++ dataAdds.map(_.path))
     deletedNow
     } finally matched.unpersist(): Unit
   }
@@ -1950,12 +1797,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
       // FULL replayed configuration (a metaData action replaces the map
       // wholesale; dropping it here would strip CHECK constraints)
       meta.configuration ++ mappingConfig(evolved))
-    try commitAtomic(store, versionFile(table, meta.version + 1), bump :+ metaLine)
-    catch {
-      case e: java.nio.file.FileAlreadyExistsException =>
-        throw new IllegalStateException(
-          s"concurrent commit on $table during column evolution; re-run", e)
-    }
+    commitOrFail(store, table, meta.version + 1, bump :+ metaLine, "column evolution")
   }
 
   /** The table's CHECK constraints, from the replayed configuration
@@ -2063,12 +1905,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
         "delta.inCommitTimestampEnablementVersion" -> version.toString,
         "delta.inCommitTimestampEnablementTimestamp" -> ict.toString))
     val info = s"""{"commitInfo":{"inCommitTimestamp":$ict,"timestamp":$ict}}"""
-    try commitAtomic(store, versionFile(table, version), (info +: bump) :+ metaLine)
-    catch {
-      case e: java.nio.file.FileAlreadyExistsException =>
-        throw new IllegalStateException(
-          s"concurrent commit on $table during ICT enablement; re-run", e)
-    }
+    commitOrFail(store, table, version, (info +: bump) :+ metaLine, "ICT enablement")
   }
 
   /** DROPs a CHECK constraint — metadata-only. */
@@ -2105,12 +1942,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
       meta.partitionColumns,
       if (meta.createdTime != 0L) meta.createdTime else System.currentTimeMillis(),
       newConfig ++ mappingConfig(meta.schema))
-    try commitAtomic(store, versionFile(table, meta.version + 1), bump :+ metaLine)
-    catch {
-      case e: java.nio.file.FileAlreadyExistsException =>
-        throw new IllegalStateException(
-          s"concurrent commit on $table during constraint change; re-run", e)
-    }
+    commitOrFail(store, table, meta.version + 1, bump :+ metaLine, "constraint change")
   }
 
   /** Writes a parquet checkpoint of the current log state plus the
@@ -2177,71 +2009,31 @@ object DeltaSink extends org.apache.spark.internal.Logging {
           col("stats"), col("deletionVector"), col("baseRowId"),
           col("defaultRowCommitVersion")).as("add"),
         nullAs("txn"), nullAs("domainMetadata")))
-    // Stage INSIDE _delta_log: the final step is then a same-filesystem
-    // directory rename — Files.move of a non-empty directory cannot
-    // copy-fallback across mounts, and a cross-FS failure after deleting
-    // the previous checkpoint would leave _last_checkpoint dangling.
+    // Multi-part checkpoint: the PARQUET DIRECTORY is the checkpoint
+    // (readers just spark.read.parquet it, same as the single-file form
+    // older tables carry) — one writer task per live-set partition, no
+    // driver bottleneck, no single giant file at scale. The new parts are
+    // published FIRST (each put replaces atomically, so a same-version
+    // re-checkpoint never empties an already-published dir, and a failed
+    // re-publish leaves _last_checkpoint on a complete checkpoint), THEN
+    // only the stale keys not in the new part set are reclaimed (a failed
+    // partial publish or a different part count would otherwise strand
+    // orphan parts that shadow-pad snapshot reads forever). The pointer
+    // flips last, with an atomic put: a concurrent reader never sees a
+    // partial _last_checkpoint.
     val target = checkpointFile(table, meta.version)
-    store match {
-      case os: ObjectStore =>
-        // Store path: stage the checkpoint parquet locally, UPLOAD the new
-        // parts first (object PUTs replace atomically, so a same-version
-        // re-checkpoint never empties an already-published dir — deleting
-        // first would leave _last_checkpoint referencing a missing
-        // checkpoint if the re-upload died mid-flight, and concurrent
-        // readers would see a partially-emptied dir during the
-        // network-slow window), THEN reclaim only the stale keys not in
-        // the new part set (a failed partial upload or a different
-        // partition count would otherwise strand orphan parts that
-        // shadow-pad snapshot reads forever). Finally flip
-        // _last_checkpoint with a plain put — the server's
-        // tmp+atomic-move gives the same no-partial-pointer guarantee as
-        // the local write-then-rename below.
-        val staging = Files.createTempDirectory("graft-ckpt-stage").toFile
-        try {
-          df.write.mode("overwrite").option("compression", "snappy")
-            .parquet(staging.getPath)
-          new File(staging, "_SUCCESS").delete()
-          val fresh = dataFiles(staging).map { src =>
-            val key = target.resolve(src.getName)
-            os.putObject(key, Files.readAllBytes(src.toPath))
-            key
-          }.toSet
-          os.listPrefix(target).filterNot(fresh).foreach(os.deleteObject)
-        } finally deleteRecursively(staging)
-      case _ =>
-        // Stage INSIDE _delta_log: the final step is then a same-filesystem
-        // directory rename — Files.move of a non-empty directory cannot
-        // copy-fallback across mounts, and a cross-FS failure after deleting
-        // the previous checkpoint would leave _last_checkpoint dangling.
-        val staging = Files.createTempDirectory(logDir(table), "ckpt-staging-").toFile
-        try {
-          // Multi-part checkpoint: the PARQUET DIRECTORY is the checkpoint
-          // (readers just spark.read.parquet it, same as the single-file form
-          // older tables carry) — one writer task per live-set partition, no
-          // driver bottleneck, no single giant file at scale.
-          df.write.mode("overwrite").option("compression", "snappy")
-            .parquet(staging.getPath)
-          new File(staging, "_SUCCESS").delete()
-          deleteRecursively(target.toFile) // re-checkpoint at same version
-          Files.move(staging.toPath, target)
-        } finally deleteRecursively(staging)
-    }
-    val ptr = s"""{"version":${meta.version}}"""
-    store match {
-      case os: ObjectStore =>
-        os.putObject(lastCheckpointFile(table),
-          (ptr + "\n").getBytes(StandardCharsets.UTF_8))
-      case _ =>
-        // write-then-rename: a concurrent reader must never see a partial
-        // _last_checkpoint (it would fail the JSON parse and abort the read)
-        val tmp = logDir(table).resolve(
-          s"_last_checkpoint.tmp-${java.util.UUID.randomUUID()}")
-        Files.write(tmp, (ptr + "\n").getBytes(StandardCharsets.UTF_8))
-        Files.move(tmp, lastCheckpointFile(table),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE): Unit
-    }
+    val staging = Files.createTempDirectory("graft-ckpt-stage").toFile
+    try {
+      df.write.mode("overwrite").option("compression", "snappy")
+        .parquet(staging.getPath)
+      val fresh = CommitStore.partFiles(staging).map { src =>
+        val key = target.resolve(src.getName)
+        store.publish(src.toPath, key)
+        key
+      }.toSet
+      store.listPrefix(target).filterNot(fresh).foreach(store.deleteObject)
+    } finally CommitStore.deleteTree(staging)
+    putPointer(store, table, s"""{"version":${meta.version}}""")
     meta.version
   }
 
@@ -2286,14 +2078,10 @@ object DeltaSink extends org.apache.spark.internal.Logging {
             .contains("true"), "inCommitTimestamp") :+ "v2Checkpoint")
           .distinct.sorted
         def lst(fs: Seq[String]) = fs.map(esc).mkString("[", ",", "]")
-        try commitAtomic(store, versionFile(table, meta0.version + 1),
+        commitOrFail(store, table, meta0.version + 1,
           Seq(s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,""" +
-            s""""readerFeatures":${lst(rf)},"writerFeatures":${lst(wf)}}}"""))
-        catch {
-          case e: java.nio.file.FileAlreadyExistsException =>
-            throw new IllegalStateException(
-              s"concurrent commit on $table during v2Checkpoint enablement; re-run", e)
-        }
+            s""""readerFeatures":${lst(rf)},"writerFeatures":${lst(wf)}}}"""),
+          "v2Checkpoint enablement")
       }
     }
     val (meta, live) = resolve(spark, table, None)
@@ -2357,6 +2145,8 @@ object DeltaSink extends org.apache.spark.internal.Logging {
         prevSidecars.contains(sidecarName(b, h))
       }
       val staging = Files.createTempDirectory("graft-ckpt2-stage").toFile
+      // identical content by construction if a sidecar name already exists
+      // (an older generation outside the reuse fence): publish replaces
       val written: Seq[(String, Long, Long)] =
         if (changed.isEmpty) Nil
         else try {
@@ -2372,27 +2162,18 @@ object DeltaSink extends org.apache.spark.internal.Logging {
             .partitionBy("_b").parquet(staging.getPath)
           val hashById = changed.toMap
           changedIds.map { b =>
-            val parts = dataFiles(new File(staging, s"_b=$b"))
+            val parts = CommitStore.partFiles(new File(staging, s"_b=$b"))
             // repartition(col) pins a bucket to exactly one task; a split
             // bucket would break content addressing, so fail loudly
             require(parts.length == 1,
               s"bucket $b staged ${parts.length} parts; expected exactly one")
             val src = parts.head
             val name = sidecarName(b, hashById(b))
-            val target = sidecarDir.resolve(name)
-            store match {
-              case os: ObjectStore =>
-                os.putObject(target, Files.readAllBytes(src.toPath))
-              case _ =>
-                Files.createDirectories(sidecarDir)
-                // identical content by construction if the name already
-                // exists (an older generation outside the reuse fence)
-                Files.move(src.toPath, target,
-                  java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
-            }
-            (name, src.length(), System.currentTimeMillis())
+            val size = src.length()
+            store.publish(src.toPath, sidecarDir.resolve(name))
+            (name, size, System.currentTimeMillis())
           }
-        } finally deleteRecursively(staging)
+        } finally CommitStore.deleteTree(staging)
       carried.map { case (b, h) =>
         val name = sidecarName(b, h)
         val (sz, mt) = prevSidecars(name)
@@ -2425,28 +2206,13 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     try {
       spark.createDataFrame(metaRows.asJava, V2ManifestSchema)
         .coalesce(1).write.mode("overwrite").parquet(mStaging.getPath)
-      val part = dataFiles(mStaging).head
-      val target = logDir(table).resolve(manifestName)
-      store match {
-        case os: ObjectStore => os.putObject(target, Files.readAllBytes(part.toPath))
-        case _ => Files.move(part.toPath, target): Unit
-      }
-    } finally deleteRecursively(mStaging)
+      store.publish(CommitStore.partFiles(mStaging).head.toPath,
+        logDir(table).resolve(manifestName))
+    } finally CommitStore.deleteTree(mStaging)
     // pointer flip LAST — the manifest name rides the pointer, so a
     // reader either resolves the complete new checkpoint or the old one
-    val ptr = s"""{"version":${meta.version},"path":${esc(manifestName)}}"""
-    store match {
-      case os: ObjectStore =>
-        os.putObject(lastCheckpointFile(table),
-          (ptr + "\n").getBytes(StandardCharsets.UTF_8))
-      case _ =>
-        val tmp = logDir(table).resolve(
-          s"_last_checkpoint.tmp-${java.util.UUID.randomUUID()}")
-        Files.write(tmp, (ptr + "\n").getBytes(StandardCharsets.UTF_8))
-        Files.move(tmp, lastCheckpointFile(table),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE): Unit
-    }
+    putPointer(store, table,
+      s"""{"version":${meta.version},"path":${esc(manifestName)}}""")
     // stale-artifact reclaim with an N-1 FENCE: the new generation AND
     // the immediately-previous one (manifest + every sidecar either
     // references) survive — a reader that resolved the old pointer just
@@ -2457,10 +2223,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     // janitor would ever sweep (ADVICE r15). Classic checkpoint
     // DIRECTORIES (<v>.checkpoint.parquet) don't match the uuid'd
     // manifest pattern and are left alone.
-    def reclaim(f: File): Unit = store match {
-      case os: ObjectStore => os.deleteObject(f.toPath)
-      case _ => Files.deleteIfExists(f.toPath): Unit
-    }
+    def reclaim(f: File): Unit = store.deleteObject(f.toPath)
     val keepManifests = Set(manifestName) ++ prevManifest
     val keepSidecars = sidecars.map(_._1).toSet ++ prevSidecars.keySet
     Option(logDir(table).toFile.listFiles()).toSeq.flatten
@@ -2473,6 +2236,12 @@ object DeltaSink extends org.apache.spark.internal.Logging {
       .foreach(reclaim)
     meta.version
   }
+
+  /** Flips `_last_checkpoint` with an atomic put: a concurrent reader
+    * never sees a partial pointer (it would fail the JSON parse).
+    */
+  private def putPointer(store: CommitStore, table: String, ptr: String): Unit =
+    store.putObject(lastCheckpointFile(table), (ptr + "\n").getBytes(StandardCharsets.UTF_8))
 
   private val V2ManifestSchema = StructType(Seq(
     StructField("protocol", StructType(Seq(
@@ -2644,12 +2413,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     val lines = Seq(bump, metaLine) ++
       withIds.map(a => addJson(a, dataChange = false)) :+
       domainJson(RowTrackingDomain, s"""{"rowIdHighWaterMark":$hwm}""")
-    try commitAtomic(store, versionFile(table, state.version + 1), lines)
-    catch {
-      case e: java.nio.file.FileAlreadyExistsException =>
-        throw new IllegalStateException(
-          s"concurrent commit on $table during enableRowTracking; re-run", e)
-    }
+    commitOrFail(store, table, state.version + 1, lines, "enableRowTracking")
     hwm + 1
   }
 
@@ -2771,14 +2535,8 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     bos.write(Array[Byte](0, 0, 0, 0)) // footer flags
     bos.write(magic)
     val fileBytes = bos.toByteArray
-    val statsPath = Paths.get(table, "_delta_log", "_graft_stats",
-      s"stats-${java.util.UUID.randomUUID()}.puffin")
-    store match {
-      case os: ObjectStore => os.putObject(statsPath, fileBytes)
-      case _ =>
-        Files.createDirectories(statsPath.getParent)
-        Files.write(statsPath, fileBytes): Unit
-    }
+    val statsRel = s"_delta_log/_graft_stats/stats-${java.util.UUID.randomUUID()}.puffin"
+    store.putObject(Paths.get(table, statsRel), fileBytes)
     val ndvs = blobMeta.map { case (c, _, _, ndv) => c -> ndv }.toMap
     def lst(fs: Seq[String]) = fs.distinct.sorted.map(esc).mkString("[", ",", "]")
     val bump =
@@ -2792,31 +2550,15 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     // TABLE-RELATIVE path in the domain row, like every add-file path in
     // the log: a relocated table resolves its own stats (absolute legacy
     // rows still resolve through dataAbs)
-    val conf = s"""{"path":${
-      esc(s"_delta_log/_graft_stats/${statsPath.getFileName}")},""" +
+    val conf = s"""{"path":${esc(statsRel)},""" +
       s""""tableVersion":${meta.version},"ndv":$ndvJson}"""
     val superseded = meta.domains.get(StatsDomain)
       .map(c => mapper.readTree(c).path("path").asText()).filter(_.nonEmpty)
-    try commitAtomic(store, versionFile(table, meta.version + 1),
-      bump :+ domainJson(StatsDomain, conf))
-    catch {
-      case e: java.nio.file.FileAlreadyExistsException =>
-        store match {
-          case os: ObjectStore => scala.util.Try(os.deleteObject(statsPath)): Unit
-          case _ => Files.deleteIfExists(statsPath): Unit
-        }
-        throw new IllegalStateException(
-          s"concurrent commit on $table during writeStats; re-run", e)
-    }
+    commitOrFail(store, table, meta.version + 1,
+      bump :+ domainJson(StatsDomain, conf), "writeStats", Seq(statsRel))
     // the replaced stats file is dead the moment the domain row moved
     // (domain rows carry table-relative paths; resolve before reclaiming)
-    superseded.foreach { p =>
-      val target = Paths.get(dataAbs(table, p))
-      store match {
-        case os: ObjectStore => scala.util.Try(os.deleteObject(target)): Unit
-        case _ => Files.deleteIfExists(target): Unit
-      }
-    }
+    superseded.foreach(p => scala.util.Try(store.deleteObject(Paths.get(dataAbs(table, p)))))
     ndvs
   }
 
@@ -2894,13 +2636,8 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     // data files carry PHYSICAL names; record those (spec contract)
     val paths = columns
       .map(c => s"[${esc(physName(meta.schema(c)))}]").mkString("[", ",", "]")
-    try commitAtomic(store, versionFile(table, meta.version + 1),
-      bump :+ domainJson(ClusteringDomain, s"""{"clusteringColumns":$paths}"""))
-    catch {
-      case e: java.nio.file.FileAlreadyExistsException =>
-        throw new IllegalStateException(
-          s"concurrent commit on $table during clusterBy; re-run", e)
-    }
+    commitOrFail(store, table, meta.version + 1,
+      bump :+ domainJson(ClusteringDomain, s"""{"clusteringColumns":$paths}"""), "clusterBy")
   }
 
   /** The declared clustering columns as LOGICAL names (empty when the
@@ -2949,19 +2686,19 @@ object DeltaSink extends org.apache.spark.internal.Logging {
       else Set.empty
     val liveNow = liveAdds.map(_.path).toSet ++ icebergLive
     val cutoff = System.currentTimeMillis() - retentionMs
-    val dead = dataFiles(dir).filter { f =>
+    val dead = CommitStore.partFiles(dir).filter { f =>
       val rel = dir.toPath.relativize(f.toPath).toString
       !liveNow.contains(rel) && f.lastModified() < cutoff
     }
     // reclamation travels the store protocol when one is given (a real
     // bucket has no local unlink); empty-prefix cleanup below is a local
     // nicety — object stores have no directories to sweep
-    dead.foreach(f => deleteData(store, dir, dir.toPath.relativize(f.toPath).toString))
+    dead.foreach(f => store.deleteObject(f.toPath))
     // CDC files are never referenced by a snapshot — they age out on the
     // same retention clock (Delta CDF's consume-within-retention contract)
     val deadCdc = Option(new File(dir, "_change_data").listFiles()).toSeq.flatten
       .filter(f => f.getName.endsWith(".parquet") && f.lastModified() < cutoff)
-    deadCdc.foreach(f => deleteData(store, dir, dir.toPath.relativize(f.toPath).toString))
+    deadCdc.foreach(f => store.deleteObject(f.toPath))
     // deletion-vector sidecars: superseded descriptors (a re-delete
     // OR-merged them away, or a rewrite/compact dropped the DV) reclaim
     // on the same clock; live-referenced ones never do
@@ -2972,7 +2709,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
         f.getName.endsWith(".bin") && !liveDvs.contains(rel) &&
           f.lastModified() < cutoff
       }
-    deadDv.foreach(f => deleteData(store, dir, dir.toPath.relativize(f.toPath).toString))
+    deadDv.foreach(f => store.deleteObject(f.toPath))
     // drop partition dirs emptied by the sweep
     Option(dir.listFiles()).getOrElse(Array.empty)
       .filter(d => d.isDirectory && d.getName != "_delta_log" &&
@@ -3646,12 +3383,9 @@ object DeltaSink extends org.apache.spark.internal.Logging {
   /** Tail-bytes ceiling for the driver-side fast replay in [[resolve]].
     * Above it (or with any checkpoint present) the snapshot replays
     * distributedly. 8 MiB of JSON tail is ~10⁴ add actions — far past the
-    * point where two Spark job round-trips amortize; overridable for
-    * experiments via -Dgraft.delta.fastReplayMaxBytes.
+    * point where two Spark job round-trips amortize.
     */
-  private def FastReplayMaxBytes: Long =
-    sys.props.get("graft.delta.fastReplayMaxBytes").map(_.toLong)
-      .getOrElse(8L << 20)
+  private val FastReplayMaxBytes: Long = 8L << 20
 
   /** The live-set columns [[resolve]] returns, as an explicit schema (the
     * driver fast path builds a local relation of exactly this shape).
@@ -3907,12 +3641,15 @@ object DeltaSink extends org.apache.spark.internal.Logging {
           .map(s => ld.resolve("_sidecars").resolve(Gp.str(s, "path")).toFile)
         if (sidecars.exists(!_.isFile) ||
             mf.length + sidecars.map(_.length).sum > budget) return None
-        manifest ++ parquetGroups(sidecars, hconf)
+        // the manifest's own add rows count only when it lists no sidecar
+        (if (sidecars.isEmpty) manifest
+         else manifest.filter(g => Gp.sub(g, "add").isEmpty)) ++
+          parquetGroups(sidecars, hconf)
       case None =>
         val f = checkpointFile(table, ckptV).toFile
         val parts =
           if (f.isFile) Seq(f)
-          else if (f.isDirectory) dataFiles(f)
+          else if (f.isDirectory) CommitStore.partFiles(f)
           else return None
         if (parts.isEmpty || parts.map(_.length).sum > budget) return None
         parquetGroups(parts, hconf)
@@ -4053,14 +3790,14 @@ object DeltaSink extends org.apache.spark.internal.Logging {
         val sidecarPaths = manifest.where(col("sidecar").isNotNull)
           .select("sidecar.path").collect().map(r =>
             logDir(table).resolve("_sidecars").resolve(r.getString(0)).toString)
-        // inline add actions ride along (spec-permitted in a sidecar-less
-        // manifest) — previously forced to null here while the driver fast
-        // path read them, so the same external table could resolve to two
-        // different live sets depending on checkpoint size (r19 ADVICE)
+        // inline add actions count only in a sidecar-less manifest (where
+        // the spec permits them); the driver fast path applies the same
+        // rule, so one table resolves to one live set whatever the size of
+        // its checkpoint
         val metaPart = manifest
           .where(col("protocol").isNotNull || col("metaData").isNotNull ||
             col("txn").isNotNull || col("domainMetadata").isNotNull ||
-            col("add").isNotNull)
+            (if (sidecarPaths.isEmpty) col("add").isNotNull else lit(false)))
           .select(col("protocol"), col("metaData"), col("add"),
             col("txn"), col("domainMetadata"))
         if (sidecarPaths.isEmpty) metaPart
@@ -4408,77 +4145,46 @@ object DeltaSink extends org.apache.spark.internal.Logging {
       s""""stats":${if (a.stats == null) "null" else esc(a.stats)}$dv$brid$drcv}}"""
   }
 
-  /** All parquet data files under `dir`, partition subdirs included,
-    * deterministic order.
+  /** One Spark parquet write of `df` (Hive-layout under `partitionBy`)
+    * into `staging`, published into the table `dir` at `relOf` names by
+    * [[CommitStore.harvest]] (a failed publish reclaims the batch), each
+    * file with its log entry read from the staged footer. A staging dir
+    * apart from the table is removed whatever happens.
     */
-  private def dataFiles(dir: File): Seq[File] = {
-    def walk(f: File): Seq[File] =
-      if (f.isDirectory && f.getName != "_delta_log")
-        Option(f.listFiles()).map(_.toSeq).getOrElse(Nil).flatMap(walk)
-      else if (f.getName.startsWith("part-") && f.getName.endsWith(".parquet")) Seq(f)
-      else Nil
-    walk(dir).sortBy(_.getPath)
-  }
-
-  /** Publishes one staged data file into the table at `rel` and returns its
-    * log entry. Plain stores rename into place (same-FS atomic move); an
-    * [[ObjectStore]] multipart-UPLOADS the staged bytes so the data file
-    * reaches the table over the store protocol, never a local write —
-    * stats come from the staged copy (identical bytes). Buffering one
-    * file is bounded by maxRecordsPerFile; a production S3A path would
-    * stream parts instead.
-    */
-  private def publishFile(store: CommitStore, tableDir: File, src: File,
-      rel: String, conf: Configuration): AddEntry = store match {
-    case os: ObjectStore =>
-      val entry = toAddEntryAt(rel, src, conf)
-      os.putObject(new File(tableDir, rel).toPath, Files.readAllBytes(src.toPath))
-      entry
-    case _ =>
-      val target = new File(tableDir, rel)
-      target.getParentFile.mkdirs()
-      Files.move(src.toPath, target.toPath)
-      toAddEntry(tableDir, target, conf)
-  }
-
-  /** Publishes every staged file under `staging` into the table with
-    * `relOf(rel, i)`-named targets. A publication failure (a part upload
-    * 500ing, the store unreachable) RECLAIMS the files already published
-    * in this batch before rethrowing — the reference's whole-write abort
-    * (delta_destination.rs:120-229): an uncommitted transaction leaves
-    * zero bytes behind.
-    */
-  private def publishAll(store: CommitStore, tableDir: File, staging: File,
-      conf: Configuration, relOf: (java.nio.file.Path, Int) => String): Seq[AddEntry] = {
-    val published = scala.collection.mutable.ArrayBuffer[AddEntry]()
+  private def writeStaged(store: CommitStore, dir: File, df: DataFrame,
+      partitionBy: Seq[String], maxRecordsPerFile: Long,
+      relOf: (java.nio.file.Path, Int) => String,
+      staging: File = Files.createTempDirectory("graft-delta-stage").toFile)
+      : Seq[AddEntry] =
     try {
-      dataFiles(staging).zipWithIndex.foreach { case (src, i) =>
-        val rel = staging.toPath.relativize(src.toPath)
-        published += publishFile(store, tableDir, src, relOf(rel, i), conf)
-      }
-      published.toSeq
-    } catch { case e: Throwable =>
-      published.foreach(a =>
-        scala.util.Try(deleteData(store, tableDir, a.path)))
-      throw e
-    }
-  }
+      val writer = df.write.mode("overwrite")
+        .option("compression", "snappy")
+        .option("maxRecordsPerFile", maxRecordsPerFile)
+      (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
+        .parquet(staging.getPath)
+      val conf = df.sparkSession.sessionState.newHadoopConf()
+      CommitStore.harvest(store, staging, dir, relOf)((f, rel) =>
+        Some(toAddEntry(rel, f, conf)))
+    } finally if (staging != dir) CommitStore.deleteTree(staging)
 
-  /** Abort-path reclaim of a published-but-uncommitted data file. */
-  private def deleteData(store: CommitStore, tableDir: File, rel: String): Unit =
-    store match {
-      case os: ObjectStore => os.deleteObject(new File(tableDir, rel).toPath)
-      case _ => new File(tableDir, rel).delete(): Unit
-    }
+  /** Txn-unique data-file names that keep the staged partition subpath. */
+  private def txnNames(txn: String, suffix: String = ".c000.snappy.parquet")
+      : (java.nio.file.Path, Int) => String = (rel, i) =>
+    Option(rel.getParent).map(_.toString + "/").getOrElse("") +
+      f"part-$i%05d-$txn$suffix"
 
-  private def toAddEntry(tableDir: File, f: File, conf: Configuration): AddEntry =
-    toAddEntryAt(tableDir.toPath.relativize(f.toPath).toString, f, conf)
+  /** Txn-unique change-data-feed file names. */
+  private def cdcNames(txn: String): (java.nio.file.Path, Int) => String =
+    (_, i) => f"_change_data/cdc-$i%05d-$txn.snappy.parquet"
+
+  /** Reclaims table-relative paths of an aborted transaction. */
+  private def reclaim(store: CommitStore, table: String, rels: Seq[String]): Unit =
+    rels.foreach(p => scala.util.Try(store.deleteObject(Paths.get(table, p))))
 
   /** Log entry for a data file whose TABLE path is `rel` but whose bytes
     * are read from `f` (which may be a staged copy outside the table).
     */
-  private def toAddEntryAt(rel0: String, f: File, conf: Configuration): AddEntry = {
-    val rel = rel0
+  private def toAddEntry(rel: String, f: File, conf: Configuration): AddEntry = {
     // partition values from the Hive-style dir segments (col=value), Hive
     // escaping undone; the marker dir name means a null partition value
     val pv = rel.split('/').dropRight(1).flatMap { seg =>
@@ -4515,66 +4221,29 @@ object DeltaSink extends org.apache.spark.internal.Logging {
       : (Long, Map[String, String], Map[String, String]) = {
     import org.apache.parquet.schema.LogicalTypeAnnotation
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f.toURI), conf))
-    try {
-      val footer = reader.getFooter
-      val blocks = footer.getBlocks.asScala.toSeq
-      val rows = blocks.map(_.getRowCount).sum
-      // merge per-row-group statistics in the column's NATIVE ordering
-      // (parquet's own merge), then stringify once at the end — string
-      // min/max over numeric encodings would order "9" above "10"
-      val merged = scala.collection.mutable.Map
-        .empty[String, org.apache.parquet.column.statistics.Statistics[_]]
-      val skip = scala.collection.mutable.Set.empty[String]
-      val prims = scala.collection.mutable.Map
-        .empty[String, org.apache.parquet.schema.PrimitiveType]
-      for (block <- blocks; c <- block.getColumns.asScala) {
-        val pathParts = c.getPath.toArray
-        if (pathParts.length == 1) { // top-level leaf columns only
-          val name = pathParts(0)
-          val stats = c.getStatistics
-          if (stats == null || stats.isEmpty || !stats.hasNonNullValue) skip += name
-          else {
-            prims += name -> c.getPrimitiveType
-            merged.get(name) match {
-              case Some(acc) => mergeStats(acc, stats)
-              case None => merged += name -> stats.copy()
-            }
-          }
-        }
+    def encode(c: ParquetFooter.Column, v: Any): Option[String] = {
+      val logical = c.prim.getLogicalTypeAnnotation
+      c.prim.getPrimitiveTypeName match {
+        case INT32 if logical.isInstanceOf[LogicalTypeAnnotation.DateLogicalTypeAnnotation] =>
+          Some(java.time.LocalDate.ofEpochDay(v.asInstanceOf[Integer].longValue()).toString)
+        case INT32 | INT64 | FLOAT | DOUBLE
+          if !logical.isInstanceOf[LogicalTypeAnnotation.TimestampLogicalTypeAnnotation] &&
+            !logical.isInstanceOf[LogicalTypeAnnotation.DecimalLogicalTypeAnnotation] =>
+          Some(v.toString)
+        case BINARY if logical.isInstanceOf[LogicalTypeAnnotation.StringLogicalTypeAnnotation] =>
+          Some(v.asInstanceOf[org.apache.parquet.io.api.Binary].toStringUsingUTF8)
+        case _ => None
       }
-      skip.foreach(merged -= _)
-      val mins = scala.collection.mutable.Map.empty[String, String]
-      val maxs = scala.collection.mutable.Map.empty[String, String]
-      merged.foreach { case (name, stats) =>
-        val prim = prims(name)
-        val logical = prim.getLogicalTypeAnnotation
-        def encode(v: Any): Option[String] = prim.getPrimitiveTypeName match {
-          case INT32 if logical.isInstanceOf[LogicalTypeAnnotation.DateLogicalTypeAnnotation] =>
-            Some(java.time.LocalDate.ofEpochDay(v.asInstanceOf[Integer].longValue()).toString)
-          case INT32 | INT64 | FLOAT | DOUBLE
-            if !logical.isInstanceOf[LogicalTypeAnnotation.TimestampLogicalTypeAnnotation] &&
-              !logical.isInstanceOf[LogicalTypeAnnotation.DecimalLogicalTypeAnnotation] =>
-            Some(v.toString)
-          case BINARY if logical.isInstanceOf[LogicalTypeAnnotation.StringLogicalTypeAnnotation] =>
-            Some(v.asInstanceOf[org.apache.parquet.io.api.Binary].toStringUsingUTF8)
-          case _ => None
-        }
-        (encode(stats.genericGetMin), encode(stats.genericGetMax)) match {
-          case (Some(mn), Some(mx)) => mins += name -> mn; maxs += name -> mx
-          case _ => ()
-        }
-      }
-      (rows, mins.toMap, maxs.toMap)
-    } finally reader.close()
+    }
+    val (rows, cols) = ParquetFooter.read(f, conf)
+    val bounds = for {
+      (name, c) <- cols.toSeq
+      st <- c.bounds
+      mn <- encode(c, st.genericGetMin)
+      mx <- encode(c, st.genericGetMax)
+    } yield (name, mn, mx)
+    (rows, bounds.map(b => b._1 -> b._2).toMap, bounds.map(b => b._1 -> b._3).toMap)
   }
-
-  /** Erasure bridge for parquet's self-comparable Statistics generic. */
-  private def mergeStats[T <: Comparable[T]](
-      acc: org.apache.parquet.column.statistics.Statistics[_],
-      s: org.apache.parquet.column.statistics.Statistics[_]): Unit =
-    acc.asInstanceOf[org.apache.parquet.column.statistics.Statistics[T]]
-      .mergeStatistics(s.asInstanceOf[org.apache.parquet.column.statistics.Statistics[T]])
 
   /** First-line in-commit timestamp of a commit file, if the commit
     * carries one. The feature requires commitInfo to be the FIRST action
@@ -4589,6 +4258,21 @@ object DeltaSink extends org.apache.spark.internal.Logging {
       .flatMap(l => IctRe.findFirstMatchIn(l).map(_.group(1).toLong))
     finally in.close()
   }
+
+  /** The strict commit of a single-shot verb (no OCC retry): claims
+    * `version` with `lines`, or — when a concurrent writer claimed it
+    * first — reclaims `published` (table-relative paths this transaction
+    * wrote) and fails the verb, leaving the table at its pre-state.
+    */
+  private def commitOrFail(store: CommitStore, table: String, version: Long,
+      lines: Seq[String], verb: String, published: Seq[String] = Nil): Unit =
+    try commitAtomic(store, versionFile(table, version), lines)
+    catch {
+      case e: java.nio.file.FileAlreadyExistsException =>
+        reclaim(store, table, published)
+        throw new IllegalStateException(
+          s"concurrent commit on $table during $verb; re-run the $verb", e)
+    }
 
   /** The single choke point every Delta commit flows through — which is
     * what makes in-commit timestamps (spec §in-commit-timestamps) an
@@ -4619,16 +4303,5 @@ object DeltaSink extends org.apache.spark.internal.Logging {
         }
       }
     store.putIfAbsent(target, (all.mkString("\n") + "\n").getBytes(StandardCharsets.UTF_8))
-  }
-
-  /** Parquet footer record count (shared by both sinks' stats). */
-  private[sinks] def numRecords(f: File, conf: Configuration): Long = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f.toURI), conf))
-    try reader.getRecordCount finally reader.close()
-  }
-
-  private def deleteRecursively(f: File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete()
   }
 }

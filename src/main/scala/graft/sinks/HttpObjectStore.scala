@@ -259,12 +259,6 @@ object HttpObjectStore {
     override def close(): Unit = { server.stop(0); pool.shutdown() }
   }
 
-  /** HTTP client speaking the [[Server]]'s S3-shaped protocol. A
-    * [[CommitStore]]: `putIfAbsent` is the conditional PUT, so any sink
-    * commit (`DeltaSink.append(store = …)`, `IcebergSink.write(store = …)`)
-    * rides the network path unchanged. `root` mirrors the server's root so
-    * absolute target paths translate to bucket keys.
-    */
   /** Task-side GET/PUT over the store protocol: endpoint + bucket root
     * travel as plain strings into task closures; the HttpClient rebuilds
     * lazily per task JVM. Shard artifacts carry txn-unique names, so the
@@ -297,6 +291,13 @@ object HttpObjectStore {
     }
   }
 
+  /** HTTP client speaking the [[Server]]'s S3-shaped protocol. An
+    * [[ObjectStore]]: `putIfAbsent` is the conditional PUT and the five
+    * data-plane methods are the object requests, so every sink verb
+    * (`DeltaSink.append(store = …)`, `IcebergSink.write(store = …)`) rides
+    * the network path unchanged. `root` mirrors the server's root so
+    * absolute target paths translate to bucket keys.
+    */
   final class Client(endpoint: URI, root: Path) extends ObjectStore {
     private val http = HttpClient.newBuilder()
       .connectTimeout(java.time.Duration.ofSeconds(10)).build()

@@ -8,7 +8,7 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
 /** Hand-rolled Iceberg-style table sink + reader (reference P12/P13/P14/P15).
@@ -164,80 +164,34 @@ object IcebergSink {
       fieldIds: Map[String, Int]): (Long, IcebergAvro.ColumnStats) = {
     import org.apache.parquet.schema.LogicalTypeAnnotation
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(f.toURI), conf))
-    try {
-      val blocks = reader.getFooter.getBlocks.asScala.toSeq
-      val rows = blocks.map(_.getRowCount).sum
-      val valueCounts = scala.collection.mutable.Map.empty[String, Long]
-      val nullCounts = scala.collection.mutable.Map.empty[String, Long]
-      val merged = scala.collection.mutable.Map
-        .empty[String, org.apache.parquet.column.statistics.Statistics[_]]
-      val prims = scala.collection.mutable.Map
-        .empty[String, org.apache.parquet.schema.PrimitiveType]
-      val noBounds = scala.collection.mutable.Set.empty[String]
-      // A null count must aggregate over EVERY row group or not exist at all:
-      // value_counts spans all blocks, so a column where any block lacks
-      // num-nulls (stats absent, or parquet's isNumNullsSet false — getNumNulls
-      // then returns -1) would emit an understated/corrupted count and let an
-      // external reader wrongly skip the file on an IS NULL predicate
-      // (ADVICE r5). Such columns drop out of nullCounts entirely.
-      val noNullCount = scala.collection.mutable.Set.empty[String]
-      for (block <- blocks; c <- block.getColumns.asScala) {
-        val pathParts = c.getPath.toArray
-        if (pathParts.length == 1 && fieldIds.contains(pathParts(0))) {
-          val name = pathParts(0)
-          valueCounts(name) = valueCounts.getOrElse(name, 0L) + c.getValueCount
-          val stats = c.getStatistics
-          if (stats == null || stats.isEmpty) { noBounds += name; noNullCount += name }
-          else {
-            if (stats.isNumNullsSet)
-              nullCounts(name) = nullCounts.getOrElse(name, 0L) + stats.getNumNulls
-            else noNullCount += name
-            if (!stats.hasNonNullValue) noBounds += name
-            else {
-              prims += name -> c.getPrimitiveType
-              merged.get(name) match {
-                case Some(acc) =>
-                  acc.asInstanceOf[org.apache.parquet.column.statistics.Statistics[Nothing]]
-                    .mergeStatistics(stats.asInstanceOf[org.apache.parquet.column.statistics.Statistics[Nothing]])
-                case None => merged += name -> stats.copy()
-              }
-            }
-          }
-        }
+    def le(fill: java.nio.ByteBuffer => Unit, n: Int): Array[Byte] = {
+      val b = java.nio.ByteBuffer.allocate(n).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      fill(b); b.array()
+    }
+    def ser(c: ParquetFooter.Column, v: Any): Option[Array[Byte]] =
+      c.prim.getPrimitiveTypeName match {
+        case INT32 => Some(le(_.putInt(v.asInstanceOf[Integer].intValue()), 4))
+        case INT64 => Some(le(_.putLong(v.asInstanceOf[java.lang.Long].longValue()), 8))
+        case FLOAT => Some(le(_.putFloat(v.asInstanceOf[java.lang.Float].floatValue()), 4))
+        case DOUBLE => Some(le(_.putDouble(v.asInstanceOf[java.lang.Double].doubleValue()), 8))
+        case BINARY if c.prim.getLogicalTypeAnnotation
+            .isInstanceOf[LogicalTypeAnnotation.StringLogicalTypeAnnotation] =>
+          Some(v.asInstanceOf[org.apache.parquet.io.api.Binary].getBytes)
+        case _ => None
       }
-      noBounds.foreach(merged -= _)
-      noNullCount.foreach(nullCounts -= _)
-      def le(fill: java.nio.ByteBuffer => Unit, n: Int): Array[Byte] = {
-        val b = java.nio.ByteBuffer.allocate(n).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-        fill(b); b.array()
-      }
-      val lower = scala.collection.mutable.Map.empty[String, Array[Byte]]
-      val upper = scala.collection.mutable.Map.empty[String, Array[Byte]]
-      merged.foreach { case (name, stats) =>
-        val prim = prims(name)
-        val logical = prim.getLogicalTypeAnnotation
-        def ser(v: Any): Option[Array[Byte]] = prim.getPrimitiveTypeName match {
-          case INT32 => Some(le(_.putInt(v.asInstanceOf[Integer].intValue()), 4))
-          case INT64 => Some(le(_.putLong(v.asInstanceOf[java.lang.Long].longValue()), 8))
-          case FLOAT => Some(le(_.putFloat(v.asInstanceOf[java.lang.Float].floatValue()), 4))
-          case DOUBLE => Some(le(_.putDouble(v.asInstanceOf[java.lang.Double].doubleValue()), 8))
-          case BINARY if logical.isInstanceOf[LogicalTypeAnnotation.StringLogicalTypeAnnotation] =>
-            Some(v.asInstanceOf[org.apache.parquet.io.api.Binary].getBytes)
-          case _ => None
-        }
-        (ser(stats.genericGetMin), ser(stats.genericGetMax)) match {
-          case (Some(mn), Some(mx)) => lower += name -> mn; upper += name -> mx
-          case _ => ()
-        }
-      }
-      def byId[V](m: scala.collection.Map[String, V]): Map[Int, V] =
-        m.map { case (n, v) => fieldIds(n) -> v }.toMap
-      (rows, IcebergAvro.ColumnStats(
-        byId(valueCounts), byId(nullCounts), byId(lower), byId(upper)))
-    } finally reader.close()
+    val (rows, all) = ParquetFooter.read(f, conf)
+    val cols = all.toSeq.collect { case (n, c) if fieldIds.contains(n) => fieldIds(n) -> c }
+    val bounds = for {
+      (id, c) <- cols
+      st <- c.bounds
+      mn <- ser(c, st.genericGetMin)
+      mx <- ser(c, st.genericGetMax)
+    } yield (id, mn, mx)
+    (rows, IcebergAvro.ColumnStats(
+      cols.map { case (id, c) => id -> c.values }.toMap,
+      cols.flatMap { case (id, c) => c.nulls.map(id -> _) }.toMap,
+      bounds.map(b => b._1 -> b._2).toMap,
+      bounds.map(b => b._1 -> b._3).toMap))
   }
 
   /** One entry of a partition spec, as requested via `partitionBy`:
@@ -623,19 +577,12 @@ object IcebergSink {
       }
       d.withColumn(ps.derivedName, derived)
     }
-    val stage = s"data/stage-${java.util.UUID.randomUUID()}"
-    // An ObjectStore write never touches the table via the local FS: Spark
-    // stages in a private temp dir and every artifact — data files,
-    // manifests, manifest list, version hint — travels the store protocol
-    // (multipart put), with the metadata JSON claiming the version via the
-    // conditional put below. Mirrors the reference's single pipeline
-    // (iceberg_destination.rs:152-377 over an object store).
-    val objStore: Option[ObjectStore] =
-      store match { case os: ObjectStore => Some(os); case _ => None }
-    val stagePath = objStore
-      // resolve("out"): Spark's writer wants a not-yet-existing target
-      .map(_ => Files.createTempDirectory("graft-ib-stage").resolve("out").toString)
-      .getOrElse(s"$table/$stage")
+    // Every artifact — data files, manifests, manifest list, version hint
+    // — goes through the store, with the metadata JSON claiming the
+    // version via the conditional put below: on an ObjectStore nothing
+    // touches the table via the local FS, mirroring the reference's single
+    // pipeline (iceberg_destination.rs:152-377 over an object store).
+    val (dataDir, stageRoot) = newStage(store, table, "stage")
     // hash distribution-mode (guide §6, Iceberg's write.distribution-mode
     // =hash — the 1.2+ default): cluster rows by the DERIVED partition
     // values so the file count is ∝ distinct partition values, not
@@ -650,16 +597,7 @@ object IcebergSink {
       .option("compression", "snappy")
       .option("maxRecordsPerFile", DeltaSink.MaxRecordsPerFile)
     (if (partSpecs.nonEmpty) writer.partitionBy(partSpecs.map(_.derivedName): _*)
-     else writer).parquet(stagePath)
-    new File(s"$stagePath/_SUCCESS").delete()
-    val stageRoot = new File(stagePath)
-    def walk(dir: File): Seq[File] =
-      Option(dir.listFiles()).toSeq.flatten.flatMap { f =>
-        if (f.isDirectory) walk(f)
-        else if (f.getName.startsWith("part-") && f.getName.endsWith(".parquet")) Seq(f)
-        else Nil
-      }
-    val dataFiles = walk(stageRoot).sortBy(_.getAbsolutePath)
+     else writer).parquet(stageRoot.getPath)
     // per-file partition values from the staging layout (write side only —
     // readers use the manifest)
     val partValuesOf: File => Seq[Any] =
@@ -778,21 +716,15 @@ object IcebergSink {
     }
 
     // Avro manifest (V2 manifest_entry records, real per-file row counts +
-    // per-column value/null counts and bounds from the same footer open).
+    // per-column value/null counts and bounds from the same footer open),
+    // read from the staged copy before the file is published; manifests
+    // always reference the file's TABLE path.
     val conf = df.sparkSession.sessionState.newHadoopConf()
     val fieldIds = declaredSchema.fieldNames.zip(declaredIds).toMap
-    // manifests always reference the file's TABLE path; on the store path
-    // that differs from the local staging path the stats are read from
-    def tablePathOf(f: File): String = objStore match {
-      case Some(_) =>
-        new File(s"$table/$stage",
-          stageRoot.toPath.relativize(f.toPath).toString).getAbsolutePath
-      case None => f.getAbsolutePath
-    }
-    val infos0 = dataFiles.toSeq.map { f =>
+    val infos0 = CommitStore.harvest(store, stageRoot, dataDir) { (f, rel) =>
       val (rows, stats) = footerStats(f, conf, fieldIds)
-      IcebergAvro.DataFileInfo(tablePathOf(f), f.length(), rows, stats,
-        partValuesOf(f))
+      Some(IcebergAvro.DataFileInfo(new File(dataDir, rel).getAbsolutePath,
+        f.length(), rows, stats, partValuesOf(f)))
     }
     // V3 row lineage (spec §Row Lineage): on a lineage-enabled table every
     // ADDED data file takes its first_row_id from the table clock —
@@ -810,20 +742,6 @@ object IcebergSink {
           (withIds, next - base)
         case _ => (infos0, 0L)
       }
-    // publish staged data files through the store (multipart, whole-write
-    // abort on failure: uploaded files are reclaimed before rethrow)
-    objStore.foreach { os =>
-      val published = scala.collection.mutable.ArrayBuffer[String]()
-      try dataFiles.foreach { f =>
-        val target = tablePathOf(f)
-        os.putObject(java.nio.file.Paths.get(target), Files.readAllBytes(f.toPath))
-        published += target
-      } catch { case e: Throwable =>
-        published.foreach(p =>
-          scala.util.Try(os.deleteObject(java.nio.file.Paths.get(p))))
-        throw e
-      }
-    }
     // partition spec (Iceberg spec §partitioning): field-ids from 1000,
     // source-id = the schema field id of the SOURCE column (for a hidden
     // day() transform that is the timestamp column, not the derived name).
@@ -848,24 +766,8 @@ object IcebergSink {
       s"""{"name":"${pf.name}","transform":"${ps.transform}","source-id":${fieldIds(ps.source)},"field-id":${pf.fieldId}}"""
     }.mkString(",")
     val specJson = s"""{"spec-id":$specId,"fields":[$specFieldsJson]}"""
-    // Avro artifacts: written to a local temp file, then either already in
-    // place (local store: the temp IS the metadata path) or uploaded
-    // through the store protocol
-    def writeAvro(name: String)(write: File => Long): (java.nio.file.Path, Long) = {
-      val target = metaDir(table).resolve(name)
-      objStore match {
-        case Some(os) =>
-          val tmp = Files.createTempFile("graft-ib-avro", ".avro")
-          try {
-            val len = write(tmp.toFile)
-            os.putObject(target, Files.readAllBytes(tmp))
-            (target, len)
-          } finally Files.deleteIfExists(tmp)
-        case None => (target, write(target.toFile))
-      }
-    }
     val (manifestPath, manifestLen) =
-      writeAvro(s"manifest-${java.util.UUID.randomUUID()}.avro")(f =>
+      writeAvroArtifact(table, store, s"manifest-${java.util.UUID.randomUUID()}.avro")(f =>
         IcebergAvro.writeManifest(f, infos,
           snapshotId, schemaNode.toString, specJson, partFieldsFinal,
           specId = specId))
@@ -883,7 +785,7 @@ object IcebergSink {
       manifestLen, seq, snapshotId, infos.size, infos.map(_.recordCount).sum,
       specId = specId)
     val (listPath, _) =
-      writeAvro(s"manifest-list-${java.util.UUID.randomUUID()}.avro") { f =>
+      writeAvroArtifact(table, store, s"manifest-list-${java.util.UUID.randomUUID()}.avro") { f =>
         IcebergAvro.writeManifestList(f, carried :+ newRow, snapshotId, seq); 0L
       }
 
@@ -990,44 +892,12 @@ object IcebergSink {
     refsNode0.putObject("main")
       .put("snapshot-id", snapshotId).put("type", "branch")
 
-    // write_exclusive: IF-NOT-EXISTS put of the next metadata version
-    // (reference iceberg_destination.rs:349-367), via the pluggable
-    // put-if-absent commit primitive.
-    // bottom-up: a partitioned stage holds Hive-layout subdirectories
-    // that must go before the stage dir itself can
-    def deleteTree(f: File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(deleteTree)
-      f.delete(): Unit
-    }
-    try
-      store.putIfAbsent(metaFile(table, newVersion),
-        meta.toString.getBytes(StandardCharsets.UTF_8))
-    catch {
-      case _: FileAlreadyExistsException =>
-        // the losing attempt's staged artifacts are unreferenced by any
-        // committed metadata — reclaim them before the retry re-stages
-        objStore match {
-          case Some(os) =>
-            infos.foreach(i =>
-              scala.util.Try(os.deleteObject(java.nio.file.Paths.get(i.absPath))))
-            scala.util.Try(os.deleteObject(manifestPath))
-            scala.util.Try(os.deleteObject(listPath))
-          case None =>
-            dataFiles.foreach(_.delete())
-            Files.deleteIfExists(manifestPath)
-            Files.deleteIfExists(listPath)
-        }
-        deleteTree(stageRoot)
-        throw new OptimisticConcurrencyException(newVersion)
-    }
-    objStore match {
-      case Some(os) =>
-        os.putObject(hintFile(table),
-          newVersion.toString.getBytes(StandardCharsets.UTF_8))
-        deleteTree(stageRoot) // staged copies are published; reclaim locally
-      case None =>
-        Files.writeString(hintFile(table), newVersion.toString): Unit
-    }
+    // the losing attempt's staged artifacts are unreferenced by any
+    // committed metadata — reclaim them before the retry re-stages
+    commitMetadataVersion(table, store, newVersion - 1, meta, () => {
+      reclaim(store, infos.map(_.absPath) :+ manifestPath.toString :+ listPath.toString)
+      CommitStore.deleteTree(stageRoot)
+    })
   }
 
   /** Whole-write OCC retry loop (reference src/lib.rs:168-196, ≤3 retries).
@@ -2115,16 +1985,6 @@ object IcebergSink {
       }: _*)
   }
 
-  /** Bytes of a metadata-plane artifact (Puffin DV, delete file) through
-    * the store protocol when one is given — a real bucket has no local
-    * open (the [[DeltaSink.readBytes]] twin, VERDICT r15).
-    */
-  private def readBytesAt(store: CommitStore, path: String): Array[Byte] =
-    store match {
-      case os: ObjectStore => os.readObject(Paths.get(path))
-      case _ => Files.readAllBytes(Paths.get(path))
-    }
-
   private def readMerged(spark: SparkSession, schema: StructType,
       dataEntries: Seq[(String, Map[String, Any], Long)],
       deletes: Seq[DeleteRef],
@@ -2206,7 +2066,7 @@ object IcebergSink {
         val dvMap: Map[String, Array[Byte]] = dvRefs.flatMap { d =>
           val (ref, off, size) = d.dvRef.get
           val bm = graft.functions.DeletionVector.readFramedAt(
-            readBytesAt(store, d.path), off.toInt, size - 8)
+            store.readObject(Paths.get(d.path)), off.toInt, size - 8)
           val probeBytes = graft.functions.DeletionVector.serialize(bm)
           val raw = normPath(ref)
           val enc = normPath(new java.io.File(ref).toURI.toString)
@@ -2439,13 +2299,7 @@ object IcebergSink {
       if (groups.size == dataRows.size) return (dataRows.size, dataRows.size)
       val snapshotId = math.abs(new java.util.Random().nextLong())
       val seq = meta.get("last-sequence-number").asLong() + 1
-      val published = scala.collection.mutable.ArrayBuffer[java.nio.file.Path]()
-      def reclaim(): Unit = published.foreach { p =>
-        store match {
-          case os: ObjectStore => scala.util.Try(os.deleteObject(p)): Unit
-          case _ => Files.deleteIfExists(p): Unit
-        }
-      }
+      val published = scala.collection.mutable.ArrayBuffer[String]()
       try {
         val mergedRows = groups.toSeq
           .sortBy(_._2.map(_.get("sequence_number").asInstanceOf[Long]).min)
@@ -2458,7 +2312,7 @@ object IcebergSink {
               s"manifest-${java.util.UUID.randomUUID()}.avro") { f =>
               merged = IcebergAvro.mergeManifests(f, sources); merged._1
             }
-            published += path
+            published += path.toString
             IcebergAvro.manifestRowExisting(path.toFile.getAbsolutePath, len,
               seq, merged._4, snapshotId, merged._2, merged._3, specId.toInt)
           }
@@ -2466,12 +2320,12 @@ object IcebergSink {
           currentSchemaJson(meta)._1, mergedRows, "replace",
           Map("manifests-replaced" -> dataRows.size.toString,
             "manifests-created" -> mergedRows.size.toString),
-          reclaimOnConflict = reclaim,
+          reclaimOnConflict = () => reclaim(store, published.toSeq),
           carriedOverride = Some(deleteRows))
         return (dataRows.size, mergedRows.size)
       } catch {
         case _: OptimisticConcurrencyException if attempt < 3 => attempt += 1
-        case e: Throwable => reclaim(); throw e
+        case e: Throwable => reclaim(store, published.toSeq); throw e
       }
     }
     (0, 0) // unreachable
@@ -2603,12 +2457,7 @@ object IcebergSink {
       currentSchemaJson(meta)._1, Seq(row), "replace",
       Map("graft.synced-from" -> "delta",
         "synced-files" -> infos.size.toString),
-      reclaimOnConflict = () => {
-        store match {
-          case os: ObjectStore => scala.util.Try(os.deleteObject(manifestPath)): Unit
-          case _ => Files.deleteIfExists(manifestPath): Unit
-        }
-      },
+      reclaimOnConflict = () => reclaim(store, Seq(manifestPath.toString)),
       carriedOverride = Some(Nil))
     infos.size
   }
@@ -2786,28 +2635,32 @@ object IcebergSink {
     head
   }
 
-  /** Claims version hint+1 with `newMeta` under the standard OCC protocol
-    * and advances the hint — the shared tail of every metadata-only verb
-    * ([[rollback]], [[createRef]], [[dropRef]], schema evolution).
+  /** The strict commit every Iceberg verb ends with: claims version
+    * hint+1 with `newMeta` by IF-NOT-EXISTS put (the reference's
+    * write_exclusive, iceberg_destination.rs:349-367), then advances the
+    * version hint with an atomic put, so a reader never sees a
+    * half-written hint. A lost race runs `reclaimOnConflict` (the
+    * attempt's artifacts, unreferenced by any committed metadata) and
+    * throws [[OptimisticConcurrencyException]] for the verb's retry loop.
     */
   private[sinks] def commitMetadataVersion(table: String, store: CommitStore,
-      hint: Long, newMeta: ObjectNode): Unit = {
+      hint: Long, newMeta: ObjectNode,
+      reclaimOnConflict: () => Unit = () => ()): Unit = {
     val newVersion = hint + 1
     try
       store.putIfAbsent(metaFile(table, newVersion),
         newMeta.toString.getBytes(StandardCharsets.UTF_8))
     catch {
       case _: FileAlreadyExistsException =>
+        reclaimOnConflict()
         throw new OptimisticConcurrencyException(newVersion)
     }
-    store match {
-      case os: ObjectStore =>
-        os.putObject(hintFile(table),
-          newVersion.toString.getBytes(StandardCharsets.UTF_8))
-      case _ =>
-        Files.writeString(hintFile(table), newVersion.toString): Unit
-    }
+    store.putObject(hintFile(table), newVersion.toString.getBytes(StandardCharsets.UTF_8))
   }
+
+  /** Best-effort reclaim of an aborted attempt's artifacts. */
+  private def reclaim(store: CommitStore, paths: Seq[String]): Unit =
+    paths.foreach(p => scala.util.Try(store.deleteObject(Paths.get(p))))
 
   /** Creates (or repoints) a NAMED REF — Iceberg's tags and branches
     * (spec §refs): a metadata-only commit adding `refs[name]` pointed at
@@ -2921,39 +2774,12 @@ object IcebergSink {
     // (a branch would quietly publish the corruption via fastForward)
     val aligned = alignToStored(df, schema.fieldNames)
     SchemaGate.enforce(aligned.schema, schema)
-    val objStore: Option[ObjectStore] =
-      store match { case os: ObjectStore => Some(os); case _ => None }
-    val dataRel = s"data/branch-$branch-${java.util.UUID.randomUUID()}"
-    val dataStage = objStore
-      .map(_ => Files.createTempDirectory("graft-ib-branch").resolve("out").toString)
-      .getOrElse(s"$table/$dataRel")
-    def deleteTree(f: File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(deleteTree)
-      f.delete(): Unit
-    }
-    try {
-      aligned.toDF(schema.fieldNames.toIndexedSeq: _*).write
-        .option("compression", "snappy")
-        .option("maxRecordsPerFile", DeltaSink.MaxRecordsPerFile)
-        .parquet(dataStage)
-    } catch { case e: Throwable => deleteTree(new File(dataStage)); throw e }
-    val conf = df.sparkSession.sessionState.newHadoopConf()
-    val (parts, infos) = stagedInfos(dataStage, dataRel, table, objStore, conf)
+    val (dataStage, infos) = stageWrite(store, table, "branch-" + branch,
+      df.sparkSession)(aligned.toDF(schema.fieldNames.toIndexedSeq: _*).write)
     val added = infos.map(_.recordCount).sum
     if (added == 0L) {
-      deleteTree(new File(dataStage))
+      CommitStore.deleteTree(dataStage)
       return meta.get("refs").get(branch).get("snapshot-id").asLong()
-    }
-    objStore.foreach { os =>
-      val published = scala.collection.mutable.ArrayBuffer[String]()
-      try parts.foreach { f =>
-        val target = new File(s"$table/$dataRel", f.getName).getAbsolutePath
-        os.putObject(Paths.get(target), Files.readAllBytes(f.toPath))
-        published += target
-      } catch { case e: Throwable =>
-        published.foreach(p => scala.util.Try(os.deleteObject(Paths.get(p))))
-        deleteTree(new File(dataStage)); throw e
-      }
     }
     val snapshotId = math.abs(new java.util.Random().nextLong())
     val emptySpec = """{"spec-id":0,"fields":[]}"""
@@ -2961,16 +2787,9 @@ object IcebergSink {
       writeAvroArtifact(table, store, s"manifest-${java.util.UUID.randomUUID()}.avro")(f =>
         IcebergAvro.writeManifest(f, infos, snapshotId,
           currentSchemaJson(meta)._2, emptySpec))
-    def reclaim(): Unit = {
-      objStore match {
-        case Some(os) =>
-          infos.foreach(i => scala.util.Try(os.deleteObject(Paths.get(i.absPath))))
-          scala.util.Try(os.deleteObject(manifest)): Unit
-        case None =>
-          parts.foreach(_.delete())
-          Files.deleteIfExists(manifest): Unit
-      }
-      deleteTree(new File(dataStage))
+    def reclaimAll(): Unit = {
+      reclaim(store, infos.map(_.absPath) :+ manifest.toString)
+      CommitStore.deleteTree(dataStage)
     }
     // OCC retry parity with a main append (writeWithRetry): a benign
     // concurrent commit — a main append, a compaction, another branch —
@@ -2996,9 +2815,8 @@ object IcebergSink {
           Seq(IcebergAvro.manifestRow(manifest.toFile.getAbsolutePath, manLen,
             seq, snapshotId, infos.size, added)),
           "append", Map("added-records" -> added.toString) ++ summaryProps,
-          reclaimOnConflict = () => if (lastAttempt) reclaim(),
+          reclaimOnConflict = () => if (lastAttempt) reclaimAll(),
           branch = Some(branch))
-        objStore.foreach(_ => deleteTree(new File(dataStage)))
         return snapshotId
       } catch {
         case _: OptimisticConcurrencyException if !lastAttempt => attempt += 1
@@ -3007,23 +2825,18 @@ object IcebergSink {
     -1L // unreachable
   }
 
-  /** Avro artifact into the table's metadata dir, through the store
-    * protocol when one is given (shared by [[deleteWhere]]; the write()
-    * path keeps its inline twin).
+  /** Avro artifact `name` in the table's metadata dir: written where the
+    * store stages it (in place on a local store), then published.
     */
   private def writeAvroArtifact(table: String, store: CommitStore,
       name: String)(write: File => Long): (java.nio.file.Path, Long) = {
     val target = metaDir(table).resolve(name)
-    store match {
-      case os: ObjectStore =>
-        val tmp = Files.createTempFile("graft-ib-avro", ".avro")
-        try {
-          val len = write(tmp.toFile)
-          os.putObject(target, Files.readAllBytes(tmp))
-          (target, len)
-        } finally Files.deleteIfExists(tmp)
-      case _ => (target, write(target.toFile))
-    }
+    val staged = store.stagingFor(target.toFile)
+    try {
+      val len = write(staged)
+      store.publish(staged.toPath, target)
+      (target, len)
+    } finally if (staged != target.toFile) staged.delete(): Unit
   }
 
   /** Shared snapshot-commit tail for the merge-on-read verbs
@@ -3122,26 +2935,10 @@ object IcebergSink {
         refsNode.set[com.fasterxml.jackson.databind.JsonNode](b, node)
         ()
     }
-    val newVersion = hint + 1
-    try
-      store.putIfAbsent(metaFile(table, newVersion),
-        newMeta.toString.getBytes(StandardCharsets.UTF_8))
-    catch {
-      case _: FileAlreadyExistsException =>
-        store match {
-          case os: ObjectStore => scala.util.Try(os.deleteObject(listPath)): Unit
-          case _ => Files.deleteIfExists(listPath): Unit
-        }
-        reclaimOnConflict()
-        throw new OptimisticConcurrencyException(newVersion)
-    }
-    store match {
-      case os: ObjectStore =>
-        os.putObject(hintFile(table),
-          newVersion.toString.getBytes(StandardCharsets.UTF_8))
-      case _ =>
-        Files.writeString(hintFile(table), newVersion.toString): Unit
-    }
+    commitMetadataVersion(table, store, hint, newMeta, () => {
+      reclaim(store, Seq(listPath.toString))
+      reclaimOnConflict()
+    })
   }
 
   /** The current schema's JSON node (by current-schema-id) — the key
@@ -3286,7 +3083,7 @@ object IcebergSink {
     }.toMap
     val snapshotId = math.abs(new java.util.Random().nextLong())
     val seq = meta.get("last-sequence-number").asLong() + 1
-    val published = scala.collection.mutable.ArrayBuffer[Path]()
+    val published = scala.collection.mutable.ArrayBuffer[String]()
     val rows = try perManifest.map {
       case (pf, specId, specJson, schemaMeta, entries) =>
         val infos = entries.map { e =>
@@ -3299,19 +3096,11 @@ object IcebergSink {
           IcebergAvro.writeManifest(f, infos, snapshotId,
             schemaMeta.getOrElse(currentSchemaJson(meta)._2), specJson, pf,
             specId = specId, entrySeqs = seqByPath))
-        published += mp
+        published += mp.toString
         IcebergAvro.manifestRowExisting(mp.toFile.getAbsolutePath, len, seq,
           entries.map(e => seqByPath(e.path)).min, snapshotId, infos.size,
           infos.map(_.recordCount).sum, specId = specId)
-    } catch { case e: Throwable =>
-      published.foreach { p =>
-        store match {
-          case os: ObjectStore => scala.util.Try(os.deleteObject(p)): Unit
-          case _ => Files.deleteIfExists(p): Unit
-        }
-      }
-      throw e
-    }
+    } catch { case e: Throwable => reclaim(store, published.toSeq); throw e }
     // delete manifests carry forward verbatim — their (file, pos)
     // references stay valid because every data entry kept its sequence
     val carriedDeletes = IcebergAvro.readManifestList(
@@ -3321,14 +3110,7 @@ object IcebergSink {
       currentSchemaJson(meta)._1, rows, "replace",
       Map("graft.row-lineage" -> "enabled",
         "assigned-rows" -> next.toString),
-      reclaimOnConflict = () => {
-        published.foreach { p =>
-          store match {
-            case os: ObjectStore => scala.util.Try(os.deleteObject(p)): Unit
-            case _ => Files.deleteIfExists(p): Unit
-          }
-        }
-      },
+      reclaimOnConflict = () => reclaim(store, published.toSeq),
       carriedOverride = Some(carriedDeletes),
       formatVersion = Some(3),
       assignedRows = next,
@@ -3493,47 +3275,28 @@ object IcebergSink {
           } catch { case e: Throwable =>
             // mid-job failure: sweep every DETERMINISTIC candidate shard
             // name (absent keys no-op) — zero bytes behind an abort
-            (0 until shards).foreach { pid =>
-              val uuid = new java.util.UUID(tMsb, tLsb ^ pid.toLong)
-              val p = Paths.get(metaAbs, s"dv-$uuid.puffin")
-              store match {
-                case os: ObjectStore => scala.util.Try(os.deleteObject(p)): Unit
-                case _ => Files.deleteIfExists(p): Unit
-              }
-            }
+            reclaim(store, (0 until shards).map(pid =>
+              new File(metaAbs, s"dv-${new java.util.UUID(tMsb, tLsb ^ pid.toLong)}.puffin")
+                .getPath))
             throw e
           } finally bOld.destroy()
         case None =>
           // driver-only store: stream shard-sized chunks — at most
           // FilesPerDvShard bitmaps in the pack buffer at once
           import scala.jdk.CollectionConverters._
-          val published = scala.collection.mutable.ArrayBuffer[Path]()
-          def readVia(p: String): Array[Byte] = store match {
-            case os: ObjectStore => os.readObject(Paths.get(p))
-            case _ => Files.readAllBytes(Paths.get(p))
-          }
+          val published = scala.collection.mutable.ArrayBuffer[String]()
           try {
             fresh.toLocalIterator().asScala.grouped(DeltaSink.FilesPerDvShard)
               .zipWithIndex.flatMap { case (chunk, i) =>
                 val (name, fileBytes, ds) = packPuffinShard(metaAbs, tMsb,
-                  tLsb, i, chunk, liveDvRefs, readVia)
+                  tLsb, i, chunk, liveDvRefs, p => store.readObject(Paths.get(p)))
                 val target = metaDir(table).resolve(name)
-                store match {
-                  case os: ObjectStore => os.putObject(target, fileBytes)
-                  case _ =>
-                    Files.createDirectories(metaDir(table))
-                    Files.write(target, fileBytes): Unit
-                }
-                published += target
+                store.putObject(target, fileBytes)
+                published += target.toString
                 ds
               }.toVector
           } catch { case e: Throwable =>
-            published.foreach { p =>
-              store match {
-                case os: ObjectStore => scala.util.Try(os.deleteObject(p)): Unit
-                case _ => Files.deleteIfExists(p): Unit
-              }
-            }
+            reclaim(store, published.toSeq)
             throw e
           }
       }
@@ -3557,63 +3320,27 @@ object IcebergSink {
     // an UPDATE stages the transformed replacements as new data files in
     // the SAME snapshot — SET expressions evaluate against the PRE-update
     // row (matched is persisted; one merged-view scan feeds both planes)
-    val objStore: Option[ObjectStore] =
-      store match { case os: ObjectStore => Some(os); case _ => None }
-    val conf = spark.sessionState.newHadoopConf()
-    def reclaimDvPlane(): Unit = {
-      (puffinPaths :+ manifestPath).foreach { p =>
-        store match {
-          case os: ObjectStore => scala.util.Try(os.deleteObject(p)): Unit
-          case _ => Files.deleteIfExists(p): Unit
-        }
-      }
-    }
+    def reclaimDvPlane(): Unit = reclaim(store, (puffinPaths :+ manifestPath).map(_.toString))
     val replacement = try setOpt.map { set =>
       val schema = snap.schema
       val rep = matched.select(schema.fieldNames.map(c =>
         set.get(c).map(e => expr(e).cast(schema(c).dataType).as(c))
           .getOrElse(col(c))).toIndexedSeq: _*)
-      val repRel = s"data/update-${java.util.UUID.randomUUID()}"
-      val repStage = objStore
-        .map(_ => Files.createTempDirectory("graft-ibdv-upd").resolve("out").toString)
-        .getOrElse(s"$table/$repRel")
-      rep.write.option("compression", "snappy")
-        .option("maxRecordsPerFile", DeltaSink.MaxRecordsPerFile)
-        .parquet(repStage)
-      val (repParts, repInfos0) = stagedInfos(repStage, repRel, table, objStore, conf)
-      // row lineage: an UPDATE's replacement rows are NEW rows — they take
-      // fresh ids from the table clock (spec: update = delete + insert)
-      val repInfos =
-        if (!meta.has("next-row-id")) repInfos0
-        else {
-          var next = meta.get("next-row-id").asLong()
-          repInfos0.map { i =>
-            val o = i.copy(firstRowId = Some(next)); next += i.recordCount; o
-          }
-        }
-      objStore.foreach { os =>
-        repParts.foreach { f =>
-          os.putObject(
-            Paths.get(new File(s"$table/$repRel", f.getName).getAbsolutePath),
-            Files.readAllBytes(f.toPath))
-        }
-      }
+      val (repStage, repInfos0) = stageWrite(store, table, "update", spark)(rep.write)
+      // an UPDATE's replacement rows are NEW rows (update = delete + insert)
+      val repInfos = withFirstRowIds(meta, repInfos0)
       val (repManifest, repLen) = writeAvroArtifact(table, store,
         s"manifest-${java.util.UUID.randomUUID()}.avro")(f =>
         IcebergAvro.writeManifest(f, repInfos, snapshotId,
           currentSchemaJson(meta)._2, """{"spec-id":0,"fields":[]}"""))
       (IcebergAvro.manifestRow(repManifest.toFile.getAbsolutePath, repLen, seq,
         snapshotId, repInfos.size, repInfos.map(_.recordCount).sum),
-        repParts, repInfos, repStage, repManifest)
+        repInfos, repStage, repManifest)
     } catch { case e: Throwable =>
       // a failed replacement staging must not strand the already-published
       // Puffin shards + DV manifest (ADVICE r15)
       reclaimDvPlane()
       throw e
-    }
-    def deleteTree(f: File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(deleteTree)
-      f.delete(): Unit
     }
     commitSnapshot(table, store, meta, hint, snapshotId, seq,
       currentSchemaJson(meta)._1, Seq(row) ++ replacement.map(_._1),
@@ -3626,28 +3353,15 @@ object IcebergSink {
         // update's replacement files/manifest/staging (posRewrite's
         // contract; ADVICE r15)
         reclaimDvPlane()
-        replacement.foreach { case (_, repParts, repInfos, repStage, repManifest) =>
-          objStore match {
-            case Some(os) =>
-              repInfos.foreach(i =>
-                scala.util.Try(os.deleteObject(Paths.get(i.absPath))))
-              scala.util.Try(os.deleteObject(repManifest)): Unit
-            case None =>
-              repParts.foreach(_.delete())
-              Files.deleteIfExists(repManifest): Unit
-          }
-          deleteTree(new File(repStage))
+        replacement.foreach { case (_, repInfos, repStage, repManifest) =>
+          reclaim(store, repInfos.map(_.absPath) :+ repManifest.toString)
+          CommitStore.deleteTree(repStage)
         }
       },
       formatVersion = Some(3),
       assignedRows =
         if (!meta.has("next-row-id")) 0L
-        else replacement.map(_._3.map(_.recordCount).sum).getOrElse(0L))
-    // staged temp dirs are dead once the commit landed (objStore path
-    // stages outside the table; the local path's stage IS the table dir)
-    objStore.foreach { _ =>
-      replacement.foreach(r => deleteTree(new File(r._4)))
-    }
+        else replacement.map(_._2.map(_.recordCount).sum).getOrElse(0L))
     deletedNow
     } finally matched.unpersist(): Unit
   }
@@ -3872,37 +3586,6 @@ object IcebergSink {
           .repartitionByRange(col("_gf_gid"), col("file_path"), col("pos"))
           .sortWithinPartitions("_gf_gid", "file_path", "pos")
       }
-    val objStore: Option[ObjectStore] =
-      store match { case os: ObjectStore => Some(os); case _ => None }
-    val stage = s"data/delete-${java.util.UUID.randomUUID()}"
-    val stagePath = objStore
-      .map(_ => Files.createTempDirectory("graft-ib-del").resolve("out").toString)
-      .getOrElse(s"$table/$stage")
-    val writer = dels.write
-      .option("compression", "snappy")
-      .option("maxRecordsPerFile", DeltaSink.MaxRecordsPerFile)
-    (if (delPartFields.isEmpty) writer else writer.partitionBy("_gf_gid"))
-      .parquet(stagePath)
-    new File(s"$stagePath/_SUCCESS").delete()
-    val stageRoot = new File(stagePath)
-    def deleteTree(f: File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(deleteTree)
-      f.delete(): Unit
-    }
-    def walkParts(d: File): Seq[File] = Option(d.listFiles()).toSeq.flatten.flatMap {
-      case f if f.isDirectory => walkParts(f)
-      case f if f.getName.startsWith("part-") && f.getName.endsWith(".parquet") =>
-        Seq(f)
-      case _ => Nil
-    }
-    val parts = walkParts(stageRoot).sortBy(_.getAbsolutePath)
-    val conf = spark.sessionState.newHadoopConf()
-    def tablePathOf(f: File): String = objStore match {
-      case Some(_) =>
-        new File(s"$table/$stage",
-          stageRoot.toPath.relativize(f.toPath).toString).getAbsolutePath
-      case None => f.getAbsolutePath
-    }
     // a part file's partition values come from its _gf_gid=N directory —
     // -1 (an old-spec file whose pvals don't key the current spec) and the
     // unpartitioned path both stamp nulls, which every reader KEEPS
@@ -3914,32 +3597,11 @@ object IcebergSink {
           delPartFields.map(pf => groupKeys(gid).getOrElse(pf.name, null))
         else delPartFields.map(_ => null)
       }
-    val (kept, empties) = parts.map { f =>
-      val (rows, _) = footerStats(f, conf, Map.empty)
-      (f, IcebergAvro.DataFileInfo(tablePathOf(f), f.length(), rows,
-        partitionValues = partValuesOfPart(f)))
-    }.partition(_._2.recordCount > 0)
-    // zero-row part files would never enter a manifest — reclaim them now
-    // or they'd sit on disk unreferenced forever (expiry only reclaims
-    // manifest-referenced paths)
-    empties.foreach(_._1.delete())
-    val parts2 = kept.map(_._1)
-    val infos = kept.map(_._2)
-    if (infos.isEmpty) { deleteTree(stageRoot); return 0L }
+    val (stageRoot, infos) = stageWrite(store, table, "delete", spark,
+      partValuesOfPart)(
+      if (delPartFields.isEmpty) dels.write else dels.write.partitionBy("_gf_gid"))
+    if (infos.isEmpty) { CommitStore.deleteTree(stageRoot); return 0L }
     val deletedRows = infos.map(_.recordCount).sum
-    // publish staged delete files through the store protocol
-    objStore.foreach { os =>
-      val published = scala.collection.mutable.ArrayBuffer[String]()
-      try parts2.foreach { f =>
-        val target = tablePathOf(f)
-        os.putObject(Paths.get(target), Files.readAllBytes(f.toPath))
-        published += target
-      } catch { case e: Throwable =>
-        published.foreach(p => scala.util.Try(os.deleteObject(Paths.get(p))))
-        deleteTree(stageRoot)
-        throw e
-      }
-    }
     val snapshotId = math.abs(new java.util.Random().nextLong())
     val seq = meta.get("last-sequence-number").asLong() + 1
     val (schemaId, schemaJson) = currentSchemaJson(meta)
@@ -3964,85 +3626,43 @@ object IcebergSink {
     // an UPDATE additionally stages the transformed replacements as new
     // data files in the SAME snapshot — SET expressions evaluate against
     // the PRE-update row (matched is persisted; one merged-view scan)
-    val replacement = setOpt.map { set =>
+    def reclaimDeletePlane(): Unit = {
+      reclaim(store, infos.map(_.absPath) :+ manifestPath.toString)
+      CommitStore.deleteTree(stageRoot)
+    }
+    val replacement = try setOpt.map { set =>
       val schema = snap.schema
       val rep = matched.select(schema.fieldNames.map(c =>
         set.get(c).map(e => expr(e).cast(schema(c).dataType).as(c))
           .getOrElse(col(c))).toIndexedSeq: _*)
-      val repRel = s"data/update-${java.util.UUID.randomUUID()}"
-      val repStage = objStore
-        .map(_ => Files.createTempDirectory("graft-ib-upd").resolve("out").toString)
-        .getOrElse(s"$table/$repRel")
-      rep.write
-        .option("compression", "snappy")
-        .option("maxRecordsPerFile", DeltaSink.MaxRecordsPerFile)
-        .parquet(repStage)
-      val (repParts, repInfos0) = stagedInfos(repStage, repRel, table, objStore, conf)
-      // row lineage: replacement rows take fresh ids from the table clock
-      val repInfos =
-        if (!meta.has("next-row-id")) repInfos0
-        else {
-          var next = meta.get("next-row-id").asLong()
-          repInfos0.map { i =>
-            val o = i.copy(firstRowId = Some(next)); next += i.recordCount; o
-          }
-        }
-      objStore.foreach { os =>
-        val published = scala.collection.mutable.ArrayBuffer[String]()
-        try repParts.foreach { f =>
-          val target = new File(s"$table/$repRel", f.getName).getAbsolutePath
-          os.putObject(Paths.get(target), Files.readAllBytes(f.toPath))
-          published += target
-        } catch { case e: Throwable =>
-          published.foreach(pp => scala.util.Try(os.deleteObject(Paths.get(pp))))
-          deleteTree(new File(repStage)); deleteTree(stageRoot)
-          throw e
-        }
-      }
+      val (repStage, repInfos0) = stageWrite(store, table, "update", spark)(rep.write)
+      val repInfos = withFirstRowIds(meta, repInfos0)
       val (repManifest, repLen) = writeAvroArtifact(table, store,
         s"manifest-${java.util.UUID.randomUUID()}.avro")(f =>
         IcebergAvro.writeManifest(f, repInfos, snapshotId, schemaJson,
           """{"spec-id":0,"fields":[]}"""))
-      (repParts, repInfos, repStage,
+      (repInfos, repStage,
         IcebergAvro.manifestRow(repManifest.toFile.getAbsolutePath, repLen, seq,
           snapshotId, repInfos.size, repInfos.map(_.recordCount).sum),
         repManifest)
-    }
-    val rows = Seq(delRow) ++ replacement.map(_._4)
+    } catch { case e: Throwable => reclaimDeletePlane(); throw e }
+    val rows = Seq(delRow) ++ replacement.map(_._3)
     commitSnapshot(table, store, meta, hint, snapshotId, seq, schemaId,
       rows, if (setOpt.isDefined) "overwrite" else "delete",
       Map("added-position-delete-files" -> infos.size.toString,
         "added-position-deletes" -> deletedRows.toString) ++
         replacement.map(r =>
-          "replaced-records" -> r._2.map(_.recordCount).sum.toString),
+          "replaced-records" -> r._1.map(_.recordCount).sum.toString),
       reclaimOnConflict = () => {
-        objStore match {
-          case Some(os) =>
-            infos.foreach(i =>
-              scala.util.Try(os.deleteObject(Paths.get(i.absPath))))
-            scala.util.Try(os.deleteObject(manifestPath)): Unit
-            replacement.foreach { r =>
-              r._2.foreach(i => scala.util.Try(os.deleteObject(Paths.get(i.absPath))))
-              scala.util.Try(os.deleteObject(r._5)): Unit
-            }
-          case None =>
-            parts2.foreach(_.delete())
-            Files.deleteIfExists(manifestPath): Unit
-            replacement.foreach { r =>
-              r._1.foreach(_.delete())
-              Files.deleteIfExists(r._5): Unit
-            }
+        reclaimDeletePlane()
+        replacement.foreach { case (repInfos, repStage, _, repManifest) =>
+          reclaim(store, repInfos.map(_.absPath) :+ repManifest.toString)
+          CommitStore.deleteTree(repStage)
         }
-        replacement.foreach(r => deleteTree(new File(r._3)))
-        deleteTree(stageRoot)
       }, branch = branch,
       assignedRows =
         if (!meta.has("next-row-id")) 0L
-        else replacement.map(_._2.map(_.recordCount).sum).getOrElse(0L))
-    objStore.foreach { _ =>
-      replacement.foreach(r => deleteTree(new File(r._3)))
-      deleteTree(stageRoot)
-    }
+        else replacement.map(_._1.map(_.recordCount).sum).getOrElse(0L))
     deletedRows
     } finally { if (setOpt.isDefined) matched.unpersist(): Unit }
   }
@@ -4092,26 +3712,16 @@ object IcebergSink {
         lit(s"upsert source must be unique on (${keys.mkString(", ")})")))
         .otherwise(lit(true)))
       .drop(dupN)
-    val objStore: Option[ObjectStore] =
-      store match { case os: ObjectStore => Some(os); case _ => None }
-    def stageDir(tag: String): (String, String) = {
-      val rel = s"data/$tag-${java.util.UUID.randomUUID()}"
-      val local = objStore
-        .map(_ => Files.createTempDirectory("graft-ib-up").resolve("out").toString)
-        .getOrElse(s"$table/$rel")
-      (rel, local)
-    }
-    val (dataRel, dataStage) = stageDir("upsert")
-    val (delRel, delStage) = stageDir("upsert-del")
-    def deleteTree(f: File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(deleteTree)
-      f.delete(): Unit
+    val (dataDir, dataStage) = newStage(store, table, "upsert")
+    val (delDir, delStage) = newStage(store, table, "upsert-del")
+    def dropStages(): Unit = {
+      CommitStore.deleteTree(dataStage); CommitStore.deleteTree(delStage)
     }
     try {
       guarded.write
         .option("compression", "snappy")
         .option("maxRecordsPerFile", DeltaSink.MaxRecordsPerFile)
-        .parquet(dataStage)
+        .parquet(dataStage.getPath)
       // equality-delete rows = the source keys (unique by the guard above,
       // re-read from the staged files so the guarded plan runs ONCE),
       // stamped with the table's field ids per the spec
@@ -4125,47 +3735,23 @@ object IcebergSink {
       // funneling every key through one. The read side union-reads all
       // delete files of a snapshot, so file count is free.
       spark.read.schema(StructType(schema.fields.filter(f => keys.contains(f.name))))
-        .parquet(dataStage)
+        .parquet(dataStage.getPath)
         .select(keys.map(k => col(k).as(k, keyMeta(k))): _*)
         .write.option("compression", "snappy")
         .option("maxRecordsPerFile", DeltaSink.MaxRecordsPerFile)
-        .parquet(delStage)
-    } catch { case e: Throwable =>
-      deleteTree(new File(dataStage)); deleteTree(new File(delStage))
-      throw e
-    }
+        .parquet(delStage.getPath)
+    } catch { case e: Throwable => dropStages(); throw e }
     val conf = spark.sessionState.newHadoopConf()
-    def infosOf(stage: String, rel: String): (Seq[File], Seq[IcebergAvro.DataFileInfo]) =
-      stagedInfos(stage, rel, table, objStore, conf)
-    val (dataParts, dataInfos0) = infosOf(dataStage, dataRel)
-    val (delParts, delInfos) = infosOf(delStage, delRel)
-    // row lineage: upserted rows are NEW rows — fresh ids from the clock
-    val dataInfos =
-      if (!meta.has("next-row-id")) dataInfos0
-      else {
-        var next = meta.get("next-row-id").asLong()
-        dataInfos0.map { i =>
-          val o = i.copy(firstRowId = Some(next)); next += i.recordCount; o
-        }
+    val dataInfos = withFirstRowIds(meta,
+      try stagedInfos(store, dataStage, dataDir, conf)
+      catch { case e: Throwable => dropStages(); throw e })
+    val delInfos =
+      try stagedInfos(store, delStage, delDir, conf)
+      catch { case e: Throwable =>
+        reclaim(store, dataInfos.map(_.absPath)); dropStages(); throw e
       }
     val upserted = dataInfos.map(_.recordCount).sum
-    if (upserted == 0L) {
-      deleteTree(new File(dataStage)); deleteTree(new File(delStage))
-      return 0L
-    }
-    objStore.foreach { os =>
-      val published = scala.collection.mutable.ArrayBuffer[String]()
-      try (dataParts.map((_, dataRel)) ++ delParts.map((_, delRel))).foreach {
-        case (f, rel) =>
-          val target = new File(s"$table/$rel", f.getName).getAbsolutePath
-          os.putObject(Paths.get(target), Files.readAllBytes(f.toPath))
-          published += target
-      } catch { case e: Throwable =>
-        published.foreach(p => scala.util.Try(os.deleteObject(Paths.get(p))))
-        deleteTree(new File(dataStage)); deleteTree(new File(delStage))
-        throw e
-      }
-    }
+    if (upserted == 0L) { dropStages(); return 0L }
     val snapshotId = math.abs(new java.util.Random().nextLong())
     val seq = meta.get("last-sequence-number").asLong() + 1
     val (schemaId, schemaJson) = currentSchemaJson(meta)
@@ -4188,51 +3774,66 @@ object IcebergSink {
         "added-equality-delete-files" -> delInfos.size.toString) ++ summaryProps,
       branch = branch,
       reclaimOnConflict = () => {
-        objStore match {
-          case Some(os) =>
-            (dataInfos ++ delInfos).foreach(i =>
-              scala.util.Try(os.deleteObject(Paths.get(i.absPath))))
-            scala.util.Try(os.deleteObject(dataManifest))
-            scala.util.Try(os.deleteObject(delManifest)): Unit
-          case None =>
-            (dataParts ++ delParts).foreach(_.delete())
-            Files.deleteIfExists(dataManifest)
-            Files.deleteIfExists(delManifest): Unit
-        }
-        deleteTree(new File(dataStage)); deleteTree(new File(delStage))
+        reclaim(store, (dataInfos ++ delInfos).map(_.absPath) :+
+          dataManifest.toString :+ delManifest.toString)
+        dropStages()
       },
       assignedRows = if (meta.has("next-row-id")) upserted else 0L)
-    objStore.foreach { _ =>
-      deleteTree(new File(dataStage)); deleteTree(new File(delStage))
-    }
     upserted
   }
 
-  /** Spark's staged part files under `stage` (dropping _SUCCESS and
-    * zero-row parts, which are deleted immediately), with their
-    * DataFileInfo targeting the table path (store writes publish under
-    * `table/rel`; local writes keep the staged path). Shared by
-    * [[upsert]] and [[deleteKeys]].
+  /** A fresh table dir `data/<tag>-<uuid>` for one write's files, and
+    * where the store stages them (the dir itself on a local store).
     */
-  private def stagedInfos(stage: String, rel: String, table: String,
-      objStore: Option[ObjectStore],
-      conf: org.apache.hadoop.conf.Configuration)
-      : (Seq[File], Seq[IcebergAvro.DataFileInfo]) = {
-    new File(s"$stage/_SUCCESS").delete()
-    val parts = Option(new File(stage).listFiles()).toSeq.flatten
-      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-      .sortBy(_.getAbsolutePath)
-    val (kept, empties) = parts.map { f =>
-      val (rows, _) = footerStats(f, conf, Map.empty)
-      val target = objStore match {
-        case Some(_) => new File(s"$table/$rel", f.getName).getAbsolutePath
-        case None => f.getAbsolutePath
-      }
-      (f, IcebergAvro.DataFileInfo(target, f.length(), rows))
-    }.partition(_._2.recordCount > 0)
-    empties.foreach(_._1.delete())
-    (kept.map(_._1), kept.map(_._2))
+  private def newStage(store: CommitStore, table: String, tag: String): (File, File) = {
+    val dir = new File(s"$table/data/$tag-${java.util.UUID.randomUUID()}")
+    (dir, store.stagingFor(dir))
   }
+
+  /** Harvests the part files staged at `stage` into the table dir `dir`
+    * ([[CommitStore.harvest]]): each non-empty one is published with its
+    * DataFileInfo at its table path; zero-row parts are deleted, since
+    * they would never enter a manifest (expiry only reclaims
+    * manifest-referenced paths).
+    */
+  private def stagedInfos(store: CommitStore, stage: File, dir: File,
+      conf: org.apache.hadoop.conf.Configuration,
+      partValuesOf: File => Seq[Any] = _ => Nil): Seq[IcebergAvro.DataFileInfo] =
+    CommitStore.harvest(store, stage, dir) { (f, rel) =>
+      val (rows, _) = footerStats(f, conf, Map.empty)
+      if (rows == 0L) None
+      else Some(IcebergAvro.DataFileInfo(new File(dir, rel).getAbsolutePath,
+        f.length(), rows, partitionValues = partValuesOf(f)))
+    }
+
+  /** One Spark parquet write into a fresh stage ([[newStage]]),
+    * harvested by [[stagedInfos]]; a failed write leaves nothing behind.
+    * Returns the stage — a lost commit race deletes it — and the
+    * published files' infos.
+    */
+  private def stageWrite(store: CommitStore, table: String, tag: String,
+      spark: SparkSession, partValuesOf: File => Seq[Any] = _ => Nil)(
+      writer: org.apache.spark.sql.DataFrameWriter[Row])
+      : (File, Seq[IcebergAvro.DataFileInfo]) = {
+    val (dir, stage) = newStage(store, table, tag)
+    try writer.option("compression", "snappy")
+      .option("maxRecordsPerFile", DeltaSink.MaxRecordsPerFile)
+      .parquet(stage.getPath)
+    catch { case e: Throwable => CommitStore.deleteTree(stage); throw e }
+    (stage, stagedInfos(store, stage, dir, spark.sessionState.newHadoopConf(),
+      partValuesOf))
+  }
+
+  /** Row lineage (spec §Row Lineage): on a lineage-enabled table, ADDED
+    * rows are NEW rows and take consecutive ids from the table clock.
+    */
+  private def withFirstRowIds(meta: com.fasterxml.jackson.databind.JsonNode,
+      infos: Seq[IcebergAvro.DataFileInfo]): Seq[IcebergAvro.DataFileInfo] =
+    if (!meta.has("next-row-id")) infos
+    else {
+      var next = meta.get("next-row-id").asLong()
+      infos.map { i => val o = i.copy(firstRowId = Some(next)); next += i.recordCount; o }
+    }
 
   /** Equality-delete-ONLY snapshot — the CDC DELETE verb (the Flink-CDC
     * shape [[upsert]]'s doc describes, minus the replacement rows):
@@ -4262,16 +3863,15 @@ object IcebergSink {
     val meta = mapper.readTree(Files.readString(metaFile(table, hint)))
     val schema = DataType.fromJson(
       meta.get("properties").get("graft.spark-schema").asText()).asInstanceOf[StructType]
-    val objStore: Option[ObjectStore] =
-      store match { case os: ObjectStore => Some(os); case _ => None }
-    def deleteTree(f: File): Unit = {
-      Option(f.listFiles()).toSeq.flatten.foreach(deleteTree)
-      f.delete(): Unit
-    }
-    val conf = spark.sessionState.newHadoopConf()
     // stage one parquet key file set per group, stamped with the table's
-    // field ids per the spec (readers resolve equality_ids against them)
-    val staged = groups.map { case (keys, keyCols) =>
+    // field ids per the spec (readers resolve equality_ids against them);
+    // a failing group reclaims the groups already published
+    val staged = scala.collection.mutable.ArrayBuffer[
+      (Seq[Int], File, Seq[IcebergAvro.DataFileInfo])]()
+    def reclaimStaged(): Unit = staged.foreach { case (_, stage, infos) =>
+      reclaim(store, infos.map(_.absPath)); CommitStore.deleteTree(stage)
+    }
+    try groups.foreach { case (keys, keyCols) =>
       keyCols.foreach(k => require(schema.fieldNames.contains(k),
         s"no such key column: $k"))
       val eqIds = keyCols.map(k => curFieldsOf(meta, schema)
@@ -4280,45 +3880,19 @@ object IcebergSink {
         k -> new org.apache.spark.sql.types.MetadataBuilder()
           .putLong("parquet.field.id", id.toLong).build()
       }.toMap
-      val rel = s"data/delete-keys-${java.util.UUID.randomUUID()}"
-      val stage = objStore
-        .map(_ => Files.createTempDirectory("graft-ib-dk").resolve("out").toString)
-        .getOrElse(s"$table/$rel")
-      keys.select(keyCols.map(k => col(k).cast(schema(k).dataType)
-          .as(k, keyMeta(k))): _*)
-        .distinct()
-        .write.option("compression", "snappy")
-        .option("maxRecordsPerFile", DeltaSink.MaxRecordsPerFile)
-        .parquet(stage)
-      val (parts, infos) = stagedInfos(stage, rel, table, objStore, conf)
-      (eqIds, rel, stage, parts, infos)
-    }
-    val total = staged.flatMap(_._5).map(_.recordCount).sum
-    if (total == 0L) {
-      staged.foreach(s => deleteTree(new File(s._3)))
-      return 0L
-    }
-    // publish staged files through the store (whole-write abort on failure)
-    objStore.foreach { os =>
-      val published = scala.collection.mutable.ArrayBuffer[String]()
-      try staged.foreach { case (_, rel, _, parts, _) =>
-        parts.foreach { f =>
-          val target = new File(s"$table/$rel", f.getName).getAbsolutePath
-          os.putObject(Paths.get(target), Files.readAllBytes(f.toPath))
-          published += target
-        }
-      } catch { case e: Throwable =>
-        published.foreach(p => scala.util.Try(os.deleteObject(Paths.get(p))))
-        staged.foreach(s => deleteTree(new File(s._3)))
-        throw e
-      }
-    }
+      val (stage, infos) = stageWrite(store, table, "delete-keys", spark)(
+        keys.select(keyCols.map(k => col(k).cast(schema(k).dataType)
+          .as(k, keyMeta(k))): _*).distinct().write)
+      staged += ((eqIds, stage, infos))
+    } catch { case e: Throwable => reclaimStaged(); throw e }
+    val total = staged.flatMap(_._3).map(_.recordCount).sum
+    if (total == 0L) { reclaimStaged(); return 0L }
     val snapshotId = math.abs(new java.util.Random().nextLong())
     val seq = meta.get("last-sequence-number").asLong() + 1
     val (schemaId, schemaJson) = currentSchemaJson(meta)
     val emptySpec = """{"spec-id":0,"fields":[]}"""
-    val manifests = staged.filter(_._5.nonEmpty).map {
-      case (eqIds, _, _, _, infos) =>
+    val manifests = staged.toSeq.filter(_._3.nonEmpty).map {
+      case (eqIds, _, infos) =>
         val (path, len) = writeAvroArtifact(table, store,
           s"manifest-${java.util.UUID.randomUUID()}.avro")(f =>
           IcebergAvro.writeManifest(f, infos, snapshotId, schemaJson, emptySpec,
@@ -4330,20 +3904,11 @@ object IcebergSink {
       manifests.map(_._2), "delete",
       Map("deleted-key-rows" -> total.toString,
         "added-equality-delete-files" ->
-          staged.map(_._5.size).sum.toString),
+          staged.map(_._3.size).sum.toString),
       reclaimOnConflict = () => {
-        objStore match {
-          case Some(os) =>
-            staged.flatMap(_._5).foreach(i =>
-              scala.util.Try(os.deleteObject(Paths.get(i.absPath))))
-            manifests.foreach(m => scala.util.Try(os.deleteObject(m._1))): Unit
-          case None =>
-            staged.flatMap(_._4).foreach(_.delete())
-            manifests.foreach(m => Files.deleteIfExists(m._1)): Unit
-        }
-        staged.foreach(s => deleteTree(new File(s._3)))
+        reclaimStaged()
+        reclaim(store, manifests.map(_._1.toString))
       })
-    objStore.foreach(_ => staged.foreach(s => deleteTree(new File(s._3))))
     total
   }
 
@@ -4414,13 +3979,13 @@ object IcebergSink {
           val dvRows: Seq[(String, Long)] = dvDels.flatMap { d =>
             val (ref, off, size) = d.dvRef.get
             val bm = graft.functions.DeletionVector.readFramedAt(
-              readBytesAt(store, d.path), off.toInt, size - 8)
+              store.readObject(Paths.get(d.path)), off.toInt, size - 8)
             prev.deletes
               .filter(p => p.content == 1 && p.dvRef.exists(_._1 == ref))
               .sortBy(_.seq).lastOption.foreach { p =>
                 val (_, poff, psize) = p.dvRef.get
                 bm.andNot(graft.functions.DeletionVector.readFramedAt(
-                  readBytesAt(store, p.path), poff.toInt, psize - 8))
+                  store.readObject(Paths.get(p.path)), poff.toInt, psize - 8))
               }
             val it = bm.getLongIterator
             val out = scala.collection.mutable.ArrayBuffer[(String, Long)]()
@@ -4669,29 +4234,11 @@ object IcebergSink {
     }
     val arr = newMeta.putArray("snapshots")
     kept.foreach(arr.add)
-    val newVersion = hint + 1
-    try
-      store.putIfAbsent(metaFile(table, newVersion),
-        newMeta.toString.getBytes(StandardCharsets.UTF_8))
-    catch {
-      case _: FileAlreadyExistsException => throw new OptimisticConcurrencyException(newVersion)
-    }
-    // hint update + physical reclamation travel the store protocol when
-    // one is given (a real bucket has no local unlink)
-    store match {
-      case os: ObjectStore =>
-        os.putObject(hintFile(table),
-          newVersion.toString.getBytes(StandardCharsets.UTF_8))
-      case _ =>
-        Files.writeString(hintFile(table), newVersion.toString): Unit
-    }
-    def reclaim(p: String): Unit = store match {
-      case os: ObjectStore => os.deleteObject(Paths.get(p))
-      case _ => Files.deleteIfExists(Paths.get(p)): Unit
-    }
-    (expMeta -- keptMeta).foreach(reclaim)
+    commitMetadataVersion(table, store, hint, newMeta)
+    def unlink(p: String): Unit = store.deleteObject(Paths.get(p))
+    (expMeta -- keptMeta).foreach(unlink)
     val deadData = expData -- keptData -- deltaLive
-    deadData.foreach(reclaim)
+    deadData.foreach(unlink)
     deadData.size
   }
 
@@ -4739,23 +4286,14 @@ object IcebergSink {
     // the same contract as distributed remove_orphan_files.
     // Delta-plane artifacts have their own janitors (DeltaSink.vacuum).
     val skipDirs = Set("_delta_log", "_change_data", DeltaSink.DvPrefix)
-    val candidates: Seq[(File, Long)] = store match {
-      case os: ObjectStore =>
-        val rootPath = root.toPath.toAbsolutePath.normalize()
-        os.listPrefixMeta(rootPath).flatMap { case (p, mtime) =>
-          val rel = rootPath.relativize(p.toAbsolutePath.normalize())
-          val dirSegs = (0 until rel.getNameCount - 1).map(rel.getName(_).toString)
-          if (dirSegs.exists(skipDirs.contains)) None
-          else Some((p.toFile, mtime))
-        }
-      case _ =>
-        def walk(d: File): Seq[File] = Option(d.listFiles()).toSeq.flatten.flatMap {
-          case f if f.isDirectory =>
-            if (skipDirs.contains(f.getName)) Nil else walk(f)
-          case f => Seq(f)
-        }
-        walk(root).map(f => (f, f.lastModified()))
-    }
+    val rootPath = root.toPath.toAbsolutePath.normalize()
+    val candidates: Seq[(File, Long)] =
+      store.listPrefixMeta(rootPath).flatMap { case (p, mtime) =>
+        val rel = rootPath.relativize(p.toAbsolutePath.normalize())
+        val dirSegs = (0 until rel.getNameCount - 1).map(rel.getName(_).toString)
+        if (dirSegs.exists(skipDirs.contains)) None
+        else Some((p.toFile, mtime))
+      }
     val orphans = candidates.filter { case (f, mtime) =>
       val name = f.getName
       val sweepable =
@@ -4764,14 +4302,7 @@ object IcebergSink {
         else name.endsWith(".parquet")
       sweepable && mtime < cutoff && !referenced.contains(f.getAbsolutePath)
     }
-    orphans.map { case (f, _) =>
-      val p = f.getAbsolutePath
-      store match {
-        case os: ObjectStore => os.deleteObject(f.toPath)
-        case _ => Files.deleteIfExists(f.toPath): Unit
-      }
-      p
-    }
+    orphans.map { case (f, _) => store.deleteObject(f.toPath); f.getAbsolutePath }
   }
 
   /** Inventory for [[DeltaSink.convertFromIceberg]]: (schema, identity

@@ -192,12 +192,7 @@ object IcebergStats {
     val footerSize = fileBytes.length - footerStart
     val statsPath = Paths.get(table, "metadata",
       s"stats-${java.util.UUID.randomUUID()}.puffin")
-    store match {
-      case os: ObjectStore => os.putObject(statsPath, fileBytes)
-      case _ =>
-        Files.createDirectories(statsPath.getParent)
-        Files.write(statsPath, fileBytes): Unit
-    }
+    store.putObject(statsPath, fileBytes)
     // metadata-only commit: REPLACE the statistics list with this file's
     // entry (spec: a list of statistics files, keyed by snapshot)
     val newMeta = meta.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
@@ -230,21 +225,13 @@ object IcebergStats {
     }
     try IcebergSink.commitMetadataVersion(table, store, hint, newMeta)
     catch { case e: Throwable =>
-      store match {
-        case os: ObjectStore => scala.util.Try(os.deleteObject(statsPath)): Unit
-        case _ => Files.deleteIfExists(statsPath): Unit
-      }
+      scala.util.Try(store.deleteObject(statsPath)): Unit
       throw e
     }
     // the replaced stats file is dead the moment the pointer moved
     // (registrations are table-relative; resolve before reclaiming)
-    oldPaths.foreach { p =>
-      val target = Paths.get(IcebergSink.abs(table, p))
-      store match {
-        case os: ObjectStore => scala.util.Try(os.deleteObject(target)): Unit
-        case _ => Files.deleteIfExists(target): Unit
-      }
-    }
+    oldPaths.foreach(p =>
+      scala.util.Try(store.deleteObject(Paths.get(IcebergSink.abs(table, p)))))
     blobMeta.map { case (c, _, _, ndv) => c -> ndv }.toMap
   }
 
@@ -491,20 +478,10 @@ object IcebergStats {
           .find(f => f.getName.startsWith("part-") &&
             f.getName.endsWith(".parquet")).get
         Files.readAllBytes(part.toPath)
-      } finally {
-        def rm(f: File): Unit = {
-          Option(f.listFiles()).toSeq.flatten.foreach(rm); f.delete(): Unit
-        }
-        rm(staging)
-      }
+      } finally CommitStore.deleteTree(staging)
     val statsPath = Paths.get(table, "metadata",
       s"partition-stats-$snapshotId-${java.util.UUID.randomUUID()}.parquet")
-    store match {
-      case os: ObjectStore => os.putObject(statsPath, bytes)
-      case _ =>
-        Files.createDirectories(statsPath.getParent)
-        Files.write(statsPath, bytes): Unit
-    }
+    store.putObject(statsPath, bytes)
     // metadata-only commit: REPLACE the partition-statistics list
     val newMeta = meta.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
     val oldPaths: Seq[String] =
@@ -522,19 +499,11 @@ object IcebergStats {
       .put("file-size-in-bytes", bytes.length.toLong)
     try IcebergSink.commitMetadataVersion(table, store, hint, newMeta)
     catch { case e: Throwable =>
-      store match {
-        case os: ObjectStore => scala.util.Try(os.deleteObject(statsPath)): Unit
-        case _ => Files.deleteIfExists(statsPath): Unit
-      }
+      scala.util.Try(store.deleteObject(statsPath)): Unit
       throw e
     }
-    oldPaths.foreach { p =>
-      val target = Paths.get(IcebergSink.abs(table, p))
-      store match {
-        case os: ObjectStore => scala.util.Try(os.deleteObject(target)): Unit
-        case _ => Files.deleteIfExists(target): Unit
-      }
-    }
+    oldPaths.foreach(p =>
+      scala.util.Try(store.deleteObject(Paths.get(IcebergSink.abs(table, p)))))
     rows.size
   }
 

@@ -1005,4 +1005,56 @@ class CommitStoreSpec extends AnyFunSuite {
   }
 
   private def col(n: String) = org.apache.spark.sql.functions.col(n)
+
+  test("a store overriding only putIfAbsent inherits the local data plane: same census, same files") {
+    // the shape of HookedLocal and of a counting wrapper: only the commit
+    // primitive is its own (no taskIO either, so the DV writes take the
+    // driver-streamed path where Local packs them from tasks)
+    final class PutOnly extends CommitStore {
+      override def putIfAbsent(target: java.nio.file.Path, bytes: Array[Byte]): Unit =
+        CommitStore.Local.putIfAbsent(target, bytes)
+    }
+    val uuidOrTxn =
+      "[0-9a-f]{8}(?:-[0-9a-f]{4}){3}-[0-9a-f]{12}|(?<=-)[0-9a-f]{8}(?=\\.)".r
+    def files(root: String): Seq[String] = {
+      import scala.jdk.CollectionConverters._
+      val r = Paths.get(root)
+      val walk = Files.walk(r)
+      try walk.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(p => uuidOrTxn.replaceAllIn(r.relativize(p).toString, "U"))
+        .toSeq.sorted
+      finally walk.close()
+    }
+    def run(store: CommitStore): (Seq[(Long, Long)], Seq[String], Seq[String]) = {
+      val s = spark
+      import s.implicits._
+      val base = (1L to 60L).map(i => (i, s"n$i", i * 0.5)).toDF("id", "name", "v")
+        .repartition(3)
+      val more = (61L to 80L).map(i => (i, s"n$i", i * 0.5)).toDF("id", "name", "v")
+        .coalesce(1)
+      val delta = tmp()
+      DeltaSink.write(base, delta, store = store)
+      DeltaSink.append(more, delta, store = store)
+      assert(DeltaSink.deleteWhereDV(spark, delta, "id % 7 = 0", store = store) == 11)
+      DeltaSink.checkpoint(spark, delta, store)
+      val ice = tmp()
+      IcebergSink.write(base, ice, IcebergSink.CreateExclusive, store = store)
+      IcebergSink.write(more, ice, IcebergSink.Append, store = store)
+      assert(IcebergSink.deleteWhereDV(spark, ice, "id % 7 = 0", store) == 11)
+      IcebergSink.expireSnapshots(ice, keepLast = 1, store = store)
+      def census(df: org.apache.spark.sql.DataFrame) = {
+        val r = df.agg(org.apache.spark.sql.functions.count("*"),
+          org.apache.spark.sql.functions.sum("id")).head()
+        (r.getLong(0), r.getLong(1))
+      }
+      (Seq(census(DeltaSink.read(spark, delta, store = store)),
+        census(IcebergSink.read(spark, ice, store = store))), files(delta), files(ice))
+    }
+    val (localCensus, localDelta, localIce) = run(CommitStore.Local)
+    val (census, delta, ice) = run(new PutOnly)
+    assert(localCensus == Seq((69L, 2778L), (69L, 2778L)))
+    assert(census == localCensus)
+    assert(delta == localDelta)
+    assert(ice == localIce)
+  }
 }

@@ -4795,4 +4795,47 @@ class SinkSpec extends AnyFunSuite {
     assert(IcebergSink.read(spark, table).count() == 44)
     assert(DeltaSink.read(spark, table).count() == 44)
   }
+
+  test("a v2 manifest that lists sidecars ignores its own inline adds, on both replay paths") {
+    val s = spark
+    import s.implicits._
+    val table = tmp()
+    DeltaSink.write((1L to 40L).map(i => (i, i.toDouble)).toDF("id", "v")
+      .repartition(4), table)
+    DeltaSink.checkpointV2(spark, table)
+    val log = new File(table, "_delta_log")
+    val jackson = new com.fasterxml.jackson.databind.ObjectMapper()
+    val ptr = jackson.readTree(Files.readString(Paths.get(table, "_delta_log", "_last_checkpoint")))
+    val v = ptr.get("version").asLong()
+    val sidecarAdds = spark.read.parquet(new File(log, "_sidecars").getPath).select("add")
+    val sidecarPaths = sidecarAdds.select("add.path").as[String].collect().toSet
+    assert(sidecarPaths.size == 4)
+    // an external writer's manifest carrying BOTH a sidecar list and an
+    // inline add the sidecars do not hold (a file that does not exist)
+    val ghost = sidecarAdds.limit(1)
+      .select(col("add").withField("path", lit("part-ghost.parquet")).as("add"))
+    val staging = Files.createTempDirectory("graft-manifest").toFile
+    spark.read.parquet(new File(log, ptr.get("path").asText()).getPath)
+      .unionByName(ghost, allowMissingColumns = true)
+      .coalesce(1).write.parquet(new File(staging, "m").getPath)
+    val name = f"$v%020d.checkpoint.${java.util.UUID.randomUUID()}.parquet"
+    Files.move(new File(staging, "m").listFiles()
+      .find(_.getName.endsWith(".parquet")).get.toPath, log.toPath.resolve(name))
+    Files.writeString(Paths.get(table, "_delta_log", "_last_checkpoint"),
+      s"""{"version":$v,"path":"$name"}""")
+    def liveNames(): Set[String] =
+      DeltaSink.read(spark, table).inputFiles.map(f => new File(new java.net.URI(f)).getName).toSet
+    // a small checkpoint replays on the driver
+    assert(liveNames() == sidecarPaths)
+    assert(DeltaSink.read(spark, table).count() == 40)
+    // a JSON tail past the driver budget sends the replay distributed
+    val out = Files.newOutputStream(Paths.get(table, "_delta_log", f"${v + 1}%020d.json"))
+    try {
+      out.write("""{"commitInfo":{"timestamp":0,"pad":"""".getBytes)
+      out.write(Array.fill[Byte](9 << 20)('x'))
+      out.write("\"}}\n".getBytes)
+    } finally out.close()
+    assert(liveNames() == sidecarPaths)
+    assert(DeltaSink.read(spark, table).count() == 40)
+  }
 }
