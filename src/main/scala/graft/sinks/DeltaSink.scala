@@ -230,15 +230,11 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     * decode in place; spec-framed sidecars (offset present) verify
     * version/size/CRC/magic; sidecar descriptors WITHOUT an offset are
     * this engine's pre-spec raw-Roaring64 files, kept readable so
-    * r13-era tables replay.
+    * r13-era tables replay. `read` is the caller's byte I/O, so a TASK
+    * can run it too (executors hold a [[TaskIO]], never the driver's
+    * store handle).
     */
-  private def dvBitmapBytes(table: String, dv: DvInfo, store: CommitStore): Array[Byte] =
-    dvBitmapBytesVia(table, dv, p => store.readObject(Paths.get(p)))
-
-  /** [[dvBitmapBytes]] with caller-supplied byte I/O — the form a TASK can
-    * run (executors hold a [[TaskIO]], never the driver's store handle).
-    */
-  private[sinks] def dvBitmapBytesVia(table: String, dv: DvInfo,
+  private[sinks] def dvBitmapBytes(table: String, dv: DvInfo,
       read: String => Array[Byte]): Array[Byte] = {
     if (dv.storageType == "i") {
       // base85 works in 4-byte blocks, so encoders zero-pad the tail;
@@ -279,50 +275,38 @@ object DeltaSink extends org.apache.spark.internal.Logging {
   private[sinks] def AddsPerCkptSidecar: Long =
     sys.props.get("graft.ckpt.addsPerSidecar").map(_.toLong).getOrElse(50000L)
 
-  /** One touched file's KB-scale result of a sharded DV pack — the ONLY
-    * thing the DV write returns to the driver (never bitmap bytes).
-    */
-  private[sinks] case class DvShardDesc(rel: String, uuidMsb: Long,
-      uuidLsb: Long, offset: Int, dataSize: Int, cardinality: Long,
-      freshCardinality: Long)
-
   /** Packs ONE shard of (file → fresh bitmap bytes) into ONE spec multi-DV
-    * sidecar file: merges each file's fresh bitmap with its existing
-    * descriptor's (vectors are cumulative in Delta — OR-merge), frames all
-    * payloads back to back ([[graft.functions.DeletionVector.frameDvFileMulti]])
-    * and names the file from a DETERMINISTIC per-shard uuid (txn uuid ⊕
-    * shard id), so a retried task republishes the same bytes at the same
-    * key. Pure function of its inputs — runs identically in a task (the
-    * scale path) or on the driver (the streamed fallback for driver-only
-    * stores). Returns (table-relative sidecar path, file bytes, shard
-    * uuid, per-file descriptors).
+    * sidecar file ([[DvPlane.Packer]]): merges each file's fresh bitmap
+    * with its existing descriptor's (vectors are cumulative in Delta —
+    * OR-merge) and frames all payloads back to back
+    * ([[graft.functions.DeletionVector.frameDvFileMulti]]). Pure function
+    * of its inputs, so a task and the driver pack the same bytes.
     */
-  private[sinks] def packDvShard(table: String, txnMsb: Long, txnLsb: Long,
-      shardId: Int, entries: Seq[(String, Array[Byte])],
-      oldByRel: Map[String, DvInfo],
-      read: String => Array[Byte])
-      : (String, Array[Byte], java.util.UUID, Seq[DvShardDesc]) = {
+  private[sinks] def packDvShard(table: String, shardId: Int,
+      entries: Seq[(String, Array[Byte])], oldByRel: Map[String, DvInfo],
+      read: String => Array[Byte]): (Array[Byte], Seq[DvPlane.DvDesc]) = {
     val D = graft.functions.DeletionVector
-    val sorted = entries.sortBy(_._1)
-    val merged = sorted.map { case (rel, fresh) =>
+    val merged = entries.sortBy(_._1).map { case (rel, fresh) =>
       val freshCard = D.deserialize(fresh).getLongCardinality
       val bytes = oldByRel.get(rel) match {
-        case Some(old) => D.merge(dvBitmapBytesVia(table, old, read), fresh)
+        case Some(old) => D.merge(dvBitmapBytes(table, old, read), fresh)
         case None => fresh
       }
       val bm = D.deserialize(bytes)
       (rel, D.toPortable(bm), bm.getLongCardinality, freshCard)
     }
     val (fileBytes, offsets) = D.frameDvFileMulti(merged.map(_._2))
-    val uuid = new java.util.UUID(txnMsb, txnLsb ^ shardId.toLong)
-    val dvRel = s"$DvPrefix/deletion_vector_$uuid.bin"
     val descs = merged.zip(offsets).map {
       case ((rel, _, card, freshCard), (offset, dataSize)) =>
-        DvShardDesc(rel, uuid.getMostSignificantBits,
-          uuid.getLeastSignificantBits, offset, dataSize, card, freshCard)
+        DvPlane.DvDesc(rel, shardId, fileBytes.length.toLong, offset.toLong,
+          dataSize.toLong, card, freshCard)
     }
-    (dvRel, fileBytes, uuid, descs)
+    (fileBytes, descs)
   }
+
+  /** Table-relative path of a DV write's shard sidecar. */
+  private def dvShardRel(txn: java.util.UUID, shard: Int): String =
+    s"$DvPrefix/deletion_vector_${DvPlane.shardUuid(txn, shard)}.bin"
 
   /** A data file's absolute location: add paths are table-relative,
     * except a SHALLOW CLONE's ([[cloneTable]]), which are absolute
@@ -991,46 +975,56 @@ object DeltaSink extends org.apache.spark.internal.Logging {
       else Nil
     val lines = removes ++ adds.map(a => addJson(a, dataChange = false)) ++
       domainLines
-    val inputPaths = tail.map(_.path).toSet
+    commitRewrite(spark, store, table, state.version, tail.map(_.path).toSet,
+      lines, adds.map(_.path),
+      superseded = s"concurrent compaction of $table; compaction aborted",
+      contended = s"concurrent writers on $table; compaction aborted")
+    (tail.size, adds.size)
+  }
+
+  /** Commits a layout rewrite ([[compact]], [[reorgPurge]]) read at
+    * `readVersion`, retrying up to 3 lost claims before it reclaims
+    * `written` and throws `contended`. The rewrite stays valid only while
+    * every file it read is STILL live — a concurrent append only adds
+    * files (compatible; ours remove nothing of theirs), but a concurrent
+    * rewrite already removed our inputs, and committing on top of it
+    * would leave BOTH rewrites live and duplicate every row (reclaim,
+    * throw `superseded`). That competing rewrite may have committed at an
+    * intermediate version while ours was staging, i.e. WITHOUT ever
+    * colliding with our claim — so the liveness check runs before EVERY
+    * commit attempt, not only in the collision catch. A successful
+    * CREATE_NEW at `latest + 1` then guarantees all earlier versions
+    * were visible at validation time (writers only claim latestVersion+1),
+    * closing the window.
+    */
+  private def commitRewrite(spark: SparkSession, store: CommitStore,
+      table: String, readVersion: Long, inputPaths: Set[String],
+      lines: Seq[String], written: Seq[String], superseded: String,
+      contended: String): Unit = {
     var attempt = 0
-    var validatedThrough = state.version
+    var validatedThrough = readVersion
     while (true) {
-      // The rewrite stays valid only while every file it read is STILL
-      // live — a concurrent append only adds files (compatible; ours
-      // remove nothing of theirs), but a concurrent compaction already
-      // removed our inputs, and committing on top of it would leave BOTH
-      // rewrites live and duplicate every row. That competing compaction
-      // may have committed at an intermediate version while our Spark
-      // rewrite was staging, i.e. WITHOUT ever colliding with our claim —
-      // so the liveness check must run before EVERY commit attempt, not
-      // only in the collision catch. A successful CREATE_NEW at `next`
-      // then guarantees all versions < next were visible at validation
-      // time (writers only claim latestVersion+1), closing the window.
       val latest = latestVersion(table)
       if (latest > validatedThrough) {
         val liveNow = replay(spark, table, None).live.map(_.path).toSet
         validatedThrough = latest
         if (!inputPaths.subsetOf(liveNow)) {
-          reclaim(store, table, adds.map(_.path))
-          throw new IllegalStateException(
-            s"concurrent compaction of $table; compaction aborted")
+          reclaim(store, table, written)
+          throw new IllegalStateException(superseded)
         }
       }
-      val next = latest + 1
       try {
-        commitAtomic(store, versionFile(table, next), lines)
-        return (tail.size, adds.size)
+        commitAtomic(store, versionFile(table, latest + 1), lines)
+        return
       } catch {
         case e: java.nio.file.FileAlreadyExistsException =>
           if (attempt >= 3) {
-            reclaim(store, table, adds.map(_.path))
-            throw new IllegalStateException(
-              s"concurrent writers on $table; compaction aborted", e)
+            reclaim(store, table, written)
+            throw new IllegalStateException(contended, e)
           }
           attempt += 1 // re-validate against the new version and retry
       }
     }
-    (tail.size, adds.size) // unreachable
   }
 
   /** REORG … APPLY (PURGE) — materialize deletion vectors: rewrites ONLY
@@ -1082,38 +1076,11 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     val removes = dvAdds.map(a =>
       s"""{"remove":{"path":${esc(a.path)},"deletionTimestamp":$now,"dataChange":false}}""")
     val lines = removes ++ adds.map(a => addJson(a, dataChange = false))
-    val inputPaths = dvAdds.map(_.path).toSet
-    var attempt = 0
-    var validatedThrough = state.version
-    while (true) {
-      // identical liveness window to compact(): every input must still be
-      // live at each commit attempt, or a competing rewrite already
-      // superseded our inputs and committing would double their rows
-      val latest = latestVersion(table)
-      if (latest > validatedThrough) {
-        val liveNow = replay(spark, table, None).live.map(_.path).toSet
-        validatedThrough = latest
-        if (!inputPaths.subsetOf(liveNow)) {
-          reclaim(store, table, adds.map(_.path))
-          throw new IllegalStateException(
-            s"concurrent rewrite of $table; reorg aborted")
-        }
-      }
-      val next = latest + 1
-      try {
-        commitAtomic(store, versionFile(table, next), lines)
-        return (dvAdds.size, purgedRows)
-      } catch {
-        case e: java.nio.file.FileAlreadyExistsException =>
-          if (attempt >= 3) {
-            reclaim(store, table, adds.map(_.path))
-            throw new IllegalStateException(
-              s"concurrent writers on $table; reorg aborted", e)
-          }
-          attempt += 1
-      }
-    }
-    (dvAdds.size, purgedRows) // unreachable
+    commitRewrite(spark, store, table, state.version, dvAdds.map(_.path).toSet,
+      lines, adds.map(_.path),
+      superseded = s"concurrent rewrite of $table; reorg aborted",
+      contended = s"concurrent writers on $table; reorg aborted")
+    (dvAdds.size, purgedRows)
   }
 
   /** MERGE INTO: keyed upsert / delete against the current snapshot —
@@ -1464,141 +1431,41 @@ object DeltaSink extends org.apache.spark.internal.Logging {
       imagesOf: (DataFrame, Option[DataFrame]) => DataFrame,
       store: CommitStore,
       changeDataFeed: Boolean): Long = {
-    import org.apache.spark.sql.functions.{broadcast, col, expr, lit,
-      regexp_replace}
-    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, expr, lit}
     val dir = new File(table)
     val (meta, liveDf) = resolve(spark, table, None)
     requireWritable(meta.minWriter, table)
     val state = State(meta.version, meta.id, meta.createdTime, meta.schema,
       meta.partitionColumns, collectAdds(liveDf), meta.txns)
-    // (file → new deleted positions) against the MERGED view; the rel
-    // path arrives via a broadcast dual-key lookup (raw + URI-encoded),
-    // never by parsing the reader's URI
-    val lookup = state.live.flatMap { a =>
-      val abs = dataAbs(table, a.path)
-      val enc = new File(abs).toURI.toString
-        .replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/")
-      Seq(abs, enc).distinct.map(k => (k, a.path))
-    }.toDF("_gf_key", "_gf_rel")
-    // LEFT join + plan-riding raise_error (the same discipline as the
-    // Iceberg merge-on-read lookup): a normalization mismatch must fail
-    // loudly — an inner join would silently leave matched rows ALIVE
-    import org.apache.spark.sql.functions.{coalesce => cl, concat, raise_error}
-    val matched = readStateMerged(spark, table, state, keepLineage = true, store)
-      .filter(expr(predicate))
-      .withColumn("_gf_key",
-        regexp_replace(col("_gf_uri"), "^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/"))
-      .join(broadcast(lookup), Seq("_gf_key"), "left")
-      .withColumn("_gf_rel", cl(col("_gf_rel"),
-        raise_error(concat(lit(s"$opName: matched row from unmapped file "),
-          col("_gf_uri")))))
+    // (file → new deleted positions) against the MERGED view; each row's
+    // rel path arrives by its file's keys, never by parsing the reader's URI
+    val matched = DvPlane.attach(
+        readStateMerged(spark, table, state, keepLineage = true, store)
+          .filter(expr(predicate)),
+        state.live.map(a => (dataAbs(table, a.path), Row(a.path))),
+        StructType(Seq(StructField("_gf_rel", StringType))),
+        s"$opName: matched row from unmapped file ")
       // the matched scan feeds BOTH the bitmap build and the CDC images —
       // persist so the table is scanned once, not twice
       .persist()
     try {
-    // distributed bitmap build, KEPT DISTRIBUTED: one tight group per
-    // touched file, sharded by path hash; each shard of ≤FilesPerDvShard
-    // files OR-merges with any existing vector and packs + PUBLISHES its
-    // own spec multi-DV sidecar file (version byte, then each file's
-    // size-framed + CRC'd portable RoaringBitmapArray back to back; each
-    // descriptor = storageType "u" with its shard's base85 uuid + its own
-    // offset). Only KB-scale descriptors ever reach the driver — a wide
-    // predicate across 10^6 files costs the driver 10^6 descriptors (the
-    // same metadata class as the log replay itself), never GBs of bitmap
-    // bytes (VERDICT r15). A point delete (≤ one shard) still lands a
-    // single sidecar object.
-    // r18 (guide §2.3 "aggregate before you shuffle" — found by the
-    // SkewAudit max-share flag on q_delta_clone): the old shape shuffled
-    // every RAW (file, position) row into one reducer per touched file —
-    // at 8 bytes/row that is the full matched set over the wire, and a
-    // delete touching few files funnels through few tasks. Positions now
-    // combine into per-(partition, file) PARTIAL bitmaps map-side, so the
-    // shuffle carries KB-scale bitmap blobs and the per-file reducer
-    // merges ≤ #partitions partials. Bitmap OR is order-independent and
-    // packDvShard re-canonicalizes from content, so the committed sidecar
-    // bytes are unchanged.
-    val fresh = matched
-      .select(col("_gf_rel"), col("_gf_pos"))
-      .as[(String, Long)]
-      .mapPartitions { it =>
-        val D = graft.functions.DeletionVector
-        val m = scala.collection.mutable.HashMap
-          .empty[String, org.roaringbitmap.longlong.Roaring64Bitmap]
-        it.foreach { case (rel, pos) =>
-          m.getOrElseUpdate(rel,
-            new org.roaringbitmap.longlong.Roaring64Bitmap).addLong(pos)
-        }
-        m.iterator.map { case (rel, bm) => (rel, D.serialize(bm)) }
-      }
-      .groupByKey(_._1)
-      .mapGroups { (rel, it) =>
-        (rel, it.map(_._2).reduce(graft.functions.DeletionVector.merge))
-      }.persist()
-    val descs: Seq[DvShardDesc] = try {
-      val touched = fresh.count()
-      if (touched == 0L) return 0L
-      val oldByRel: Map[String, DvInfo] =
-        state.live.flatMap(a => a.dv.map(a.path -> _)).toMap
-      val txnUuid = java.util.UUID.randomUUID()
-      val (tMsb, tLsb) =
-        (txnUuid.getMostSignificantBits, txnUuid.getLeastSignificantBits)
-      val shards = math.max(1,
-        ((touched + FilesPerDvShard - 1) / FilesPerDvShard).toInt)
-      val tableAbs = dir.getAbsolutePath
-      store.taskIO match {
-        case Some(io) =>
-          // the scale path: pack + publish FROM TASKS
-          val bOld = spark.sparkContext.broadcast(oldByRel)
-          try {
-            fresh.rdd
-              .partitionBy(new org.apache.spark.HashPartitioner(shards))
-              .mapPartitionsWithIndex { (pid, it) =>
-                val entries = it.toVector
-                if (entries.isEmpty) Iterator.empty
-                else {
-                  val (dvRel, fileBytes, _, ds) = packDvShard(tableAbs,
-                    tMsb, tLsb, pid, entries, bOld.value, io.read)
-                  io.write(new File(tableAbs, dvRel).getAbsolutePath, fileBytes)
-                  ds.iterator
-                }
-              }.collect().toSeq
-          } catch { case e: Throwable =>
-            // tasks publish before the job completes, so a mid-job failure
-            // sweeps every DETERMINISTIC candidate shard name (absent
-            // keys are a no-op) — zero bytes behind an aborted write
-            (0 until shards).foreach { pid =>
-              val uuid = new java.util.UUID(tMsb, tLsb ^ pid.toLong)
-              reclaim(store, table, Seq(s"$DvPrefix/deletion_vector_$uuid.bin"))
-            }
-            throw e
-          } finally bOld.destroy()
-        case None =>
-          // driver-only store (in-memory/hooked test doubles have no
-          // task-side I/O): stream shard-sized chunks through the driver —
-          // at most FilesPerDvShard bitmaps in the pack buffer at once,
-          // never the full touched set
-          import scala.jdk.CollectionConverters._
-          val publishedRels = scala.collection.mutable.ArrayBuffer[String]()
-          try {
-            fresh.toLocalIterator().asScala.grouped(FilesPerDvShard)
-              .zipWithIndex.flatMap { case (chunk, i) =>
-                val (dvRel, fileBytes, _, ds) = packDvShard(tableAbs, tMsb,
-                  tLsb, i, chunk, oldByRel, p => store.readObject(Paths.get(p)))
-                store.putObject(new File(dir, dvRel).toPath, fileBytes)
-                publishedRels += dvRel
-                ds
-              }.toVector
-          } catch { case e: Throwable =>
-            reclaim(store, table, publishedRels.toSeq)
-            throw e
-          }
-      }
-    } finally fresh.unpersist(): Unit
+    // each shard of touched files OR-merges with any existing vector and
+    // packs + PUBLISHES its own spec multi-DV sidecar file (version byte,
+    // then each file's size-framed + CRC'd portable RoaringBitmapArray
+    // back to back; each descriptor = storageType "u" with its shard's
+    // base85 uuid + its own offset). A point delete (≤ one shard) still
+    // lands a single sidecar object.
+    val txnUuid = java.util.UUID.randomUUID()
+    val tableAbs = dir.getAbsolutePath
+    val descs = DvPlane.write(store,
+      matched.select(col("_gf_rel"), col(DvPlane.PosCol)),
+      state.live.flatMap(a => a.dv.map(a.path -> _)).toMap,
+      shard => new File(tableAbs, dvShardRel(txnUuid, shard)).getAbsolutePath,
+      packDvShard(tableAbs, _, _, _, _))
+    if (descs.isEmpty) return 0L
     val deletedNow = descs.map(_.freshCardinality).sum
-    val publishedDv: Seq[String] = descs
-      .map(d => s"$DvPrefix/deletion_vector_" +
-        s"${new java.util.UUID(d.uuidMsb, d.uuidLsb)}.bin").distinct
+    val publishedDv: Seq[String] =
+      descs.map(_.shard).distinct.map(dvShardRel(txnUuid, _))
     val txn = java.util.UUID.randomUUID().toString.take(8)
     val matchedRows = matched.select(state.schema.fieldNames.map(col).toIndexedSeq: _*)
     val replacement = replacementOf(matchedRows, state.schema)
@@ -1628,13 +1495,13 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     // descriptors came back from the shards, no bitmap is reopened.
     val now = System.currentTimeMillis()
     val byRel: Map[String, AddEntry] = state.live.map(a => a.path -> a).toMap
-    val newAdds = descs.sortBy(_.rel).map { d =>
-      val add = byRel.getOrElse(d.rel,
-        throw new IllegalStateException(s"matched file not live: ${d.rel}"))
+    val newAdds = descs.sortBy(_.file).map { d =>
+      val add = byRel.getOrElse(d.file,
+        throw new IllegalStateException(s"matched file not live: ${d.file}"))
       val encoded = DvPrefix + graft.functions.DeletionVector.encodeUuid(
-        new java.util.UUID(d.uuidMsb, d.uuidLsb))
+        DvPlane.shardUuid(txnUuid, d.shard))
       add.copy(modificationTime = now,
-        dv = Some(DvInfo("u", encoded, Some(d.offset), d.dataSize.toLong,
+        dv = Some(DvInfo("u", encoded, Some(d.offset.toInt), d.size,
           d.cardinality)))
     }
     // v3/v7 protocols must LIST every active table feature (spec rule):
@@ -2430,7 +2297,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     */
   def readWithRowIds(spark: SparkSession, table: String,
       store: CommitStore = CommitStore.Local): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, coalesce, col}
+    import org.apache.spark.sql.functions.{coalesce, col}
     val (meta, liveDf) = resolve(spark, table, None)
     val state0 = State(meta.version, meta.id, meta.createdTime, meta.schema,
       meta.partitionColumns, collectAdds(liveDf), meta.txns, meta.minWriter,
@@ -2442,24 +2309,13 @@ object DeltaSink extends org.apache.spark.internal.Logging {
       StructField("_row_id", LongType, nullable = true),
       StructField("_row_commit_version", LongType, nullable = true))))
     val base = readStateMerged(spark, table, withRid, keepLineage = true, store)
-    val lookup = state0.live.flatMap { a =>
-      val abs = dataAbs(table, a.path)
-      val enc = new File(abs).toURI.toString
-        .replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/")
-      Seq(abs, enc).distinct.map(k =>
-        (k, a.baseRowId.map(Long.box).orNull,
-          a.defaultRowCommitVersion.map(Long.box).orNull))
-    }
-    val lookupDf = spark.createDataFrame(
-      lookup.map { case (k, b, v) => Row(k, b, v) }.asJava,
-      StructType(Seq(StructField("_gf_bkey", StringType),
-        StructField("_gf_brid", LongType, nullable = true),
-        StructField("_gf_bdrcv", LongType, nullable = true))))
-    import org.apache.spark.sql.functions.regexp_replace
-    base
-      .withColumn("_gf_bkey",
-        regexp_replace(col("_gf_uri"), "^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/"))
-      .join(broadcast(lookupDf), Seq("_gf_bkey"), "left")
+    DvPlane.attach(base,
+      state0.live.map(a => (dataAbs(table, a.path),
+        Row(a.baseRowId.map(Long.box).orNull,
+          a.defaultRowCommitVersion.map(Long.box).orNull))),
+      StructType(Seq(StructField("_gf_brid", LongType, nullable = true),
+        StructField("_gf_bdrcv", LongType, nullable = true))),
+      "readWithRowIds: row from unmapped file ")
       .withColumn("_row_id",
         coalesce(col("_row_id"), col("_gf_brid") + col("_gf_pos")))
       // ROW COMMIT VERSION (spec §Row Tracking's second column): the
@@ -3069,14 +2925,9 @@ object DeltaSink extends org.apache.spark.internal.Logging {
         // filtering FOR membership in the diff
         def bitmapOf(dv: Option[DvInfo]) = dv match {
           case Some(d) => graft.functions.DeletionVector.deserialize(
-            dvBitmapBytes(table, d, CommitStore.Local))
+            dvBitmapBytes(table, d,
+              p => CommitStore.Local.readObject(Paths.get(p))))
           case None => new org.roaringbitmap.longlong.Roaring64Bitmap()
-        }
-        def dualKeys(path: String): Seq[String] = {
-          val abs = dataAbs(table, path)
-          val enc = new File(abs).toURI.toString
-            .replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/")
-          Seq(abs, enc).distinct
         }
         // each re-added file's (new, old) bitmap pair loads ONCE and feeds
         // both diff directions; the two change-type frames then share one
@@ -3095,7 +2946,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
             if (diff.isEmpty) Nil
             else {
               val bytes = graft.functions.DeletionVector.serialize(diff)
-              dualKeys(a.path).map(_ -> bytes)
+              DvPlane.keysOf(dataAbs(table, a.path)).map(_ -> bytes)
             }
           }.toMap
         val delMap = diffMapOf((nw, old) => andNot(nw, old))
@@ -3105,11 +2956,9 @@ object DeltaSink extends org.apache.spark.internal.Logging {
         def diffFrames(ct: String, diffMap: Map[String, Array[Byte]]): Seq[DataFrame] =
           if (diffMap.isEmpty) Nil
           else {
-            import org.apache.spark.sql.functions.regexp_replace
             val packed = graft.functions.DeletionVector.packMap(diffMap)
             Seq(diffBase.filter(graft.functions.DeletionVector.dvDeleted(packed,
-                regexp_replace(col("_gf_uri"), "^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/"),
-                col("_gf_pos")))
+                DvPlane.stripScheme(col(DvPlane.UriCol)), col(DvPlane.PosCol)))
               .select(state.schema.fieldNames.toIndexedSeq.map(col): _*)
               .withColumn("_change_type", lit(ct)))
           }
@@ -3154,119 +3003,30 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     */
   private[graft] var DvBroadcastMaxBytes: Long = 256L * 1024 * 1024
 
-  /** Content-keyed reuse cache for over-threshold DV broadcasts: without
-    * it every read of a large-DV snapshot would mint a fresh multi-MB
-    * broadcast at PLAN-BUILD time (several per DML verb) and rely on the
-    * driver GC + ContextCleaner to reap them eventually. Eviction
-    * unpersists (executors drop the blocks; a straggler plan re-fetches
-    * from the driver, so an evicted-but-still-referenced broadcast stays
-    * usable — destroy() would fail it).
-    */
-  private val dvBroadcasts =
-    new java.util.LinkedHashMap[String,
-        org.apache.spark.broadcast.Broadcast[Array[Byte]]](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String,
-            org.apache.spark.broadcast.Broadcast[Array[Byte]]]): Boolean = {
-        val evict = size() > 8
-        if (evict) scala.util.Try(e.getValue.unpersist())
-        evict
-      }
-    }
-
-  private def dvBroadcast(spark: SparkSession, packed: Array[Byte])
-      : org.apache.spark.broadcast.Broadcast[Array[Byte]] =
-    dvBroadcasts.synchronized {
-      val key = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(packed).map("%02x".format(_)).mkString
-      Option(dvBroadcasts.get(key)).getOrElse {
-        val bc = spark.sparkContext.broadcast(packed)
-        dvBroadcasts.put(key, bc)
-        bc
-      }
-    }
-
   /** The MERGED view of a snapshot: the live files' rows minus what their
     * deletion vectors erase. Zero overhead when no live add carries a DV
     * (the plain scan is returned untouched — no lineage columns read, no
     * filter planted). With DVs, every row's (file, row_index) — free from
-    * the parquet reader's `_metadata` struct — probes ONE native
-    * expression holding the bitmaps of exactly THIS state's files (a
-    * stats-pruned readRange packs only the survivors' DVs — KBs–MBs
-    * riding the plan as a literal; roaring compresses runs; past
-    * [[DvLiteralMaxBytes]] the map ships as a broadcast instead): never a
-    * join, never a shuffle, cost O(1) per row. `keepLineage` keeps
-    * `_gf_uri`/`_gf_pos` for [[deleteWhereDV]]'s provenance.
+    * the parquet reader's `_metadata` struct — meets the vectors of
+    * exactly THIS state's files (a stats-pruned readRange applies only
+    * the survivors' DVs) through [[DvPlane.applyVectors]]. `keepLineage`
+    * keeps `_gf_uri`/`_gf_pos` for [[deleteWhereDV]]'s provenance.
     */
   private def readStateMerged(spark: SparkSession, table: String,
       state: State, keepLineage: Boolean,
       store: CommitStore = CommitStore.Local): DataFrame = {
-    import org.apache.spark.sql.functions.{col, regexp_replace}
+    import org.apache.spark.sql.functions.col
     val dvAdds = state.live.filter(_.dv.isDefined)
     if (dvAdds.isEmpty && !keepLineage)
       return readStateFiles(spark, table, state, withLineage = false)
     val base = readStateFiles(spark, table, state, withLineage = true)
     val merged =
       if (dvAdds.isEmpty) base
-      else {
-        val key = regexp_replace(col("_gf_uri"),
-          "^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/")
-        // tier decision from DESCRIPTOR metadata (sizeInBytes) — the
-        // driver must not read a byte before knowing whether it may
-        val estimate = dvAdds.map(_.dv.get.sizeInBytes).sum
-        val taskIO = store.taskIO
-        if (estimate > DvBroadcastMaxBytes && taskIO.isDefined) {
-          // THIRD TIER (r16, the read-side twin of the sharded DV write):
-          // past broadcast scale the driver never materializes bitmap
-          // bytes — descriptors parallelize to tasks, each task reads its
-          // files' vectors via TaskIO and EXPLODES them to (key, pos)
-          // rows, and the deletes apply as a shuffled ANTI-JOIN. Work is
-          // O(deleted rows) — the honest trade once the vectors of
-          // ~10^5-10^6 files outgrow a plan literal or broadcast.
-          import spark.implicits._
-          val io = taskIO.get
-          val descs: Seq[(Seq[String], DvInfo)] = dvAdds.map { a =>
-            val abs = dataAbs(table, a.path)
-            val enc = new File(abs).toURI.toString
-              .replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/")
-            (Seq(abs, enc).distinct, a.dv.get)
-          }
-          val shards = math.max(1, math.min(descs.size,
-            spark.sessionState.conf.numShufflePartitions))
-          val tableRef = table
-          val delRows = spark.sparkContext
-            .parallelize(descs, shards)
-            .flatMap { case (keys, dv) =>
-              val bm = graft.functions.DeletionVector.deserialize(
-                dvBitmapBytesVia(tableRef, dv, io.read))
-              val it = bm.getLongIterator
-              val out = scala.collection.mutable.ArrayBuffer[(String, Long)]()
-              while (it.hasNext) { val p = it.next(); keys.foreach(k => out += ((k, p))) }
-              out
-            }.toDF("_gfd_key", "_gfd_pos")
-          base.join(delRows,
-            key === col("_gfd_key") && col("_gf_pos") === col("_gfd_pos"),
-            "left_anti")
-        } else {
-          // dual-key map (raw absolute path + URI-encoded rendering), same
-          // discipline as the Iceberg side: `_metadata.file_path` may
-          // percent-encode characters the add path stores raw
-          val dvMap = dvAdds.flatMap { a =>
-            val abs = dataAbs(table, a.path)
-            val bytes = dvBitmapBytes(table, a.dv.get, store)
-            val enc = new File(abs).toURI.toString
-              .replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/")
-            Seq(abs, enc).distinct.map(_ -> bytes)
-          }.toMap
-          val packed = graft.functions.DeletionVector.packMap(dvMap)
-          val probe =
-            if (packed.length <= DvLiteralMaxBytes)
-              graft.functions.DeletionVector.dvDeleted(packed, key, col("_gf_pos"))
-            else graft.functions.DeletionVector.dvDeletedBroadcast(
-              dvBroadcast(spark, packed), key, col("_gf_pos"))
-          base.filter(!probe)
-        }
-      }
+      else DvPlane.applyVectors(store, base,
+        DvPlane.stripScheme(col(DvPlane.UriCol)),
+        dvAdds.map(a => (dataAbs(table, a.path), a.dv.get.sizeInBytes, a.dv.get)),
+        (dv: DvInfo, read: String => Array[Byte]) =>
+          dvBitmapBytes(table, dv, read))
     if (keepLineage) merged
     else merged.select(state.schema.fieldNames.toIndexedSeq.map(col): _*)
   }

@@ -1929,13 +1929,6 @@ object IcebergSink {
     parts.reduce(_.unionAll(_))
   }
 
-  /** Strips any URI scheme so the parquet reader's `file:///x` provenance
-    * compares equal to the manifest's `/x` (both sides of every
-    * delete-application join normalize through this).
-    */
-  private def normPath(p: String): String =
-    p.replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/")
-
   /** Merge-on-read: rows of the snapshot's data files minus what its
     * delete files erase, scoped by sequence number per the V2 read
     * contract — POSITIONAL deletes (content 1, (path, pos) pairs) apply
@@ -1992,90 +1985,29 @@ object IcebergSink {
       curFields: Seq[IField] = Nil,
       fileFields: Map[String, Seq[IField]] = Map.empty,
       store: CommitStore = CommitStore.Local): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, coalesce, col, concat,
-      lit, raise_error, regexp_replace}
+    import org.apache.spark.sql.functions.{col, lit}
     if (deletes.isEmpty && !keepLineage)
       return readEntries(spark, schema, dataEntries.map(e => (e._1, e._2)),
         curFields = curFields, fileFields = fileFields)
     val data = readEntries(spark, schema, dataEntries.map(e => (e._1, e._2)),
       withLineage = true, curFields = curFields, fileFields = fileFields)
-    import spark.implicits._
-    // The reader's `_metadata.file_path` is a Hadoop-rendered URI, which
-    // percent-encodes characters such as a space or '%' in the table
-    // path, while manifest paths store the raw File path — so the lookup
-    // carries BOTH renderings of each path (deduped when identical), and
-    // the join is a LEFT join guarded by a plan-riding raise_error: a
-    // normalization mismatch must fail loudly, never silently DROP data
-    // rows from a merged read.
-    val lookup = dataEntries.flatMap { e =>
-      val raw = normPath(e._1)
-      val enc = normPath(new java.io.File(e._1).toURI.toString)
-      Seq(raw, enc).distinct.map(k => (k, e._1, e._3))
-    }.toDF("_gf_key", "_gf_mpath", "_gf_seq")
-    val keyed = data
-      .withColumn("_gf_key",
-        regexp_replace(col("_gf_uri"), "^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/"))
-      .join(broadcast(lookup), Seq("_gf_key"), "left")
-      .withColumn("_gf_seq", coalesce(col("_gf_seq"),
-        raise_error(concat(
-          lit("merge-on-read: data row from unmapped file "), col("_gf_uri")))))
+    // each row's manifest path and data sequence, by its file's keys
+    val keyed = DvPlane.attach(data,
+        dataEntries.map(e => (e._1, Row(Long.box(e._3), e._1))),
+        StructType(Seq(StructField("_gf_seq", LongType),
+          StructField("_gf_mpath", StringType))),
+        "merge-on-read: data row from unmapped file ")
       // canonical key for delete application: the manifest's RAW path
       // (what deleteWhere writes into positional delete files), so the
       // (file, pos) anti-join never compares an encoded URI to a raw path
-      .withColumn("_gf_dkey",
-        regexp_replace(col("_gf_mpath"), "^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/"))
-    // V3 deletion vectors: the HIGHEST-sequence DV per referenced file
-    // is the live one (spec supersede rule — each new vector replaces the
-    // previous for its file); rows probe the same O(1) native expression
-    // the Delta read path uses — no join, no shuffle, bitmap bytes ride
-    // the plan (metadata-scale: one roaring bitmap per DV'd file)
-    val dvRefs = deletes.filter(d => d.content == 1 && d.dvRef.isDefined)
-      .groupBy(_.dvRef.get._1).map { case (_, ds) => ds.maxBy(_.seq) }.toSeq
+      .withColumn("_gf_dkey", DvPlane.stripScheme(col("_gf_mpath")))
+    val dvs = liveDvs(deletes)
     val afterDv =
-      if (dvRefs.isEmpty) keyed
-      else if (dvRefs.map(_.dvRef.get._3).sum > DeltaSink.DvBroadcastMaxBytes &&
-          store.taskIO.isDefined) {
-        // past broadcast scale the driver never materializes bitmap bytes
-        // (the Delta read path's third tier, r16): tasks read each
-        // vector's Puffin slice via TaskIO, explode to (key, pos), and
-        // the deletes apply as a shuffled anti-join — O(deleted rows)
-        import spark.implicits._
-        val io = store.taskIO.get
-        val descs: Seq[(Seq[String], String, Long, Long)] = dvRefs.map { d =>
-          val (ref, off, size) = d.dvRef.get
-          (Seq(normPath(ref),
-            normPath(new java.io.File(ref).toURI.toString)).distinct,
-            d.path, off, size)
-        }
-        val shards = math.max(1, math.min(descs.size,
-          spark.sessionState.conf.numShufflePartitions))
-        val delRows = spark.sparkContext.parallelize(descs, shards)
-          .flatMap { case (keys, path, off, size) =>
-            val bm = graft.functions.DeletionVector.readFramedAt(
-              io.read(path), off.toInt, size - 8)
-            val it = bm.getLongIterator
-            val out = scala.collection.mutable.ArrayBuffer[(String, Long)]()
-            while (it.hasNext) { val p = it.next(); keys.foreach(k => out += ((k, p))) }
-            out
-          }.toDF("_gfdv_key", "_gfdv_pos")
-        keyed.join(delRows,
-          col("_gf_dkey") === col("_gfdv_key") &&
-            col("_gf_pos") === col("_gfdv_pos"),
-          "left_anti")
-      } else {
-        val dvMap: Map[String, Array[Byte]] = dvRefs.flatMap { d =>
-          val (ref, off, size) = d.dvRef.get
-          val bm = graft.functions.DeletionVector.readFramedAt(
-            store.readObject(Paths.get(d.path)), off.toInt, size - 8)
-          val probeBytes = graft.functions.DeletionVector.serialize(bm)
-          val raw = normPath(ref)
-          val enc = normPath(new java.io.File(ref).toURI.toString)
-          Seq(raw, enc).distinct.map(_ -> probeBytes)
-        }.toMap
-        val packed = graft.functions.DeletionVector.packMap(dvMap)
-        keyed.filter(!graft.functions.DeletionVector.dvDeleted(
-          packed, col("_gf_dkey"), col("_gf_pos")))
-      }
+      if (dvs.isEmpty) keyed
+      else DvPlane.applyVectors(store, keyed, col("_gf_dkey"),
+        dvs.toSeq.map { case (ref, blob) => (ref, blob._3, blob) },
+        (blob: (String, Long, Long), read: String => Array[Byte]) =>
+          graft.functions.DeletionVector.serialize(dvBitmap(blob, read)))
     val positional = deletes.filter(d => d.content == 1 && d.dvRef.isEmpty)
     val afterPos =
       if (positional.isEmpty) afterDv
@@ -2085,8 +2017,7 @@ object IcebergSink {
             .schema("file_path STRING, pos BIGINT")
             .parquet(d.path)
             .select(
-              regexp_replace(col("file_path"),
-                "^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/").as("_gfd_key"),
+              DvPlane.stripScheme(col("file_path")).as("_gfd_key"),
               col("pos").as("_gfd_pos"),
               lit(d.seq).as("_gfd_seq"))
         }.reduce(_.unionAll(_))
@@ -3206,108 +3137,27 @@ object IcebergSink {
       fileFields = snap.fileFields, store = store).filter(expr(predicate))
     val matched = if (setOpt.isDefined) matched0.persist() else matched0
     try {
-    import spark.implicits._
-    // distributed bitmap build, KEPT DISTRIBUTED: one tight group per
-    // touched file, sharded by path hash; each shard of ≤FilesPerDvShard
-    // files union-merges with the file's live vector (v3 supersede rule)
-    // and packs + PUBLISHES its own Puffin file from the task (the spec
-    // permits many DV files per commit). Only KB-scale descriptors reach
-    // the driver — never O(touched files) bitmap bytes (VERDICT r15). A
-    // point delete (≤ one shard) still lands a single Puffin object.
-    // r18 (guide §2.3 "aggregate before you shuffle" — the SkewAudit
-    // max-share flag caught the old shape on q_iceberg_dv): raw
-    // (file, position) rows shuffled into one reducer per touched file.
-    // Positions now combine into per-(partition, file) PARTIAL bitmaps
-    // map-side, so the exchange carries KB-scale blobs and the per-file
-    // reducer OR-merges ≤ #partitions partials. Bitmap OR is order-
-    // independent and the Puffin pack re-canonicalizes from content, so
-    // the committed DV bytes are unchanged.
-    val fresh = matched
-      .select(col("_gf_mpath"), col("_gf_pos"))
-      .as[(String, Long)]
-      .mapPartitions { it =>
-        val D = graft.functions.DeletionVector
-        val m = scala.collection.mutable.HashMap
-          .empty[String, org.roaringbitmap.longlong.Roaring64Bitmap]
-        it.foreach { case (p, pos) =>
-          m.getOrElseUpdate(p,
-            new org.roaringbitmap.longlong.Roaring64Bitmap).addLong(pos)
-        }
-        m.iterator.map { case (p, bm) => (p, D.serialize(bm)) }
-      }
-      .groupByKey(_._1)
-      .mapGroups { (p, it) =>
-        (p, it.map(_._2).reduce(graft.functions.DeletionVector.merge))
-      }.persist()
-    val descs: Seq[PuffinShardDesc] = try {
-      val touched = fresh.count()
-      if (touched == 0L) return 0L
-      val liveDvRefs: Map[String, (String, Long, Long)] = snap.deletes
-        .filter(d => d.content == 1 && d.dvRef.isDefined)
-        .groupBy(_.dvRef.get._1).map { case (k, ds) =>
-          val d = ds.maxBy(_.seq)
-          val (_, off, size) = d.dvRef.get
-          k -> (d.path, off, size)
-        }
-      val txnUuid = java.util.UUID.randomUUID()
-      val (tMsb, tLsb) =
-        (txnUuid.getMostSignificantBits, txnUuid.getLeastSignificantBits)
-      val shards = math.max(1,
-        ((touched + DeltaSink.FilesPerDvShard - 1) /
-          DeltaSink.FilesPerDvShard).toInt)
-      val metaAbs = metaDir(table).toFile.getAbsolutePath
-      store.taskIO match {
-        case Some(io) =>
-          val bOld = spark.sparkContext.broadcast(liveDvRefs)
-          try {
-            fresh.rdd
-              .partitionBy(new org.apache.spark.HashPartitioner(shards))
-              .mapPartitionsWithIndex { (pid, it) =>
-                val entries = it.toVector
-                if (entries.isEmpty) Iterator.empty
-                else {
-                  val (name, fileBytes, ds) = packPuffinShard(metaAbs, tMsb,
-                    tLsb, pid, entries, bOld.value, io.read)
-                  io.write(new File(metaAbs, name).getAbsolutePath, fileBytes)
-                  ds.iterator
-                }
-              }.collect().toSeq
-          } catch { case e: Throwable =>
-            // mid-job failure: sweep every DETERMINISTIC candidate shard
-            // name (absent keys no-op) — zero bytes behind an abort
-            reclaim(store, (0 until shards).map(pid =>
-              new File(metaAbs, s"dv-${new java.util.UUID(tMsb, tLsb ^ pid.toLong)}.puffin")
-                .getPath))
-            throw e
-          } finally bOld.destroy()
-        case None =>
-          // driver-only store: stream shard-sized chunks — at most
-          // FilesPerDvShard bitmaps in the pack buffer at once
-          import scala.jdk.CollectionConverters._
-          val published = scala.collection.mutable.ArrayBuffer[String]()
-          try {
-            fresh.toLocalIterator().asScala.grouped(DeltaSink.FilesPerDvShard)
-              .zipWithIndex.flatMap { case (chunk, i) =>
-                val (name, fileBytes, ds) = packPuffinShard(metaAbs, tMsb,
-                  tLsb, i, chunk, liveDvRefs, p => store.readObject(Paths.get(p)))
-                val target = metaDir(table).resolve(name)
-                store.putObject(target, fileBytes)
-                published += target.toString
-                ds
-              }.toVector
-          } catch { case e: Throwable =>
-            reclaim(store, published.toSeq)
-            throw e
-          }
-      }
-    } finally fresh.unpersist(): Unit
+    // each shard of touched files union-merges with the file's live vector
+    // (v3 supersede rule) and packs + PUBLISHES its own Puffin file (the
+    // spec permits many DV files per commit). A point delete (≤ one
+    // shard) still lands a single Puffin object.
+    val txnUuid = java.util.UUID.randomUUID()
+    val metaAbs = metaDir(table).toFile.getAbsolutePath
+    def puffinAbs(shard: Int): String =
+      new File(metaAbs, s"dv-${DvPlane.shardUuid(txnUuid, shard)}.puffin")
+        .getAbsolutePath
+    val descs = DvPlane.write(store,
+      matched.select(col("_gf_mpath"), col(DvPlane.PosCol)),
+      liveDvs(snap.deletes), puffinAbs, packPuffinShard)
+    if (descs.isEmpty) return 0L
     val deletedNow = descs.map(_.freshCardinality).sum
-    val puffinPaths: Seq[Path] = descs.map(d => Paths.get(d.puffinAbs)).distinct
+    val puffinPaths: Seq[Path] =
+      descs.map(_.shard).distinct.map(i => Paths.get(puffinAbs(i)))
     val snapshotId = math.abs(new java.util.Random().nextLong())
     val seq = meta.get("last-sequence-number").asLong() + 1
-    val infos = descs.sortBy(_.ref).map { d =>
-      IcebergAvro.DataFileInfo(d.puffinAbs, d.puffinLen, d.cardinality,
-        dv = Some((d.ref, d.offset, d.blobLen)))
+    val infos = descs.sortBy(_.file).map { d =>
+      IcebergAvro.DataFileInfo(puffinAbs(d.shard), d.shardLength, d.cardinality,
+        dv = Some((d.file, d.offset, d.size)))
     }
     val (manifestPath, manifestLen) = writeAvroArtifact(table, store,
       s"manifest-${java.util.UUID.randomUUID()}.avro")(f =>
@@ -3386,49 +3236,53 @@ object IcebergSink {
     }.groupBy(_._1).map { case (_, vs) => vs.maxBy(_._2)._3 }.sum
   }
 
-  /** One touched file's KB-scale result of a sharded Puffin pack — the
-    * ONLY thing the DV write returns to the driver (never bitmap bytes).
+  /** The live V3 deletion vector per referenced data file, as (Puffin
+    * path, offset, blob length): the HIGHEST-sequence one (spec supersede
+    * rule — each new vector replaces the previous for its file).
     */
-  private[sinks] case class PuffinShardDesc(ref: String, puffinAbs: String,
-      puffinLen: Long, offset: Long, blobLen: Long, cardinality: Long,
-      freshCardinality: Long)
+  private def liveDvs(deletes: Seq[DeleteRef]): Map[String, (String, Long, Long)] =
+    deletes.filter(d => d.content == 1 && d.dvRef.isDefined)
+      .groupBy(_.dvRef.get._1).map { case (ref, ds) =>
+        val d = ds.maxBy(_.seq)
+        val (_, off, size) = d.dvRef.get
+        ref -> (d.path, off, size)
+      }
+
+  /** The bitmap of one `deletion-vector-v1` blob at (Puffin path,
+    * offset, blob length).
+    */
+  private def dvBitmap(blob: (String, Long, Long), read: String => Array[Byte])
+      : org.roaringbitmap.longlong.Roaring64Bitmap = {
+    val (path, off, size) = blob
+    graft.functions.DeletionVector.readFramedAt(read(path), off.toInt, size - 8)
+  }
 
   /** Packs ONE shard of (data file → fresh bitmap bytes) into ONE Puffin
-    * file of `deletion-vector-v1` blobs: each file's fresh bitmap unions
-    * with its LIVE vector first (the v3 supersede rule makes every new
-    * vector TOTAL for its file, not incremental), and the file takes a
-    * DETERMINISTIC per-shard name (txn uuid ⊕ shard id) so a retried task
-    * republishes the same bytes at the same key. Pure function of its
-    * inputs — runs identically in a task (the scale path) or on the
-    * driver (the streamed fallback for driver-only stores). Returns
-    * (file name, file bytes, per-file descriptors).
+    * file of `deletion-vector-v1` blobs ([[DvPlane.Packer]]): each file's
+    * fresh bitmap unions with its LIVE vector first (the v3 supersede rule
+    * makes every new vector TOTAL for its file, not incremental). Pure
+    * function of its inputs, so a task and the driver pack the same bytes.
     */
-  private[sinks] def packPuffinShard(metaAbs: String, txnMsb: Long,
-      txnLsb: Long, shardId: Int, entries: Seq[(String, Array[Byte])],
+  private[sinks] def packPuffinShard(shardId: Int,
+      entries: Seq[(String, Array[Byte])],
       liveDvRefs: Map[String, (String, Long, Long)],
-      read: String => Array[Byte])
-      : (String, Array[Byte], Seq[PuffinShardDesc]) = {
+      read: String => Array[Byte]): (Array[Byte], Seq[DvPlane.DvDesc]) = {
     val D = graft.functions.DeletionVector
     val vectors = entries.sortBy(_._1).map { case (p, freshBytes) =>
       val bm = D.deserialize(freshBytes)
       val freshCard = bm.getLongCardinality
-      liveDvRefs.get(p).foreach { case (path, off, size) =>
-        bm.or(D.readFramedAt(read(path), off.toInt, size - 8))
-      }
+      liveDvRefs.get(p).foreach(blob => bm.or(dvBitmap(blob, read)))
       (p, bm, freshCard)
     }
     val (fileBytes, blobMeta) = buildPuffin(vectors.map { case (p, bm, _) =>
       (p, D.toPortable(bm), bm.getLongCardinality)
     })
-    val uuid = new java.util.UUID(txnMsb, txnLsb ^ shardId.toLong)
-    val name = s"dv-$uuid.puffin"
-    val abs = new File(metaAbs, name).getAbsolutePath
     val freshByRef = vectors.map(v => v._1 -> v._3).toMap
     val descs = blobMeta.map { case (ref, off, blobLen, card) =>
-      PuffinShardDesc(ref, abs, fileBytes.length.toLong, off, blobLen, card,
-        freshByRef(ref))
+      DvPlane.DvDesc(ref, shardId, fileBytes.length.toLong, off, blobLen,
+        card, freshByRef(ref))
     }
-    (name, fileBytes, descs)
+    (fileBytes, descs)
   }
 
   /** Minimal Puffin writer (public Puffin spec layout: leading magic,
@@ -3940,7 +3794,7 @@ object IcebergSink {
   def readChangelog(spark: SparkSession, table: String,
       sinceSnapshotId: Long,
       store: CommitStore = CommitStore.Local): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col, lit, regexp_replace}
+    import org.apache.spark.sql.functions.{broadcast, col, lit}
     val metaSnaps = snapshots(table) // (id, seq, ts) oldest-first
     val fromIdx = metaSnaps.indexWhere(_._1 == sinceSnapshotId)
     require(fromIdx >= 0, s"no snapshot $sinceSnapshotId in $table (expired?)")
@@ -3976,16 +3830,15 @@ object IcebergSink {
           // are cumulative by the supersede rule). Materializing them is
           // OUTPUT-bounded, not table-bounded: the changelog emits one
           // pre-image row per position anyway.
+          val read = (p: String) => store.readObject(Paths.get(p))
           val dvRows: Seq[(String, Long)] = dvDels.flatMap { d =>
             val (ref, off, size) = d.dvRef.get
-            val bm = graft.functions.DeletionVector.readFramedAt(
-              store.readObject(Paths.get(d.path)), off.toInt, size - 8)
+            val bm = dvBitmap((d.path, off, size), read)
             prev.deletes
               .filter(p => p.content == 1 && p.dvRef.exists(_._1 == ref))
               .sortBy(_.seq).lastOption.foreach { p =>
                 val (_, poff, psize) = p.dvRef.get
-                bm.andNot(graft.functions.DeletionVector.readFramedAt(
-                  store.readObject(Paths.get(p.path)), poff.toInt, psize - 8))
+                bm.andNot(dvBitmap((p.path, poff, psize), read))
               }
             val it = bm.getLongIterator
             val out = scala.collection.mutable.ArrayBuffer[(String, Long)]()
@@ -4002,19 +3855,22 @@ object IcebergSink {
               else Seq(dvRows.toDF("file_path", "pos"))
             val delRows = (parquetRows ++ dvFrame)
               .reduce(_.unionAll(_))
-              .select(regexp_replace(col("file_path"),
-                "^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/").as("_gfd_key"),
+              .select(DvPlane.stripScheme(col("file_path")).as("_gfd_key"),
                 col("pos").as("_gfd_pos"))
             // only the files the delete rows reference are read back
             val touched = delRows.select("_gfd_key").distinct()
               .collect().map(_.getString(0)).toSet
             val touchedEntries = prev.data
-              .filter(e => touched.contains(normPath(e._1)))
+              .filter(e => touched.contains(DvPlane.stripScheme(e._1)))
               .map(e => (e._1, e._2))
-            Some(readEntries(spark, schema, touchedEntries, withLineage = true,
-                curFields = prev.curFields, fileFields = prev.fileFields)
-              .withColumn("_gf_key", regexp_replace(col("_gf_uri"),
-                "^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/"))
+            // each row takes its file's raw key (the delete rows' form)
+            // by its file's keys, so an encoded URI still finds its deletes
+            Some(DvPlane.attach(
+                readEntries(spark, schema, touchedEntries, withLineage = true,
+                  curFields = prev.curFields, fileFields = prev.fileFields),
+                touchedEntries.map(e => (e._1, Row(DvPlane.stripScheme(e._1)))),
+                StructType(Seq(StructField("_gf_key", StringType))),
+                "changelog: data row from unmapped file ")
               .join(broadcast(delRows),
                 col("_gf_key") === col("_gfd_key") &&
                   col("_gf_pos") === col("_gfd_pos"))

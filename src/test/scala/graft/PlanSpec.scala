@@ -180,16 +180,24 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q_bm25: df branch reuses the tf exchange at runtime; stats broadcast") {
-    val df = SparkEntry.queries("q_bm25")(spark, dir)
-    df.collect() // run THIS queryExecution so AQE finalizes its plan
+    def executed(name: String): String = {
+      val df = SparkEntry.queries(name)(spark, dir)
+      df.collect() // run THIS queryExecution so AQE finalizes its plan
+      df.queryExecution.executedPlan.toString
+    }
+    def reuses(p: String): Boolean = p.contains("ReusedExchange") ||
+      p.contains("ReusedQueryStage") || p.contains("StageReuse")
     // static explain duplicates the explode+agg subtree under both join
     // inputs; AQE's executed plan must collapse them into one stage
-    val p = df.queryExecution.executedPlan.toString
-    assert(p.contains("ReusedExchange") || p.contains("ReusedQueryStage") ||
-      p.contains("StageReuse"),
-      s"df must reuse the tf explode+agg exchange at runtime:\n$p")
+    val p = executed("q_bm25")
+    assert(reuses(p), s"df must reuse the tf explode+agg exchange at runtime:\n$p")
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastHashJoin"),
       s"the 1-row stats frame must broadcast:\n$p")
+    // q_dedup_substring's docs-per-hash census counts when(c >= 1, 1) so
+    // `c` survives pruning and both branches share the (doc, h) exchange;
+    // a Catalyst that folded it would explode the corpus twice
+    val d = executed("q_dedup_substring")
+    assert(reuses(d), s"the census must reuse the (doc, h) exchange at runtime:\n$d")
   }
 
   test("q_join_range_binned: band join runs as an equi join, never a nested loop") {
@@ -624,28 +632,41 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("past the literal threshold the DV probe ships as a broadcast (r14)") {
-    import graft.sinks.DeltaSink
-    import org.apache.spark.sql.functions.col
+    import graft.sinks.{DeltaSink, IcebergSink}
+    import org.apache.spark.sql.functions.{col, sum}
     val sess = spark
     import sess.implicits._
+    def rows = (0L until 300L).map(i => (i, i % 3)).toDF("id", "g").coalesce(2)
     val table = java.nio.file.Files.createTempDirectory("graft-plan-dvbc").toString
-    assert(DeltaSink.write((0L until 300L).map(i => (i, i % 3)).toDF("id", "g")
-      .coalesce(2), table))
-    assert(DeltaSink.deleteWhereDV(sess, table, "id % 3 = 0") == 100L)
+    assert(DeltaSink.write(rows, table))
+    val ibTable = java.nio.file.Files.createTempDirectory("graft-plan-ibdvbc")
+      .toString + "/tbl"
+    IcebergSink.write(rows, ibTable, IcebergSink.CreateExclusive)
+    // both formats' merged reads share one size rule: (read, DV delete)
+    val formats: Seq[(String, () => org.apache.spark.sql.DataFrame, () => Long)] = Seq(
+      ("delta", () => DeltaSink.read(sess, table),
+        () => DeltaSink.deleteWhereDV(sess, table, "id % 3 = 0")),
+      ("iceberg", () => IcebergSink.read(sess, ibTable),
+        () => IcebergSink.deleteWhereDV(sess, ibTable, "id % 3 = 0")))
+    formats.foreach { case (_, _, delete) => assert(delete() == 100L) }
     val saved = DeltaSink.DvLiteralMaxBytes
     try {
       DeltaSink.DvLiteralMaxBytes = 1 // force the broadcast path
-      val out = DeltaSink.read(sess, table)
-      val hasBc = out.queryExecution.optimizedPlan.exists(
-        _.expressions.exists(_.exists(
-          _.isInstanceOf[graft.functions.DvDeletedBroadcast])))
-      assert(hasBc, "expected a DvDeletedBroadcast probe past the threshold")
-      assert(out.count() == 200)
-      assert(out.filter(col("id") % 3 === 0).count() == 0,
-        "the broadcast probe must mask exactly the deleted rows")
-      // the merged-view semantics hold through the broadcast path too
-      assert(DeltaSink.deleteWhereDV(sess, table, "id % 3 = 0") == 0L,
-        "re-delete stays a no-op when matches evaluate via the broadcast")
+      formats.foreach { case (fmt, read, delete) =>
+        val out = read()
+        val hasBc = out.queryExecution.optimizedPlan.exists(
+          _.expressions.exists(_.exists(
+            _.isInstanceOf[graft.functions.DvDeletedBroadcast])))
+        assert(hasBc, s"$fmt: expected a DvDeletedBroadcast probe past the threshold")
+        assert(out.count() == 200)
+        // census: ids 0..299 sum to 44850, the deleted multiples of 3 to 14850
+        assert(out.agg(sum(col("id"))).head().getLong(0) == 30000L, fmt)
+        assert(out.filter(col("id") % 3 === 0).count() == 0,
+          s"$fmt: the broadcast probe must mask exactly the deleted rows")
+        // the merged-view semantics hold through the broadcast path too
+        assert(delete() == 0L,
+          s"$fmt: re-delete stays a no-op when matches evaluate via the broadcast")
+      }
     } finally DeltaSink.DvLiteralMaxBytes = saved
   }
 

@@ -4103,6 +4103,48 @@ class SinkSpec extends AnyFunSuite {
     } finally DeltaSink.DvBroadcastMaxBytes = prev
   }
 
+  test("DV delete, merged read, row-id read and changelog hold at a path the reader percent-encodes") {
+    val s = spark
+    import s.implicits._
+    // `_metadata.file_path` renders a space and a '%' encoded while the
+    // log and manifests store them raw: only the dual-key match ties the
+    // rows of this table to their files
+    val root = new File(tmp(), "odd dir 100%")
+    val rows = (1L to 60L).map(i => (i, s"n$i")).toDF("id", "name").coalesce(2)
+    val survivors = (1L to 60L).filter(_ % 3 != 0).toSet
+    val dt = new File(root, "delta").getPath
+    assert(DeltaSink.write(rows, dt))
+    assert(DeltaSink.enableRowTracking(spark, dt) == 60L)
+    def deltaIds(): Map[Long, Long] = DeltaSink.readWithRowIds(spark, dt)
+      .select("id", "_row_id").as[(Long, Long)].collect().toMap
+    val dBefore = deltaIds()
+    assert(dBefore.values.toSet == (0L until 60L).toSet)
+    assert(DeltaSink.deleteWhereDV(spark, dt, "id % 3 = 0") == 20L)
+    assert(DeltaSink.read(spark, dt).count() == 40)
+    assert(DeltaSink.deleteWhereDV(spark, dt, "id % 3 = 0") == 0L)
+    val dAfter = deltaIds()
+    assert(dAfter.keySet == survivors)
+    dAfter.foreach { case (k, v) => assert(dBefore(k) == v) }
+    val it = new File(root, "iceberg").getPath
+    IcebergSink.write(rows, it, IcebergSink.CreateExclusive)
+    assert(IcebergSink.enableRowLineage(spark, it) == 60L)
+    def icebergIds(): Map[Long, Long] = IcebergSink.readWithLineage(spark, it)
+      .select("id", "_row_id").as[(Long, Long)].collect().toMap
+    val iBefore = icebergIds()
+    assert(iBefore.values.toSet == (0L until 60L).toSet)
+    val preDelete = IcebergSink.snapshots(it).last._1
+    assert(IcebergSink.deleteWhereDV(spark, it, "id % 3 = 0") == 20L)
+    assert(IcebergSink.read(spark, it).count() == 40)
+    assert(IcebergSink.deleteWhereDV(spark, it, "id % 3 = 0") == 0L)
+    val iAfter = icebergIds()
+    assert(iAfter.keySet == survivors)
+    iAfter.foreach { case (k, v) => assert(iBefore(k) == v) }
+    // the changelog images exactly the DV-deleted rows
+    assert(IcebergSink.readChangelog(spark, it, preDelete)
+      .filter(col("_change_type") === "delete").select("id").as[Long]
+      .collect().toSet == (3L to 60L by 3).toSet)
+  }
+
   test("Delta liquid clustering: clusterBy metadata, implicit OPTIMIZE clustering, pruned reads (r17)") {
     val s = spark
     import s.implicits._
