@@ -45,12 +45,13 @@ trait CommitStore {
   def putIfAbsent(target: Path, bytes: Array[Byte]): Unit
 
   /** EXECUTOR-shippable byte I/O for this store, when it has one — what a
-    * write path needs to fan artifact packing out of the driver (the
-    * 100 TB deletion-vector write packs and PUBLISHES per-shard
-    * sidecar/Puffin files FROM TASKS, returning only KB-scale descriptors
-    * to the driver). None for driver-local test doubles (in-memory maps,
-    * hooked stores) — callers fall back to a driver-streamed publish
-    * bounded at one shard in memory.
+    * write path needs to keep data bytes out of the driver: [[TaskWrite]]
+    * tasks publish the data files they staged apart from the table, and
+    * [[DvPlane]] tasks pack and publish deletion-vector shards, each
+    * returning only KB-scale descriptors. A store that stages apart must
+    * have one. None for driver-local test doubles (in-memory maps, hooked
+    * stores), which write data files in place; their deletion vectors fall
+    * back to a driver-streamed publish bounded at one shard in memory.
     */
   def taskIO: Option[TaskIO] = None
 
@@ -113,13 +114,22 @@ trait CommitStore {
   * Implementations are [[Serializable]] (they travel in task closures) and
   * carry no driver-only state: [[CommitStore.LocalTaskIO]] is the
   * shared-filesystem spelling (every executor of a real cluster mounts the
-  * warehouse), [[HttpObjectStore.Client]]'s re-dials the store endpoint
+  * warehouse), [[HttpObjectStore.HttpTaskIO]] re-dials the store endpoint
   * lazily per JVM. Targets are txn-unique names, so plain overwrite
-  * semantics make task RETRIES idempotent.
+  * semantics make task RETRIES idempotent. The write tasks of
+  * [[TaskWrite]] publish every data file through [[publish]], and the
+  * deletion-vector tasks of [[DvPlane]] their shards through [[write]]:
+  * no data byte crosses the driver.
   */
 trait TaskIO extends Serializable {
   def read(absPath: String): Array[Byte]
   def write(absPath: String, bytes: Array[Byte]): Unit
+
+  /** Makes the task-local file `staged` the object `target`, consuming
+    * the staged file. A store streams it in bounded parts, never holding
+    * the whole file in memory.
+    */
+  def publish(staged: String, target: String): Unit
 }
 
 /** A [[CommitStore]] whose objects live behind a store protocol, not on a
@@ -128,10 +138,11 @@ trait TaskIO extends Serializable {
   * uploads + a conditional-put log commit).
   * Implementations override the five data-plane members
   * ([[putObject]], [[readObject]], [[deleteObject]], [[listPrefix]],
-  * [[listPrefixMeta]]); staging and publishing are written here once over
-  * them: Spark writes into a private temp dir and each staged file is
-  * published with [[putObject]], so every byte of the table — data and
-  * log — travels the store protocol.
+  * [[listPrefixMeta]]); staging is written here once: Spark writes into a
+  * private temp dir, each data file is published from its write task
+  * through [[taskIO]] and each metadata artifact from the driver with
+  * [[putObject]], so every byte of the table — data and log — travels the
+  * store protocol.
   */
 trait ObjectStore extends CommitStore {
 
@@ -142,8 +153,10 @@ trait ObjectStore extends CommitStore {
     d.toFile
   }
 
-  /** Uploads the staged bytes. Buffering one file is bounded by the
-    * sinks' maxRecordsPerFile; a production client would stream parts.
+  /** Uploads the staged bytes from the driver. Only metadata-sized
+    * artifacts take this path (manifests, checkpoint parts, the version
+    * hint); data files stream from their write tasks through
+    * [[TaskIO.publish]].
     */
   override def publish(staged: Path, target: Path): Unit =
     putObject(target, Files.readAllBytes(staged))
@@ -169,38 +182,6 @@ object CommitStore {
     f.delete(): Unit
   }
 
-  /** The written-file harvester both sinks share: publishes the part files
-    * one Spark write left under `staging` into `tableDir`, at
-    * `relOf(stagedRelativePath, index)`. `describe(stagedFile, tableRel)`
-    * reads each file's footer before it is published; None drops the file
-    * (an empty part). A failed publish reclaims every object this harvest
-    * already published before rethrowing — an uncommitted write leaves
-    * zero bytes behind — and a staging dir apart from the table is always
-    * removed. Returns the published files' descriptions.
-    */
-  private[sinks] def harvest[A](store: CommitStore, staging: File, tableDir: File,
-      relOf: (Path, Int) => String = (rel, _) => rel.toString)(
-      describe: (File, String) => Option[A]): Seq[A] = {
-    val published = scala.collection.mutable.ArrayBuffer[Path]()
-    try {
-      new File(staging, "_SUCCESS").delete()
-      partFiles(staging).zipWithIndex.flatMap { case (f, i) =>
-        val rel = relOf(staging.toPath.relativize(f.toPath), i)
-        val described = describe(f, rel)
-        if (described.isEmpty) f.delete()
-        else {
-          val target = new File(tableDir, rel).toPath
-          store.publish(f.toPath, target)
-          published += target
-        }
-        described
-      }
-    } catch { case e: Throwable =>
-      published.foreach(p => scala.util.Try(store.deleteObject(p)))
-      throw e
-    } finally if (staging != tableDir) deleteTree(staging)
-  }
-
   /** Local-filesystem store: `CREATE_NEW` is the put-if-absent (POSIX
     * O_EXCL — atomic on local FS and NFSv3+).
     */
@@ -223,6 +204,8 @@ object CommitStore {
       Option(p.getParent).foreach(Files.createDirectories(_))
       Files.write(p, bytes): Unit
     }
+    override def publish(staged: String, target: String): Unit =
+      Local.publish(java.nio.file.Paths.get(staged), java.nio.file.Paths.get(target))
   }
 
   /** In-memory store with an optional pre-put hook, for OCC protocol tests:

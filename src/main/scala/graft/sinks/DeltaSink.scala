@@ -369,16 +369,15 @@ object DeltaSink extends org.apache.spark.internal.Logging {
       if (!overwrite) return false
       existing.foreach(CommitStore.deleteTree)
     }
-    // Data files: a local store lets Spark write straight into the table;
-    // an ObjectStore stages them and PUBLISHES each through the store's
-    // multipart upload — the reference's single pipeline
-    // (delta_destination.rs:70-229: upload data files, then conditionally
-    // put the commit). Spark's mode=overwrite only placates its
-    // path-exists check: the refuse-unless-overwrite decision was already
-    // taken above, and the target has been emptied by then.
+    // Data files: a local store lets the write tasks put them straight
+    // into the table; on an ObjectStore each task PUBLISHES its files
+    // through the store's multipart upload — the reference's single
+    // pipeline (delta_destination.rs:70-229: upload data files, then
+    // conditionally put the commit). The refuse-unless-overwrite decision
+    // was already taken above, and the target has been emptied by then.
     val adds = writeStaged(store, dir, clusterByPartitions(df, partitionBy),
-      partitionBy, maxRecordsPerFile, (rel, _) => rel.toString,
-      store.stagingFor(dir))
+      partitionBy, maxRecordsPerFile, java.util.UUID.randomUUID().toString,
+      TaskWrite.sparkNames)
     Files.createDirectories(logDir(table))
 
     val now = System.currentTimeMillis()
@@ -566,11 +565,10 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     * append exactly as on the Iceberg path. Respects the table's declared
     * partition layout. Returns the committed version.
     *
-    * Each transaction stages its data files in a private temp directory and
-    * moves them into the table under a txn-unique name — concurrent appenders
-    * never share Hadoop's `_temporary` staging dir and can never claim each
-    * other's files, the same unique-file-name discipline real Delta writers
-    * use.
+    * Each transaction's write tasks name their data files after its txn
+    * ([[TaskWrite]]) — concurrent appenders never share a staging dir and
+    * can never claim each other's files, the same unique-file-name
+    * discipline real Delta writers use.
     */
   def append(df: DataFrame, table: String, retries: Int = 3,
       store: CommitStore = CommitStore.Local,
@@ -691,7 +689,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
         clusterByPartitions(withConstraintCheck(df, state.configuration),
           state.partitionColumns),
         evolvedSchema.getOrElse(state.schema)),
-      state.partitionColumns, MaxRecordsPerFile, txnNames(txn, ".snappy.parquet"))
+      state.partitionColumns, MaxRecordsPerFile, txn, txnNames(".snappy.parquet"))
     val txnLine = txn0.map { case (appId, v) =>
       s"""{"txn":{"appId":${esc(appId)},"version":$v}}"""
     }
@@ -954,7 +952,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
       else if (tail.exists(_.dv.isDefined)) current.repartition(nTailFiles)
       else current.coalesce(nTailFiles)
     val adds = writeStaged(store, dir, toPhysical(packed, state.schema),
-      state.partitionColumns, maxRecordsPerFile, txnNames(txn))
+      state.partitionColumns, maxRecordsPerFile, txn, txnNames())
     val now = System.currentTimeMillis()
     val removes = tail.map(a =>
       s"""{"remove":{"path":${esc(a.path)},"deletionTimestamp":$now,"dataChange":false}}""")
@@ -1071,7 +1069,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     // (the same reasoning as compact's DV branch)
     val adds = writeStaged(store, dir,
       toPhysical(survivors.repartition(nFiles), state.schema),
-      state.partitionColumns, maxRecordsPerFile, txnNames(txn))
+      state.partitionColumns, maxRecordsPerFile, txn, txnNames())
     val now = System.currentTimeMillis()
     val removes = dvAdds.map(a =>
       s"""{"remove":{"path":${esc(a.path)},"deletionTimestamp":$now,"dataChange":false}}""")
@@ -1198,7 +1196,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     // same write job (kept rows re-pass trivially)
     val adds = writeStaged(store, dir,
       toPhysical(withConstraintCheck(newData, state.configuration), state.schema),
-      state.partitionColumns, MaxRecordsPerFile, txnNames(txn))
+      state.partitionColumns, MaxRecordsPerFile, txn, txnNames())
     val now = System.currentTimeMillis()
     val removes = touched.map(a =>
       s"""{"remove":{"path":${esc(a.path)},"deletionTimestamp":$now,"dataChange":true}}""")
@@ -1238,7 +1236,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
       val cdcDf = (Seq(updPre) ++ delPre.toSeq ++ Seq(updPost, ins))
         .reduce(_.unionByName(_))
       writeStaged(store, dir, toPhysical(cdcDf, state.schema), Nil,
-        MaxRecordsPerFile, cdcNames(txn))
+        MaxRecordsPerFile, txn, cdcNames)
     }
     val cdcLines = cdcAdds.map(a =>
       s"""{"cdc":{"path":${esc(a.path)},"partitionValues":{},""" +
@@ -1310,11 +1308,11 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     val txn = java.util.UUID.randomUUID().toString
     val adds = writeStaged(store, dir,
       toPhysical(withConstraintCheck(rewrite, state.configuration), state.schema),
-      state.partitionColumns, MaxRecordsPerFile, txnNames(txn))
+      state.partitionColumns, MaxRecordsPerFile, txn, txnNames())
     val cdcAdds: Seq[AddEntry] =
       if (!changeDataFeed) Nil
       else writeStaged(store, dir, toPhysical(imagesOf(matched, replacement),
-        state.schema), Nil, MaxRecordsPerFile, cdcNames(txn))
+        state.schema), Nil, MaxRecordsPerFile, txn, cdcNames)
     val matchedRows =
       if (changeDataFeed)
         cdcAdds.map(a =>
@@ -1477,7 +1475,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
       // CHECK constraints gate an update's post-images too
       replacement.toSeq.flatMap(rep => writeStaged(store, dir,
         toPhysical(withConstraintCheck(rep, meta.configuration), state.schema),
-        state.partitionColumns, MaxRecordsPerFile, txnNames(txn)))
+        state.partitionColumns, MaxRecordsPerFile, txn, txnNames()))
     } catch { case e: Throwable =>
       reclaim(store, table, publishedDv)
       throw e
@@ -1485,7 +1483,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     // CDC images (cost ∝ matched rows, same as the CoW path)
     val cdcAdds: Seq[AddEntry] = if (!changeDataFeed) Nil else try {
       writeStaged(store, dir, toPhysical(imagesOf(matchedRows, replacement),
-        state.schema), Nil, MaxRecordsPerFile, cdcNames(txn))
+        state.schema), Nil, MaxRecordsPerFile, txn, cdcNames)
     } catch { case e: Throwable =>
       reclaim(store, table, publishedDv ++ dataAdds.map(_.path))
       throw e
@@ -3906,48 +3904,35 @@ object DeltaSink extends org.apache.spark.internal.Logging {
   }
 
   /** One Spark parquet write of `df` (Hive-layout under `partitionBy`)
-    * into `staging`, published into the table `dir` at `relOf` names by
-    * [[CommitStore.harvest]] (a failed publish reclaims the batch), each
-    * file with its log entry read from the staged footer. A staging dir
-    * apart from the table is removed whatever happens.
+    * into the table `dir` through [[TaskWrite]]: each task reads its
+    * files' footers into their log stats and publishes them, named by
+    * `naming` under `txn`.
     */
   private def writeStaged(store: CommitStore, dir: File, df: DataFrame,
-      partitionBy: Seq[String], maxRecordsPerFile: Long,
-      relOf: (java.nio.file.Path, Int) => String,
-      staging: File = Files.createTempDirectory("graft-delta-stage").toFile)
-      : Seq[AddEntry] =
-    try {
-      val writer = df.write.mode("overwrite")
-        .option("compression", "snappy")
-        .option("maxRecordsPerFile", maxRecordsPerFile)
-      (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
-        .parquet(staging.getPath)
-      val conf = df.sparkSession.sessionState.newHadoopConf()
-      CommitStore.harvest(store, staging, dir, relOf)((f, rel) =>
-        Some(toAddEntry(rel, f, conf)))
-    } finally if (staging != dir) CommitStore.deleteTree(staging)
+      partitionBy: Seq[String], maxRecordsPerFile: Long, txn: String,
+      naming: TaskWrite.Naming): Seq[AddEntry] =
+    TaskWrite(store, df, dir, partitionBy, maxRecordsPerFile, txn, naming)(
+      (f, conf) => Some(statsJson(f, conf)))
+      .map(w => AddEntry(w.rel, partitionValuesOf(w.rel), w.size, w.mtime, w.stats))
 
-  /** Txn-unique data-file names that keep the staged partition subpath. */
-  private def txnNames(txn: String, suffix: String = ".c000.snappy.parquet")
-      : (java.nio.file.Path, Int) => String = (rel, i) =>
-    Option(rel.getParent).map(_.toString + "/").getOrElse("") +
-      f"part-$i%05d-$txn$suffix"
+  /** Txn-unique data-file names: task partition and file counter. */
+  private def txnNames(suffix: String = ".c000.snappy.parquet"): TaskWrite.Naming =
+    (txn, task, n) => f"part-$task%05d-$n%03d-$txn$suffix"
 
   /** Txn-unique change-data-feed file names. */
-  private def cdcNames(txn: String): (java.nio.file.Path, Int) => String =
-    (_, i) => f"_change_data/cdc-$i%05d-$txn.snappy.parquet"
+  private val cdcNames: TaskWrite.Naming =
+    (txn, task, n) => f"_change_data/cdc-$task%05d-$n%03d-$txn.snappy.parquet"
 
   /** Reclaims table-relative paths of an aborted transaction. */
   private def reclaim(store: CommitStore, table: String, rels: Seq[String]): Unit =
     rels.foreach(p => scala.util.Try(store.deleteObject(Paths.get(table, p))))
 
-  /** Log entry for a data file whose TABLE path is `rel` but whose bytes
-    * are read from `f` (which may be a staged copy outside the table).
+  /** Partition values from a table path's Hive-style dir segments
+    * (col=value), Hive escaping undone; the marker dir name means a null
+    * partition value.
     */
-  private def toAddEntry(rel: String, f: File, conf: Configuration): AddEntry = {
-    // partition values from the Hive-style dir segments (col=value), Hive
-    // escaping undone; the marker dir name means a null partition value
-    val pv = rel.split('/').dropRight(1).flatMap { seg =>
+  private def partitionValuesOf(rel: String): Map[String, String] =
+    rel.split('/').dropRight(1).flatMap { seg =>
       val i = seg.indexOf('=')
       if (i <= 0) None
       else {
@@ -3956,6 +3941,9 @@ object DeltaSink extends org.apache.spark.internal.Logging {
           (if (v == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null else v))
       }
     }.toMap
+
+  /** A data file's log `stats` JSON, from its footer ([[fileStats]]). */
+  private def statsJson(f: File, conf: Configuration): String = {
     val (rows, mins, maxs) = fileStats(f, conf)
     val st = mapper.createObjectNode()
     st.put("numRecords", rows)
@@ -3963,7 +3951,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     mins.toSeq.sortBy(_._1).foreach { case (k, v) => mnNode.put(k, v) }
     val mxNode = st.putObject("maxValues")
     maxs.toSeq.sortBy(_._1).foreach { case (k, v) => mxNode.put(k, v) }
-    AddEntry(rel, pv, f.length(), f.lastModified(), st.toString)
+    st.toString
   }
 
   /** Row count + per-column min/max from the parquet footer (no data

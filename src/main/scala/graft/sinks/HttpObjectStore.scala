@@ -259,10 +259,86 @@ object HttpObjectStore {
     override def close(): Unit = { server.stop(0); pool.shutdown() }
   }
 
-  /** Task-side GET/PUT over the store protocol: endpoint + bucket root
-    * travel as plain strings into task closures; the HttpClient rebuilds
-    * lazily per task JVM. Shard artifacts carry txn-unique names, so the
-    * plain (unconditional) PUT keeps task retries idempotent.
+  /** Data-file part sizing: S3-realistic (≥5 MiB parts there; 4 MiB here
+    * keeps multi-part coverage on test-sized files) with ≤2 parts in
+    * flight.
+    */
+  private val PartSize = 4 * 1024 * 1024
+  private val PartsInFlight = 2
+
+  /** The bounded multipart uploader — the reference's data-file upload
+    * shape (delta_destination.rs:120-229), written once for the driver's
+    * [[Client]] and the tasks' [[HttpTaskIO]]: ≤ `maxConcurrency` part
+    * uploads in flight, each part read by `part(offset, length)` only when
+    * its upload starts (so at most partSize × maxConcurrency bytes are
+    * held); the first failure cancels the rest and ABORTS the upload
+    * server-side (staged parts reclaimed, target never appears); success
+    * completes atomically.
+    */
+  private def upload(http: HttpClient, uri: URI, size: Long, partSize: Int,
+      maxConcurrency: Int)(part: (Long, Int) => Array[Byte]): Unit = {
+    require(partSize > 0 && maxConcurrency > 0)
+    val initResp = http.send(
+      HttpRequest.newBuilder(URI.create(uri.toString + "?uploads"))
+        .POST(HttpRequest.BodyPublishers.noBody()).build(),
+      HttpResponse.BodyHandlers.ofString())
+    if (initResp.statusCode() != 200)
+      throw new IOException(s"multipart initiate failed: HTTP ${initResp.statusCode()}")
+    val uploadId = initResp.body()
+    val nParts = math.max(1L, (size + partSize - 1) / partSize).toInt
+    def put(n: Int): (Int, String) = {
+      val off = (n - 1).toLong * partSize
+      val b = part(off, math.min(partSize.toLong, size - off).toInt)
+      val resp = http.send(
+        HttpRequest.newBuilder(URI.create(s"$uri?uploadId=$uploadId&partNumber=$n"))
+          .PUT(HttpRequest.BodyPublishers.ofByteArray(b)).build(),
+        HttpResponse.BodyHandlers.discarding())
+      if (resp.statusCode() != 200)
+        throw new IOException(s"part $n failed: HTTP ${resp.statusCode()}")
+      n -> resp.headers().firstValue("ETag").orElseThrow()
+    }
+    def aborted(e: Throwable) =
+      new IOException("multipart part upload failed; upload aborted", e)
+    val pool =
+      if (nParts == 1) None else Some(Executors.newFixedThreadPool(maxConcurrency))
+    try {
+      val etags = pool match {
+        case None => try Seq(put(1)) catch { case e: Throwable => throw aborted(e) }
+        case Some(p) =>
+          val futures = (1 to nParts).map(n =>
+            p.submit(new java.util.concurrent.Callable[(Int, String)] {
+              override def call(): (Int, String) = put(n)
+            }))
+          try futures.map(_.get())
+          catch { case e: Throwable =>
+            futures.foreach(_.cancel(true)) // abort-on-error: stop the fleet
+            throw aborted(e.getCause match { case null => e; case c => c })
+          }
+      }
+      val manifest = etags.map { case (n, t) => s"$n $t" }.mkString("\n")
+      val resp = http.send(
+        HttpRequest.newBuilder(URI.create(s"$uri?uploadId=$uploadId"))
+          .POST(HttpRequest.BodyPublishers.ofString(manifest)).build(),
+        HttpResponse.BodyHandlers.discarding())
+      if (resp.statusCode() != 200)
+        throw new IOException(s"multipart complete failed: HTTP ${resp.statusCode()}")
+    } catch { case e: Throwable =>
+      // reclaim staged parts server-side; the target never materializes
+      http.send(
+        HttpRequest.newBuilder(URI.create(s"$uri?uploadId=$uploadId"))
+          .DELETE().build(), HttpResponse.BodyHandlers.discarding())
+      throw e
+    } finally pool.foreach { p =>
+      p.shutdown()
+      p.awaitTermination(30, TimeUnit.SECONDS)
+    }
+  }
+
+  /** Task-side GET/PUT/publish over the store protocol: endpoint + bucket
+    * root travel as plain strings into task closures; the HttpClient
+    * rebuilds lazily per task JVM. Shard artifacts and data files carry
+    * txn-unique names, so unconditional writes keep task retries
+    * idempotent.
     */
   final class HttpTaskIO(endpointStr: String, rootStr: String) extends TaskIO {
     @transient private lazy val http = HttpClient.newBuilder()
@@ -289,6 +365,26 @@ object HttpObjectStore {
       if (resp.statusCode() != 200)
         throw new IOException(s"put of $absPath failed: HTTP ${resp.statusCode()}")
     }
+
+    /** Multipart-uploads the staged file part by part from disk, then
+      * deletes it.
+      */
+    override def publish(staged: String, target: String): Unit = {
+      val path = java.nio.file.Paths.get(staged)
+      val ch = java.nio.channels.FileChannel.open(path, StandardOpenOption.READ)
+      try upload(http, keyUri(target), ch.size(), PartSize, PartsInFlight) { (off, len) =>
+        val buf = java.nio.ByteBuffer.allocate(len)
+        while (buf.hasRemaining && ch.read(buf, off + buf.position()) >= 0) ()
+        buf.array()
+      } finally ch.close()
+      Files.delete(path)
+    }
+
+    /** The driver's bytes take the same uploader. */
+    private[HttpObjectStore] def putMultipart(target: String, bytes: Array[Byte],
+        partSize: Int, maxConcurrency: Int): Unit =
+      upload(http, keyUri(target), bytes.length.toLong, partSize, maxConcurrency)(
+        (off, len) => java.util.Arrays.copyOfRange(bytes, off.toInt, off.toInt + len))
   }
 
   /** HTTP client speaking the [[Server]]'s S3-shaped protocol. An
@@ -302,17 +398,16 @@ object HttpObjectStore {
     private val http = HttpClient.newBuilder()
       .connectTimeout(java.time.Duration.ofSeconds(10)).build()
 
-    override def taskIO: Option[TaskIO] =
-      Some(new HttpTaskIO(endpoint.toString, root.toString))
+    private val io = new HttpTaskIO(endpoint.toString, root.toString)
 
-    /** Data-file publication rides the bounded multipart uploader (the
-      * reference's data path, delta_destination.rs:120-229): S3-realistic
-      * part sizing (≥5 MiB parts there; 4 MiB here keeps multi-part
-      * coverage on test-sized files) with ≤2 parts in flight, abort and
-      * server-side reclamation on any part failure.
+    override def taskIO: Option[TaskIO] = Some(io)
+
+    /** Every object the driver writes rides the same bounded multipart
+      * uploader as the tasks' data files ([[HttpTaskIO.publish]]): abort
+      * and server-side reclamation on any part failure.
       */
     override def putObject(target: Path, bytes: Array[Byte]): Unit =
-      putMultipart(target, bytes, partSize = 4 * 1024 * 1024, maxConcurrency = 2)
+      putMultipart(target, bytes, PartSize, PartsInFlight)
 
     override def deleteObject(target: Path): Unit = {
       val resp = http.send(HttpRequest.newBuilder(keyUri(target)).DELETE().build(),
@@ -376,66 +471,11 @@ object HttpObjectStore {
       get(target).getOrElse(
         throw new java.io.FileNotFoundException(s"object not found: $target"))
 
-    /** Bounded-concurrency multipart upload with abort-on-error — the
-      * reference's data-file upload shape (delta_destination.rs:120-229):
-      * ≤ `maxConcurrency` part uploads in flight, first failure cancels
-      * the rest and ABORTS the upload server-side (staged parts
-      * reclaimed, target never appears), success completes atomically.
+    /** [[putObject]] with explicit part sizing: ≤ `maxConcurrency` parts
+      * of `partSize` bytes in flight, abort-on-error.
       */
     def putMultipart(target: Path, bytes: Array[Byte], partSize: Int,
-        maxConcurrency: Int): Unit = {
-      require(partSize > 0 && maxConcurrency > 0)
-      val uri = keyUri(target)
-      val initResp = http.send(
-        HttpRequest.newBuilder(URI.create(uri.toString + "?uploads"))
-          .POST(HttpRequest.BodyPublishers.noBody()).build(),
-        HttpResponse.BodyHandlers.ofString())
-      if (initResp.statusCode() != 200)
-        throw new IOException(s"multipart initiate failed: HTTP ${initResp.statusCode()}")
-      val uploadId = initResp.body()
-
-      val parts = bytes.grouped(partSize).zipWithIndex
-        .map { case (b, i) => (i + 1, b) }.toSeq
-      val pool = Executors.newFixedThreadPool(maxConcurrency)
-      try {
-        val futures = parts.map { case (n, b) =>
-          pool.submit(new java.util.concurrent.Callable[(Int, String)] {
-            override def call(): (Int, String) = {
-              val resp = http.send(
-                HttpRequest.newBuilder(
-                    URI.create(s"$uri?uploadId=$uploadId&partNumber=$n"))
-                  .PUT(HttpRequest.BodyPublishers.ofByteArray(b)).build(),
-                HttpResponse.BodyHandlers.discarding())
-              if (resp.statusCode() != 200)
-                throw new IOException(s"part $n failed: HTTP ${resp.statusCode()}")
-              n -> resp.headers().firstValue("ETag").orElseThrow()
-            }
-          })
-        }
-        val etags =
-          try futures.map(_.get())
-          catch { case e: Throwable =>
-            futures.foreach(_.cancel(true)) // abort-on-error: stop the fleet
-            throw new IOException("multipart part upload failed; upload aborted",
-              e.getCause match { case null => e; case c => c })
-          }
-        val manifest = etags.map { case (n, t) => s"$n $t" }.mkString("\n")
-        val resp = http.send(
-          HttpRequest.newBuilder(URI.create(s"$uri?uploadId=$uploadId"))
-            .POST(HttpRequest.BodyPublishers.ofString(manifest)).build(),
-          HttpResponse.BodyHandlers.discarding())
-        if (resp.statusCode() != 200)
-          throw new IOException(s"multipart complete failed: HTTP ${resp.statusCode()}")
-      } catch { case e: Throwable =>
-        // reclaim staged parts server-side; the target never materializes
-        http.send(
-          HttpRequest.newBuilder(URI.create(s"$uri?uploadId=$uploadId"))
-            .DELETE().build(), HttpResponse.BodyHandlers.discarding())
-        throw e
-      } finally {
-        pool.shutdown()
-        pool.awaitTermination(30, TimeUnit.SECONDS)
-      }
-    }
+        maxConcurrency: Int): Unit =
+      io.putMultipart(target.toString, bytes, partSize, maxConcurrency)
   }
 }

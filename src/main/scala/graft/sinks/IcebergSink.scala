@@ -582,7 +582,7 @@ object IcebergSink {
     // version via the conditional put below: on an ObjectStore nothing
     // touches the table via the local FS, mirroring the reference's single
     // pipeline (iceberg_destination.rs:152-377 over an object store).
-    val (dataDir, stageRoot) = newStage(store, table, "stage")
+    val dataDir = newDataDir(table, "stage")
     // hash distribution-mode (guide §6, Iceberg's write.distribution-mode
     // =hash — the 1.2+ default): cluster rows by the DERIVED partition
     // values so the file count is ∝ distinct partition values, not
@@ -593,18 +593,12 @@ object IcebergSink {
       if (partSpecs.isEmpty) stageDf
       else stageDf.repartition(partSpecs.map(ps =>
         org.apache.spark.sql.functions.col(ps.derivedName)): _*)
-    val writer = clustered.write
-      .option("compression", "snappy")
-      .option("maxRecordsPerFile", DeltaSink.MaxRecordsPerFile)
-    (if (partSpecs.nonEmpty) writer.partitionBy(partSpecs.map(_.derivedName): _*)
-     else writer).parquet(stageRoot.getPath)
-    // per-file partition values from the staging layout (write side only —
+    // per-file partition values from the written layout (write side only —
     // readers use the manifest)
-    val partValuesOf: File => Seq[Any] =
+    val partValuesOf: String => Seq[Any] =
       if (partSpecs.isEmpty) _ => Nil
-      else { f =>
-        val rel = stageRoot.toPath.relativize(f.toPath)
-        val segments = (0 until rel.getNameCount - 1).map(rel.getName(_).toString)
+      else { rel =>
+        val segments = rel.split('/').toSeq.dropRight(1)
         partSpecs.zip(segments).map { case (ps, seg) =>
           require(seg.startsWith(ps.derivedName + "="),
             s"unexpected partition segment $seg for ${ps.derivedName}")
@@ -717,14 +711,15 @@ object IcebergSink {
 
     // Avro manifest (V2 manifest_entry records, real per-file row counts +
     // per-column value/null counts and bounds from the same footer open),
-    // read from the staged copy before the file is published; manifests
-    // always reference the file's TABLE path.
-    val conf = df.sparkSession.sessionState.newHadoopConf()
+    // read by each write task from the file it wrote, before publishing
+    // it; manifests always reference the file's TABLE path.
     val fieldIds = declaredSchema.fieldNames.zip(declaredIds).toMap
-    val infos0 = CommitStore.harvest(store, stageRoot, dataDir) { (f, rel) =>
-      val (rows, stats) = footerStats(f, conf, fieldIds)
-      Some(IcebergAvro.DataFileInfo(new File(dataDir, rel).getAbsolutePath,
-        f.length(), rows, stats, partValuesOf(f)))
+    val infos0 = TaskWrite(store, clustered, dataDir,
+        partSpecs.map(_.derivedName)) { (f, conf) =>
+      Some(footerStats(f, conf, fieldIds))
+    }.map { w =>
+      IcebergAvro.DataFileInfo(new File(dataDir, w.rel).getAbsolutePath,
+        w.size, w.stats._1, w.stats._2, partValuesOf(w.rel))
     }
     // V3 row lineage (spec §Row Lineage): on a lineage-enabled table every
     // ADDED data file takes its first_row_id from the table clock —
@@ -896,7 +891,6 @@ object IcebergSink {
     // committed metadata — reclaim them before the retry re-stages
     commitMetadataVersion(table, store, newVersion - 1, meta, () => {
       reclaim(store, infos.map(_.absPath) :+ manifestPath.toString :+ listPath.toString)
-      CommitStore.deleteTree(stageRoot)
     })
   }
 
@@ -2705,23 +2699,17 @@ object IcebergSink {
     // (a branch would quietly publish the corruption via fastForward)
     val aligned = alignToStored(df, schema.fieldNames)
     SchemaGate.enforce(aligned.schema, schema)
-    val (dataStage, infos) = stageWrite(store, table, "branch-" + branch,
-      df.sparkSession)(aligned.toDF(schema.fieldNames.toIndexedSeq: _*).write)
+    val infos = stageWrite(store, table, "branch-" + branch,
+      aligned.toDF(schema.fieldNames.toIndexedSeq: _*))
     val added = infos.map(_.recordCount).sum
-    if (added == 0L) {
-      CommitStore.deleteTree(dataStage)
-      return meta.get("refs").get(branch).get("snapshot-id").asLong()
-    }
+    if (added == 0L) return meta.get("refs").get(branch).get("snapshot-id").asLong()
     val snapshotId = math.abs(new java.util.Random().nextLong())
     val emptySpec = """{"spec-id":0,"fields":[]}"""
     val (manifest, manLen) =
       writeAvroArtifact(table, store, s"manifest-${java.util.UUID.randomUUID()}.avro")(f =>
         IcebergAvro.writeManifest(f, infos, snapshotId,
           currentSchemaJson(meta)._2, emptySpec))
-    def reclaimAll(): Unit = {
-      reclaim(store, infos.map(_.absPath) :+ manifest.toString)
-      CommitStore.deleteTree(dataStage)
-    }
+    def reclaimAll(): Unit = reclaim(store, infos.map(_.absPath) :+ manifest.toString)
     // OCC retry parity with a main append (writeWithRetry): a benign
     // concurrent commit — a main append, a compaction, another branch —
     // must not kill the staging lane (a streaming WAP pipeline routes
@@ -3176,7 +3164,7 @@ object IcebergSink {
       val rep = matched.select(schema.fieldNames.map(c =>
         set.get(c).map(e => expr(e).cast(schema(c).dataType).as(c))
           .getOrElse(col(c))).toIndexedSeq: _*)
-      val (repStage, repInfos0) = stageWrite(store, table, "update", spark)(rep.write)
+      val repInfos0 = stageWrite(store, table, "update", rep)
       // an UPDATE's replacement rows are NEW rows (update = delete + insert)
       val repInfos = withFirstRowIds(meta, repInfos0)
       val (repManifest, repLen) = writeAvroArtifact(table, store,
@@ -3185,7 +3173,7 @@ object IcebergSink {
           currentSchemaJson(meta)._2, """{"spec-id":0,"fields":[]}"""))
       (IcebergAvro.manifestRow(repManifest.toFile.getAbsolutePath, repLen, seq,
         snapshotId, repInfos.size, repInfos.map(_.recordCount).sum),
-        repInfos, repStage, repManifest)
+        repInfos, repManifest)
     } catch { case e: Throwable =>
       // a failed replacement staging must not strand the already-published
       // Puffin shards + DV manifest (ADVICE r15)
@@ -3203,9 +3191,8 @@ object IcebergSink {
         // update's replacement files/manifest/staging (posRewrite's
         // contract; ADVICE r15)
         reclaimDvPlane()
-        replacement.foreach { case (_, repInfos, repStage, repManifest) =>
+        replacement.foreach { case (_, repInfos, repManifest) =>
           reclaim(store, repInfos.map(_.absPath) :+ repManifest.toString)
-          CommitStore.deleteTree(repStage)
         }
       },
       formatVersion = Some(3),
@@ -3443,18 +3430,17 @@ object IcebergSink {
     // a part file's partition values come from its _gf_gid=N directory —
     // -1 (an old-spec file whose pvals don't key the current spec) and the
     // unpartitioned path both stamp nulls, which every reader KEEPS
-    def partValuesOfPart(f: File): Seq[Any] =
+    def partValuesOfPart(rel: String): Seq[Any] =
       if (delPartFields.isEmpty) Nil
       else {
-        val gid = f.getParentFile.getName.stripPrefix("_gf_gid=").toInt
+        val gid = rel.split('/').head.stripPrefix("_gf_gid=").toInt
         if (gid >= 0 && gid < groupKeys.length)
           delPartFields.map(pf => groupKeys(gid).getOrElse(pf.name, null))
         else delPartFields.map(_ => null)
       }
-    val (stageRoot, infos) = stageWrite(store, table, "delete", spark,
-      partValuesOfPart)(
-      if (delPartFields.isEmpty) dels.write else dels.write.partitionBy("_gf_gid"))
-    if (infos.isEmpty) { CommitStore.deleteTree(stageRoot); return 0L }
+    val infos = stageWrite(store, table, "delete", dels,
+      if (delPartFields.isEmpty) Nil else Seq("_gf_gid"), partValuesOfPart)
+    if (infos.isEmpty) return 0L
     val deletedRows = infos.map(_.recordCount).sum
     val snapshotId = math.abs(new java.util.Random().nextLong())
     val seq = meta.get("last-sequence-number").asLong() + 1
@@ -3480,27 +3466,24 @@ object IcebergSink {
     // an UPDATE additionally stages the transformed replacements as new
     // data files in the SAME snapshot — SET expressions evaluate against
     // the PRE-update row (matched is persisted; one merged-view scan)
-    def reclaimDeletePlane(): Unit = {
+    def reclaimDeletePlane(): Unit =
       reclaim(store, infos.map(_.absPath) :+ manifestPath.toString)
-      CommitStore.deleteTree(stageRoot)
-    }
     val replacement = try setOpt.map { set =>
       val schema = snap.schema
       val rep = matched.select(schema.fieldNames.map(c =>
         set.get(c).map(e => expr(e).cast(schema(c).dataType).as(c))
           .getOrElse(col(c))).toIndexedSeq: _*)
-      val (repStage, repInfos0) = stageWrite(store, table, "update", spark)(rep.write)
-      val repInfos = withFirstRowIds(meta, repInfos0)
+      val repInfos = withFirstRowIds(meta, stageWrite(store, table, "update", rep))
       val (repManifest, repLen) = writeAvroArtifact(table, store,
         s"manifest-${java.util.UUID.randomUUID()}.avro")(f =>
         IcebergAvro.writeManifest(f, repInfos, snapshotId, schemaJson,
           """{"spec-id":0,"fields":[]}"""))
-      (repInfos, repStage,
+      (repInfos,
         IcebergAvro.manifestRow(repManifest.toFile.getAbsolutePath, repLen, seq,
           snapshotId, repInfos.size, repInfos.map(_.recordCount).sum),
         repManifest)
     } catch { case e: Throwable => reclaimDeletePlane(); throw e }
-    val rows = Seq(delRow) ++ replacement.map(_._3)
+    val rows = Seq(delRow) ++ replacement.map(_._2)
     commitSnapshot(table, store, meta, hint, snapshotId, seq, schemaId,
       rows, if (setOpt.isDefined) "overwrite" else "delete",
       Map("added-position-delete-files" -> infos.size.toString,
@@ -3509,9 +3492,8 @@ object IcebergSink {
           "replaced-records" -> r._1.map(_.recordCount).sum.toString),
       reclaimOnConflict = () => {
         reclaimDeletePlane()
-        replacement.foreach { case (repInfos, repStage, _, repManifest) =>
+        replacement.foreach { case (repInfos, _, repManifest) =>
           reclaim(store, repInfos.map(_.absPath) :+ repManifest.toString)
-          CommitStore.deleteTree(repStage)
         }
       }, branch = branch,
       assignedRows =
@@ -3566,46 +3548,27 @@ object IcebergSink {
         lit(s"upsert source must be unique on (${keys.mkString(", ")})")))
         .otherwise(lit(true)))
       .drop(dupN)
-    val (dataDir, dataStage) = newStage(store, table, "upsert")
-    val (delDir, delStage) = newStage(store, table, "upsert-del")
-    def dropStages(): Unit = {
-      CommitStore.deleteTree(dataStage); CommitStore.deleteTree(delStage)
-    }
-    try {
-      guarded.write
-        .option("compression", "snappy")
-        .option("maxRecordsPerFile", DeltaSink.MaxRecordsPerFile)
-        .parquet(dataStage.getPath)
-      // equality-delete rows = the source keys (unique by the guard above,
-      // re-read from the staged files so the guarded plan runs ONCE),
-      // stamped with the table's field ids per the spec
-      val keyMeta = keys.zip(eqIds).map { case (k, id) =>
-        k -> new org.apache.spark.sql.types.MetadataBuilder()
-          .putLong("parquet.field.id", id.toLong).build()
-      }.toMap
-      // written with the same per-file discipline as data files (NOT
-      // coalesce(1)): a CDC micro-batch still lands one small file, while
-      // a giant backfill upsert fans its key rows across tasks instead of
-      // funneling every key through one. The read side union-reads all
-      // delete files of a snapshot, so file count is free.
-      spark.read.schema(StructType(schema.fields.filter(f => keys.contains(f.name))))
-        .parquet(dataStage.getPath)
-        .select(keys.map(k => col(k).as(k, keyMeta(k))): _*)
-        .write.option("compression", "snappy")
-        .option("maxRecordsPerFile", DeltaSink.MaxRecordsPerFile)
-        .parquet(delStage.getPath)
-    } catch { case e: Throwable => dropStages(); throw e }
-    val conf = spark.sessionState.newHadoopConf()
-    val dataInfos = withFirstRowIds(meta,
-      try stagedInfos(store, dataStage, dataDir, conf)
-      catch { case e: Throwable => dropStages(); throw e })
-    val delInfos =
-      try stagedInfos(store, delStage, delDir, conf)
-      catch { case e: Throwable =>
-        reclaim(store, dataInfos.map(_.absPath)); dropStages(); throw e
-      }
+    val dataInfos = withFirstRowIds(meta, stageWrite(store, table, "upsert", guarded))
     val upserted = dataInfos.map(_.recordCount).sum
-    if (upserted == 0L) { dropStages(); return 0L }
+    if (upserted == 0L) return 0L
+    // equality-delete rows = the source keys (unique by the guard above,
+    // re-read from the written files so the guarded plan runs ONCE),
+    // stamped with the table's field ids per the spec
+    val keyMeta = keys.zip(eqIds).map { case (k, id) =>
+      k -> new org.apache.spark.sql.types.MetadataBuilder()
+        .putLong("parquet.field.id", id.toLong).build()
+    }.toMap
+    // written with the same per-file discipline as data files (NOT
+    // coalesce(1)): a CDC micro-batch still lands one small file, while
+    // a giant backfill upsert fans its key rows across tasks instead of
+    // funneling every key through one. The read side union-reads all
+    // delete files of a snapshot, so file count is free.
+    val delInfos =
+      try stageWrite(store, table, "upsert-del",
+        spark.read.schema(StructType(schema.fields.filter(f => keys.contains(f.name))))
+          .parquet(new File(dataInfos.head.absPath).getParent)
+          .select(keys.map(k => col(k).as(k, keyMeta(k))): _*))
+      catch { case e: Throwable => reclaim(store, dataInfos.map(_.absPath)); throw e }
     val snapshotId = math.abs(new java.util.Random().nextLong())
     val seq = meta.get("last-sequence-number").asLong() + 1
     val (schemaId, schemaJson) = currentSchemaJson(meta)
@@ -3630,52 +3593,30 @@ object IcebergSink {
       reclaimOnConflict = () => {
         reclaim(store, (dataInfos ++ delInfos).map(_.absPath) :+
           dataManifest.toString :+ delManifest.toString)
-        dropStages()
       },
       assignedRows = if (meta.has("next-row-id")) upserted else 0L)
     upserted
   }
 
-  /** A fresh table dir `data/<tag>-<uuid>` for one write's files, and
-    * where the store stages them (the dir itself on a local store).
-    */
-  private def newStage(store: CommitStore, table: String, tag: String): (File, File) = {
-    val dir = new File(s"$table/data/$tag-${java.util.UUID.randomUUID()}")
-    (dir, store.stagingFor(dir))
-  }
+  /** A fresh table dir `data/<tag>-<uuid>` for one write's files. */
+  private def newDataDir(table: String, tag: String): File =
+    new File(s"$table/data/$tag-${java.util.UUID.randomUUID()}")
 
-  /** Harvests the part files staged at `stage` into the table dir `dir`
-    * ([[CommitStore.harvest]]): each non-empty one is published with its
-    * DataFileInfo at its table path; zero-row parts are deleted, since
-    * they would never enter a manifest (expiry only reclaims
-    * manifest-referenced paths).
-    */
-  private def stagedInfos(store: CommitStore, stage: File, dir: File,
-      conf: org.apache.hadoop.conf.Configuration,
-      partValuesOf: File => Seq[Any] = _ => Nil): Seq[IcebergAvro.DataFileInfo] =
-    CommitStore.harvest(store, stage, dir) { (f, rel) =>
-      val (rows, _) = footerStats(f, conf, Map.empty)
-      if (rows == 0L) None
-      else Some(IcebergAvro.DataFileInfo(new File(dir, rel).getAbsolutePath,
-        f.length(), rows, partitionValues = partValuesOf(f)))
-    }
-
-  /** One Spark parquet write into a fresh stage ([[newStage]]),
-    * harvested by [[stagedInfos]]; a failed write leaves nothing behind.
-    * Returns the stage — a lost commit race deletes it — and the
-    * published files' infos.
+  /** One Spark parquet write of `df` into a fresh [[newDataDir]] through
+    * [[TaskWrite]]: each task publishes its non-empty files with their
+    * row counts; zero-row parts are deleted in the task, since they would
+    * never enter a manifest (expiry only reclaims manifest-referenced
+    * paths). `partValuesOf` maps a file's dir-relative path to its
+    * partition values.
     */
   private def stageWrite(store: CommitStore, table: String, tag: String,
-      spark: SparkSession, partValuesOf: File => Seq[Any] = _ => Nil)(
-      writer: org.apache.spark.sql.DataFrameWriter[Row])
-      : (File, Seq[IcebergAvro.DataFileInfo]) = {
-    val (dir, stage) = newStage(store, table, tag)
-    try writer.option("compression", "snappy")
-      .option("maxRecordsPerFile", DeltaSink.MaxRecordsPerFile)
-      .parquet(stage.getPath)
-    catch { case e: Throwable => CommitStore.deleteTree(stage); throw e }
-    (stage, stagedInfos(store, stage, dir, spark.sessionState.newHadoopConf(),
-      partValuesOf))
+      df: DataFrame, partitionBy: Seq[String] = Nil,
+      partValuesOf: String => Seq[Any] = _ => Nil): Seq[IcebergAvro.DataFileInfo] = {
+    val dir = newDataDir(table, tag)
+    TaskWrite(store, df, dir, partitionBy) { (f, conf) =>
+      Some(ParquetFooter.read(f, conf)._1).filter(_ > 0L)
+    }.map(w => IcebergAvro.DataFileInfo(new File(dir, w.rel).getAbsolutePath,
+      w.size, w.stats, partitionValues = partValuesOf(w.rel)))
   }
 
   /** Row lineage (spec §Row Lineage): on a lineage-enabled table, ADDED
@@ -3721,10 +3662,9 @@ object IcebergSink {
     // field ids per the spec (readers resolve equality_ids against them);
     // a failing group reclaims the groups already published
     val staged = scala.collection.mutable.ArrayBuffer[
-      (Seq[Int], File, Seq[IcebergAvro.DataFileInfo])]()
-    def reclaimStaged(): Unit = staged.foreach { case (_, stage, infos) =>
-      reclaim(store, infos.map(_.absPath)); CommitStore.deleteTree(stage)
-    }
+      (Seq[Int], Seq[IcebergAvro.DataFileInfo])]()
+    def reclaimStaged(): Unit =
+      staged.foreach { case (_, infos) => reclaim(store, infos.map(_.absPath)) }
     try groups.foreach { case (keys, keyCols) =>
       keyCols.foreach(k => require(schema.fieldNames.contains(k),
         s"no such key column: $k"))
@@ -3734,19 +3674,18 @@ object IcebergSink {
         k -> new org.apache.spark.sql.types.MetadataBuilder()
           .putLong("parquet.field.id", id.toLong).build()
       }.toMap
-      val (stage, infos) = stageWrite(store, table, "delete-keys", spark)(
+      staged += (eqIds -> stageWrite(store, table, "delete-keys",
         keys.select(keyCols.map(k => col(k).cast(schema(k).dataType)
-          .as(k, keyMeta(k))): _*).distinct().write)
-      staged += ((eqIds, stage, infos))
+          .as(k, keyMeta(k))): _*).distinct()))
     } catch { case e: Throwable => reclaimStaged(); throw e }
-    val total = staged.flatMap(_._3).map(_.recordCount).sum
+    val total = staged.flatMap(_._2).map(_.recordCount).sum
     if (total == 0L) { reclaimStaged(); return 0L }
     val snapshotId = math.abs(new java.util.Random().nextLong())
     val seq = meta.get("last-sequence-number").asLong() + 1
     val (schemaId, schemaJson) = currentSchemaJson(meta)
     val emptySpec = """{"spec-id":0,"fields":[]}"""
-    val manifests = staged.toSeq.filter(_._3.nonEmpty).map {
-      case (eqIds, _, infos) =>
+    val manifests = staged.toSeq.filter(_._2.nonEmpty).map {
+      case (eqIds, infos) =>
         val (path, len) = writeAvroArtifact(table, store,
           s"manifest-${java.util.UUID.randomUUID()}.avro")(f =>
           IcebergAvro.writeManifest(f, infos, snapshotId, schemaJson, emptySpec,
@@ -3758,7 +3697,7 @@ object IcebergSink {
       manifests.map(_._2), "delete",
       Map("deleted-key-rows" -> total.toString,
         "added-equality-delete-files" ->
-          staged.map(_._3.size).sum.toString),
+          staged.map(_._2.size).sum.toString),
       reclaimOnConflict = () => {
         reclaimStaged()
         reclaim(store, manifests.map(_._1.toString))

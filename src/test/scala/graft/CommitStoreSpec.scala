@@ -1057,4 +1057,181 @@ class CommitStoreSpec extends AnyFunSuite {
     assert(delta == localDelta)
     assert(ice == localIce)
   }
+
+  // ---- write tasks describe and publish their own data files ----
+
+  /** Every `.parquet` object under `dir` (a Delta log's checkpoints aside),
+    * as paths relative to `dir`.
+    */
+  private def parquetUnder(dir: String): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    val r = Paths.get(dir)
+    val walk = Files.walk(r)
+    try walk.iterator().asScala
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".parquet"))
+      .map(r.relativize(_).toString).filterNot(_.startsWith("_delta_log")).toSet
+    finally walk.close()
+  }
+
+  /** Every data path a Delta log adds or removes, table-relative. */
+  private def deltaLogPaths(table: String): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    val action = """"(?:add|remove)":\{"path":"([^"]+)"""".r
+    Files.list(Paths.get(table, "_delta_log")).iterator().asScala
+      .filter(_.toString.endsWith(".json"))
+      .flatMap(f => action.findAllMatchIn(Files.readString(f)).map(_.group(1))).toSet
+  }
+
+  /** Every live data file of an Iceberg table, relative to the table. */
+  private def icebergDataPaths(table: String): Set[String] =
+    IcebergSink.read(spark, table).inputFiles.map(u =>
+      Paths.get(table).relativize(Paths.get(new java.net.URI(u))).toString).toSet
+
+  test("data bytes never cross the driver: tasks publish every data file") {
+    val s = spark
+    import s.implicits._
+    val root = Paths.get(tmp())
+    val server = new HttpObjectStore.Server(root)
+    try {
+      val client = new HttpObjectStore.Client(server.endpoint, root)
+      // forwards everything, the tasks' IO included, but refuses a data
+      // file published from the driver
+      val driverPuts = new java.util.concurrent.atomic.AtomicInteger(0)
+      val store = new graft.sinks.ObjectStore {
+        override def putIfAbsent(t: java.nio.file.Path, b: Array[Byte]): Unit =
+          client.putIfAbsent(t, b)
+        override def taskIO = client.taskIO
+        override def putObject(t: java.nio.file.Path, b: Array[Byte]): Unit = {
+          if (t.toString.endsWith(".parquet"))
+            throw new AssertionError(s"driver-side data publish of $t")
+          driverPuts.incrementAndGet()
+          client.putObject(t, b)
+        }
+        override def readObject(t: java.nio.file.Path) = client.readObject(t)
+        override def deleteObject(t: java.nio.file.Path): Unit = client.deleteObject(t)
+        override def listPrefix(p: java.nio.file.Path) = client.listPrefix(p)
+        override def listPrefixMeta(p: java.nio.file.Path) = client.listPrefixMeta(p)
+      }
+      val base = (1L to 40L).map(i => (i, s"n$i", i * 0.5)).toDF("id", "name", "v")
+        .repartition(3)
+      val more = (41L to 50L).map(i => (i, s"n$i", i * 0.5)).toDF("id", "name", "v")
+      def census(df: org.apache.spark.sql.DataFrame) =
+        df.agg(org.apache.spark.sql.functions.count("*"),
+          org.apache.spark.sql.functions.sum("id")).head().toSeq
+      val delta = root.resolve("d").toString
+      assert(DeltaSink.write(base, delta, store = store))
+      assert(DeltaSink.append(more, delta, store = store) == 2L)
+      assert(census(DeltaSink.read(spark, delta, store = store)) == Seq(50L, 1275L))
+      val deltaFiles = parquetUnder(delta)
+      assert(deltaFiles == deltaLogPaths(delta) && deltaFiles.size >= 4)
+      assert(server.multipartCompletions.get() == deltaFiles.size + driverPuts.get())
+      val mpBefore = server.multipartCompletions.get()
+      val putsBefore = driverPuts.get()
+      val ice = root.resolve("i").toString
+      IcebergSink.write(base, ice, IcebergSink.CreateExclusive, store = store)
+      IcebergSink.write(more, ice, IcebergSink.Append, store = store)
+      assert(census(IcebergSink.read(spark, ice, store = store)) == Seq(50L, 1275L))
+      val iceFiles = parquetUnder(ice)
+      assert(iceFiles == icebergDataPaths(ice) && iceFiles.size >= 4)
+      assert(server.multipartCompletions.get() - mpBefore ==
+        iceFiles.size + driverPuts.get() - putsBefore)
+      assert(server.stagedUploads.isEmpty)
+    } finally server.close()
+  }
+
+  test("one failed task among several: the write aborts whole, no task's file survives") {
+    val s = spark
+    import s.implicits._
+    val root = Paths.get(tmp())
+    val delta = root.resolve("d").toString
+    val ice = root.resolve("i").toString
+    val mk = new HttpObjectStore.Server(root)
+    try {
+      val c = new HttpObjectStore.Client(mk.endpoint, root)
+      assert(DeltaSink.write(sampleDf, delta, store = c))
+      IcebergSink.write(sampleDf, ice, IcebergSink.CreateExclusive, store = c)
+    } finally mk.close()
+    val four = (10L to 49L).map(i => (i, s"n$i", i * 0.5)).toDF("id", "name", "v")
+      .repartition(4)
+    def failingServer() = {
+      // only the first data file any task publishes fails; the other
+      // three tasks' uploads complete
+      val first = new java.util.concurrent.atomic.AtomicReference[String]()
+      new HttpObjectStore.Server(root, partFailure = (key, _) =>
+        key.endsWith(".parquet") && (first.compareAndSet(null, key) || first.get == key))
+    }
+    val deltaBefore = parquetUnder(delta)
+    val server = failingServer()
+    try {
+      val client = new HttpObjectStore.Client(server.endpoint, root)
+      intercept[java.io.IOException] {
+        DeltaSink.append(four, delta, store = client)
+      }
+      assert(server.multipartCompletions.get() == 3, "the other tasks did publish")
+      assert(server.stagedUploads.isEmpty)
+      assert(DeltaSink.latestVersion(delta) == 1L)
+      assert(DeltaSink.read(spark, delta).count() == 3)
+      assert(parquetUnder(delta) == deltaBefore && deltaBefore == deltaLogPaths(delta))
+    } finally server.close()
+    val iceBefore = parquetUnder(ice)
+    val snapsBefore = IcebergSink.snapshots(ice).size
+    val server2 = failingServer()
+    try {
+      val client = new HttpObjectStore.Client(server2.endpoint, root)
+      intercept[java.io.IOException] {
+        IcebergSink.write(four, ice, IcebergSink.Append, store = client)
+      }
+      assert(server2.multipartCompletions.get() == 3, "the other tasks did publish")
+      assert(server2.stagedUploads.isEmpty)
+      assert(IcebergSink.snapshots(ice).size == snapsBefore)
+      assert(IcebergSink.read(spark, ice).count() == 3)
+      assert(parquetUnder(ice) == iceBefore && iceBefore == icebergDataPaths(ice))
+    } finally server2.close()
+  }
+
+  test("local table dirs hold exactly the referenced data files: no .crc, _SUCCESS or _temporary") {
+    val s = spark
+    import s.implicits._
+    def clean(table: String): Unit = {
+      import scala.jdk.CollectionConverters._
+      val walk = Files.walk(Paths.get(table))
+      val names = try walk.iterator().asScala.map(_.toString).toVector finally walk.close()
+      assert(!names.exists(n => n.endsWith(".crc") || n.endsWith("_SUCCESS") ||
+        n.contains("_temporary")), names.mkString("\n"))
+    }
+    val df = (1L to 30L).map(i => (i, s"n$i", i * 0.5)).toDF("id", "name", "v")
+      .repartition(3)
+    val delta = tmp()
+    assert(DeltaSink.write(df, delta))
+    DeltaSink.append(df.limit(5), delta)
+    DeltaSink.compact(spark, delta)
+    clean(delta)
+    assert(parquetUnder(delta) == deltaLogPaths(delta))
+    assert(DeltaSink.read(spark, delta).count() == 35)
+    val ice = tmp()
+    IcebergSink.write(df, ice, IcebergSink.CreateExclusive)
+    IcebergSink.write(df.limit(5), ice, IcebergSink.Append)
+    clean(ice)
+    assert(parquetUnder(ice) == icebergDataPaths(ice))
+    // a partitioned write with a null partition value lands in the marker
+    // dir and records a null partition value, as the Hive layout does
+    val langs = Seq((1L, "en"), (2L, "de"), (3L, null), (4L, "en")).toDF("id", "lang")
+    val pd = tmp()
+    assert(DeltaSink.write(langs, pd, partitionBy = Seq("lang")))
+    clean(pd)
+    assert(parquetUnder(pd) == deltaLogPaths(pd))
+    val adds = Files.readAllLines(Paths.get(pd, "_delta_log", "00000000000000000001.json"))
+      .toArray.map(_.toString).filter(_.contains("\"add\""))
+    assert(adds.map(a => """"partitionValues":\{[^}]*\}""".r.findFirstIn(a).get).toSet ==
+      Set(""""partitionValues":{"lang":"en"}""", """"partitionValues":{"lang":"de"}""",
+        """"partitionValues":{"lang":null}"""))
+    assert(adds.exists(_.contains("lang=__HIVE_DEFAULT_PARTITION__/")))
+    assert(DeltaSink.read(spark, pd).filter($"lang".isNull).count() == 1)
+    val pi = tmp()
+    IcebergSink.write(langs, pi, IcebergSink.CreateExclusive, partitionBy = Seq("lang"))
+    clean(pi)
+    assert(parquetUnder(pi) == icebergDataPaths(pi))
+    assert(parquetUnder(pi).exists(_.contains("lang=__HIVE_DEFAULT_PARTITION__/")))
+    assert(IcebergSink.read(spark, pi).filter($"lang".isNull).count() == 1)
+  }
 }
