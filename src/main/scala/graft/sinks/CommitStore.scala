@@ -12,8 +12,10 @@ import scala.jdk.CollectionConverters._
   *
   * The commit primitive is put-if-absent of a fully-formed metadata
   * object at a version-numbered key. Whoever creates the key owns that
-  * version; a loser sees [[FileAlreadyExistsException]], re-reads table
-  * state and retries at the next version. This is the primitive the
+  * version; a loser sees [[FileAlreadyExistsException]]. Every sink commit
+  * makes this put through [[Txn.claim]], whose transaction decides what
+  * follows — re-read and retry at the next version, or fail the verb — and
+  * which published artifacts to reclaim. This is the primitive the
   * reference negotiates with its object store: `copy_if_not_exists` /
   * conditional put for the Delta commit (its
   * `src/delta_destination.rs:377-402`) and `write_exclusive` for the
@@ -40,7 +42,8 @@ trait CommitStore {
   /** Atomically creates `target` with `bytes` iff no object exists there.
     *
     * @throws FileAlreadyExistsException if `target` already exists — the
-    *         OCC conflict signal the sinks' retry loops catch.
+    *         OCC conflict signal [[Txn]] turns into a retry or the verb's
+    *         conflict.
     */
   def putIfAbsent(target: Path, bytes: Array[Byte]): Unit
 

@@ -375,20 +375,24 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     // pipeline (delta_destination.rs:70-229: upload data files, then
     // conditionally put the commit). The refuse-unless-overwrite decision
     // was already taken above, and the target has been emptied by then.
-    val adds = writeStaged(store, dir, clusterByPartitions(df, partitionBy),
-      partitionBy, maxRecordsPerFile, java.util.UUID.randomUUID().toString,
-      TaskWrite.sparkNames)
-    Files.createDirectories(logDir(table))
+    // The create claims v0 then puts v1: a lost v0 reclaims the files, a
+    // failed v1 leaves an empty table
+    Txn(store) { txn =>
+      val adds = writeStaged(txn, dir, clusterByPartitions(df, partitionBy),
+        partitionBy, maxRecordsPerFile, java.util.UUID.randomUUID().toString,
+        TaskWrite.sparkNames)
+      Files.createDirectories(logDir(table))
 
-    val now = System.currentTimeMillis()
-    // Reference semantics: sink schemas are nullable-by-default (SURVEY.md
-    // §1.2; pg_arrow_source.rs:233 sets nullable=true unconditionally), and
-    // Spark file scans surface nullable columns anyway.
-    val schemaString = StructType(df.schema.fields.map(_.copy(nullable = true))).json
-    val commit0 = Seq(protocolJsonFor(df.schema),
-      metaDataJson(java.util.UUID.randomUUID().toString, schemaString, partitionBy, now))
-    commitAtomic(store, versionFile(table, 0), commit0)
-    commitAtomic(store, versionFile(table, 1), adds.map(a => addJson(a)))
+      val now = System.currentTimeMillis()
+      // Reference semantics: sink schemas are nullable-by-default (SURVEY.md
+      // §1.2; pg_arrow_source.rs:233 sets nullable=true unconditionally), and
+      // Spark file scans surface nullable columns anyway.
+      val schemaString = StructType(df.schema.fields.map(_.copy(nullable = true))).json
+      val commit0 = Seq(protocolJsonFor(df.schema),
+        metaDataJson(java.util.UUID.randomUUID().toString, schemaString, partitionBy, now))
+      claimVersion(txn, table, 0, commit0)
+      commitAtomic(store, versionFile(table, 1), adds.map(a => addJson(a)))
+    }
     true
   }
 
@@ -570,10 +574,10 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     * can never claim each other's files, the same unique-file-name
     * discipline real Delta writers use.
     */
-  def append(df: DataFrame, table: String, retries: Int = 3,
+  def append(df: DataFrame, table: String,
       store: CommitStore = CommitStore.Local,
       mergeSchema: Boolean = false): Long =
-    append(df, table, retries, None, store, mergeSchema)
+    append(df, table, None, store, mergeSchema)
 
   /** Exactly-once append for streaming writers: the commit carries a
     * `txn` action recording (appId, txnVersion), and a batch whose
@@ -586,9 +590,9 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     */
   def appendExactlyOnce(df: DataFrame, table: String, appId: String,
       txnVersion: Long, store: CommitStore = CommitStore.Local): Long =
-    append(df, table, 3, Some((appId, txnVersion)), store, mergeSchema = false)
+    append(df, table, Some((appId, txnVersion)), store, mergeSchema = false)
 
-  private def append(df0: DataFrame, table: String, retries: Int,
+  private def append(df0: DataFrame, table: String,
       txn0: Option[(String, Long)], store: CommitStore,
       mergeSchema: Boolean): Long = {
     val dir = new File(table)
@@ -683,110 +687,101 @@ object DeltaSink extends org.apache.spark.internal.Logging {
       if (!mergeSchema) { SchemaGate.enforce(df.schema, state.schema); None }
       else evolveAgainst(state.schema)
     val txn = java.util.UUID.randomUUID().toString
-    // stage under the EVOLVED mapping: an added column's fresh physical
-    // name must reach the file, not its logical name
-    val adds = writeStaged(store, dir, toPhysical(
-        clusterByPartitions(withConstraintCheck(df, state.configuration),
-          state.partitionColumns),
-        evolvedSchema.getOrElse(state.schema)),
-      state.partitionColumns, MaxRecordsPerFile, txn, txnNames(".snappy.parquet"))
     val txnLine = txn0.map { case (appId, v) =>
       s"""{"txn":{"appId":${esc(appId)},"version":$v}}"""
     }
-    // any abort path removes the already-published data files — they are
-    // not in the log, so leaving them would only waste space until vacuum
-    def abort(): Unit = reclaim(store, table, adds.map(_.path))
-    var attempt = 0
-    // Version through which the txn watermark has been validated. A replay
-    // of THIS batch (two speculative executions of one foreachBatch) can
-    // commit at any version number without ever colliding with us, so the
-    // watermark must be re-checked against every version that appeared
-    // since the last check — before EVERY commit attempt, not only after a
-    // collision. CREATE_NEW succeeding at `next` then proves no commit
-    // (and so no competing replay) landed between the check and ours:
-    // writers only ever claim latestVersion+1, so an intervening commit
-    // would have claimed `next` first.
-    var checkedThrough = state.version
-    // Version floor proven by conditional-put failures: a putIfAbsent that
-    // throws AlreadyExists is AUTHORITATIVE evidence the version exists even
-    // when the store's LISTING hasn't surfaced it yet (an eventually-
-    // consistent object store; see CommitStore.DelayedVisibilityLocal).
-    // Without this floor a writer racing a lagging listing re-claims the
-    // same version until its retries burn out instead of advancing.
-    var minNext = state.version + 1
-    while (true) {
-      val latest = latestVersion(table)
-      txn0.foreach { case (appId, v) =>
-        if (latest > checkedThrough) {
-          val st = replay(df.sparkSession, table, None)
-          checkedThrough = st.version
-          if (st.txns.get(appId).exists(_ >= v)) { abort(); return -1L }
-        }
-      }
-      val next = math.max(latest + 1, minNext)
-      // a schema-evolving commit must not clobber a concurrent evolution:
-      // if ANY commit landed after our snapshot, re-replay and require the
-      // schema we evolved from to be unchanged (delta-spark aborts with
-      // MetadataChangedException on concurrent metadata change — same
-      // contract here; the caller re-runs the append against fresh state)
-      if (evolvedSchema.isDefined && latest > state.version) {
-        val st = replay(df.sparkSession, table, None)
-        if (st.schema != state.schema) {
-          abort()
-          throw new java.util.ConcurrentModificationException(
-            "table schema changed concurrently during a mergeSchema append; re-run the append")
-        }
-      }
-      try {
-        // evolved metaData (if any) rides in the SAME commit as the adds:
-        // either both land or neither — a reader never sees files whose
-        // columns the declared schema doesn't know about. createdTime is
-        // the TABLE's creation time — preserved like the id.
-        val metaLine = evolvedSchema.map(sch => metaDataJson(state.metaId,
-          sch.json, state.partitionColumns,
-          // external logs may omit createdTime (replays as 0) — don't
-          // propagate a zero birth-time into the evolved action
-          if (state.createdTime != 0L) state.createdTime
-          else System.currentTimeMillis(),
-          // a metaData action REPLACES configuration wholesale, so every
-          // re-emission must carry the FULL replayed map (CHECK
-          // constraints would otherwise silently vanish) plus the
-          // mapping mode/maxColumnId refresh (the added column may have
-          // raised the high-water id)
-          state.configuration ++ mappingConfig(sch)))
-        // ROW TRACKING: fresh ids assign above the CURRENT high-water
-        // mark — re-read whenever anything landed since our snapshot, so
-        // two racing appends can never mint overlapping ids (the loser's
-        // conditional put fails and it re-bases on the next attempt)
-        val (addsFinal, domainLine) =
-          if (!state.configuration.get(RowTrackingConf).contains("true"))
-            (adds, None)
-          else {
-            val domainsNow =
-              if (latest > state.version) replay(df.sparkSession, table, None).domains
-              else state.domains
-            val hwm = rowIdHighWaterMark(domainsNow).getOrElse(-1L)
-            val (w, newHwm) = assignRowIds(adds, hwm, next)
-            (w, Some(domainJson(RowTrackingDomain,
-              s"""{"rowIdHighWaterMark":$newHwm}""")))
+    Txn(store, Txn.Retries) { t =>
+      // stage under the EVOLVED mapping: an added column's fresh physical
+      // name must reach the file, not its logical name
+      val adds = writeStaged(t, dir, toPhysical(
+          clusterByPartitions(withConstraintCheck(df, state.configuration),
+            state.partitionColumns),
+          evolvedSchema.getOrElse(state.schema)),
+        state.partitionColumns, MaxRecordsPerFile, txn, txnNames(".snappy.parquet"))
+      // Version through which the txn watermark has been validated. A replay
+      // of THIS batch (two speculative executions of one foreachBatch) can
+      // commit at any version number without ever colliding with us, so the
+      // watermark must be re-checked against every version that appeared
+      // since the last check — before EVERY commit attempt, not only after a
+      // collision. CREATE_NEW succeeding at `next` then proves no commit
+      // (and so no competing replay) landed between the check and ours:
+      // writers only ever claim latestVersion+1, so an intervening commit
+      // would have claimed `next` first.
+      var checkedThrough = state.version
+      // Version floor proven by conditional-put failures: a putIfAbsent that
+      // throws AlreadyExists is AUTHORITATIVE evidence the version exists even
+      // when the store's LISTING hasn't surfaced it yet (an eventually-
+      // consistent object store; see CommitStore.DelayedVisibilityLocal).
+      // Without this floor a writer racing a lagging listing re-claims the
+      // same version until its retries burn out instead of advancing.
+      var minNext = state.version + 1
+      t.attempt { _ =>
+        val latest = latestVersion(table)
+        val next = math.max(latest + 1, minNext)
+        minNext = next + 1 // a lost claim at `next` proves `next` exists
+        val replayed = txn0.exists { case (appId, v) =>
+          latest > checkedThrough && {
+            val st = replay(df.sparkSession, table, None)
+            checkedThrough = st.version
+            st.txns.get(appId).exists(_ >= v)
           }
-        commitAtomic(store, versionFile(table, next),
-          metaLine.toSeq ++ txnLine.toSeq ++ addsFinal.map(a => addJson(a)) ++
-            domainLine.toSeq)
-        // The append is committed at this point: an auto-checkpoint failure
-        // (IO error) must not surface as an append failure — the caller
-        // would retry and double-write the batch. Best-effort only.
-        if (next % CheckpointInterval == 0)
-          scala.util.Try(checkpoint(df.sparkSession, table, store))
-        return next
-      } catch {
-        case e: java.nio.file.FileAlreadyExistsException =>
-          if (attempt >= retries) { abort(); throw e }
-          attempt += 1 // another writer claimed this version; re-read and retry
-          minNext = next + 1
+        }
+        // a batch already in the table ends the transaction uncommitted
+        if (replayed) -1L
+        else {
+          // a schema-evolving commit must not clobber a concurrent evolution:
+          // if ANY commit landed after our snapshot, re-replay and require the
+          // schema we evolved from to be unchanged (delta-spark aborts with
+          // MetadataChangedException on concurrent metadata change — same
+          // contract here; the caller re-runs the append against fresh state)
+          if (evolvedSchema.isDefined && latest > state.version &&
+              replay(df.sparkSession, table, None).schema != state.schema)
+            throw new java.util.ConcurrentModificationException(
+              "table schema changed concurrently during a mergeSchema append; re-run the append")
+          // evolved metaData (if any) rides in the SAME commit as the adds:
+          // either both land or neither — a reader never sees files whose
+          // columns the declared schema doesn't know about. createdTime is
+          // the TABLE's creation time — preserved like the id.
+          val metaLine = evolvedSchema.map(sch => metaDataJson(state.metaId,
+            sch.json, state.partitionColumns,
+            // external logs may omit createdTime (replays as 0) — don't
+            // propagate a zero birth-time into the evolved action
+            if (state.createdTime != 0L) state.createdTime
+            else System.currentTimeMillis(),
+            // a metaData action REPLACES configuration wholesale, so every
+            // re-emission must carry the FULL replayed map (CHECK
+            // constraints would otherwise silently vanish) plus the
+            // mapping mode/maxColumnId refresh (the added column may have
+            // raised the high-water id)
+            state.configuration ++ mappingConfig(sch)))
+          // ROW TRACKING: fresh ids assign above the CURRENT high-water
+          // mark — re-read whenever anything landed since our snapshot, so
+          // two racing appends can never mint overlapping ids (the loser's
+          // conditional put fails and it re-bases on the next attempt)
+          val (addsFinal, domainLine) =
+            if (!state.configuration.get(RowTrackingConf).contains("true"))
+              (adds, None)
+            else {
+              val domainsNow =
+                if (latest > state.version) replay(df.sparkSession, table, None).domains
+                else state.domains
+              val hwm = rowIdHighWaterMark(domainsNow).getOrElse(-1L)
+              val (w, newHwm) = assignRowIds(adds, hwm, next)
+              (w, Some(domainJson(RowTrackingDomain,
+                s"""{"rowIdHighWaterMark":$newHwm}""")))
+            }
+          claimVersion(t, table, next,
+            metaLine.toSeq ++ txnLine.toSeq ++ addsFinal.map(a => addJson(a)) ++
+              domainLine.toSeq)
+          // The append is committed at this point: an auto-checkpoint failure
+          // (IO error) must not surface as an append failure — the caller
+          // would retry and double-write the batch. Best-effort only.
+          if (next % CheckpointInterval == 0)
+            scala.util.Try(checkpoint(df.sparkSession, table, store))
+          next
+        }
       }
     }
-    -1 // unreachable
   }
 
   /** RESTORE — the undo verb (Delta RESTORE semantics): commits a NEW
@@ -805,10 +800,9 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     * current state already equals the target.
     */
   def restore(spark: SparkSession, table: String, asOfVersion: Long,
-      retries: Int = 3, store: CommitStore = CommitStore.Local): (Int, Int) = {
+      store: CommitStore = CommitStore.Local): (Int, Int) = {
     val target = replay(spark, table, Some(asOfVersion))
-    var attempt = 0
-    while (attempt <= retries) {
+    Txn(store, Txn.Retries)(t => t.attempt { _ =>
       // diff against FRESH state every attempt: a concurrent commit
       // changes the current live set, and a restore computed against a
       // stale one would resurrect or orphan its files
@@ -826,29 +820,22 @@ object DeltaSink extends org.apache.spark.internal.Logging {
       val readds = target.live.filter(a =>
         !currentByPath.get(a.path).contains(a.dv))
       val removes = current.live.filterNot(a => targetPaths.contains(a.path))
-      if (readds.isEmpty && removes.isEmpty) return (0, 0)
-      val now = System.currentTimeMillis()
-      val lines = removes.map(a =>
-        s"""{"remove":{"path":${esc(a.path)},"deletionTimestamp":$now,"dataChange":true}}""") ++
-        readds.map(a => addJson(a))
-      // Claim exactly the version AFTER the one the diff was computed
-      // against (writers only claim latestVersion+1): a commit landing
-      // between the replay above and this claim then collides with
-      // FileAlreadyExistsException and triggers the re-diff retry —
-      // re-reading latestVersion here would let that interleaved commit
-      // (e.g. a concurrent compact) be silently built over with a stale
-      // diff, resurrecting files it removed.
-      val next = current.version + 1
-      try {
-        commitAtomic(store, versionFile(table, next), lines)
-        return (readds.size, removes.size)
-      } catch {
-        case e: java.nio.file.FileAlreadyExistsException =>
-          if (attempt >= retries) throw e
-          attempt += 1 // another writer claimed it; re-diff and retry
+      if (readds.nonEmpty || removes.nonEmpty) {
+        val now = System.currentTimeMillis()
+        val lines = removes.map(a =>
+          s"""{"remove":{"path":${esc(a.path)},"deletionTimestamp":$now,"dataChange":true}}""") ++
+          readds.map(a => addJson(a))
+        // Claim exactly the version AFTER the one the diff was computed
+        // against (writers only claim latestVersion+1): a commit landing
+        // between the replay above and this claim then collides and
+        // triggers the re-diff retry — re-reading latestVersion here would
+        // let that interleaved commit (e.g. a concurrent compact) be
+        // silently built over with a stale diff, resurrecting files it
+        // removed.
+        claimVersion(t, table, current.version + 1, lines)
       }
-    }
-    throw new IllegalStateException("unreachable")
+      (readds.size, removes.size)
+    })
   }
 
   /** Bin-packs the table's live files into `maxRecordsPerFile`-sized files
@@ -951,11 +938,6 @@ object DeltaSink extends org.apache.spark.internal.Logging {
       if (clusterCols.nonEmpty) current // ZOrder.cluster already sized it
       else if (tail.exists(_.dv.isDefined)) current.repartition(nTailFiles)
       else current.coalesce(nTailFiles)
-    val adds = writeStaged(store, dir, toPhysical(packed, state.schema),
-      state.partitionColumns, maxRecordsPerFile, txn, txnNames())
-    val now = System.currentTimeMillis()
-    val removes = tail.map(a =>
-      s"""{"remove":{"path":${esc(a.path)},"deletionTimestamp":$now,"dataChange":false}}""")
     // record the new clustered generation (this txn + the carried ones
     // still live) in the same commit; a one-off ZORDER over a clustered
     // table RESETS the generations — its layout is not the declared key's
@@ -971,58 +953,58 @@ object DeltaSink extends org.apache.spark.internal.Logging {
         Seq(domainJson(LiquidDomain,
           s"""{"columns":[],"generations":[]}"""))
       else Nil
-    val lines = removes ++ adds.map(a => addJson(a, dataChange = false)) ++
-      domainLines
     commitRewrite(spark, store, table, state.version, tail.map(_.path).toSet,
-      lines, adds.map(_.path),
       superseded = s"concurrent compaction of $table; compaction aborted",
-      contended = s"concurrent writers on $table; compaction aborted")
-    (tail.size, adds.size)
+      contended = s"concurrent writers on $table; compaction aborted") { t =>
+      val adds = writeStaged(t, dir, toPhysical(packed, state.schema),
+        state.partitionColumns, maxRecordsPerFile, txn, txnNames())
+      (rewriteLines(tail, adds) ++ domainLines, (tail.size, adds.size))
+    }
   }
 
   /** Commits a layout rewrite ([[compact]], [[reorgPurge]]) read at
-    * `readVersion`, retrying up to 3 lost claims before it reclaims
-    * `written` and throws `contended`. The rewrite stays valid only while
-    * every file it read is STILL live — a concurrent append only adds
-    * files (compatible; ours remove nothing of theirs), but a concurrent
-    * rewrite already removed our inputs, and committing on top of it
-    * would leave BOTH rewrites live and duplicate every row (reclaim,
-    * throw `superseded`). That competing rewrite may have committed at an
-    * intermediate version while ours was staging, i.e. WITHOUT ever
-    * colliding with our claim — so the liveness check runs before EVERY
-    * commit attempt, not only in the collision catch. A successful
-    * CREATE_NEW at `latest + 1` then guarantees all earlier versions
-    * were visible at validation time (writers only claim latestVersion+1),
+    * `readVersion`: `stage` writes the new files and returns the commit's
+    * lines with the verb's result, then up to [[Txn.Retries]] lost claims
+    * retry before the transaction fails with `contended`. The rewrite
+    * stays valid only while every file it read is STILL live — a
+    * concurrent append only adds files (compatible; ours remove nothing of
+    * theirs), but a concurrent rewrite already removed our inputs, and
+    * committing on top of it would leave BOTH rewrites live and duplicate
+    * every row (fail with `superseded`). That competing rewrite may have
+    * committed at an intermediate version while ours was staging, i.e.
+    * WITHOUT ever colliding with our claim — so the liveness check runs
+    * before EVERY claim, not only after a collision. A successful
+    * CREATE_NEW at `latest + 1` then guarantees all earlier versions were
+    * visible at validation time (writers only claim latestVersion+1),
     * closing the window.
     */
-  private def commitRewrite(spark: SparkSession, store: CommitStore,
+  private def commitRewrite[A](spark: SparkSession, store: CommitStore,
       table: String, readVersion: Long, inputPaths: Set[String],
-      lines: Seq[String], written: Seq[String], superseded: String,
-      contended: String): Unit = {
-    var attempt = 0
-    var validatedThrough = readVersion
-    while (true) {
-      val latest = latestVersion(table)
-      if (latest > validatedThrough) {
-        val liveNow = replay(spark, table, None).live.map(_.path).toSet
-        validatedThrough = latest
-        if (!inputPaths.subsetOf(liveNow)) {
-          reclaim(store, table, written)
-          throw new IllegalStateException(superseded)
+      superseded: String, contended: String)(
+      stage: Txn => (Seq[String], A)): A =
+    Txn(store, Txn.Retries, e => new IllegalStateException(contended, e)) { t =>
+      val (lines, result) = stage(t)
+      var validatedThrough = readVersion
+      t.attempt { _ =>
+        val latest = latestVersion(table)
+        if (latest > validatedThrough) {
+          val liveNow = replay(spark, table, None).live.map(_.path).toSet
+          validatedThrough = latest
+          if (!inputPaths.subsetOf(liveNow)) throw new IllegalStateException(superseded)
         }
+        claimVersion(t, table, latest + 1, lines)
       }
-      try {
-        commitAtomic(store, versionFile(table, latest + 1), lines)
-        return
-      } catch {
-        case e: java.nio.file.FileAlreadyExistsException =>
-          if (attempt >= 3) {
-            reclaim(store, table, written)
-            throw new IllegalStateException(contended, e)
-          }
-          attempt += 1 // re-validate against the new version and retry
-      }
+      result
     }
+
+  /** A layout rewrite's log lines: `inputs` removed, `adds` added, both
+    * without a data change.
+    */
+  private def rewriteLines(inputs: Seq[AddEntry], adds: Seq[AddEntry]): Seq[String] = {
+    val now = System.currentTimeMillis()
+    inputs.map(a =>
+      s"""{"remove":{"path":${esc(a.path)},"deletionTimestamp":$now,"dataChange":false}}""") ++
+      adds.map(a => addJson(a, dataChange = false))
   }
 
   /** REORG … APPLY (PURGE) — materialize deletion vectors: rewrites ONLY
@@ -1067,18 +1049,14 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     // DV-masked survivors are arbitrarily skewed across the touched
     // files — round-robin repartition keeps every bin under the cap
     // (the same reasoning as compact's DV branch)
-    val adds = writeStaged(store, dir,
-      toPhysical(survivors.repartition(nFiles), state.schema),
-      state.partitionColumns, maxRecordsPerFile, txn, txnNames())
-    val now = System.currentTimeMillis()
-    val removes = dvAdds.map(a =>
-      s"""{"remove":{"path":${esc(a.path)},"deletionTimestamp":$now,"dataChange":false}}""")
-    val lines = removes ++ adds.map(a => addJson(a, dataChange = false))
     commitRewrite(spark, store, table, state.version, dvAdds.map(_.path).toSet,
-      lines, adds.map(_.path),
       superseded = s"concurrent rewrite of $table; reorg aborted",
-      contended = s"concurrent writers on $table; reorg aborted")
-    (dvAdds.size, purgedRows)
+      contended = s"concurrent writers on $table; reorg aborted") { t =>
+      val adds = writeStaged(t, dir,
+        toPhysical(survivors.repartition(nFiles), state.schema),
+        state.partitionColumns, maxRecordsPerFile, txn, txnNames())
+      (rewriteLines(dvAdds, adds), (dvAdds.size, purgedRows))
+    }
   }
 
   /** MERGE INTO: keyed upsert / delete against the current snapshot —
@@ -1192,59 +1170,58 @@ object DeltaSink extends org.apache.spark.internal.Logging {
       .join(srcKeys, keys, "left_anti")
     val newData = kept.unionByName(writes)
     val txn = java.util.UUID.randomUUID().toString
-    // CHECK constraints gate the merge's inserted/updated rows inside the
-    // same write job (kept rows re-pass trivially)
-    val adds = writeStaged(store, dir,
-      toPhysical(withConstraintCheck(newData, state.configuration), state.schema),
-      state.partitionColumns, MaxRecordsPerFile, txn, txnNames())
-    val now = System.currentTimeMillis()
-    val removes = touched.map(a =>
-      s"""{"remove":{"path":${esc(a.path)},"deletionTimestamp":$now,"dataChange":true}}""")
-    if ((removes ++ adds).isEmpty) return (0, state.live.size, 0) // nothing to change
-    // CHANGE DATA FEED: the merge's row-level change images, written as
-    // CDC files in the SAME commit (Delta CDF's design — computing the
-    // images at merge time costs two delta-sized joins over the touched
-    // files the rewrite already planned; reconstructing them later would
-    // cost a full diff of the rewritten files). Classification: a source
-    // row whose key matched a touched row is an update (pre image = the
-    // old row, post image = the new), a delete-marked match is a delete,
-    // an unmatched non-delete source row is an insert. Readers take a
-    // commit's change rows from its cdc actions ([[readCdf]]); the main
-    // table replay ignores them (dataChange=false, unknown action field).
-    val cdcAdds: Seq[AddEntry] = if (!changeDataFeed) Nil else {
-      val ct = "_change_type"
-      val touchedRows = readState(spark, table, state.copy(live = touched), store)
-      val touchedKeys = touchedRows.select(keys.map(col): _*)
-      val updPre = touchedRows
-        .join(writes.select(keys.map(col): _*), keys, "left_semi")
-        .withColumn(ct, lit("update_preimage"))
-      // a key that is BOTH delete-marked and updated in one source resolves
-      // as a replace (merge contract) — its images are update_pre/postimage,
-      // so the delete class must exclude keys the writes side carries, or
-      // the old row would be double-classified (delete + update_preimage)
-      val delPre = deleteCol.map { c =>
-        val delOnlyKeys = source.filter(coalesce(col(c), lit(false)))
-          .select(keys.map(col): _*)
-          .join(writes.select(keys.map(col): _*), keys, "left_anti")
-        touchedRows.join(delOnlyKeys, keys, "left_semi")
-          .withColumn(ct, lit("delete"))
+    strict(store, table, "merge") { t =>
+      // CHECK constraints gate the merge's inserted/updated rows inside the
+      // same write job (kept rows re-pass trivially)
+      val adds = writeStaged(t, dir,
+        toPhysical(withConstraintCheck(newData, state.configuration), state.schema),
+        state.partitionColumns, MaxRecordsPerFile, txn, txnNames())
+      val now = System.currentTimeMillis()
+      val removes = touched.map(a =>
+        s"""{"remove":{"path":${esc(a.path)},"deletionTimestamp":$now,"dataChange":true}}""")
+      if ((removes ++ adds).nonEmpty) { // else nothing to change
+        // CHANGE DATA FEED: the merge's row-level change images, written as
+        // CDC files in the SAME commit (Delta CDF's design — computing the
+        // images at merge time costs two delta-sized joins over the touched
+        // files the rewrite already planned; reconstructing them later would
+        // cost a full diff of the rewritten files). Classification: a source
+        // row whose key matched a touched row is an update (pre image = the
+        // old row, post image = the new), a delete-marked match is a delete,
+        // an unmatched non-delete source row is an insert. Readers take a
+        // commit's change rows from its cdc actions ([[readCdf]]); the main
+        // table replay ignores them (dataChange=false, unknown action field).
+        val cdcAdds: Seq[AddEntry] = if (!changeDataFeed) Nil else {
+          val ct = "_change_type"
+          val touchedRows = readState(spark, table, state.copy(live = touched), store)
+          val touchedKeys = touchedRows.select(keys.map(col): _*)
+          val updPre = touchedRows
+            .join(writes.select(keys.map(col): _*), keys, "left_semi")
+            .withColumn(ct, lit("update_preimage"))
+          // a key that is BOTH delete-marked and updated in one source resolves
+          // as a replace (merge contract) — its images are update_pre/postimage,
+          // so the delete class must exclude keys the writes side carries, or
+          // the old row would be double-classified (delete + update_preimage)
+          val delPre = deleteCol.map { c =>
+            val delOnlyKeys = source.filter(coalesce(col(c), lit(false)))
+              .select(keys.map(col): _*)
+              .join(writes.select(keys.map(col): _*), keys, "left_anti")
+            touchedRows.join(delOnlyKeys, keys, "left_semi")
+              .withColumn(ct, lit("delete"))
+          }
+          val updPost = writes.join(touchedKeys, keys, "left_semi")
+            .withColumn(ct, lit("update_postimage"))
+          val ins = writes.join(touchedKeys, keys, "left_anti")
+            .withColumn(ct, lit("insert"))
+          val cdcDf = (Seq(updPre) ++ delPre.toSeq ++ Seq(updPost, ins))
+            .reduce(_.unionByName(_))
+          writeStaged(t, dir, toPhysical(cdcDf, state.schema), Nil,
+            MaxRecordsPerFile, txn, cdcNames)
+        }
+        claimVersion(t, table, state.version + 1,
+          removes ++ adds.map(a => addJson(a)) ++ cdcAdds.map(cdcJson))
       }
-      val updPost = writes.join(touchedKeys, keys, "left_semi")
-        .withColumn(ct, lit("update_postimage"))
-      val ins = writes.join(touchedKeys, keys, "left_anti")
-        .withColumn(ct, lit("insert"))
-      val cdcDf = (Seq(updPre) ++ delPre.toSeq ++ Seq(updPost, ins))
-        .reduce(_.unionByName(_))
-      writeStaged(store, dir, toPhysical(cdcDf, state.schema), Nil,
-        MaxRecordsPerFile, txn, cdcNames)
+      (touched.size, state.live.size - touched.size, adds.size)
     }
-    val cdcLines = cdcAdds.map(a =>
-      s"""{"cdc":{"path":${esc(a.path)},"partitionValues":{},""" +
-        s""""size":${a.size},"dataChange":false}}""")
-    commitOrFail(store, table, state.version + 1,
-      removes ++ adds.map(a => addJson(a)) ++ cdcLines, "merge",
-      (adds ++ cdcAdds).map(_.path))
-    (touched.size, state.live.size - touched.size, adds.size)
   }
 
   /** DELETE WHERE — row-level delete (Delta DELETE semantics,
@@ -1306,29 +1283,24 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     val keptRows = touchedRows.filter(!coalesce(expr(predicate), lit(false)))
     val rewrite = replacement.map(keptRows.unionByName(_)).getOrElse(keptRows)
     val txn = java.util.UUID.randomUUID().toString
-    val adds = writeStaged(store, dir,
-      toPhysical(withConstraintCheck(rewrite, state.configuration), state.schema),
-      state.partitionColumns, MaxRecordsPerFile, txn, txnNames())
-    val cdcAdds: Seq[AddEntry] =
-      if (!changeDataFeed) Nil
-      else writeStaged(store, dir, toPhysical(imagesOf(matched, replacement),
-        state.schema), Nil, MaxRecordsPerFile, txn, cdcNames)
-    val matchedRows =
-      if (changeDataFeed)
-        cdcAdds.map(a =>
-          Option(a.stats).map(s => mapper.readTree(s).path("numRecords").asLong(0L))
-            .getOrElse(0L)).sum / imageRowsPerMatch
-      else matched.count()
-    val now = System.currentTimeMillis()
-    val removes = touched.map(a =>
-      s"""{"remove":{"path":${esc(a.path)},"deletionTimestamp":$now,"dataChange":true}}""")
-    val cdcLines = cdcAdds.map(a =>
-      s"""{"cdc":{"path":${esc(a.path)},"partitionValues":{},""" +
-        s""""size":${a.size},"dataChange":false}}""")
-    commitOrFail(store, table, state.version + 1,
-      removes ++ adds.map(a => addJson(a)) ++ cdcLines, opName,
-      (adds ++ cdcAdds).map(_.path))
-    matchedRows
+    strict(store, table, opName) { t =>
+      val adds = writeStaged(t, dir,
+        toPhysical(withConstraintCheck(rewrite, state.configuration), state.schema),
+        state.partitionColumns, MaxRecordsPerFile, txn, txnNames())
+      val cdcAdds: Seq[AddEntry] =
+        if (!changeDataFeed) Nil
+        else writeStaged(t, dir, toPhysical(imagesOf(matched, replacement),
+          state.schema), Nil, MaxRecordsPerFile, txn, cdcNames)
+      val matchedRows =
+        if (changeDataFeed) cdcAdds.map(rowsOf).sum / imageRowsPerMatch
+        else matched.count()
+      val now = System.currentTimeMillis()
+      val removes = touched.map(a =>
+        s"""{"remove":{"path":${esc(a.path)},"deletionTimestamp":$now,"dataChange":true}}""")
+      claimVersion(t, table, state.version + 1,
+        removes ++ adds.map(a => addJson(a)) ++ cdcAdds.map(cdcJson))
+      matchedRows
+    }
   }
 
   /** UPDATE WHERE — row-level update (Delta UPDATE semantics,
@@ -1461,81 +1433,66 @@ object DeltaSink extends org.apache.spark.internal.Logging {
       shard => new File(tableAbs, dvShardRel(txnUuid, shard)).getAbsolutePath,
       packDvShard(tableAbs, _, _, _, _))
     if (descs.isEmpty) return 0L
-    val deletedNow = descs.map(_.freshCardinality).sum
-    val publishedDv: Seq[String] =
-      descs.map(_.shard).distinct.map(dvShardRel(txnUuid, _))
-    val txn = java.util.UUID.randomUUID().toString.take(8)
-    val matchedRows = matched.select(state.schema.fieldNames.map(col).toIndexedSeq: _*)
-    val replacement = replacementOf(matchedRows, state.schema)
-    // replacement rows (an update's post-images) land as NEW files in the
-    // table's layout — cost ∝ matched rows, never the touched files. Any
-    // failure from here to the commit reclaims everything published so
-    // far: an uncommitted transaction leaves zero bytes behind.
-    val dataAdds: Seq[AddEntry] = try {
-      // CHECK constraints gate an update's post-images too
-      replacement.toSeq.flatMap(rep => writeStaged(store, dir,
+    strict(store, table, opName) { t =>
+      t.record(descs.map(_.shard).distinct.map(i => Paths.get(table, dvShardRel(txnUuid, i))): _*)
+      val txn = java.util.UUID.randomUUID().toString.take(8)
+      val matchedRows = matched.select(state.schema.fieldNames.map(col).toIndexedSeq: _*)
+      val replacement = replacementOf(matchedRows, state.schema)
+      // replacement rows (an update's post-images) land as NEW files in the
+      // table's layout — cost ∝ matched rows, never the touched files
+      // (CHECK constraints gate them too); CDC images cost ∝ matched rows,
+      // same as the CoW path
+      val dataAdds: Seq[AddEntry] = replacement.toSeq.flatMap(rep => writeStaged(t, dir,
         toPhysical(withConstraintCheck(rep, meta.configuration), state.schema),
         state.partitionColumns, MaxRecordsPerFile, txn, txnNames()))
-    } catch { case e: Throwable =>
-      reclaim(store, table, publishedDv)
-      throw e
-    }
-    // CDC images (cost ∝ matched rows, same as the CoW path)
-    val cdcAdds: Seq[AddEntry] = if (!changeDataFeed) Nil else try {
-      writeStaged(store, dir, toPhysical(imagesOf(matchedRows, replacement),
-        state.schema), Nil, MaxRecordsPerFile, txn, cdcNames)
-    } catch { case e: Throwable =>
-      reclaim(store, table, publishedDv ++ dataAdds.map(_.path))
-      throw e
-    }
-    // re-add each touched file (same path, new descriptor — last add per
-    // path wins in replay; the data file is untouched). Metadata-only: the
-    // descriptors came back from the shards, no bitmap is reopened.
-    val now = System.currentTimeMillis()
-    val byRel: Map[String, AddEntry] = state.live.map(a => a.path -> a).toMap
-    val newAdds = descs.sortBy(_.file).map { d =>
-      val add = byRel.getOrElse(d.file,
-        throw new IllegalStateException(s"matched file not live: ${d.file}"))
-      val encoded = DvPrefix + graft.functions.DeletionVector.encodeUuid(
-        DvPlane.shardUuid(txnUuid, d.shard))
-      add.copy(modificationTime = now,
-        dv = Some(DvInfo("u", encoded, Some(d.offset.toInt), d.size,
-          d.cardinality)))
-    }
-    // v3/v7 protocols must LIST every active table feature (spec rule):
-    // a DV bump on a column-mapped table carries columnMapping too (and
-    // any features an earlier protocol action already tracked), or a
-    // spec-compliant external reader would stop applying the mapping
-    def features(tracked: Seq[String]) =
-      (tracked ++ Seq("deletionVectors") ++
-        (if (mappingEnabled(state.schema)) Seq("columnMapping") else Nil))
-        .distinct.sorted.map(esc).mkString("[", ",", "]")
-    val bump =
-      if (meta.minReader >= 3 && meta.minWriter >= 7) Nil
-      else Seq(s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,""" +
-        s""""readerFeatures":${features(meta.readerFeatures)},""" +
-        s""""writerFeatures":${features(meta.writerFeatures)}}}""")
-    val cdcLines = cdcAdds.map(a =>
-      s"""{"cdc":{"path":${esc(a.path)},"partitionValues":{},""" +
-        s""""size":${a.size},"dataChange":false}}""")
-    // ROW TRACKING: an update's replacement rows are NEW rows — they take
-    // fresh ids above the high-water mark (the Iceberg twin's contract);
-    // the touched files' re-adds keep their baseRowId via add.copy above
-    val (dataAddsFinal, domainLine) =
-      if (!meta.configuration.get(RowTrackingConf).contains("true") ||
-          dataAdds.isEmpty)
-        (dataAdds, Nil)
-      else {
-        val hwm = rowIdHighWaterMark(meta.domains).getOrElse(-1L)
-        val (w, newHwm) = assignRowIds(dataAdds, hwm, state.version + 1)
-        (w, Seq(domainJson(RowTrackingDomain,
-          s"""{"rowIdHighWaterMark":$newHwm}""")))
+      val cdcAdds: Seq[AddEntry] = if (!changeDataFeed) Nil else
+        writeStaged(t, dir, toPhysical(imagesOf(matchedRows, replacement),
+          state.schema), Nil, MaxRecordsPerFile, txn, cdcNames)
+      // re-add each touched file (same path, new descriptor — last add per
+      // path wins in replay; the data file is untouched). Metadata-only: the
+      // descriptors came back from the shards, no bitmap is reopened.
+      val now = System.currentTimeMillis()
+      val byRel: Map[String, AddEntry] = state.live.map(a => a.path -> a).toMap
+      val newAdds = descs.sortBy(_.file).map { d =>
+        val add = byRel.getOrElse(d.file,
+          throw new IllegalStateException(s"matched file not live: ${d.file}"))
+        val encoded = DvPrefix + graft.functions.DeletionVector.encodeUuid(
+          DvPlane.shardUuid(txnUuid, d.shard))
+        add.copy(modificationTime = now,
+          dv = Some(DvInfo("u", encoded, Some(d.offset.toInt), d.size,
+            d.cardinality)))
       }
-    commitOrFail(store, table, state.version + 1,
-      bump ++ (newAdds ++ dataAddsFinal).map(a => addJson(a)) ++ cdcLines ++
-        domainLine, opName,
-      publishedDv ++ cdcAdds.map(_.path) ++ dataAdds.map(_.path))
-    deletedNow
+      // v3/v7 protocols must LIST every active table feature (spec rule):
+      // a DV bump on a column-mapped table carries columnMapping too (and
+      // any features an earlier protocol action already tracked), or a
+      // spec-compliant external reader would stop applying the mapping
+      def features(tracked: Seq[String]) =
+        (tracked ++ Seq("deletionVectors") ++
+          (if (mappingEnabled(state.schema)) Seq("columnMapping") else Nil))
+          .distinct.sorted.map(esc).mkString("[", ",", "]")
+      val bump =
+        if (meta.minReader >= 3 && meta.minWriter >= 7) Nil
+        else Seq(s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,""" +
+          s""""readerFeatures":${features(meta.readerFeatures)},""" +
+          s""""writerFeatures":${features(meta.writerFeatures)}}}""")
+      // ROW TRACKING: an update's replacement rows are NEW rows — they take
+      // fresh ids above the high-water mark (the Iceberg twin's contract);
+      // the touched files' re-adds keep their baseRowId via add.copy above
+      val (dataAddsFinal, domainLine) =
+        if (!meta.configuration.get(RowTrackingConf).contains("true") ||
+            dataAdds.isEmpty)
+          (dataAdds, Nil)
+        else {
+          val hwm = rowIdHighWaterMark(meta.domains).getOrElse(-1L)
+          val (w, newHwm) = assignRowIds(dataAdds, hwm, state.version + 1)
+          (w, Seq(domainJson(RowTrackingDomain,
+            s"""{"rowIdHighWaterMark":$newHwm}""")))
+        }
+      claimVersion(t, table, state.version + 1,
+        bump ++ (newAdds ++ dataAddsFinal).map(a => addJson(a)) ++
+          cdcAdds.map(cdcJson) ++ domainLine)
+      descs.map(_.freshCardinality).sum
+    }
     } finally matched.unpersist(): Unit
   }
 
@@ -1662,7 +1619,8 @@ object DeltaSink extends org.apache.spark.internal.Logging {
       // FULL replayed configuration (a metaData action replaces the map
       // wholesale; dropping it here would strip CHECK constraints)
       meta.configuration ++ mappingConfig(evolved))
-    commitOrFail(store, table, meta.version + 1, bump :+ metaLine, "column evolution")
+    strict(store, table, "column evolution")(
+      claimVersion(_, table, meta.version + 1, bump :+ metaLine))
   }
 
   /** The table's CHECK constraints, from the replayed configuration
@@ -1770,7 +1728,8 @@ object DeltaSink extends org.apache.spark.internal.Logging {
         "delta.inCommitTimestampEnablementVersion" -> version.toString,
         "delta.inCommitTimestampEnablementTimestamp" -> ict.toString))
     val info = s"""{"commitInfo":{"inCommitTimestamp":$ict,"timestamp":$ict}}"""
-    commitOrFail(store, table, version, (info +: bump) :+ metaLine, "ICT enablement")
+    strict(store, table, "ICT enablement")(
+      claimVersion(_, table, version, (info +: bump) :+ metaLine))
   }
 
   /** DROPs a CHECK constraint — metadata-only. */
@@ -1807,7 +1766,8 @@ object DeltaSink extends org.apache.spark.internal.Logging {
       meta.partitionColumns,
       if (meta.createdTime != 0L) meta.createdTime else System.currentTimeMillis(),
       newConfig ++ mappingConfig(meta.schema))
-    commitOrFail(store, table, meta.version + 1, bump :+ metaLine, "constraint change")
+    strict(store, table, "constraint change")(
+      claimVersion(_, table, meta.version + 1, bump :+ metaLine))
   }
 
   /** Writes a parquet checkpoint of the current log state plus the
@@ -1943,10 +1903,10 @@ object DeltaSink extends org.apache.spark.internal.Logging {
             .contains("true"), "inCommitTimestamp") :+ "v2Checkpoint")
           .distinct.sorted
         def lst(fs: Seq[String]) = fs.map(esc).mkString("[", ",", "]")
-        commitOrFail(store, table, meta0.version + 1,
+        strict(store, table, "v2Checkpoint enablement")(claimVersion(_, table,
+          meta0.version + 1,
           Seq(s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,""" +
-            s""""readerFeatures":${lst(rf)},"writerFeatures":${lst(wf)}}}"""),
-          "v2Checkpoint enablement")
+            s""""readerFeatures":${lst(rf)},"writerFeatures":${lst(wf)}}}""")))
       }
     }
     val (meta, live) = resolve(spark, table, None)
@@ -2278,7 +2238,8 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     val lines = Seq(bump, metaLine) ++
       withIds.map(a => addJson(a, dataChange = false)) :+
       domainJson(RowTrackingDomain, s"""{"rowIdHighWaterMark":$hwm}""")
-    commitOrFail(store, table, state.version + 1, lines, "enableRowTracking")
+    strict(store, table, "enableRowTracking")(
+      claimVersion(_, table, state.version + 1, lines))
     hwm + 1
   }
 
@@ -2390,7 +2351,6 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     bos.write(magic)
     val fileBytes = bos.toByteArray
     val statsRel = s"_delta_log/_graft_stats/stats-${java.util.UUID.randomUUID()}.puffin"
-    store.putObject(Paths.get(table, statsRel), fileBytes)
     val ndvs = blobMeta.map { case (c, _, _, ndv) => c -> ndv }.toMap
     def lst(fs: Seq[String]) = fs.distinct.sorted.map(esc).mkString("[", ",", "]")
     val bump =
@@ -2408,8 +2368,11 @@ object DeltaSink extends org.apache.spark.internal.Logging {
       s""""tableVersion":${meta.version},"ndv":$ndvJson}"""
     val superseded = meta.domains.get(StatsDomain)
       .map(c => mapper.readTree(c).path("path").asText()).filter(_.nonEmpty)
-    commitOrFail(store, table, meta.version + 1,
-      bump :+ domainJson(StatsDomain, conf), "writeStats", Seq(statsRel))
+    strict(store, table, "writeStats") { t =>
+      t.record(Paths.get(table, statsRel))
+      store.putObject(Paths.get(table, statsRel), fileBytes)
+      claimVersion(t, table, meta.version + 1, bump :+ domainJson(StatsDomain, conf))
+    }
     // the replaced stats file is dead the moment the domain row moved
     // (domain rows carry table-relative paths; resolve before reclaiming)
     superseded.foreach(p => scala.util.Try(store.deleteObject(Paths.get(dataAbs(table, p)))))
@@ -2490,8 +2453,8 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     // data files carry PHYSICAL names; record those (spec contract)
     val paths = columns
       .map(c => s"[${esc(physName(meta.schema(c)))}]").mkString("[", ",", "]")
-    commitOrFail(store, table, meta.version + 1,
-      bump :+ domainJson(ClusteringDomain, s"""{"clusteringColumns":$paths}"""), "clusterBy")
+    strict(store, table, "clusterBy")(claimVersion(_, table, meta.version + 1,
+      bump :+ domainJson(ClusteringDomain, s"""{"clusteringColumns":$paths}""")))
   }
 
   /** The declared clustering columns as LOGICAL names (empty when the
@@ -3908,12 +3871,19 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     * files' footers into their log stats and publishes them, named by
     * `naming` under `txn`.
     */
-  private def writeStaged(store: CommitStore, dir: File, df: DataFrame,
-      partitionBy: Seq[String], maxRecordsPerFile: Long, txn: String,
-      naming: TaskWrite.Naming): Seq[AddEntry] =
-    TaskWrite(store, df, dir, partitionBy, maxRecordsPerFile, txn, naming)(
-      (f, conf) => Some(statsJson(f, conf)))
-      .map(w => AddEntry(w.rel, partitionValuesOf(w.rel), w.size, w.mtime, w.stats))
+  private def writeStaged(txn: Txn, dir: File, df: DataFrame,
+      partitionBy: Seq[String], maxRecordsPerFile: Long, txnId: String,
+      naming: TaskWrite.Naming): Seq[AddEntry] = {
+    val written = TaskWrite(txn.store, df, dir, partitionBy, maxRecordsPerFile,
+      txnId, naming)((f, conf) => Some(statsJson(f, conf)))
+    txn.record(written.map(w => new File(dir, w.rel).toPath): _*)
+    written.map(w => AddEntry(w.rel, partitionValuesOf(w.rel), w.size, w.mtime, w.stats))
+  }
+
+  /** The log line of a change-data-feed file. */
+  private def cdcJson(a: AddEntry): String =
+    s"""{"cdc":{"path":${esc(a.path)},"partitionValues":{},""" +
+      s""""size":${a.size},"dataChange":false}}"""
 
   /** Txn-unique data-file names: task partition and file counter. */
   private def txnNames(suffix: String = ".c000.snappy.parquet"): TaskWrite.Naming =
@@ -3923,9 +3893,6 @@ object DeltaSink extends org.apache.spark.internal.Logging {
   private val cdcNames: TaskWrite.Naming =
     (txn, task, n) => f"_change_data/cdc-$task%05d-$n%03d-$txn.snappy.parquet"
 
-  /** Reclaims table-relative paths of an aborted transaction. */
-  private def reclaim(store: CommitStore, table: String, rels: Seq[String]): Unit =
-    rels.foreach(p => scala.util.Try(store.deleteObject(Paths.get(table, p))))
 
   /** Partition values from a table path's Hive-style dir segments
     * (col=value), Hive escaping undone; the marker dir name means a null
@@ -4007,20 +3974,17 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     finally in.close()
   }
 
-  /** The strict commit of a single-shot verb (no OCC retry): claims
-    * `version` with `lines`, or — when a concurrent writer claimed it
-    * first — reclaims `published` (table-relative paths this transaction
-    * wrote) and fails the verb, leaving the table at its pre-state.
+  /** A single-shot verb's transaction (no OCC retry): a lost claim fails
+    * the verb and leaves the table at its pre-state.
     */
-  private def commitOrFail(store: CommitStore, table: String, version: Long,
-      lines: Seq[String], verb: String, published: Seq[String] = Nil): Unit =
-    try commitAtomic(store, versionFile(table, version), lines)
-    catch {
-      case e: java.nio.file.FileAlreadyExistsException =>
-        reclaim(store, table, published)
-        throw new IllegalStateException(
-          s"concurrent commit on $table during $verb; re-run the $verb", e)
-    }
+  private def strict[A](store: CommitStore, table: String, verb: String)(
+      body: Txn => A): A =
+    Txn(store, conflict = e => new IllegalStateException(
+      s"concurrent commit on $table during $verb; re-run the $verb", e))(body)
+
+  /** Claims log version `v` of `table` with `lines` for `txn`. */
+  private def claimVersion(txn: Txn, table: String, v: Long, lines: Seq[String]): Unit =
+    txn.claim(versionFile(table, v), commitBytes(versionFile(table, v), lines))
 
   /** The single choke point every Delta commit flows through — which is
     * what makes in-commit timestamps (spec §in-commit-timestamps) an
@@ -4033,7 +3997,12 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     * (the enablement commit) pass through untouched.
     */
   private def commitAtomic(store: CommitStore, target: java.nio.file.Path,
-      lines: Seq[String]): Unit = {
+      lines: Seq[String]): Unit =
+    store.putIfAbsent(target, commitBytes(target, lines))
+
+  /** The bytes of commit file `target` holding `lines`, ICT-stamped. */
+  private def commitBytes(target: java.nio.file.Path,
+      lines: Seq[String]): Array[Byte] = {
     val name = target.getFileName.toString
     val all =
       if (!name.matches("\\d{20}\\.json") ||
@@ -4050,6 +4019,6 @@ object DeltaSink extends org.apache.spark.internal.Logging {
           case None => lines
         }
       }
-    store.putIfAbsent(target, (all.mkString("\n") + "\n").getBytes(StandardCharsets.UTF_8))
+    (all.mkString("\n") + "\n").getBytes(StandardCharsets.UTF_8)
   }
 }

@@ -2,7 +2,7 @@ package graft.sinks
 
 import java.io.File
 import java.nio.charset.StandardCharsets
-import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths, StandardOpenOption}
+import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
@@ -45,10 +45,15 @@ import org.apache.spark.sql.types._
   */
 object IcebergSink {
   private val mapper = new ObjectMapper()
-  val OccRetries = 3
+  final class OptimisticConcurrencyException(key: String)
+    extends RuntimeException(s"optimistic concurrency conflict committing $key")
 
-  final class OptimisticConcurrencyException(v: Long)
-    extends RuntimeException(s"optimistic concurrency conflict committing v$v.metadata.json")
+  /** One Iceberg commit transaction: a claim lost with no retry left
+    * surfaces as [[OptimisticConcurrencyException]].
+    */
+  private[sinks] def txn[A](store: CommitStore, retries: Int = 0)(body: Txn => A): A =
+    Txn(store, retries, e => new OptimisticConcurrencyException(
+      Paths.get(e.getFile).getFileName.toString).initCause(e))(body)
 
   sealed trait WriteMode
   case object CreateExclusive extends WriteMode
@@ -391,7 +396,8 @@ object IcebergSink {
     * but excluded from the declared table schema and the schema gate —
     * the lineage-preserving compaction's materialized `_row_id` (spec v3
     * §Row Lineage: a rewrite must carry row ids explicitly). Overwrite
-    * verbs only; normal reads never select them.
+    * verbs only; normal reads never select them. A lost version claim
+    * fails the write ([[writeWithRetry]] retries it).
     */
   def write(df0: DataFrame, table: String, mode: WriteMode,
       store: CommitStore = CommitStore.Local,
@@ -399,7 +405,30 @@ object IcebergSink {
       summaryProps: Map[String, String] = Map.empty,
       evolveSchema: Boolean = false,
       operationOverride: Option[String] = None,
-      extraPhysicalCols: Set[String] = Set.empty): Unit = {
+      extraPhysicalCols: Set[String] = Set.empty): Unit =
+    txn(store)(writeAttempt(_, df0, table, mode, partitionBy, summaryProps,
+      evolveSchema, operationOverride, extraPhysicalCols))
+
+  /** Whole-write OCC retry (reference src/lib.rs:168-196, ≤3 retries):
+    * each attempt re-reads the version hint and re-plans the commit.
+    */
+  def writeWithRetry(df: DataFrame, table: String, mode: WriteMode,
+      store: CommitStore = CommitStore.Local,
+      partitionBy: Seq[String] = Nil,
+      summaryProps: Map[String, String] = Map.empty,
+      evolveSchema: Boolean = false,
+      operationOverride: Option[String] = None,
+      extraPhysicalCols: Set[String] = Set.empty): Unit =
+    txn(store, Txn.Retries)(t => t.attempt(_ => writeAttempt(t, df, table, mode,
+      partitionBy, summaryProps, evolveSchema, operationOverride, extraPhysicalCols)))
+
+  /** One attempt of [[write]]: stages the data files, manifest and list,
+    * then claims the next metadata version.
+    */
+  private def writeAttempt(t: Txn, df0: DataFrame, table: String, mode: WriteMode,
+      partitionBy: Seq[String], summaryProps: Map[String, String],
+      evolveSchema: Boolean, operationOverride: Option[String],
+      extraPhysicalCols: Set[String]): Unit = {
     require(extraPhysicalCols.isEmpty || mode != Append,
       "extraPhysicalCols is an overwrite/rewrite facility")
     val hint = readHint(table)
@@ -714,13 +743,14 @@ object IcebergSink {
     // read by each write task from the file it wrote, before publishing
     // it; manifests always reference the file's TABLE path.
     val fieldIds = declaredSchema.fieldNames.zip(declaredIds).toMap
-    val infos0 = TaskWrite(store, clustered, dataDir,
+    val infos0 = TaskWrite(t.store, clustered, dataDir,
         partSpecs.map(_.derivedName)) { (f, conf) =>
       Some(footerStats(f, conf, fieldIds))
     }.map { w =>
       IcebergAvro.DataFileInfo(new File(dataDir, w.rel).getAbsolutePath,
         w.size, w.stats._1, w.stats._2, partValuesOf(w.rel))
     }
+    t.record(infos0.map(i => Paths.get(i.absPath)): _*)
     // V3 row lineage (spec §Row Lineage): on a lineage-enabled table every
     // ADDED data file takes its first_row_id from the table clock —
     // except a materialized-`_row_id` rewrite, whose files carry the ids
@@ -762,7 +792,7 @@ object IcebergSink {
     }.mkString(",")
     val specJson = s"""{"spec-id":$specId,"fields":[$specFieldsJson]}"""
     val (manifestPath, manifestLen) =
-      writeAvroArtifact(table, store, s"manifest-${java.util.UUID.randomUUID()}.avro")(f =>
+      writeAvroArtifact(table, t, s"manifest-${java.util.UUID.randomUUID()}.avro")(f =>
         IcebergAvro.writeManifest(f, infos,
           snapshotId, schemaNode.toString, specJson, partFieldsFinal,
           specId = specId))
@@ -780,7 +810,7 @@ object IcebergSink {
       manifestLen, seq, snapshotId, infos.size, infos.map(_.recordCount).sum,
       specId = specId)
     val (listPath, _) =
-      writeAvroArtifact(table, store, s"manifest-list-${java.util.UUID.randomUUID()}.avro") { f =>
+      writeAvroArtifact(table, t, s"manifest-list-${java.util.UUID.randomUUID()}.avro") { f =>
         IcebergAvro.writeManifestList(f, carried :+ newRow, snapshotId, seq); 0L
       }
 
@@ -887,35 +917,7 @@ object IcebergSink {
     refsNode0.putObject("main")
       .put("snapshot-id", snapshotId).put("type", "branch")
 
-    // the losing attempt's staged artifacts are unreferenced by any
-    // committed metadata — reclaim them before the retry re-stages
-    commitMetadataVersion(table, store, newVersion - 1, meta, () => {
-      reclaim(store, infos.map(_.absPath) :+ manifestPath.toString :+ listPath.toString)
-    })
-  }
-
-  /** Whole-write OCC retry loop (reference src/lib.rs:168-196, ≤3 retries).
-    * Each attempt re-reads the version hint and re-plans the commit.
-    */
-  def writeWithRetry(df: DataFrame, table: String, mode: WriteMode,
-      retries: Int = OccRetries, store: CommitStore = CommitStore.Local,
-      partitionBy: Seq[String] = Nil,
-      summaryProps: Map[String, String] = Map.empty,
-      evolveSchema: Boolean = false,
-      operationOverride: Option[String] = None,
-      extraPhysicalCols: Set[String] = Set.empty): Unit = {
-    var attempt = 0
-    while (true) {
-      try {
-        write(df, table, mode, store, partitionBy, summaryProps, evolveSchema,
-          operationOverride, extraPhysicalCols)
-        return
-      } catch {
-        case e: OptimisticConcurrencyException =>
-          attempt += 1
-          if (attempt > retries) throw e
-      }
-    }
+    commitMetadataVersion(table, t, newVersion - 1, meta)
   }
 
   /** ADD-COLUMN schema evolution — the opt-in extension verb ([[write]]'s
@@ -1144,7 +1146,7 @@ object IcebergSink {
     if (chosenId == meta.get("default-spec-id").asInt()) return chosenId // no-op
     newMeta.put("default-spec-id", chosenId)
     newMeta.put("last-updated-ms", System.currentTimeMillis())
-    commitMetadataVersion(table, store, hint, newMeta)
+    commitMetadata(table, store, hint, newMeta)
     chosenId
   }
 
@@ -1196,7 +1198,7 @@ object IcebergSink {
     rebuilt.add(schemaNode)
     newMeta.get("properties").asInstanceOf[ObjectNode]
       .put("graft.spark-schema", newSpark.json)
-    commitMetadataVersion(table, store, hint, newMeta)
+    commitMetadata(table, store, hint, newMeta)
   }
 
   private val TxnAppKey = "graft.txn-app-id"
@@ -2203,9 +2205,8 @@ object IcebergSink {
     * manifestsAfter) over data manifests.
     */
   def rewriteManifests(table: String,
-      store: CommitStore = CommitStore.Local): (Int, Int) = {
-    var attempt = 0
-    while (true) {
+      store: CommitStore = CommitStore.Local): (Int, Int) =
+    txn(store, Txn.Retries)(t => t.attempt { _ =>
       val hint = readHint(table).getOrElse(
         throw new IllegalArgumentException(s"not an Iceberg table: $table"))
       val meta = mapper.readTree(Files.readString(metaFile(table, hint)))
@@ -2224,37 +2225,27 @@ object IcebergSink {
       if (groups.size == dataRows.size) return (dataRows.size, dataRows.size)
       val snapshotId = math.abs(new java.util.Random().nextLong())
       val seq = meta.get("last-sequence-number").asLong() + 1
-      val published = scala.collection.mutable.ArrayBuffer[String]()
-      try {
-        val mergedRows = groups.toSeq
-          .sortBy(_._2.map(_.get("sequence_number").asInstanceOf[Long]).min)
-          .map { case ((specId, _, _), grp) =>
-            val sources = grp.map(r => (
-              new File(requireAvro(abs(table, r.get("manifest_path").toString))),
-              r.get("sequence_number").asInstanceOf[Long]))
-            var merged: (Long, Int, Long, Long) = null
-            val (path, len) = writeAvroArtifact(table, store,
-              s"manifest-${java.util.UUID.randomUUID()}.avro") { f =>
-              merged = IcebergAvro.mergeManifests(f, sources); merged._1
-            }
-            published += path.toString
-            IcebergAvro.manifestRowExisting(path.toFile.getAbsolutePath, len,
-              seq, merged._4, snapshotId, merged._2, merged._3, specId.toInt)
+      val mergedRows = groups.toSeq
+        .sortBy(_._2.map(_.get("sequence_number").asInstanceOf[Long]).min)
+        .map { case ((specId, _, _), grp) =>
+          val sources = grp.map(r => (
+            new File(requireAvro(abs(table, r.get("manifest_path").toString))),
+            r.get("sequence_number").asInstanceOf[Long]))
+          var merged: (Long, Int, Long, Long) = null
+          val (path, len) = writeAvroArtifact(table, t,
+            s"manifest-${java.util.UUID.randomUUID()}.avro") { f =>
+            merged = IcebergAvro.mergeManifests(f, sources); merged._1
           }
-        commitSnapshot(table, store, meta, hint, snapshotId, seq,
-          currentSchemaJson(meta)._1, mergedRows, "replace",
-          Map("manifests-replaced" -> dataRows.size.toString,
-            "manifests-created" -> mergedRows.size.toString),
-          reclaimOnConflict = () => reclaim(store, published.toSeq),
-          carriedOverride = Some(deleteRows))
-        return (dataRows.size, mergedRows.size)
-      } catch {
-        case _: OptimisticConcurrencyException if attempt < 3 => attempt += 1
-        case e: Throwable => reclaim(store, published.toSeq); throw e
-      }
-    }
-    (0, 0) // unreachable
-  }
+          IcebergAvro.manifestRowExisting(path.toFile.getAbsolutePath, len,
+            seq, merged._4, snapshotId, merged._2, merged._3, specId.toInt)
+        }
+      commitSnapshot(table, t, meta, hint, snapshotId, seq,
+        currentSchemaJson(meta)._1, mergedRows, "replace",
+        Map("manifests-replaced" -> dataRows.size.toString,
+          "manifests-created" -> mergedRows.size.toString),
+        carriedOverride = Some(deleteRows))
+      (dataRows.size, mergedRows.size)
+    })
 
   /** CONVERT a Delta table to Iceberg IN PLACE — METADATA-ONLY (the
     * UniForm pattern: one copy of the parquet, two format front-ends).
@@ -2367,23 +2358,21 @@ object IcebergSink {
       IcebergAvro.DataFileInfo(f.getAbsolutePath, f.length(), rows, stats,
         partSpecs.map(ps => typedDeltaPv(schema, pv, ps.source)))
     }
-    var manifestLen = 0L
-    val (manifestPath, _) = writeAvroArtifact(table, store,
-      s"manifest-${java.util.UUID.randomUUID()}.avro") { f =>
-      manifestLen = IcebergAvro.writeManifest(f, infos, snapshotId,
-        currentSchemaJson(meta)._2, specJson, partFields, specId = specId,
-        entrySeqs = prevSeqByPath)
-      manifestLen
+    txn(store) { t =>
+      val (manifestPath, manifestLen) = writeAvroArtifact(table, t,
+        s"manifest-${java.util.UUID.randomUUID()}.avro")(f =>
+        IcebergAvro.writeManifest(f, infos, snapshotId,
+          currentSchemaJson(meta)._2, specJson, partFields, specId = specId,
+          entrySeqs = prevSeqByPath))
+      val row = IcebergAvro.manifestRow(manifestPath.toFile.getAbsolutePath,
+        manifestLen, seq, snapshotId, infos.size, infos.map(_.recordCount).sum,
+        specId = specId)
+      commitSnapshot(table, t, meta, hint, snapshotId, seq,
+        currentSchemaJson(meta)._1, Seq(row), "replace",
+        Map("graft.synced-from" -> "delta",
+          "synced-files" -> infos.size.toString),
+        carriedOverride = Some(Nil))
     }
-    val row = IcebergAvro.manifestRow(manifestPath.toFile.getAbsolutePath,
-      manifestLen, seq, snapshotId, infos.size, infos.map(_.recordCount).sum,
-      specId = specId)
-    commitSnapshot(table, store, meta, hint, snapshotId, seq,
-      currentSchemaJson(meta)._1, Seq(row), "replace",
-      Map("graft.synced-from" -> "delta",
-        "synced-files" -> infos.size.toString),
-      reclaimOnConflict = () => reclaim(store, Seq(manifestPath.toString)),
-      carriedOverride = Some(Nil))
     infos.size
   }
 
@@ -2425,56 +2414,55 @@ object IcebergSink {
       IcebergAvro.DataFileInfo(f.getAbsolutePath, f.length(), rows, stats,
         partSpecs.map(ps => typedDeltaPv(schema, pv, ps.source)))
     }
-    Files.createDirectories(metaDir(table))
-    var manifestLen = 0L
-    val (manifestPath, _) = writeAvroArtifact(table, store,
-      s"manifest-${java.util.UUID.randomUUID()}.avro") { f =>
-      manifestLen = IcebergAvro.writeManifest(f, infos, snapshotId,
-        schemaNode.toString, specJson, partFields)
-      manifestLen
+    txn(store) { t =>
+      Files.createDirectories(metaDir(table))
+      val (manifestPath, manifestLen) = writeAvroArtifact(table, t,
+        s"manifest-${java.util.UUID.randomUUID()}.avro")(f =>
+        IcebergAvro.writeManifest(f, infos, snapshotId,
+          schemaNode.toString, specJson, partFields))
+      val row = IcebergAvro.manifestRow(manifestPath.toFile.getAbsolutePath,
+        manifestLen, 1L, snapshotId, infos.size, infos.map(_.recordCount).sum)
+      val (listPath, _) = writeAvroArtifact(table, t,
+        s"manifest-list-${java.util.UUID.randomUUID()}.avro") { f =>
+        IcebergAvro.writeManifestList(f, Seq(row), snapshotId, 1L); 0L
+      }
+      val now = System.currentTimeMillis()
+      val meta = mapper.createObjectNode()
+      meta.put("format-version", 2)
+        .put("table-uuid", java.util.UUID.randomUUID().toString)
+        .put("location", table)
+        .put("last-sequence-number", 1L)
+        .put("last-updated-ms", now)
+        .put("last-column-id", declaredIds.lastOption.getOrElse(0))
+      meta.putArray("schemas").add(schemaNode)
+      meta.put("current-schema-id", 0)
+      val specNode = meta.putArray("partition-specs").addObject()
+      specNode.put("spec-id", 0)
+      val sf = specNode.putArray("fields")
+      partFields.zip(partSpecs).foreach { case (pf, ps) =>
+        sf.addObject().put("name", pf.name).put("transform", "identity")
+          .put("source-id", fieldIds(ps.source)).put("field-id", pf.fieldId)
+        ()
+      }
+      meta.put("default-spec-id", 0)
+      meta.put("last-partition-id", 999 + partFields.size)
+      meta.putArray("sort-orders").addObject().put("order-id", 0).putArray("fields")
+      meta.put("default-sort-order-id", 0)
+      meta.putObject("properties")
+        .put("graft.spark-schema", schema.json)
+        .put("graft.converted-from", "delta")
+      val snapNode = meta.putArray("snapshots").addObject()
+      snapNode.put("snapshot-id", snapshotId)
+        .put("sequence-number", 1L)
+        .put("timestamp-ms", now)
+        .put("manifest-list", s"metadata/${listPath.getFileName}")
+        .put("schema-id", 0)
+        .putObject("summary").put("operation", "append")
+      meta.put("current-snapshot-id", snapshotId)
+      meta.putObject("refs").putObject("main")
+        .put("snapshot-id", snapshotId).put("type", "branch")
+      commitMetadataVersion(table, t, -1L, meta)
     }
-    val row = IcebergAvro.manifestRow(manifestPath.toFile.getAbsolutePath,
-      manifestLen, 1L, snapshotId, infos.size, infos.map(_.recordCount).sum)
-    val (listPath, _) = writeAvroArtifact(table, store,
-      s"manifest-list-${java.util.UUID.randomUUID()}.avro") { f =>
-      IcebergAvro.writeManifestList(f, Seq(row), snapshotId, 1L); 0L
-    }
-    val now = System.currentTimeMillis()
-    val meta = mapper.createObjectNode()
-    meta.put("format-version", 2)
-      .put("table-uuid", java.util.UUID.randomUUID().toString)
-      .put("location", table)
-      .put("last-sequence-number", 1L)
-      .put("last-updated-ms", now)
-      .put("last-column-id", declaredIds.lastOption.getOrElse(0))
-    meta.putArray("schemas").add(schemaNode)
-    meta.put("current-schema-id", 0)
-    val specNode = meta.putArray("partition-specs").addObject()
-    specNode.put("spec-id", 0)
-    val sf = specNode.putArray("fields")
-    partFields.zip(partSpecs).foreach { case (pf, ps) =>
-      sf.addObject().put("name", pf.name).put("transform", "identity")
-        .put("source-id", fieldIds(ps.source)).put("field-id", pf.fieldId)
-      ()
-    }
-    meta.put("default-spec-id", 0)
-    meta.put("last-partition-id", 999 + partFields.size)
-    meta.putArray("sort-orders").addObject().put("order-id", 0).putArray("fields")
-    meta.put("default-sort-order-id", 0)
-    meta.putObject("properties")
-      .put("graft.spark-schema", schema.json)
-      .put("graft.converted-from", "delta")
-    val snapNode = meta.putArray("snapshots").addObject()
-    snapNode.put("snapshot-id", snapshotId)
-      .put("sequence-number", 1L)
-      .put("timestamp-ms", now)
-      .put("manifest-list", s"metadata/${listPath.getFileName}")
-      .put("schema-id", 0)
-      .putObject("summary").put("operation", "append")
-    meta.put("current-snapshot-id", snapshotId)
-    meta.putObject("refs").putObject("main")
-      .put("snapshot-id", snapshotId).put("type", "branch")
-    commitMetadataVersion(table, store, -1L, meta)
     infos.size
   }
 
@@ -2513,7 +2501,7 @@ object IcebergSink {
       else newMeta.putObject("refs")
     refs.putObject("main")
       .put("snapshot-id", snapshotId).put("type", "branch")
-    commitMetadataVersion(table, store, hint, newMeta)
+    commitMetadata(table, store, hint, newMeta)
   }
 
   /** FAST-FORWARDS main to a branch head — the PUBLISH step of
@@ -2556,36 +2544,27 @@ object IcebergSink {
     newMeta.put("last-updated-ms", System.currentTimeMillis())
     newMeta.get("refs").asInstanceOf[ObjectNode].putObject("main")
       .put("snapshot-id", head).put("type", "branch")
-    commitMetadataVersion(table, store, hint, newMeta)
+    commitMetadata(table, store, hint, newMeta)
     head
   }
 
-  /** The strict commit every Iceberg verb ends with: claims version
-    * hint+1 with `newMeta` by IF-NOT-EXISTS put (the reference's
-    * write_exclusive, iceberg_destination.rs:349-367), then advances the
-    * version hint with an atomic put, so a reader never sees a
-    * half-written hint. A lost race runs `reclaimOnConflict` (the
-    * attempt's artifacts, unreferenced by any committed metadata) and
-    * throws [[OptimisticConcurrencyException]] for the verb's retry loop.
+  /** The commit every Iceberg verb ends with: claims version hint+1 with
+    * `newMeta` by IF-NOT-EXISTS put (the reference's write_exclusive,
+    * iceberg_destination.rs:349-367), then advances the version hint with
+    * an atomic put, so a reader never sees a half-written hint.
     */
-  private[sinks] def commitMetadataVersion(table: String, store: CommitStore,
-      hint: Long, newMeta: ObjectNode,
-      reclaimOnConflict: () => Unit = () => ()): Unit = {
+  private[sinks] def commitMetadataVersion(table: String, txn: Txn,
+      hint: Long, newMeta: ObjectNode): Unit = {
     val newVersion = hint + 1
-    try
-      store.putIfAbsent(metaFile(table, newVersion),
-        newMeta.toString.getBytes(StandardCharsets.UTF_8))
-    catch {
-      case _: FileAlreadyExistsException =>
-        reclaimOnConflict()
-        throw new OptimisticConcurrencyException(newVersion)
-    }
-    store.putObject(hintFile(table), newVersion.toString.getBytes(StandardCharsets.UTF_8))
+    txn.claim(metaFile(table, newVersion),
+      newMeta.toString.getBytes(StandardCharsets.UTF_8))
+    txn.store.putObject(hintFile(table), newVersion.toString.getBytes(StandardCharsets.UTF_8))
   }
 
-  /** Best-effort reclaim of an aborted attempt's artifacts. */
-  private def reclaim(store: CommitStore, paths: Seq[String]): Unit =
-    paths.foreach(p => scala.util.Try(store.deleteObject(Paths.get(p))))
+  /** A metadata-only commit of `newMeta` over version `hint`. */
+  private[sinks] def commitMetadata(table: String, store: CommitStore,
+      hint: Long, newMeta: ObjectNode): Unit =
+    txn(store)(commitMetadataVersion(table, _, hint, newMeta))
 
   /** Creates (or repoints) a NAMED REF — Iceberg's tags and branches
     * (spec §refs): a metadata-only commit adding `refs[name]` pointed at
@@ -2634,7 +2613,7 @@ object IcebergSink {
     minSnapshotsToKeep.foreach(v => node.put("min-snapshots-to-keep", v): Unit)
     maxSnapshotAgeMs.foreach(v => node.put("max-snapshot-age-ms", v): Unit)
     newMeta.put("last-updated-ms", System.currentTimeMillis())
-    commitMetadataVersion(table, store, hint, newMeta)
+    commitMetadata(table, store, hint, newMeta)
   }
 
   /** Drops a named ref (its snapshot becomes expirable again). */
@@ -2649,7 +2628,7 @@ object IcebergSink {
     val newMeta = meta.deepCopy[ObjectNode]()
     newMeta.get("refs").asInstanceOf[ObjectNode].remove(name): Unit
     newMeta.put("last-updated-ms", System.currentTimeMillis())
-    commitMetadataVersion(table, store, hint, newMeta)
+    commitMetadata(table, store, hint, newMeta)
   }
 
   /** Every named ref of the table: name → (snapshot-id, type). */
@@ -2699,61 +2678,56 @@ object IcebergSink {
     // (a branch would quietly publish the corruption via fastForward)
     val aligned = alignToStored(df, schema.fieldNames)
     SchemaGate.enforce(aligned.schema, schema)
-    val infos = stageWrite(store, table, "branch-" + branch,
-      aligned.toDF(schema.fieldNames.toIndexedSeq: _*))
-    val added = infos.map(_.recordCount).sum
-    if (added == 0L) return meta.get("refs").get(branch).get("snapshot-id").asLong()
-    val snapshotId = math.abs(new java.util.Random().nextLong())
-    val emptySpec = """{"spec-id":0,"fields":[]}"""
-    val (manifest, manLen) =
-      writeAvroArtifact(table, store, s"manifest-${java.util.UUID.randomUUID()}.avro")(f =>
-        IcebergAvro.writeManifest(f, infos, snapshotId,
-          currentSchemaJson(meta)._2, emptySpec))
-    def reclaimAll(): Unit = reclaim(store, infos.map(_.absPath) :+ manifest.toString)
-    // OCC retry parity with a main append (writeWithRetry): a benign
-    // concurrent commit — a main append, a compaction, another branch —
-    // must not kill the staging lane (a streaming WAP pipeline routes
-    // every micro-batch through here). The staged data files and manifest
-    // are reusable across attempts; each retry re-reads the metadata,
-    // re-validates the branch, and re-claims the next version.
-    var attempt = 0
-    while (true) {
-      val hintNow =
-        if (attempt == 0) hint
-        else readHint(table).getOrElse(
-          throw new IllegalStateException(s"version hint vanished: $table"))
-      val metaNow =
-        if (attempt == 0) meta
-        else mapper.readTree(Files.readString(metaFile(table, hintNow)))
-      requireBranchHead(metaNow, branch): Unit
-      val seq = metaNow.get("last-sequence-number").asLong() + 1
-      val lastAttempt = attempt >= 3
-      try {
-        commitSnapshot(table, store, metaNow, hintNow, snapshotId, seq,
+    txn(store, Txn.Retries) { t =>
+      val infos = stageWrite(t, table, "branch-" + branch,
+        aligned.toDF(schema.fieldNames.toIndexedSeq: _*))
+      val added = infos.map(_.recordCount).sum
+      if (added == 0L) return meta.get("refs").get(branch).get("snapshot-id").asLong()
+      val snapshotId = math.abs(new java.util.Random().nextLong())
+      val emptySpec = """{"spec-id":0,"fields":[]}"""
+      val (manifest, manLen) =
+        writeAvroArtifact(table, t, s"manifest-${java.util.UUID.randomUUID()}.avro")(f =>
+          IcebergAvro.writeManifest(f, infos, snapshotId,
+            currentSchemaJson(meta)._2, emptySpec))
+      // OCC retry parity with a main append (writeWithRetry): a benign
+      // concurrent commit — a main append, a compaction, another branch —
+      // must not kill the staging lane (a streaming WAP pipeline routes
+      // every micro-batch through here). The staged data files and manifest
+      // are reusable across attempts; each retry re-reads the metadata,
+      // re-validates the branch, and re-claims the next version.
+      t.attempt { n =>
+        val hintNow =
+          if (n == 0) hint
+          else readHint(table).getOrElse(
+            throw new IllegalStateException(s"version hint vanished: $table"))
+        val metaNow =
+          if (n == 0) meta
+          else mapper.readTree(Files.readString(metaFile(table, hintNow)))
+        requireBranchHead(metaNow, branch): Unit
+        val seq = metaNow.get("last-sequence-number").asLong() + 1
+        commitSnapshot(table, t, metaNow, hintNow, snapshotId, seq,
           currentSchemaJson(metaNow)._1,
           Seq(IcebergAvro.manifestRow(manifest.toFile.getAbsolutePath, manLen,
             seq, snapshotId, infos.size, added)),
           "append", Map("added-records" -> added.toString) ++ summaryProps,
-          reclaimOnConflict = () => if (lastAttempt) reclaimAll(),
           branch = Some(branch))
-        return snapshotId
-      } catch {
-        case _: OptimisticConcurrencyException if !lastAttempt => attempt += 1
+        snapshotId
       }
     }
-    -1L // unreachable
   }
 
-  /** Avro artifact `name` in the table's metadata dir: written where the
-    * store stages it (in place on a local store), then published.
+  /** Avro artifact `name` in the table's metadata dir, an artifact of
+    * `txn`: written where the store stages it (in place on a local store),
+    * then published.
     */
-  private def writeAvroArtifact(table: String, store: CommitStore,
+  private def writeAvroArtifact(table: String, txn: Txn,
       name: String)(write: File => Long): (java.nio.file.Path, Long) = {
     val target = metaDir(table).resolve(name)
-    val staged = store.stagingFor(target.toFile)
+    txn.record(target)
+    val staged = txn.store.stagingFor(target.toFile)
     try {
       val len = write(staged)
-      store.publish(staged.toPath, target)
+      txn.store.publish(staged.toPath, target)
       (target, len)
     } finally if (staged != target.toFile) staged.delete(): Unit
   }
@@ -2762,17 +2736,13 @@ object IcebergSink {
     * ([[deleteWhere]]/[[upsert]]): writes the manifest list (previous
     * snapshot's rows carried verbatim ++ `newManifestRows`), deep-copies
     * the previous metadata with the new snapshot appended, claims version
-    * `hint`+1 via IF-NOT-EXISTS, and updates the hint. A losing race
-    * deletes the list, runs the caller's `reclaimOnConflict` (its staged
-    * data/manifest artifacts), and throws
-    * [[OptimisticConcurrencyException]].
+    * `hint`+1 via IF-NOT-EXISTS, and updates the hint.
     */
-  private def commitSnapshot(table: String, store: CommitStore,
+  private def commitSnapshot(table: String, txn: Txn,
       meta: com.fasterxml.jackson.databind.JsonNode, hint: Long,
       snapshotId: Long, seq: Long, schemaId: Int,
       newManifestRows: Seq[org.apache.avro.generic.GenericRecord],
       operation: String, summaryProps: Map[String, String],
-      reclaimOnConflict: () => Unit,
       branch: Option[String] = None,
       carriedOverride: Option[Seq[org.apache.avro.generic.GenericRecord]] = None,
       formatVersion: Option[Int] = None,
@@ -2794,7 +2764,7 @@ object IcebergSink {
       .map(p => IcebergAvro.readManifestList(new File(requireAvro(abs(table, p)))))
       .getOrElse(Nil))
     val (listPath, _) =
-      writeAvroArtifact(table, store,
+      writeAvroArtifact(table, txn,
         s"manifest-list-${java.util.UUID.randomUUID()}.avro") { f =>
         IcebergAvro.writeManifestList(f, carried ++ newManifestRows,
           snapshotId, seq); 0L
@@ -2854,10 +2824,7 @@ object IcebergSink {
         refsNode.set[com.fasterxml.jackson.databind.JsonNode](b, node)
         ()
     }
-    commitMetadataVersion(table, store, hint, newMeta, () => {
-      reclaim(store, Seq(listPath.toString))
-      reclaimOnConflict()
-    })
+    commitMetadataVersion(table, txn, hint, newMeta)
   }
 
   /** The current schema's JSON node (by current-schema-id) — the key
@@ -3002,38 +2969,37 @@ object IcebergSink {
     }.toMap
     val snapshotId = math.abs(new java.util.Random().nextLong())
     val seq = meta.get("last-sequence-number").asLong() + 1
-    val published = scala.collection.mutable.ArrayBuffer[String]()
-    val rows = try perManifest.map {
-      case (pf, specId, specJson, schemaMeta, entries) =>
-        val infos = entries.map { e =>
-          IcebergAvro.DataFileInfo(e.path, e.size, e.rows, e.stats,
-            pf.map(x => e.pvals.getOrElse(x.name, null)),
-            firstRowId = Some(fridByPath(e.path)))
-        }
-        val (mp, len) = writeAvroArtifact(table, store,
-          s"manifest-${java.util.UUID.randomUUID()}.avro")(f =>
-          IcebergAvro.writeManifest(f, infos, snapshotId,
-            schemaMeta.getOrElse(currentSchemaJson(meta)._2), specJson, pf,
-            specId = specId, entrySeqs = seqByPath))
-        published += mp.toString
-        IcebergAvro.manifestRowExisting(mp.toFile.getAbsolutePath, len, seq,
-          entries.map(e => seqByPath(e.path)).min, snapshotId, infos.size,
-          infos.map(_.recordCount).sum, specId = specId)
-    } catch { case e: Throwable => reclaim(store, published.toSeq); throw e }
     // delete manifests carry forward verbatim — their (file, pos)
     // references stay valid because every data entry kept its sequence
     val carriedDeletes = IcebergAvro.readManifestList(
       new File(requireAvro(abs(table, list))))
       .filter(_.get("content").asInstanceOf[Int] == 1)
-    commitSnapshot(table, store, meta, hint, snapshotId, seq,
-      currentSchemaJson(meta)._1, rows, "replace",
-      Map("graft.row-lineage" -> "enabled",
-        "assigned-rows" -> next.toString),
-      reclaimOnConflict = () => reclaim(store, published.toSeq),
-      carriedOverride = Some(carriedDeletes),
-      formatVersion = Some(3),
-      assignedRows = next,
-      metaMutate = m => m.put("next-row-id", 0L): Unit)
+    txn(store) { t =>
+      val rows = perManifest.map {
+        case (pf, specId, specJson, schemaMeta, entries) =>
+          val infos = entries.map { e =>
+            IcebergAvro.DataFileInfo(e.path, e.size, e.rows, e.stats,
+              pf.map(x => e.pvals.getOrElse(x.name, null)),
+              firstRowId = Some(fridByPath(e.path)))
+          }
+          val (mp, len) = writeAvroArtifact(table, t,
+            s"manifest-${java.util.UUID.randomUUID()}.avro")(f =>
+            IcebergAvro.writeManifest(f, infos, snapshotId,
+              schemaMeta.getOrElse(currentSchemaJson(meta)._2), specJson, pf,
+              specId = specId, entrySeqs = seqByPath))
+          IcebergAvro.manifestRowExisting(mp.toFile.getAbsolutePath, len, seq,
+            entries.map(e => seqByPath(e.path)).min, snapshotId, infos.size,
+            infos.map(_.recordCount).sum, specId = specId)
+      }
+      commitSnapshot(table, t, meta, hint, snapshotId, seq,
+        currentSchemaJson(meta)._1, rows, "replace",
+        Map("graft.row-lineage" -> "enabled",
+          "assigned-rows" -> next.toString),
+        carriedOverride = Some(carriedDeletes),
+        formatVersion = Some(3),
+        assignedRows = next,
+        metaMutate = m => m.put("next-row-id", 0L): Unit)
+    }
     next
   }
 
@@ -3138,68 +3104,52 @@ object IcebergSink {
       matched.select(col("_gf_mpath"), col(DvPlane.PosCol)),
       liveDvs(snap.deletes), puffinAbs, packPuffinShard)
     if (descs.isEmpty) return 0L
-    val deletedNow = descs.map(_.freshCardinality).sum
-    val puffinPaths: Seq[Path] =
-      descs.map(_.shard).distinct.map(i => Paths.get(puffinAbs(i)))
-    val snapshotId = math.abs(new java.util.Random().nextLong())
-    val seq = meta.get("last-sequence-number").asLong() + 1
-    val infos = descs.sortBy(_.file).map { d =>
-      IcebergAvro.DataFileInfo(puffinAbs(d.shard), d.shardLength, d.cardinality,
-        dv = Some((d.file, d.offset, d.size)))
-    }
-    val (manifestPath, manifestLen) = writeAvroArtifact(table, store,
-      s"manifest-${java.util.UUID.randomUUID()}.avro")(f =>
-      IcebergAvro.writeManifest(f, infos, snapshotId,
-        currentSchemaJson(meta)._2, """{"spec-id":0,"fields":[]}""",
-        Nil, content = 1))
-    val row = IcebergAvro.manifestRow(manifestPath.toFile.getAbsolutePath,
-      manifestLen, seq, snapshotId, infos.size,
-      infos.map(_.recordCount).sum, content = 1)
-    // an UPDATE stages the transformed replacements as new data files in
-    // the SAME snapshot — SET expressions evaluate against the PRE-update
-    // row (matched is persisted; one merged-view scan feeds both planes)
-    def reclaimDvPlane(): Unit = reclaim(store, (puffinPaths :+ manifestPath).map(_.toString))
-    val replacement = try setOpt.map { set =>
-      val schema = snap.schema
-      val rep = matched.select(schema.fieldNames.map(c =>
-        set.get(c).map(e => expr(e).cast(schema(c).dataType).as(c))
-          .getOrElse(col(c))).toIndexedSeq: _*)
-      val repInfos0 = stageWrite(store, table, "update", rep)
-      // an UPDATE's replacement rows are NEW rows (update = delete + insert)
-      val repInfos = withFirstRowIds(meta, repInfos0)
-      val (repManifest, repLen) = writeAvroArtifact(table, store,
+    txn(store) { t =>
+      t.record(descs.map(_.shard).distinct.map(i => Paths.get(puffinAbs(i))): _*)
+      val deletedNow = descs.map(_.freshCardinality).sum
+      val snapshotId = math.abs(new java.util.Random().nextLong())
+      val seq = meta.get("last-sequence-number").asLong() + 1
+      val infos = descs.sortBy(_.file).map { d =>
+        IcebergAvro.DataFileInfo(puffinAbs(d.shard), d.shardLength, d.cardinality,
+          dv = Some((d.file, d.offset, d.size)))
+      }
+      val (manifestPath, manifestLen) = writeAvroArtifact(table, t,
         s"manifest-${java.util.UUID.randomUUID()}.avro")(f =>
-        IcebergAvro.writeManifest(f, repInfos, snapshotId,
-          currentSchemaJson(meta)._2, """{"spec-id":0,"fields":[]}"""))
-      (IcebergAvro.manifestRow(repManifest.toFile.getAbsolutePath, repLen, seq,
-        snapshotId, repInfos.size, repInfos.map(_.recordCount).sum),
-        repInfos, repManifest)
-    } catch { case e: Throwable =>
-      // a failed replacement staging must not strand the already-published
-      // Puffin shards + DV manifest (ADVICE r15)
-      reclaimDvPlane()
-      throw e
+        IcebergAvro.writeManifest(f, infos, snapshotId,
+          currentSchemaJson(meta)._2, """{"spec-id":0,"fields":[]}""",
+          Nil, content = 1))
+      val row = IcebergAvro.manifestRow(manifestPath.toFile.getAbsolutePath,
+        manifestLen, seq, snapshotId, infos.size,
+        infos.map(_.recordCount).sum, content = 1)
+      // an UPDATE stages the transformed replacements as new data files in
+      // the SAME snapshot — SET expressions evaluate against the PRE-update
+      // row (matched is persisted; one merged-view scan feeds both planes)
+      val replacement = setOpt.map { set =>
+        val schema = snap.schema
+        val rep = matched.select(schema.fieldNames.map(c =>
+          set.get(c).map(e => expr(e).cast(schema(c).dataType).as(c))
+            .getOrElse(col(c))).toIndexedSeq: _*)
+        // an UPDATE's replacement rows are NEW rows (update = delete + insert)
+        val repInfos = withFirstRowIds(meta, stageWrite(t, table, "update", rep))
+        val (repManifest, repLen) = writeAvroArtifact(table, t,
+          s"manifest-${java.util.UUID.randomUUID()}.avro")(f =>
+          IcebergAvro.writeManifest(f, repInfos, snapshotId,
+            currentSchemaJson(meta)._2, """{"spec-id":0,"fields":[]}"""))
+        (IcebergAvro.manifestRow(repManifest.toFile.getAbsolutePath, repLen, seq,
+          snapshotId, repInfos.size, repInfos.map(_.recordCount).sum), repInfos)
+      }
+      commitSnapshot(table, t, meta, hint, snapshotId, seq,
+        currentSchemaJson(meta)._1, Seq(row) ++ replacement.map(_._1),
+        if (setOpt.isDefined) "overwrite" else "delete",
+        Map("added-dvs" -> infos.size.toString,
+          "added-position-deletes" -> deletedNow.toString) ++
+          setOpt.map(_ => "replaced-records" -> deletedNow.toString),
+        formatVersion = Some(3),
+        assignedRows =
+          if (!meta.has("next-row-id")) 0L
+          else replacement.map(_._2.map(_.recordCount).sum).getOrElse(0L))
+      deletedNow
     }
-    commitSnapshot(table, store, meta, hint, snapshotId, seq,
-      currentSchemaJson(meta)._1, Seq(row) ++ replacement.map(_._1),
-      if (setOpt.isDefined) "overwrite" else "delete",
-      Map("added-dvs" -> infos.size.toString,
-        "added-position-deletes" -> deletedNow.toString) ++
-        setOpt.map(_ => "replaced-records" -> deletedNow.toString),
-      reclaimOnConflict = () => {
-        // BOTH planes reclaim on an OCC conflict — the vectors AND the
-        // update's replacement files/manifest/staging (posRewrite's
-        // contract; ADVICE r15)
-        reclaimDvPlane()
-        replacement.foreach { case (_, repInfos, repManifest) =>
-          reclaim(store, repInfos.map(_.absPath) :+ repManifest.toString)
-        }
-      },
-      formatVersion = Some(3),
-      assignedRows =
-        if (!meta.has("next-row-id")) 0L
-        else replacement.map(_._2.map(_.recordCount).sum).getOrElse(0L))
-    deletedNow
     } finally matched.unpersist(): Unit
   }
 
@@ -3438,68 +3388,62 @@ object IcebergSink {
           delPartFields.map(pf => groupKeys(gid).getOrElse(pf.name, null))
         else delPartFields.map(_ => null)
       }
-    val infos = stageWrite(store, table, "delete", dels,
-      if (delPartFields.isEmpty) Nil else Seq("_gf_gid"), partValuesOfPart)
-    if (infos.isEmpty) return 0L
-    val deletedRows = infos.map(_.recordCount).sum
-    val snapshotId = math.abs(new java.util.Random().nextLong())
-    val seq = meta.get("last-sequence-number").asLong() + 1
-    val (schemaId, schemaJson) = currentSchemaJson(meta)
-    // the delete manifest carries the table's partition spec so its
-    // entries' values are interpretable by any pruned reader
-    val delSpecJson =
-      if (delPartFields.isEmpty) """{"spec-id":0,"fields":[]}"""
-      else {
-        val fidOf = snap.curFields.map(f => f.name -> f.id).toMap
-        val fieldsJson = delPartFields.zip(delPartSpecs).map { case (pf, ps) =>
-          s"""{"name":"${pf.name}","transform":"${ps.transform}",""" +
-            s""""source-id":${fidOf(ps.source)},"field-id":${pf.fieldId}}"""
-        }.mkString(",")
-        s"""{"spec-id":0,"fields":[$fieldsJson]}"""
-      }
-    val (manifestPath, manifestLen) =
-      writeAvroArtifact(table, store, s"manifest-${java.util.UUID.randomUUID()}.avro")(f =>
-        IcebergAvro.writeManifest(f, infos, snapshotId, schemaJson,
-          delSpecJson, delPartFields, content = 1))
-    val delRow = IcebergAvro.manifestRow(manifestPath.toFile.getAbsolutePath,
-      manifestLen, seq, snapshotId, infos.size, deletedRows, content = 1)
-    // an UPDATE additionally stages the transformed replacements as new
-    // data files in the SAME snapshot — SET expressions evaluate against
-    // the PRE-update row (matched is persisted; one merged-view scan)
-    def reclaimDeletePlane(): Unit =
-      reclaim(store, infos.map(_.absPath) :+ manifestPath.toString)
-    val replacement = try setOpt.map { set =>
-      val schema = snap.schema
-      val rep = matched.select(schema.fieldNames.map(c =>
-        set.get(c).map(e => expr(e).cast(schema(c).dataType).as(c))
-          .getOrElse(col(c))).toIndexedSeq: _*)
-      val repInfos = withFirstRowIds(meta, stageWrite(store, table, "update", rep))
-      val (repManifest, repLen) = writeAvroArtifact(table, store,
-        s"manifest-${java.util.UUID.randomUUID()}.avro")(f =>
-        IcebergAvro.writeManifest(f, repInfos, snapshotId, schemaJson,
-          """{"spec-id":0,"fields":[]}"""))
-      (repInfos,
-        IcebergAvro.manifestRow(repManifest.toFile.getAbsolutePath, repLen, seq,
-          snapshotId, repInfos.size, repInfos.map(_.recordCount).sum),
-        repManifest)
-    } catch { case e: Throwable => reclaimDeletePlane(); throw e }
-    val rows = Seq(delRow) ++ replacement.map(_._2)
-    commitSnapshot(table, store, meta, hint, snapshotId, seq, schemaId,
-      rows, if (setOpt.isDefined) "overwrite" else "delete",
-      Map("added-position-delete-files" -> infos.size.toString,
-        "added-position-deletes" -> deletedRows.toString) ++
-        replacement.map(r =>
-          "replaced-records" -> r._1.map(_.recordCount).sum.toString),
-      reclaimOnConflict = () => {
-        reclaimDeletePlane()
-        replacement.foreach { case (repInfos, _, repManifest) =>
-          reclaim(store, repInfos.map(_.absPath) :+ repManifest.toString)
+    txn(store) { t =>
+      val infos = stageWrite(t, table, "delete", dels,
+        if (delPartFields.isEmpty) Nil else Seq("_gf_gid"), partValuesOfPart)
+      if (infos.isEmpty) return 0L
+      val deletedRows = infos.map(_.recordCount).sum
+      val snapshotId = math.abs(new java.util.Random().nextLong())
+      val seq = meta.get("last-sequence-number").asLong() + 1
+      val (schemaId, schemaJson) = currentSchemaJson(meta)
+      // the delete manifest carries the table's partition spec so its
+      // entries' values are interpretable by any pruned reader
+      val delSpecJson =
+        if (delPartFields.isEmpty) """{"spec-id":0,"fields":[]}"""
+        else {
+          val fidOf = snap.curFields.map(f => f.name -> f.id).toMap
+          val fieldsJson = delPartFields.zip(delPartSpecs).map { case (pf, ps) =>
+            s"""{"name":"${pf.name}","transform":"${ps.transform}",""" +
+              s""""source-id":${fidOf(ps.source)},"field-id":${pf.fieldId}}"""
+          }.mkString(",")
+          s"""{"spec-id":0,"fields":[$fieldsJson]}"""
         }
-      }, branch = branch,
-      assignedRows =
-        if (!meta.has("next-row-id")) 0L
-        else replacement.map(_._1.map(_.recordCount).sum).getOrElse(0L))
-    deletedRows
+      val (manifestPath, manifestLen) =
+        writeAvroArtifact(table, t, s"manifest-${java.util.UUID.randomUUID()}.avro")(f =>
+          IcebergAvro.writeManifest(f, infos, snapshotId, schemaJson,
+            delSpecJson, delPartFields, content = 1))
+      val delRow = IcebergAvro.manifestRow(manifestPath.toFile.getAbsolutePath,
+        manifestLen, seq, snapshotId, infos.size, deletedRows, content = 1)
+      // an UPDATE additionally stages the transformed replacements as new
+      // data files in the SAME snapshot — SET expressions evaluate against
+      // the PRE-update row (matched is persisted; one merged-view scan)
+      val replacement = setOpt.map { set =>
+        val schema = snap.schema
+        val rep = matched.select(schema.fieldNames.map(c =>
+          set.get(c).map(e => expr(e).cast(schema(c).dataType).as(c))
+            .getOrElse(col(c))).toIndexedSeq: _*)
+        val repInfos = withFirstRowIds(meta, stageWrite(t, table, "update", rep))
+        val (repManifest, repLen) = writeAvroArtifact(table, t,
+          s"manifest-${java.util.UUID.randomUUID()}.avro")(f =>
+          IcebergAvro.writeManifest(f, repInfos, snapshotId, schemaJson,
+            """{"spec-id":0,"fields":[]}"""))
+        (repInfos,
+          IcebergAvro.manifestRow(repManifest.toFile.getAbsolutePath, repLen, seq,
+            snapshotId, repInfos.size, repInfos.map(_.recordCount).sum))
+      }
+      val rows = Seq(delRow) ++ replacement.map(_._2)
+      commitSnapshot(table, t, meta, hint, snapshotId, seq, schemaId,
+        rows, if (setOpt.isDefined) "overwrite" else "delete",
+        Map("added-position-delete-files" -> infos.size.toString,
+          "added-position-deletes" -> deletedRows.toString) ++
+          replacement.map(r =>
+            "replaced-records" -> r._1.map(_.recordCount).sum.toString),
+        branch = branch,
+        assignedRows =
+          if (!meta.has("next-row-id")) 0L
+          else replacement.map(_._1.map(_.recordCount).sum).getOrElse(0L))
+      deletedRows
+    }
     } finally { if (setOpt.isDefined) matched.unpersist(): Unit }
   }
 
@@ -3548,54 +3492,50 @@ object IcebergSink {
         lit(s"upsert source must be unique on (${keys.mkString(", ")})")))
         .otherwise(lit(true)))
       .drop(dupN)
-    val dataInfos = withFirstRowIds(meta, stageWrite(store, table, "upsert", guarded))
-    val upserted = dataInfos.map(_.recordCount).sum
-    if (upserted == 0L) return 0L
-    // equality-delete rows = the source keys (unique by the guard above,
-    // re-read from the written files so the guarded plan runs ONCE),
-    // stamped with the table's field ids per the spec
-    val keyMeta = keys.zip(eqIds).map { case (k, id) =>
-      k -> new org.apache.spark.sql.types.MetadataBuilder()
-        .putLong("parquet.field.id", id.toLong).build()
-    }.toMap
-    // written with the same per-file discipline as data files (NOT
-    // coalesce(1)): a CDC micro-batch still lands one small file, while
-    // a giant backfill upsert fans its key rows across tasks instead of
-    // funneling every key through one. The read side union-reads all
-    // delete files of a snapshot, so file count is free.
-    val delInfos =
-      try stageWrite(store, table, "upsert-del",
+    txn(store) { t =>
+      val dataInfos = withFirstRowIds(meta, stageWrite(t, table, "upsert", guarded))
+      val upserted = dataInfos.map(_.recordCount).sum
+      if (upserted == 0L) return 0L
+      // equality-delete rows = the source keys (unique by the guard above,
+      // re-read from the written files so the guarded plan runs ONCE),
+      // stamped with the table's field ids per the spec
+      val keyMeta = keys.zip(eqIds).map { case (k, id) =>
+        k -> new org.apache.spark.sql.types.MetadataBuilder()
+          .putLong("parquet.field.id", id.toLong).build()
+      }.toMap
+      // written with the same per-file discipline as data files (NOT
+      // coalesce(1)): a CDC micro-batch still lands one small file, while
+      // a giant backfill upsert fans its key rows across tasks instead of
+      // funneling every key through one. The read side union-reads all
+      // delete files of a snapshot, so file count is free.
+      val delInfos = stageWrite(t, table, "upsert-del",
         spark.read.schema(StructType(schema.fields.filter(f => keys.contains(f.name))))
           .parquet(new File(dataInfos.head.absPath).getParent)
           .select(keys.map(k => col(k).as(k, keyMeta(k))): _*))
-      catch { case e: Throwable => reclaim(store, dataInfos.map(_.absPath)); throw e }
-    val snapshotId = math.abs(new java.util.Random().nextLong())
-    val seq = meta.get("last-sequence-number").asLong() + 1
-    val (schemaId, schemaJson) = currentSchemaJson(meta)
-    val emptySpec = """{"spec-id":0,"fields":[]}"""
-    val (dataManifest, dataLen) =
-      writeAvroArtifact(table, store, s"manifest-${java.util.UUID.randomUUID()}.avro")(f =>
-        IcebergAvro.writeManifest(f, dataInfos, snapshotId, schemaJson, emptySpec))
-    val (delManifest, delLen) =
-      writeAvroArtifact(table, store, s"manifest-${java.util.UUID.randomUUID()}.avro")(f =>
-        IcebergAvro.writeManifest(f, delInfos, snapshotId, schemaJson, emptySpec,
-          Nil, content = 2, equalityIds = eqIds))
-    val newRows = Seq(
-      IcebergAvro.manifestRow(dataManifest.toFile.getAbsolutePath, dataLen, seq,
-        snapshotId, dataInfos.size, upserted),
-      IcebergAvro.manifestRow(delManifest.toFile.getAbsolutePath, delLen, seq,
-        snapshotId, delInfos.size, delInfos.map(_.recordCount).sum, content = 1))
-    commitSnapshot(table, store, meta, hint, snapshotId, seq, schemaId,
-      newRows, "overwrite",
-      Map("added-records" -> upserted.toString,
-        "added-equality-delete-files" -> delInfos.size.toString) ++ summaryProps,
-      branch = branch,
-      reclaimOnConflict = () => {
-        reclaim(store, (dataInfos ++ delInfos).map(_.absPath) :+
-          dataManifest.toString :+ delManifest.toString)
-      },
-      assignedRows = if (meta.has("next-row-id")) upserted else 0L)
-    upserted
+      val snapshotId = math.abs(new java.util.Random().nextLong())
+      val seq = meta.get("last-sequence-number").asLong() + 1
+      val (schemaId, schemaJson) = currentSchemaJson(meta)
+      val emptySpec = """{"spec-id":0,"fields":[]}"""
+      val (dataManifest, dataLen) =
+        writeAvroArtifact(table, t, s"manifest-${java.util.UUID.randomUUID()}.avro")(f =>
+          IcebergAvro.writeManifest(f, dataInfos, snapshotId, schemaJson, emptySpec))
+      val (delManifest, delLen) =
+        writeAvroArtifact(table, t, s"manifest-${java.util.UUID.randomUUID()}.avro")(f =>
+          IcebergAvro.writeManifest(f, delInfos, snapshotId, schemaJson, emptySpec,
+            Nil, content = 2, equalityIds = eqIds))
+      val newRows = Seq(
+        IcebergAvro.manifestRow(dataManifest.toFile.getAbsolutePath, dataLen, seq,
+          snapshotId, dataInfos.size, upserted),
+        IcebergAvro.manifestRow(delManifest.toFile.getAbsolutePath, delLen, seq,
+          snapshotId, delInfos.size, delInfos.map(_.recordCount).sum, content = 1))
+      commitSnapshot(table, t, meta, hint, snapshotId, seq, schemaId,
+        newRows, "overwrite",
+        Map("added-records" -> upserted.toString,
+          "added-equality-delete-files" -> delInfos.size.toString) ++ summaryProps,
+        branch = branch,
+        assignedRows = if (meta.has("next-row-id")) upserted else 0L)
+      upserted
+    }
   }
 
   /** A fresh table dir `data/<tag>-<uuid>` for one write's files. */
@@ -3609,14 +3549,16 @@ object IcebergSink {
     * paths). `partValuesOf` maps a file's dir-relative path to its
     * partition values.
     */
-  private def stageWrite(store: CommitStore, table: String, tag: String,
+  private def stageWrite(txn: Txn, table: String, tag: String,
       df: DataFrame, partitionBy: Seq[String] = Nil,
       partValuesOf: String => Seq[Any] = _ => Nil): Seq[IcebergAvro.DataFileInfo] = {
     val dir = newDataDir(table, tag)
-    TaskWrite(store, df, dir, partitionBy) { (f, conf) =>
+    val infos = TaskWrite(txn.store, df, dir, partitionBy) { (f, conf) =>
       Some(ParquetFooter.read(f, conf)._1).filter(_ > 0L)
     }.map(w => IcebergAvro.DataFileInfo(new File(dir, w.rel).getAbsolutePath,
       w.size, w.stats, partitionValues = partValuesOf(w.rel)))
+    txn.record(infos.map(i => Paths.get(i.absPath)): _*)
+    infos
   }
 
   /** Row lineage (spec §Row Lineage): on a lineage-enabled table, ADDED
@@ -3659,50 +3601,43 @@ object IcebergSink {
     val schema = DataType.fromJson(
       meta.get("properties").get("graft.spark-schema").asText()).asInstanceOf[StructType]
     // stage one parquet key file set per group, stamped with the table's
-    // field ids per the spec (readers resolve equality_ids against them);
-    // a failing group reclaims the groups already published
-    val staged = scala.collection.mutable.ArrayBuffer[
-      (Seq[Int], Seq[IcebergAvro.DataFileInfo])]()
-    def reclaimStaged(): Unit =
-      staged.foreach { case (_, infos) => reclaim(store, infos.map(_.absPath)) }
-    try groups.foreach { case (keys, keyCols) =>
-      keyCols.foreach(k => require(schema.fieldNames.contains(k),
-        s"no such key column: $k"))
-      val eqIds = keyCols.map(k => curFieldsOf(meta, schema)
-        .find(_.name == k).get.id)
-      val keyMeta = keyCols.zip(eqIds).map { case (k, id) =>
-        k -> new org.apache.spark.sql.types.MetadataBuilder()
-          .putLong("parquet.field.id", id.toLong).build()
-      }.toMap
-      staged += (eqIds -> stageWrite(store, table, "delete-keys",
-        keys.select(keyCols.map(k => col(k).cast(schema(k).dataType)
-          .as(k, keyMeta(k))): _*).distinct()))
-    } catch { case e: Throwable => reclaimStaged(); throw e }
-    val total = staged.flatMap(_._2).map(_.recordCount).sum
-    if (total == 0L) { reclaimStaged(); return 0L }
-    val snapshotId = math.abs(new java.util.Random().nextLong())
-    val seq = meta.get("last-sequence-number").asLong() + 1
-    val (schemaId, schemaJson) = currentSchemaJson(meta)
-    val emptySpec = """{"spec-id":0,"fields":[]}"""
-    val manifests = staged.toSeq.filter(_._2.nonEmpty).map {
-      case (eqIds, infos) =>
-        val (path, len) = writeAvroArtifact(table, store,
-          s"manifest-${java.util.UUID.randomUUID()}.avro")(f =>
-          IcebergAvro.writeManifest(f, infos, snapshotId, schemaJson, emptySpec,
-            Nil, content = 2, equalityIds = eqIds))
-        (path, IcebergAvro.manifestRow(path.toFile.getAbsolutePath, len, seq,
-          snapshotId, infos.size, infos.map(_.recordCount).sum, content = 1))
+    // field ids per the spec (readers resolve equality_ids against them)
+    txn(store) { t =>
+      val staged = groups.map { case (keys, keyCols) =>
+        keyCols.foreach(k => require(schema.fieldNames.contains(k),
+          s"no such key column: $k"))
+        val eqIds = keyCols.map(k => curFieldsOf(meta, schema)
+          .find(_.name == k).get.id)
+        val keyMeta = keyCols.zip(eqIds).map { case (k, id) =>
+          k -> new org.apache.spark.sql.types.MetadataBuilder()
+            .putLong("parquet.field.id", id.toLong).build()
+        }.toMap
+        eqIds -> stageWrite(t, table, "delete-keys",
+          keys.select(keyCols.map(k => col(k).cast(schema(k).dataType)
+            .as(k, keyMeta(k))): _*).distinct())
+      }
+      val total = staged.flatMap(_._2).map(_.recordCount).sum
+      if (total > 0L) {
+        val snapshotId = math.abs(new java.util.Random().nextLong())
+        val seq = meta.get("last-sequence-number").asLong() + 1
+        val (schemaId, schemaJson) = currentSchemaJson(meta)
+        val emptySpec = """{"spec-id":0,"fields":[]}"""
+        val manifests = staged.filter(_._2.nonEmpty).map {
+          case (eqIds, infos) =>
+            val (path, len) = writeAvroArtifact(table, t,
+              s"manifest-${java.util.UUID.randomUUID()}.avro")(f =>
+              IcebergAvro.writeManifest(f, infos, snapshotId, schemaJson, emptySpec,
+                Nil, content = 2, equalityIds = eqIds))
+            IcebergAvro.manifestRow(path.toFile.getAbsolutePath, len, seq,
+              snapshotId, infos.size, infos.map(_.recordCount).sum, content = 1)
+        }
+        commitSnapshot(table, t, meta, hint, snapshotId, seq, schemaId,
+          manifests, "delete",
+          Map("deleted-key-rows" -> total.toString,
+            "added-equality-delete-files" -> staged.map(_._2.size).sum.toString))
+      }
+      total
     }
-    commitSnapshot(table, store, meta, hint, snapshotId, seq, schemaId,
-      manifests.map(_._2), "delete",
-      Map("deleted-key-rows" -> total.toString,
-        "added-equality-delete-files" ->
-          staged.map(_._2.size).sum.toString),
-      reclaimOnConflict = () => {
-        reclaimStaged()
-        reclaim(store, manifests.map(_._1.toString))
-      })
-    total
   }
 
   /** CHANGELOG scan — the Iceberg twin of [[DeltaSink.readCdf]]: the
@@ -4029,7 +3964,7 @@ object IcebergSink {
     }
     val arr = newMeta.putArray("snapshots")
     kept.foreach(arr.add)
-    commitMetadataVersion(table, store, hint, newMeta)
+    commitMetadata(table, store, hint, newMeta)
     def unlink(p: String): Unit = store.deleteObject(Paths.get(p))
     (expMeta -- keptMeta).foreach(unlink)
     val deadData = expData -- keptData -- deltaLive

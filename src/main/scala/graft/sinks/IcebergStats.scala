@@ -192,7 +192,6 @@ object IcebergStats {
     val footerSize = fileBytes.length - footerStart
     val statsPath = Paths.get(table, "metadata",
       s"stats-${java.util.UUID.randomUUID()}.puffin")
-    store.putObject(statsPath, fileBytes)
     // metadata-only commit: REPLACE the statistics list with this file's
     // entry (spec: a list of statistics files, keyed by snapshot)
     val newMeta = meta.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
@@ -223,10 +222,10 @@ object IcebergStats {
       // offset/length ride along so [[ndv]] never reopens the Puffin
       b.put("offset", off).put("length", len): Unit
     }
-    try IcebergSink.commitMetadataVersion(table, store, hint, newMeta)
-    catch { case e: Throwable =>
-      scala.util.Try(store.deleteObject(statsPath)): Unit
-      throw e
+    IcebergSink.txn(store) { t =>
+      t.record(statsPath)
+      store.putObject(statsPath, fileBytes)
+      IcebergSink.commitMetadataVersion(table, t, hint, newMeta)
     }
     // the replaced stats file is dead the moment the pointer moved
     // (registrations are table-relative; resolve before reclaiming)
@@ -481,7 +480,6 @@ object IcebergStats {
       } finally CommitStore.deleteTree(staging)
     val statsPath = Paths.get(table, "metadata",
       s"partition-stats-$snapshotId-${java.util.UUID.randomUUID()}.parquet")
-    store.putObject(statsPath, bytes)
     // metadata-only commit: REPLACE the partition-statistics list
     val newMeta = meta.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
     val oldPaths: Seq[String] =
@@ -497,10 +495,10 @@ object IcebergStats {
       .put("snapshot-id", snapshotId)
       .put("statistics-path", s"metadata/${statsPath.getFileName}")
       .put("file-size-in-bytes", bytes.length.toLong)
-    try IcebergSink.commitMetadataVersion(table, store, hint, newMeta)
-    catch { case e: Throwable =>
-      scala.util.Try(store.deleteObject(statsPath)): Unit
-      throw e
+    IcebergSink.txn(store) { t =>
+      t.record(statsPath)
+      store.putObject(statsPath, bytes)
+      IcebergSink.commitMetadataVersion(table, t, hint, newMeta)
     }
     oldPaths.foreach(p =>
       scala.util.Try(store.deleteObject(Paths.get(IcebergSink.abs(table, p)))))

@@ -1234,4 +1234,223 @@ class CommitStoreSpec extends AnyFunSuite {
     assert(parquetUnder(pi).exists(_.contains("lang=__HIVE_DEFAULT_PARTITION__/")))
     assert(IcebergSink.read(spark, pi).filter($"lang".isNull).count() == 1)
   }
+
+  // ---- one commit transaction: the reclaim rule ----
+
+  /** Every regular file under `dir`, relative to it. */
+  private def filesUnder(dir: String): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    val r = Paths.get(dir)
+    val walk = Files.walk(r)
+    try walk.iterator().asScala.filter(Files.isRegularFile(_))
+      .map(r.relativize(_).toString).toSet
+    finally walk.close()
+  }
+
+  private def census(df: org.apache.spark.sql.DataFrame): Seq[Any] = {
+    import org.apache.spark.sql.functions.{count, sum}
+    df.agg(count("*"), sum("id"), sum("v")).head().toSeq
+  }
+
+  /** A store that stages data files apart and publishes them from tasks,
+    * like an object store, over the local filesystem; every publish —
+    * driver puts and task publishes and writes alike — ticks [[FaultPoint]].
+    */
+  private def faultStore: CommitStore = new graft.sinks.ObjectStore {
+    override def putIfAbsent(t: java.nio.file.Path, b: Array[Byte]): Unit = {
+      FaultPoint.claimed()
+      CommitStore.Local.putIfAbsent(t, b)
+    }
+    override def taskIO = Some(new FaultTaskIO)
+    override def putObject(t: java.nio.file.Path, b: Array[Byte]): Unit = {
+      FaultPoint.tick(t.toString)
+      super.putObject(t, b)
+    }
+  }
+
+  test("a fault at any publish before the claim leaves the pre-state and strands nothing") {
+    val s = spark
+    import s.implicits._
+    def rows(lo: Long, hi: Long) =
+      (lo to hi).map(i => (i, s"n$i", i * 0.5)).toDF("id", "name", "v").repartition(2)
+    val upserts = Seq((1L, "u1", 10.0), (2L, "u2", 20.0), (100L, "new", 1.0))
+      .toDF("id", "name", "v")
+    def delta(t: String) = census(DeltaSink.read(spark, t))
+    def ice(t: String) = census(IcebergSink.read(spark, t))
+    def mkDelta(t: String): Unit = assert(DeltaSink.write(rows(1, 20), t))
+    def mkIce(t: String): Unit = IcebergSink.write(rows(1, 20), t, IcebergSink.CreateExclusive)
+    // (verb, set-up, run through a store, census)
+    val walks: Seq[(String, String => Unit, (String, CommitStore) => Unit, String => Seq[Any])] = Seq(
+      ("delta append", mkDelta, (t, st) => DeltaSink.append(rows(21, 30), t, store = st): Unit, delta),
+      ("delta merge with CDF", mkDelta,
+        (t, st) => DeltaSink.merge(spark, t, upserts, Seq("id"), store = st): Unit, delta),
+      ("delta compact", t => { mkDelta(t); DeltaSink.append(rows(21, 30), t) },
+        (t, st) => DeltaSink.compact(spark, t, store = st): Unit, delta),
+      ("iceberg append", mkIce,
+        (t, st) => IcebergSink.writeWithRetry(rows(21, 30), t, IcebergSink.Append, store = st), ice),
+      ("iceberg deleteWhereDV", mkIce,
+        (t, st) => IcebergSink.deleteWhereDV(spark, t, "id <= 3", st): Unit, ice),
+      ("iceberg upsert", mkIce,
+        (t, st) => IcebergSink.upsert(spark, t, upserts, Seq("id"), st): Unit, ice),
+      ("iceberg rewriteManifests",
+        t => { mkIce(t); IcebergSink.write(rows(21, 30), t, IcebergSink.Append) },
+        (t, st) => IcebergSink.rewriteManifests(t, st): Unit, ice))
+    def chain(e: Throwable): Seq[Throwable] =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq
+    walks.foreach { case (verb, setup, run, read) =>
+      // a clean pass counts the publishes before the claim and gives the
+      // post-state
+      val dry = tmp()
+      setup(dry)
+      FaultPoint.reset(Int.MaxValue)
+      run(dry, faultStore)
+      val n = FaultPoint.beforeClaim
+      val post = read(dry)
+      assert(n >= 1, s"$verb publishes nothing before its claim")
+      (1 to n).foreach { k =>
+        val t = tmp()
+        setup(t)
+        val pre = read(t)
+        val preFiles = filesUnder(t)
+        FaultPoint.reset(k)
+        val e = intercept[Throwable](run(t, faultStore))
+        FaultPoint.reset(Int.MaxValue)
+        // the store's own exception (a deletion-vector shard written from a
+        // task arrives as the task failure's cause)
+        assert(chain(e).exists(c => Option(c.getMessage).exists(_.startsWith("injected fault"))),
+          s"$verb k=$k: $e")
+        assert(read(t) == pre, s"$verb k=$k")
+        assert(filesUnder(t) == preFiles, s"$verb k=$k left ${filesUnder(t) -- preFiles}")
+        run(t, CommitStore.Local)
+        assert(read(t) == post, s"$verb k=$k re-run")
+      }
+    }
+  }
+
+  test("a failed change-data upload in a Delta merge strands nothing") {
+    val s = spark
+    import s.implicits._
+    val root = Paths.get(tmp())
+    val delta = root.resolve("d").toString
+    val mk = new HttpObjectStore.Server(root)
+    try {
+      val c = new HttpObjectStore.Client(mk.endpoint, root)
+      assert(DeltaSink.write((1L to 20L).map(i => (i, s"n$i", i * 0.5))
+        .toDF("id", "name", "v").repartition(2), delta, store = c))
+    } finally mk.close()
+    val pre = census(DeltaSink.read(spark, delta))
+    val server = new HttpObjectStore.Server(root,
+      partFailure = (key, _) => key.contains("_change_data/"))
+    try {
+      val client = new HttpObjectStore.Client(server.endpoint, root)
+      intercept[java.io.IOException] {
+        DeltaSink.merge(spark, delta,
+          Seq((1L, "u1", 10.0), (100L, "new", 1.0)).toDF("id", "name", "v"),
+          Seq("id"), store = client)
+      }
+      assert(server.stagedUploads.isEmpty)
+      assert(DeltaSink.latestVersion(delta) == 1L)
+      assert(census(DeltaSink.read(spark, delta)) == pre)
+      assert(parquetUnder(delta) == deltaLogPaths(delta))
+    } finally server.close()
+  }
+
+  test("a landed claim never loses a referenced file: the hint put fails after the claim") {
+    val s = spark
+    import s.implicits._
+    import scala.jdk.CollectionConverters._
+    /** Fails the first version-hint put that follows a successful claim. */
+    final class HintFailsOnce extends CommitStore {
+      @volatile private var claimed, failed = false
+      override def putIfAbsent(t: java.nio.file.Path, b: Array[Byte]): Unit = {
+        CommitStore.Local.putIfAbsent(t, b)
+        claimed = true
+      }
+      override def taskIO = CommitStore.Local.taskIO
+      override def putObject(t: java.nio.file.Path, b: Array[Byte]): Unit = {
+        if (claimed && !failed && t.getFileName.toString == "version-hint.text") {
+          failed = true
+          throw new java.io.IOException("hint put failed")
+        }
+        super.putObject(t, b)
+      }
+    }
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    /** Every manifest list, manifest and statistics file any metadata
+      * version references.
+      */
+    def referenced(table: String): Set[java.nio.file.Path] = {
+      def abs(p: String) =
+        if (Paths.get(p).isAbsolute) Paths.get(p) else Paths.get(table, p)
+      Files.list(Paths.get(table, "metadata")).iterator().asScala
+        .filter(_.getFileName.toString.endsWith(".metadata.json"))
+        .flatMap { v =>
+          val m = mapper.readTree(Files.readString(v))
+          val lists = m.path("snapshots").elements().asScala
+            .map(sn => abs(sn.get("manifest-list").asText())).toSeq
+          val manifests = lists.flatMap(l =>
+            graft.sinks.IcebergAvro.readManifestList(l.toFile)
+              .map(r => abs(r.get("manifest_path").toString)))
+          val stats = Seq("statistics", "partition-statistics").flatMap(k =>
+            m.path(k).elements().asScala.map(e => abs(e.get("statistics-path").asText())))
+          lists ++ manifests ++ stats
+        }.toSet
+    }
+    def hint(table: String) = Files.readString(Paths.get(table, "metadata", "version-hint.text"))
+    val verbs: Seq[(String, (String, CommitStore) => Unit)] = Seq(
+      ("rewriteManifests", (t, st) => IcebergSink.rewriteManifests(t, st): Unit),
+      ("writeStats", (t, st) => graft.sinks.IcebergStats.writeStats(spark, t, Seq("id"), st): Unit),
+      ("writePartitionStats",
+        (t, st) => graft.sinks.IcebergStats.writePartitionStats(spark, t, st): Unit))
+    verbs.foreach { case (verb, run) =>
+      val t = tmp()
+      IcebergSink.write((1L to 10L).map(i => (i, s"n$i", i * 0.5)).toDF("id", "name", "v"),
+        t, IcebergSink.CreateExclusive)
+      IcebergSink.write((11L to 20L).map(i => (i, s"n$i", i * 0.5)).toDF("id", "name", "v"),
+        t, IcebergSink.Append)
+      val pre = census(IcebergSink.read(spark, t))
+      val preHint = hint(t)
+      val e = intercept[java.io.IOException](run(t, new HintFailsOnce))
+      assert(e.getMessage == "hint put failed", verb)
+      // the claim landed: a metadata version past the hint exists
+      assert(Files.exists(Paths.get(t, "metadata", s"v${preHint.trim.toLong + 1}.metadata.json")), verb)
+      assert(hint(t) == preHint, verb)
+      assert(census(IcebergSink.read(spark, t)) == pre, verb)
+      val missing = referenced(t).filterNot(Files.exists(_))
+      assert(missing.isEmpty, s"$verb: ${missing.mkString(", ")}")
+    }
+  }
+}
+
+/** The fault point of a publish walk: counts every publish the store sees,
+  * on the driver and in tasks alike (local mode runs both in one JVM),
+  * fails the `failAt`-th, and remembers how many came before the first
+  * claim.
+  */
+object FaultPoint {
+  private val ops = new java.util.concurrent.atomic.AtomicInteger(0)
+  @volatile private var failAt = Int.MaxValue
+  @volatile var beforeClaim: Int = -1
+
+  def reset(k: Int): Unit = { ops.set(0); failAt = k; beforeClaim = -1 }
+
+  def tick(target: String): Unit =
+    if (ops.incrementAndGet() == failAt)
+      throw new java.io.IOException(s"injected fault at $target")
+
+  def claimed(): Unit = if (beforeClaim < 0) beforeClaim = ops.get()
+}
+
+/** Task-side IO over the local filesystem that ticks [[FaultPoint]]. */
+final class FaultTaskIO extends graft.sinks.TaskIO {
+  private def io = CommitStore.LocalTaskIO
+  override def read(absPath: String): Array[Byte] = io.read(absPath)
+  override def write(absPath: String, bytes: Array[Byte]): Unit = {
+    FaultPoint.tick(absPath)
+    io.write(absPath, bytes)
+  }
+  override def publish(staged: String, target: String): Unit = {
+    FaultPoint.tick(target)
+    io.publish(staged, target)
+  }
 }
