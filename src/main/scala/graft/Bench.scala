@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every declared query at SPARK_GRAFT_SF_DIR and
@@ -388,7 +389,7 @@ object Bench {
           try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
           catch { case _: Throwable => () }
           val dt = (System.nanoTime() - t0) / 1e9
-          CachedBlocks.releaseAll(spark)
+          CachedBlocks.releaseAll(spark, blocking = true)
           dt
         }.min
         val (b, bCi) = best(q)
@@ -497,16 +498,20 @@ object Bench {
       catch { case e: Throwable =>
         if (track && !failed.contains(name)) failed ::= name
         System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-        if (!track) { CachedBlocks.releaseAll(spark); return Double.NaN }
+        if (!track) { CachedBlocks.releaseAll(spark, blocking = true); return Double.NaN }
       }
       val dt = (System.nanoTime() - t0) / 1e9
       // BETWEEN queries, outside the timed window (same class as the gc
       // above): drop the query's localCheckpoint blocks so executor
       // storage stays flat across the suite instead of accumulating 270
       // queries' working sets (VERDICT r18 item 5)
-      CachedBlocks.releaseAll(spark)
+      CachedBlocks.releaseAll(spark, blocking = true)
       dt
     }
+    // Janino compiles in this pass (codegen cache misses), reported next to
+    // the canaries: a canary recompiled inside the suite reads slower than
+    // its back-to-back calibration
+    val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val canaries = scala.collection.mutable.ArrayBuffer(canaryCheckpoint(spark, sfDir))
     // per query, the index of the checkpoint taken just BEFORE it ran —
     // with the one after, that brackets the query's regime window
@@ -542,6 +547,9 @@ object Bench {
         name -> (if (t2.isNaN) t else math.min(t, t2))
       } else name -> t
     }
+    System.err.println(
+      s"[bench] timed suite: ${CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0} codegen compiles, " +
+        canaries.map(c => f"$c%.2f").mkString("canary checkpoints [", ",", "]"))
     // A failed query must not masquerade as a fast one: drop its time from
     // the total and report it under "errors".
     val ok = results.filterNot { case (n, _) => failed.contains(n) }

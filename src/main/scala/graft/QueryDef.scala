@@ -151,11 +151,14 @@ object TempTables {
   * the parquet inputs), and sink-internal persists are already unpersisted
   * in their own `finally` blocks — so dropping every persistent RDD is
   * exactly "release this query's working set".
+  *
+  * `blocking = true` returns only once the executors dropped the blocks, so
+  * the eviction cannot land inside the next timed query (Bench uses it).
   */
 object CachedBlocks {
-  def releaseAll(spark: SparkSession): Unit =
+  def releaseAll(spark: SparkSession, blocking: Boolean = false): Unit =
     spark.sparkContext.getPersistentRDDs.values
-      .foreach(rdd => scala.util.Try(rdd.unpersist(blocking = false)))
+      .foreach(rdd => scala.util.Try(rdd.unpersist(blocking)))
 }
 
 trait QueryModule {

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -499,6 +500,13 @@ object Ops {
     finally if (checkpointDir.isDefined) prevCheckpointDir.foreach(sc.setCheckpointDir)
   }
 
+  /** Drops the blocks a materialized frame pins (a reliable checkpoint
+    * pins none). Only for frames that no later plan reads.
+    */
+  private def release(df: DataFrame): Unit =
+    df.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd }
+      .foreach(_.unpersist(blocking = false))
+
   private def connectedComponentsImpl(edges0: DataFrame, maxRounds: Int,
       checkpointDir: Option[String]): DataFrame = {
     // Two materialization strengths (r18, guide §1.2): frames consumed
@@ -539,9 +547,13 @@ object Ops {
           col("x.p") === col("y.pv"), "left")
         .select(col("x.v").as("v"), col("x.p0").as("p0"),
           coalesce(col("y.pp"), col("x.p")).as("p")))
+      // doubled's blocks no longer reach back to this round's inputs, so
+      // drop them now rather than at ContextCleaner's GC-timed cleanup
+      Seq(hopped, labels).foreach(release)
       converged = doubled.filter(col("p") =!= col("p0")).isEmpty
       labels = doubled.select(col("v"), col("p"))
     }
+    release(edges)
     if (!converged) throw new IllegalStateException(
       s"connectedComponents did not reach the label fixpoint in $maxRounds " +
         "rounds — labels would be wrong for deep components; raise maxRounds " +

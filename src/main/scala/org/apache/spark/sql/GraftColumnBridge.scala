@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.spark.{SparkConf, SparkContext}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
@@ -20,6 +21,13 @@ object GraftColumnBridge {
     val cs = df.sparkSession.asInstanceOf[classic.SparkSession]
     cs.internalCreateDataFrame(df.queryExecution.toRdd, df.schema, isStreaming = true)
   }
+
+  /** The live conf of the active SparkContext (`SparkContext.conf` and
+    * `getActive` are `private[spark]`; the public `getConf` is a copy).
+    * [[graft.GraftExtensions]] defaults static SQL confs in it before the
+    * session's SharedState copies it.
+    */
+  def activeContextConf: Option[SparkConf] = SparkContext.getActive.map(_.conf)
 
   private def intLit(e: Expression, what: String): Int = e match {
     case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
