@@ -97,11 +97,8 @@ object KMeans {
       val slim = filtered.select(col(idCol), col(vecCol))
       em0.sparkSession.conf.getOption("spark.graft.kmeansCheckpointDir") match {
         case Some(d) =>
-          val sc = em0.sparkSession.sparkContext
-          val prev = sc.getCheckpointDir
-          sc.setCheckpointDir(d)
-          try slim.checkpoint(eager = true)
-          finally prev.foreach(sc.setCheckpointDir)
+          org.apache.spark.sql.GraftColumnBridge.withCheckpointDir(
+            em0.sparkSession.sparkContext, Some(d))(slim.checkpoint(eager = true))
         case None => slim.localCheckpoint(false)
       }
     } else filtered

@@ -490,14 +490,12 @@ object Ops {
     */
   def connectedComponents(edges0: DataFrame, maxRounds: Int = 8,
       checkpointDir: Option[String] = None): DataFrame = {
-    // setCheckpointDir mutates GLOBAL SparkContext state; save and restore
-    // the previous dir so this call doesn't silently redirect other
-    // checkpoint() users in the session (ADVICE r5).
-    val sc = edges0.sparkSession.sparkContext
-    val prevCheckpointDir = sc.getCheckpointDir
-    checkpointDir.foreach(sc.setCheckpointDir)
-    try connectedComponentsImpl(edges0, maxRounds, checkpointDir)
-    finally if (checkpointDir.isDefined) prevCheckpointDir.foreach(sc.setCheckpointDir)
+    // setCheckpointDir mutates GLOBAL SparkContext state; the previous
+    // dir comes back so this call doesn't silently redirect other
+    // checkpoint() users in the session
+    org.apache.spark.sql.GraftColumnBridge.withCheckpointDir(
+      edges0.sparkSession.sparkContext, checkpointDir)(
+      connectedComponentsImpl(edges0, maxRounds, checkpointDir))
   }
 
   /** Drops the blocks a materialized frame pins (a reliable checkpoint
@@ -651,19 +649,23 @@ object Ops {
     def materialize(df: DataFrame): DataFrame =
       if (checkpointDir.isDefined) df.checkpoint(eager = true)
       else df.localCheckpoint(false)
-    checkpointDir.foreach(edges0.sparkSession.sparkContext.setCheckpointDir)
-    val Seq(srcC, dstC) = edges0.columns.toSeq.take(2).map(col)
-    val edges = materialize(
-      edges0.select(srcC.as("src"), dstC.as("dst")).distinct())
-    var dist = seeds.select(col(seeds.columns.head).as("node")).distinct()
-      .withColumn("dist", lit(0L))
-    for (_ <- 1 to maxHops) {
-      val expanded = dist.join(edges, dist("node") === edges("src"))
-        .select(col("dst").as("node"), (col("dist") + 1L).as("dist"))
-      dist = materialize(
-        dist.select("node", "dist").union(expanded)
-          .groupBy("node").agg(min("dist").as("dist")))
+    // every materialization below is eager when checkpointDir is set, so
+    // the global dir is restored once the loop is done
+    org.apache.spark.sql.GraftColumnBridge.withCheckpointDir(
+        edges0.sparkSession.sparkContext, checkpointDir) {
+      val Seq(srcC, dstC) = edges0.columns.toSeq.take(2).map(col)
+      val edges = materialize(
+        edges0.select(srcC.as("src"), dstC.as("dst")).distinct())
+      var dist = seeds.select(col(seeds.columns.head).as("node")).distinct()
+        .withColumn("dist", lit(0L))
+      for (_ <- 1 to maxHops) {
+        val expanded = dist.join(edges, dist("node") === edges("src"))
+          .select(col("dst").as("node"), (col("dist") + 1L).as("dist"))
+        dist = materialize(
+          dist.select("node", "dist").union(expanded)
+            .groupBy("node").agg(min("dist").as("dist")))
+      }
+      dist.select("node", "dist")
     }
-    dist.select("node", "dist")
   }
 }

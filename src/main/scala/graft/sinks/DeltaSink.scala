@@ -2493,14 +2493,12 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     // ICEBERG plane still references — any snapshot — is not a tombstone,
     // whatever the Delta log thinks of it
     val icebergLive: Set[String] =
-      if (Files.exists(Paths.get(table, "metadata", "version-hint.text")))
-        IcebergSink.referencedDataFiles(table).flatMap { p =>
-          val f = new File(p)
-          if (f.getAbsolutePath.startsWith(dir.getAbsolutePath + File.separator))
-            Some(dir.toPath.relativize(f.toPath).toString)
-          else None
-        }
-      else Set.empty
+      IcebergSink.referencedDataFiles(table).flatMap { p =>
+        val f = new File(p)
+        if (f.getAbsolutePath.startsWith(dir.getAbsolutePath + File.separator))
+          Some(dir.toPath.relativize(f.toPath).toString)
+        else None
+      }
     val liveNow = liveAdds.map(_.path).toSet ++ icebergLive
     val cutoff = System.currentTimeMillis() - retentionMs
     val dead = CommitStore.partFiles(dir).filter { f =>

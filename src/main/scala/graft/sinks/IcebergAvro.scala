@@ -21,6 +21,12 @@ import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWri
   * tables. `column_sizes`/`nan_value_counts` stay omitted (spec-permitted).
   * avro-1.12 ships in Spark's own jars, so this closes the earlier
   * JSON-manifest divergence without new dependencies.
+  *
+  * Reading is one function per file kind: [[readManifestList]] for a
+  * manifest list and [[readManifest]] for a manifest, which returns every
+  * field of every LIVE entry (status 2 DELETED entries are dropped there,
+  * once, for every read path). [[mergeManifests]] copies records verbatim
+  * and so reads raw records itself.
   */
 private[graft] object IcebergAvro {
 
@@ -241,71 +247,99 @@ private[graft] object IcebergAvro {
     target.length()
   }
 
-  /** Reads back each entry's (file_path, partition values by field name) —
-    * the read path's source of partition truth (Iceberg readers take
-    * partition values from the manifest, never from file paths). Reads
-    * with the file's own writer schema, so any partition struct shape
-    * round-trips.
+  /** One LIVE manifest entry — every field any read path needs, so no
+    * verb re-opens a manifest for another projection. `pvals`: partition
+    * values by field name, from the manifest's own partition struct
+    * (Iceberg readers take partition values from the manifest, never
+    * from file paths). `seq`: the entry's data sequence — its explicit
+    * `sequence_number` when it carries one (a rewritten manifest's
+    * EXISTING entries keep their original sequence that way), else the
+    * inherited manifest-list row's. `firstRowId` and `dv` are None in
+    * manifests whose writer schema predates fields 142-145.
     */
-  def readManifestPartitions(f: File): Seq[(String, Map[String, Any])] =
-    readManifestPartitionsWithSchema(f)._1.map(e => (e._1, e._2))
+  case class Entry(content: Int, path: String, pvals: Map[String, Any],
+      recordCount: Long, sizeBytes: Long, seq: Long, firstRowId: Option[Long],
+      equalityIds: Seq[Int], stats: ColumnStats, dv: Option[(String, Long, Long)])
 
-  /** Same pass also surfaces the manifest's "schema" key metadata — ONE
-    * file open serves both (the hot snapshot-resolution path reads every
-    * manifest of every query; a separate schema open would double it).
-    * Each entry's third element is its EXPLICIT sequence number when the
-    * manifest carries one (entries of a rewritten/merged manifest keep
-    * their original data sequence this way — V2 inheritance only applies
-    * to entries added by the manifest's own snapshot); None inherits the
-    * manifest-list row's sequence as before.
+  /** A manifest as [[readManifest]] returns it: its Avro key metadata,
+    * its partition fields rebuilt from the writer schema (everything
+    * [[writeManifest]] needs to re-emit entries under the same struct)
+    * and its live entries.
     */
-  def readManifestPartitionsWithSchema(f: File)
-      : (Seq[(String, Map[String, Any], Option[Long])], Option[String]) = {
-    val r = new DataFileReader[GenericRecord](f, new GenericDatumReader[GenericRecord]())
-    try {
-      val entries = r.iterator().asScala.toList.map { e =>
-        val df = e.get("data_file").asInstanceOf[GenericRecord]
-        val part = df.get("partition").asInstanceOf[GenericRecord]
-        val values = part.getSchema.getFields.asScala.map { pf =>
-          pf.name() -> (part.get(pf.name()) match {
-            case u: org.apache.avro.util.Utf8 => u.toString
-            case other => other
-          })
-        }.toMap
-        val seq = Option(e.getSchema.getField("sequence_number"))
-          .flatMap(_ => Option(e.get("sequence_number")))
-          .map(_.asInstanceOf[Long])
-        (df.get("file_path").toString, values, seq)
-      }
-      (entries, Option(r.getMetaString("schema")))
-    } finally r.close()
+  case class Manifest(keyMeta: Map[String, String],
+      partitionFields: Seq[PartitionField], entries: Seq[Entry]) {
+    /** The Iceberg schema JSON the manifest was written under. */
+    def schemaJson: Option[String] = keyMeta.get("schema")
+    def specId: Int = keyMeta.get("partition-spec-id").map(_.toInt).getOrElse(0)
+    def specJson: String =
+      keyMeta.getOrElse("partition-spec", """{"spec-id":0,"fields":[]}""")
   }
 
-  /** A manifest's PARTITION FIELDS reconstructed from its own Avro writer
-    * schema (the r102 partition record): name, Avro primitive, field-id,
-    * logicalType — everything [[writeManifest]] needs to re-emit entries
-    * under the same struct (the row-lineage retro-assignment's partitioned
-    * path). Plus the manifest's spec id and spec JSON from key metadata.
+  private val KeyMetaKeys = Seq("schema", "schema-id", "partition-spec",
+    "partition-spec-id", "format-version", "content")
+
+  private def keyMetaOf(r: DataFileReader[GenericRecord]): Map[String, String] =
+    KeyMetaKeys.flatMap(k => Option(r.getMetaString(k)).map(k -> _)).toMap
+
+  /** THE manifest reader: one open with the file's own writer schema (any
+    * partition struct shape round-trips), returning the key metadata and
+    * the LIVE entries — status 2 (DELETED) entries are not part of the
+    * snapshot (spec §Manifests) and no caller ever sees them. Entries
+    * without an explicit sequence take `inheritedSeq`, the sequence of
+    * the manifest-list row that references this manifest.
     */
-  def readManifestPartitionFields(f: File)
-      : (Seq[PartitionField], Int, String) = {
-    val r = new DataFileReader[GenericRecord](f,
-      new GenericDatumReader[GenericRecord]())
+  def readManifest(f: File, inheritedSeq: Long = 0L): Manifest = {
+    def longs(v: Option[AnyRef]): Map[Int, Long] =
+      v.toSeq.flatMap(_.asInstanceOf[java.util.Collection[GenericRecord]].asScala)
+        .map(r => r.get("key").asInstanceOf[Int] -> r.get("value").asInstanceOf[Long])
+        .toMap
+    def bytes(v: Option[AnyRef]): Map[Int, Array[Byte]] =
+      v.toSeq.flatMap(_.asInstanceOf[java.util.Collection[GenericRecord]].asScala)
+        .map { r =>
+          val bb = r.get("value").asInstanceOf[java.nio.ByteBuffer]
+          val out = new Array[Byte](bb.remaining()); bb.duplicate().get(out)
+          r.get("key").asInstanceOf[Int] -> out
+        }.toMap
+    val r = new DataFileReader[GenericRecord](f, new GenericDatumReader[GenericRecord]())
     try {
-      val part = r.getSchema.getField("data_file").schema()
+      val partition = r.getSchema.getField("data_file").schema()
         .getField("partition").schema()
-      val fields = part.getFields.asScala.toSeq.map { pf =>
-        val t = pf.schema().getTypes.asScala
-          .find(_.getType != Schema.Type.NULL).get
+      val fields = partition.getFields.asScala.toSeq.map { pf =>
+        val t = pf.schema().getTypes.asScala.find(_.getType != Schema.Type.NULL).get
         PartitionField(pf.name(), t.getName,
-          Option(pf.getObjectProp("field-id"))
-            .map(_.toString.toInt).getOrElse(1000),
+          Option(pf.getObjectProp("field-id")).map(_.toString.toInt).getOrElse(1000),
           Option(t.getObjectProp("logicalType")).map(_.toString))
       }
-      (fields,
-        Option(r.getMetaString("partition-spec-id")).map(_.toInt).getOrElse(0),
-        Option(r.getMetaString("partition-spec")).getOrElse(
-          """{"spec-id":0,"fields":[]}"""))
+      val entries = r.iterator().asScala
+        .filter(_.get("status").asInstanceOf[Int] != 2)
+        .map { e =>
+          val df = e.get("data_file").asInstanceOf[GenericRecord]
+          // optional fields: absent from older writer schemas entirely
+          def opt(rec: GenericRecord, k: String): Option[AnyRef] =
+            if (rec.hasField(k)) Option(rec.get(k)) else None
+          val part = df.get("partition").asInstanceOf[GenericRecord]
+          Entry(
+            content = df.get("content").asInstanceOf[Int],
+            path = df.get("file_path").toString,
+            pvals = fields.map(pf => pf.name -> (part.get(pf.name) match {
+              case u: org.apache.avro.util.Utf8 => u.toString
+              case other => other
+            })).toMap,
+            recordCount = df.get("record_count").asInstanceOf[Long],
+            sizeBytes = df.get("file_size_in_bytes").asInstanceOf[Long],
+            seq = opt(e, "sequence_number").map(_.asInstanceOf[Long])
+              .getOrElse(inheritedSeq),
+            firstRowId = opt(df, "first_row_id").map(_.asInstanceOf[Long]),
+            equalityIds = opt(df, "equality_ids").toSeq
+              .flatMap(_.asInstanceOf[java.util.Collection[Integer]].asScala.map(_.intValue)),
+            stats = ColumnStats(longs(opt(df, "value_counts")),
+              longs(opt(df, "null_value_counts")),
+              bytes(opt(df, "lower_bounds")), bytes(opt(df, "upper_bounds"))),
+            dv = opt(df, "referenced_data_file").map(ref => (ref.toString,
+              df.get("content_offset").asInstanceOf[Long],
+              df.get("content_size_in_bytes").asInstanceOf[Long])))
+        }.toList
+      Manifest(keyMetaOf(r), fields, entries)
     } finally r.close()
   }
 
@@ -325,11 +359,7 @@ private[graft] object IcebergAvro {
     val first = new DataFileReader[GenericRecord](sources.head._1,
       new GenericDatumReader[GenericRecord]())
     val (writerSchema, keyMeta) =
-      try (first.getSchema,
-        Seq("schema", "schema-id", "partition-spec", "partition-spec-id",
-          "format-version", "content")
-          .flatMap(k => Option(first.getMetaString(k)).map(k -> _)))
-      finally first.close()
+      try (first.getSchema, keyMetaOf(first)) finally first.close()
     val w = new DataFileWriter[GenericRecord](
       new GenericDatumWriter[GenericRecord](writerSchema))
     keyMeta.foreach { case (k, v) => w.setMeta(k, v) }
@@ -354,36 +384,6 @@ private[graft] object IcebergAvro {
     (target.length(), n, rows, if (minSeq == Long.MaxValue) 0L else minSeq)
   }
 
-  /** A manifest's Avro key metadata (schema / partition-spec /
-    * partition-spec-id / content) — the grouping identity for
-    * rewrite_manifests (only like-written manifests merge faithfully).
-    */
-  def readManifestMeta(f: File): Map[String, String] = {
-    val r = new DataFileReader[GenericRecord](f, new GenericDatumReader[GenericRecord]())
-    try Seq("schema", "schema-id", "partition-spec", "partition-spec-id",
-      "format-version", "content")
-      .flatMap(k => Option(r.getMetaString(k)).map(k -> _)).toMap
-    finally r.close()
-  }
-
-  /** Per entry: (file_path, file_size_in_bytes, record_count,
-    * first_row_id) — the row-lineage plane's metadata read. Reads with
-    * the file's own writer schema, so manifests predating field 142
-    * surface None.
-    */
-  def readManifestDataEntries(f: File): Seq[(String, Long, Long, Option[Long])] = {
-    val r = new DataFileReader[GenericRecord](f,
-      new GenericDatumReader[GenericRecord]())
-    try r.iterator().asScala.map { e =>
-      val df = e.get("data_file").asInstanceOf[GenericRecord]
-      (df.get("file_path").toString,
-        df.get("file_size_in_bytes").asInstanceOf[Long],
-        df.get("record_count").asInstanceOf[Long],
-        Option(df.get("first_row_id")).map(_.asInstanceOf[Long]))
-    }.toList
-    finally r.close()
-  }
-
   /** manifest_file row for a REWRITTEN manifest: all entries EXISTING,
     * min_sequence_number preserved from the merged entries so
     * sequence-based pruning stays exact.
@@ -406,36 +406,6 @@ private[graft] object IcebergAvro {
     r.put("existing_rows_count", nRows)
     r.put("deleted_rows_count", 0L)
     r
-  }
-
-  /** Reads back every entry's ColumnStats (test surface: the stats must
-    * round-trip through the Avro manifest).
-    */
-  def readManifestStats(f: File): Seq[(String, ColumnStats)] = {
-    def longs(v: AnyRef): Map[Int, Long] = v match {
-      case null => Map.empty
-      case a: java.util.Collection[_] => a.asScala.map { r0 =>
-        val r = r0.asInstanceOf[GenericRecord]
-        r.get("key").asInstanceOf[Int] -> r.get("value").asInstanceOf[Long]
-      }.toMap
-    }
-    def bytes(v: AnyRef): Map[Int, Array[Byte]] = v match {
-      case null => Map.empty
-      case a: java.util.Collection[_] => a.asScala.map { r0 =>
-        val r = r0.asInstanceOf[GenericRecord]
-        val bb = r.get("value").asInstanceOf[java.nio.ByteBuffer]
-        val out = new Array[Byte](bb.remaining()); bb.duplicate().get(out)
-        r.get("key").asInstanceOf[Int] -> out
-      }.toMap
-    }
-    val r = new DataFileReader[GenericRecord](f,
-      new GenericDatumReader[GenericRecord](EntrySchema))
-    try r.iterator().asScala.toList.map { e =>
-      val df = e.get("data_file").asInstanceOf[GenericRecord]
-      df.get("file_path").toString -> ColumnStats(
-        longs(df.get("value_counts")), longs(df.get("null_value_counts")),
-        bytes(df.get("lower_bounds")), bytes(df.get("upper_bounds")))
-    } finally r.close()
   }
 
   /** manifest_file row for a manifest newly written by `snapshotId`;
@@ -482,83 +452,4 @@ private[graft] object IcebergAvro {
     try r.iterator().asScala.toList finally r.close()
   }
 
-  /** Delete-file entries of a deletes manifest: (path, entry content code
-    * — 1 positional / 2 equality —, equality field ids, recordCount).
-    */
-  def readManifestDeleteFiles(f: File): Seq[(String, Int, Seq[Int], Long)] =
-    readManifestDeleteEntries(f).map(e => (e._1, e._2, e._3, e._4))
-
-  /** Delete-file entries WITH their manifest partition values — a
-    * partition-scoped delete manifest (deleteWhere on a partitioned
-    * table) lets pruned readers skip delete files of other partitions.
-    * Reads with the file's own writer schema so any partition struct
-    * shape round-trips (same contract as [[readManifestPartitions]]).
-    */
-  def readManifestDeleteEntries(f: File)
-      : Seq[(String, Int, Seq[Int], Long, Map[String, Any])] =
-    readManifestDeleteEntriesWithSchema(f)._1
-      .map(e => (e._1, e._2, e._3, e._4, e._5))
-
-  def readManifestDeleteEntriesWithSchema(f: File)
-      : (Seq[(String, Int, Seq[Int], Long, Map[String, Any],
-          Option[(String, Long, Long)])], Option[String]) = {
-    val r = new DataFileReader[GenericRecord](f,
-      new GenericDatumReader[GenericRecord]())
-    try {
-      val entries = r.iterator().asScala.toList
-        .filter(_.get("status").asInstanceOf[Int] != 2)
-        .map { e =>
-          val df = e.get("data_file").asInstanceOf[GenericRecord]
-          val ids = df.get("equality_ids") match {
-            case null => Nil
-            case a: java.util.Collection[_] =>
-              a.asScala.map(_.asInstanceOf[Int]).toSeq
-          }
-          val part = df.get("partition").asInstanceOf[GenericRecord]
-          val pvals = part.getSchema.getFields.asScala.map { pf =>
-            pf.name() -> (part.get(pf.name()) match {
-              case u: org.apache.avro.util.Utf8 => u.toString
-              case other => other
-            })
-          }.toMap
-          // V3 deletion-vector linkage (guarded: pre-v3 manifests' writer
-          // schemas lack the fields entirely)
-          val dv =
-            if (df.getSchema.getField("referenced_data_file") == null) None
-            else Option(df.get("referenced_data_file")).map(ref =>
-              (ref.toString,
-                df.get("content_offset").asInstanceOf[Long],
-                df.get("content_size_in_bytes").asInstanceOf[Long]))
-          (df.get("file_path").toString, df.get("content").asInstanceOf[Int],
-            ids, df.get("record_count").asInstanceOf[Long], pvals, dv)
-        }
-      (entries, Option(r.getMetaString("schema")))
-    } finally r.close()
-  }
-
-  /** The Iceberg schema JSON this manifest was written under (the
-    * spec-mandated "schema" key metadata every [[writeManifest]] call
-    * stamps) — the read side's truth for resolving each data file's
-    * columns BY FIELD ID after a rename/drop/widen evolution.
-    */
-  def readManifestSchema(f: File): Option[String] = {
-    val r = new DataFileReader[GenericRecord](f,
-      new GenericDatumReader[GenericRecord]())
-    try Option(r.getMetaString("schema")) finally r.close()
-  }
-
-  /** Data-file (path, recordCount) pairs of live entries (status ≠ 2
-    * DELETED) in a manifest.
-    */
-  def readManifestDataFiles(f: File): Seq[(String, Long)] = {
-    val r = new DataFileReader[GenericRecord](f,
-      new GenericDatumReader[GenericRecord](EntrySchema))
-    try r.iterator().asScala.toList
-      .filter(_.get("status").asInstanceOf[Int] != 2)
-      .map { e =>
-        val df = e.get("data_file").asInstanceOf[GenericRecord]
-        (df.get("file_path").toString, df.get("record_count").asInstanceOf[Long])
-      }
-    finally r.close()
-  }
 }

@@ -431,12 +431,12 @@ object IcebergSink {
       extraPhysicalCols: Set[String]): Unit = {
     require(extraPhysicalCols.isEmpty || mode != Append,
       "extraPhysicalCols is an overwrite/rewrite facility")
-    val hint = readHint(table)
-    if (hint.isDefined && mode == CreateExclusive)
+    val prevHead = headOption(table)
+    if (prevHead.isDefined && mode == CreateExclusive)
       throw new IllegalStateException(
         "Table exists. Pass the overwrite flag to overwrite data")
 
-    val previous = hint.map(v => mapper.readTree(Files.readString(metaFile(table, v))))
+    val previous = prevHead.map(_.meta)
     // Existing columns keep the STORED schema's names: the positional gate
     // never compares names, so a gate-passing append may arrive with
     // divergent column names — writing its data files under those names
@@ -444,11 +444,7 @@ object IcebergSink {
     // declared schema (the parquet reader matches by name → silent NULLs).
     // Appends therefore align to the stored names positionally; an
     // overwrite re-declares the schema and keeps the frame's own names.
-    val storedSchema: Option[StructType] = previous.map { prev =>
-      DataType.fromJson(
-        prev.get("properties").get("graft.spark-schema").asText())
-        .asInstanceOf[StructType]
-    }
+    val storedSchema: Option[StructType] = previous.map(sparkSchemaOf)
     // v3 WRITE-DEFAULTS (spec §Default values): an append whose frame
     // omits TRAILING stored columns gets each missing one filled with its
     // write-default — the spec's writer contract for defaulted columns
@@ -482,8 +478,7 @@ object IcebergSink {
     val gateSchema = StructType(
       df.schema.fields.filterNot(f => extraPhysicalCols.contains(f.name)))
     previous.foreach { prev =>
-      val existingSchema = DataType.fromJson(
-        prev.get("properties").get("graft.spark-schema").asText()).asInstanceOf[StructType]
+      val existingSchema = sparkSchemaOf(prev)
       if (!evolveSchema) SchemaGate.enforce(gateSchema, existingSchema)
       else {
         // Opt-in ADD-COLUMN evolution (the standard Iceberg add-column
@@ -801,7 +796,7 @@ object IcebergSink {
     // rows forward verbatim; create/overwrite start fresh.
     val carried = (mode, previous) match {
       case (Append, Some(prev)) =>
-        currentManifestList(table, prev)
+        manifestListOf(prev)
           .map(p => IcebergAvro.readManifestList(new File(requireAvro(abs(table, p)))))
           .getOrElse(Nil)
       case _ => Nil
@@ -815,7 +810,7 @@ object IcebergSink {
       }
 
     // New table metadata = previous + new snapshot + main branch ref.
-    val newVersion = hint.map(_ + 1).getOrElse(0L)
+    val newVersion = prevHead.map(_.version + 1).getOrElse(0L)
     val meta = mapper.createObjectNode()
     // format-version RATCHETS, never resets: a plain append to a table a
     // DV commit already ratcheted to v3 must keep claiming v3 — an
@@ -1110,12 +1105,8 @@ object IcebergSink {
     */
   def evolvePartition(table: String, partitionBy: Seq[String],
       store: CommitStore = CommitStore.Local): Int = {
-    val hint = readHint(table).getOrElse(
-      throw new IllegalArgumentException(s"not an Iceberg table: $table"))
-    val meta = mapper.readTree(Files.readString(metaFile(table, hint)))
-    val schema = DataType.fromJson(
-      meta.get("properties").get("graft.spark-schema").asText())
-      .asInstanceOf[StructType]
+    val Head(hint, meta) = head(table)
+    val schema = sparkSchemaOf(meta)
     val specs = partitionBy.map(parsePartSpec)
     val partFields = partitionFieldsOf(schema, specs) // validates source/transform types
     val idByName: Map[String, Int] =
@@ -1163,12 +1154,8 @@ object IcebergSink {
            Seq[(com.fasterxml.jackson.databind.node.ObjectNode, StructField)])
         => Seq[(com.fasterxml.jackson.databind.node.ObjectNode, StructField)])
       : Unit = {
-    val hint = readHint(table).getOrElse(
-      throw new IllegalArgumentException(s"not an Iceberg table: $table"))
-    val meta = mapper.readTree(Files.readString(metaFile(table, hint)))
-    val sparkSchema = DataType.fromJson(
-      meta.get("properties").get("graft.spark-schema").asText())
-      .asInstanceOf[StructType]
+    val Head(hint, meta) = head(table)
+    val sparkSchema = sparkSchemaOf(meta)
     val (curId, curJson) = currentSchemaJson(meta)
     val curNode = mapper.readTree(curJson)
     val pairs = curNode.get("fields").elements().asScala.toSeq
@@ -1210,8 +1197,7 @@ object IcebergSink {
     * it survives expireSnapshots as long as any stamped snapshot does.
     */
   def lastTxnBatch(table: String, appId: String): Long = {
-    if (readHint(table).isEmpty) return -1L
-    val meta = currentMeta(table)
+    val meta = headOption(table).getOrElse(return -1L).meta
     meta.get("snapshots").elements().asScala.flatMap { s =>
       Option(s.get("summary")).filter(su =>
         su.has(TxnAppKey) && su.get(TxnAppKey).asText() == appId)
@@ -1286,22 +1272,21 @@ object IcebergSink {
       curFields = snap.curFields, fileFields = snap.fileFields, store = store)
   }
 
-  /** One resolved snapshot: data-file entries as (path, manifest partition
-    * values, data sequence number) and delete files with their V2 flavor.
-    * Sequence numbers come from each manifest's manifest_file row —
-    * appends carry prior manifests forward verbatim, so every file keeps
-    * the sequence it was committed at, which is what scopes delete
-    * application (a delete never touches data appended after it).
+  /** One resolved snapshot: the head it was resolved from, and the LIVE
+    * entries of its data and delete manifests, each manifest opened once.
+    * Every entry carries its resolved data sequence: explicit in
+    * rewritten manifests, else the manifest_file row's — appends carry
+    * prior manifests forward verbatim, so every file keeps the sequence
+    * it was committed at, which is what scopes delete application (a
+    * delete never touches data appended after it). `fileFields`: per
+    * data or delete file, the schema its MANIFEST was written under (its
+    * "schema" key metadata) — the id-resolution truth that lets a read
+    * project files written before a rename/drop/widen into the current
+    * schema.
     */
-  private[sinks] case class DeleteRef(path: String, seq: Long,
-      content: Int, equalityIds: Seq[Int],
-      wf: Option[Seq[IField]] = None,
-      pvals: Map[String, Any] = Map.empty,
-      dvRef: Option[(String, Long, Long)] = None)
-  private[sinks] case class Snapshot(schema: StructType,
-      data: Seq[(String, Map[String, Any], Long)],
-      deletes: Seq[DeleteRef],
-      dataManifests: Seq[ManifestRef],
+  private[sinks] case class Snapshot(head: Head, schema: StructType,
+      data: Seq[IcebergAvro.Entry],
+      deletes: Seq[IcebergAvro.Entry],
       curFields: Seq[IField],
       fileFields: Map[String, Seq[IField]])
 
@@ -1317,44 +1302,22 @@ object IcebergSink {
     */
   private def snapshotEntries(table: String, asOfSnapshotId: Option[Long])
       : Snapshot = {
-    val meta = currentMeta(table)
-    val schema = DataType.fromJson(
-      meta.get("properties").get("graft.spark-schema").asText()).asInstanceOf[StructType]
-    val snapId = asOfSnapshotId.getOrElse(meta.get("current-snapshot-id").asLong())
-    val list = manifestListOf(table, meta, snapId).getOrElse(
-      throw new IllegalArgumentException(s"no snapshot $snapId in $table " +
-        "(expired or never committed)"))
-    val refs = manifestRefs(table, list)
-    // per data file, the schema the MANIFEST was written under (its
-    // "schema" key metadata) — the id-resolution truth that lets a read
-    // project files written before a rename/drop/widen into the current
-    // schema; one manifest open serves all its files
-    val dataWithFields = refs.filter(_.content == 0).flatMap { r =>
-      val mf = new File(requireAvro(abs(table, r.path)))
-      val (entries, schemaMeta) =
-        IcebergAvro.readManifestPartitionsWithSchema(mf)
-      val wf = schemaMeta
+    val h = head(table)
+    val schema = sparkSchemaOf(h.meta)
+    val list = manifestListOf(h.meta, asOfSnapshotId).getOrElse(
+      throw new IllegalArgumentException(s"no snapshot " +
+        s"${asOfSnapshotId.getOrElse(h.meta.get("current-snapshot-id").asLong())} " +
+        s"in $table (expired or never committed)"))
+    val manifests = manifestRefs(table, list).map(r => r -> readManifest(table, r))
+    def entriesOf(content: Int) =
+      manifests.filter(_._1.content == content).flatMap(_._2.entries)
+    val fileFields = manifests.flatMap { case (_, m) =>
+      m.schemaJson
         .flatMap(s => scala.util.Try(ifieldsOf(mapper.readTree(s))).toOption)
-      // a rewritten (merged) manifest's entries carry their ORIGINAL data
-      // sequence explicitly — inheritance from the rewrite snapshot's list
-      // row would break delete-application ordering
-      entries.map { case (p, pvals, eseq) => ((p, pvals, eseq.getOrElse(r.seq)), wf) }
-    }
-    val data = dataWithFields.map(_._1)
-    val fileFields = dataWithFields.collect {
-      case ((p, _, _), Some(wf)) => p -> wf
+        .toSeq.flatMap(wf => m.entries.map(_.path -> wf))
     }.toMap
-    val deletes = refs.filter(_.content == 1).flatMap { r =>
-      val mf = new File(requireAvro(abs(table, r.path)))
-      val (entries, schemaMeta) =
-        IcebergAvro.readManifestDeleteEntriesWithSchema(mf)
-      val wf = schemaMeta
-        .flatMap(s => scala.util.Try(ifieldsOf(mapper.readTree(s))).toOption)
-      entries.map { case (p, content, eqIds, _, pvals, dv) =>
-        DeleteRef(p, r.seq, content, eqIds, wf, pvals, dv) }
-    }
-    Snapshot(schema, data, deletes, refs.filter(_.content == 0),
-      curFieldsOf(meta, schema), fileFields)
+    Snapshot(h, schema, entriesOf(0), entriesOf(1),
+      curFieldsOf(h.meta, schema), fileFields)
   }
 
   /** METADATA-ONLY file inventory of a snapshot: one row per live data
@@ -1369,31 +1332,15 @@ object IcebergSink {
     */
   def fileStats(spark: SparkSession, table: String,
       asOfSnapshotId: Option[Long] = None): DataFrame = {
-    val meta = currentMeta(table)
-    val snapId = asOfSnapshotId.getOrElse(meta.get("current-snapshot-id").asLong())
-    val list = manifestListOf(table, meta, snapId).getOrElse(
-      throw new IllegalArgumentException(s"no snapshot $snapId in $table"))
+    val snap = snapshotEntries(table, asOfSnapshotId)
     // num_records reports LIVE rows ([[DeltaSink.fileStats]]'s contract):
     // a V3 deletion vector's cardinality subtracts from its referenced
     // file without opening anything — highest-sequence vector per file
     // (the supersede rule), read from delete-manifest record counts
-    val refs = manifestRefs(table, list)
-    val maskByFile: Map[String, Long] = refs.filter(_.content == 1)
-      .flatMap { r =>
-        val (entries, _) = IcebergAvro.readManifestDeleteEntriesWithSchema(
-          new File(requireAvro(abs(table, r.path))))
-        entries.collect { case (_, 1, _, n, _, Some((ref, _, _))) =>
-          (ref, r.seq, n)
-        }
-      }.groupBy(_._1).map { case (k, vs) => k -> vs.maxBy(_._2)._3 }
-    val rows = refs.filter(_.content == 0).map(_.path).flatMap { mp =>
-      val f = new File(requireAvro(abs(table, mp)))
-      val parts = IcebergAvro.readManifestPartitions(f).toMap
-      IcebergAvro.readManifestDataFiles(f).map { case (p, n) =>
-        (p, parts.getOrElse(p, Map.empty[String, Any])
-          .map { case (k, v) => k -> String.valueOf(v) },
-          n - maskByFile.getOrElse(p, 0L))
-      }
+    val maskByFile = liveDvs(snap.deletes).map { case (ref, d) => ref -> d.recordCount }
+    val rows = snap.data.map { e =>
+      (e.path, e.pvals.map { case (k, v) => k -> String.valueOf(v) },
+        e.recordCount - maskByFile.getOrElse(e.path, 0L))
     }
     import spark.implicits._
     rows.toDF("path", "partitionValues", "num_records")
@@ -1418,7 +1365,7 @@ object IcebergSink {
     */
   def metaTable(spark: SparkSession, table: String, kind: String): DataFrame = {
     import spark.implicits._
-    val meta = currentMeta(table)
+    val meta = head(table).meta
     kind match {
       case "snapshots" | "history" =>
         val cur = meta.get("current-snapshot-id").asLong()
@@ -1444,9 +1391,7 @@ object IcebergSink {
               e.getValue.get("snapshot-id").asLong()))
         rows.sortBy(_._1).toDF("name", "type", "snapshot_id")
       case "manifests" =>
-        val list = manifestListOf(table, meta,
-          meta.get("current-snapshot-id").asLong()).toSeq
-        val rows = list.flatMap(p => IcebergAvro.readManifestList(
+        val rows = manifestListOf(meta).toSeq.flatMap(p => IcebergAvro.readManifestList(
           new File(requireAvro(abs(table, p))))).map { r =>
           (r.get("manifest_path").toString,
             r.get("manifest_length").asInstanceOf[Long],
@@ -1462,17 +1407,11 @@ object IcebergSink {
           "sequence_number", "added_files_count", "existing_files_count",
           "added_rows_count", "existing_rows_count")
       case "files" =>
-        val list = manifestListOf(table, meta,
-          meta.get("current-snapshot-id").asLong()).toSeq
-        val rows = list.flatMap(p => manifestRefs(table, p)).flatMap { mr =>
-          val f = new File(requireAvro(abs(table, mr.path)))
-          val parts = IcebergAvro.readManifestPartitions(f).toMap
-          IcebergAvro.readManifestDataFiles(f).map { case (path, n) =>
-            (mr.content, path, n,
-              parts.getOrElse(path, Map.empty[String, Any])
-                .map { case (k, v) => k -> String.valueOf(v) })
+        val rows = manifestListOf(meta).toSeq
+          .flatMap(p => manifestRefs(table, p)).flatMap { mr =>
+            readManifest(table, mr).entries.map(e => (mr.content, e.path,
+              e.recordCount, e.pvals.map { case (k, v) => k -> String.valueOf(v) }))
           }
-        }
         rows.toDF("content", "file_path", "record_count", "partition")
       case other => throw new IllegalArgumentException(
         s"unknown metadata table '$other' " +
@@ -1499,8 +1438,8 @@ object IcebergSink {
     val (schema, entries) = (snap.schema, snap.data)
     val key = s"${tsCol}_day"
     val (lo, hi) = (fromDay.toEpochDay, untilDay.toEpochDay)
-    val kept = entries.filter { case (_, pvals, _) =>
-      pvals.get(key) match {
+    val kept = entries.filter { e =>
+      e.pvals.get(key) match {
         case Some(d: Int) => d >= lo && d < hi
         case _ => true
       }
@@ -1553,7 +1492,7 @@ object IcebergSink {
       value: Long): (DataFrame, Int, Int) = {
     val snap = snapshotEntries(table, asOfSnapshotId = None)
     val (schema, entries) = (snap.schema, snap.data)
-    val meta = currentMeta(table)
+    val meta = snap.head.meta
     val derivedName = s"${keyCol}_bucket"
     val n = meta.get("partition-specs").elements().asScala
       .find(s => s.get("spec-id").asInt() == meta.get("default-spec-id").asInt())
@@ -1566,8 +1505,8 @@ object IcebergSink {
       .getOrElse(throw new IllegalArgumentException(
         s"$table is not bucket-partitioned on $keyCol"))
     val b = IcebergTransforms.bucketOfHash(IcebergTransforms.hashLong(value), n)
-    val kept = entries.filter { case (_, pvals, _) =>
-      pvals.get(derivedName) match {
+    val kept = entries.filter { e =>
+      e.pvals.get(derivedName) match {
         case Some(x: Int) => x == b
         case _ => true
       }
@@ -1600,8 +1539,8 @@ object IcebergSink {
       value: String): (DataFrame, Int, Int) = {
     val snap = snapshotEntries(table, asOfSnapshotId = None)
     val (schema, entries) = (snap.schema, snap.data)
-    val kept = entries.filter { case (_, pvals, _) =>
-      pvals.get(partitionCol) match {
+    val kept = entries.filter { e =>
+      e.pvals.get(partitionCol) match {
         case Some(x) => String.valueOf(x) == value
         case None => true
       }
@@ -1618,14 +1557,6 @@ object IcebergSink {
       .filter(col(partitionCol) === lit(value).cast(schema(partitionCol).dataType))
     (df, kept.size, entries.size)
   }
-
-  /** The current schema straight off the metadata JSON — NO manifest is
-    * opened (what a stats-pruned empty read needs to type its frame).
-    */
-  private[sinks] def currentSchemaOf(table: String): StructType =
-    DataType.fromJson(currentMeta(table)
-      .get("properties").get("graft.spark-schema").asText())
-      .asInstanceOf[StructType]
 
   /** (file, manifest partition values) → DataFrame: one group per
     * (partition-column-set, values), so mixed-spec snapshots (retained
@@ -1647,12 +1578,12 @@ object IcebergSink {
       sinceSnapshotId: Long): DataFrame = {
     val current = snapshotEntries(table, None)
     val pinned = snapshotEntries(table, Some(sinceSnapshotId))
-    val seen = pinned.data.map(_._1).toSet
+    val seen = pinned.data.map(_.path).toSet
     // current deletes still apply to the appended files (a consumer must
     // never see a row the table has already deleted); deletes older than
     // an appended file's sequence are no-ops by the >= scope in readMerged
     readMerged(spark, current.schema,
-      current.data.filterNot(e => seen.contains(e._1)), current.deletes,
+      current.data.filterNot(e => seen.contains(e.path)), current.deletes,
       curFields = current.curFields, fileFields = current.fileFields)
   }
 
@@ -1693,16 +1624,14 @@ object IcebergSink {
   def readAppendedBetween(spark: SparkSession, table: String,
       sinceSeq: Long, untilSeq: Long,
       skipOverwrites: Boolean = false): DataFrame = {
-    val meta = currentMeta(table)
+    val meta = head(table).meta
     // untilSeq <= sinceSeq: nothing to deliver. Short-circuit BEFORE
     // boundary-snapshot resolution — on restart Spark re-plans the last
     // checkpointed batch with EQUAL offsets, and if maintenance expired
     // that boundary snapshot in the meantime the lookup below would
     // crash a stream whose batch is empty anyway.
     if (untilSeq <= 0 || untilSeq <= sinceSeq) {
-      val schema = DataType.fromJson(
-        meta.get("properties").get("graft.spark-schema").asText())
-        .asInstanceOf[StructType]
+      val schema = sparkSchemaOf(meta)
       return spark.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
     }
@@ -1732,9 +1661,9 @@ object IcebergSink {
         s.get("sequence-number").asLong() ->
           (if (op == "replace" && isSync) "append" else op)
       }.toMap
-    val inRange = snap.data.filter(e => e._3 > sinceSeq && e._3 <= untilSeq)
+    val inRange = snap.data.filter(e => e.seq > sinceSeq && e.seq <= untilSeq)
     def opOf(seq: Long) = opBySeq.getOrElse(seq, "append")
-    val nonRewrites = inRange.filterNot(e => opOf(e._3) == "replace")
+    val nonRewrites = inRange.filterNot(e => opOf(e.seq) == "replace")
     // the fail-loudly guard keys off the SNAPSHOT ops in range, not the
     // in-range data entries: a pure MoR delete (deleteWhere/deleteKeys/
     // deleteWhereDV) adds ONLY delete manifests — no data entry carries
@@ -1752,7 +1681,7 @@ object IcebergSink {
           "or silently drop deleted ones. " +
           "Set skipOverwrites (.option(\"skip-overwrite-snapshots\", true) on " +
           "the stream source) to skip them, or tail an append-only table.")
-    val kept = if (skipOverwrites) nonRewrites.filter(e => opOf(e._3) == "append")
+    val kept = if (skipOverwrites) nonRewrites.filter(e => opOf(e.seq) == "append")
       else nonRewrites
     readMerged(spark, snap.schema, kept, snap.deletes,
       curFields = snap.curFields, fileFields = snap.fileFields)
@@ -1765,7 +1694,7 @@ object IcebergSink {
     * not unpublished staging. Before the first snapshot → error.
     */
   def snapshotAtTimestamp(table: String, tsMs: Long): Long = {
-    val meta = currentMeta(table)
+    val meta = head(table).meta
     val all = meta.get("snapshots").elements().asScala.toSeq
     // main-line = snapshots without a parent pointer (main commits never
     // record one; branch commits do) PLUS the current main head's
@@ -1802,8 +1731,7 @@ object IcebergSink {
     * branch must not silently read as an empty feed).
     */
   def branchHeadSequence(table: String, branch: String): Long =
-    readHint(table).map { _ =>
-      val meta = currentMeta(table)
+    headOption(table).map { case Head(_, meta) =>
       require(meta.has("refs") && meta.get("refs").has(branch),
         s"no such ref on $table: $branch")
       val id = meta.get("refs").get(branch).get("snapshot-id").asLong()
@@ -1817,22 +1745,22 @@ object IcebergSink {
     * taken from a branch head would deliver unpublished staging rows.
     */
   def mainHeadSequence(table: String): Long =
-    readHint(table).map { _ =>
-      val meta = currentMeta(table)
+    headOption(table).map { case Head(_, meta) =>
       val cur = meta.get("current-snapshot-id").asLong()
       meta.get("snapshots").elements().asScala
         .find(_.get("snapshot-id").asLong() == cur)
         .map(_.get("sequence-number").asLong()).getOrElse(-1L)
     }.getOrElse(-1L)
 
-  /** Declared Spark schema of the table (no data scan). */
+  /** Declared Spark schema of the table, straight off the metadata JSON —
+    * no manifest is opened (what a stats-pruned empty read needs to type
+    * its frame).
+    */
   def tableSchema(table: String): StructType =
-    DataType.fromJson(currentMeta(table)
-      .get("properties").get("graft.spark-schema").asText())
-      .asInstanceOf[StructType]
+    sparkSchemaOf(head(table).meta)
 
   private def readEntries(spark: SparkSession, schema: StructType,
-      entries: Seq[(String, Map[String, Any])],
+      entries: Seq[IcebergAvro.Entry],
       withLineage: Boolean = false,
       curFields: Seq[IField] = Nil,
       fileFields: Map[String, Seq[IField]] = Map.empty): DataFrame = {
@@ -1863,8 +1791,8 @@ object IcebergSink {
       curFields.length <= schema.fields.length
     val (idFields, nameFields) = schema.fields.splitAt(curFields.length)
     val groups = entries
-      .groupBy(e => (e._2, if (idProjected) fileFields.get(e._1) else None))
-      .view.mapValues(_.map(_._1)).toSeq
+      .groupBy(e => (e.pvals, if (idProjected) fileFields.get(e.path) else None))
+      .view.mapValues(_.map(_.path)).toSeq
     val parts = groups.map { case ((pvals, wfOpt), files) =>
       val specCols = schema.fieldNames.filter(pvals.contains).toSeq
       val base = wfOpt match {
@@ -1950,12 +1878,13 @@ object IcebergSink {
     * applying across renames and widens.
     */
   private def readEqDeleteFile(spark: SparkSession, schema: StructType,
-      d: DeleteRef, curNameOf: Int => String): DataFrame = {
+      d: IcebergAvro.Entry, wf: Option[Seq[IField]],
+      curNameOf: Int => String): DataFrame = {
     import org.apache.spark.sql.functions.col
     val cols = d.equalityIds.map { id =>
       val curName = curNameOf(id)
       val curDt = schema(curName).dataType
-      d.wf.flatMap(_.find(_.id == id)) match {
+      wf.flatMap(_.find(_.id == id)) match {
         case Some(w) =>
           val readDt = (w.dt, curDt) match {
             case (IntegerType, LongType) => IntegerType
@@ -1975,21 +1904,21 @@ object IcebergSink {
   }
 
   private def readMerged(spark: SparkSession, schema: StructType,
-      dataEntries: Seq[(String, Map[String, Any], Long)],
-      deletes: Seq[DeleteRef],
+      dataEntries: Seq[IcebergAvro.Entry],
+      deletes: Seq[IcebergAvro.Entry],
       keepLineage: Boolean = false,
       curFields: Seq[IField] = Nil,
       fileFields: Map[String, Seq[IField]] = Map.empty,
       store: CommitStore = CommitStore.Local): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
     if (deletes.isEmpty && !keepLineage)
-      return readEntries(spark, schema, dataEntries.map(e => (e._1, e._2)),
+      return readEntries(spark, schema, dataEntries,
         curFields = curFields, fileFields = fileFields)
-    val data = readEntries(spark, schema, dataEntries.map(e => (e._1, e._2)),
+    val data = readEntries(spark, schema, dataEntries,
       withLineage = true, curFields = curFields, fileFields = fileFields)
     // each row's manifest path and data sequence, by its file's keys
     val keyed = DvPlane.attach(data,
-        dataEntries.map(e => (e._1, Row(Long.box(e._3), e._1))),
+        dataEntries.map(e => (e.path, Row(Long.box(e.seq), e.path))),
         StructType(Seq(StructField("_gf_seq", LongType),
           StructField("_gf_mpath", StringType))),
         "merge-on-read: data row from unmapped file ")
@@ -2001,10 +1930,10 @@ object IcebergSink {
     val afterDv =
       if (dvs.isEmpty) keyed
       else DvPlane.applyVectors(store, keyed, col("_gf_dkey"),
-        dvs.toSeq.map { case (ref, blob) => (ref, blob._3, blob) },
+        dvs.toSeq.map { case (ref, d) => val blob = dvBlob(d); (ref, blob._3, blob) },
         (blob: (String, Long, Long), read: String => Array[Byte]) =>
           graft.functions.DeletionVector.serialize(dvBitmap(blob, read)))
-    val positional = deletes.filter(d => d.content == 1 && d.dvRef.isEmpty)
+    val positional = deletes.filter(d => d.content == 1 && d.dv.isEmpty)
     val afterPos =
       if (positional.isEmpty) afterDv
       else {
@@ -2044,7 +1973,8 @@ object IcebergSink {
       .foldLeft(afterPos) { case (acc, (eqIds, ds)) =>
         require(eqIds.nonEmpty, "equality delete file without equality_ids")
         val keyNames = eqIds.map(curNameOf)
-        val delDf = ds.map(d => readEqDeleteFile(spark, schema, d, curNameOf)
+        val delDf = ds.map(d =>
+            readEqDeleteFile(spark, schema, d, fileFields.get(d.path), curNameOf)
             .select(keyNames.map(k => col(k).as(s"_gfe_$k")) :+
               lit(d.seq).as("_gfe_seq"): _*))
           .reduce(_.unionAll(_))
@@ -2080,7 +2010,7 @@ object IcebergSink {
   def planRangeFiles(spark: SparkSession, table: String, column: String,
       lo: Double, hi: Double): (StructType, Seq[(String, Map[String, Any])], Int) = {
     val (snap, kept, total) = planRange(table, column, lo, hi)
-    (snap.schema, kept.map(e => (e._1, e._2)), total)
+    (snap.schema, kept.map(e => (e.path, e.pvals)), total)
   }
 
   /** ONE snapshot resolution serves both the pruning plan and the merged
@@ -2091,7 +2021,7 @@ object IcebergSink {
     * equality delete against it.
     */
   private def planRange(table: String, column: String, lo: Double, hi: Double)
-      : (Snapshot, Seq[(String, Map[String, Any], Long)], Int) = {
+      : (Snapshot, Seq[IcebergAvro.Entry], Int) = {
     val snap = snapshotEntries(table, None)
     val schema = snap.schema
     val fieldId = snap.curFields.find(_.name == column).map(_.id)
@@ -2111,17 +2041,11 @@ object IcebergSink {
         case _ => None
       }
     }
-    val statsByPath: Map[String, IcebergAvro.ColumnStats] =
-      snap.dataManifests.flatMap { r =>
-        IcebergAvro.readManifestStats(new File(requireAvro(abs(table, r.path))))
-      }.toMap
-    val kept = snap.data.filter { case (path, _, _) =>
-      statsByPath.get(path).flatMap { st =>
-        for {
-          l <- st.lowerBounds.get(fieldId).flatMap(dec)
-          u <- st.upperBounds.get(fieldId).flatMap(dec)
-        } yield u >= lo && l <= hi
-      }.getOrElse(true) // no decodable bounds → must scan
+    val kept = snap.data.filter { e =>
+      (for {
+        l <- e.stats.lowerBounds.get(fieldId).flatMap(dec)
+        u <- e.stats.upperBounds.get(fieldId).flatMap(dec)
+      } yield u >= lo && l <= hi).getOrElse(true) // no decodable bounds → must scan
     }
     (snap, kept, snap.data.size)
   }
@@ -2136,26 +2060,20 @@ object IcebergSink {
       store: CommitStore = CommitStore.Local,
       zorderBy: Seq[String] = Nil,
       targetFiles: Option[Int] = None): (Int, Int) = {
-    def fileCount(): Int = {
-      val meta = currentMeta(table)
-      val list = manifestListOf(table, meta, meta.get("current-snapshot-id").asLong()).get
-      manifestRefs(table, list).filter(_.content == 0)
-        .flatMap(r => dataFilesOf(table, r.path)).size
-    }
-    val before = fileCount()
-    val meta = currentMeta(table)
-    val list = manifestListOf(table, meta, meta.get("current-snapshot-id").asLong()).get
-    val totalBytes = manifestRefs(table, list).filter(_.content == 0)
-      .flatMap(r => dataFilesOf(table, r.path))
-      .map(p => new File(p).length()).sum
+    // one snapshot resolution serves the plan and the rewrite's read;
+    // sizes come from the manifests' file_size_in_bytes (no data file is
+    // stat-ed)
+    val snap = snapshotEntries(table, None)
+    val meta = snap.head.meta
+    val before = snap.data.size
+    val totalBytes = snap.data.map(_.sizeBytes).sum
     val target = targetFiles.getOrElse(
       math.max(1, math.ceil(totalBytes / 134217728.0).toInt))
     // re-assert the TABLE's schema (read() surfaces everything nullable;
     // the rows come from the table itself, so its required-ness holds by
     // construction) — otherwise the schema gate would reject the rewrite
     // and an all-nullable schema would drift into the metadata
-    val schema = DataType.fromJson(
-      meta.get("properties").get("graft.spark-schema").asText()).asInstanceOf[StructType]
+    val schema = snap.schema
     // a lineage-enabled table's compaction must PRESERVE row lineage
     // (spec v3 §Row Lineage: rewritten files carry it explicitly): the
     // rewrite reads the merged view WITH `_row_id` and
@@ -2172,7 +2090,9 @@ object IcebergSink {
         StructField("_last_updated_sequence_number", LongType,
           nullable = true)))
     val source =
-      if (lineage) readWithLineage(spark, table) else read(spark, table)
+      if (lineage) lineageView(spark, snap, CommitStore.Local)
+      else readMerged(spark, snap.schema, snap.data, snap.deletes,
+        curFields = snap.curFields, fileFields = snap.fileFields)
     val df = spark.createDataFrame(source.rdd, readSchema)
     val packed =
       if (zorderBy.isEmpty) df.coalesce(target)
@@ -2185,7 +2105,7 @@ object IcebergSink {
       extraPhysicalCols =
         if (lineage) Set("_row_id", "_last_updated_sequence_number")
         else Set.empty)
-    (before, fileCount())
+    (before, snapshotEntries(table, None).data.size)
   }
 
   /** REWRITE MANIFESTS — METADATA-ONLY maintenance (Iceberg's
@@ -2207,18 +2127,16 @@ object IcebergSink {
   def rewriteManifests(table: String,
       store: CommitStore = CommitStore.Local): (Int, Int) =
     txn(store, Txn.Retries)(t => t.attempt { _ =>
-      val hint = readHint(table).getOrElse(
-        throw new IllegalArgumentException(s"not an Iceberg table: $table"))
-      val meta = mapper.readTree(Files.readString(metaFile(table, hint)))
-      val list = currentManifestList(table, meta).getOrElse(return (0, 0))
+      val Head(hint, meta) = head(table)
+      val list = manifestListOf(meta).getOrElse(return (0, 0))
       val rows = IcebergAvro.readManifestList(
         new File(requireAvro(abs(table, list))))
       val (dataRows, deleteRows) =
         rows.partition(_.get("content").asInstanceOf[Int] == 0)
       if (dataRows.size <= 1) return (dataRows.size, dataRows.size)
       val groups = dataRows.groupBy { r =>
-        val f = new File(requireAvro(abs(table, r.get("manifest_path").toString)))
-        val m = IcebergAvro.readManifestMeta(f)
+        val m = IcebergAvro.readManifest(
+          new File(requireAvro(abs(table, r.get("manifest_path").toString)))).keyMeta
         (m.getOrElse("partition-spec-id", "0"), m.getOrElse("partition-spec", ""),
           m.getOrElse("schema", ""))
       }
@@ -2294,18 +2212,15 @@ object IcebergSink {
     */
   def syncFromDelta(spark: SparkSession, table: String,
       store: CommitStore = CommitStore.Local): Int = {
-    val hint = readHint(table).getOrElse(throw new IllegalArgumentException(
+    val Head(hint, meta) = headOption(table).getOrElse(throw new IllegalArgumentException(
       s"$table carries no Iceberg metadata — run convertFromDelta first"))
     require(Files.exists(Paths.get(table, "_delta_log")),
       s"not a Delta table: $table")
-    val meta = mapper.readTree(Files.readString(metaFile(table, hint)))
     val (schema, partCols, files, mapped) = DeltaSink.liveInventory(spark, table)
     require(!mapped, "column-mapped Delta tables do not sync")
     require(files.forall(!_._3),
       "deletion-vector tables do not sync: purge the DVs first")
-    val stored = DataType.fromJson(
-      meta.get("properties").get("graft.spark-schema").asText())
-      .asInstanceOf[StructType]
+    val stored = sparkSchemaOf(meta)
     require(schema.fields.map(f => (f.name, f.dataType)).toSeq ==
       stored.fields.map(f => (f.name, f.dataType)).toSeq,
       "Delta schema diverged from the Iceberg view — re-declare explicitly")
@@ -2322,9 +2237,9 @@ object IcebergSink {
     // sees a sync as a whole-table re-delivery
     val curSnap = snapshotEntries(table, None)
     val curEntries = curSnap.data
-    val curFiles = curEntries.map(_._1).toSet
+    val curFiles = curEntries.map(_.path).toSet
     val prevSeqByPath: Map[String, Long] =
-      curEntries.map(e => e._1 -> e._3).toMap
+      curEntries.map(e => e.path -> e.seq).toMap
     val deltaFiles = files.map(f => new File(table, f._1).getAbsolutePath)
     if (deltaFiles.toSet == curFiles) return 0
     // Iceberg-plane MoR deletes don't change the data-file set, so the
@@ -2378,7 +2293,7 @@ object IcebergSink {
 
   def convertFromDelta(spark: SparkSession, table: String,
       store: CommitStore = CommitStore.Local): Int = {
-    require(readHint(table).isEmpty, s"$table already carries Iceberg metadata")
+    require(headOption(table).isEmpty, s"$table already carries Iceberg metadata")
     require(Files.exists(Paths.get(table, "_delta_log")),
       s"not a Delta table: $table")
     val (schema, partCols, files, mapped) = DeltaSink.liveInventory(spark, table)
@@ -2482,9 +2397,7 @@ object IcebergSink {
     */
   def rollback(table: String, snapshotId: Long,
       store: CommitStore = CommitStore.Local): Unit = {
-    val hint = readHint(table).getOrElse(
-      throw new IllegalArgumentException(s"not an Iceberg table: $table"))
-    val meta = mapper.readTree(Files.readString(metaFile(table, hint)))
+    val Head(hint, meta) = head(table)
     val known = meta.get("snapshots").elements().asScala
       .map(_.get("snapshot-id").asLong()).toSet
     require(known.contains(snapshotId),
@@ -2518,18 +2431,16 @@ object IcebergSink {
   def fastForward(table: String, branch: String,
       store: CommitStore = CommitStore.Local): Long = {
     require(branch != "main", "main cannot fast-forward to itself")
-    val hint = readHint(table).getOrElse(
-      throw new IllegalArgumentException(s"not an Iceberg table: $table"))
-    val meta = mapper.readTree(Files.readString(metaFile(table, hint)))
+    val Head(hint, meta) = head(table)
     require(meta.has("refs") && meta.get("refs").has(branch),
       s"no such ref: $branch")
-    val head = meta.get("refs").get(branch).get("snapshot-id").asLong()
+    val branchHead = meta.get("refs").get(branch).get("snapshot-id").asLong()
     val mainHead = meta.get("current-snapshot-id").asLong()
-    if (head == mainHead) return head // already published
+    if (branchHead == mainHead) return branchHead // already published
     // ancestry walk: branch head → parent chain must reach main's head
     val byId = meta.get("snapshots").elements().asScala
       .map(n => n.get("snapshot-id").asLong() -> n).toMap
-    var cursor = Option(head)
+    var cursor = Option(branchHead)
     var found = false
     while (cursor.isDefined && !found) {
       if (cursor.get == mainHead) found = true
@@ -2538,14 +2449,14 @@ object IcebergSink {
     }
     require(found,
       s"not a fast-forward: main's head $mainHead is not an ancestor of " +
-        s"$branch's head $head — main advanced after the branch was cut")
+        s"$branch's head $branchHead — main advanced after the branch was cut")
     val newMeta = meta.deepCopy[ObjectNode]()
-    newMeta.put("current-snapshot-id", head)
+    newMeta.put("current-snapshot-id", branchHead)
     newMeta.put("last-updated-ms", System.currentTimeMillis())
     newMeta.get("refs").asInstanceOf[ObjectNode].putObject("main")
-      .put("snapshot-id", head).put("type", "branch")
+      .put("snapshot-id", branchHead).put("type", "branch")
     commitMetadata(table, store, hint, newMeta)
-    head
+    branchHead
   }
 
   /** The commit every Iceberg verb ends with: claims version hint+1 with
@@ -2590,9 +2501,7 @@ object IcebergSink {
       (minSnapshotsToKeep.isEmpty && maxSnapshotAgeMs.isEmpty),
       "min-snapshots-to-keep / max-snapshot-age-ms are branch retention " +
         "fields (spec §refs); tags carry only max-ref-age-ms")
-    val hint = readHint(table).getOrElse(
-      throw new IllegalArgumentException(s"not an Iceberg table: $table"))
-    val meta = mapper.readTree(Files.readString(metaFile(table, hint)))
+    val Head(hint, meta) = head(table)
     val known = meta.get("snapshots").elements().asScala
       .map(_.get("snapshot-id").asLong()).toSet
     require(known.contains(snapshotId),
@@ -2620,9 +2529,7 @@ object IcebergSink {
   def dropRef(table: String, name: String,
       store: CommitStore = CommitStore.Local): Unit = {
     require(name != "main", "main cannot be dropped")
-    val hint = readHint(table).getOrElse(
-      throw new IllegalArgumentException(s"not an Iceberg table: $table"))
-    val meta = mapper.readTree(Files.readString(metaFile(table, hint)))
+    val Head(hint, meta) = head(table)
     require(meta.has("refs") && meta.get("refs").has(name),
       s"no such ref: $name")
     val newMeta = meta.deepCopy[ObjectNode]()
@@ -2633,7 +2540,7 @@ object IcebergSink {
 
   /** Every named ref of the table: name → (snapshot-id, type). */
   def listRefs(table: String): Map[String, (Long, String)] = {
-    val meta = currentMeta(table)
+    val meta = head(table).meta
     if (!meta.has("refs") || !meta.get("refs").isObject) Map.empty
     else meta.get("refs").properties().asScala.map { e =>
       e.getKey -> (e.getValue.get("snapshot-id").asLong(),
@@ -2665,13 +2572,9 @@ object IcebergSink {
   def appendBranch(df: DataFrame, table: String, branch: String,
       store: CommitStore = CommitStore.Local,
       summaryProps: Map[String, String] = Map.empty): Long = {
-    val hint = readHint(table).getOrElse(
-      throw new IllegalArgumentException(s"not an Iceberg table: $table"))
-    val meta = mapper.readTree(Files.readString(metaFile(table, hint)))
+    val Head(hint, meta) = head(table)
     requireBranchHead(meta, branch): Unit
-    val schema = DataType.fromJson(
-      meta.get("properties").get("graft.spark-schema").asText())
-      .asInstanceOf[StructType]
+    val schema = sparkSchemaOf(meta)
     // align BY NAME before the positional gate, exactly like a main
     // append — a gate-passing frame arriving reordered must never have
     // its values positionally renamed into the wrong logical columns
@@ -2696,13 +2599,10 @@ object IcebergSink {
       // are reusable across attempts; each retry re-reads the metadata,
       // re-validates the branch, and re-claims the next version.
       t.attempt { n =>
-        val hintNow =
-          if (n == 0) hint
-          else readHint(table).getOrElse(
+        val Head(hintNow, metaNow) =
+          if (n == 0) Head(hint, meta)
+          else headOption(table).getOrElse(
             throw new IllegalStateException(s"version hint vanished: $table"))
-        val metaNow =
-          if (n == 0) meta
-          else mapper.readTree(Files.readString(metaFile(table, hintNow)))
         requireBranchHead(metaNow, branch): Unit
         val seq = metaNow.get("last-sequence-number").asLong() + 1
         commitSnapshot(table, t, metaNow, hintNow, snapshotId, seq,
@@ -2754,12 +2654,8 @@ object IcebergSink {
     // spec §refs: a branch ref advances on commit while main is untouched.
     // A REPLACE commit (rewriteManifests) supplies the carried rows itself
     // instead of inheriting the head's list verbatim.
-    val baseList = branch match {
-      case None => currentManifestList(table, meta)
-      case Some(b) =>
-        val head = meta.get("refs").get(b).get("snapshot-id").asLong()
-        manifestListOf(table, meta, head)
-    }
+    val baseList = manifestListOf(meta,
+      branch.map(b => meta.get("refs").get(b).get("snapshot-id").asLong()))
     val carried = carriedOverride.getOrElse(baseList
       .map(p => IcebergAvro.readManifestList(new File(requireAvro(abs(table, p)))))
       .getOrElse(Nil))
@@ -2927,69 +2823,48 @@ object IcebergSink {
     */
   def enableRowLineage(spark: SparkSession, table: String,
       store: CommitStore = CommitStore.Local): Long = {
-    val hint = readHint(table).getOrElse(
-      throw new IllegalArgumentException(s"not an Iceberg table: $table"))
-    val meta = mapper.readTree(Files.readString(metaFile(table, hint)))
+    val Head(hint, meta) = head(table)
     require(!meta.has("next-row-id"),
       s"row lineage already enabled on $table")
-    val snap = snapshotEntries(table, None)
-    val seqByPath: Map[String, Long] = snap.data.map(e => e._1 -> e._3).toMap
-    val list = manifestListOf(table, meta,
-      meta.get("current-snapshot-id").asLong()).getOrElse(
+    val list = manifestListOf(meta).getOrElse(
       throw new IllegalStateException(s"no current snapshot on $table"))
-    val refs = manifestRefs(table, list)
+    val listRows = IcebergAvro.readManifestList(new File(requireAvro(abs(table, list))))
     // one rewritten manifest PER SOURCE MANIFEST — each keeps its OWN
     // partition struct (rebuilt from its Avro writer schema), spec id and
     // schema key metadata, so partitioned, partition-evolved and
     // schema-evolved histories all retro-assign faithfully. Metadata
     // scale throughout: no data file is opened.
-    case class MEntry(path: String, size: Long, rows: Long,
-        stats: IcebergAvro.ColumnStats, pvals: Map[String, Any])
-    val perManifest = refs.filter(_.content == 0).map { r =>
-      val f = new File(requireAvro(abs(table, r.path)))
-      val (pf, specId, specJson) = IcebergAvro.readManifestPartitionFields(f)
-      val stats = IcebergAvro.readManifestStats(f).toMap
-      val (pentries, schemaMeta) = IcebergAvro.readManifestPartitionsWithSchema(f)
-      val sizes = IcebergAvro.readManifestDataEntries(f)
-        .map(e => e._1 -> ((e._2, e._3))).toMap
-      val entries = pentries.collect {
-        case (p, pvals, _) if seqByPath.contains(p) =>
-          MEntry(p, sizes(p)._1, sizes(p)._2,
-            stats.getOrElse(p, IcebergAvro.ColumnStats()), pvals)
-      }
-      (pf, specId, specJson, schemaMeta, entries)
-    }.filter(_._5.nonEmpty)
+    val manifests = listRows.map(manifestRefOf).filter(_.content == 0)
+      .map(readManifest(table, _)).filter(_.entries.nonEmpty)
+    val data = manifests.flatMap(_.entries)
+    val seqByPath: Map[String, Long] = data.map(e => e.path -> e.seq).toMap
     // GLOBAL id order: (data sequence, path) across every manifest
-    val rowsByPath: Map[String, Long] =
-      perManifest.flatMap(_._5.map(e => e.path -> e.rows)).toMap
-    val ordered = snap.data.map(_._1).distinct.sortBy(p => (seqByPath(p), p))
+    val rowsByPath: Map[String, Long] = data.map(e => e.path -> e.recordCount).toMap
+    val ordered = data.map(_.path).distinct.sortBy(p => (seqByPath(p), p))
     var next = 0L
     val fridByPath: Map[String, Long] = ordered.map { p =>
-      val id = next; next += rowsByPath.getOrElse(p, 0L); p -> id
+      val id = next; next += rowsByPath(p); p -> id
     }.toMap
     val snapshotId = math.abs(new java.util.Random().nextLong())
     val seq = meta.get("last-sequence-number").asLong() + 1
     // delete manifests carry forward verbatim — their (file, pos)
     // references stay valid because every data entry kept its sequence
-    val carriedDeletes = IcebergAvro.readManifestList(
-      new File(requireAvro(abs(table, list))))
-      .filter(_.get("content").asInstanceOf[Int] == 1)
+    val carriedDeletes = listRows.filter(_.get("content").asInstanceOf[Int] == 1)
     txn(store) { t =>
-      val rows = perManifest.map {
-        case (pf, specId, specJson, schemaMeta, entries) =>
-          val infos = entries.map { e =>
-            IcebergAvro.DataFileInfo(e.path, e.size, e.rows, e.stats,
-              pf.map(x => e.pvals.getOrElse(x.name, null)),
-              firstRowId = Some(fridByPath(e.path)))
-          }
-          val (mp, len) = writeAvroArtifact(table, t,
-            s"manifest-${java.util.UUID.randomUUID()}.avro")(f =>
-            IcebergAvro.writeManifest(f, infos, snapshotId,
-              schemaMeta.getOrElse(currentSchemaJson(meta)._2), specJson, pf,
-              specId = specId, entrySeqs = seqByPath))
-          IcebergAvro.manifestRowExisting(mp.toFile.getAbsolutePath, len, seq,
-            entries.map(e => seqByPath(e.path)).min, snapshotId, infos.size,
-            infos.map(_.recordCount).sum, specId = specId)
+      val rows = manifests.map { m =>
+        val infos = m.entries.map { e =>
+          IcebergAvro.DataFileInfo(e.path, e.sizeBytes, e.recordCount, e.stats,
+            m.partitionFields.map(x => e.pvals.getOrElse(x.name, null)),
+            firstRowId = Some(fridByPath(e.path)))
+        }
+        val (mp, len) = writeAvroArtifact(table, t,
+          s"manifest-${java.util.UUID.randomUUID()}.avro")(f =>
+          IcebergAvro.writeManifest(f, infos, snapshotId,
+            m.schemaJson.getOrElse(currentSchemaJson(meta)._2), m.specJson,
+            m.partitionFields, specId = m.specId, entrySeqs = seqByPath))
+        IcebergAvro.manifestRowExisting(mp.toFile.getAbsolutePath, len, seq,
+          m.entries.map(_.seq).min, snapshotId, infos.size,
+          infos.map(_.recordCount).sum, specId = m.specId)
       }
       commitSnapshot(table, t, meta, hint, snapshotId, seq,
         currentSchemaJson(meta)._1, rows, "replace",
@@ -3001,23 +2876,6 @@ object IcebergSink {
         metaMutate = m => m.put("next-row-id", 0L): Unit)
     }
     next
-  }
-
-  /** Live data files' manifest-assigned first row ids (empty before
-    * [[enableRowLineage]]); files a lineage-preserving rewrite
-    * materialized are absent here — their ids live in the parquet.
-    */
-  private def firstRowIds(table: String): Map[String, Long] = {
-    val meta = currentMeta(table)
-    if (!meta.has("next-row-id")) return Map.empty
-    val cur = meta.get("current-snapshot-id").asLong()
-    if (cur <= 0) return Map.empty
-    val list = manifestListOf(table, meta, cur).getOrElse(return Map.empty)
-    manifestRefs(table, list).filter(_.content == 0).flatMap { r =>
-      IcebergAvro.readManifestDataEntries(
-        new File(requireAvro(abs(table, r.path))))
-        .collect { case (p, _, _, Some(id)) => p -> id }
-    }.toMap
   }
 
   /** LINEAGE READ — the current merged view plus `_row_id` AND
@@ -3039,10 +2897,16 @@ object IcebergSink {
     * rows keep their ids because deletes never move positions.
     */
   def readWithLineage(spark: SparkSession, table: String,
-      store: CommitStore = CommitStore.Local): DataFrame = {
+      store: CommitStore = CommitStore.Local): DataFrame =
+    lineageView(spark, snapshotEntries(table, None), store)
+
+  private def lineageView(spark: SparkSession, snap: Snapshot,
+      store: CommitStore): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, coalesce, col}
-    val snap = snapshotEntries(table, None)
-    val frid = firstRowIds(table)
+    // manifest-assigned first row ids (none before [[enableRowLineage]]);
+    // files a lineage-preserving rewrite materialized carry none — their
+    // ids live in the parquet
+    val lineageOn = snap.head.meta.has("next-row-id")
     val withRid = StructType(snap.schema.fields ++ Seq(
       StructField("_row_id", LongType, nullable = true),
       StructField("_last_updated_sequence_number", LongType, nullable = true)))
@@ -3055,8 +2919,9 @@ object IcebergSink {
       keepLineage = true, curFields = snap.curFields,
       fileFields = snap.fileFields, store = store)
     val rows = spark.createDataFrame(
-      snap.data.map(e => org.apache.spark.sql.Row(
-        e._1, frid.get(e._1).map(Long.box).orNull, Long.box(e._3))).asJava,
+      snap.data.map(e => org.apache.spark.sql.Row(e.path,
+        e.firstRowId.filter(_ => lineageOn).map(Long.box).orNull,
+        Long.box(e.seq))).asJava,
       StructType(Seq(StructField("_gf_fpath", StringType),
         StructField("_gf_frid", LongType, nullable = true),
         StructField("_gf_fseq", LongType, nullable = true))))
@@ -3072,11 +2937,9 @@ object IcebergSink {
   private def dvRewrite(spark: SparkSession, table: String, predicate: String,
       setOpt: Option[Map[String, String]], store: CommitStore): Long = {
     import org.apache.spark.sql.functions.{col, expr}
-    val hint = readHint(table).getOrElse(
-      throw new IllegalArgumentException(s"not an Iceberg table: $table"))
-    val meta = mapper.readTree(Files.readString(metaFile(table, hint)))
     val snap = snapshotEntries(table, None)
-    require(snap.deletes.forall(d => d.content != 1 || d.dvRef.isDefined),
+    val Head(hint, meta) = snap.head
+    require(snap.deletes.forall(d => d.content != 1 || d.dv.isDefined),
       "live positional delete files present - v3 forbids mixing them " +
         "with deletion vectors; compact first")
     // SET plan validation BEFORE any staging (posRewrite's contract)
@@ -3102,7 +2965,7 @@ object IcebergSink {
         .getAbsolutePath
     val descs = DvPlane.write(store,
       matched.select(col("_gf_mpath"), col(DvPlane.PosCol)),
-      liveDvs(snap.deletes), puffinAbs, packPuffinShard)
+      liveDvs(snap.deletes).view.mapValues(dvBlob).toMap, puffinAbs, packPuffinShard)
     if (descs.isEmpty) return 0L
     txn(store) { t =>
       t.record(descs.map(_.shard).distinct.map(i => Paths.get(puffinAbs(i))): _*)
@@ -3160,30 +3023,26 @@ object IcebergSink {
     * applies, so superseded vectors don't double-count.
     */
   def dvMaskedRows(table: String): Long = {
-    val meta = currentMeta(table)
+    val meta = head(table).meta
     if (Option(meta.get("current-snapshot-id")).forall(_.asLong() <= 0)) return 0L
-    val list = manifestListOf(table, meta,
-      meta.get("current-snapshot-id").asLong()).getOrElse(return 0L)
-    manifestRefs(table, list).filter(_.content == 1).flatMap { r =>
-      val (entries, _) = IcebergAvro.readManifestDeleteEntriesWithSchema(
-        new File(requireAvro(abs(table, r.path))))
-      entries.collect { case (_, 1, _, rows, _, Some((ref, _, _))) =>
-        (ref, r.seq, rows)
-      }
-    }.groupBy(_._1).map { case (_, vs) => vs.maxBy(_._2)._3 }.sum
+    val list = manifestListOf(meta).getOrElse(return 0L)
+    liveDvs(manifestRefs(table, list).filter(_.content == 1)
+      .flatMap(readManifest(table, _).entries)).values.map(_.recordCount).sum
   }
 
-  /** The live V3 deletion vector per referenced data file, as (Puffin
-    * path, offset, blob length): the HIGHEST-sequence one (spec supersede
-    * rule — each new vector replaces the previous for its file).
+  /** The live V3 deletion-vector entry per referenced data file: the
+    * HIGHEST-sequence one (spec supersede rule — each new vector
+    * replaces the previous for its file).
     */
-  private def liveDvs(deletes: Seq[DeleteRef]): Map[String, (String, Long, Long)] =
-    deletes.filter(d => d.content == 1 && d.dvRef.isDefined)
-      .groupBy(_.dvRef.get._1).map { case (ref, ds) =>
-        val d = ds.maxBy(_.seq)
-        val (_, off, size) = d.dvRef.get
-        ref -> (d.path, off, size)
-      }
+  private def liveDvs(deletes: Seq[IcebergAvro.Entry]): Map[String, IcebergAvro.Entry] =
+    deletes.filter(d => d.content == 1 && d.dv.isDefined)
+      .groupBy(_.dv.get._1).map { case (ref, ds) => ref -> ds.maxBy(_.seq) }
+
+  /** A deletion-vector entry's blob as (Puffin path, offset, blob length). */
+  private def dvBlob(d: IcebergAvro.Entry): (String, Long, Long) = {
+    val (_, off, size) = d.dv.get
+    (d.path, off, size)
+  }
 
   /** The bitmap of one `deletion-vector-v1` blob at (Puffin path,
     * offset, blob length).
@@ -3309,9 +3168,7 @@ object IcebergSink {
       setOpt: Option[Map[String, String]],
       store: CommitStore, branch: Option[String] = None): Long = {
     import org.apache.spark.sql.functions.{col, expr}
-    val hint = readHint(table).getOrElse(
-      throw new IllegalArgumentException(s"not an Iceberg table: $table"))
-    val meta = mapper.readTree(Files.readString(metaFile(table, hint)))
+    val Head(hint, meta) = head(table)
     // a branch-targeted rewrite matches against the BRANCH's merged view
     // and commits to its ref — the audit-fix loop of write-audit-publish
     val snap = snapshotEntries(table,
@@ -3355,7 +3212,7 @@ object IcebergSink {
     val delPartSpecs = specCols.map(parsePartSpec)
     val delPartFields = partitionFieldsOf(snap.schema, delPartSpecs)
     val groupKeys: IndexedSeq[Map[String, Any]] =
-      snap.data.map(_._2).distinct.toIndexedSeq
+      snap.data.map(_.pvals).distinct.toIndexedSeq
     val gidByPvals = groupKeys.zipWithIndex.toMap
     import spark.implicits._
     val base = matched
@@ -3370,7 +3227,7 @@ object IcebergSink {
         .sortWithinPartitions("file_path", "pos")
       else {
         import org.apache.spark.sql.functions.{broadcast, coalesce => cl, lit}
-        val gidLookup = snap.data.map(e => (e._1, gidByPvals(e._2)))
+        val gidLookup = snap.data.map(e => (e.path, gidByPvals(e.pvals)))
           .toDF("file_path", "_gf_gid")
         base.join(broadcast(gidLookup), Seq("file_path"), "left")
           .withColumn("_gf_gid", cl(col("_gf_gid"), lit(-1)))
@@ -3472,12 +3329,9 @@ object IcebergSink {
       branch: Option[String] = None): Long = {
     import org.apache.spark.sql.functions.{col, count, lit, raise_error, when}
     require(keys.nonEmpty, "upsert requires at least one key column")
-    val hint = readHint(table).getOrElse(
-      throw new IllegalArgumentException(s"not an Iceberg table: $table"))
-    val meta = mapper.readTree(Files.readString(metaFile(table, hint)))
+    val Head(hint, meta) = head(table)
     branch.foreach(requireBranchHead(meta, _): Unit)
-    val schema = DataType.fromJson(
-      meta.get("properties").get("graft.spark-schema").asText()).asInstanceOf[StructType]
+    val schema = sparkSchemaOf(meta)
     val tableCols = schema.fieldNames.toSeq
     keys.foreach(k => require(tableCols.contains(k), s"no such key column: $k"))
     val curF = curFieldsOf(meta, schema)
@@ -3595,11 +3449,8 @@ object IcebergSink {
       store: CommitStore = CommitStore.Local): Long = {
     import org.apache.spark.sql.functions.col
     require(groups.nonEmpty, "deleteKeys requires at least one key group")
-    val hint = readHint(table).getOrElse(
-      throw new IllegalArgumentException(s"not an Iceberg table: $table"))
-    val meta = mapper.readTree(Files.readString(metaFile(table, hint)))
-    val schema = DataType.fromJson(
-      meta.get("properties").get("graft.spark-schema").asText()).asInstanceOf[StructType]
+    val Head(hint, meta) = head(table)
+    val schema = sparkSchemaOf(meta)
     // stage one parquet key file set per group, stamped with the table's
     // field ids per the spec (readers resolve equality_ids against them)
     txn(store) { t =>
@@ -3688,17 +3539,17 @@ object IcebergSink {
         val prev = prevCarried
         val cur = snapshotEntries(table, Some(curId))
         prevCarried = cur
-        val prevPaths = prev.data.map(_._1).toSet
-        val dataAdded = cur.data.filterNot(e => prevPaths.contains(e._1))
+        val prevPaths = prev.data.map(_.path).toSet
+        val dataAdded = cur.data.filterNot(e => prevPaths.contains(e.path))
         val prevDel = prev.deletes.map(_.path).toSet
         val delAdded = cur.deletes.filterNot(d => prevDel.contains(d.path))
         val newRows =
           if (dataAdded.isEmpty) None
-          else Some(readEntries(spark, schema, dataAdded.map(e => (e._1, e._2)),
+          else Some(readEntries(spark, schema, dataAdded,
             curFields = cur.curFields, fileFields = cur.fileFields))
         val posImages: Option[DataFrame] = {
           val (dvDels, pos) = delAdded.filter(_.content == 1)
-            .partition(_.dvRef.isDefined)
+            .partition(_.dv.isDefined)
           // V3 deletion vectors decode to the NEWLY masked positions —
           // the committed vector minus the file's previous one (vectors
           // are cumulative by the supersede rule). Materializing them is
@@ -3706,14 +3557,10 @@ object IcebergSink {
           // pre-image row per position anyway.
           val read = (p: String) => store.readObject(Paths.get(p))
           val dvRows: Seq[(String, Long)] = dvDels.flatMap { d =>
-            val (ref, off, size) = d.dvRef.get
-            val bm = dvBitmap((d.path, off, size), read)
-            prev.deletes
-              .filter(p => p.content == 1 && p.dvRef.exists(_._1 == ref))
-              .sortBy(_.seq).lastOption.foreach { p =>
-                val (_, poff, psize) = p.dvRef.get
-                bm.andNot(dvBitmap((p.path, poff, psize), read))
-              }
+            val ref = d.dv.get._1
+            val bm = dvBitmap(dvBlob(d), read)
+            liveDvs(prev.deletes).get(ref)
+              .foreach(p => bm.andNot(dvBitmap(dvBlob(p), read)))
             val it = bm.getLongIterator
             val out = scala.collection.mutable.ArrayBuffer[(String, Long)]()
             while (it.hasNext) out += ((ref, it.next()))
@@ -3735,14 +3582,13 @@ object IcebergSink {
             val touched = delRows.select("_gfd_key").distinct()
               .collect().map(_.getString(0)).toSet
             val touchedEntries = prev.data
-              .filter(e => touched.contains(DvPlane.stripScheme(e._1)))
-              .map(e => (e._1, e._2))
+              .filter(e => touched.contains(DvPlane.stripScheme(e.path)))
             // each row takes its file's raw key (the delete rows' form)
             // by its file's keys, so an encoded URI still finds its deletes
             Some(DvPlane.attach(
                 readEntries(spark, schema, touchedEntries, withLineage = true,
                   curFields = prev.curFields, fileFields = prev.fileFields),
-                touchedEntries.map(e => (e._1, Row(DvPlane.stripScheme(e._1)))),
+                touchedEntries.map(e => (e.path, Row(DvPlane.stripScheme(e.path)))),
                 StructType(Seq(StructField("_gf_key", StringType))),
                 "changelog: data row from unmapped file ")
               .join(broadcast(delRows),
@@ -3770,7 +3616,8 @@ object IcebergSink {
         val eqInfo: Seq[(DataFrame, Seq[String])] = eqGroups.map {
           case (eqIds, ds) =>
             val keyNames = eqIds.map(curNameOf)
-            val keysDf = ds.map(d => readEqDeleteFile(spark, schema, d, curNameOf))
+            val keysDf = ds.map(d => readEqDeleteFile(spark, schema, d,
+                cur.fileFields.get(d.path), curNameOf))
               .reduce(_.unionAll(_))
             (keysDf, keyNames)
         }
@@ -3847,7 +3694,7 @@ object IcebergSink {
     * [[read]]'s time travel and [[expireSnapshots]]' retention choice.
     */
   def snapshots(table: String): Seq[(Long, Long, Long)] = {
-    val meta = currentMeta(table)
+    val meta = head(table).meta
     meta.get("snapshots").elements().asScala.map { s =>
       (s.get("snapshot-id").asLong(), s.get("sequence-number").asLong(),
         s.get("timestamp-ms").asLong())
@@ -3865,9 +3712,7 @@ object IcebergSink {
   def expireSnapshots(table: String, keepLast: Int = 2,
       store: CommitStore = CommitStore.Local): Int = {
     require(keepLast >= 1, "must keep at least the current snapshot")
-    val hint = readHint(table).getOrElse(
-      throw new IllegalArgumentException(s"not an Iceberg table: $table"))
-    val meta = mapper.readTree(Files.readString(metaFile(table, hint)))
+    val Head(hint, meta) = head(table)
     val all = meta.get("snapshots").elements().asScala.map(_.deepCopy[ObjectNode]()).toSeq
       .sortBy(_.get("sequence-number").asLong())
     if (all.size <= keepLast) return 0
@@ -3927,14 +3772,9 @@ object IcebergSink {
     // expires this pass (its pin would otherwise survive forever)
     if (expired.isEmpty && agedOutRefs.isEmpty) return 0
 
-    def filesOf(snaps: Seq[ObjectNode]): (Set[String], Set[String]) = {
-      val lists = snaps.map(s => abs(table, s.get("manifest-list").asText()))
-      val manifests = lists.flatMap(readManifestPaths(table, _)).toSet
-      val data = manifests.flatMap(mp => dataFilesOf(table, mp))
-      (manifests ++ lists.toSet, data)
-    }
-    val (keptMeta, keptData) = filesOf(kept)
-    val (expMeta, expData) = filesOf(expired)
+    val (keptFiles, expFiles) = snapshotFiles(table, kept ++ expired).splitAt(kept.size)
+    val (keptMeta, keptData) = unionFiles(keptFiles)
+    val (expMeta, expData) = unionFiles(expFiles)
 
     // dual-format guard, resolved BEFORE the metadata commit: on a
     // converted table the DELTA log may still reference files every kept
@@ -3987,13 +3827,8 @@ object IcebergSink {
   def removeOrphanFiles(spark: SparkSession, table: String,
       olderThanMs: Long = 3L * 24 * 3600 * 1000,
       store: CommitStore = CommitStore.Local): Seq[String] = {
-    val hint = readHint(table).getOrElse(
-      throw new IllegalArgumentException(s"not an Iceberg table: $table"))
-    val meta = mapper.readTree(Files.readString(metaFile(table, hint)))
-    val lists = meta.get("snapshots").elements().asScala.toSeq
-      .map(s => abs(table, s.get("manifest-list").asText()))
-    val manifests = lists.flatMap(readManifestPaths(table, _)).toSet
-    val dataRefs = manifests.flatMap(mp => dataFilesOf(table, mp))
+    val (metaRefs, dataRefs) = unionFiles(snapshotFiles(table,
+      head(table).meta.get("snapshots").elements().asScala.toSeq))
     // dual-format guard: EVERY path the Delta log ever added — a
     // tombstone inside vacuum's retention window still serves time
     // travel/restore and is not an orphan (DeltaSink.vacuum owns it)
@@ -4002,7 +3837,7 @@ object IcebergSink {
         DeltaSink.allReferencedFiles(spark, table)
           .map(rel => new File(table, rel).getAbsolutePath)
       else Set.empty
-    val referenced = lists.toSet ++ manifests ++ dataRefs ++ deltaRefs
+    val referenced = metaRefs ++ dataRefs ++ deltaRefs
     val cutoff = System.currentTimeMillis() - olderThanMs
     val root = new File(table)
     // LISTING is the sweep's real cost at 100 TB (the referenced set and
@@ -4043,61 +3878,86 @@ object IcebergSink {
     */
   private[sinks] def inventoryForConvert(table: String)
       : (StructType, Seq[String], Seq[(String, Map[String, Any], Long)]) = {
-    val meta = currentMeta(table)
-    val schema = DataType.fromJson(
-      meta.get("properties").get("graft.spark-schema").asText())
-      .asInstanceOf[StructType]
-    val specs = storedSpecsOf(meta)
+    val snap = snapshotEntries(table, None)
+    val specs = storedSpecsOf(snap.head.meta)
     require(specs.size == 1, "partition-evolved Iceberg tables do not " +
       "convert to Delta (mixed per-file layouts); compact first")
     val default = specs.head._2
     require(default.forall(_.transform == "identity"),
       "hidden (transform) partitioning has no Delta equivalent")
-    val snap = snapshotEntries(table, None)
     require(snap.deletes.isEmpty,
       "merge-on-read delete files do not convert to Delta; compact first")
-    val list = manifestListOf(table, meta,
-      meta.get("current-snapshot-id").asLong()).getOrElse(
-      throw new IllegalStateException(s"no current snapshot: $table"))
-    val entries = manifestRefs(table, list).filter(_.content == 0).flatMap { mr =>
-      val f = new File(requireAvro(abs(table, mr.path)))
-      val parts = IcebergAvro.readManifestPartitions(f).toMap
-      IcebergAvro.readManifestDataFiles(f).map { case (p, n) =>
-        (p, parts.getOrElse(p, Map.empty[String, Any]), n)
-      }
-    }
-    (schema, default.map(_.name), entries)
+    (snap.schema, default.map(_.name),
+      snap.data.map(e => (e.path, e.pvals, e.recordCount)))
   }
 
   /** EVERY data file any snapshot of the current metadata references —
     * the protection set the Delta-plane janitor (vacuum) honors on a
-    * dual-format table.
+    * dual-format table; empty when the table carries no Iceberg metadata.
     */
-  private[sinks] def referencedDataFiles(table: String): Set[String] = {
-    val meta = currentMeta(table)
-    meta.get("snapshots").elements().asScala.toSeq
-      .map(s => abs(table, s.get("manifest-list").asText()))
-      .flatMap(readManifestPaths(table, _)).toSet
-      .flatMap((mp: String) => dataFilesOf(table, mp))
+  private[sinks] def referencedDataFiles(table: String): Set[String] =
+    headOption(table).toSeq.flatMap(h => snapshotFiles(table,
+      h.meta.get("snapshots").elements().asScala.toSeq)).flatMap(_._2).toSet
+
+  /** The reference walk behind expiry, orphan removal and the vacuum
+    * guard: per snapshot, (its manifest list and manifests, the files
+    * their live entries name — data and delete files alike). Each
+    * distinct manifest is opened once however many snapshots share it.
+    */
+  private def snapshotFiles(table: String,
+      snaps: Seq[com.fasterxml.jackson.databind.JsonNode])
+      : Seq[(Set[String], Set[String])] = {
+    val lists = snaps.map(s => abs(table, s.get("manifest-list").asText()))
+    val refsByList = lists.distinct.map(l => l -> manifestRefs(table, l)).toMap
+    val filesByManifest = refsByList.values.flatten.toSeq.distinctBy(_.path)
+      .map(r => r.path -> readManifest(table, r).entries.map(_.path)).toMap
+    lists.map { l =>
+      val manifests = refsByList(l).map(_.path)
+      (manifests.toSet + l, manifests.flatMap(filesByManifest).toSet)
+    }
   }
 
-  private[sinks] def currentMeta(table: String): com.fasterxml.jackson.databind.JsonNode = {
-    val hint = readHint(table).getOrElse(
-      throw new IllegalArgumentException(s"not an Iceberg table (no version-hint.text): $table"))
-    mapper.readTree(Files.readString(metaFile(table, hint)))
+  private def unionFiles(files: Seq[(Set[String], Set[String])])
+      : (Set[String], Set[String]) =
+    (files.flatMap(_._1).toSet, files.flatMap(_._2).toSet)
+
+  /** The table head: the version the hint names and that version's
+    * parsed metadata JSON.
+    */
+  private[sinks] case class Head(version: Long,
+      meta: com.fasterxml.jackson.databind.JsonNode)
+
+  /** THE read of the table head (version hint → `vN.metadata.json` →
+    * parse) every verb starts from; None when the table carries no
+    * Iceberg metadata.
+    */
+  private[sinks] def headOption(table: String): Option[Head] = {
+    val f = hintFile(table)
+    if (!Files.exists(f)) None
+    else {
+      val v = Files.readString(f).trim.toLong
+      Some(Head(v, mapper.readTree(Files.readString(metaFile(table, v)))))
+    }
   }
 
-  private[sinks] def manifestListOf(table: String,
-      meta: com.fasterxml.jackson.databind.JsonNode, snapshotId: Long): Option[String] =
-    meta.get("snapshots").elements().asScala
-      .find(_.get("snapshot-id").asLong() == snapshotId)
-      .map(_.get("manifest-list").asText())
+  private[sinks] def head(table: String): Head = headOption(table).getOrElse(
+    throw new IllegalArgumentException(
+      s"not an Iceberg table (no version-hint.text): $table"))
 
-  private def currentManifestList(table: String,
-      meta: com.fasterxml.jackson.databind.JsonNode): Option[String] = {
-    val current = meta.get("current-snapshot-id").asLong()
+  /** The declared Spark schema a table metadata JSON carries. */
+  private[sinks] def sparkSchemaOf(
+      meta: com.fasterxml.jackson.databind.JsonNode): StructType =
+    DataType.fromJson(meta.get("properties").get("graft.spark-schema").asText())
+      .asInstanceOf[StructType]
+
+  /** The manifest list of snapshot `snapshotId` (default: the current
+    * one) in `meta`; None when no such snapshot is retained.
+    */
+  private[sinks] def manifestListOf(meta: com.fasterxml.jackson.databind.JsonNode,
+      snapshotId: Option[Long] = None): Option[String] = {
+    val id = snapshotId.getOrElse(meta.get("current-snapshot-id").asLong())
     meta.get("snapshots").elements().asScala
-      .find(_.get("snapshot-id").asLong() == current)
+      .find(_.get("snapshot-id").asLong() == id)
       .map(_.get("manifest-list").asText())
   }
 
@@ -4117,27 +3977,23 @@ object IcebergSink {
     p
   }
 
-  private def readManifestPaths(table: String, listPath: String): Seq[String] =
-    IcebergAvro.readManifestList(new File(requireAvro(abs(table, listPath))))
-      .map(_.get("manifest_path").toString)
-
   /** (path, V2 content code, sequence number) of every manifest_file row
     * in a manifest list — the read planner's split between data manifests
     * (content 0) and positional-delete manifests (content 1).
     */
   private[sinks] case class ManifestRef(path: String, content: Int, seq: Long)
   private[sinks] def manifestRefs(table: String, listPath: String): Seq[ManifestRef] =
-    IcebergAvro.readManifestList(new File(requireAvro(abs(table, listPath)))).map { r =>
-      ManifestRef(r.get("manifest_path").toString,
-        r.get("content").asInstanceOf[Int],
-        r.get("sequence_number").asInstanceOf[Long])
-    }
+    IcebergAvro.readManifestList(new File(requireAvro(abs(table, listPath))))
+      .map(manifestRefOf)
 
-  private def dataFilesOf(table: String, manifestPath: String): Seq[String] =
-    IcebergAvro.readManifestDataFiles(new File(abs(table, manifestPath))).map(_._1)
+  private def manifestRefOf(r: org.apache.avro.generic.GenericRecord): ManifestRef =
+    ManifestRef(r.get("manifest_path").toString,
+      r.get("content").asInstanceOf[Int],
+      r.get("sequence_number").asInstanceOf[Long])
 
-  private[sinks] def readHint(table: String): Option[Long] = {
-    val f = hintFile(table)
-    if (Files.exists(f)) Some(Files.readString(f).trim.toLong) else None
-  }
+  /** The manifest a list row references, its entries' sequences
+    * inherited from that row.
+    */
+  private[sinks] def readManifest(table: String, r: ManifestRef): IcebergAvro.Manifest =
+    IcebergAvro.readManifest(new File(requireAvro(abs(table, r.path))), r.seq)
 }

@@ -134,11 +134,7 @@ object IcebergStats {
       store: CommitStore = CommitStore.Local): Map[String, Long] = {
     import org.apache.spark.sql.functions.col
     require(columns.nonEmpty, "writeStats needs at least one column")
-    val hint = IcebergSink.readHint(table).getOrElse(
-      throw new IllegalArgumentException(s"not an Iceberg table: $table"))
-    val meta0 = Files.readString(IcebergSink.metaFile(table, hint))
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val meta = mapper.readTree(meta0)
+    val IcebergSink.Head(hint, meta) = IcebergSink.head(table)
     val snapshotId = meta.get("current-snapshot-id").asLong()
     require(snapshotId > 0, s"no current snapshot on $table")
     val seq = meta.get("last-sequence-number").asLong()
@@ -239,9 +235,7 @@ object IcebergStats {
     * None when the table carries no statistics for the column.
     */
   def ndv(table: String, column: String): Option[Long] = {
-    val hint = IcebergSink.readHint(table).getOrElse(return None)
-    val meta = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(Files.readString(IcebergSink.metaFile(table, hint)))
+    val meta = IcebergSink.headOption(table).getOrElse(return None).meta
     if (!meta.has("statistics")) return None
     val fieldIdOf: Map[String, Int] = {
       import scala.jdk.CollectionConverters._
@@ -301,24 +295,18 @@ object IcebergStats {
       listSeq: Long): Seq[ManifestStatEntry] = {
     def str(m: Map[String, Any]): Map[String, String] =
       m.map { case (k, v) => k -> String.valueOf(v) }
-    if (content == 0) {
-      val (_, specId, _) = IcebergAvro.readManifestPartitionFields(f)
-      val (pentries, _) = IcebergAvro.readManifestPartitionsWithSchema(f)
-      val seqOf = pentries.map(e => e._1 -> e._3.getOrElse(listSeq)).toMap
-      val parts = pentries.map(e => (e._1, e._2)).toMap
-      IcebergAvro.readManifestDataEntries(f).map { case (p, size, rows, _) =>
-        ManifestStatEntry(0, p, str(parts.getOrElse(p, Map.empty)), specId,
-          size, rows, seqOf.getOrElse(p, listSeq))
-      }
-    } else
-      IcebergAvro.readManifestDeleteEntriesWithSchema(f)._1.collect {
-        case (_, 1, _, n, _, Some((ref, _, _))) =>
-          ManifestStatEntry(1, ref, Map.empty, 0, 0L, n, listSeq)
-        case (_, 1, _, n, pvals, None) =>
-          ManifestStatEntry(2, "", str(pvals), 0, 0L, n, listSeq)
-        case (_, 2, _, n, pvals, _) =>
-          ManifestStatEntry(3, "", str(pvals), 0, 0L, n, listSeq)
-      }
+    val m = IcebergAvro.readManifest(f, listSeq)
+    if (content == 0)
+      m.entries.map(e => ManifestStatEntry(0, e.path, str(e.pvals), m.specId,
+        e.sizeBytes, e.recordCount, e.seq))
+    else m.entries.collect {
+      case e if e.content == 1 && e.dv.isDefined =>
+        ManifestStatEntry(1, e.dv.get._1, Map.empty, 0, 0L, e.recordCount, e.seq)
+      case e if e.content == 1 =>
+        ManifestStatEntry(2, "", str(e.pvals), 0, 0L, e.recordCount, e.seq)
+      case e if e.content == 2 =>
+        ManifestStatEntry(3, "", str(e.pvals), 0, 0L, e.recordCount, e.seq)
+    }
   }
 
   /** PARTITION STATISTICS FILE (Iceberg spec §Partition statistics):
@@ -349,14 +337,10 @@ object IcebergStats {
     */
   def writePartitionStats(spark: SparkSession, table: String,
       store: CommitStore = CommitStore.Local): Int = {
-    val hint = IcebergSink.readHint(table).getOrElse(
-      throw new IllegalArgumentException(s"not an Iceberg table: $table"))
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val meta = mapper.readTree(
-      Files.readString(IcebergSink.metaFile(table, hint)))
+    val IcebergSink.Head(hint, meta) = IcebergSink.head(table)
     val snapshotId = meta.get("current-snapshot-id").asLong()
     require(snapshotId > 0, s"no current snapshot on $table")
-    val list = IcebergSink.manifestListOf(table, meta, snapshotId).getOrElse(
+    val list = IcebergSink.manifestListOf(meta).getOrElse(
       throw new IllegalStateException(s"no manifest list for $snapshotId"))
     val refs = IcebergSink.manifestRefs(table, list)
     // per-manifest parse descriptors: absolute path (legacy-JSON gated on
@@ -535,10 +519,7 @@ object IcebergStats {
     */
   def readPartition(spark: SparkSession, table: String, partitionCol: String,
       value: String, broadcastMaxRows: Long = 1000000L): DataFrame = {
-    val hint = IcebergSink.readHint(table)
-    val fresh: Option[Long] = hint.flatMap { h =>
-      val meta = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(Files.readString(IcebergSink.metaFile(table, h)))
+    val fresh: Option[Long] = IcebergSink.headOption(table).map(_.meta).flatMap { meta =>
       if (!meta.has("partition-statistics")) None
       else {
         import scala.jdk.CollectionConverters._
@@ -560,7 +541,7 @@ object IcebergStats {
       case Some(0L) =>
         spark.createDataFrame(
           java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          IcebergSink.currentSchemaOf(table))
+          IcebergSink.tableSchema(table))
       case Some(n) if n <= broadcastMaxRows =>
         org.apache.spark.sql.functions.broadcast(
           IcebergSink.readPartition(spark, table, partitionCol, value)._1)
@@ -570,9 +551,7 @@ object IcebergStats {
   }
 
   def partitionStats(spark: SparkSession, table: String): Option[DataFrame] = {
-    val hint = IcebergSink.readHint(table).getOrElse(return None)
-    val meta = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(Files.readString(IcebergSink.metaFile(table, hint)))
+    val meta = IcebergSink.headOption(table).getOrElse(return None).meta
     if (!meta.has("partition-statistics")) return None
     import scala.jdk.CollectionConverters._
     meta.get("partition-statistics").elements().asScala.toSeq.headOption

@@ -129,8 +129,7 @@ object Maintenance {
     // that vacuum is about to reclaim. Metadata-only no-op when the
     // planes already agree.
     val synced = timed(steps, "uniform-sync") {
-      val dualFormat = java.nio.file.Files.exists(
-        java.nio.file.Paths.get(table, "metadata", "version-hint.text"))
+      val dualFormat = IcebergSink.headOption(table).isDefined
       val synced = dualFormat && {
         val dvRemain = DeltaSink.dvMaskedRows(spark, table) > 0
         val iceDeletes = IcebergSink.metaTable(spark, table, "manifests")

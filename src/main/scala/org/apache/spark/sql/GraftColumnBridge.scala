@@ -29,6 +29,18 @@ object GraftColumnBridge {
     */
   def activeContextConf: Option[SparkConf] = SparkContext.getActive.map(_.conf)
 
+  /** Runs `body` with the context's GLOBAL checkpoint dir set to `dir`
+    * (when given), then puts back the EXACT prior value, None included.
+    * `setCheckpointDir` cannot do the restore: it has no unset, and it
+    * appends a fresh UUID subdirectory to whatever it is given
+    * (`SparkContext.checkpointDir` is `private[spark]`).
+    */
+  def withCheckpointDir[A](sc: SparkContext, dir: Option[String])(body: => A): A = {
+    val prev = sc.checkpointDir
+    dir.foreach(sc.setCheckpointDir)
+    try body finally if (dir.isDefined) sc.checkpointDir = prev
+  }
+
   private def intLit(e: Expression, what: String): Int = e match {
     case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
     case _ => throw new IllegalArgumentException(s"$what must be an int literal")

@@ -90,7 +90,8 @@ class IcebergTransformSpec extends AnyFunSuite {
     val manifestFile = new File(table, "metadata").listFiles()
       .filter(f => f.getName.startsWith("manifest-") && !f.getName.startsWith("manifest-list"))
       .head
-    val parts = graft.sinks.IcebergAvro.readManifestPartitions(manifestFile)
+    val parts = graft.sinks.IcebergAvro.readManifest(manifestFile)
+      .entries.map(e => (e.path, e.pvals))
     // Iceberg month ordinal = months since 1970-01: 2024-01 → 648
     assert(parts.map(_._2("ts_month").asInstanceOf[Int]).toSet ==
       Set(648, 649, 659))
@@ -111,7 +112,8 @@ class IcebergTransformSpec extends AnyFunSuite {
     IcebergSink.write(dfH, tH, IcebergSink.CreateExclusive, partitionBy = Seq("hour(ts)"))
     val mH = new File(tH, "metadata").listFiles()
       .filter(f => f.getName.startsWith("manifest-") && !f.getName.startsWith("manifest-list")).head
-    val hours = graft.sinks.IcebergAvro.readManifestPartitions(mH)
+    val hours = graft.sinks.IcebergAvro.readManifest(mH)
+      .entries.map(e => (e.path, e.pvals))
       .map(_._2("ts_hour").asInstanceOf[Int]).toSet
     val base = java.time.LocalDateTime.of(2024, 1, 1, 0, 0)
       .toEpochSecond(java.time.ZoneOffset.UTC) / 3600
@@ -124,7 +126,8 @@ class IcebergTransformSpec extends AnyFunSuite {
       partitionBy = Seq("truncate(10,id)", "truncate(4,name)"))
     val mT = new File(tT, "metadata").listFiles()
       .filter(f => f.getName.startsWith("manifest-") && !f.getName.startsWith("manifest-list")).head
-    val pvals = graft.sinks.IcebergAvro.readManifestPartitions(mT).map(_._2)
+    val pvals = graft.sinks.IcebergAvro.readManifest(mT)
+      .entries.map(_.pvals)
     // long truncation floors to the bucket base; strings cut to 4 chars
     assert(pvals.map(p => (p("id_trunc"), p("name_trunc"))).toSet ==
       Set((0L, "alph"), (10L, "alph"), (20L, "beta")))
@@ -156,7 +159,8 @@ class IcebergTransformSpec extends AnyFunSuite {
     val manifestFile = new File(table, "metadata").listFiles()
       .filter(f => f.getName.startsWith("manifest-") && !f.getName.startsWith("manifest-list"))
       .head
-    val parts = graft.sinks.IcebergAvro.readManifestPartitions(manifestFile)
+    val parts = graft.sinks.IcebergAvro.readManifest(manifestFile)
+      .entries.map(e => (e.path, e.pvals))
     assert(parts.nonEmpty)
     parts.foreach { case (path, pvals) =>
       val b = pvals("id_bucket").asInstanceOf[Int]

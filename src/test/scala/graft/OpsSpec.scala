@@ -218,6 +218,25 @@ class OpsSpec extends AnyFunSuite {
     } finally s.conf.unset("spark.graft.ccCheckpointDir")
   }
 
+  test("checkpoint-dir callers put back the context's exact prior checkpoint dir") {
+    val s = spark
+    import s.implicits._
+    val sc = s.sparkContext
+    def dir() = java.nio.file.Files.createTempDirectory("graft-ckpt-restore").toString
+    val edges = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("a", "b")
+    val before = sc.getCheckpointDir
+    Ops.connectedComponents(edges, checkpointDir = Some(dir())).collect()
+    assert(sc.getCheckpointDir == before, "connectedComponents")
+    Ops.bfs(edges, Seq(1L).toDF("n"), maxHops = 2, checkpointDir = Some(dir())).collect()
+    assert(sc.getCheckpointDir == before, "bfs")
+    s.conf.set("spark.graft.kmeansCheckpointDir", dir())
+    val em = Seq((1L, Seq(1f, 0f)), (2L, Seq(0.9f, 0.1f)), (3L, Seq(0f, 1f)))
+      .toDF("vec_id", "embedding")
+    try graft.operators.KMeans.assign(em, "vec_id", "embedding", k = 2, iters = 1).collect()
+    finally s.conf.unset("spark.graft.kmeansCheckpointDir")
+    assert(sc.getCheckpointDir == before, "KMeans.assign")
+  }
+
   test("connectedComponents: throws instead of returning unconverged labels") {
     val s = spark
     import s.implicits._

@@ -116,7 +116,8 @@ class SinkSpec extends AnyFunSuite {
     assert(row.get("sequence_number").asInstanceOf[Long] == 1L)
     // manifest: ADDED entries with real parquet row counts, required V2
     // key metadata present and readable by a stock Avro reader
-    val files = graft.sinks.IcebergAvro.readManifestDataFiles(manifestFile)
+    val files = graft.sinks.IcebergAvro.readManifest(manifestFile)
+      .entries.map(e => (e.path, e.recordCount))
     assert(files.map(_._2).sum == 3L)
     files.foreach { case (p, _) => assert(new File(p).isFile) }
     val r = new org.apache.avro.file.DataFileReader[org.apache.avro.generic.GenericRecord](
@@ -140,7 +141,8 @@ class SinkSpec extends AnyFunSuite {
     val metaDir = new File(table, "metadata")
     val manifestFile = metaDir.listFiles()
       .find(f => f.getName.startsWith("manifest-") && !f.getName.startsWith("manifest-list-")).get
-    val stats = graft.sinks.IcebergAvro.readManifestStats(manifestFile)
+    val stats = graft.sinks.IcebergAvro.readManifest(manifestFile)
+      .entries.map(e => e.path -> e.stats)
     assert(stats.nonEmpty)
     // field ids are positional: id=1, name=2, v=3
     val agg = stats.map(_._2)
@@ -514,7 +516,8 @@ class SinkSpec extends AnyFunSuite {
     assert(rows.count(_.get("content").asInstanceOf[Int] == 0) == 2)
     val delManifest = rows.find(_.get("content").asInstanceOf[Int] == 1).get
       .get("manifest_path").toString
-    val delFiles = graft.sinks.IcebergAvro.readManifestDataFiles(new File(delManifest))
+    val delFiles = graft.sinks.IcebergAvro.readManifest(new File(delManifest))
+      .entries.map(e => (e.path, e.recordCount))
     assert(delFiles.nonEmpty && delFiles.map(_._2).sum == 10L)
     val delRows = spark.read.parquet(delFiles.map(_._1): _*)
     assert(delRows.columns.toSeq == Seq("file_path", "pos"))
@@ -1347,7 +1350,8 @@ class SinkSpec extends AnyFunSuite {
     val manifestFile = new File(table, "metadata").listFiles()
       .filter(f => f.getName.startsWith("manifest-") && !f.getName.startsWith("manifest-list"))
       .head
-    val parts = graft.sinks.IcebergAvro.readManifestPartitions(manifestFile)
+    val parts = graft.sinks.IcebergAvro.readManifest(manifestFile)
+      .entries.map(e => (e.path, e.pvals))
     assert(parts.map(_._2("lang").asInstanceOf[String]).toSet == Set("en", "de", "fr"))
     // read-back reconstructs the partition column from the manifest
     val back = IcebergSink.read(spark, table)
@@ -1380,7 +1384,8 @@ class SinkSpec extends AnyFunSuite {
     val manifestFile = new File(table, "metadata").listFiles()
       .filter(f => f.getName.startsWith("manifest-") && !f.getName.startsWith("manifest-list"))
       .head
-    val parts = graft.sinks.IcebergAvro.readManifestPartitions(manifestFile)
+    val parts = graft.sinks.IcebergAvro.readManifest(manifestFile)
+      .entries.map(e => (e.path, e.pvals))
     assert(parts.map(_._2("ts_day").asInstanceOf[Int]).toSet ==
       Set(1, 2, 3).map(d => java.time.LocalDate.of(2024, 3, d).toEpochDay.toInt))
     // HIDDEN: the table schema has no ts_day, and data files keep ts —
@@ -1964,6 +1969,43 @@ class SinkSpec extends AnyFunSuite {
     val rows = IcebergSink.readRange(spark, table, "id", 1000.0, 1050.0)
       .orderBy("id").collect().map(_.getLong(0))
     assert(rows.toSeq == (1000L to 1050L).toSeq)
+  }
+
+  test("Iceberg DELETED manifest entries are not live on any read path") {
+    val s2 = spark
+    import s2.implicits._
+    val table = tmp()
+    IcebergSink.write((1L to 10L).map(i => (i, i * 1.0)).toDF("id", "v").repartition(2),
+      table, IcebergSink.CreateExclusive)
+    val meta = com.fasterxml.jackson.databind.json.JsonMapper.builder().build()
+      .readTree(Files.readString(Paths.get(table, "metadata", "v0.metadata.json")))
+    val listRel = meta.get("snapshots").elements().next().get("manifest-list").asText()
+    val manifest = new File(graft.sinks.IcebergAvro.readManifestList(new File(table, listRel))
+      .head.get("manifest_path").toString)
+    // rewrite the data manifest under its own writer schema and key
+    // metadata, its first entry marked status 2 (DELETED, spec §Manifests)
+    import org.apache.avro.file.{DataFileReader, DataFileWriter}
+    import org.apache.avro.generic.{GenericDatumReader, GenericDatumWriter, GenericRecord}
+    val r = new DataFileReader[GenericRecord](manifest, new GenericDatumReader[GenericRecord]())
+    val (schema, keyMeta, entries) =
+      try (r.getSchema, r.getMetaKeys.asScala.toSeq.map(k => k -> r.getMetaString(k))
+        .filterNot(_._1.startsWith("avro.")), r.iterator().asScala.toList)
+      finally r.close()
+    assert(entries.size == 2, "the write must produce two data files")
+    entries.head.put("status", 2)
+    val w = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](schema))
+    keyMeta.foreach { case (k, v) => w.setMeta(k, v) }
+    w.create(schema, manifest)
+    try entries.foreach(w.append) finally w.close()
+    val gone = entries.head.get("data_file").asInstanceOf[GenericRecord]
+    val gonePath = gone.get("file_path").toString
+    val liveRows = 10L - gone.get("record_count").asInstanceOf[Long]
+    assert(IcebergSink.read(spark, table).count() == liveRows)
+    val stats = IcebergSink.fileStats(spark, table).collect()
+    assert(stats.map(_.getAs[Long]("num_records")).sum == liveRows)
+    assert(!stats.map(_.getAs[String]("path")).contains(gonePath))
+    val (_, kept, total) = IcebergSink.planRangeFiles(spark, table, "id", 0.0, 100.0)
+    assert(total == 1 && !kept.map(_._1).contains(gonePath))
   }
 
   test("Iceberg compact preserves the partition layout") {
