@@ -77,7 +77,7 @@ import org.apache.spark.sql.types._
   * scope, and both [[resolve]]'s reader gate and [[requireWritable]]
   * refuse tables demanding them.
   */
-object DeltaSink extends org.apache.spark.internal.Logging {
+object DeltaSink {
   private val mapper = new ObjectMapper()
   val MaxRecordsPerFile = 2097152L
 
@@ -325,16 +325,18 @@ object DeltaSink extends org.apache.spark.internal.Logging {
       baseRowId: Option[Long] = None,
       defaultRowCommitVersion: Option[Long] = None)
 
-  /** Replayed snapshot of the `_delta_log` at `asOfVersion` (or latest).
-    * `txns` is the streaming-writer watermark map: appId → highest
+  /** One resolved snapshot of the `_delta_log` ([[resolve]]): the
+    * metadata plane (id, schema, layout, protocol and its feature lists,
+    * table configuration, domain metadata) and the live adds, sorted by
+    * path. `txns` is the streaming-writer watermark map: appId → highest
     * committed transaction version (Delta's `txn` action).
     */
-  private case class State(version: Long, metaId: String,
-      createdTime: Long, schema: StructType,
-      partitionColumns: Seq[String], live: Seq[AddEntry],
-      txns: Map[String, Long], minWriter: Int = 1,
-      configuration: Map[String, String] = Map.empty,
-      domains: Map[String, String] = Map.empty)
+  private case class Snapshot(version: Long, id: String, createdTime: Long,
+      schema: StructType, partitionColumns: Seq[String],
+      minReader: Int, minWriter: Int,
+      readerFeatures: Seq[String], writerFeatures: Seq[String],
+      configuration: Map[String, String], domains: Map[String, String],
+      txns: Map[String, Long], live: Seq[AddEntry])
 
   /** Writes `df` as a brand-new Delta table. Returns true if written; false
     * if the target was non-empty and overwrite was not requested (the
@@ -502,7 +504,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     */
   def cloneTable(spark: SparkSession, source: String, target: String,
       store: CommitStore = CommitStore.Local): Int = {
-    val (meta, live) = resolve(spark, source, None)
+    val meta = resolve(spark, source, None)
     require(meta.partitionColumns.isEmpty,
       "shallow clone of a partitioned table is not supported yet: the " +
         "reader derives partition values by directory discovery, which " +
@@ -510,7 +512,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     val dir = new File(target)
     require(Option(dir.listFiles()).forall(_.isEmpty),
       s"clone target is not empty: $target")
-    val adds = collectAdds(live).map { a =>
+    val adds = meta.live.map { a =>
       a.copy(path = dataAbs(source, a.path),
         dv = a.dv.map { d =>
           if (d.storageType == "i") d // inline bits travel in the log itself
@@ -597,7 +599,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
       mergeSchema: Boolean): Long = {
     val dir = new File(table)
     require(logDir(table).toFile.isDirectory, s"not a Delta table (no _delta_log): $table")
-    val state = replay(df0.sparkSession, table, None)
+    val state = resolve(df0.sparkSession, table, None)
     requireWritable(state.minWriter, table)
     // GENERATED COLUMNS (spec §Generated Columns): a batch may OMIT a
     // generated column — the writer computes it (in schema order, so a
@@ -721,7 +723,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
         minNext = next + 1 // a lost claim at `next` proves `next` exists
         val replayed = txn0.exists { case (appId, v) =>
           latest > checkedThrough && {
-            val st = replay(df.sparkSession, table, None)
+            val st = resolve(df.sparkSession, table, None)
             checkedThrough = st.version
             st.txns.get(appId).exists(_ >= v)
           }
@@ -735,14 +737,14 @@ object DeltaSink extends org.apache.spark.internal.Logging {
           // MetadataChangedException on concurrent metadata change — same
           // contract here; the caller re-runs the append against fresh state)
           if (evolvedSchema.isDefined && latest > state.version &&
-              replay(df.sparkSession, table, None).schema != state.schema)
+              resolve(df.sparkSession, table, None).schema != state.schema)
             throw new java.util.ConcurrentModificationException(
               "table schema changed concurrently during a mergeSchema append; re-run the append")
           // evolved metaData (if any) rides in the SAME commit as the adds:
           // either both land or neither — a reader never sees files whose
           // columns the declared schema doesn't know about. createdTime is
           // the TABLE's creation time — preserved like the id.
-          val metaLine = evolvedSchema.map(sch => metaDataJson(state.metaId,
+          val metaLine = evolvedSchema.map(sch => metaDataJson(state.id,
             sch.json, state.partitionColumns,
             // external logs may omit createdTime (replays as 0) — don't
             // propagate a zero birth-time into the evolved action
@@ -763,7 +765,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
               (adds, None)
             else {
               val domainsNow =
-                if (latest > state.version) replay(df.sparkSession, table, None).domains
+                if (latest > state.version) resolve(df.sparkSession, table, None).domains
                 else state.domains
               val hwm = rowIdHighWaterMark(domainsNow).getOrElse(-1L)
               val (w, newHwm) = assignRowIds(adds, hwm, next)
@@ -801,12 +803,12 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     */
   def restore(spark: SparkSession, table: String, asOfVersion: Long,
       store: CommitStore = CommitStore.Local): (Int, Int) = {
-    val target = replay(spark, table, Some(asOfVersion))
+    val target = resolve(spark, table, Some(asOfVersion))
     Txn(store, Txn.Retries)(t => t.attempt { _ =>
       // diff against FRESH state every attempt: a concurrent commit
       // changes the current live set, and a restore computed against a
       // stale one would resurrect or orphan its files
-      val current = replay(spark, table, None)
+      val current = resolve(spark, table, None)
       requireWritable(current.minWriter, table)
       require(current.schema == target.schema,
         "restore across a schema change is not supported: restore the data " +
@@ -864,7 +866,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
       store: CommitStore = CommitStore.Local): (Int, Int) = {
     import org.apache.spark.sql.functions._
     val dir = new File(table)
-    val state = replay(spark, table, None)
+    val state = resolve(spark, table, None)
     requireWritable(state.minWriter, table)
     // ROW TRACKING: an id-preserving compaction MATERIALIZES `_row_id`
     // AND `_row_commit_version` into the rewritten parquet (spec:
@@ -988,7 +990,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
       t.attempt { _ =>
         val latest = latestVersion(table)
         if (latest > validatedThrough) {
-          val liveNow = replay(spark, table, None).live.map(_.path).toSet
+          val liveNow = resolve(spark, table, None).live.map(_.path).toSet
           validatedThrough = latest
           if (!inputPaths.subsetOf(liveNow)) throw new IllegalStateException(superseded)
         }
@@ -1024,7 +1026,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
       maxRecordsPerFile: Long = MaxRecordsPerFile,
       store: CommitStore = CommitStore.Local): (Int, Long) = {
     val dir = new File(table)
-    val state = replay(spark, table, None)
+    val state = resolve(spark, table, None)
     requireWritable(state.minWriter, table)
     val dvAdds = state.live.filter(_.dv.isDefined)
     if (dvAdds.isEmpty) return (0, 0L)
@@ -1103,11 +1105,8 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     import org.apache.spark.sql.functions._
     require(keys.nonEmpty, "merge requires at least one key column")
     val dir = new File(table)
-    val (meta, live0) = resolve(spark, table, None)
-    requireWritable(meta.minWriter, table)
-    val liveAdds = collectAdds(live0)
-    val state = State(meta.version, meta.id, meta.createdTime, meta.schema, meta.partitionColumns,
-      liveAdds, meta.txns, meta.minWriter, meta.configuration)
+    val state = resolve(spark, table, None)
+    requireWritable(state.minWriter, table)
     val tableCols = state.schema.fieldNames.toSeq
     // Delete-marked source rows remove their match and insert nothing.
     // The key-uniqueness guard rides the rewrite itself (a window count +
@@ -1142,7 +1141,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     val keyBounds = keys.zipWithIndex.map { case (k, i) =>
       (k, bounds.getString(2 * i), bounds.getString(2 * i + 1))
     }
-    val candAdds = collectAdds(statsPruned(meta, live0, keyBounds))
+    val candAdds = statsPruned(spark, state, keyBounds)
     lastMergeCandidates = candAdds.size
     // stage 2: semi-join the candidates' rows against the source keys —
     // only files with a TRUE match are rewritten
@@ -1263,7 +1262,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
       store: CommitStore, changeDataFeed: Boolean): Long = {
     import org.apache.spark.sql.functions.{coalesce, expr, input_file_name, lit}
     val dir = new File(table)
-    val state = replay(spark, table, None)
+    val state = resolve(spark, table, None)
     requireWritable(state.minWriter, table)
     val fileCol = s"__graft_rf_${java.util.UUID.randomUUID().toString.take(8)}"
     // which files hold a match: URI→path suffix match, same contract as merge
@@ -1403,10 +1402,8 @@ object DeltaSink extends org.apache.spark.internal.Logging {
       changeDataFeed: Boolean): Long = {
     import org.apache.spark.sql.functions.{col, expr, lit}
     val dir = new File(table)
-    val (meta, liveDf) = resolve(spark, table, None)
-    requireWritable(meta.minWriter, table)
-    val state = State(meta.version, meta.id, meta.createdTime, meta.schema,
-      meta.partitionColumns, collectAdds(liveDf), meta.txns)
+    val state = resolve(spark, table, None)
+    requireWritable(state.minWriter, table)
     // (file → new deleted positions) against the MERGED view; each row's
     // rel path arrives by its file's keys, never by parsing the reader's URI
     val matched = DvPlane.attach(
@@ -1443,7 +1440,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
       // (CHECK constraints gate them too); CDC images cost ∝ matched rows,
       // same as the CoW path
       val dataAdds: Seq[AddEntry] = replacement.toSeq.flatMap(rep => writeStaged(t, dir,
-        toPhysical(withConstraintCheck(rep, meta.configuration), state.schema),
+        toPhysical(withConstraintCheck(rep, state.configuration), state.schema),
         state.partitionColumns, MaxRecordsPerFile, txn, txnNames()))
       val cdcAdds: Seq[AddEntry] = if (!changeDataFeed) Nil else
         writeStaged(t, dir, toPhysical(imagesOf(matchedRows, replacement),
@@ -1471,19 +1468,19 @@ object DeltaSink extends org.apache.spark.internal.Logging {
           (if (mappingEnabled(state.schema)) Seq("columnMapping") else Nil))
           .distinct.sorted.map(esc).mkString("[", ",", "]")
       val bump =
-        if (meta.minReader >= 3 && meta.minWriter >= 7) Nil
+        if (state.minReader >= 3 && state.minWriter >= 7) Nil
         else Seq(s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,""" +
-          s""""readerFeatures":${features(meta.readerFeatures)},""" +
-          s""""writerFeatures":${features(meta.writerFeatures)}}}""")
+          s""""readerFeatures":${features(state.readerFeatures)},""" +
+          s""""writerFeatures":${features(state.writerFeatures)}}}""")
       // ROW TRACKING: an update's replacement rows are NEW rows — they take
       // fresh ids above the high-water mark (the Iceberg twin's contract);
       // the touched files' re-adds keep their baseRowId via add.copy above
       val (dataAddsFinal, domainLine) =
-        if (!meta.configuration.get(RowTrackingConf).contains("true") ||
+        if (!state.configuration.get(RowTrackingConf).contains("true") ||
             dataAdds.isEmpty)
           (dataAdds, Nil)
         else {
-          val hwm = rowIdHighWaterMark(meta.domains).getOrElse(-1L)
+          val hwm = rowIdHighWaterMark(state.domains).getOrElse(-1L)
           val (w, newHwm) = assignRowIds(dataAdds, hwm, state.version + 1)
           (w, Seq(domainJson(RowTrackingDomain,
             s"""{"rowIdHighWaterMark":$newHwm}""")))
@@ -1526,7 +1523,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
   private def columnMappingOp(spark: SparkSession, table: String,
       store: CommitStore, column: String)(
       op: (StructType, Int) => StructType): Unit = {
-    val (meta, _) = resolve(spark, table, None)
+    val meta = resolve(spark, table, None)
     requireWritable(meta.minWriter, table)
     require(!meta.partitionColumns.contains(column),
       s"cannot rename or drop partition column $column")
@@ -1673,13 +1670,11 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     import org.apache.spark.sql.functions.{coalesce, expr, lit, not}
     require(name.matches("[A-Za-z0-9_]+"),
       s"constraint name must be alphanumeric: $name")
-    val (meta, liveDf) = resolve(spark, table, None)
+    val meta = resolve(spark, table, None)
     requireWritable(meta.minWriter, table)
     val key = s"delta.constraints.$name"
     require(!meta.configuration.contains(key), s"constraint $name already exists")
-    val state = State(meta.version, meta.id, meta.createdTime, meta.schema,
-      meta.partitionColumns, collectAdds(liveDf), meta.txns, meta.minWriter)
-    val bad = readStateMerged(spark, table, state, keepLineage = false, store)
+    val bad = readStateMerged(spark, table, meta, keepLineage = false, store)
       .filter(not(coalesce(expr(expression).cast("boolean"), lit(true))))
       .limit(1).count()
     require(bad == 0L,
@@ -1706,7 +1701,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     */
   def enableInCommitTimestamps(spark: SparkSession, table: String,
       store: CommitStore = CommitStore.Local): Unit = {
-    val (meta, _) = resolve(spark, table, None)
+    val meta = resolve(spark, table, None)
     requireWritable(meta.minWriter, table)
     require(!meta.configuration.get("delta.enableInCommitTimestamps").contains("true"),
       s"in-commit timestamps already enabled on $table")
@@ -1735,7 +1730,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
   /** DROPs a CHECK constraint — metadata-only. */
   def dropCheckConstraint(spark: SparkSession, table: String, name: String,
       store: CommitStore = CommitStore.Local): Unit = {
-    val (meta, _) = resolve(spark, table, None)
+    val meta = resolve(spark, table, None)
     requireWritable(meta.minWriter, table)
     val key = s"delta.constraints.$name"
     require(meta.configuration.contains(key), s"no such constraint: $name")
@@ -1743,7 +1738,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
   }
 
   private def commitConstraintConfig(table: String, store: CommitStore,
-      meta: MetaState, newConfig: Map[String, String]): Unit = {
+      meta: Snapshot, newConfig: Map[String, String]): Unit = {
     // protocol: CHECK constraints are legacy writer v3; a v7 table lists
     // the checkConstraints writer feature instead (spec rule: v7 must
     // track every active feature)
@@ -1774,7 +1769,9 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     * `_last_checkpoint` pointer. Readers then start from the checkpoint and
     * replay only newer JSON commits — O(delta) instead of O(history).
     * Older JSON commits are retained so `asOfVersion` time travel before the
-    * checkpoint still works.
+    * checkpoint still works. A table already on V2 checkpoints (the
+    * pointer names a manifest, or one sits at the pointed version) is
+    * re-checkpointed by [[checkpointV2]].
     */
   def checkpoint(spark: SparkSession, table: String): Long =
     checkpoint(spark, table, CommitStore.Local)
@@ -1786,18 +1783,12 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     // reclaimer and silently downgrade the layout a caller opted into
     // (ADVICE r15) — route through the v2 path, which also reclaims
     // correctly
-    locally {
-      val f = lastCheckpointFile(table)
-      if (Files.exists(f) &&
-          mapper.readTree(Files.readString(f)).has("path"))
-        return checkpointV2(spark, table, store)
-    }
-    val (meta, live) = resolve(spark, table, None)
-    // Metadata plane (protocol, metaData, txn watermarks): a handful of
-    // rows, built on the driver. Data plane (the add list): stays a
-    // DataFrame END-TO-END — resolved distributedly by [[resolve]] and
-    // written straight back out, so a table with millions of live files
-    // checkpoints without the add list ever materializing on the driver.
+    if (lastCheckpoint(table).exists(_._2.isDefined))
+      return checkpointV2(spark, table, store)
+    val meta = resolve(spark, table, None)
+    // Metadata plane (protocol, metaData, txn watermarks) and data plane
+    // (one add row per live file of the resolved snapshot, through
+    // [[liveFrame]]) become one frame; Spark writes it as the parts.
     val metaRows: Seq[Row] =
       // feature lists exist only at v3/v7 (spec); carry the replayed
       // ones so a reader starting from this checkpoint keeps them
@@ -1806,7 +1797,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
         if (meta.minWriter >= 7) meta.writerFeatures else null),
         null, null, null, null) +:
       Row(null,
-        Row(Option(meta.id).getOrElse(java.util.UUID.randomUUID().toString), Row("parquet"),
+        Row(meta.id, Row("parquet"),
           StructType(meta.schema.fields.map(_.copy(nullable = true))).json,
           meta.partitionColumns,
           // the full replayed table configuration (constraints, etc.);
@@ -1827,7 +1818,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     def nullAs(field: String) =
       lit(null).cast(CheckpointSchema(field).dataType).as(field)
     val df = spark.createDataFrame(metaRows.asJava, CheckpointSchema)
-      .unionByName(live.select(
+      .unionByName(liveFrame(spark, meta).select(
         nullAs("protocol"), nullAs("metaData"),
         struct(col("path"), col("partitionValues"), col("size"),
           col("modificationTime"), lit(true).as("dataChange"),
@@ -1835,9 +1826,9 @@ object DeltaSink extends org.apache.spark.internal.Logging {
           col("defaultRowCommitVersion")).as("add"),
         nullAs("txn"), nullAs("domainMetadata")))
     // Multi-part checkpoint: the PARQUET DIRECTORY is the checkpoint
-    // (readers just spark.read.parquet it, same as the single-file form
-    // older tables carry) — one writer task per live-set partition, no
-    // driver bottleneck, no single giant file at scale. The new parts are
+    // ([[resolve]] folds every part under it, as it folds the single-file
+    // form older tables carry) — one writer task per frame partition, no
+    // single giant file at scale. The new parts are
     // published FIRST (each put replaces atomically, so a same-version
     // re-checkpoint never empties an already-published dir, and a failed
     // re-publish leaves _last_checkpoint on a complete checkpoint), THEN
@@ -1877,14 +1868,14 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     * on BOTH lists) FIRST, so a reader that cannot resolve through a v2
     * checkpoint refuses the table instead of silently replaying the
     * whole JSON log past it (or worse, mis-reading). The pointer file
-    * carries the manifest name; sidecar writes stay distributed
-    * end-to-end exactly like the classic path.
+    * carries the manifest name; the sidecars are written by Spark from
+    * [[liveFrame]], like the classic parts.
     */
   def checkpointV2(spark: SparkSession, table: String,
       store: CommitStore = CommitStore.Local): Long = {
     import org.apache.spark.sql.functions.{col, lit, struct}
     locally {
-      val (meta0, _) = resolve(spark, table, None)
+      val meta0 = resolve(spark, table, None)
       requireWritable(meta0.minWriter, table)
       if (!(meta0.minReader >= 3 && meta0.readerFeatures.contains("v2Checkpoint"))) {
         // version-implied legacy capabilities become EXPLICIT feature
@@ -1909,19 +1900,15 @@ object DeltaSink extends org.apache.spark.internal.Logging {
             s""""readerFeatures":${lst(rf)},"writerFeatures":${lst(wf)}}}""")))
       }
     }
-    val (meta, live) = resolve(spark, table, None)
+    val meta = resolve(spark, table, None)
+    val live = liveFrame(spark, meta)
     val sidecarDir = logDir(table).resolve("_sidecars")
     // the PREVIOUS v2 generation: its manifest name is the reclaim fence
     // (kept one generation, so a reader mid-resolve on the old pointer
     // never loses its sidecars — ADVICE r15) and its sidecar rows are the
     // reuse candidates
-    val prevManifest: Option[String] = {
-      val f = lastCheckpointFile(table)
-      if (!Files.exists(f)) None
-      else Option(mapper.readTree(Files.readString(f)).get("path"))
-        .map(_.asText())
-        .filter(n => Files.exists(logDir(table).resolve(n)))
-    }
+    val prevManifest: Option[String] = lastCheckpoint(table).flatMap(_._2)
+      .filter(n => Files.exists(logDir(table).resolve(n)))
     val prevSidecars: Map[String, (Long, Long)] = prevManifest.map { name =>
       spark.read.schema(V2ManifestSchema)
         .parquet(logDir(table).resolve(name).toString)
@@ -2095,16 +2082,6 @@ object DeltaSink extends org.apache.spark.internal.Logging {
       StructField("configuration", StringType),
       StructField("removed", BooleanType))))))
 
-  /** Read-side v2 manifest schema: [[V2ManifestSchema]] plus `add` — the
-    * Delta v2-checkpoint spec permits a manifest to carry file actions
-    * INLINE when it references no sidecars; our own writer never does, but
-    * an externally written checkpoint may (r19 ADVICE parity with the
-    * driver fast path, which already reads them). Reading a column absent
-    * from the file yields nulls, so our own manifests read unchanged.
-    */
-  private lazy val V2ManifestReadSchema =
-    StructType(V2ManifestSchema.fields.toSeq :+ CheckpointSchema("add"))
-
   private val CheckpointSchema = StructType(Seq(
     StructField("protocol", StructType(Seq(
       StructField("minReaderVersion", IntegerType),
@@ -2155,7 +2132,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     * the watermark [[appendExactlyOnce]] consults.
     */
   def lastTxnVersion(spark: SparkSession, table: String, appId: String): Long =
-    replay(spark, table, None).txns.getOrElse(appId, -1L)
+    resolve(spark, table, None).txns.getOrElse(appId, -1L)
 
   // ---- ROW TRACKING (Delta spec §Row Tracking — the format twin of
   // IcebergSink row lineage, closing cross-format id symmetry) ----
@@ -2210,11 +2187,10 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     */
   def enableRowTracking(spark: SparkSession, table: String,
       store: CommitStore = CommitStore.Local): Long = {
-    val state = replay(spark, table, None)
+    val state = resolve(spark, table, None)
     requireWritable(state.minWriter, table)
     require(!state.configuration.get(RowTrackingConf).contains("true"),
       s"row tracking already enabled on $table")
-    val (meta, _) = resolve(spark, table, None)
     // retroactive enablement cannot recover pre-feature per-row commit
     // versions — like delta-spark's backfill, the enable commit's own
     // version stamps every re-added file
@@ -2224,12 +2200,12 @@ object DeltaSink extends org.apache.spark.internal.Logging {
       (tracked ++ extra).distinct.sorted.map(esc).mkString("[", ",", "]")
     val bump =
       s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,""" +
-        s""""readerFeatures":${features(meta.readerFeatures,
+        s""""readerFeatures":${features(state.readerFeatures,
           if (mappingEnabled(state.schema)) Seq("columnMapping") else Nil)},""" +
-        s""""writerFeatures":${features(meta.writerFeatures,
+        s""""writerFeatures":${features(state.writerFeatures,
           Seq("rowTracking", "domainMetadata") ++
             (if (mappingEnabled(state.schema)) Seq("columnMapping") else Nil))}}}"""
-    val metaLine = metaDataJson(state.metaId,
+    val metaLine = metaDataJson(state.id,
       StructType(state.schema.fields.map(_.copy(nullable = true))).json,
       state.partitionColumns,
       if (state.createdTime != 0L) state.createdTime else System.currentTimeMillis(),
@@ -2245,7 +2221,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
 
   /** Whether the table tracks row ids (the janitor's action selector). */
   private[sinks] def rowTrackingEnabled(spark: SparkSession, table: String): Boolean =
-    replay(spark, table, None).configuration.get(RowTrackingConf).contains("true")
+    resolve(spark, table, None).configuration.get(RowTrackingConf).contains("true")
 
   /** ROW-ID READ — the current merged view plus `_row_id`
     * ([[IcebergSink.readWithLineage]]'s format twin): `baseRowId +
@@ -2257,10 +2233,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
   def readWithRowIds(spark: SparkSession, table: String,
       store: CommitStore = CommitStore.Local): DataFrame = {
     import org.apache.spark.sql.functions.{coalesce, col}
-    val (meta, liveDf) = resolve(spark, table, None)
-    val state0 = State(meta.version, meta.id, meta.createdTime, meta.schema,
-      meta.partitionColumns, collectAdds(liveDf), meta.txns, meta.minWriter,
-      meta.configuration, meta.domains)
+    val state0 = resolve(spark, table, None)
     // widen the read schema by the physical lineage columns: files an
     // id-preserving compaction materialized carry them; all others read
     // null and inherit from the add's manifest fields
@@ -2313,7 +2286,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
       store: CommitStore = CommitStore.Local): Map[String, Long] = {
     import org.apache.spark.sql.functions.col
     require(columns.nonEmpty, "writeStats needs at least one column")
-    val (meta, _) = resolve(spark, table, None)
+    val meta = resolve(spark, table, None)
     requireWritable(meta.minWriter, table)
     val df = read(spark, table)
     val T = graft.functions.ThetaSketch
@@ -2384,7 +2357,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     * the table carries no statistics for the column.
     */
   def statsNdv(spark: SparkSession, table: String, column: String): Option[Long] = {
-    replay(spark, table, None).domains.get(StatsDomain).flatMap { c =>
+    resolve(spark, table, None).domains.get(StatsDomain).flatMap { c =>
       val n = mapper.readTree(c).path("ndv").path(column)
       if (n.isMissingNode || n.isNull) None else Some(n.asLong())
     }
@@ -2437,7 +2410,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
   def clusterBy(spark: SparkSession, table: String, columns: Seq[String],
       store: CommitStore = CommitStore.Local): Unit = {
     require(columns.nonEmpty, "clusterBy needs at least one column")
-    val (meta, _) = resolve(spark, table, None)
+    val meta = resolve(spark, table, None)
     requireWritable(meta.minWriter, table)
     columns.foreach(c => require(meta.schema.fieldNames.contains(c),
       s"no such column: $c"))
@@ -2462,7 +2435,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     * back through the schema's column-mapping stamps.
     */
   def clusteringColumns(spark: SparkSession, table: String): Seq[String] = {
-    val state = replay(spark, table, None)
+    val state = resolve(spark, table, None)
     clusteringPhysical(state.domains).map { phys =>
       state.schema.fields.find(f => physName(f) == phys)
         .map(_.name).getOrElse(phys)
@@ -2488,7 +2461,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
       retentionMs: Long = 7L * 24 * 3600 * 1000,
       store: CommitStore = CommitStore.Local): Int = {
     val dir = new File(table)
-    val liveAdds = replay(spark, table, None).live
+    val liveAdds = resolve(spark, table, None).live
     // dual-format guard (convertFromDelta/convertFromIceberg): a file the
     // ICEBERG plane still references — any snapshot — is not a tombstone,
     // whatever the Delta log thinks of it
@@ -2537,7 +2510,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     * trigger, from descriptors alone (no sidecar opened).
     */
   def dvMaskedRows(spark: SparkSession, table: String): Long =
-    replay(spark, table, None).live
+    resolve(spark, table, None).live
       .flatMap(_.dv.map(_.cardinality)).sum
 
   /** DESCRIBE HISTORY — one row per commit, METADATA-ONLY (the Delta twin
@@ -2594,7 +2567,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
 
   /** Declared schema of a Delta table (no data scan). */
   def tableSchema(spark: SparkSession, table: String): StructType =
-    resolve(spark, table, None)._1.schema
+    resolve(spark, table, None).schema
 
   /** Latest committed log version of a Delta table. */
   def latestVersion(table: String): Long =
@@ -2616,7 +2589,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     */
   def read(spark: SparkSession, table: String, asOfVersion: Option[Long] = None,
       store: CommitStore = CommitStore.Local): DataFrame =
-    readState(spark, table, replay(spark, table, asOfVersion), store)
+    readState(spark, table, resolve(spark, table, asOfVersion), store)
 
   /** TIMESTAMP → VERSION resolution (delta-spark's `timestampAsOf`):
     * the LAST version committed at or before `tsMs`. Per-commit clock:
@@ -2662,9 +2635,9 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     * files skipped). At 100 TB this is the difference between opening
     * every file and opening the few that can match.
     *
-    * The pruning predicate runs DISTRIBUTEDLY over the live-set DataFrame
-    * (stats parsed with `from_json`, the same last-wins resolution as any
-    * read). Files without recorded stats for the column are always kept —
+    * The pruning predicate is a Spark filter over the snapshot's live
+    * adds (stats parsed with `from_json`; the live set comes from the one
+    * driver fold every read uses). Files without recorded stats for the column are always kept —
     * absent stats can never wrongly prune. Supported domains: numerics
     * (compared as double), strings (verbatim), dates (ISO text). The
     * result is a files-level superset of the matching rows: apply the
@@ -2686,10 +2659,8 @@ object DeltaSink extends org.apache.spark.internal.Logging {
   def readRanges(spark: SparkSession, table: String,
       bounds: Seq[(String, String, String)],
       asOfVersion: Option[Long] = None): DataFrame = {
-    val (meta, live) = resolve(spark, table, asOfVersion)
-    readState(spark, table,
-      State(meta.version, meta.id, meta.createdTime, meta.schema, meta.partitionColumns,
-        collectAdds(statsPruned(meta, live, bounds)), meta.txns))
+    val snap = resolve(spark, table, asOfVersion)
+    readState(spark, table, snap.copy(live = statsPruned(spark, snap, bounds)))
   }
 
   /** METADATA-ONLY file inventory of a snapshot: one row per live data
@@ -2698,51 +2669,46 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     * records; reference delta_destination.rs writer stats). No data file
     * is opened: per-partition/table COUNT(*) and file-layout audits
     * ("DESCRIBE DETAIL"-shape questions) answer from KBs of log instead
-    * of a 100 TB scan. Runs distributedly over the live-set DataFrame.
+    * of a 100 TB scan. One Spark projection over [[liveFrame]].
     */
   def fileStats(spark: SparkSession, table: String,
       asOfVersion: Option[Long] = None): DataFrame = {
     import org.apache.spark.sql.functions.{col, from_json}
-    val (_, live) = resolve(spark, table, asOfVersion)
     val statsSchema = StructType(Seq(StructField("numRecords", LongType)))
     // a DV'd file's stats count the PHYSICAL rows; the descriptor's
     // cardinality subtracts the deleted ones without opening anything —
     // exactly what the cardinality field exists for
-    live.select(col("path"), col("partitionValues"),
-      (from_json(col("stats"), statsSchema).getField("numRecords") -
-        org.apache.spark.sql.functions.coalesce(
-          col("deletionVector.cardinality"),
-          org.apache.spark.sql.functions.lit(0L)))
-        .as("num_records"),
-      col("size").as("size_bytes"))
+    liveFrame(spark, resolve(spark, table, asOfVersion))
+      .select(col("path"), col("partitionValues"),
+        (from_json(col("stats"), statsSchema).getField("numRecords") -
+          org.apache.spark.sql.functions.coalesce(
+            col("deletionVector.cardinality"),
+            org.apache.spark.sql.functions.lit(0L)))
+          .as("num_records"),
+        col("size").as("size_bytes"))
   }
 
-  /** The adds of `live` whose recorded [min, max] for `column` overlaps
-    * [lo, hi] — plus any file without stats for it (absent stats can never
-    * wrongly prune). Runs distributedly over the live-set DataFrame.
+  /** The live adds of `snap` whose recorded [min, max] overlaps EVERY
+    * bound (bounds AND together — the r8 advice fix: a composite-key
+    * merge pruning only on `keys.head` scans every file overlapping the
+    * first key's range even when a second key rules it out) — plus any
+    * file without stats for a column (absent stats can never wrongly
+    * prune). One stats parse serves all columns, as a Spark filter over
+    * [[liveFrame]]; the surviving paths select the snapshot's adds.
     */
-  private def statsPruned(meta: MetaState, live: DataFrame, column: String,
-      lo: String, hi: String): DataFrame =
-    statsPruned(meta, live, Seq((column, lo, hi)))
-
-  /** Multi-column variant: a file survives only when EVERY column's
-    * recorded range overlaps its bound (bounds AND together — the r8
-    * advice fix: a composite-key merge pruning only on `keys.head` scans
-    * every file overlapping the first key's range even when a second key
-    * rules it out). One stats parse serves all columns.
-    */
-  private def statsPruned(meta: MetaState, live: DataFrame,
-      bounds: Seq[(String, String, String)]): DataFrame = {
+  private def statsPruned(spark: SparkSession, snap: Snapshot,
+      bounds: Seq[(String, String, String)]): Seq[AddEntry] = {
     import org.apache.spark.sql.functions.{col, from_json, lit}
     val statsSchema = StructType(Seq(
       StructField("numRecords", LongType),
       StructField("minValues", MapType(StringType, StringType)),
       StructField("maxValues", MapType(StringType, StringType))))
-    val parsed = live.withColumn("__st", from_json(col("stats"), statsSchema))
+    val parsed = liveFrame(spark, snap)
+      .withColumn("__st", from_json(col("stats"), statsSchema))
     val keep = bounds.map { case (column, lo, hi) =>
-      val dt = meta.schema(column).dataType
+      val dt = snap.schema(column).dataType
       // stats come from the file footers, which carry PHYSICAL names
-      val phys = physName(meta.schema(column))
+      val phys = physName(snap.schema(column))
       val mn = col("__st.minValues")(phys)
       val mx = col("__st.maxValues")(phys)
       val overlaps = dt match {
@@ -2755,9 +2721,8 @@ object DeltaSink extends org.apache.spark.internal.Logging {
       }
       mn.isNull || mx.isNull || overlaps
     }.reduce(_ && _)
-    parsed.filter(keep)
-      .select("path", "partitionValues", "size", "modificationTime", "stats",
-        "deletionVector", "baseRowId", "defaultRowCommitVersion")
+    val kept = parsed.filter(keep).select("path").collect().map(_.getString(0)).toSet
+    snap.live.filter(a => kept.contains(a.path))
   }
 
   /** Change feed: the rows ADDED in versions (`sinceVersion`, latest] —
@@ -2780,8 +2745,8 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     */
   def readChangesBetween(spark: SparkSession, table: String, sinceVersion: Long,
       untilVersion: Long): DataFrame = {
-    import org.apache.spark.sql.functions.{col, max_by, struct}
-    val state = replay(spark, table, None)
+    import org.apache.spark.sql.functions.{col, max_by, to_json}
+    val state = resolve(spark, table, None)
     val files = logFiles(table)
       .filter { f =>
         val v = f.getName.stripSuffix(".json").toLong
@@ -2791,17 +2756,12 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     val feed = actionsDF(spark, files)
       .where(col("add").isNotNull &&
         (col("add.dataChange").isNull || col("add.dataChange")))
-      .groupBy(col("add.path").as("path"))
-      .agg(max_by(struct(col("add.partitionValues").as("partitionValues"),
-        col("add.size").as("size"),
-        col("add.modificationTime").as("modificationTime"),
-        col("add.stats").as("stats"),
-        col("add.deletionVector").as("deletionVector"),
-        col("add.baseRowId").as("baseRowId"),
-        col("add.defaultRowCommitVersion").as("defaultRowCommitVersion")),
-        col("version")).as("w"))
-      .select(col("path"), col("w.*"))
-    readState(spark, table, state.copy(live = collectAdds(feed)))
+      .groupBy(col("add.path"))
+      .agg(max_by(col("add"), col("version")).as("add"))
+      // each path's last add, back as JSON through the log's own decoder
+      .select(to_json(col("add"))).collect()
+      .map(r => Js.add(mapper.readTree(r.getString(0)))).toSeq.sortBy(_.path)
+    readState(spark, table, state.copy(live = feed))
   }
 
   /** Change-data feed with row-level classification — the CDF surface a
@@ -2823,7 +2783,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
   def readCdf(spark: SparkSession, table: String, sinceVersion: Long,
       untilVersion: Long = Long.MaxValue): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    val state = replay(spark, table, None)
+    val state = resolve(spark, table, None)
     val ctField = StructField("_change_type", StringType)
     val outSchema = StructType(state.schema.fields :+ ctField :+
       StructField("_commit_version", LongType))
@@ -2851,12 +2811,8 @@ object DeltaSink extends org.apache.spark.internal.Logging {
           .map { n =>
             // honor a DV on the reconstructed add: its insert images are
             // the SURVIVORS, never the deleted rows
-            val dv = Option(n.get("deletionVector")).map(d =>
-              DvInfo(Option(d.get("storageType")).map(_.asText()).getOrElse("p"),
-                d.get("pathOrInlineDv").asText(),
-                Option(d.get("offset")).map(_.asInt()),
-                d.get("sizeInBytes").asLong(), d.get("cardinality").asLong()))
-            AddEntry(n.get("path").asText(), Map.empty, 0L, 0L, null, dv)
+            AddEntry(n.get("path").asText(), Map.empty, 0L, 0L, null,
+              Js.field(n, "deletionVector").map(Js.dv))
           }
         val adds0 = pathsOf("add")
         val removes0 = pathsOf("remove")
@@ -2873,7 +2829,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
         // stays at the documented file-granularity reconstruction
         val prevDv: Map[String, Option[DvInfo]] =
           if (v == 0 || (removes0.isEmpty && adds0.forall(_.dv.isEmpty))) Map.empty
-          else replay(spark, table, Some(v - 1)).live
+          else resolve(spark, table, Some(v - 1)).live
             .map(a => a.path -> a.dv).toMap
         val removes = removes0.map(r =>
           r.copy(dv = prevDv.getOrElse(r.path, None)))
@@ -2940,7 +2896,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     else frames.reduce(_.unionByName(_))
   }
 
-  private def readState(spark: SparkSession, table: String, state: State,
+  private def readState(spark: SparkSession, table: String, state: Snapshot,
       store: CommitStore = CommitStore.Local): DataFrame =
     readStateMerged(spark, table, state, keepLineage = false, store)
 
@@ -2972,7 +2928,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     * keeps `_gf_uri`/`_gf_pos` for [[deleteWhereDV]]'s provenance.
     */
   private def readStateMerged(spark: SparkSession, table: String,
-      state: State, keepLineage: Boolean,
+      state: Snapshot, keepLineage: Boolean,
       store: CommitStore = CommitStore.Local): DataFrame = {
     import org.apache.spark.sql.functions.col
     val dvAdds = state.live.filter(_.dv.isDefined)
@@ -2990,7 +2946,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     else merged.select(state.schema.fieldNames.toIndexedSeq.map(col): _*)
   }
 
-  private def readStateFiles(spark: SparkSession, table: String, state: State,
+  private def readStateFiles(spark: SparkSession, table: String, state: Snapshot,
       withLineage: Boolean): DataFrame = {
     import org.apache.spark.sql.functions.col
     val lineageCols = Seq(col("_metadata.file_path").as("_gf_uri"),
@@ -3046,16 +3002,6 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     }
   }
 
-  /** Driver-held metadata plane of a snapshot: version, schema, layout,
-    * txn watermarks — a handful of values regardless of table size.
-    */
-  private case class MetaState(version: Long, id: String, createdTime: Long,
-      schema: StructType, partitionColumns: Seq[String], txns: Map[String, Long],
-      minReader: Int = 1, minWriter: Int = 1,
-      readerFeatures: Seq[String] = Nil, writerFeatures: Seq[String] = Nil,
-      configuration: Map[String, String] = Map.empty,
-      domains: Map[String, String] = Map.empty)
-
   /** JSON commit actions, as a Spark schema: what [[actionsDF]] extracts
     * from the log tail. PERMISSIVE json read turns a protocol line into
     * all-null columns — filtered out downstream, never an error.
@@ -3076,39 +3022,23 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     StructField("domainMetadata", CheckpointSchema("domainMetadata").dataType)))
 
   /** The given commit files as a DataFrame of actions tagged with their
-    * commit version — log replay as a Spark job instead of a driver loop.
+    * commit version — for the verbs that aggregate over a version range
+    * ([[history]], [[readChangesBetween]]); snapshots resolve through
+    * [[resolve]].
     */
   private def actionsDF(spark: SparkSession, files: Seq[File]): DataFrame = {
     import org.apache.spark.sql.functions.{col, input_file_name, regexp_extract}
-    // FAILFAST: a truncated/garbled commit line must abort the replay (the
-    // driver-side parser's old behavior) — PERMISSIVE would turn it into
-    // an all-null row that the action filters silently drop, and the adds
-    // it carried would vanish from every reader without an error.
+    // FAILFAST: a truncated/garbled commit line must abort the read, as it
+    // aborts the driver fold — PERMISSIVE would turn it into an all-null
+    // row that the action filters silently drop, and the adds it carried
+    // would vanish without an error.
     spark.read.schema(JsonActionSchema).option("mode", "FAILFAST")
       .json(files.map(_.getPath): _*)
       .withColumn("version",
         regexp_extract(input_file_name(), "(\\d{20})\\.json", 1).cast("long"))
   }
 
-  /** Resolves a snapshot: the tiny metadata plane on the driver, the live
-    * add-set as a DataFrame computed DISTRIBUTEDLY — checkpoint adds union
-    * the JSON tail's add/remove actions, last action per path wins
-    * (`max_by` commit version). The driver never parses or holds the add
-    * list; at millions of live files a driver-side replay is the classic
-    * OOM that delta-spark's Snapshot machinery avoids the same way.
-    * Returned live columns: path, partitionValues, size, modificationTime,
-    * stats.
-    */
-  /** Tail-bytes ceiling for the driver-side fast replay in [[resolve]].
-    * Above it (or with any checkpoint present) the snapshot replays
-    * distributedly. 8 MiB of JSON tail is ~10⁴ add actions — far past the
-    * point where two Spark job round-trips amortize.
-    */
-  private val FastReplayMaxBytes: Long = 8L << 20
-
-  /** The live-set columns [[resolve]] returns, as an explicit schema (the
-    * driver fast path builds a local relation of exactly this shape).
-    */
+  /** The live-set columns of [[liveFrame]], as an explicit schema. */
   private lazy val LiveSetSchema: StructType = {
     val add = CheckpointSchema("add").dataType.asInstanceOf[StructType]
     StructType(Seq(
@@ -3122,147 +3052,49 @@ object DeltaSink extends org.apache.spark.internal.Logging {
       StructField("defaultRowCommitVersion", LongType)))
   }
 
-  /** Thrown by [[DriverReplay.finish]]'s protocol/feature gates — the ONE
-    * failure class the fast-replay fallback must rethrow instead of
-    * falling back to the distributed replay (which might "succeed" by
-    * mis-reading a table whose protocol it doesn't implement). Subclasses
-    * IllegalArgumentException so existing require-style callers/tests see
-    * the same contract.
+  /** A snapshot's live adds as a local relation of [[LiveSetSchema]]: the
+    * frame of the verbs that run Spark expressions over the live set (the
+    * checkpoint writers, [[fileStats]], [[statsPruned]]).
     */
-  private final class ProtocolGateException(msg: String)
-    extends IllegalArgumentException(msg)
+  private def liveFrame(spark: SparkSession, snap: Snapshot): DataFrame =
+    spark.createDataFrame(snap.live.map { a =>
+      Row(a.path, a.partitionValues, a.size, a.modificationTime, a.stats,
+        a.dv.map(d => Row(d.storageType, d.pathOrInlineDv,
+          d.offset.map(Int.box).orNull, d.sizeInBytes, d.cardinality)).orNull,
+        a.baseRowId.map(Long.box).orNull,
+        a.defaultRowCommitVersion.map(Long.box).orNull)
+    }.asJava, LiveSetSchema)
 
-  /** Mutable state of a DRIVER-SIDE snapshot replay, shared by the
-    * tail-only fast path ([[resolveTailOnDriver]]) and the small-checkpoint
-    * fast path ([[resolveCheckpointOnDriver]]). Apply order matches the
-    * distributed replay exactly: checkpoint base state first (its adds are
-    * all live; its metadata plane rows replace/extend), then the JSON tail
-    * in (version, line) order — the per-path max_by(version) + isAdd
-    * reconciliation as a hash map, with line order inside one commit as
-    * the deterministic tiebreak.
+  /** Null-safe field access over a parsed JSON commit line: the commit
+    * decoder of [[Fold]], also used for the adds [[readChangesBetween]]
+    * and [[readCdf]] read.
     */
-  private final class DriverReplay {
+  private object Js {
     import com.fasterxml.jackson.databind.JsonNode
-    var schema: Option[StructType] = None
-    var partCols: Seq[String] = Nil
-    var tableId: String = null
-    var createdTime = 0L
-    val txns = scala.collection.mutable.Map.empty[String, Long]
-    var tableConfig: Map[String, String] = Map.empty
-    var minReader = 1
-    var minWriter = 1
-    var readerFeatures: Seq[String] = Nil
-    var writerFeatures: Seq[String] = Nil
-    val domains = scala.collection.mutable.Map.empty[String, String]
-    // last action per path in (version, line) order: Some(row) = live add
-    val lastAction = scala.collection.mutable.LinkedHashMap.empty[String, Option[Row]]
-
-    private def field(n: JsonNode, f: String): Option[JsonNode] =
+    def field(n: JsonNode, f: String): Option[JsonNode] =
       Option(n.get(f)).filterNot(_.isNull)
-    private def txt(n: JsonNode, f: String): String =
-      field(n, f).map(_.asText).orNull
-    private def lng(n: JsonNode, f: String): java.lang.Long =
-      field(n, f).map(v => java.lang.Long.valueOf(v.asLong)).orNull
-    private def strSeq(n: JsonNode, f: String): Option[Seq[String]] =
+    def txt(n: JsonNode, f: String): String = field(n, f).map(_.asText).orNull
+    def lng(n: JsonNode, f: String): Option[Long] = field(n, f).map(_.asLong)
+    def int(n: JsonNode, f: String): Option[Int] = field(n, f).map(_.asInt)
+    def strSeq(n: JsonNode, f: String): Option[Seq[String]] =
       field(n, f).map(_.elements().asScala.map(_.asText).toSeq)
-    private def strMap(n: JsonNode, f: String): Option[Map[String, String]] =
+    def strMap(n: JsonNode, f: String): Option[Map[String, String]] =
       field(n, f).map(_.properties().asScala
         .map(e => e.getKey -> (if (e.getValue.isNull) null else e.getValue.asText))
         .toMap)
-
-    /** Applies the commit JSON tail in (version, line) order. A malformed
-      * line throws (the distributed path's FAILFAST contract).
-      */
-    def applyTail(tail: Seq[File]): Unit = {
-      for (file <- tail; line <- Files.readAllLines(file.toPath).asScala
-           if line.trim.nonEmpty) {
-        val n = mapper.readTree(line) // malformed line throws, like FAILFAST
-        field(n, "metaData").foreach { m =>
-          schema = Some(DataType.fromJson(txt(m, "schemaString")).asInstanceOf[StructType])
-          partCols = strSeq(m, "partitionColumns").getOrElse(Nil)
-          val id = txt(m, "id")
-          if (id != null) tableId = id
-          tableConfig = strMap(m, "configuration").getOrElse(Map.empty)
-          val created = lng(m, "createdTime")
-          if (createdTime == 0L && created != null) createdTime = created.longValue()
-        }
-        field(n, "protocol").foreach { p =>
-          field(p, "minReaderVersion").foreach(v => minReader = math.max(minReader, v.asInt))
-          field(p, "minWriterVersion").foreach(v => minWriter = math.max(minWriter, v.asInt))
-          strSeq(p, "readerFeatures").foreach(readerFeatures = _)
-          strSeq(p, "writerFeatures").foreach(writerFeatures = _)
-        }
-        field(n, "txn").foreach { t =>
-          val app = txt(t, "appId")
-          val v = lng(t, "version").longValue()
-          if (txns.get(app).forall(_ < v)) txns += app -> v
-        }
-        field(n, "domainMetadata").foreach { d =>
-          val name = txt(d, "domain")
-          if (name != null) {
-            if (field(d, "removed").exists(_.asBoolean)) domains -= name
-            else domains += name -> txt(d, "configuration")
-          }
-        }
-        field(n, "add").foreach { a =>
-          val dv = field(a, "deletionVector").map { d =>
-            Row(txt(d, "storageType"), txt(d, "pathOrInlineDv"),
-              field(d, "offset").map(v => java.lang.Integer.valueOf(v.asInt)).orNull,
-              lng(d, "sizeInBytes"), lng(d, "cardinality"))
-          }.orNull
-          lastAction(txt(a, "path")) = Some(Row(
-            txt(a, "path"), strMap(a, "partitionValues").orNull,
-            lng(a, "size"), lng(a, "modificationTime"), txt(a, "stats"), dv,
-            lng(a, "baseRowId"), lng(a, "defaultRowCommitVersion")))
-        }
-        field(n, "remove").foreach(r => lastAction(txt(r, "path")) = None)
-      }
-    }
-
-    /** Protocol gates + [[MetaState]] + the live set as a LOCAL relation of
-      * [[LiveSetSchema]], so every consumer (collectAdds, checkpoint
-      * writers, scans) is unchanged.
-      */
-    def finish(spark: SparkSession, table: String, version: Long)
-        : (MetaState, DataFrame) = {
-      require(schema.isDefined, s"Delta log has no metaData action: $table")
-      if (tableId == null)
-        tableId = java.util.UUID.nameUUIDFromBytes(
-          logDir(table).toAbsolutePath.normalize.toString
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString
-      // Protocol/feature refusals throw the DEDICATED gate type (r19
-      // ADVICE): the caller's fallback-to-distributed catch must rethrow
-      // exactly these — a parse-shaped IllegalArgumentException
-      // (NumberFormatException, DataType.fromJson, the schema require
-      // above) is a parse surprise and must FALL BACK to the
-      // authoritative distributed replay, which re-applies the same gates.
-      if (minReader > 3) throw new ProtocolGateException(
-        s"unsupported Delta protocol: table requires reader version $minReader, " +
-          "this engine supports up to 3 (deletion vectors)")
-      val unknownReader = readerFeatures.toSet -- SupportedReaderFeatures
-      if (unknownReader.nonEmpty) throw new ProtocolGateException(
-        s"unsupported Delta reader feature(s) ${unknownReader.toSeq.sorted.mkString(", ")}: " +
-          s"this engine implements ${SupportedReaderFeatures.toSeq.sorted.mkString(", ")}")
-      val liveRows = lastAction.valuesIterator.flatten.toSeq
-      (MetaState(version, tableId, createdTime, schema.get, partCols, txns.toMap,
-        minReader, minWriter, readerFeatures, writerFeatures, tableConfig,
-        domains.toMap),
-        spark.createDataFrame(liveRows.asJava, LiveSetSchema))
-    }
-  }
-
-  /** Driver-side replay of a TAIL-ONLY snapshot (no checkpoint, small
-    * tail) — see [[DriverReplay]].
-    */
-  private def resolveTailOnDriver(spark: SparkSession, table: String,
-      tail: Seq[File]): (MetaState, DataFrame) = {
-    val r = new DriverReplay
-    r.applyTail(tail)
-    r.finish(spark, table, tail.last.getName.stripSuffix(".json").toLong)
+    def dv(d: JsonNode): DvInfo =
+      DvInfo(Option(txt(d, "storageType")).getOrElse("p"), txt(d, "pathOrInlineDv"),
+        int(d, "offset"), lng(d, "sizeInBytes").getOrElse(0L),
+        lng(d, "cardinality").getOrElse(0L))
+    def add(a: JsonNode): AddEntry =
+      AddEntry(txt(a, "path"), strMap(a, "partitionValues").getOrElse(Map.empty),
+        lng(a, "size").getOrElse(0L), lng(a, "modificationTime").getOrElse(0L),
+        txt(a, "stats"), field(a, "deletionVector").map(dv),
+        lng(a, "baseRowId"), lng(a, "defaultRowCommitVersion"))
   }
 
   /** Null-safe field access over parquet [[org.apache.parquet.example.data.Group]]
-    * rows, for the driver-side checkpoint read. List/map accessors resolve
+    * rows: the checkpoint decoder of [[Fold]]. List/map accessors resolve
     * the repeated inner group's NAME from the file schema, so both the
     * standard layout (list/element, key_value) and a legacy writer's
     * (array/bag) read identically.
@@ -3273,12 +3105,12 @@ object DeltaSink extends org.apache.spark.internal.Logging {
       g.getType.containsField(f) && g.getFieldRepetitionCount(f) > 0
     def str(g: Group, f: String): String =
       if (has(g, f)) g.getString(f, 0) else null
-    def lng(g: Group, f: String): java.lang.Long =
-      if (has(g, f)) java.lang.Long.valueOf(g.getLong(f, 0)) else null
-    def int(g: Group, f: String): java.lang.Integer =
-      if (has(g, f)) java.lang.Integer.valueOf(g.getInteger(f, 0)) else null
-    def bool(g: Group, f: String): java.lang.Boolean =
-      if (has(g, f)) java.lang.Boolean.valueOf(g.getBoolean(f, 0)) else null
+    def lng(g: Group, f: String): Option[Long] =
+      if (has(g, f)) Some(g.getLong(f, 0)) else None
+    def int(g: Group, f: String): Option[Int] =
+      if (has(g, f)) Some(g.getInteger(f, 0)) else None
+    def bool(g: Group, f: String): Option[Boolean] =
+      if (has(g, f)) Some(g.getBoolean(f, 0)) else None
     def sub(g: Group, f: String): Option[Group] =
       if (has(g, f)) Some(g.getGroup(f, 0)) else None
     def strList(g: Group, f: String): Option[Seq[String]] = sub(g, f).map { lg =>
@@ -3307,429 +3139,236 @@ object DeltaSink extends org.apache.spark.internal.Logging {
         }.toMap
       }
     }
+    def add(a: Group): AddEntry =
+      AddEntry(str(a, "path"), strMap(a, "partitionValues").getOrElse(Map.empty),
+        lng(a, "size").getOrElse(0L), lng(a, "modificationTime").getOrElse(0L),
+        str(a, "stats"),
+        sub(a, "deletionVector").map(d =>
+          DvInfo(Option(str(d, "storageType")).getOrElse("p"), str(d, "pathOrInlineDv"),
+            int(d, "offset"), lng(d, "sizeInBytes").getOrElse(0L),
+            lng(d, "cardinality").getOrElse(0L))),
+        lng(a, "baseRowId"), lng(a, "defaultRowCommitVersion"))
   }
 
-  /** Reads every row of the given LOCAL parquet files as Groups (driver,
-    * no Spark job). Callers gate total bytes before calling.
+  /** The ONE Delta log replay (spec §Action Reconciliation): checkpoint
+    * rows first, then the JSON commits in (version, line) order, each
+    * through its decoder ([[group]], [[json]]) into the same rules,
+    * written once here. Last action per path wins and a remove retracts;
+    * the metadata plane follows the rules on each method below.
     */
-  private def parquetGroups(files: Seq[File],
-      conf: org.apache.hadoop.conf.Configuration)
-      : Vector[org.apache.parquet.example.data.Group] = {
-    val out = Vector.newBuilder[org.apache.parquet.example.data.Group]
-    files.foreach { f =>
+  private final class Fold {
+    import com.fasterxml.jackson.databind.JsonNode
+    import org.apache.parquet.example.data.Group
+    private var schema: Option[StructType] = None
+    private var partCols: Seq[String] = Nil
+    private var tableId: String = null
+    private var createdTime = 0L
+    private var configuration = Map.empty[String, String]
+    private var minReader = 1
+    private var minWriter = 1
+    private var readerFeatures: Seq[String] = Nil
+    private var writerFeatures: Seq[String] = Nil
+    private val txns = scala.collection.mutable.Map.empty[String, Long]
+    private val domains = scala.collection.mutable.Map.empty[String, String]
+    private val live = scala.collection.mutable.HashMap.empty[String, AddEntry]
+
+    /** A metaData action replaces the schema, layout and configuration
+      * wholesale (spec: each carries the complete map); the first
+      * non-zero createdTime is the table's birth, which later metaData
+      * actions (schema evolution) repeat.
+      */
+    private def metaData(id: String, created: Option[Long], schemaString: String,
+        pc: Option[Seq[String]], conf: Option[Map[String, String]]): Unit = {
+      schema = Some(DataType.fromJson(schemaString).asInstanceOf[StructType])
+      partCols = pc.getOrElse(Nil)
+      if (id != null) tableId = id
+      configuration = conf.getOrElse(Map.empty)
+      if (createdTime == 0L) createdTime = created.getOrElse(0L)
+    }
+
+    /** Versions only ratchet up; a feature list REPLACES the previous one
+      * (spec), and a checkpoint written before the lists existed reads
+      * none, keeping whatever the tail establishes.
+      */
+    private def protocol(r: Option[Int], w: Option[Int],
+        rf: Option[Seq[String]], wf: Option[Seq[String]]): Unit = {
+      r.foreach(v => minReader = math.max(minReader, v))
+      w.foreach(v => minWriter = math.max(minWriter, v))
+      rf.foreach(readerFeatures = _)
+      wf.foreach(writerFeatures = _)
+    }
+
+    /** A streaming writer's watermark only moves forward. */
+    private def txn(appId: String, version: Long): Unit =
+      if (txns.get(appId).forall(_ < version)) txns(appId) = version
+
+    private def domain(name: String, conf: String, removed: Boolean): Unit =
+      if (name != null) {
+        if (removed) domains -= name else domains(name) = conf
+      }
+
+    /** One JSON commit line. */
+    def json(n: JsonNode): Unit = {
+      Js.field(n, "metaData").foreach(m => metaData(Js.txt(m, "id"),
+        Js.lng(m, "createdTime"), Js.txt(m, "schemaString"),
+        Js.strSeq(m, "partitionColumns"), Js.strMap(m, "configuration")))
+      Js.field(n, "protocol").foreach(p => protocol(Js.int(p, "minReaderVersion"),
+        Js.int(p, "minWriterVersion"), Js.strSeq(p, "readerFeatures"),
+        Js.strSeq(p, "writerFeatures")))
+      Js.field(n, "txn").foreach(t => txn(Js.txt(t, "appId"), t.get("version").asLong))
+      Js.field(n, "domainMetadata").foreach(d => domain(Js.txt(d, "domain"),
+        Js.txt(d, "configuration"), Js.field(d, "removed").exists(_.asBoolean)))
+      Js.field(n, "add").foreach { a => val e = Js.add(a); live(e.path) = e }
+      Js.field(n, "remove").foreach(r => live -= Js.txt(r, "path"))
+    }
+
+    /** One checkpoint row: a classic part's, a V2 manifest's or a
+      * sidecar's.
+      */
+    def group(g: Group): Unit = {
+      Gp.sub(g, "metaData").foreach(m => metaData(Gp.str(m, "id"),
+        Gp.lng(m, "createdTime"), Gp.str(m, "schemaString"),
+        Gp.strList(m, "partitionColumns"), Gp.strMap(m, "configuration")))
+      Gp.sub(g, "protocol").foreach(p => protocol(Gp.int(p, "minReaderVersion"),
+        Gp.int(p, "minWriterVersion"), Gp.strList(p, "readerFeatures"),
+        Gp.strList(p, "writerFeatures")))
+      Gp.sub(g, "txn").foreach(t => txn(Gp.str(t, "appId"), Gp.lng(t, "version").get))
+      Gp.sub(g, "domainMetadata").foreach(d => domain(Gp.str(d, "domain"),
+        Gp.str(d, "configuration"), Gp.bool(d, "removed").contains(true)))
+      Gp.sub(g, "add").foreach { a => val e = Gp.add(a); live(e.path) = e }
+    }
+
+    /** The reader gates, then the folded [[Snapshot]] at `version`. */
+    def snapshot(table: String, version: Long): Snapshot = {
+      require(schema.isDefined, s"Delta log has no metaData action: $table")
+      // PROTOCOL GATE: refuse tables demanding reader capabilities beyond
+      // this engine's (v3 + the features below). Silently mis-reading a
+      // table whose protocol promises semantics we don't implement is the
+      // one unforgivable failure mode of a log-replicated format.
+      require(minReader <= 3,
+        s"unsupported Delta protocol: table requires reader version $minReader, " +
+          "this engine supports up to 3 (deletion vectors)")
+      // v3 reader features gate the same way (spec: a reader must refuse a
+      // table listing a feature it does not implement)
+      val unknownReader = readerFeatures.toSet -- SupportedReaderFeatures
+      require(unknownReader.isEmpty,
+        s"unsupported Delta reader feature(s) ${unknownReader.toSeq.sorted.mkString(", ")}: " +
+          s"this engine implements ${SupportedReaderFeatures.toSeq.sorted.mkString(", ")}")
+      // An external log whose metaData carries no id (allowed by the
+      // spec's readers, written by some engines) would otherwise thread
+      // `null` downstream (ADVICE r7). Derive it DETERMINISTICALLY from the
+      // table location, so every replay — two concurrent ones that each
+      // re-write metaData included — agrees; the first persisted metaData
+      // then fixes it for the table's remaining lifetime.
+      val id = Option(tableId).getOrElse(java.util.UUID.nameUUIDFromBytes(
+        logDir(table).toAbsolutePath.normalize.toString
+          .getBytes(StandardCharsets.UTF_8)).toString)
+      Snapshot(version, id, createdTime, schema.get, partCols, minReader,
+        minWriter, readerFeatures, writerFeatures, configuration, domains.toMap,
+        txns.toMap, live.values.toSeq.sortBy(_.path))
+    }
+  }
+
+  /** Streams every row of the given LOCAL parquet files to `f`, one
+    * parquet Group at a time (driver, no Spark job).
+    */
+  private def parquetGroups(files: Seq[File], conf: Configuration)(
+      f: org.apache.parquet.example.data.Group => Unit): Unit =
+    files.foreach { file =>
       val rd = org.apache.parquet.hadoop.ParquetReader
         .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
-          new org.apache.hadoop.fs.Path(f.getPath))
+          new org.apache.hadoop.fs.Path(file.getPath))
         .withConf(conf).build()
       try {
         var g = rd.read()
-        while (g != null) { out += g; g = rd.read() }
+        while (g != null) { f(g); g = rd.read() }
       } finally rd.close()
     }
-    out.result()
-  }
 
-  /** Driver-side replay of a SMALL CHECKPOINT-BASED snapshot (r18, guide
-    * §1.2/§2.4): once a table has a checkpoint, every sink op's resolve
-    * paid ~4-6 Spark job round-trips (manifest read + sidecar-list
-    * collect, two metadata-plane collects, and a SHUFFLED per-path
-    * max_by for the live set) even when the whole checkpoint is a few KB —
-    * measured as the second checkpointV2 in q_delta_checkpoint_v2 running
-    * 3.5× the first, and every post-maintain op in q_lakehouse_maintain /
-    * history / clone / restore paying the same tax. For a checkpoint
-    * whose parquet bytes (+ tail) fit [[FastReplayMaxBytes]], read the
-    * manifest + sidecars (v2) or the classic checkpoint parts on the
-    * driver with the parquet Group API — zero Spark jobs — seed
-    * [[DriverReplay]] with the base state, and apply the JSON tail as
-    * usual. Returns None (→ distributed replay) for store-backed tables
-    * (no local files) or once the checkpoint outgrows the budget — a
-    * 100 TB table's add set must never land on the driver.
+  /** Each action line of the given commit files, parsed, in (version,
+    * line) order. A malformed line throws.
     */
-  private def resolveCheckpointOnDriver(spark: SparkSession, table: String,
-      ckptV: Long, manifestName: Option[String], tail: Seq[File])
-      : Option[(MetaState, DataFrame)] = {
-    val ld = logDir(table)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val budget = FastReplayMaxBytes - tail.map(_.length).sum
-    val groups: Vector[org.apache.parquet.example.data.Group] = manifestName match {
-      case Some(name) =>
-        val mf = ld.resolve(name).toFile
-        if (!mf.isFile || mf.length > budget) return None
-        val manifest = parquetGroups(Seq(mf), hconf)
-        val sidecars = manifest.flatMap(g => Gp.sub(g, "sidecar"))
-          .map(s => ld.resolve("_sidecars").resolve(Gp.str(s, "path")).toFile)
-        if (sidecars.exists(!_.isFile) ||
-            mf.length + sidecars.map(_.length).sum > budget) return None
-        // the manifest's own add rows count only when it lists no sidecar
-        (if (sidecars.isEmpty) manifest
-         else manifest.filter(g => Gp.sub(g, "add").isEmpty)) ++
-          parquetGroups(sidecars, hconf)
-      case None =>
-        val f = checkpointFile(table, ckptV).toFile
-        val parts =
-          if (f.isFile) Seq(f)
-          else if (f.isDirectory) CommitStore.partFiles(f)
-          else return None
-        if (parts.isEmpty || parts.map(_.length).sum > budget) return None
-        parquetGroups(parts, hconf)
+  private def jsonActions(files: Seq[File])(
+      f: com.fasterxml.jackson.databind.JsonNode => Unit): Unit =
+    for (file <- files; line <- Files.readAllLines(file.toPath).asScala
+         if line.trim.nonEmpty)
+      f(mapper.readTree(line))
+
+  /** The `_last_checkpoint` pointer — the ONE reader of it: the
+    * checkpointed version and, for a V2 checkpoint, its manifest's file
+    * name. The spec finds V2 checkpoints by the
+    * `<v>.checkpoint.<uuid>.parquet` NAME PATTERN, so a pointer without
+    * this engine's `path` hint (an external writer's) still resolves a
+    * V2-named manifest FILE at the pointed version; classic checkpoints
+    * are directories and never match. None when there is no pointer.
+    */
+  private def lastCheckpoint(table: String): Option[(Long, Option[String])] = {
+    val f = lastCheckpointFile(table)
+    if (!Files.exists(f)) None
+    else {
+      val node = mapper.readTree(Files.readString(f))
+      val v = node.get("version").asLong()
+      Some((v, Js.field(node, "path").map(_.asText).orElse(
+        Option(logDir(table).toFile.listFiles()).toSeq.flatten
+          .filter(m => m.isFile &&
+            m.getName.matches(f"$v%020d\\.checkpoint\\..+\\.parquet"))
+          .map(_.getName).sorted.lastOption)))
     }
-    val r = new DriverReplay
-    groups.foreach { g =>
-      Gp.sub(g, "protocol").foreach { p =>
-        Option(Gp.int(p, "minReaderVersion"))
-          .foreach(v => r.minReader = math.max(r.minReader, v.intValue()))
-        Option(Gp.int(p, "minWriterVersion"))
-          .foreach(v => r.minWriter = math.max(r.minWriter, v.intValue()))
-        Gp.strList(p, "readerFeatures").foreach(r.readerFeatures = _)
-        Gp.strList(p, "writerFeatures").foreach(r.writerFeatures = _)
-      }
-      Gp.sub(g, "metaData").foreach { m =>
-        r.schema = Some(DataType.fromJson(Gp.str(m, "schemaString"))
-          .asInstanceOf[StructType])
-        r.partCols = Gp.strList(m, "partitionColumns").getOrElse(Nil)
-        val id = Gp.str(m, "id")
-        if (id != null) r.tableId = id
-        r.tableConfig = Gp.strMap(m, "configuration").getOrElse(Map.empty)
-        val created = Gp.lng(m, "createdTime")
-        if (r.createdTime == 0L && created != null) r.createdTime = created.longValue()
-      }
-      Gp.sub(g, "txn").foreach { t =>
-        // CHECKPOINT-plane txn rows overwrite unconditionally — the same
-        // rule as the distributed checkpoint collect (r19 ADVICE parity);
-        // the tail then reapplies with the monotonic guard in applyTail
-        r.txns += Gp.str(t, "appId") -> Gp.lng(t, "version").longValue()
-      }
-      Gp.sub(g, "domainMetadata").foreach { d =>
-        val name = Gp.str(d, "domain")
-        if (name != null) {
-          if (Option(Gp.bool(d, "removed")).exists(_.booleanValue()))
-            r.domains -= name
-          else r.domains += name -> Gp.str(d, "configuration")
-        }
-      }
-      Gp.sub(g, "add").foreach { a =>
-        val dv = Gp.sub(a, "deletionVector").map { d =>
-          Row(Gp.str(d, "storageType"), Gp.str(d, "pathOrInlineDv"),
-            Gp.int(d, "offset"), Gp.lng(d, "sizeInBytes"),
-            Gp.lng(d, "cardinality"))
-        }.orNull
-        val path = Gp.str(a, "path")
-        r.lastAction(path) = Some(Row(path,
-          Gp.strMap(a, "partitionValues").orNull, Gp.lng(a, "size"),
-          Gp.lng(a, "modificationTime"), Gp.str(a, "stats"), dv,
-          Gp.lng(a, "baseRowId"), Gp.lng(a, "defaultRowCommitVersion")))
-      }
-    }
-    r.applyTail(tail)
-    Some(r.finish(spark, table,
-      tail.lastOption.map(_.getName.stripSuffix(".json").toLong).getOrElse(ckptV)))
   }
 
-  private def resolve(spark: SparkSession, table: String,
-      asOfVersion: Option[Long]): (MetaState, DataFrame) = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, max_by, struct}
-    // pointer: version + (v2 checkpoints) the manifest file name
-    val ckptPtr: Option[(Long, Option[String])] = {
-      val f = lastCheckpointFile(table)
-      if (Files.exists(f)) {
-        val node = mapper.readTree(Files.readString(f))
-        val v = node.get("version").asLong()
-        if (asOfVersion.forall(_ >= v))
-          Some((v, Option(node.get("path")).map(_.asText()).orElse {
-            // SPEC-style v2 discovery: the spec finds v2 checkpoints by
-            // the <v>.checkpoint.<uuid>.parquet NAME PATTERN — an
-            // external writer's pointer may omit our "path" hint, so a
-            // v2-named manifest FILE at the pointed version resolves too
-            // (classic checkpoints are directories and don't match)
-            Option(logDir(table).toFile.listFiles()).toSeq.flatten
-              .filter(m => m.isFile &&
-                m.getName.matches(f"$v%020d\\.checkpoint\\..+\\.parquet"))
-              .map(_.getName).sorted.lastOption
-          }))
-        else None
-      } else None
+  /** Streams the rows of the checkpoint at version `v` to `f`: the V2
+    * `manifest` then its sidecars, or the classic checkpoint's parts. A
+    * manifest's own add rows count only when it lists no sidecar (the
+    * spec permits inline file actions in a sidecar-less manifest). A
+    * missing manifest, sidecar or checkpoint fails naming the file.
+    */
+  private def checkpointRows(spark: SparkSession, table: String, v: Long,
+      manifest: Option[String])(
+      f: org.apache.parquet.example.data.Group => Unit): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    def present(file: File, what: String): File = {
+      require(file.exists, s"Delta $what is missing: $file")
+      file
     }
-    val ckptV: Option[Long] = ckptPtr.map(_._1)
+    manifest match {
+      case Some(name) =>
+        val sidecars = Seq.newBuilder[File]
+        val inline = Seq.newBuilder[org.apache.parquet.example.data.Group]
+        parquetGroups(Seq(present(logDir(table).resolve(name).toFile,
+            "checkpoint manifest")), conf) { g =>
+          Gp.sub(g, "sidecar").foreach(s => sidecars += present(logDir(table)
+            .resolve("_sidecars").resolve(Gp.str(s, "path")).toFile, "checkpoint sidecar"))
+          if (Gp.has(g, "add")) inline += g else f(g)
+        }
+        val listed = sidecars.result()
+        if (listed.isEmpty) inline.result().foreach(f)
+        parquetGroups(listed, conf)(f)
+      case None =>
+        val c = present(checkpointFile(table, v).toFile, "checkpoint")
+        parquetGroups(if (c.isDirectory) CommitStore.partFiles(c) else Seq(c), conf)(f)
+    }
+  }
+
+  /** Resolves the snapshot at `asOfVersion` (or the latest): one [[Fold]]
+    * on the driver takes the checkpoint `_last_checkpoint` points at, when
+    * it is at or below the target, then the JSON commits after it. No
+    * Spark job runs; the driver holds one [[AddEntry]] per live file.
+    */
+  private def resolve(spark: SparkSession, table: String,
+      asOfVersion: Option[Long]): Snapshot = {
+    val ckpt = lastCheckpoint(table).filter(c => asOfVersion.forall(_ >= c._1))
     val tail = logFiles(table).filter { f =>
       val v = f.getName.stripSuffix(".json").toLong
-      asOfVersion.forall(v <= _) && ckptV.forall(v > _)
+      asOfVersion.forall(v <= _) && ckpt.forall(v > _._1)
     }
-    require(tail.nonEmpty || ckptV.isDefined,
+    require(tail.nonEmpty || ckpt.isDefined,
       s"not a Delta table (no _delta_log): $table")
-
-    // FAST TAIL REPLAY (r18, guide §1.2/§2.4): a tail-only snapshot with a
-    // KB/MB-scale tail replays on the DRIVER with jackson — the Spark path
-    // below costs two job round-trips (metadata collect + a SHUFFLED
-    // max_by(version) per path) per sink op, which dominates every small
-    // commit (measured ~0.3-0.5 s per op at sf0.1; a Delta append ran 3×
-    // an Iceberg append on identical frames). delta-spark's own Snapshot
-    // machinery reads the JSON tail driver-side for the same reason. The
-    // threshold keeps a 100 TB log (multi-MB tail or any checkpoint) on
-    // the distributed replay, where the add set must never land on the
-    // driver before the live-set reconciliation has shrunk it.
-    if (ckptPtr.isEmpty && tail.map(_.length).sum <= FastReplayMaxBytes)
-      return resolveTailOnDriver(spark, table, tail)
-
-    // FAST CHECKPOINT REPLAY (r18): same driver-side replay for a snapshot
-    // whose base is a KB/MB-scale checkpoint — the parquet Group API reads
-    // manifest + sidecars (or classic parts) with zero Spark jobs. The byte
-    // budget and the local-file requirement keep big tables and
-    // store-backed logs on the distributed path; a parse surprise falls
-    // back to the authoritative replay (which re-applies the same
-    // protocol gates).
-    if (ckptPtr.isDefined && tail.map(_.length).sum <= FastReplayMaxBytes) {
-      try {
-        resolveCheckpointOnDriver(spark, table, ckptPtr.get._1,
-            ckptPtr.get._2, tail) match {
-          case Some(res) => return res
-          case None => () // store-backed or over-budget → distributed
-        }
-      } catch {
-        case e: ProtocolGateException => throw e // protocol gates refuse
-        case scala.util.control.NonFatal(e) =>
-          // any OTHER failure — including parse-shaped
-          // IllegalArgumentExceptions (NumberFormatException,
-          // DataType.fromJson, a missing metaData row) — is a parse
-          // surprise: the distributed replay below is authoritative and
-          // re-applies the same protocol gates (r19 ADVICE)
-          logWarning(
-            s"fast checkpoint replay fell back to distributed: ${e.getMessage}")
-      }
-    }
-
-    val ckptDF = ckptPtr.map {
-      case (_, Some(manifestName)) =>
-        // V2: the manifest carries the metadata plane + the sidecar list;
-        // adds live in the sidecars — readers fan out over them in
-        // parallel, never listing a monolithic checkpoint dir. Normalize
-        // both planes back to the classic checkpoint shape so the replay
-        // below is layout-agnostic.
-        val manifest = spark.read.schema(V2ManifestReadSchema)
-          .parquet(logDir(table).resolve(manifestName).toString)
-        val sidecarPaths = manifest.where(col("sidecar").isNotNull)
-          .select("sidecar.path").collect().map(r =>
-            logDir(table).resolve("_sidecars").resolve(r.getString(0)).toString)
-        // inline add actions count only in a sidecar-less manifest (where
-        // the spec permits them); the driver fast path applies the same
-        // rule, so one table resolves to one live set whatever the size of
-        // its checkpoint
-        val metaPart = manifest
-          .where(col("protocol").isNotNull || col("metaData").isNotNull ||
-            col("txn").isNotNull || col("domainMetadata").isNotNull ||
-            (if (sidecarPaths.isEmpty) col("add").isNotNull else lit(false)))
-          .select(col("protocol"), col("metaData"), col("add"),
-            col("txn"), col("domainMetadata"))
-        if (sidecarPaths.isEmpty) metaPart
-        else metaPart.unionByName(
-          spark.read.schema(StructType(Seq(CheckpointSchema("add"))))
-            .parquet(sidecarPaths.toIndexedSeq: _*)
-            .select(lit(null).cast(CheckpointSchema("protocol").dataType).as("protocol"),
-              lit(null).cast(CheckpointSchema("metaData").dataType).as("metaData"),
-              col("add"),
-              lit(null).cast(CheckpointSchema("txn").dataType).as("txn"),
-              lit(null).cast(CheckpointSchema("domainMetadata").dataType)
-                .as("domainMetadata")))
-      case (v, None) =>
-        spark.read.schema(CheckpointSchema)
-          .parquet(checkpointFile(table, v).toString)
-    }
-    val tailDF = if (tail.isEmpty) None else Some(actionsDF(spark, tail))
-
-    // Metadata plane: metaData/txn rows are a bounded handful — collect
-    // them through Spark filters (the driver still never touches adds).
-    var schema: Option[StructType] = None
-    var partCols: Seq[String] = Nil
-    var tableId: String = null
-    var createdTime = 0L
-    val txns = scala.collection.mutable.Map.empty[String, Long]
-    var tableConfig: Map[String, String] = Map.empty
-    def applyMeta(id: String, created: java.lang.Long, schemaString: String,
-        pc: Seq[String], conf: scala.collection.Map[String, String]): Unit = {
-      schema = Some(DataType.fromJson(schemaString).asInstanceOf[StructType])
-      partCols = pc
-      if (id != null) tableId = id
-      // configuration REPLACES wholesale per the spec: each metaData
-      // action carries the complete map (rows apply in version order)
-      tableConfig = Option(conf).map(_.toMap).getOrElse(Map.empty)
-      // first metaData's createdTime is the table birth; later metaData
-      // actions (schema evolution) repeat it — keep the first non-zero
-      if (createdTime == 0L && created != null) createdTime = created.longValue()
-    }
-    var minReader = 1
-    var minWriter = 1
-    var readerFeatures: Seq[String] = Nil
-    var writerFeatures: Seq[String] = Nil
-    def applyProtocol(r: Row, idx: Int): Unit = if (!r.isNullAt(idx)) {
-      val p = r.getStruct(idx)
-      if (!p.isNullAt(0)) minReader = math.max(minReader, p.getInt(0))
-      if (!p.isNullAt(1)) minWriter = math.max(minWriter, p.getInt(1))
-      // feature lists: a protocol action REPLACES them (spec); actions
-      // apply in version order, so last non-null wins — and a checkpoint
-      // written before this field existed reads as null, keeping whatever
-      // the JSON tail establishes
-      if (p.size > 2 && !p.isNullAt(2))
-        readerFeatures = p.getSeq[String](2).toSeq
-      if (p.size > 3 && !p.isNullAt(3))
-        writerFeatures = p.getSeq[String](3).toSeq
-    }
-    val domains = scala.collection.mutable.Map.empty[String, String]
-    def applyDomain(r: Row, idx: Int): Unit = if (!r.isNullAt(idx)) {
-      val d = r.getStruct(idx)
-      val name = d.getAs[String]("domain")
-      if (name != null) {
-        if (Option(d.getAs[java.lang.Boolean]("removed")).exists(_.booleanValue()))
-          domains -= name
-        else domains += name -> d.getAs[String]("configuration")
-      }
-    }
-    ckptDF.foreach {
-      _.where(col("metaData").isNotNull || col("txn").isNotNull ||
-          col("protocol").isNotNull || col("domainMetadata").isNotNull)
-        .select("metaData", "txn", "protocol", "domainMetadata")
-        .collect().foreach { r =>
-          if (!r.isNullAt(0)) {
-            val m = r.getStruct(0)
-            applyMeta(m.getAs[String]("id"), m.getAs[java.lang.Long]("createdTime"),
-              m.getAs[String]("schemaString"),
-              m.getSeq[String](m.fieldIndex("partitionColumns")),
-              m.getAs[scala.collection.Map[String, String]]("configuration"))
-          }
-          if (!r.isNullAt(1)) {
-            val t = r.getStruct(1)
-            txns += t.getAs[String]("appId") -> t.getAs[Long]("version")
-          }
-          applyProtocol(r, 2)
-          applyDomain(r, 3)
-        }
-    }
-    tailDF.foreach {
-      _.where(col("metaData").isNotNull || col("txn").isNotNull ||
-          col("protocol").isNotNull || col("domainMetadata").isNotNull)
-        .select("metaData", "txn", "version", "protocol", "domainMetadata")
-        .orderBy("version")
-        .collect().foreach { r =>
-          if (!r.isNullAt(0)) {
-            val m = r.getStruct(0)
-            applyMeta(m.getAs[String]("id"), m.getAs[java.lang.Long]("createdTime"),
-              m.getAs[String]("schemaString"),
-              Option(m.getSeq[String](m.fieldIndex("partitionColumns")))
-                .getOrElse(Nil),
-              m.getAs[scala.collection.Map[String, String]]("configuration"))
-          }
-          if (!r.isNullAt(1)) {
-            val t = r.getStruct(1)
-            val app = t.getAs[String]("appId")
-            val v = t.getAs[Long]("version")
-            if (txns.get(app).forall(_ < v)) txns += app -> v
-          }
-          applyProtocol(r, 3)
-          applyDomain(r, 4)
-        }
-    }
-    require(schema.isDefined, s"Delta log has no metaData action: $table")
-    // An external log whose metaData carries no id (allowed by the spec's
-    // readers, written by some engines) would otherwise thread `null`
-    // downstream — an evolving append would literally record the string
-    // "null" and every checkpoint would mint a different random id
-    // (ADVICE r7). Derive DETERMINISTICALLY from the table location so
-    // every replay — including two concurrent ones that each re-write
-    // metaData (checkpoint vs evolving append) before either persists —
-    // agrees on the same id; the first persisted metaData then fixes it
-    // for the table's remaining lifetime.
-    if (tableId == null)
-      tableId = java.util.UUID.nameUUIDFromBytes(
-        logDir(table).toAbsolutePath.normalize.toString
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8)).toString
-    val version = tail.lastOption.map(_.getName.stripSuffix(".json").toLong)
-      .orElse(ckptV).get
-
-    // Data plane: adds resolve distributedly, last action per path wins.
-    val ckptAdds = ckptDF.map(
-      _.where(col("add").isNotNull).select(
-        col("add.path").as("path"),
-        col("add.partitionValues").as("partitionValues"),
-        col("add.size").as("size"),
-        col("add.modificationTime").as("modificationTime"),
-        col("add.stats").as("stats"),
-        col("add.deletionVector").as("deletionVector"),
-        col("add.baseRowId").as("baseRowId"),
-        col("add.defaultRowCommitVersion").as("defaultRowCommitVersion"),
-        lit(ckptV.get).as("version"),
-        lit(true).as("isAdd")))
-    val tailActs = tailDF.map(
-      _.where(col("add").isNotNull || col("remove").isNotNull).select(
-        coalesce(col("add.path"), col("remove.path")).as("path"),
-        col("add.partitionValues").as("partitionValues"),
-        col("add.size").as("size"),
-        col("add.modificationTime").as("modificationTime"),
-        col("add.stats").as("stats"),
-        col("add.deletionVector").as("deletionVector"),
-        col("add.baseRowId").as("baseRowId"),
-        col("add.defaultRowCommitVersion").as("defaultRowCommitVersion"),
-        col("version"),
-        col("add").isNotNull.as("isAdd")))
-    val all = (ckptAdds.toSeq ++ tailActs.toSeq).reduce(_.unionByName(_))
-    val live = all
-      .groupBy("path")
-      .agg(max_by(struct(col("partitionValues"), col("size"),
-        col("modificationTime"), col("stats"), col("deletionVector"),
-        col("baseRowId"), col("defaultRowCommitVersion"), col("isAdd")),
-        col("version")).as("w"))
-      .where(col("w.isAdd"))
-      .select(col("path"), col("w.partitionValues").as("partitionValues"),
-        col("w.size").as("size"),
-        col("w.modificationTime").as("modificationTime"),
-        col("w.stats").as("stats"),
-        col("w.deletionVector").as("deletionVector"),
-        col("w.baseRowId").as("baseRowId"),
-        col("w.defaultRowCommitVersion").as("defaultRowCommitVersion"))
-    // PROTOCOL GATE: refuse tables demanding reader capabilities beyond
-    // this engine's (v3 + deletionVectors). Silently mis-reading a table
-    // whose protocol promises semantics we don't implement is the one
-    // unforgivable failure mode of a log-replicated format. (The protocol
-    // rows ride the SAME metadata collects above — no extra Spark job.)
-    require(minReader <= 3,
-      s"unsupported Delta protocol: table requires reader version $minReader, " +
-        "this engine supports up to 3 (deletion vectors)")
-    // v3 reader features gate the SAME way (spec: a reader must refuse a
-    // table listing a feature it does not implement — this is exactly
-    // what protects a v2-checkpointed table from a reader that would
-    // otherwise replay past the manifest it cannot resolve)
-    val unknownReader = readerFeatures.toSet -- SupportedReaderFeatures
-    require(unknownReader.isEmpty,
-      s"unsupported Delta reader feature(s) ${unknownReader.toSeq.sorted.mkString(", ")}: " +
-        s"this engine implements ${SupportedReaderFeatures.toSeq.sorted.mkString(", ")}")
-    (MetaState(version, tableId, createdTime, schema.get, partCols, txns.toMap,
-      minReader, minWriter, readerFeatures, writerFeatures, tableConfig,
-      domains.toMap), live)
-  }
-
-  /** Live-set columns of [[resolve]] → driver [[AddEntry]]s — the
-    * scan-construction step (Spark's file scan wants its file list on the
-    * driver, the same collect delta-spark's file index does). Everything
-    * upstream of this stays distributed.
-    */
-  private def collectAdds(live: DataFrame): Seq[AddEntry] =
-    live.collect().toSeq.map { r =>
-      val dv = Option(r.getAs[Row]("deletionVector")).map(d =>
-        DvInfo(Option(d.getAs[String]("storageType")).getOrElse("p"),
-          d.getAs[String]("pathOrInlineDv"),
-          Option(d.getAs[java.lang.Integer]("offset")).map(_.intValue()),
-          d.getAs[Long]("sizeInBytes"), d.getAs[Long]("cardinality")))
-      AddEntry(r.getAs[String]("path"),
-        Option(r.getAs[Map[String, String]]("partitionValues")).getOrElse(Map.empty),
-        r.getAs[Long]("size"), r.getAs[Long]("modificationTime"),
-        r.getAs[String]("stats"), dv,
-        Option(r.getAs[java.lang.Long]("baseRowId")).map(_.longValue()),
-        Option(r.getAs[java.lang.Long]("defaultRowCommitVersion"))
-          .map(_.longValue()))
-    }.sortBy(_.path) // deterministic scan order regardless of agg partitioning
-
-  private def replay(spark: SparkSession, table: String, asOfVersion: Option[Long]): State = {
-    val (meta, live) = resolve(spark, table, asOfVersion)
-    State(meta.version, meta.id, meta.createdTime, meta.schema, meta.partitionColumns,
-      collectAdds(live), meta.txns, meta.minWriter, meta.configuration,
-      meta.domains)
+    val fold = new Fold
+    ckpt.foreach { case (v, manifest) =>
+      checkpointRows(spark, table, v, manifest)(fold.group) }
+    jsonActions(tail)(fold.json)
+    fold.snapshot(table,
+      tail.lastOption.map(_.getName.stripSuffix(".json").toLong).getOrElse(ckpt.get._1))
   }
 
   /** Metadata-only live-file inventory for format interop
@@ -3741,7 +3380,7 @@ object DeltaSink extends org.apache.spark.internal.Logging {
   private[sinks] def liveInventory(spark: SparkSession, table: String)
       : (StructType, Seq[String], Seq[(String, Map[String, String], Boolean)],
          Boolean) = {
-    val st = replay(spark, table, None)
+    val st = resolve(spark, table, None)
     (st.schema, st.partitionColumns,
       st.live.map(a => (a.path, a.partitionValues, a.dv.isDefined)),
       mappingEnabled(st.schema))
@@ -3751,48 +3390,19 @@ object DeltaSink extends org.apache.spark.internal.Logging {
     * included. The protection set the Iceberg-plane janitors honor on a
     * dual-format table: a Delta tombstone still inside vacuum's retention
     * window serves time travel and restore, so it is NOT an orphan and
-    * not reclaimable by the other plane. Metadata-scale (path strings).
+    * not reclaimable by the other plane. Read on the driver from every
+    * JSON commit and the pointed checkpoint, through the fold's decoders.
     */
   private[sinks] def allReferencedFiles(spark: SparkSession, table: String)
       : Set[String] = {
-    import org.apache.spark.sql.functions.col
-    val tail = logFiles(table)
-    val fromTail =
-      if (tail.isEmpty) Set.empty[String]
-      else actionsDF(spark, tail).where(col("add").isNotNull)
-        .select("add.path").distinct().collect().map(_.getString(0)).toSet
-    val fromCkpt = {
-      val f = lastCheckpointFile(table)
-      if (!Files.exists(f)) Set.empty[String]
-      else {
-        val node = mapper.readTree(Files.readString(f))
-        val v = node.get("version").asLong()
-        // v2 pointers name their manifest; adds live in the sidecars
-        val addsDF = Option(node.get("path")).map(_.asText()) match {
-          case Some(manifestName) =>
-            val manifest = spark.read.schema(V2ManifestReadSchema)
-              .parquet(logDir(table).resolve(manifestName).toString)
-            val sidecarPaths = manifest.where(col("sidecar").isNotNull)
-              .select("sidecar.path").collect().map(r =>
-                logDir(table).resolve("_sidecars").resolve(r.getString(0)).toString)
-            // a sidecar-less external manifest may carry its adds INLINE
-            // (r19 ADVICE): they are referenced files too — missing them
-            // here would classify live data as vacuum-able orphans
-            val inline = manifest.select(col("add"))
-            if (sidecarPaths.isEmpty) Some(inline)
-            else Some(inline.unionByName(spark.read
-              .schema(StructType(Seq(CheckpointSchema("add"))))
-              .parquet(sidecarPaths.toIndexedSeq: _*)
-              .select(col("add"))))
-          case None => Some(spark.read.schema(CheckpointSchema)
-            .parquet(checkpointFile(table, v).toString))
-        }
-        addsDF.map(_.where(col("add").isNotNull)
-          .select("add.path").distinct().collect().map(_.getString(0)).toSet)
-          .getOrElse(Set.empty)
-      }
+    val paths = Set.newBuilder[String]
+    jsonActions(logFiles(table))(n =>
+      Js.field(n, "add").foreach(a => paths += Js.txt(a, "path")))
+    lastCheckpoint(table).foreach { case (v, manifest) =>
+      checkpointRows(spark, table, v, manifest)(g =>
+        Gp.sub(g, "add").foreach(a => paths += Gp.str(a, "path")))
     }
-    fromTail ++ fromCkpt
+    paths.result()
   }
 
   /** WRITER-side protocol gate, symmetrical to resolve()'s reader gate:

@@ -25,8 +25,8 @@ import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWri
   * Reading is one function per file kind: [[readManifestList]] for a
   * manifest list and [[readManifest]] for a manifest, which returns every
   * field of every LIVE entry (status 2 DELETED entries are dropped there,
-  * once, for every read path). [[mergeManifests]] copies records verbatim
-  * and so reads raw records itself.
+  * once, for every read path). [[mergeManifests]] copies live records
+  * verbatim and so reads raw records itself, applying the same rule.
   */
 private[graft] object IcebergAvro {
 
@@ -345,7 +345,7 @@ private[graft] object IcebergAvro {
 
   /** Merges several manifests written under the SAME spec/schema into one
     * (the metadata-compaction half of Iceberg's rewrite_manifests): every
-    * entry is copied VERBATIM (partition tuple, stats, bounds — the
+    * live entry is copied VERBATIM (partition tuple, stats, bounds — the
     * writer schema and key metadata come from the first source), with
     * status flipped to 0 = EXISTING and its data sequence made EXPLICIT
     * (the entry's own if it already carries one, else the source
@@ -368,7 +368,9 @@ private[graft] object IcebergAvro {
     try sources.foreach { case (src, listSeq) =>
       val r = new DataFileReader[GenericRecord](src,
         new GenericDatumReader[GenericRecord]())
-      try r.iterator().asScala.foreach { e =>
+      // a DELETED entry (status 2) is not live (spec §Manifests, the rule
+      // readManifest applies): merging drops it instead of reviving it
+      try r.iterator().asScala.filter(_.get("status").asInstanceOf[Int] != 2).foreach { e =>
         val seq = Option(e.get("sequence_number"))
           .map(_.asInstanceOf[Long]).getOrElse(listSeq)
         e.put("status", 0) // EXISTING

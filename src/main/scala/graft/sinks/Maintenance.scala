@@ -107,17 +107,11 @@ object Maintenance {
       if (compactNeeded) DeltaSink.compact(spark, table, store = store): Unit
       (compactNeeded, ())
     }
-    // preserve the table's checkpoint FLAVOR: a v2-checkpointed table
-    // (pointer names its manifest) re-checkpoints as v2 — the janitor
-    // must never silently downgrade the layout an operator chose
+    // checkpoint keeps the table's checkpoint FLAVOR: a v2-checkpointed
+    // table re-checkpoints as v2 — the janitor must never silently
+    // downgrade the layout an operator chose
     timed(steps, "checkpoint") {
-      val v2 = {
-        val ptr = java.nio.file.Paths.get(table, "_delta_log", "_last_checkpoint")
-        java.nio.file.Files.exists(ptr) &&
-          java.nio.file.Files.readString(ptr).contains("\"path\"")
-      }
-      if (v2) DeltaSink.checkpointV2(spark, table, store): Unit
-      else DeltaSink.checkpoint(spark, table, store): Unit
+      DeltaSink.checkpoint(spark, table, store): Unit
       (true, ())
     }
     val vacuumed = timed(steps, "vacuum") {

@@ -2006,6 +2006,13 @@ class SinkSpec extends AnyFunSuite {
     assert(!stats.map(_.getAs[String]("path")).contains(gonePath))
     val (_, kept, total) = IcebergSink.planRangeFiles(spark, table, "id", 0.0, 100.0)
     assert(total == 1 && !kept.map(_._1).contains(gonePath))
+    // rewriteManifests merges live entries only: the DELETED one stays gone
+    IcebergSink.write(Seq((11L, 11.0)).toDF("id", "v"), table, IcebergSink.Append)
+    assert(IcebergSink.rewriteManifests(table) == ((2, 1)))
+    assert(IcebergSink.read(spark, table).count() == liveRows + 1)
+    val merged = IcebergSink.fileStats(spark, table).collect()
+    assert(merged.map(_.getAs[Long]("num_records")).sum == liveRows + 1)
+    assert(!merged.map(_.getAs[String]("path")).contains(gonePath))
   }
 
   test("Iceberg compact preserves the partition layout") {
@@ -4880,7 +4887,7 @@ class SinkSpec extends AnyFunSuite {
     assert(DeltaSink.read(spark, table).count() == 44)
   }
 
-  test("a v2 manifest that lists sidecars ignores its own inline adds, on both replay paths") {
+  test("a v2 manifest that lists sidecars ignores its own inline adds, with a 9 MiB tail too") {
     val s = spark
     import s.implicits._
     val table = tmp()
@@ -4909,10 +4916,9 @@ class SinkSpec extends AnyFunSuite {
       s"""{"version":$v,"path":"$name"}""")
     def liveNames(): Set[String] =
       DeltaSink.read(spark, table).inputFiles.map(f => new File(new java.net.URI(f)).getName).toSet
-    // a small checkpoint replays on the driver
     assert(liveNames() == sidecarPaths)
     assert(DeltaSink.read(spark, table).count() == 40)
-    // a JSON tail past the driver budget sends the replay distributed
+    // the same fold resolves a 9 MiB JSON tail over the checkpoint
     val out = Files.newOutputStream(Paths.get(table, "_delta_log", f"${v + 1}%020d.json"))
     try {
       out.write("""{"commitInfo":{"timestamp":0,"pad":"""".getBytes)
@@ -4921,5 +4927,90 @@ class SinkSpec extends AnyFunSuite {
     } finally out.close()
     assert(liveNames() == sidecarPaths)
     assert(DeltaSink.read(spark, table).count() == 40)
+  }
+
+  test("a v2 table whose pointer lost its manifest hint re-checkpoints as v2") {
+    val s = spark
+    import s.implicits._
+    val table = tmp()
+    DeltaSink.write((1L to 40L).map(i => (i, i.toDouble)).toDF("id", "v")
+      .repartition(4), table)
+    DeltaSink.checkpointV2(spark, table)
+    val log = Paths.get(table, "_delta_log")
+    val jackson = new com.fasterxml.jackson.databind.ObjectMapper()
+    val v = jackson.readTree(Files.readString(log.resolve("_last_checkpoint")))
+      .get("version").asLong()
+    // the spec locates a v2 checkpoint by its manifest's name; the
+    // pointer's `path` is only a hint an external writer may omit
+    Files.writeString(log.resolve("_last_checkpoint"), s"""{"version":$v}""")
+    DeltaSink.append(Seq((41L, 41.0)).toDF("id", "v"), table)
+    val v2 = DeltaSink.checkpoint(spark, table)
+    val ptr = jackson.readTree(Files.readString(log.resolve("_last_checkpoint")))
+    assert(ptr.get("version").asLong() == v2 && ptr.has("path"), ptr.toString)
+    assert(Files.isRegularFile(log.resolve(ptr.get("path").asText())))
+    assert(!Files.exists(log.resolve(f"$v2%020d.checkpoint.parquet")))
+    assert(DeltaSink.read(spark, table).count() == 41)
+  }
+
+  test("Iceberg janitors on a converted table read a hint-less v2 pointer's manifest") {
+    val s = spark
+    import s.implicits._
+    val table = tmp()
+    DeltaSink.write((1L to 40L).map(i => (i, i.toDouble)).toDF("id", "v")
+      .repartition(4), table)
+    DeltaSink.checkpointV2(spark, table)
+    val ptrFile = Paths.get(table, "_delta_log", "_last_checkpoint")
+    val v = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(Files.readString(ptrFile)).get("version").asLong()
+    Files.writeString(ptrFile, s"""{"version":$v}""")
+    IcebergSink.convertFromDelta(spark, table)
+    val deltaFiles = DeltaSink.read(spark, table).inputFiles
+      .map(f => new File(new java.net.URI(f))).toSeq
+    assert(deltaFiles.size == 4)
+    // age every parquet so only the referenced sets protect them
+    val old = System.currentTimeMillis() - 7L * 24 * 3600 * 1000
+    def walkP(d: File): Seq[File] = Option(d.listFiles()).toSeq.flatten.flatMap(f =>
+      if (f.isDirectory) walkP(f) else if (f.getName.endsWith(".parquet")) Seq(f) else Nil)
+    walkP(new File(table)).foreach(f => assert(f.setLastModified(old)))
+    assert(IcebergSink.removeOrphanFiles(spark, table,
+      olderThanMs = 24L * 3600 * 1000).isEmpty)
+    // an Iceberg compaction retires the converted files from the current
+    // snapshot; expiring the convert snapshot must leave them to Delta
+    IcebergSink.compact(spark, table)
+    IcebergSink.expireSnapshots(table, keepLast = 1)
+    assert(deltaFiles.forall(_.exists()))
+    assert(DeltaSink.read(spark, table).count() == 40)
+    assert(IcebergSink.read(spark, table).count() == 40)
+  }
+
+  test("a row-id frame built before a DV update reads the same rows after it commits") {
+    val s = spark
+    import s.implicits._
+    val rows = (1L to 40L).map(i => (i, s"n$i")).toDF("id", "name").coalesce(2)
+    // the frame the lineage queries collect while the update commits: its
+    // files and deletion vectors were fixed when it was built
+    def sameAfterUpdate(frame: org.apache.spark.sql.DataFrame, update: () => Unit,
+        fresh: () => org.apache.spark.sql.DataFrame): Unit = {
+      val before = frame.orderBy("id").collect().toSeq
+      update()
+      assert(frame.orderBy("id").collect().toSeq == before)
+      assert(fresh().orderBy("id").collect().toSeq != before, "the update must land")
+    }
+    val delta = tmp()
+    DeltaSink.write(rows, delta)
+    DeltaSink.enableRowTracking(spark, delta)
+    DeltaSink.deleteWhereDV(spark, delta, "id % 10 = 3")
+    sameAfterUpdate(DeltaSink.readWithRowIds(spark, delta),
+      () => DeltaSink.updateWhereDV(spark, delta, "id % 10 = 6",
+        Map("name" -> "concat(name, '!')")): Unit,
+      () => DeltaSink.readWithRowIds(spark, delta))
+    val iceberg = tmp() + "/tbl"
+    IcebergSink.write(rows, iceberg, IcebergSink.CreateExclusive)
+    IcebergSink.enableRowLineage(spark, iceberg)
+    IcebergSink.deleteWhereDV(spark, iceberg, "id % 10 = 3")
+    sameAfterUpdate(IcebergSink.readWithLineage(spark, iceberg),
+      () => IcebergSink.updateWhereDV(spark, iceberg, "id % 10 = 6",
+        Map("name" -> "concat(name, '!')")): Unit,
+      () => IcebergSink.readWithLineage(spark, iceberg))
   }
 }
