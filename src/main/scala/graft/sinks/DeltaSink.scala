@@ -2806,16 +2806,14 @@ object DeltaSink {
             col(physName(f)).as(f.name)) :+ col("_change_type"): _*)
           .withColumn("_commit_version", lit(v)))
       } else {
-        def pathsOf(key: String) = lines.flatMap(n => Option(n.get(key)))
+        // an add keeps its log entry whole: its partition values (the
+        // truth for files outside Hive-style dirs) and its DV (its insert
+        // images are the SURVIVORS, never the deleted rows)
+        def actionsOf(key: String) = lines.flatMap(n => Option(n.get(key)))
           .filter(n => Option(n.get("dataChange")).forall(_.asBoolean(true)))
-          .map { n =>
-            // honor a DV on the reconstructed add: its insert images are
-            // the SURVIVORS, never the deleted rows
-            AddEntry(n.get("path").asText(), Map.empty, 0L, 0L, null,
-              Js.field(n, "deletionVector").map(Js.dv))
-          }
-        val adds0 = pathsOf("add")
-        val removes0 = pathsOf("remove")
+          .map(Js.add)
+        val adds0 = actionsOf("add")
+        val removes0 = actionsOf("remove")
         // the predecessor state's descriptors feed two reconstructions: a
         // REMOVED file may have carried a DV at remove time (its delete
         // images are that DV's survivors), and a RE-ADDED path whose DV
@@ -2827,13 +2825,14 @@ object DeltaSink {
         // (removes, or an add with a descriptor) — a plain append never
         // pays the extra replay; a restore re-add WITHOUT a descriptor
         // stays at the documented file-granularity reconstruction
-        val prevDv: Map[String, Option[DvInfo]] =
+        val prev: Map[String, AddEntry] =
           if (v == 0 || (removes0.isEmpty && adds0.forall(_.dv.isEmpty))) Map.empty
-          else resolve(spark, table, Some(v - 1)).live
-            .map(a => a.path -> a.dv).toMap
-        val removes = removes0.map(r =>
-          r.copy(dv = prevDv.getOrElse(r.path, None)))
-        val (reAdds, newAdds) = adds0.partition(a => prevDv.contains(a.path))
+          else resolve(spark, table, Some(v - 1)).live.map(a => a.path -> a).toMap
+        // a removed file reads as the predecessor's entry (its partition
+        // values and its DV at remove time): remove actions need not carry
+        // either
+        val removes = removes0.map(r => prev.getOrElse(r.path, r.copy(dv = None)))
+        val (reAdds, newAdds) = adds0.partition(a => prev.contains(a.path))
         // per re-added file: rows masked by (new \ old) → delete images,
         // rows unmasked by (old \ new) → insert images; the probe is the
         // same packed-bitmap expression the merged read plants, here
@@ -2852,7 +2851,7 @@ object DeltaSink {
           val r = a.clone().asInstanceOf[org.roaringbitmap.longlong.Roaring64Bitmap]
           r.andNot(b); r
         }
-        val dvPairs = reAdds.map(a => (a, bitmapOf(a.dv), bitmapOf(prevDv(a.path))))
+        val dvPairs = reAdds.map(a => (a, bitmapOf(a.dv), bitmapOf(prev(a.path).dv)))
         def diffMapOf(pick: (org.roaringbitmap.longlong.Roaring64Bitmap,
             org.roaringbitmap.longlong.Roaring64Bitmap) =>
             org.roaringbitmap.longlong.Roaring64Bitmap): Map[String, Array[Byte]] =

@@ -151,7 +151,7 @@ object IcebergSink {
     */
   private def curFieldsOf(meta: com.fasterxml.jackson.databind.JsonNode,
       schema: StructType): Seq[IField] =
-    scala.util.Try(ifieldsOf(mapper.readTree(currentSchemaJson(meta)._2)))
+    scala.util.Try(ifieldsOf(currentSchema(meta)))
       .toOption
       .filter(fs => fs.map(_.name) == schema.fieldNames.toSeq)
       .getOrElse(schema.fields.zipWithIndex.map { case (f, i) =>
@@ -422,8 +422,10 @@ object IcebergSink {
     txn(store, Txn.Retries)(t => t.attempt(_ => writeAttempt(t, df, table, mode,
       partitionBy, summaryProps, evolveSchema, operationOverride, extraPhysicalCols)))
 
-  /** One attempt of [[write]]: stages the data files, manifest and list,
-    * then claims the next metadata version.
+  /** One attempt of [[write]]: gates the frame against the stored schema,
+    * resolves the declared schema's id and field ids and the partition
+    * spec's id, stages the data files, then hands one [[Commit]] to
+    * [[commitSnapshot]] over the table head (or a fresh-table skeleton).
     */
   private def writeAttempt(t: Txn, df0: DataFrame, table: String, mode: WriteMode,
       partitionBy: Seq[String], summaryProps: Map[String, String],
@@ -445,18 +447,19 @@ object IcebergSink {
     // Appends therefore align to the stored names positionally; an
     // overwrite re-declares the schema and keeps the frame's own names.
     val storedSchema: Option[StructType] = previous.map(sparkSchemaOf)
+    // the stored schema's Iceberg field nodes (none for a new table)
+    val storedFields: Seq[com.fasterxml.jackson.databind.JsonNode] =
+      previous.toSeq.flatMap(currentSchema(_).get("fields").elements().asScala)
     // v3 WRITE-DEFAULTS (spec §Default values): an append whose frame
     // omits TRAILING stored columns gets each missing one filled with its
     // write-default — the spec's writer contract for defaulted columns
     // added after the producer was built. Columns without a default still
     // gate-fail (nothing is silently null-filled).
-    val df0b: DataFrame = (storedSchema, previous) match {
-      case (Some(st), Some(prev)) if mode == Append &&
+    val df0b: DataFrame = storedSchema match {
+      case Some(st) if mode == Append &&
           df0.columns.length < st.fieldNames.length =>
-        val iceFields = mapper.readTree(currentSchemaJson(prev)._2)
-          .get("fields").elements().asScala.toSeq
         val missing = st.fields.drop(df0.columns.length).toSeq
-        val fills = missing.map(f => f -> iceFields
+        val fills = missing.map(f => f -> storedFields
           .find(n => n.get("name").asText() == f.name)
           .flatMap(n => Option(n.get("write-default")).map(jsonDefault)))
         if (fills.forall(_._2.isDefined))
@@ -518,13 +521,9 @@ object IcebergSink {
     // adopts its spec when none is requested, and refuses a CONFLICTING
     // spec — silently committing files of a different layout would corrupt
     // partition pruning for every reader.
-    val previousSpecCols: Seq[String] = previous.toSeq.flatMap { prev =>
-      prev.get("partition-specs").elements().asScala
-        .find(s => s.get("spec-id").asInt() == prev.get("default-spec-id").asInt())
-        .toSeq.flatMap(_.get("fields").elements().asScala.map(f =>
-          rawOfSpecField(f.get("name").asText(),
-            Option(f.get("transform")).map(_.asText()).getOrElse("identity"))))
-    }
+    val previousSpecCols: Seq[String] = previous.toSeq.flatMap(p =>
+      storedSpecsOf(p).find(_._1 == p.get("default-spec-id").asInt()).toSeq
+        .flatMap(_._2.map(f => rawOfSpecField(f.name, f.transform))))
     // No-request adoption applies to Append AND Overwrite (a routine
     // --overwrite must not silently de-partition the table); an EXPLICIT
     // different spec is a re-layout, legal only under Overwrite (which
@@ -657,26 +656,9 @@ object IcebergSink {
         }
       }
 
-    val snapshotId = math.abs(new java.util.Random().nextLong())
-    val lastSeq = previous.map(_.get("last-sequence-number").asLong()).getOrElse(0L)
-    val seq = lastSeq + 1
-
-    Files.createDirectories(metaDir(table))
-
-    // Iceberg-shaped field list: shared between the metadata JSON and the
-    // manifest's key metadata. ANY write whose declared schema differs
-    // from the stored one (an evolving append, or an overwrite
-    // re-declaring nullability/names) mints the NEXT schema-id and
-    // retains the previous schemas in the metadata (spec §schemas) —
-    // schema-ids are immutable-per-id, never edited in place. A
-    // non-evolve append reuses the stored schema verbatim, so it keeps
-    // the previous id by construction (or 0 for a fresh table).
-    val prevSchemaId = previous.map(_.get("current-schema-id").asInt()).getOrElse(0)
-    val schemaChanged = storedSchema.exists(_.json != declaredSchema.json)
-    val schemaId = if (schemaChanged) prevSchemaId + 1 else prevSchemaId
     // Field ids are STABLE, never positional, once the table has evolved:
-    //  - unchanged schema → the stored Iceberg schema node is reused
-    //    VERBATIM (ids untouched, content never re-minted under its id);
+    //  - unchanged schema → the stored Iceberg schema stays as it is (ids
+    //    untouched, content never re-minted under its id);
     //  - evolving append → stored fields verbatim + the added tail minted
     //    from last-column-id upward (spec id-assignment rule);
     //  - overwrite re-declaring the schema → ids assigned by NAME
@@ -684,60 +666,54 @@ object IcebergSink {
     //    continue from last-column-id) so pre-overwrite snapshots keep
     //    resolving their files by id;
     //  - fresh table → ordinal 1..n.
-    val storedFieldsNode: Option[Seq[(Int, String)]] = previous.map { prev =>
-      ifieldsOf(mapper.readTree(currentSchemaJson(prev)._2)).map(f => (f.id, f.name))
-    }
-    val prevLastColumnId = previous
-      .map(p => Option(p.get("last-column-id")).map(_.asInt())
-        .getOrElse(storedFieldsNode.get.map(_._1).max))
-      .getOrElse(0)
-    val declaredIds: Seq[Int] = (storedFieldsNode, schemaChanged) match {
-      case (Some(st), false) => st.map(_._1)
-      case (Some(st), true) if evolveSchema =>
+    val schemaChanged = storedSchema.exists(_.json != declaredSchema.json)
+    val storedIds: Seq[(String, Int)] =
+      storedFields.map(f => f.get("name").asText() -> f.get("id").asInt())
+    val prevLastColumnId = previous.fold(0)(p =>
+      Option(p.get("last-column-id")).map(_.asInt()).getOrElse(storedIds.map(_._2).max))
+    val declaredIds: Seq[Int] = (previous, schemaChanged) match {
+      case (Some(_), false) => storedIds.map(_._2)
+      case (Some(_), true) if evolveSchema =>
         var next = prevLastColumnId
-        st.map(_._1) ++ declaredSchema.fields.drop(st.length).map { _ =>
+        storedIds.map(_._2) ++ declaredSchema.fields.drop(storedIds.length).map { _ =>
           next += 1; next
         }
-      case (Some(st), true) =>
-        val byName = st.toMap.map(_.swap) // name -> id (names unique)
+      case (Some(_), true) =>
+        val byName = storedIds.toMap
         var next = prevLastColumnId
         declaredSchema.fields.map(f => byName.getOrElse(f.name, { next += 1; next })).toSeq
       case _ => declaredSchema.fields.indices.map(_ + 1)
     }
-    val schemaNode = mapper.createObjectNode()
-    schemaNode.put("type", "struct").put("schema-id", schemaId)
-    val fields = schemaNode.putArray("fields")
-    // field attributes the Spark schema cannot EXPRESS (the v3
-    // initial-default / write-default pair) must survive every rebuild of
-    // the schema node, or one plain append would silently strip a
-    // defaulted column's value for every pre-evolution row — carry them
-    // from the stored field with the same id when name+type still agree
-    val storedFieldNodes: Map[Int, com.fasterxml.jackson.databind.JsonNode] =
-      previous.map(p => mapper.readTree(currentSchemaJson(p)._2)
-        .get("fields").elements().asScala
-        .map(f => f.get("id").asInt() -> f).toMap).getOrElse(Map.empty)
-    declaredSchema.fields.zip(declaredIds).foreach { case (f, id) =>
-      val o = fields.addObject()
-        .put("id", id)
-        .put("name", f.name)
-        .put("required", !f.nullable)
-        .put("type", icebergType(f.dataType))
-      storedFieldNodes.get(id).foreach { sn =>
-        if (sn.get("name").asText() == f.name &&
-            sn.get("type").asText() == icebergType(f.dataType)) {
-          Seq("initial-default", "write-default").foreach(k =>
-            Option(sn.get(k)).foreach(v =>
-              o.set[com.fasterxml.jackson.databind.JsonNode](k, v.deepCopy())
-                : Unit))
-        }
+    val fieldIds = declaredSchema.fieldNames.zip(declaredIds).toMap
+    // ANY write whose declared schema differs from the stored one (an
+    // evolving append, or an overwrite re-declaring nullability/names)
+    // mints the NEXT schema-id; the previous schemas stay in the metadata
+    // (spec §schemas) — schema-ids are immutable-per-id, never edited in
+    // place. Field attributes the Spark schema cannot EXPRESS (the v3
+    // initial-default / write-default pair) carry over from the stored
+    // field with the same id when name+type still agree, or one overwrite
+    // would silently strip a defaulted column's value for every
+    // pre-evolution row.
+    val newSchema: Option[TableSchema] =
+      if (previous.isDefined && !schemaChanged) None
+      else {
+        val storedById = storedFields.map(f => f.get("id").asInt() -> f).toMap
+        Some(TableSchema(previous.fold(0)(_.get("current-schema-id").asInt() + 1),
+          declaredSchema.fields.toSeq.zip(declaredIds).map { case (f, id) =>
+            val n = fieldNode(id, f)
+            storedById.get(id).filter(sn => sn.get("name").asText() == f.name &&
+                sn.get("type").asText() == n.get("type").asText())
+              .foreach(sn => Seq("initial-default", "write-default").foreach(k =>
+                Option(sn.get(k)).foreach(v =>
+                  n.set[com.fasterxml.jackson.databind.JsonNode](k, v.deepCopy()): Unit)))
+            n
+          }, declaredSchema))
       }
-    }
 
-    // Avro manifest (V2 manifest_entry records, real per-file row counts +
+    // Data files with their manifest stats (real per-file row counts +
     // per-column value/null counts and bounds from the same footer open),
     // read by each write task from the file it wrote, before publishing
     // it; manifests always reference the file's TABLE path.
-    val fieldIds = declaredSchema.fieldNames.zip(declaredIds).toMap
     val infos0 = TaskWrite(t.store, clustered, dataDir,
         partSpecs.map(_.derivedName)) { (f, conf) =>
       Some(footerStats(f, conf, fieldIds))
@@ -750,18 +726,8 @@ object IcebergSink {
     // ADDED data file takes its first_row_id from the table clock —
     // except a materialized-`_row_id` rewrite, whose files carry the ids
     // themselves (manifest assignment stays null there by design)
-    val prevNextRowId: Option[Long] =
-      previous.filter(_.has("next-row-id")).map(_.get("next-row-id").asLong())
-    val (infos, assignedRows): (Seq[IcebergAvro.DataFileInfo], Long) =
-      prevNextRowId match {
-        case Some(base) if !extraPhysicalCols.contains("_row_id") =>
-          var next = base
-          val withIds = infos0.map { i =>
-            val out = i.copy(firstRowId = Some(next)); next += i.recordCount; out
-          }
-          (withIds, next - base)
-        case _ => (infos0, 0L)
-      }
+    val infos = previous.filterNot(_ => extraPhysicalCols.contains("_row_id"))
+      .fold(infos0)(withFirstRowIds(_, infos0))
     // partition spec (Iceberg spec §partitioning): field-ids from 1000,
     // source-id = the schema field id of the SOURCE column (for a hidden
     // day() transform that is the timestamp column, not the derived name).
@@ -779,140 +745,31 @@ object IcebergSink {
     val reqSpecKey = partSpecs.zip(partFields).map { case (ps, pf) =>
       (fieldIds(ps.source), ps.transform, pf.name)
     }
-    val (specId, partFieldsFinal, _, _) = resolveSpecIds(prevSpecs,
+    val spec = resolveSpecIds(prevSpecs,
       previous.map(_.path("last-partition-id").asInt(999)).getOrElse(999),
       reqSpecKey, partFields)
-    val specFieldsJson = partFieldsFinal.zip(partSpecs).map { case (pf, ps) =>
-      s"""{"name":"${pf.name}","transform":"${ps.transform}","source-id":${fieldIds(ps.source)},"field-id":${pf.fieldId}}"""
-    }.mkString(",")
-    val specJson = s"""{"spec-id":$specId,"fields":[$specFieldsJson]}"""
-    val (manifestPath, manifestLen) =
-      writeAvroArtifact(table, t, s"manifest-${java.util.UUID.randomUUID()}.avro")(f =>
-        IcebergAvro.writeManifest(f, infos,
-          snapshotId, schemaNode.toString, specJson, partFieldsFinal,
-          specId = specId))
-
-    // Manifest list: append carries the previous snapshot's manifest_file
-    // rows forward verbatim; create/overwrite start fresh.
-    val carried = (mode, previous) match {
-      case (Append, Some(prev)) =>
-        manifestListOf(prev)
-          .map(p => IcebergAvro.readManifestList(new File(requireAvro(abs(table, p)))))
-          .getOrElse(Nil)
-      case _ => Nil
-    }
-    val newRow = IcebergAvro.manifestRow(manifestPath.toFile.getAbsolutePath,
-      manifestLen, seq, snapshotId, infos.size, infos.map(_.recordCount).sum,
-      specId = specId)
-    val (listPath, _) =
-      writeAvroArtifact(table, t, s"manifest-list-${java.util.UUID.randomUUID()}.avro") { f =>
-        IcebergAvro.writeManifestList(f, carried :+ newRow, snapshotId, seq); 0L
-      }
-
-    // New table metadata = previous + new snapshot + main branch ref.
-    val newVersion = prevHead.map(_.version + 1).getOrElse(0L)
-    val meta = mapper.createObjectNode()
-    // format-version RATCHETS, never resets: a plain append to a table a
-    // DV commit already ratcheted to v3 must keep claiming v3 — an
-    // external reader seeing "format-version":2 beside live deletion
-    // vectors would reject (or worse, mis-read) the table (r16). A
-    // VARIANT column is a V3 type (spec §Variant), so a schema carrying
-    // one claims v3 from creation — pre-v3 readers must refuse rather
-    // than choke on the unknown type string.
+    // format-version RATCHETS, never resets (the encoder keeps the
+    // table's own when higher). A VARIANT column is a V3 type (spec
+    // §Variant), so a schema carrying one claims v3 from creation —
+    // pre-v3 readers must refuse rather than choke on the unknown type.
     val needsV3 = declaredSchema.fields.exists(f =>
       f.dataType.isInstanceOf[org.apache.spark.sql.types.VariantType])
-    meta.put("format-version",
-      math.max(if (needsV3) 3 else 2,
-        previous.map(p => p.get("format-version").asInt()).getOrElse(2)))
-      .put("table-uuid",
-        previous.map(_.get("table-uuid").asText())
-          .getOrElse(java.util.UUID.randomUUID().toString))
-      .put("location", table)
-      .put("last-sequence-number", seq)
-      .put("last-updated-ms", System.currentTimeMillis())
-      .put("last-column-id", math.max(prevLastColumnId,
-        if (declaredIds.isEmpty) 0 else declaredIds.max))
-    // EVERY write over an existing table carries the previous schemas
-    // forward (minus the one this write re-emits): retained snapshots
-    // keep referencing their original schema-ids, and dropping a schema
-    // from the array would dangle those references for any reader that
-    // resolves a snapshot's schema by id (spec §schemas)
-    val schemasArr = meta.putArray("schemas")
-    previous.foreach(
-      _.get("schemas").elements().asScala
-        .filter(_.get("schema-id").asInt() != schemaId)
-        .foreach(n => schemasArr.add(n.deepCopy[ObjectNode]())))
-    schemasArr.add(schemaNode)
-    meta.put("current-schema-id", schemaId)
-    // EVERY spec ever written is carried forward (spec §partition-specs):
-    // retained snapshots' manifests reference their original spec-ids, and
-    // dropping a spec would dangle them for any id-resolving reader
-    val specsArr = meta.putArray("partition-specs")
-    previous.foreach(
-      _.get("partition-specs").elements().asScala
-        .filter(_.get("spec-id").asInt() != specId)
-        .foreach(n => specsArr.add(n.deepCopy[ObjectNode]())))
-    val specNode = specsArr.addObject()
-    specNode.put("spec-id", specId)
-    val specFields = specNode.putArray("fields")
-    partFieldsFinal.zip(partSpecs).foreach { case (pf, ps) =>
-      specFields.addObject()
-        .put("name", pf.name)
-        .put("transform", ps.transform)
-        .put("source-id", fieldIds(ps.source))
-        .put("field-id", pf.fieldId)
-    }
-    meta.put("default-spec-id", specId)
-    meta.put("last-partition-id", math.max(
-      previous.map(_.path("last-partition-id").asInt(999)).getOrElse(999),
-      partFieldsFinal.map(_.fieldId).foldLeft(999)(math.max)))
-    meta.putArray("sort-orders").addObject().put("order-id", 0).putArray("fields")
-    meta.put("default-sort-order-id", 0)
-    meta.putObject("properties").put("graft.spark-schema", declaredSchema.json)
-    // the row-lineage clock survives every rebuild of the metadata tree
-    prevNextRowId.foreach(base =>
-      meta.put("next-row-id", base + assignedRows): Unit)
-    val snapshots = meta.putArray("snapshots")
-    previous.foreach { prev =>
-      prev.get("snapshots").elements().asScala.foreach(s =>
-        snapshots.add(s.deepCopy[ObjectNode]()))
-    }
-    val snapNode = snapshots.addObject()
-      .put("snapshot-id", snapshotId)
-      .put("sequence-number", seq)
-      .put("timestamp-ms", System.currentTimeMillis())
-      .put("manifest-list", s"metadata/${listPath.getFileName}")
-      .put("schema-id", schemaId)
-    prevNextRowId.foreach(base => snapNode.put("first-row-id", base): Unit)
-    val summary = snapNode.putObject("summary")
-    // spec §snapshots: the summary must carry the snapshot's TRUE
-    // operation — an Overwrite of existing data is "overwrite" (a
-    // sequence-scoped consumer must not mistake the rewritten rows for
-    // appends), a rewrite that changes no logical rows (compact) stamps
-    // "replace" via the override, and a first/append commit is "append"
-    summary.put("operation", operationOverride.getOrElse(
-      if (mode == Overwrite && previous.isDefined) "overwrite" else "append"))
-    // caller-stamped summary properties (e.g. the streaming txn watermark
-    // graft.txn-app-id / graft.txn-batch-id — Iceberg's standard place for
-    // engine bookkeeping is the snapshot summary map)
-    summaryProps.foreach { case (k, v) => summary.put(k, v) }
-    meta.put("current-snapshot-id", snapshotId)
-    // carry every NAMED ref forward (tags/branches from [[createRef]] —
-    // a commit repoints only main; clobbering the others would silently
-    // unpin their snapshots from expiry)
-    val refsNode0 = meta.putObject("refs")
-    previous.filter(p => p.has("refs") && p.get("refs").isObject)
-      .foreach(_.get("refs").properties().asScala
-        .filter(_.getKey != "main")
-        .foreach { e =>
-          refsNode0.set[com.fasterxml.jackson.databind.JsonNode](
-            e.getKey, e.getValue.deepCopy[com.fasterxml.jackson.databind.JsonNode]())
-          ()
-        })
-    refsNode0.putObject("main")
-      .put("snapshot-id", snapshotId).put("type", "branch")
-
-    commitMetadataVersion(table, t, newVersion - 1, meta)
+    commitSnapshot(t, table, prevHead.getOrElse(freshHead(table)), Commit(
+      // spec §snapshots: the summary must carry the snapshot's TRUE
+      // operation — an Overwrite of existing data is "overwrite" (a
+      // sequence-scoped consumer must not mistake the rewritten rows for
+      // appends), a rewrite that changes no logical rows (compact) stamps
+      // "replace" via the override, and a first/append commit is "append"
+      operationOverride.getOrElse(
+        if (mode == Overwrite && previous.isDefined) "overwrite" else "append"),
+      Seq(AddManifest(0, infos, spec)),
+      // an append carries the previous snapshot's manifests forward;
+      // create/overwrite start fresh
+      carried = if (mode == Append) None else Some(Nil),
+      schema = newSchema,
+      spec = Some(spec).filter(s => previous.forall(_.get("default-spec-id").asInt() != s.id)),
+      formatVersion = if (needsV3) 3 else 2,
+      summary = summaryProps)): Unit
   }
 
   /** ADD-COLUMN schema evolution — the opt-in extension verb ([[write]]'s
@@ -978,9 +835,7 @@ object IcebergSink {
         Option(meta.get("last-column-id")).map(_.asInt()).getOrElse(0),
         pairs.map(_._1.get("id").asInt()).max) + 1
       val dt = sparkTypeOfIceberg(icebergTypeName)
-      val n = mapper.createObjectNode()
-      n.put("id", nextId).put("name", column)
-        .put("required", false).put("type", icebergTypeName)
+      val n = fieldNode(nextId, StructField(column, dt)).put("type", icebergTypeName)
       default.foreach { d =>
         def put(key: String): Unit = d match {
           case s: String => n.put(key, s): Unit
@@ -1059,31 +914,32 @@ object IcebergSink {
     * (source, transform, name) sequence reuses that spec-id and field-ids
     * VERBATIM; otherwise the next spec-id is minted, with field-ids for
     * (source, transform) pairs seen in ANY spec reused and genuinely new
-    * ones continuing past `lastPartitionId`. Returns (specId, fields with
-    * final ids, new last-partition-id, isNewSpec).
+    * ones continuing past `lastPartitionId`. Returns the spec with its
+    * final ids; `reqKey` holds each field's (source id, transform, name).
     */
   private def resolveSpecIds(
       existing: Seq[(Int, Seq[StoredSpecField])], lastPartitionId: Int,
       reqKey: Seq[(Int, String, String)],
-      partFields: Seq[IcebergAvro.PartitionField])
-      : (Int, Seq[IcebergAvro.PartitionField], Int, Boolean) =
-    existing.find(_._2.map(f => (f.sourceId, f.transform, f.name)) == reqKey) match {
-      case Some((id, flds)) =>
-        (id, partFields.zip(flds).map { case (pf, sf) =>
-          pf.copy(fieldId = sf.fieldId) }, lastPartitionId, false)
-      case None if existing.nonEmpty =>
-        val seenPairs: Map[(Int, String), Int] =
-          existing.flatMap(_._2.map(f => (f.sourceId, f.transform) -> f.fieldId)).toMap
-        var nextPid = lastPartitionId
-        val fin = reqKey.zip(partFields).map { case ((srcId, tf, _), pf) =>
-          seenPairs.get((srcId, tf)) match {
-            case Some(fid) => pf.copy(fieldId = fid)
-            case None => nextPid += 1; pf.copy(fieldId = nextPid)
+      partFields: Seq[IcebergAvro.PartitionField]): Spec = {
+    val (id, fields) =
+      existing.find(_._2.map(f => (f.sourceId, f.transform, f.name)) == reqKey) match {
+        case Some((id, flds)) =>
+          (id, partFields.zip(flds).map { case (pf, sf) => pf.copy(fieldId = sf.fieldId) })
+        case None if existing.nonEmpty =>
+          val seenPairs: Map[(Int, String), Int] =
+            existing.flatMap(_._2.map(f => (f.sourceId, f.transform) -> f.fieldId)).toMap
+          var nextPid = lastPartitionId
+          val fin = reqKey.zip(partFields).map { case ((srcId, tf, _), pf) =>
+            seenPairs.get((srcId, tf)) match {
+              case Some(fid) => pf.copy(fieldId = fid)
+              case None => nextPid += 1; pf.copy(fieldId = nextPid)
+            }
           }
-        }
-        (existing.map(_._1).max + 1, fin, nextPid, true)
-      case None => (0, partFields, lastPartitionId, partFields.nonEmpty)
-    }
+          (existing.map(_._1).max + 1, fin)
+        case None => (0, partFields)
+      }
+    Spec(id, fields.zip(reqKey).map { case (pf, (srcId, tf, _)) => SpecField(pf, tf, srcId) })
+  }
 
   /** PARTITION EVOLUTION — METADATA-ONLY (Iceberg spec
     * §partition-evolution): re-layouts the table's FUTURE writes without
@@ -1110,44 +966,27 @@ object IcebergSink {
     val specs = partitionBy.map(parsePartSpec)
     val partFields = partitionFieldsOf(schema, specs) // validates source/transform types
     val idByName: Map[String, Int] =
-      ifieldsOf(mapper.readTree(currentSchemaJson(meta)._2))
+      ifieldsOf(currentSchema(meta))
         .map(f => f.name -> f.id).toMap
     val existing = storedSpecsOf(meta)
     val reqKey = specs.zip(partFields).map { case (ps, pf) =>
       (idByName(ps.source), ps.transform, pf.name)
     }
-    val newMeta = meta.deepCopy[ObjectNode]()
-    val (chosenId, withIds, newLastPid, isNew) = resolveSpecIds(existing,
+    val spec = resolveSpecIds(existing,
       meta.path("last-partition-id").asInt(999), reqKey, partFields)
-    if (isNew) {
-      val specNode = newMeta.withArray[com.fasterxml.jackson.databind.node.ArrayNode](
-        "partition-specs").addObject()
-      specNode.put("spec-id", chosenId)
-      val fieldsArr = specNode.putArray("fields")
-      specs.zip(withIds).foreach { case (ps, pf) =>
-        fieldsArr.addObject()
-          .put("name", pf.name)
-          .put("transform", ps.transform)
-          .put("source-id", idByName(ps.source))
-          .put("field-id", pf.fieldId)
-        ()
-      }
-      newMeta.put("last-partition-id", newLastPid)
-    }
-    if (chosenId == meta.get("default-spec-id").asInt()) return chosenId // no-op
-    newMeta.put("default-spec-id", chosenId)
-    newMeta.put("last-updated-ms", System.currentTimeMillis())
+    if (spec.id == meta.get("default-spec-id").asInt()) return spec.id // no-op
+    val newMeta = meta.deepCopy[ObjectNode]()
+    putSpec(newMeta, spec)
     commitMetadata(table, store, hint, newMeta)
-    chosenId
+    spec.id
   }
 
   /** Shared metadata-only evolution commit: `op` transforms the parallel
     * (iceberg field node, spark field) pairs — ids are carried by the
-    * nodes and NEVER reassigned here. Mints the next schema-id, retains
-    * every previous schema (spec §schemas: immutable per id), rewrites
-    * `graft.spark-schema` in step, and claims version hint+1 under the
-    * same OCC protocol as writes. No snapshot is added — there is no data
-    * change to snapshot; last-column-id is untouched (drop retires ids).
+    * nodes and NEVER reassigned here. Mints the next schema-id and
+    * writes it through [[putSchema]], the schema writer data commits use
+    * too, then claims version hint+1 under the same OCC protocol as
+    * writes. No snapshot is added — there is no data change to snapshot.
     */
   private def commitEvolvedSchema(table: String, store: CommitStore)(
       op: (com.fasterxml.jackson.databind.JsonNode,
@@ -1156,35 +995,16 @@ object IcebergSink {
       : Unit = {
     val Head(hint, meta) = head(table)
     val sparkSchema = sparkSchemaOf(meta)
-    val (curId, curJson) = currentSchemaJson(meta)
-    val curNode = mapper.readTree(curJson)
-    val pairs = curNode.get("fields").elements().asScala.toSeq
+    val cur = currentSchema(meta)
+    val pairs = cur.get("fields").elements().asScala.toSeq
       .map(_.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]())
       .zip(sparkSchema.fields.toSeq)
     require(pairs.map(_._1.get("name").asText()) == pairs.map(_._2.name),
       "corrupt metadata: iceberg schema and spark schema disagree")
     val evolved = op(meta, pairs)
-    val newId = curId + 1
-    val schemaNode = mapper.createObjectNode()
-    schemaNode.put("type", "struct").put("schema-id", newId)
-    val fieldsArr = schemaNode.putArray("fields")
-    evolved.foreach { case (n, _) => fieldsArr.add(n): Unit }
-    val newSpark = StructType(evolved.map(_._2))
     val newMeta = meta.deepCopy[ObjectNode]()
-    newMeta.put("current-schema-id", newId)
-    newMeta.put("last-updated-ms", System.currentTimeMillis())
-    // an ADD-column evolution mints ids past last-column-id (spec rule)
-    newMeta.put("last-column-id", math.max(
-      Option(meta.get("last-column-id")).map(_.asInt()).getOrElse(0),
-      evolved.map(_._1.get("id").asInt()).foldLeft(0)(math.max)))
-    val keptSchemas = newMeta.get("schemas").elements().asScala
-      .filter(_.get("schema-id").asInt() != newId)
-      .map(_.deepCopy[com.fasterxml.jackson.databind.JsonNode]()).toSeq
-    val rebuilt = newMeta.putArray("schemas")
-    keptSchemas.foreach(rebuilt.add)
-    rebuilt.add(schemaNode)
-    newMeta.get("properties").asInstanceOf[ObjectNode]
-      .put("graft.spark-schema", newSpark.json)
+    putSchema(newMeta, TableSchema(meta.get("current-schema-id").asInt() + 1,
+      evolved.map(_._1), StructType(evolved.map(_._2))))
     commitMetadata(table, store, hint, newMeta)
   }
 
@@ -2127,8 +1947,8 @@ object IcebergSink {
   def rewriteManifests(table: String,
       store: CommitStore = CommitStore.Local): (Int, Int) =
     txn(store, Txn.Retries)(t => t.attempt { _ =>
-      val Head(hint, meta) = head(table)
-      val list = manifestListOf(meta).getOrElse(return (0, 0))
+      val h = head(table)
+      val list = manifestListOf(h.meta).getOrElse(return (0, 0))
       val rows = IcebergAvro.readManifestList(
         new File(requireAvro(abs(table, list))))
       val (dataRows, deleteRows) =
@@ -2141,28 +1961,18 @@ object IcebergSink {
           m.getOrElse("schema", ""))
       }
       if (groups.size == dataRows.size) return (dataRows.size, dataRows.size)
-      val snapshotId = math.abs(new java.util.Random().nextLong())
-      val seq = meta.get("last-sequence-number").asLong() + 1
-      val mergedRows = groups.toSeq
+      val merged = groups.toSeq
         .sortBy(_._2.map(_.get("sequence_number").asInstanceOf[Long]).min)
         .map { case ((specId, _, _), grp) =>
-          val sources = grp.map(r => (
+          MergeManifests(specId.toInt, grp.map(r => (
             new File(requireAvro(abs(table, r.get("manifest_path").toString))),
-            r.get("sequence_number").asInstanceOf[Long]))
-          var merged: (Long, Int, Long, Long) = null
-          val (path, len) = writeAvroArtifact(table, t,
-            s"manifest-${java.util.UUID.randomUUID()}.avro") { f =>
-            merged = IcebergAvro.mergeManifests(f, sources); merged._1
-          }
-          IcebergAvro.manifestRowExisting(path.toFile.getAbsolutePath, len,
-            seq, merged._4, snapshotId, merged._2, merged._3, specId.toInt)
+            r.get("sequence_number").asInstanceOf[Long])))
         }
-      commitSnapshot(table, t, meta, hint, snapshotId, seq,
-        currentSchemaJson(meta)._1, mergedRows, "replace",
-        Map("manifests-replaced" -> dataRows.size.toString,
-          "manifests-created" -> mergedRows.size.toString),
-        carriedOverride = Some(deleteRows))
-      (dataRows.size, mergedRows.size)
+      commitSnapshot(t, table, h, Commit("replace", merged,
+        carried = Some(deleteRows),
+        summary = Map("manifests-replaced" -> dataRows.size.toString,
+          "manifests-created" -> merged.size.toString)))
+      (dataRows.size, merged.size)
     })
 
   /** CONVERT a Delta table to Iceberg IN PLACE — METADATA-ONLY (the
@@ -2224,11 +2034,9 @@ object IcebergSink {
     require(schema.fields.map(f => (f.name, f.dataType)).toSeq ==
       stored.fields.map(f => (f.name, f.dataType)).toSeq,
       "Delta schema diverged from the Iceberg view — re-declare explicitly")
-    val specs = storedSpecsOf(meta)
-    val defaultSpec = specs
-      .find(_._1 == meta.get("default-spec-id").asInt()).map(_._2).getOrElse(Nil)
-    require(defaultSpec.map(_.name) == partCols &&
-      defaultSpec.forall(_.transform == "identity"),
+    val spec = defaultSpec(meta, schema)
+    require(spec.fields.map(_.field.name) == partCols &&
+      spec.fields.forall(_.transform == "identity"),
       "Delta partition layout diverged from the Iceberg spec")
     // no-op when the planes already agree (path-set equality); files the
     // Iceberg view already lists keep their ORIGINAL data sequence in the
@@ -2254,40 +2062,20 @@ object IcebergSink {
         "resurrect deleted rows; compact the Iceberg plane first or issue " +
         "the delete through the Delta plane")
     val idByName: Map[String, Int] =
-      ifieldsOf(mapper.readTree(currentSchemaJson(meta)._2))
+      ifieldsOf(currentSchema(meta))
         .map(f => f.name -> f.id).toMap
-    val partSpecs = partCols.map(parsePartSpec)
-    val partFields = partitionFieldsOf(schema, partSpecs)
-      .zip(defaultSpec).map { case (pf, sf) => pf.copy(fieldId = sf.fieldId) }
-    val specId = meta.get("default-spec-id").asInt()
-    val specFieldsJson = partFields.zip(partSpecs).map { case (pf, ps) =>
-      s"""{"name":"${pf.name}","transform":"identity","source-id":${idByName(ps.source)},"field-id":${pf.fieldId}}"""
-    }.mkString(",")
-    val specJson = s"""{"spec-id":$specId,"fields":[$specFieldsJson]}"""
     val conf = spark.sessionState.newHadoopConf()
-    val snapshotId = math.abs(new java.util.Random().nextLong())
-    val seq = meta.get("last-sequence-number").asLong() + 1
     val infos = files.map { case (rel, pv, _) =>
       val f = new File(table, rel)
       val (rows, stats) = footerStats(f, conf, idByName)
       IcebergAvro.DataFileInfo(f.getAbsolutePath, f.length(), rows, stats,
-        partSpecs.map(ps => typedDeltaPv(schema, pv, ps.source)))
+        spec.fields.map(sf => typedDeltaPv(schema, pv, sf.field.name)))
     }
-    txn(store) { t =>
-      val (manifestPath, manifestLen) = writeAvroArtifact(table, t,
-        s"manifest-${java.util.UUID.randomUUID()}.avro")(f =>
-        IcebergAvro.writeManifest(f, infos, snapshotId,
-          currentSchemaJson(meta)._2, specJson, partFields, specId = specId,
-          entrySeqs = prevSeqByPath))
-      val row = IcebergAvro.manifestRow(manifestPath.toFile.getAbsolutePath,
-        manifestLen, seq, snapshotId, infos.size, infos.map(_.recordCount).sum,
-        specId = specId)
-      commitSnapshot(table, t, meta, hint, snapshotId, seq,
-        currentSchemaJson(meta)._1, Seq(row), "replace",
-        Map("graft.synced-from" -> "delta",
-          "synced-files" -> infos.size.toString),
-        carriedOverride = Some(Nil))
-    }
+    txn(store)(t => commitSnapshot(t, table, Head(hint, meta), Commit("replace",
+      Seq(AddManifest(0, infos, spec, entrySeqs = prevSeqByPath)),
+      carried = Some(Nil),
+      summary = Map("graft.synced-from" -> "delta",
+        "synced-files" -> infos.size.toString)))): Unit
     infos.size
   }
 
@@ -2301,83 +2089,25 @@ object IcebergSink {
       "names would not resolve by Iceberg field id")
     require(files.forall(!_._3), "deletion-vector tables do not convert: " +
       "purge the DVs first (DeltaSink.reorgPurge)")
-    val declaredIds = schema.fields.indices.map(_ + 1)
-    val fieldIds = schema.fieldNames.zip(declaredIds).toMap
-    val schemaNode = mapper.createObjectNode()
-    schemaNode.put("type", "struct").put("schema-id", 0)
-    val fieldsArr = schemaNode.putArray("fields")
-    schema.fields.zip(declaredIds).foreach { case (f, id) =>
-      fieldsArr.addObject()
-        .put("id", id).put("name", f.name)
-        .put("required", !f.nullable)
-        .put("type", icebergType(f.dataType))
-      ()
-    }
+    val fieldIds = schema.fieldNames.zip(schema.fields.indices.map(_ + 1)).toMap
     val partSpecs = partCols.map(parsePartSpec)
-    val partFields = partitionFieldsOf(schema, partSpecs)
-    val specFieldsJson = partFields.zip(partSpecs).map { case (pf, ps) =>
-      s"""{"name":"${pf.name}","transform":"identity","source-id":${fieldIds(ps.source)},"field-id":${pf.fieldId}}"""
-    }.mkString(",")
-    val specJson = s"""{"spec-id":0,"fields":[$specFieldsJson]}"""
+    val spec = Spec(0, partitionFieldsOf(schema, partSpecs).zip(partSpecs).map {
+      case (pf, ps) => SpecField(pf, ps.transform, fieldIds(ps.source)) })
     // typed partition values from the Delta log's string map (the log is
     // the truth — identity-partitioned Delta files don't store the column)
     val conf = spark.sessionState.newHadoopConf()
-    val snapshotId = math.abs(new java.util.Random().nextLong())
     val infos = files.map { case (rel, pv, _) =>
       val f = new File(table, rel)
       val (rows, stats) = footerStats(f, conf, fieldIds)
       IcebergAvro.DataFileInfo(f.getAbsolutePath, f.length(), rows, stats,
         partSpecs.map(ps => typedDeltaPv(schema, pv, ps.source)))
     }
-    txn(store) { t =>
-      Files.createDirectories(metaDir(table))
-      val (manifestPath, manifestLen) = writeAvroArtifact(table, t,
-        s"manifest-${java.util.UUID.randomUUID()}.avro")(f =>
-        IcebergAvro.writeManifest(f, infos, snapshotId,
-          schemaNode.toString, specJson, partFields))
-      val row = IcebergAvro.manifestRow(manifestPath.toFile.getAbsolutePath,
-        manifestLen, 1L, snapshotId, infos.size, infos.map(_.recordCount).sum)
-      val (listPath, _) = writeAvroArtifact(table, t,
-        s"manifest-list-${java.util.UUID.randomUUID()}.avro") { f =>
-        IcebergAvro.writeManifestList(f, Seq(row), snapshotId, 1L); 0L
-      }
-      val now = System.currentTimeMillis()
-      val meta = mapper.createObjectNode()
-      meta.put("format-version", 2)
-        .put("table-uuid", java.util.UUID.randomUUID().toString)
-        .put("location", table)
-        .put("last-sequence-number", 1L)
-        .put("last-updated-ms", now)
-        .put("last-column-id", declaredIds.lastOption.getOrElse(0))
-      meta.putArray("schemas").add(schemaNode)
-      meta.put("current-schema-id", 0)
-      val specNode = meta.putArray("partition-specs").addObject()
-      specNode.put("spec-id", 0)
-      val sf = specNode.putArray("fields")
-      partFields.zip(partSpecs).foreach { case (pf, ps) =>
-        sf.addObject().put("name", pf.name).put("transform", "identity")
-          .put("source-id", fieldIds(ps.source)).put("field-id", pf.fieldId)
-        ()
-      }
-      meta.put("default-spec-id", 0)
-      meta.put("last-partition-id", 999 + partFields.size)
-      meta.putArray("sort-orders").addObject().put("order-id", 0).putArray("fields")
-      meta.put("default-sort-order-id", 0)
-      meta.putObject("properties")
-        .put("graft.spark-schema", schema.json)
-        .put("graft.converted-from", "delta")
-      val snapNode = meta.putArray("snapshots").addObject()
-      snapNode.put("snapshot-id", snapshotId)
-        .put("sequence-number", 1L)
-        .put("timestamp-ms", now)
-        .put("manifest-list", s"metadata/${listPath.getFileName}")
-        .put("schema-id", 0)
-        .putObject("summary").put("operation", "append")
-      meta.put("current-snapshot-id", snapshotId)
-      meta.putObject("refs").putObject("main")
-        .put("snapshot-id", snapshotId).put("type", "branch")
-      commitMetadataVersion(table, t, -1L, meta)
-    }
+    txn(store)(t => commitSnapshot(t, table,
+      freshHead(table, "graft.converted-from" -> "delta"),
+      Commit("append", Seq(AddManifest(0, infos, spec)),
+        schema = Some(TableSchema(0,
+          schema.fields.toSeq.map(f => fieldNode(fieldIds(f.name), f)), schema)),
+        spec = Some(spec)))): Unit
     infos.size
   }
 
@@ -2405,7 +2135,6 @@ object IcebergSink {
     if (meta.get("current-snapshot-id").asLong() == snapshotId) return
     val newMeta = meta.deepCopy[ObjectNode]()
     newMeta.put("current-snapshot-id", snapshotId)
-    newMeta.put("last-updated-ms", System.currentTimeMillis())
     // Iceberg rollback semantics: redirect ONLY the main branch ref —
     // other branch/tag refs (if any) are untouched
     val refs =
@@ -2452,7 +2181,6 @@ object IcebergSink {
         s"$branch's head $branchHead — main advanced after the branch was cut")
     val newMeta = meta.deepCopy[ObjectNode]()
     newMeta.put("current-snapshot-id", branchHead)
-    newMeta.put("last-updated-ms", System.currentTimeMillis())
     newMeta.get("refs").asInstanceOf[ObjectNode].putObject("main")
       .put("snapshot-id", branchHead).put("type", "branch")
     commitMetadata(table, store, hint, newMeta)
@@ -2462,9 +2190,11 @@ object IcebergSink {
   /** The commit every Iceberg verb ends with: claims version hint+1 with
     * `newMeta` by IF-NOT-EXISTS put (the reference's write_exclusive,
     * iceberg_destination.rs:349-367), then advances the version hint with
-    * an atomic put, so a reader never sees a half-written hint.
+    * an atomic put, so a reader never sees a half-written hint. A hint put
+    * that fails after the claim landed leaves the hint one version behind;
+    * [[headOption]] probes past it, so the landed claim stays the head.
     */
-  private[sinks] def commitMetadataVersion(table: String, txn: Txn,
+  private def commitMetadataVersion(table: String, txn: Txn,
       hint: Long, newMeta: ObjectNode): Unit = {
     val newVersion = hint + 1
     txn.claim(metaFile(table, newVersion),
@@ -2472,10 +2202,18 @@ object IcebergSink {
     txn.store.putObject(hintFile(table), newVersion.toString.getBytes(StandardCharsets.UTF_8))
   }
 
-  /** A metadata-only commit of `newMeta` over version `hint`. */
+  /** A metadata-only commit of `newMeta` over version `hint`: publishes
+    * each of `files` (a statistics file the new metadata registers) as an
+    * artifact of the transaction, then claims the version.
+    */
   private[sinks] def commitMetadata(table: String, store: CommitStore,
-      hint: Long, newMeta: ObjectNode): Unit =
-    txn(store)(commitMetadataVersion(table, _, hint, newMeta))
+      hint: Long, newMeta: ObjectNode,
+      files: Seq[(java.nio.file.Path, Array[Byte])] = Nil): Unit =
+    txn(store) { t =>
+      files.foreach { case (p, bytes) => t.record(p); store.putObject(p, bytes) }
+      newMeta.put("last-updated-ms", System.currentTimeMillis())
+      commitMetadataVersion(table, t, hint, newMeta)
+    }
 
   /** Creates (or repoints) a NAMED REF — Iceberg's tags and branches
     * (spec §refs): a metadata-only commit adding `refs[name]` pointed at
@@ -2521,7 +2259,6 @@ object IcebergSink {
     maxRefAgeMs.foreach(v => node.put("max-ref-age-ms", v): Unit)
     minSnapshotsToKeep.foreach(v => node.put("min-snapshots-to-keep", v): Unit)
     maxSnapshotAgeMs.foreach(v => node.put("max-snapshot-age-ms", v): Unit)
-    newMeta.put("last-updated-ms", System.currentTimeMillis())
     commitMetadata(table, store, hint, newMeta)
   }
 
@@ -2534,7 +2271,6 @@ object IcebergSink {
       s"no such ref: $name")
     val newMeta = meta.deepCopy[ObjectNode]()
     newMeta.get("refs").asInstanceOf[ObjectNode].remove(name): Unit
-    newMeta.put("last-updated-ms", System.currentTimeMillis())
     commitMetadata(table, store, hint, newMeta)
   }
 
@@ -2584,34 +2320,19 @@ object IcebergSink {
     txn(store, Txn.Retries) { t =>
       val infos = stageWrite(t, table, "branch-" + branch,
         aligned.toDF(schema.fieldNames.toIndexedSeq: _*))
-      val added = infos.map(_.recordCount).sum
-      if (added == 0L) return meta.get("refs").get(branch).get("snapshot-id").asLong()
-      val snapshotId = math.abs(new java.util.Random().nextLong())
-      val emptySpec = """{"spec-id":0,"fields":[]}"""
-      val (manifest, manLen) =
-        writeAvroArtifact(table, t, s"manifest-${java.util.UUID.randomUUID()}.avro")(f =>
-          IcebergAvro.writeManifest(f, infos, snapshotId,
-            currentSchemaJson(meta)._2, emptySpec))
+      if (infos.map(_.recordCount).sum == 0L)
+        return meta.get("refs").get(branch).get("snapshot-id").asLong()
       // OCC retry parity with a main append (writeWithRetry): a benign
       // concurrent commit — a main append, a compaction, another branch —
       // must not kill the staging lane (a streaming WAP pipeline routes
-      // every micro-batch through here). The staged data files and manifest
-      // are reusable across attempts; each retry re-reads the metadata,
+      // every micro-batch through here). The staged data files are
+      // reusable across attempts; each retry re-reads the metadata,
       // re-validates the branch, and re-claims the next version.
       t.attempt { n =>
-        val Head(hintNow, metaNow) =
-          if (n == 0) Head(hint, meta)
-          else headOption(table).getOrElse(
-            throw new IllegalStateException(s"version hint vanished: $table"))
-        requireBranchHead(metaNow, branch): Unit
-        val seq = metaNow.get("last-sequence-number").asLong() + 1
-        commitSnapshot(table, t, metaNow, hintNow, snapshotId, seq,
-          currentSchemaJson(metaNow)._1,
-          Seq(IcebergAvro.manifestRow(manifest.toFile.getAbsolutePath, manLen,
-            seq, snapshotId, infos.size, added)),
-          "append", Map("added-records" -> added.toString) ++ summaryProps,
-          branch = Some(branch))
-        snapshotId
+        val h = if (n == 0) Head(hint, meta) else head(table)
+        requireBranchHead(h.meta, branch): Unit
+        commitSnapshot(t, table, h, Commit("append", Seq(AddManifest(0, infos)),
+          summary = summaryProps, branch = Some(branch)))
       }
     }
   }
@@ -2632,107 +2353,293 @@ object IcebergSink {
     } finally if (staged != target.toFile) staged.delete(): Unit
   }
 
-  /** Shared snapshot-commit tail for the merge-on-read verbs
-    * ([[deleteWhere]]/[[upsert]]): writes the manifest list (previous
-    * snapshot's rows carried verbatim ++ `newManifestRows`), deep-copies
-    * the previous metadata with the new snapshot appended, claims version
-    * `hint`+1 via IF-NOT-EXISTS, and updates the hint.
+  /** A partition spec: ONE value serves the metadata's `partition-specs`
+    * node ([[putSpec]]) and a manifest's `partition-spec` key metadata
+    * and partition struct.
     */
-  private def commitSnapshot(table: String, txn: Txn,
-      meta: com.fasterxml.jackson.databind.JsonNode, hint: Long,
-      snapshotId: Long, seq: Long, schemaId: Int,
-      newManifestRows: Seq[org.apache.avro.generic.GenericRecord],
-      operation: String, summaryProps: Map[String, String],
-      branch: Option[String] = None,
-      carriedOverride: Option[Seq[org.apache.avro.generic.GenericRecord]] = None,
-      formatVersion: Option[Int] = None,
-      assignedRows: Long = 0L,
-      metaMutate: ObjectNode => Unit = _ => ())
-      : Unit = {
+  private[sinks] case class Spec(id: Int, fields: Seq[SpecField]) {
+    def partitionFields: Seq[IcebergAvro.PartitionField] = fields.map(_.field)
+    def node: ObjectNode = {
+      val n = mapper.createObjectNode().put("spec-id", id)
+      val arr = n.putArray("fields")
+      fields.foreach(f => arr.addObject().put("name", f.field.name)
+        .put("transform", f.transform).put("source-id", f.sourceId)
+        .put("field-id", f.field.fieldId): Unit)
+      n
+    }
+    def json: String = node.toString
+  }
+  private[sinks] case class SpecField(field: IcebergAvro.PartitionField,
+      transform: String, sourceId: Int)
+  private val Unpartitioned = Spec(0, Nil)
+
+  /** The table's default spec as stored: its id, field ids and sources. */
+  private def defaultSpec(meta: com.fasterxml.jackson.databind.JsonNode,
+      schema: StructType): Spec = {
+    val id = meta.get("default-spec-id").asInt()
+    val stored = storedSpecsOf(meta).find(_._1 == id).map(_._2).getOrElse(Nil)
+    val fields = partitionFieldsOf(schema,
+      stored.map(f => parsePartSpec(rawOfSpecField(f.name, f.transform))))
+    Spec(id, fields.zip(stored).map { case (pf, sf) =>
+      SpecField(pf.copy(fieldId = sf.fieldId), sf.transform, sf.sourceId) })
+  }
+
+  /** The spec a manifest was written under, from its key metadata. */
+  private def specOf(m: IcebergAvro.Manifest): Spec = {
+    val fields = mapper.readTree(m.specJson).path("fields")
+    Spec(m.specId, m.partitionFields.zipWithIndex.map { case (pf, i) =>
+      SpecField(pf, fields.path(i).path("transform").asText("identity"),
+        fields.path(i).path("source-id").asInt()) })
+  }
+
+  /** A table schema: its id, its Iceberg field nodes, and the Spark schema
+    * they declare (`graft.spark-schema`) — the value [[putSchema]] writes.
+    */
+  private case class TableSchema(id: Int, fields: Seq[ObjectNode], spark: StructType) {
+    def node: ObjectNode = {
+      val n = mapper.createObjectNode().put("type", "struct").put("schema-id", id)
+      n.putArray("fields").addAll(fields.asJava)
+      n
+    }
+  }
+
+  /** An Iceberg schema field node for `f` under field id `id`. */
+  private def fieldNode(id: Int, f: StructField): ObjectNode =
+    mapper.createObjectNode().put("id", id).put("name", f.name)
+      .put("required", !f.nullable).put("type", icebergType(f.dataType))
+
+  /** THE schema writer, for data commits and metadata-only evolution
+    * alike: makes `s` the current schema of `meta`. Every other schema
+    * stays (spec §schemas: retained snapshots keep resolving theirs by
+    * id); last-column-id never falls; `graft.spark-schema` moves in step.
+    */
+  private def putSchema(meta: ObjectNode, s: TableSchema): Unit = {
+    putById(meta, "schemas", "schema-id", s.node)
+    meta.put("current-schema-id", s.id)
+    meta.put("last-column-id",
+      (s.fields.map(_.get("id").asInt()) :+ meta.path("last-column-id").asInt(0)).max)
+    meta.get("properties").asInstanceOf[ObjectNode]
+      .put("graft.spark-schema", s.spark.json): Unit
+  }
+
+  /** THE spec writer: makes `s` the default spec of `meta`. Every spec
+    * ever written stays (spec §partition-specs: retained manifests
+    * reference theirs by id); last-partition-id never falls.
+    */
+  private def putSpec(meta: ObjectNode, s: Spec): Unit = {
+    putById(meta, "partition-specs", "spec-id", s.node)
+    meta.put("default-spec-id", s.id)
+    meta.put("last-partition-id",
+      (s.fields.map(_.field.fieldId) :+ meta.path("last-partition-id").asInt(999)).max): Unit
+  }
+
+  /** Adds `node` to the array `key` of `meta`, replacing the element with
+    * the same `idKey`.
+    */
+  private def putById(meta: ObjectNode, key: String, idKey: String,
+      node: ObjectNode): Unit = {
+    val kept = meta.path(key).elements().asScala
+      .filter(_.get(idKey).asInt() != node.get(idKey).asInt()).toSeq
+    meta.putArray(key).addAll(kept.asJava).add(node): Unit
+  }
+
+  /** The one fresh-table skeleton a create or convert commits over: no
+    * schema, spec or snapshot yet (its commit sets them), version -1.
+    */
+  private def freshHead(table: String, properties: (String, String)*): Head = {
+    val m = mapper.createObjectNode()
+    m.put("format-version", 2)
+      .put("table-uuid", java.util.UUID.randomUUID().toString)
+      .put("location", table)
+      .put("last-sequence-number", 0L)
+      .put("last-updated-ms", 0L)
+      .put("last-column-id", 0)
+    m.putArray("schemas")
+    m.put("current-schema-id", 0)
+    m.putArray("partition-specs")
+    m.put("default-spec-id", 0).put("last-partition-id", 999)
+    m.putArray("sort-orders").addObject().put("order-id", 0).putArray("fields")
+    m.put("default-sort-order-id", 0)
+    val props = m.putObject("properties")
+    properties.foreach { case (k, v) => props.put(k, v) }
+    m.putArray("snapshots")
+    m.put("current-snapshot-id", -1L)
+    m.putObject("refs")
+    Head(-1L, m)
+  }
+
+  /** A manifest a snapshot commit adds. */
+  private sealed trait NewManifest
+
+  /** A manifest written from `files`, every entry of one `content` (0 data,
+    * 1 position deletes or deletion vectors, 2 equality deletes on
+    * `equalityIds`). `schemaJson` defaults to the commit's schema. A file
+    * in `entrySeqs` is an EXISTING entry that keeps that data sequence;
+    * every other file is ADDED at the commit's.
+    */
+  private case class AddManifest(content: Int, files: Seq[IcebergAvro.DataFileInfo],
+      spec: Spec = Unpartitioned, schemaJson: Option[String] = None,
+      equalityIds: Seq[Int] = Nil, entrySeqs: Map[String, Long] = Map.empty)
+    extends NewManifest
+
+  /** One manifest merged from `sources` — (manifest, its list row's
+    * sequence), all of spec `specId` — by [[IcebergAvro.mergeManifests]].
+    */
+  private case class MergeManifests(specId: Int, sources: Seq[(File, Long)])
+    extends NewManifest
+
+  /** What a snapshot commit changes. `carried`: None inherits the manifest
+    * list of the target ref's head, Some(rows) replaces it. `schema` and
+    * `spec` become current; `formatVersion` is a floor (versions only
+    * ratchet up); `summary` holds the verb's own summary keys;
+    * `startRowLineage` starts the v3 row-id clock at 0.
+    */
+  private case class Commit(operation: String, manifests: Seq[NewManifest],
+      carried: Option[Seq[org.apache.avro.generic.GenericRecord]] = None,
+      schema: Option[TableSchema] = None, spec: Option[Spec] = None,
+      formatVersion: Int = 2, summary: Map[String, String] = Map.empty,
+      branch: Option[String] = None, startRowLineage: Boolean = false)
+
+  /** THE Iceberg commit encoder — every commit that adds a snapshot ends
+    * here, in the reference's fixed sequence (manifests, manifest list,
+    * snapshot, then the exclusive claim; iceberg_destination.rs:271-374).
+    * From `base` (the head, or [[freshHead]]) it mints the snapshot id and
+    * sequence number, writes `c`'s manifests and the list (the carried
+    * rows, then the new ones), and deep-copies the base metadata: every
+    * field the commit does not set is kept — statistics registrations,
+    * foreign properties, refs, retained schemas and specs. It writes the
+    * commit's schema and spec, appends the snapshot with its summary
+    * (operation, the spec's `added-*` counts of the new manifests, the
+    * verb's keys), advances the row-lineage clock by the rows of the
+    * added data files that carry a first_row_id, moves the target ref
+    * (main also moves current-snapshot-id; a branch commit records its
+    * parent), and claims version base+1 through `t`. Returns the new
+    * snapshot's id.
+    */
+  private def commitSnapshot(t: Txn, table: String, base: Head, c: Commit): Long = {
+    val snapshotId = math.abs(new java.util.Random().nextLong())
+    val seq = base.meta.get("last-sequence-number").asLong() + 1
+    val parent = c.branch.map(b => base.meta.get("refs").get(b).get("snapshot-id").asLong())
+    // the key metadata every new manifest carries by default
+    val schemaJson = c.schema.fold(currentSchema(base.meta))(_.node).toString
+    Files.createDirectories(metaDir(table))
+    def avro(prefix: String)(write: File => Long) =
+      writeAvroArtifact(table, t, s"$prefix-${java.util.UUID.randomUUID()}.avro")(write)
+    val newRows = c.manifests.map {
+      case m: AddManifest =>
+        val (path, len) = avro("manifest")(f => IcebergAvro.writeManifest(f, m.files,
+          snapshotId, m.schemaJson.getOrElse(schemaJson), m.spec.json,
+          m.spec.partitionFields, m.content, m.equalityIds, m.spec.id, m.entrySeqs))
+        val rows = m.files.map(_.recordCount).sum
+        val existing = m.files.flatMap(f => m.entrySeqs.get(f.absPath))
+        if (m.content == 0 && m.files.nonEmpty && existing.size == m.files.size)
+          IcebergAvro.manifestRowExisting(path.toFile.getAbsolutePath, len, seq,
+            existing.min, snapshotId, m.files.size, rows, m.spec.id)
+        else
+          // the list row's content is 1 (deletes) for either delete content
+          IcebergAvro.manifestRow(path.toFile.getAbsolutePath, len, seq, snapshotId,
+            m.files.size, rows, content = math.min(m.content, 1), specId = m.spec.id)
+      case m: MergeManifests =>
+        var merged = (0L, 0, 0L, 0L)
+        val (path, len) = avro("manifest") { f =>
+          merged = IcebergAvro.mergeManifests(f, m.sources); merged._1
+        }
+        IcebergAvro.manifestRowExisting(path.toFile.getAbsolutePath, len, seq,
+          merged._4, snapshotId, merged._2, merged._3, m.specId)
+    }
     // the new snapshot continues from its TARGET ref's head: main (the
-    // current snapshot) by default, a named branch's head when targeted —
-    // spec §refs: a branch ref advances on commit while main is untouched.
-    // A REPLACE commit (rewriteManifests) supplies the carried rows itself
-    // instead of inheriting the head's list verbatim.
-    val baseList = manifestListOf(meta,
-      branch.map(b => meta.get("refs").get(b).get("snapshot-id").asLong()))
-    val carried = carriedOverride.getOrElse(baseList
+    // current snapshot) by default, a named branch's head when targeted
+    val carried = c.carried.getOrElse(manifestListOf(base.meta, parent)
       .map(p => IcebergAvro.readManifestList(new File(requireAvro(abs(table, p)))))
       .getOrElse(Nil))
-    val (listPath, _) =
-      writeAvroArtifact(table, txn,
-        s"manifest-list-${java.util.UUID.randomUUID()}.avro") { f =>
-        IcebergAvro.writeManifestList(f, carried ++ newManifestRows,
-          snapshotId, seq); 0L
-      }
+    val (listPath, _) = avro("manifest-list") { f =>
+      IcebergAvro.writeManifestList(f, carried ++ newRows, snapshotId, seq); 0L
+    }
     val now = System.currentTimeMillis()
-    val newMeta = meta.deepCopy[ObjectNode]()
-    newMeta.put("last-sequence-number", seq).put("last-updated-ms", now)
-    // a feature needing a newer table format (V3 deletion vectors) bumps
-    // it with its own commit; versions only ratchet up
-    formatVersion.foreach(v =>
-      if (newMeta.get("format-version").asInt() < v)
-        newMeta.put("format-version", v): Unit)
-    metaMutate(newMeta)
-    val snapNode = newMeta.get("snapshots")
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ArrayNode].addObject()
-    snapNode.put("snapshot-id", snapshotId)
+    val meta = base.meta.deepCopy[ObjectNode]()
+    meta.put("last-sequence-number", seq).put("last-updated-ms", now)
+    if (meta.get("format-version").asInt() < c.formatVersion)
+      meta.put("format-version", c.formatVersion)
+    c.schema.foreach(putSchema(meta, _))
+    c.spec.foreach(putSpec(meta, _))
+    val snap = meta.get("snapshots").asInstanceOf[ArrayNode].addObject()
+      .put("snapshot-id", snapshotId)
       .put("sequence-number", seq)
       .put("timestamp-ms", now)
       .put("manifest-list", s"metadata/${listPath.getFileName}")
-      .put("schema-id", schemaId)
-    // V3 row lineage (spec §Row Lineage): on a lineage-enabled table
-    // EVERY snapshot records its first-row-id — the start of the id range
-    // this commit assigned — and the table clock advances by the rows its
-    // ADDED data entries carry an assignment for (0 for pure deletes,
-    // replaces, and materialized-`_row_id` rewrites)
-    if (newMeta.has("next-row-id")) {
-      val base = newMeta.get("next-row-id").asLong()
-      snapNode.put("first-row-id", base)
-      if (assignedRows > 0)
-        newMeta.put("next-row-id", base + assignedRows): Unit
+      .put("schema-id", meta.get("current-schema-id").asInt())
+    // V3 row lineage (spec §Row Lineage): on a lineage-enabled table EVERY
+    // snapshot records its first-row-id — the start of the id range this
+    // commit assigned — and the table clock advances by the rows its data
+    // files carry an assignment for (0 for pure deletes, replaces, and
+    // materialized-`_row_id` rewrites)
+    Option(meta.get("next-row-id")).map(_.asLong())
+      .orElse(Option.when(c.startRowLineage)(0L)).foreach { next =>
+        val assigned = c.manifests.collect { case m: AddManifest if m.content == 0 =>
+          m.files.filter(_.firstRowId.isDefined).map(_.recordCount).sum }.sum
+        snap.put("first-row-id", next)
+        meta.put("next-row-id", next + assigned)
+      }
+    val summary = snap.putObject("summary").put("operation", c.operation)
+    (addedCounts(c.manifests) ++ c.summary).foreach { case (k, v) => summary.put(k, v) }
+    parent.foreach(snap.put("parent-snapshot-id", _))
+    val refs = meta.get("refs") match {
+      case o: ObjectNode => o
+      case _ => meta.putObject("refs")
     }
-    val sum = snapNode.putObject("summary")
-    sum.put("operation", operation)
-    summaryProps.foreach { case (k, v) => sum.put(k, v) }
-    branch.foreach(b => snapNode.put("parent-snapshot-id",
-      meta.get("refs").get(b).get("snapshot-id").asLong()))
-    val refsNode =
-      if (newMeta.has("refs") && newMeta.get("refs").isObject)
-        newMeta.get("refs").asInstanceOf[ObjectNode]
-      else newMeta.putObject("refs")
-    branch match {
+    c.branch match {
       case None =>
-        // a main commit advances BOTH the legacy current pointer and the
-        // main branch ref
-        newMeta.put("current-snapshot-id", snapshotId)
-        refsNode.putObject("main")
-          .put("snapshot-id", snapshotId).put("type", "branch")
+        meta.put("current-snapshot-id", snapshotId)
+        refs.putObject("main").put("snapshot-id", snapshotId).put("type", "branch")
       case Some(b) =>
-        // a branch commit advances ONLY its ref: main (and the current
-        // pointer every main-line reader resolves) is untouched. The
-        // ref's OTHER fields (spec retention: max-ref-age-ms etc.) ride
-        // along — advancing a branch must not strip its policy.
-        val node = Option(refsNode.get(b))
-          .collect { case o: ObjectNode => o.deepCopy[ObjectNode]() }
-          .getOrElse(mapper.createObjectNode())
-        node.put("snapshot-id", snapshotId).put("type", "branch")
-        refsNode.set[com.fasterxml.jackson.databind.JsonNode](b, node)
-        ()
+        // a branch commit advances ONLY its ref, keeping the ref's other
+        // fields (spec retention: max-ref-age-ms etc.)
+        refs.get(b).asInstanceOf[ObjectNode]
+          .put("snapshot-id", snapshotId).put("type", "branch")
     }
-    commitMetadataVersion(table, txn, hint, newMeta)
+    commitMetadataVersion(table, t, base.version, meta)
+    snapshotId
   }
 
-  /** The current schema's JSON node (by current-schema-id) — the key
-    * metadata every new manifest carries.
+  /** The spec's `added-*` summary counts (https://iceberg.apache.org/spec/#snapshots)
+    * of the files a commit's manifests ADD — EXISTING entries add nothing;
+    * a deletion vector counts as a delete file, its cardinality as
+    * position deletes and its blob as the added size. Zero counts are
+    * left out, as Iceberg's own writers do.
     */
-  private def currentSchemaJson(
-      meta: com.fasterxml.jackson.databind.JsonNode): (Int, String) = {
-    val schemaId = meta.get("current-schema-id").asInt()
-    (schemaId, meta.get("schemas").elements().asScala
-      .find(_.get("schema-id").asInt() == schemaId)
-      .map(_.toString).getOrElse(meta.get("schemas").get(0).toString))
+  private def addedCounts(manifests: Seq[NewManifest]): Seq[(String, String)] = {
+    val added = manifests.flatMap {
+      case m: AddManifest =>
+        m.files.filterNot(f => m.entrySeqs.contains(f.absPath)).map(m.content -> _)
+      case _ => Nil
+    }
+    def of(p: ((Int, IcebergAvro.DataFileInfo)) => Boolean) = added.filter(p).map(_._2)
+    val data = of(_._1 == 0)
+    val dvs = of { case (c, f) => c == 1 && f.dv.isDefined }
+    val pos = of { case (c, f) => c == 1 && f.dv.isEmpty }
+    val eq = of(_._1 == 2)
+    def rows(fs: Seq[IcebergAvro.DataFileInfo]) = fs.map(_.recordCount).sum
+    Seq("added-data-files" -> data.size.toLong,
+      "added-records" -> rows(data),
+      "added-files-size" -> added.map(_._2).map(f => f.dv.fold(f.sizeBytes)(_._3)).sum,
+      "added-delete-files" -> (dvs.size + pos.size + eq.size).toLong,
+      "added-position-delete-files" -> pos.size.toLong,
+      "added-equality-delete-files" -> eq.size.toLong,
+      "added-position-deletes" -> rows(pos ++ dvs),
+      "added-equality-deletes" -> rows(eq),
+      "added-dvs" -> dvs.size.toLong)
+      .collect { case (k, n) if n > 0 => k -> n.toString }
   }
+
+  /** The current schema's node (by current-schema-id). */
+  private def currentSchema(
+      meta: com.fasterxml.jackson.databind.JsonNode): com.fasterxml.jackson.databind.JsonNode = {
+    val schemaId = meta.get("current-schema-id").asInt()
+    meta.get("schemas").elements().asScala
+      .find(_.get("schema-id").asInt() == schemaId)
+      .getOrElse(meta.get("schemas").get(0))
+  }
+
 
   /** DELETE WHERE — V2 merge-on-read row-level deletes: writes POSITIONAL
     * delete files (parquet of spec columns `file_path` string /
@@ -2845,36 +2752,20 @@ object IcebergSink {
     val fridByPath: Map[String, Long] = ordered.map { p =>
       val id = next; next += rowsByPath(p); p -> id
     }.toMap
-    val snapshotId = math.abs(new java.util.Random().nextLong())
-    val seq = meta.get("last-sequence-number").asLong() + 1
     // delete manifests carry forward verbatim — their (file, pos)
     // references stay valid because every data entry kept its sequence
     val carriedDeletes = listRows.filter(_.get("content").asInstanceOf[Int] == 1)
-    txn(store) { t =>
-      val rows = manifests.map { m =>
-        val infos = m.entries.map { e =>
+    txn(store)(t => commitSnapshot(t, table, Head(hint, meta), Commit("replace",
+      manifests.map { m =>
+        AddManifest(0, m.entries.map { e =>
           IcebergAvro.DataFileInfo(e.path, e.sizeBytes, e.recordCount, e.stats,
             m.partitionFields.map(x => e.pvals.getOrElse(x.name, null)),
             firstRowId = Some(fridByPath(e.path)))
-        }
-        val (mp, len) = writeAvroArtifact(table, t,
-          s"manifest-${java.util.UUID.randomUUID()}.avro")(f =>
-          IcebergAvro.writeManifest(f, infos, snapshotId,
-            m.schemaJson.getOrElse(currentSchemaJson(meta)._2), m.specJson,
-            m.partitionFields, specId = m.specId, entrySeqs = seqByPath))
-        IcebergAvro.manifestRowExisting(mp.toFile.getAbsolutePath, len, seq,
-          m.entries.map(_.seq).min, snapshotId, infos.size,
-          infos.map(_.recordCount).sum, specId = m.specId)
-      }
-      commitSnapshot(table, t, meta, hint, snapshotId, seq,
-        currentSchemaJson(meta)._1, rows, "replace",
-        Map("graft.row-lineage" -> "enabled",
-          "assigned-rows" -> next.toString),
-        carriedOverride = Some(carriedDeletes),
-        formatVersion = Some(3),
-        assignedRows = next,
-        metaMutate = m => m.put("next-row-id", 0L): Unit)
-    }
+        }, specOf(m), m.schemaJson, entrySeqs = seqByPath)
+      },
+      carried = Some(carriedDeletes), formatVersion = 3,
+      summary = Map("graft.row-lineage" -> "enabled", "assigned-rows" -> next.toString),
+      startRowLineage = true))): Unit
     next
   }
 
@@ -2938,7 +2829,7 @@ object IcebergSink {
       setOpt: Option[Map[String, String]], store: CommitStore): Long = {
     import org.apache.spark.sql.functions.{col, expr}
     val snap = snapshotEntries(table, None)
-    val Head(hint, meta) = snap.head
+    val meta = snap.head.meta
     require(snap.deletes.forall(d => d.content != 1 || d.dv.isDefined),
       "live positional delete files present - v3 forbids mixing them " +
         "with deletion vectors; compact first")
@@ -2969,49 +2860,25 @@ object IcebergSink {
     if (descs.isEmpty) return 0L
     txn(store) { t =>
       t.record(descs.map(_.shard).distinct.map(i => Paths.get(puffinAbs(i))): _*)
-      val deletedNow = descs.map(_.freshCardinality).sum
-      val snapshotId = math.abs(new java.util.Random().nextLong())
-      val seq = meta.get("last-sequence-number").asLong() + 1
       val infos = descs.sortBy(_.file).map { d =>
         IcebergAvro.DataFileInfo(puffinAbs(d.shard), d.shardLength, d.cardinality,
           dv = Some((d.file, d.offset, d.size)))
       }
-      val (manifestPath, manifestLen) = writeAvroArtifact(table, t,
-        s"manifest-${java.util.UUID.randomUUID()}.avro")(f =>
-        IcebergAvro.writeManifest(f, infos, snapshotId,
-          currentSchemaJson(meta)._2, """{"spec-id":0,"fields":[]}""",
-          Nil, content = 1))
-      val row = IcebergAvro.manifestRow(manifestPath.toFile.getAbsolutePath,
-        manifestLen, seq, snapshotId, infos.size,
-        infos.map(_.recordCount).sum, content = 1)
       // an UPDATE stages the transformed replacements as new data files in
       // the SAME snapshot — SET expressions evaluate against the PRE-update
-      // row (matched is persisted; one merged-view scan feeds both planes)
+      // row (matched is persisted; one merged-view scan feeds both planes).
+      // Replacement rows are NEW rows (update = delete + insert).
       val replacement = setOpt.map { set =>
         val schema = snap.schema
         val rep = matched.select(schema.fieldNames.map(c =>
           set.get(c).map(e => expr(e).cast(schema(c).dataType).as(c))
             .getOrElse(col(c))).toIndexedSeq: _*)
-        // an UPDATE's replacement rows are NEW rows (update = delete + insert)
-        val repInfos = withFirstRowIds(meta, stageWrite(t, table, "update", rep))
-        val (repManifest, repLen) = writeAvroArtifact(table, t,
-          s"manifest-${java.util.UUID.randomUUID()}.avro")(f =>
-          IcebergAvro.writeManifest(f, repInfos, snapshotId,
-            currentSchemaJson(meta)._2, """{"spec-id":0,"fields":[]}"""))
-        (IcebergAvro.manifestRow(repManifest.toFile.getAbsolutePath, repLen, seq,
-          snapshotId, repInfos.size, repInfos.map(_.recordCount).sum), repInfos)
+        AddManifest(0, withFirstRowIds(meta, stageWrite(t, table, "update", rep)))
       }
-      commitSnapshot(table, t, meta, hint, snapshotId, seq,
-        currentSchemaJson(meta)._1, Seq(row) ++ replacement.map(_._1),
+      commitSnapshot(t, table, snap.head, Commit(
         if (setOpt.isDefined) "overwrite" else "delete",
-        Map("added-dvs" -> infos.size.toString,
-          "added-position-deletes" -> deletedNow.toString) ++
-          setOpt.map(_ => "replaced-records" -> deletedNow.toString),
-        formatVersion = Some(3),
-        assignedRows =
-          if (!meta.has("next-row-id")) 0L
-          else replacement.map(_._2.map(_.recordCount).sum).getOrElse(0L))
-      deletedNow
+        AddManifest(1, infos) +: replacement.toSeq, formatVersion = 3))
+      descs.map(_.freshCardinality).sum
     }
     } finally matched.unpersist(): Unit
   }
@@ -3203,14 +3070,8 @@ object IcebergSink {
     // (readDays/readBucket) skip delete files of other partitions — on a
     // table carrying millions of delete rows across many partitions, a
     // one-day read stops opening every delete file ever written.
-    val specCols: Seq[String] = meta.get("partition-specs").elements().asScala
-      .find(sp => sp.get("spec-id").asInt() == meta.get("default-spec-id").asInt())
-      .toSeq.flatMap(_.get("fields").elements().asScala.map(f =>
-        rawOfSpecField(f.get("name").asText(),
-          Option(f.get("transform")).map(_.asText()).getOrElse("identity"))))
-      .toSeq
-    val delPartSpecs = specCols.map(parsePartSpec)
-    val delPartFields = partitionFieldsOf(snap.schema, delPartSpecs)
+    val delSpec = defaultSpec(meta, snap.schema)
+    val delPartFields = delSpec.partitionFields
     val groupKeys: IndexedSeq[Map[String, Any]] =
       snap.data.map(_.pvals).distinct.toIndexedSeq
     val gidByPvals = groupKeys.zipWithIndex.toMap
@@ -3249,28 +3110,6 @@ object IcebergSink {
       val infos = stageWrite(t, table, "delete", dels,
         if (delPartFields.isEmpty) Nil else Seq("_gf_gid"), partValuesOfPart)
       if (infos.isEmpty) return 0L
-      val deletedRows = infos.map(_.recordCount).sum
-      val snapshotId = math.abs(new java.util.Random().nextLong())
-      val seq = meta.get("last-sequence-number").asLong() + 1
-      val (schemaId, schemaJson) = currentSchemaJson(meta)
-      // the delete manifest carries the table's partition spec so its
-      // entries' values are interpretable by any pruned reader
-      val delSpecJson =
-        if (delPartFields.isEmpty) """{"spec-id":0,"fields":[]}"""
-        else {
-          val fidOf = snap.curFields.map(f => f.name -> f.id).toMap
-          val fieldsJson = delPartFields.zip(delPartSpecs).map { case (pf, ps) =>
-            s"""{"name":"${pf.name}","transform":"${ps.transform}",""" +
-              s""""source-id":${fidOf(ps.source)},"field-id":${pf.fieldId}}"""
-          }.mkString(",")
-          s"""{"spec-id":0,"fields":[$fieldsJson]}"""
-        }
-      val (manifestPath, manifestLen) =
-        writeAvroArtifact(table, t, s"manifest-${java.util.UUID.randomUUID()}.avro")(f =>
-          IcebergAvro.writeManifest(f, infos, snapshotId, schemaJson,
-            delSpecJson, delPartFields, content = 1))
-      val delRow = IcebergAvro.manifestRow(manifestPath.toFile.getAbsolutePath,
-        manifestLen, seq, snapshotId, infos.size, deletedRows, content = 1)
       // an UPDATE additionally stages the transformed replacements as new
       // data files in the SAME snapshot — SET expressions evaluate against
       // the PRE-update row (matched is persisted; one merged-view scan)
@@ -3279,27 +3118,14 @@ object IcebergSink {
         val rep = matched.select(schema.fieldNames.map(c =>
           set.get(c).map(e => expr(e).cast(schema(c).dataType).as(c))
             .getOrElse(col(c))).toIndexedSeq: _*)
-        val repInfos = withFirstRowIds(meta, stageWrite(t, table, "update", rep))
-        val (repManifest, repLen) = writeAvroArtifact(table, t,
-          s"manifest-${java.util.UUID.randomUUID()}.avro")(f =>
-          IcebergAvro.writeManifest(f, repInfos, snapshotId, schemaJson,
-            """{"spec-id":0,"fields":[]}"""))
-        (repInfos,
-          IcebergAvro.manifestRow(repManifest.toFile.getAbsolutePath, repLen, seq,
-            snapshotId, repInfos.size, repInfos.map(_.recordCount).sum))
+        AddManifest(0, withFirstRowIds(meta, stageWrite(t, table, "update", rep)))
       }
-      val rows = Seq(delRow) ++ replacement.map(_._2)
-      commitSnapshot(table, t, meta, hint, snapshotId, seq, schemaId,
-        rows, if (setOpt.isDefined) "overwrite" else "delete",
-        Map("added-position-delete-files" -> infos.size.toString,
-          "added-position-deletes" -> deletedRows.toString) ++
-          replacement.map(r =>
-            "replaced-records" -> r._1.map(_.recordCount).sum.toString),
-        branch = branch,
-        assignedRows =
-          if (!meta.has("next-row-id")) 0L
-          else replacement.map(_._1.map(_.recordCount).sum).getOrElse(0L))
-      deletedRows
+      // the delete manifest carries the table's default spec (its id and
+      // field ids) so its entries' values are interpretable by any reader
+      commitSnapshot(t, table, Head(hint, meta), Commit(
+        if (setOpt.isDefined) "overwrite" else "delete",
+        AddManifest(1, infos, delSpec) +: replacement.toSeq, branch = branch))
+      infos.map(_.recordCount).sum
     }
     } finally { if (setOpt.isDefined) matched.unpersist(): Unit }
   }
@@ -3366,28 +3192,9 @@ object IcebergSink {
         spark.read.schema(StructType(schema.fields.filter(f => keys.contains(f.name))))
           .parquet(new File(dataInfos.head.absPath).getParent)
           .select(keys.map(k => col(k).as(k, keyMeta(k))): _*))
-      val snapshotId = math.abs(new java.util.Random().nextLong())
-      val seq = meta.get("last-sequence-number").asLong() + 1
-      val (schemaId, schemaJson) = currentSchemaJson(meta)
-      val emptySpec = """{"spec-id":0,"fields":[]}"""
-      val (dataManifest, dataLen) =
-        writeAvroArtifact(table, t, s"manifest-${java.util.UUID.randomUUID()}.avro")(f =>
-          IcebergAvro.writeManifest(f, dataInfos, snapshotId, schemaJson, emptySpec))
-      val (delManifest, delLen) =
-        writeAvroArtifact(table, t, s"manifest-${java.util.UUID.randomUUID()}.avro")(f =>
-          IcebergAvro.writeManifest(f, delInfos, snapshotId, schemaJson, emptySpec,
-            Nil, content = 2, equalityIds = eqIds))
-      val newRows = Seq(
-        IcebergAvro.manifestRow(dataManifest.toFile.getAbsolutePath, dataLen, seq,
-          snapshotId, dataInfos.size, upserted),
-        IcebergAvro.manifestRow(delManifest.toFile.getAbsolutePath, delLen, seq,
-          snapshotId, delInfos.size, delInfos.map(_.recordCount).sum, content = 1))
-      commitSnapshot(table, t, meta, hint, snapshotId, seq, schemaId,
-        newRows, "overwrite",
-        Map("added-records" -> upserted.toString,
-          "added-equality-delete-files" -> delInfos.size.toString) ++ summaryProps,
-        branch = branch,
-        assignedRows = if (meta.has("next-row-id")) upserted else 0L)
+      commitSnapshot(t, table, Head(hint, meta), Commit("overwrite",
+        Seq(AddManifest(0, dataInfos), AddManifest(2, delInfos, equalityIds = eqIds)),
+        summary = summaryProps, branch = branch))
       upserted
     }
   }
@@ -3468,25 +3275,11 @@ object IcebergSink {
             .as(k, keyMeta(k))): _*).distinct())
       }
       val total = staged.flatMap(_._2).map(_.recordCount).sum
-      if (total > 0L) {
-        val snapshotId = math.abs(new java.util.Random().nextLong())
-        val seq = meta.get("last-sequence-number").asLong() + 1
-        val (schemaId, schemaJson) = currentSchemaJson(meta)
-        val emptySpec = """{"spec-id":0,"fields":[]}"""
-        val manifests = staged.filter(_._2.nonEmpty).map {
-          case (eqIds, infos) =>
-            val (path, len) = writeAvroArtifact(table, t,
-              s"manifest-${java.util.UUID.randomUUID()}.avro")(f =>
-              IcebergAvro.writeManifest(f, infos, snapshotId, schemaJson, emptySpec,
-                Nil, content = 2, equalityIds = eqIds))
-            IcebergAvro.manifestRow(path.toFile.getAbsolutePath, len, seq,
-              snapshotId, infos.size, infos.map(_.recordCount).sum, content = 1)
-        }
-        commitSnapshot(table, t, meta, hint, snapshotId, seq, schemaId,
-          manifests, "delete",
-          Map("deleted-key-rows" -> total.toString,
-            "added-equality-delete-files" -> staged.map(_._2.size).sum.toString))
-      }
+      if (total > 0L)
+        commitSnapshot(t, table, Head(hint, meta), Commit("delete",
+          staged.filter(_._2.nonEmpty).map { case (eqIds, infos) =>
+            AddManifest(2, infos, equalityIds = eqIds)
+          })): Unit
       total
     }
   }
@@ -3929,14 +3722,20 @@ object IcebergSink {
 
   /** THE read of the table head (version hint → `vN.metadata.json` →
     * parse) every verb starts from; None when the table carries no
-    * Iceberg metadata.
+    * Iceberg metadata. The hint is a floor, as in Hadoop-catalog tables:
+    * the head is the newest `vN.metadata.json` from it on, so a claim
+    * that landed before its hint put failed is what readers and writers
+    * see (a missing hint probes from v0).
     */
   private[sinks] def headOption(table: String): Option[Head] = {
     val f = hintFile(table)
-    if (!Files.exists(f)) None
-    else {
-      val v = Files.readString(f).trim.toLong
-      Some(Head(v, mapper.readTree(Files.readString(metaFile(table, v)))))
+    val floor =
+      if (Files.exists(f)) Some(Files.readString(f).trim.toLong)
+      else Some(0L).filter(v => Files.exists(metaFile(table, v)))
+    floor.map { v0 =>
+      var v = v0
+      while (Files.exists(metaFile(table, v + 1))) v += 1
+      Head(v, mapper.readTree(Files.readString(metaFile(table, v))))
     }
   }
 

@@ -134,7 +134,8 @@ object IcebergStats {
       store: CommitStore = CommitStore.Local): Map[String, Long] = {
     import org.apache.spark.sql.functions.col
     require(columns.nonEmpty, "writeStats needs at least one column")
-    val IcebergSink.Head(hint, meta) = IcebergSink.head(table)
+    val head = IcebergSink.head(table)
+    val meta = head.meta
     val snapshotId = meta.get("current-snapshot-id").asLong()
     require(snapshotId > 0, s"no current snapshot on $table")
     val seq = meta.get("last-sequence-number").asLong()
@@ -147,14 +148,7 @@ object IcebergStats {
       case (c, i) => c -> row.getSeq[Long](i).toArray
     }
     // field ids from the current schema (blob metadata's `fields`)
-    val fieldIdOf: Map[String, Int] = {
-      val schemaId = meta.get("current-schema-id").asInt()
-      import scala.jdk.CollectionConverters._
-      meta.get("schemas").elements().asScala
-        .find(_.get("schema-id").asInt() == schemaId).toSeq
-        .flatMap(_.get("fields").elements().asScala)
-        .map(f => f.get("name").asText() -> f.get("id").asInt()).toMap
-    }
+    val fieldIdOf = fieldIdsOf(meta)
     // Puffin file: magic, blobs back to back, JSON footer (same public
     // layout as the DV writer; payload here is the raw CompactSketch)
     val bos = new java.io.ByteArrayOutputStream()
@@ -186,73 +180,86 @@ object IcebergStats {
     bos.write(magic)
     val fileBytes = bos.toByteArray
     val footerSize = fileBytes.length - footerStart
-    val statsPath = Paths.get(table, "metadata",
-      s"stats-${java.util.UUID.randomUUID()}.puffin")
-    // metadata-only commit: REPLACE the statistics list with this file's
-    // entry (spec: a list of statistics files, keyed by snapshot)
-    val newMeta = meta.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
-    val oldPaths: Seq[String] =
-      if (!meta.has("statistics")) Nil
-      else {
-        import scala.jdk.CollectionConverters._
-        meta.get("statistics").elements().asScala
-          .map(_.get("statistics-path").asText()).toSeq
+    register(table, store, head, "statistics",
+      Paths.get(table, "metadata", s"stats-${java.util.UUID.randomUUID()}.puffin"),
+      fileBytes) { entry =>
+      entry.put("file-footer-size-in-bytes", footerSize.toLong)
+      val bmArr = entry.putArray("blob-metadata")
+      blobMeta.foreach { case (c, off, len, ndv) =>
+        val b = bmArr.addObject()
+        b.put("type", "apache-datasketches-theta-v1")
+          .put("snapshot-id", snapshotId)
+          .put("sequence-number", seq)
+        b.putArray("fields").add(fieldIdOf(c))
+        b.putObject("properties").put("ndv", ndv.toString)
+        // offset/length ride along so [[ndv]] never reopens the Puffin
+        b.put("offset", off).put("length", len): Unit
       }
-    val statsArr = newMeta.putArray("statistics")
-    val entry = statsArr.addObject()
-    // TABLE-RELATIVE registration, like the metadata's manifest-list
-    // pointers: a relocated table resolves its own stats through
-    // IcebergSink.abs (absolute legacy registrations still resolve)
-    entry.put("snapshot-id", snapshotId)
-      .put("statistics-path", s"metadata/${statsPath.getFileName}")
-      .put("file-size-in-bytes", fileBytes.length.toLong)
-      .put("file-footer-size-in-bytes", footerSize.toLong)
-    val bmArr = entry.putArray("blob-metadata")
-    blobMeta.foreach { case (c, off, len, ndv) =>
-      val b = bmArr.addObject()
-      b.put("type", "apache-datasketches-theta-v1")
-        .put("snapshot-id", snapshotId)
-        .put("sequence-number", seq)
-      b.putArray("fields").add(fieldIdOf(c))
-      b.putObject("properties").put("ndv", ndv.toString)
-      // offset/length ride along so [[ndv]] never reopens the Puffin
-      b.put("offset", off).put("length", len): Unit
     }
-    IcebergSink.txn(store) { t =>
-      t.record(statsPath)
-      store.putObject(statsPath, fileBytes)
-      IcebergSink.commitMetadataVersion(table, t, hint, newMeta)
-    }
-    // the replaced stats file is dead the moment the pointer moved
-    // (registrations are table-relative; resolve before reclaiming)
-    oldPaths.foreach(p =>
-      scala.util.Try(store.deleteObject(Paths.get(IcebergSink.abs(table, p)))))
     blobMeta.map { case (c, _, _, ndv) => c -> ndv }.toMap
+  }
+
+  /** The one registration commit behind [[writeStats]] and
+    * [[writePartitionStats]]: REPLACES the metadata list `key` with one
+    * entry for `file` — registered against the current snapshot,
+    * TABLE-RELATIVE like the manifest-list pointers (a relocated table
+    * resolves it through [[IcebergSink.abs]]), completed by `fill` — then
+    * publishes `bytes` there and commits metadata-only. The replaced
+    * files are dead the moment the pointer moved and are reclaimed.
+    */
+  private def register(table: String, store: CommitStore, head: IcebergSink.Head,
+      key: String, file: Path, bytes: Array[Byte])(
+      fill: com.fasterxml.jackson.databind.node.ObjectNode => Unit): Unit = {
+    import scala.jdk.CollectionConverters._
+    val replaced = head.meta.path(key).elements().asScala
+      .map(_.get("statistics-path").asText()).toSeq
+    val newMeta = head.meta.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
+    val entry = newMeta.putArray(key).addObject()
+      .put("snapshot-id", head.meta.get("current-snapshot-id").asLong())
+      .put("statistics-path", s"metadata/${file.getFileName}")
+      .put("file-size-in-bytes", bytes.length.toLong)
+    fill(entry)
+    IcebergSink.commitMetadata(table, store, head.version, newMeta, Seq(file -> bytes))
+    replaced.foreach(p =>
+      scala.util.Try(store.deleteObject(Paths.get(IcebergSink.abs(table, p)))))
+  }
+
+  /** The entry of the metadata list `key` registered against the CURRENT
+    * snapshot — a registration carried past later commits never answers
+    * for a snapshot it was not computed at.
+    */
+  private def currentEntry(meta: com.fasterxml.jackson.databind.JsonNode,
+      key: String): Option[com.fasterxml.jackson.databind.JsonNode] = {
+    import scala.jdk.CollectionConverters._
+    meta.path(key).elements().asScala.find(_.get("snapshot-id").asLong() ==
+      meta.path("current-snapshot-id").asLong(-1L))
   }
 
   /** The column's registered NDV (from the statistics entry's blob
     * properties — the O(1) planner read; the Puffin is never opened).
-    * None when the table carries no statistics for the column.
+    * None when the table carries no statistics for the column computed
+    * at the current snapshot.
     */
   def ndv(table: String, column: String): Option[Long] = {
-    val meta = IcebergSink.headOption(table).getOrElse(return None).meta
-    if (!meta.has("statistics")) return None
-    val fieldIdOf: Map[String, Int] = {
-      import scala.jdk.CollectionConverters._
-      val schemaId = meta.get("current-schema-id").asInt()
-      meta.get("schemas").elements().asScala
-        .find(_.get("schema-id").asInt() == schemaId).toSeq
-        .flatMap(_.get("fields").elements().asScala)
-        .map(f => f.get("name").asText() -> f.get("id").asInt()).toMap
-    }
-    val fid = fieldIdOf.getOrElse(column, return None)
     import scala.jdk.CollectionConverters._
-    meta.get("statistics").elements().asScala
+    val meta = IcebergSink.headOption(table).getOrElse(return None).meta
+    val fid = fieldIdsOf(meta).getOrElse(column, return None)
+    currentEntry(meta, "statistics").toSeq
       .flatMap(_.get("blob-metadata").elements().asScala)
       .find(b => b.get("fields").elements().asScala
         .exists(_.asInt() == fid))
       .flatMap(b => Option(b.get("properties"))
         .flatMap(p => Option(p.get("ndv"))).map(_.asText().toLong))
+  }
+
+  /** Column name → field id in the current schema. */
+  private def fieldIdsOf(meta: com.fasterxml.jackson.databind.JsonNode): Map[String, Int] = {
+    import scala.jdk.CollectionConverters._
+    val schemaId = meta.get("current-schema-id").asInt()
+    meta.get("schemas").elements().asScala
+      .find(_.get("schema-id").asInt() == schemaId).toSeq
+      .flatMap(_.get("fields").elements().asScala)
+      .map(f => f.get("name").asText() -> f.get("id").asInt()).toMap
   }
 
   /** The NDV-driven BROADCAST decision (the planner hook the statistics
@@ -337,7 +344,8 @@ object IcebergStats {
     */
   def writePartitionStats(spark: SparkSession, table: String,
       store: CommitStore = CommitStore.Local): Int = {
-    val IcebergSink.Head(hint, meta) = IcebergSink.head(table)
+    val head = IcebergSink.head(table)
+    val meta = head.meta
     val snapshotId = meta.get("current-snapshot-id").asLong()
     require(snapshotId > 0, s"no current snapshot on $table")
     val list = IcebergSink.manifestListOf(meta).getOrElse(
@@ -462,39 +470,13 @@ object IcebergStats {
             f.getName.endsWith(".parquet")).get
         Files.readAllBytes(part.toPath)
       } finally CommitStore.deleteTree(staging)
-    val statsPath = Paths.get(table, "metadata",
-      s"partition-stats-$snapshotId-${java.util.UUID.randomUUID()}.parquet")
-    // metadata-only commit: REPLACE the partition-statistics list
-    val newMeta = meta.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
-    val oldPaths: Seq[String] =
-      if (!meta.has("partition-statistics")) Nil
-      else {
-        import scala.jdk.CollectionConverters._
-        meta.get("partition-statistics").elements().asScala
-          .map(_.get("statistics-path").asText()).toSeq
-      }
-    val arr = newMeta.putArray("partition-statistics")
-    // table-relative, like the theta statistics registration above
-    arr.addObject()
-      .put("snapshot-id", snapshotId)
-      .put("statistics-path", s"metadata/${statsPath.getFileName}")
-      .put("file-size-in-bytes", bytes.length.toLong)
-    IcebergSink.txn(store) { t =>
-      t.record(statsPath)
-      store.putObject(statsPath, bytes)
-      IcebergSink.commitMetadataVersion(table, t, hint, newMeta)
-    }
-    oldPaths.foreach(p =>
-      scala.util.Try(store.deleteObject(Paths.get(IcebergSink.abs(table, p)))))
+    register(table, store, head, "partition-statistics",
+      Paths.get(table, "metadata",
+        s"partition-stats-$snapshotId-${java.util.UUID.randomUUID()}.parquet"),
+      bytes)(_ => ())
     rows.size
   }
 
-  /** The registered partition statistics as a DataFrame (one KB-scale
-    * parquet read — the planner-side replacement for a per-query
-    * manifest walk; see [[writePartitionStats]]). None when the table
-    * carries no registration. `live_record_count` is the derived
-    * planning column: data records minus positional-delete records.
-    */
   /** Statistics-CONSULTING partition read — the planner consumption spec
     * §Partition statistics exists for (r17 verdict item 6). Consults the
     * registered partition-statistics file FIRST, honoring it only when it
@@ -519,24 +501,16 @@ object IcebergStats {
     */
   def readPartition(spark: SparkSession, table: String, partitionCol: String,
       value: String, broadcastMaxRows: Long = 1000000L): DataFrame = {
-    val fresh: Option[Long] = IcebergSink.headOption(table).map(_.meta).flatMap { meta =>
-      if (!meta.has("partition-statistics")) None
-      else {
-        import scala.jdk.CollectionConverters._
-        meta.get("partition-statistics").elements().asScala.toSeq.headOption
-          .filter(_.get("snapshot-id").asLong() ==
-            meta.get("current-snapshot-id").asLong())
-          .map { e =>
-            import org.apache.spark.sql.functions.{coalesce, col, element_at, lit, sum}
-            spark.read.parquet(
-                IcebergSink.abs(table, e.get("statistics-path").asText()))
-              .filter(element_at(col("partition"), partitionCol) === value)
-              .agg(coalesce(sum(col("data_record_count") -
-                col("position_delete_record_count")), lit(0L)))
-              .head().getLong(0)
-          }
+    val fresh: Option[Long] = IcebergSink.headOption(table)
+      .flatMap(h => currentEntry(h.meta, "partition-statistics")).map { e =>
+        import org.apache.spark.sql.functions.{coalesce, col, element_at, lit, sum}
+        spark.read.parquet(
+            IcebergSink.abs(table, e.get("statistics-path").asText()))
+          .filter(element_at(col("partition"), partitionCol) === value)
+          .agg(coalesce(sum(col("data_record_count") -
+            col("position_delete_record_count")), lit(0L)))
+          .head().getLong(0)
       }
-    }
     fresh match {
       case Some(0L) =>
         spark.createDataFrame(
@@ -550,11 +524,15 @@ object IcebergStats {
     }
   }
 
-  def partitionStats(spark: SparkSession, table: String): Option[DataFrame] = {
-    val meta = IcebergSink.headOption(table).getOrElse(return None).meta
-    if (!meta.has("partition-statistics")) return None
-    import scala.jdk.CollectionConverters._
-    meta.get("partition-statistics").elements().asScala.toSeq.headOption
+  /** The registered partition statistics as a DataFrame (one KB-scale
+    * parquet read — the planner-side replacement for a per-query
+    * manifest walk; see [[writePartitionStats]]). None when the table
+    * carries no registration computed at the current snapshot.
+    * `live_record_count` is the derived planning column: data records
+    * minus positional-delete records.
+    */
+  def partitionStats(spark: SparkSession, table: String): Option[DataFrame] =
+    IcebergSink.headOption(table).flatMap(h => currentEntry(h.meta, "partition-statistics"))
       .map { e =>
         import org.apache.spark.sql.functions.col
         spark.read.parquet(
@@ -562,5 +540,4 @@ object IcebergStats {
           .withColumn("live_record_count",
             col("data_record_count") - col("position_delete_record_count"))
       }
-  }
 }

@@ -1418,6 +1418,12 @@ class CommitStoreSpec extends AnyFunSuite {
       assert(census(IcebergSink.read(spark, t)) == pre, verb)
       val missing = referenced(t).filterNot(Files.exists(_))
       assert(missing.isEmpty, s"$verb: ${missing.mkString(", ")}")
+      // the landed claim is the head: the next writer commits past it
+      // instead of claiming it again
+      IcebergSink.write((21L to 25L).map(i => (i, s"n$i", i * 0.5)).toDF("id", "name", "v"),
+        t, IcebergSink.Append)
+      assert(census(IcebergSink.read(spark, t)) ==
+        Seq(25L, (1L to 25L).sum, (1 to 25).map(_ * 0.5).sum), verb)
     }
   }
 }

@@ -199,13 +199,21 @@ class SinkSpec extends AnyFunSuite {
   test("Iceberg OCC conflict raises after bounded retries") {
     val table = tmp()
     IcebergSink.write(sampleDf, table, IcebergSink.CreateExclusive)
-    // Simulate a concurrent committed writer the hint doesn't know about:
-    // v1 exists, hint still says 0 → every retry re-reads hint 0, tries to
-    // commit v1, hits the IF-NOT-EXISTS conflict (lib.rs:168-196 shape).
-    Files.writeString(Paths.get(table, "metadata", "v1.metadata.json"), "{}")
-    intercept[IcebergSink.OptimisticConcurrencyException] {
-      IcebergSink.writeWithRetry(sampleDf, table, IcebergSink.Append)
+    // A concurrent writer wins every version this one claims: right before
+    // each claim a real append commits that version, so every attempt
+    // re-reads the head, re-plans, and loses the IF-NOT-EXISTS put again
+    // (lib.rs:168-196 shape).
+    val alwaysLoses = new CommitStore {
+      override def putIfAbsent(t: java.nio.file.Path, b: Array[Byte]): Unit = {
+        IcebergSink.write(sampleDf, table, IcebergSink.Append)
+        CommitStore.Local.putIfAbsent(t, b)
+      }
     }
+    intercept[IcebergSink.OptimisticConcurrencyException] {
+      IcebergSink.writeWithRetry(sampleDf, table, IcebergSink.Append, store = alwaysLoses)
+    }
+    // the winners' commits all landed, the loser's none
+    assert(IcebergSink.read(spark, table).count() == 3L * 5)
   }
 
   test("Iceberg OCC: three concurrent appenders all commit through retries") {
@@ -5012,5 +5020,182 @@ class SinkSpec extends AnyFunSuite {
       () => IcebergSink.updateWhereDV(spark, iceberg, "id % 10 = 6",
         Map("name" -> "concat(name, '!')")): Unit,
       () => IcebergSink.readWithLineage(spark, iceberg))
+  }
+
+  /** The summary of snapshot `id` in the table's newest metadata, its
+    * `added-*` counts as numbers (an absent count is 0).
+    */
+  private def addedCounts(table: String, id: Long): Map[String, Long] = {
+    val meta = new com.fasterxml.jackson.databind.ObjectMapper().readTree(
+      new File(table, "metadata").listFiles()
+        .filter(_.getName.endsWith(".metadata.json"))
+        .maxBy(_.getName.stripPrefix("v").takeWhile(_.isDigit).toLong).toPath.toFile)
+    meta.get("snapshots").elements().asScala.find(_.get("snapshot-id").asLong() == id).get
+      .get("summary").properties().asScala
+      .collect { case e if e.getKey.startsWith("added-") => e.getKey -> e.getValue.asText().toLong }
+      .toMap.withDefaultValue(0L)
+  }
+
+  test("Iceberg snapshot summaries count the files and rows each verb committed") {
+    val s = spark
+    import s.implicits._
+    val table = tmp() + "/tbl"
+    def rows(lo: Long, hi: Long) =
+      (lo to hi).map(i => (i, s"g${i % 3}", i * 0.5)).toDF("id", "g", "v").repartition(2)
+    // (content, path, record_count) of every entry of the current snapshot
+    def entries(): Seq[(Int, String, Long)] =
+      if (!new File(table, "metadata").exists()) Nil
+      else IcebergSink.metaTable(spark, table, "files")
+        .select("content", "file_path", "record_count").as[(Int, String, Long)].collect().toSeq
+    /** Runs `verb`, then checks the new snapshot's counts against the
+      * entries it added; returns the counts and the verb's result.
+      */
+    def committed[A](name: String)(verb: => A): (Map[String, Long], A) = {
+      val before = entries()
+      val out = verb
+      val added = entries().diff(before)
+      val c = addedCounts(table, IcebergSink.snapshots(table).last._1)
+      val (data, deletes) = added.partition(_._1 == 0)
+      assert(c("added-data-files") == data.size, s"$name: $c")
+      assert(c("added-records") == data.map(_._3).sum, s"$name: $c")
+      assert(c("added-delete-files") == deletes.size, s"$name: $c")
+      assert(c("added-position-delete-files") + c("added-equality-delete-files") +
+        c("added-dvs") == deletes.size, s"$name: $c")
+      assert(c("added-position-deletes") + c("added-equality-deletes") ==
+        deletes.map(_._3).sum, s"$name: $c")
+      // a deletion vector's added size is its blob, not its Puffin file
+      if (c("added-dvs") == 0)
+        assert(c("added-files-size") ==
+          added.map(_._2).distinct.map(new File(_).length()).sum, s"$name: $c")
+      (c, out)
+    }
+    assert(committed("create")(IcebergSink.write(rows(1, 30), table,
+      IcebergSink.CreateExclusive))._1("added-records") == 30L)
+    assert(committed("append")(IcebergSink.write(rows(31, 40), table,
+      IcebergSink.Append))._1("added-records") == 10L)
+    assert(committed("overwrite")(IcebergSink.write(rows(1, 40), table,
+      IcebergSink.Overwrite))._1("added-records") == 40L)
+    IcebergSink.write(rows(41, 50), table, IcebergSink.Append)
+    assert(committed("compact")(IcebergSink.compact(spark, table))._1("added-records") == 50L)
+    val (del, n1) = committed("deleteWhere")(IcebergSink.deleteWhere(spark, table, "id <= 3"))
+    assert(n1 == 3L && del("added-position-deletes") == 3L && del("added-data-files") == 0L)
+    IcebergSink.compact(spark, table) // v3 deletion vectors refuse live v2 delete files
+    val (dv, n2) = committed("deleteWhereDV")(
+      IcebergSink.deleteWhereDV(spark, table, "id between 10 and 14"))
+    assert(n2 == 5L && dv("added-position-deletes") == 5L && dv("added-dvs") >= 1L &&
+      dv("added-position-delete-files") == 0L && dv("added-files-size") > 0L)
+    val (up, n3) = committed("updateWhereDV")(IcebergSink.updateWhereDV(spark, table,
+      "id between 20 and 21", Map("v" -> "v + 1")))
+    // a deletion vector replaces its file's previous one, so its
+    // cardinality counts that file's 5 earlier deletes too
+    assert(n3 == 2L && up("added-records") == 2L && up("added-position-deletes") == 7L)
+    val (ups, n4) = committed("upsert")(IcebergSink.upsert(spark, table,
+      Seq((30L, "g0", 9.0), (100L, "g1", 9.0)).toDF("id", "g", "v"), Seq("id")))
+    assert(n4 == 2L && ups("added-records") == 2L && ups("added-equality-deletes") == 2L &&
+      ups("added-equality-delete-files") >= 1L)
+    val (dk, n5) = committed("deleteKeys")(IcebergSink.deleteKeys(spark, table,
+      Seq(31L, 32L, 33L).toDF("id"), Seq("id")))
+    assert(n5 == 3L && dk("added-equality-deletes") == 3L && dk("added-data-files") == 0L)
+    // a branch commit: main's entries do not move, the branch head's do
+    IcebergSink.createRef(table, "audit", IcebergSink.snapshots(table).last._1,
+      refType = "branch")
+    def branchFiles() = IcebergSink.fileStats(spark, table,
+      Some(IcebergSink.listRefs(table)("audit")._1)).select("path", "num_records")
+      .as[(String, Long)].collect().toSeq
+    val onBranch = branchFiles()
+    val head = IcebergSink.appendBranch(rows(200, 206), table, "audit")
+    val br = addedCounts(table, head)
+    val branchAdded = branchFiles().diff(onBranch)
+    assert(br("added-records") == 7L && br("added-records") == branchAdded.map(_._2).sum)
+    assert(br("added-data-files") == branchAdded.size)
+  }
+
+  test("Iceberg commits keep statistics, partition statistics, refs and foreign properties") {
+    val s = spark
+    import s.implicits._
+    val table = tmp()
+    def rows(lo: Long, hi: Long) =
+      (lo to hi).map(i => (i, s"g${i % 3}", i * 0.5)).toDF("id", "g", "v").repartition(2)
+    DeltaSink.write(rows(1, 30), table)
+    IcebergSink.convertFromDelta(spark, table)
+    IcebergSink.createRef(table, "pinned", IcebergSink.snapshots(table).last._1)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def meta() = mapper.readTree(new File(table, "metadata").listFiles()
+      .filter(_.getName.endsWith(".metadata.json"))
+      .maxBy(_.getName.stripPrefix("v").takeWhile(_.isDigit).toLong))
+    def register(): Unit = {
+      IcebergStats.writeStats(spark, table, Seq("id"))
+      IcebergStats.writePartitionStats(spark, table)
+      assert(IcebergStats.ndv(table, "id").isDefined)
+      assert(IcebergStats.partitionStats(spark, table).isDefined)
+    }
+    register()
+    val verbs: Seq[(String, () => Any)] = Seq(
+      "append" -> (() => IcebergSink.write(rows(31, 40), table, IcebergSink.Append)),
+      "overwrite" -> (() => IcebergSink.write(rows(1, 40), table, IcebergSink.Overwrite)),
+      "compact" -> (() => IcebergSink.compact(spark, table)),
+      "deleteWhereDV" -> (() => IcebergSink.deleteWhereDV(spark, table, "id <= 2")),
+      "upsert" -> (() => IcebergSink.upsert(spark, table,
+        Seq((5L, "g2", 1.0)).toDF("id", "g", "v"), Seq("id"))),
+      "rewriteManifests" -> (() => assert(IcebergSink.rewriteManifests(table)._2 == 1)))
+    verbs.foreach { case (verb, run) =>
+      val before = IcebergSink.snapshots(table).size
+      run()
+      assert(IcebergSink.snapshots(table).size == before + 1, verb)
+      val m = meta()
+      assert(m.path("statistics").size() == 1, verb)
+      assert(m.path("partition-statistics").size() == 1, verb)
+      assert(m.path("refs").has("pinned"), verb)
+      assert(m.path("properties").path("graft.converted-from").asText() == "delta", verb)
+      // a carried registration never answers for the snapshot that moved past it
+      assert(IcebergStats.ndv(table, "id").isEmpty, verb)
+      assert(IcebergStats.partitionStats(spark, table).isEmpty, verb)
+      register()
+    }
+  }
+
+  test("Delta change feed keeps partition values on commits without change files") {
+    val s = spark
+    import s.implicits._
+    val table = tmp()
+    IcebergSink.write((1L to 30L).map(i => (i, s"g${i % 3}", i * 0.5)).toDF("id", "lang", "v"),
+      table, IcebergSink.CreateExclusive, partitionBy = Seq("lang"))
+    DeltaSink.convertFromIceberg(spark, table)
+    val all = DeltaSink.readCdf(spark, table, -1)
+    assert(all.count() == 30)
+    assert(all.filter(col("lang").isNull).count() == 0)
+    assert(all.groupBy("lang").count().as[(String, Long)].collect().toMap ==
+      Map("g0" -> 10L, "g1" -> 10L, "g2" -> 10L))
+    DeltaSink.deleteWhere(spark, table, "id % 10 = 1", changeDataFeed = false)
+    val v = DeltaSink.latestVersion(table)
+    val changed = DeltaSink.readCdf(spark, table, v - 1, v)
+    assert(changed.filter(col("_change_type") === "delete").count() > 0)
+    assert(changed.filter(col("lang").isNull).count() == 0)
+    // the delete images are the deleted rows' files' rows, each in its partition
+    assert(changed.filter(col("_change_type") === "delete" && col("id") % 10 === 1)
+      .select("lang").as[String].collect().toSet == Set("g0", "g1", "g2"))
+  }
+
+  test("Iceberg delete manifests carry the table's default partition spec") {
+    val s = spark
+    import s.implicits._
+    def ts(day: Int) = java.sql.Timestamp.valueOf(f"2024-03-$day%02d 09:00:00")
+    val table = tmp() + "/tbl"
+    IcebergSink.write(Seq((1L, "en", ts(1)), (2L, "de", ts(2))).toDF("id", "lang", "ts"),
+      table, IcebergSink.CreateExclusive, partitionBy = Seq("lang"))
+    // spec 0 = identity(lang) field 1000; spec 1 = day(ts) field 1001
+    IcebergSink.evolvePartition(table, Seq("day(ts)"))
+    IcebergSink.write(Seq((3L, "en", ts(3))).toDF("id", "lang", "ts"), table,
+      IcebergSink.Append)
+    assert(IcebergSink.deleteWhere(spark, table, "id = 3") == 1L)
+    val deletes = IcebergSink.metaTable(spark, table, "manifests")
+      .filter(col("content") === 1).select("path", "partition_spec_id")
+      .as[(String, Int)].collect().toSeq
+    assert(deletes.map(_._2) == Seq(1))
+    val m = graft.sinks.IcebergAvro.readManifest(new File(deletes.head._1))
+    assert(m.specId == 1 && m.specJson.contains("\"field-id\":1001"))
+    assert(m.partitionFields.map(f => (f.name, f.fieldId)) == Seq(("ts_day", 1001)))
+    assert(IcebergSink.read(spark, table).select("id").as[Long].collect().sorted.toSeq ==
+      Seq(1L, 2L))
   }
 }
