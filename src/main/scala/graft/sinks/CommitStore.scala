@@ -1,7 +1,7 @@
 package graft.sinks
 
 import java.io.File
-import java.nio.file.{FileAlreadyExistsException, Files, Path, StandardCopyOption, StandardOpenOption}
+import java.nio.file.{FileAlreadyExistsException, Files, Path, StandardCopyOption}
 import java.util.concurrent.ConcurrentHashMap
 
 import scala.jdk.CollectionConverters._
@@ -22,7 +22,7 @@ import scala.jdk.CollectionConverters._
   * Iceberg metadata version (`iceberg_destination.rs:349-367`).
   * Store-specific spellings:
   *
-  *  - local/HDFS-like FS: `CREATE_NEW` open ([[CommitStore.Local]]);
+  *  - local/HDFS-like FS: a hard link onto the target ([[CommitStore.Local]]);
   *  - S3: `PutObject` with `If-None-Match: *` ([[HttpObjectStore]] speaks
   *    this over HTTP);
   *  - GCS: upload with `x-goog-if-generation-match: 0`;
@@ -185,12 +185,21 @@ object CommitStore {
     f.delete(): Unit
   }
 
-  /** Local-filesystem store: `CREATE_NEW` is the put-if-absent (POSIX
-    * O_EXCL — atomic on local FS and NFSv3+).
+  /** Local-filesystem store. The put-if-absent stages the bytes in a temp
+    * sibling and hard-links it into place: link(2) fails when the target
+    * exists (atomic on local FS and NFSv3+) and the target appears with
+    * its whole content. A reader never sees a half-written claim, and a
+    * writer that dies mid-put leaves no claim behind. `CREATE_NEW` and a
+    * write would give neither: the target is visible, empty, in between.
     */
   object Local extends CommitStore {
-    override def putIfAbsent(target: Path, bytes: Array[Byte]): Unit =
-      Files.write(target, bytes, StandardOpenOption.CREATE_NEW)
+    override def putIfAbsent(target: Path, bytes: Array[Byte]): Unit = {
+      val tmp = Files.createTempFile(target.getParent, ".graft-claim-", ".tmp")
+      try {
+        Files.write(tmp, bytes)
+        Files.createLink(target, tmp): Unit
+      } finally Files.deleteIfExists(tmp): Unit
+    }
     override def taskIO: Option[TaskIO] = Some(LocalTaskIO)
   }
 

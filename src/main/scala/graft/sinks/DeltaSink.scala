@@ -60,7 +60,7 @@ import org.apache.spark.sql.types._
   * 122,880-ROW parquet row groups; parquet-java sizes row groups in BYTES
   * (parquet.block.size), so the row-count knob has no direct equivalent —
   * the write path keeps the writer default. Log commits are atomic via
-  * CREATE_NEW — the single-writer equivalent of the reference's
+  * [[CommitStore.putIfAbsent]] — the single-writer equivalent of the reference's
   * conditional-put (delta_destination.rs:377-389 downgrades
   * copy_if_not_exists the same way).
   *

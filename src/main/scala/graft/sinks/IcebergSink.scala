@@ -29,7 +29,7 @@ import org.apache.spark.sql.types._
   *    append carries the previous snapshot's manifests forward (:302-312),
   *    create/overwrite reference only the new manifest (:304);
   *  - the new metadata is committed with an IF-NOT-EXISTS put
-  *    (`write_exclusive`, :349-367) — CREATE_NEW here; a concurrent commit
+  *    (`write_exclusive`, :349-367) — [[CommitStore.putIfAbsent]] here; a concurrent commit
   *    surfaces as [[OptimisticConcurrencyException]], retried whole-write ≤3
   *    times by [[writeWithRetry]] (reference OPTIMISTIC_CONCURRENCY_RETRIES,
   *    src/lib.rs:82,168-196);
@@ -2491,14 +2491,13 @@ object IcebergSink {
   /** What a snapshot commit changes. `carried`: None inherits the manifest
     * list of the target ref's head, Some(rows) replaces it. `schema` and
     * `spec` become current; `formatVersion` is a floor (versions only
-    * ratchet up); `summary` holds the verb's own summary keys;
-    * `startRowLineage` starts the v3 row-id clock at 0.
+    * ratchet up); `summary` holds the verb's own summary keys.
     */
   private case class Commit(operation: String, manifests: Seq[NewManifest],
       carried: Option[Seq[org.apache.avro.generic.GenericRecord]] = None,
       schema: Option[TableSchema] = None, spec: Option[Spec] = None,
       formatVersion: Int = 2, summary: Map[String, String] = Map.empty,
-      branch: Option[String] = None, startRowLineage: Boolean = false)
+      branch: Option[String] = None)
 
   /** THE Iceberg commit encoder — every commit that adds a snapshot ends
     * here, in the reference's fixed sequence (manifests, manifest list,
@@ -2573,8 +2572,7 @@ object IcebergSink {
     // commit assigned — and the table clock advances by the rows its data
     // files carry an assignment for (0 for pure deletes, replaces, and
     // materialized-`_row_id` rewrites)
-    Option(meta.get("next-row-id")).map(_.asLong())
-      .orElse(Option.when(c.startRowLineage)(0L)).foreach { next =>
+    Option(meta.get("next-row-id")).map(_.asLong()).foreach { next =>
         val assigned = c.manifests.collect { case m: AddManifest if m.content == 0 =>
           m.files.filter(_.firstRowId.isDefined).map(_.recordCount).sum }.sum
         snap.put("first-row-id", next)
@@ -2755,7 +2753,10 @@ object IcebergSink {
     // delete manifests carry forward verbatim — their (file, pos)
     // references stay valid because every data entry kept its sequence
     val carriedDeletes = listRows.filter(_.get("content").asInstanceOf[Int] == 1)
-    txn(store)(t => commitSnapshot(t, table, Head(hint, meta), Commit("replace",
+    // the base starts the v3 row-id clock at 0; the commit advances it by
+    // the rows it assigns
+    val base = Head(hint, meta.deepCopy[ObjectNode]().put("next-row-id", 0L))
+    txn(store)(t => commitSnapshot(t, table, base, Commit("replace",
       manifests.map { m =>
         AddManifest(0, m.entries.map { e =>
           IcebergAvro.DataFileInfo(e.path, e.sizeBytes, e.recordCount, e.stats,
@@ -2764,8 +2765,7 @@ object IcebergSink {
         }, specOf(m), m.schemaJson, entrySeqs = seqByPath)
       },
       carried = Some(carriedDeletes), formatVersion = 3,
-      summary = Map("graft.row-lineage" -> "enabled", "assigned-rows" -> next.toString),
-      startRowLineage = true))): Unit
+      summary = Map("graft.row-lineage" -> "enabled", "assigned-rows" -> next.toString)))): Unit
     next
   }
 
@@ -3597,9 +3597,19 @@ object IcebergSink {
     }
     val arr = newMeta.putArray("snapshots")
     kept.foreach(arr.add)
+    // a statistics registration computed at an expired snapshot names a
+    // snapshot that no longer exists: it leaves with it, file and all
+    val expiredIds = expired.map(_.get("snapshot-id").asLong()).toSet
+    val deadStats = Seq("statistics", "partition-statistics").flatMap { key =>
+      val (gone, live) = newMeta.path(key).elements().asScala.toSeq
+        .partition(e => expiredIds.contains(e.get("snapshot-id").asLong()))
+      if (gone.nonEmpty) newMeta.putArray(key).addAll(live.asJava): Unit
+      gone.map(e => abs(table, e.get("statistics-path").asText()))
+    }
     commitMetadata(table, store, hint, newMeta)
     def unlink(p: String): Unit = store.deleteObject(Paths.get(p))
     (expMeta -- keptMeta).foreach(unlink)
+    deadStats.foreach(unlink)
     val deadData = expData -- keptData -- deltaLive
     deadData.foreach(unlink)
     deadData.size
@@ -3725,18 +3735,27 @@ object IcebergSink {
     * Iceberg metadata. The hint is a floor, as in Hadoop-catalog tables:
     * the head is the newest `vN.metadata.json` from it on, so a claim
     * that landed before its hint put failed is what readers and writers
-    * see (a missing hint probes from v0).
+    * see (a missing hint probes from v0). The probe stops at a version
+    * that does not parse — a claim a store without atomic puts is still
+    * writing, or one whose writer died mid-put: the head is the last
+    * complete version, and a claim past it conflicts like any lost race.
     */
   private[sinks] def headOption(table: String): Option[Head] = {
     val f = hintFile(table)
     val floor =
       if (Files.exists(f)) Some(Files.readString(f).trim.toLong)
       else Some(0L).filter(v => Files.exists(metaFile(table, v)))
-    floor.map { v0 =>
-      var v = v0
-      while (Files.exists(metaFile(table, v + 1))) v += 1
-      Head(v, mapper.readTree(Files.readString(metaFile(table, v))))
+    def complete(v: Long) = {
+      val m = metaFile(table, v)
+      if (!Files.exists(m)) None
+      else scala.util.Try(mapper.readTree(Files.readString(m))).toOption.filter(_.isObject)
     }
+    @scala.annotation.tailrec
+    def probe(h: Head): Head = complete(h.version + 1) match {
+      case Some(meta) => probe(Head(h.version + 1, meta))
+      case None => h
+    }
+    floor.map(v => probe(Head(v, mapper.readTree(Files.readString(metaFile(table, v))))))
   }
 
   private[sinks] def head(table: String): Head = headOption(table).getOrElse(

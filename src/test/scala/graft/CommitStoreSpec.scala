@@ -288,6 +288,17 @@ class CommitStoreSpec extends AnyFunSuite {
     } finally server.close()
   }
 
+  test("local put-if-absent: the loser leaves the winner's bytes and no staging behind") {
+    val dir = Files.createTempDirectory("graft-claim-")
+    val target = dir.resolve("v1.metadata.json")
+    CommitStore.Local.putIfAbsent(target, "ours".getBytes)
+    intercept[FileAlreadyExistsException] {
+      CommitStore.Local.putIfAbsent(target, "theirs".getBytes)
+    }
+    assert(Files.readString(target) == "ours")
+    assert(dir.toFile.list().toSeq == Seq("v1.metadata.json"))
+  }
+
   test("in-memory hook can inject a conflicting writer before the put") {
     val target = Paths.get("/t/c.json")
     var storeRef: CommitStore.InMemory = null

@@ -216,6 +216,26 @@ class SinkSpec extends AnyFunSuite {
     assert(IcebergSink.read(spark, table).count() == 3L * 5)
   }
 
+  test("Iceberg head read stops at a metadata version still being written") {
+    val table = tmp()
+    IcebergSink.write(sampleDf, table, IcebergSink.CreateExclusive)
+    IcebergSink.write(sampleDf, table, IcebergSink.Append)
+    val next = Paths.get(table, "metadata", "v2.metadata.json")
+    // a claim visible before its bytes: empty, then a partial prefix
+    Seq("", "{\"format-version\":2,\"table-").foreach { partial =>
+      Files.writeString(next, partial)
+      assert(IcebergSink.read(spark, table).count() == 6)
+      assert(IcebergSink.snapshots(table).size == 2)
+      // a writer's claim of that version loses like any race
+      intercept[IcebergSink.OptimisticConcurrencyException] {
+        IcebergSink.write(sampleDf, table, IcebergSink.Append)
+      }
+    }
+    Files.delete(next)
+    IcebergSink.write(sampleDf, table, IcebergSink.Append)
+    assert(IcebergSink.read(spark, table).count() == 9)
+  }
+
   test("Iceberg OCC: three concurrent appenders all commit through retries") {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
@@ -5152,6 +5172,18 @@ class SinkSpec extends AnyFunSuite {
       assert(IcebergStats.partitionStats(spark, table).isEmpty, verb)
       register()
     }
+    // expiring the snapshot a registration was computed at takes the
+    // registration and its file with it
+    val files = Seq("statistics", "partition-statistics")
+      .map(k => new File(table, meta().path(k).get(0).get("statistics-path").asText()))
+    assert(files.forall(_.exists()))
+    IcebergSink.write(rows(41, 45), table, IcebergSink.Append)
+    IcebergSink.expireSnapshots(table, keepLast = 1)
+    val m = meta()
+    assert(m.path("statistics").size() == 0 && m.path("partition-statistics").size() == 0)
+    assert(!files.exists(_.exists()))
+    assert(m.path("refs").has("pinned"))
+    register()
   }
 
   test("Delta change feed keeps partition values on commits without change files") {
