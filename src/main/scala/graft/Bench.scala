@@ -37,6 +37,12 @@ object Bench {
     * suite whose median checkpoint sits at ~1.8 is in the slow regime and
     * its numbers are 3× pessimistic — exactly what `contention_index`
     * now says (≈5) and what the rerun gate acts on.
+    *
+    * Calibrate it from the warm in-suite checkpoints every run prints as
+    * `canary_checkpoints` in its JSON line: a canary timed in a JIT-cold
+    * JVM right after warm-up reads about 2× high (median 0.387 s against
+    * 0.203 s in-suite on one 4-core host), and a reference taken there
+    * reads contended suites as uncontended.
     */
   val CanaryRefSec = 0.35
   /** Samples per canary checkpoint; median kept (see [[CanaryRefSec]]). */
@@ -90,15 +96,6 @@ object Bench {
       // which is what the layout buys every subsequent query.
       sources.BucketedTables.ensure(spark, sfDir)
       canaryOnce(spark, sfDir) // untimed: JIT/codegen-warm the canary plan too
-    }
-    // Dev-only: SPARK_GRAFT_CANARY_ONLY=N runs the canary N times in an
-    // otherwise-idle session and prints every sample — the calibration tool
-    // behind [[CanaryRefSec]]. Exits without touching the suite.
-    sys.env.get("SPARK_GRAFT_CANARY_ONLY").foreach { n =>
-      val samples = (1 to n.toInt).map(_ => canaryOnce(spark, sfDir))
-      println(samples.map(s => f"$s%.3f").mkString("canary_samples=[", ",", "]"))
-      println(f"canary_min=${samples.min}%.3f canary_median=${samples.sorted.apply(samples.size / 2)}%.3f")
-      spark.stop(); return
     }
     // Dev-only: SPARK_GRAFT_REPS=N times each query N times and keeps the
     // minimum — stable comparisons when iterating on one operator. The

@@ -26,7 +26,10 @@ import org.apache.spark.sql.types._
   *    (:446-458) + metaData;
   *  - version 1 commit = one Add action per data file with numRecords stats
   *    (:460-470) — the exact two-commit create/append shape asserted by the
-  *    reference's integration test (tests/basic_integration.rs:48-58).
+  *    reference's integration test (tests/basic_integration.rs:48-58);
+  *  - every version leads with a `commitInfo` naming its operation, with
+  *    delta-spark's `operationParameters`/`operationMetrics` — every log
+  *    version is written by ONE encoder, [[commitVersion]].
   *
   * Beyond the reference's create/overwrite (it never appends to Delta and
   * has no maintenance verbs), the sink completes the protocol the way a
@@ -64,18 +67,16 @@ import org.apache.spark.sql.types._
   * conditional-put (delta_destination.rs:377-389 downgrades
   * copy_if_not_exists the same way).
   *
-  * PROTOCOL BOUNDARY: tables start at Delta protocol v1 exactly — the
-  * same pin as the reference (delta_destination.rs:446-458) — and never
-  * emit actions a v1 reader can't replay UNTIL an explicit opt-in verb
-  * upgrades them: [[renameColumn]]/[[dropColumn]] bump to reader 2 /
-  * writer 5 with `delta.columnMapping.mode=name` declared in the
-  * metaData configuration, [[deleteWhereDV]]/[[updateWhereDV]] bump to
-  * reader 3 / writer 7 with feature lists, writing spec-format DV
-  * sidecars (framed + CRC'd portable RoaringBitmapArray, base85 "u"
-  * descriptors) external spec-compliant readers parse. Features beyond
-  * those (generated columns, row tracking, v2 checkpoints) stay out of
-  * scope, and both [[resolve]]'s reader gate and [[requireWritable]]
-  * refuse tables demanding them.
+  * PROTOCOL: a table starts at Delta protocol (1, 1) — the reference's
+  * pin (delta_destination.rs:446-458) — unless its schema holds a VARIANT
+  * column, and only an opt-in verb raises it, in the commit that starts
+  * using the feature. [[Features]] is the feature table (each feature's
+  * legacy pair, whether readers must know it, the verb that turns it on);
+  * the encoder picks the protocol from it once for every verb. Deletion
+  * vectors are spec-format sidecars (framed + CRC'd portable
+  * RoaringBitmapArray, base85 "u" descriptors) external readers parse.
+  * [[resolve]]'s reader gate refuses a reader feature outside the table,
+  * and [[writable]] a writer version above 7.
   */
 object DeltaSink {
   private val mapper = new ObjectMapper()
@@ -338,12 +339,6 @@ object DeltaSink {
       configuration: Map[String, String], domains: Map[String, String],
       txns: Map[String, Long], live: Seq[AddEntry])
 
-  /** Writes `df` as a brand-new Delta table. Returns true if written; false
-    * if the target was non-empty and overwrite was not requested (the
-    * reference's refuse-and-return, delta_destination.rs:421-427).
-    * `partitionBy` lays the table out in Hive-style partition directories
-    * recorded in the log (see object doc).
-    */
   /** Clusters rows by the table's partition columns before a PARTITIONED
     * write (guide §6 — Iceberg's `write.distribution-mode=hash`, Delta's
     * optimized write): without it every write task emits one file per
@@ -361,6 +356,12 @@ object DeltaSink {
     if (cols.isEmpty) df
     else df.repartition(cols.map(org.apache.spark.sql.functions.col): _*)
 
+  /** Writes `df` as a brand-new Delta table. Returns true if written; false
+    * if the target was non-empty and overwrite was not requested (the
+    * reference's refuse-and-return, delta_destination.rs:421-427).
+    * `partitionBy` lays the table out in Hive-style partition directories
+    * recorded in the log (see object doc).
+    */
   def write(df: DataFrame, table: String, overwrite: Boolean = false,
       maxRecordsPerFile: Long = MaxRecordsPerFile,
       partitionBy: Seq[String] = Nil,
@@ -377,26 +378,48 @@ object DeltaSink {
     // pipeline (delta_destination.rs:70-229: upload data files, then
     // conditionally put the commit). The refuse-unless-overwrite decision
     // was already taken above, and the target has been emptied by then.
-    // The create claims v0 then puts v1: a lost v0 reclaims the files, a
-    // failed v1 leaves an empty table
+    // A lost claim reclaims the files; a failed v1 leaves an empty table
     Txn(store) { txn =>
       val adds = writeStaged(txn, dir, clusterByPartitions(df, partitionBy),
         partitionBy, maxRecordsPerFile, java.util.UUID.randomUUID().toString,
         TaskWrite.sparkNames)
-      Files.createDirectories(logDir(table))
-
-      val now = System.currentTimeMillis()
       // Reference semantics: sink schemas are nullable-by-default (SURVEY.md
       // §1.2; pg_arrow_source.rs:233 sets nullable=true unconditionally), and
       // Spark file scans surface nullable columns anyway.
-      val schemaString = StructType(df.schema.fields.map(_.copy(nullable = true))).json
-      val commit0 = Seq(protocolJsonFor(df.schema),
-        metaDataJson(java.util.UUID.randomUUID().toString, schemaString, partitionBy, now))
-      claimVersion(txn, table, 0, commit0)
-      commitAtomic(store, versionFile(table, 1), adds.map(a => addJson(a)))
+      create(txn, table, freshTable(),
+        Commit("CREATE TABLE", schema = Some(nullable(df.schema)),
+          partitionColumns = Some(partitionBy),
+          features = if (hasVariant(df.schema)) Set("variantType") else Set.empty),
+        Commit("WRITE", Seq("mode" -> (if (overwrite) "Overwrite" else "ErrorIfExists"),
+          "partitionBy" -> jsonList(partitionBy)), adds = adds))
     }
     true
   }
+
+  /** THE create, shared by [[write]], [[convertFromIceberg]] and
+    * [[cloneTable]]: `meta` commits version 0 (protocol + metaData) over
+    * `base`, the fresh-table skeleton, and `data` version 1 (the adds) —
+    * the reference's two-commit layout. `dropOnFailure` deletes version 0
+    * again when version 1 fails, so a metadata-only create leaves no table
+    * behind.
+    */
+  private def create(t: Txn, table: String, base: Snapshot, meta: Commit,
+      data: Commit, dropOnFailure: Boolean = false): Unit = {
+    Files.createDirectories(logDir(table))
+    commitVersion(t, table, base, 0L, meta)
+    try commitVersion(t, table, base, 1L, data)
+    catch { case e: Throwable if dropOnFailure =>
+      scala.util.Try(t.store.deleteObject(versionFile(table, 0)))
+      throw e
+    }
+  }
+
+  /** The base a create commits over: no version yet, a fresh id, born
+    * now, protocol (1, 1).
+    */
+  private def freshTable(): Snapshot =
+    Snapshot(-1L, java.util.UUID.randomUUID().toString, System.currentTimeMillis(),
+      new StructType(), Nil, 1, 1, Nil, Nil, Map.empty, Map.empty, Map.empty, Nil)
 
   /** CREATES a Delta table with GENERATED COLUMNS (spec §Generated
     * Columns, `delta.generationExpression` field metadata + writer v4):
@@ -424,12 +447,10 @@ object DeltaSink {
     }
     val ok = write(withCols, table, overwrite = false, maxRecordsPerFile,
       partitionBy, store)
-    if (ok) {
-      // generated columns are a WRITER feature: legacy v4 (spec) — bumped
-      // in a follow-up protocol commit so pre-v4 writers refuse the table
-      commitAtomic(store, versionFile(table, 2),
-        Seq("""{"protocol":{"minReaderVersion":1,"minWriterVersion":4}}"""))
-    }
+    // generated columns are a WRITER feature: legacy v4 (spec) — bumped
+    // in a follow-up protocol commit so pre-v4 writers refuse the table
+    if (ok) Txn(store)(commitVersion(_, table, resolve(df.sparkSession, table, None),
+      2L, Commit("UPGRADE PROTOCOL", features = Set("generatedColumns"))))
     ok
   }
 
@@ -467,18 +488,11 @@ object DeltaSink {
         partCols.map(c => c -> strPv(pvals.getOrElse(c, null), c)).toMap,
         f.length(), f.lastModified(), s"""{"numRecords":$n}""")
     }
-    val now = System.currentTimeMillis()
-    Files.createDirectories(logDir(table))
-    val commit0 = Seq(protocolJson,
-      metaDataJson(java.util.UUID.randomUUID().toString,
-        StructType(schema.fields.map(_.copy(nullable = true))).json,
-        partCols, now))
-    commitAtomic(store, versionFile(table, 0), commit0)
-    try commitAtomic(store, versionFile(table, 1), adds.map(a => addJson(a)))
-    catch { case e: Throwable =>
-      scala.util.Try(store.deleteObject(versionFile(table, 0)))
-      throw e
-    }
+    val params = Seq("sourceFormat" -> "iceberg")
+    Txn(store)(create(_, table, freshTable(),
+      Commit("CONVERT", params, schema = Some(nullable(schema)),
+        partitionColumns = Some(partCols)),
+      Commit("CONVERT", params, adds = adds), dropOnFailure = true))
     adds.size
   }
 
@@ -520,43 +534,18 @@ object DeltaSink {
             d.offset, d.sizeInBytes, d.cardinality)
         })
     }
-    Files.createDirectories(logDir(target))
-    val now = System.currentTimeMillis()
-    val protocol =
-      if (meta.minReader == 1 && meta.minWriter == 1)
-        protocolJson
-      else {
-        def lst(fs: Seq[String]) =
-          fs.distinct.sorted.map(esc).mkString("[", ",", "]")
-        s"""{"protocol":{"minReaderVersion":${meta.minReader},""" +
-          s""""minWriterVersion":${meta.minWriter}""" +
-          (if (meta.minReader >= 3)
-            s""","readerFeatures":${lst(meta.readerFeatures)}""" +
-              s""","writerFeatures":${lst(meta.writerFeatures)}"""
-          else "") + "}}"
-      }
-    // an ICT source's clone RESTARTS its own commit clock: the
-    // enablement properties are table-local (the clone's history begins
-    // at ITS v0), and v0 must lead with a commitInfo or the per-commit
-    // probe chain never starts — config would claim ICT while every
-    // commit went unstamped, the one inconsistency the feature forbids
-    val ict = meta.configuration
-      .get("delta.enableInCommitTimestamps").contains("true")
-    val config = meta.configuration ++ mappingConfig(meta.schema) ++
-      (if (ict) Map(
-        "delta.inCommitTimestampEnablementVersion" -> "0",
-        "delta.inCommitTimestampEnablementTimestamp" -> now.toString)
-      else Map.empty)
-    val commit0 =
-      (if (ict) Seq(s"""{"commitInfo":{"inCommitTimestamp":$now,"timestamp":$now}}""")
-       else Nil) ++
-      Seq(protocol,
-        metaDataJson(java.util.UUID.randomUUID().toString, meta.schema.json,
-          // the source's table properties travel with the clone — CHECK
-          // constraints included (real CLONE copies them)
-          Nil, now, config))
-    commitAtomic(store, versionFile(target, 0), commit0)
-    commitAtomic(store, versionFile(target, 1), adds.map(a => addJson(a)))
+    // the clone starts from the source's protocol and carries its table
+    // properties — CHECK constraints included (real CLONE copies them).
+    // An ICT source's clone RESTARTS its own commit clock: the encoder
+    // re-pins the enablement properties at the clone's v0, which it stamps
+    val params = Seq("source" -> source, "sourceVersion" -> meta.version.toString,
+      "isShallow" -> "true")
+    Txn(store)(create(_, target, freshTable().copy(minReader = meta.minReader,
+        minWriter = meta.minWriter, readerFeatures = meta.readerFeatures,
+        writerFeatures = meta.writerFeatures),
+      Commit("CLONE", params, schema = Some(meta.schema),
+        configuration = Some(meta.configuration)),
+      Commit("CLONE", params, adds = adds)))
     adds.size
   }
 
@@ -599,8 +588,7 @@ object DeltaSink {
       mergeSchema: Boolean): Long = {
     val dir = new File(table)
     require(logDir(table).toFile.isDirectory, s"not a Delta table (no _delta_log): $table")
-    val state = resolve(df0.sparkSession, table, None)
-    requireWritable(state.minWriter, table)
+    val state = writable(df0.sparkSession, table)
     // GENERATED COLUMNS (spec §Generated Columns): a batch may OMIT a
     // generated column — the writer computes it (in schema order, so a
     // generated column may reference an earlier one) — and a batch that
@@ -689,8 +677,12 @@ object DeltaSink {
       if (!mergeSchema) { SchemaGate.enforce(df.schema, state.schema); None }
       else evolveAgainst(state.schema)
     val txn = java.util.UUID.randomUUID().toString
-    val txnLine = txn0.map { case (appId, v) =>
-      s"""{"txn":{"appId":${esc(appId)},"version":$v}}"""
+    val rowTracked = state.configuration.get(RowTrackingConf).contains("true")
+    val (operation, params) = txn0 match {
+      case Some((appId, v)) => ("STREAMING UPDATE",
+        Seq("outputMode" -> "Append", "queryId" -> appId, "epochId" -> v.toString))
+      case None => ("WRITE", Seq("mode" -> "Append",
+        "partitionBy" -> jsonList(state.partitionColumns), "mergeSchema" -> mergeSchema.toString))
     }
     Txn(store, Txn.Retries) { t =>
       // stage under the EVOLVED mapping: an added column's fresh physical
@@ -700,16 +692,6 @@ object DeltaSink {
             state.partitionColumns),
           evolvedSchema.getOrElse(state.schema)),
         state.partitionColumns, MaxRecordsPerFile, txn, txnNames(".snappy.parquet"))
-      // Version through which the txn watermark has been validated. A replay
-      // of THIS batch (two speculative executions of one foreachBatch) can
-      // commit at any version number without ever colliding with us, so the
-      // watermark must be re-checked against every version that appeared
-      // since the last check — before EVERY commit attempt, not only after a
-      // collision. CREATE_NEW succeeding at `next` then proves no commit
-      // (and so no competing replay) landed between the check and ours:
-      // writers only ever claim latestVersion+1, so an intervening commit
-      // would have claimed `next` first.
-      var checkedThrough = state.version
       // Version floor proven by conditional-put failures: a putIfAbsent that
       // throws AlreadyExists is AUTHORITATIVE evidence the version exists even
       // when the store's LISTING hasn't surfaced it yet (an eventually-
@@ -721,60 +703,30 @@ object DeltaSink {
         val latest = latestVersion(table)
         val next = math.max(latest + 1, minNext)
         minNext = next + 1 // a lost claim at `next` proves `next` exists
-        val replayed = txn0.exists { case (appId, v) =>
-          latest > checkedThrough && {
-            val st = resolve(df.sparkSession, table, None)
-            checkedThrough = st.version
-            st.txns.get(appId).exists(_ >= v)
-          }
-        }
+        // The snapshot this attempt commits over, re-read when a commit
+        // landed since ours and the commit depends on it: the txn watermark
+        // (a replay of THIS batch — two speculative executions of one
+        // foreachBatch — can land at any version without colliding with us;
+        // CREATE_NEW at `next` then proves none landed since the check), an
+        // evolved schema (delta-spark's MetadataChangedException: the caller
+        // re-runs), the row-id high-water mark (racing appends never mint
+        // overlapping ids).
+        val base =
+          if (latest > state.version &&
+              (txn0.isDefined || evolvedSchema.isDefined || rowTracked))
+            resolve(df.sparkSession, table, None)
+          else state
         // a batch already in the table ends the transaction uncommitted
-        if (replayed) -1L
+        if (txn0.exists { case (appId, v) => base.txns.get(appId).exists(_ >= v) }) -1L
         else {
-          // a schema-evolving commit must not clobber a concurrent evolution:
-          // if ANY commit landed after our snapshot, re-replay and require the
-          // schema we evolved from to be unchanged (delta-spark aborts with
-          // MetadataChangedException on concurrent metadata change — same
-          // contract here; the caller re-runs the append against fresh state)
-          if (evolvedSchema.isDefined && latest > state.version &&
-              resolve(df.sparkSession, table, None).schema != state.schema)
+          if (evolvedSchema.isDefined && base.schema != state.schema)
             throw new java.util.ConcurrentModificationException(
               "table schema changed concurrently during a mergeSchema append; re-run the append")
           // evolved metaData (if any) rides in the SAME commit as the adds:
           // either both land or neither — a reader never sees files whose
-          // columns the declared schema doesn't know about. createdTime is
-          // the TABLE's creation time — preserved like the id.
-          val metaLine = evolvedSchema.map(sch => metaDataJson(state.id,
-            sch.json, state.partitionColumns,
-            // external logs may omit createdTime (replays as 0) — don't
-            // propagate a zero birth-time into the evolved action
-            if (state.createdTime != 0L) state.createdTime
-            else System.currentTimeMillis(),
-            // a metaData action REPLACES configuration wholesale, so every
-            // re-emission must carry the FULL replayed map (CHECK
-            // constraints would otherwise silently vanish) plus the
-            // mapping mode/maxColumnId refresh (the added column may have
-            // raised the high-water id)
-            state.configuration ++ mappingConfig(sch)))
-          // ROW TRACKING: fresh ids assign above the CURRENT high-water
-          // mark — re-read whenever anything landed since our snapshot, so
-          // two racing appends can never mint overlapping ids (the loser's
-          // conditional put fails and it re-bases on the next attempt)
-          val (addsFinal, domainLine) =
-            if (!state.configuration.get(RowTrackingConf).contains("true"))
-              (adds, None)
-            else {
-              val domainsNow =
-                if (latest > state.version) resolve(df.sparkSession, table, None).domains
-                else state.domains
-              val hwm = rowIdHighWaterMark(domainsNow).getOrElse(-1L)
-              val (w, newHwm) = assignRowIds(adds, hwm, next)
-              (w, Some(domainJson(RowTrackingDomain,
-                s"""{"rowIdHighWaterMark":$newHwm}""")))
-            }
-          claimVersion(t, table, next,
-            metaLine.toSeq ++ txnLine.toSeq ++ addsFinal.map(a => addJson(a)) ++
-              domainLine.toSeq)
+          // columns the declared schema doesn't know about
+          commitVersion(t, table, base, next, Commit(operation, params,
+            newRows = adds, txn = txn0, schema = evolvedSchema))
           // The append is committed at this point: an auto-checkpoint failure
           // (IO error) must not surface as an append failure — the caller
           // would retry and double-write the batch. Best-effort only.
@@ -808,8 +760,7 @@ object DeltaSink {
       // diff against FRESH state every attempt: a concurrent commit
       // changes the current live set, and a restore computed against a
       // stale one would resurrect or orphan its files
-      val current = resolve(spark, table, None)
-      requireWritable(current.minWriter, table)
+      val current = writable(spark, table)
       require(current.schema == target.schema,
         "restore across a schema change is not supported: restore the data " +
           "first, then evolve, or vice versa")
@@ -822,20 +773,16 @@ object DeltaSink {
       val readds = target.live.filter(a =>
         !currentByPath.get(a.path).contains(a.dv))
       val removes = current.live.filterNot(a => targetPaths.contains(a.path))
-      if (readds.nonEmpty || removes.nonEmpty) {
-        val now = System.currentTimeMillis()
-        val lines = removes.map(a =>
-          s"""{"remove":{"path":${esc(a.path)},"deletionTimestamp":$now,"dataChange":true}}""") ++
-          readds.map(a => addJson(a))
-        // Claim exactly the version AFTER the one the diff was computed
-        // against (writers only claim latestVersion+1): a commit landing
-        // between the replay above and this claim then collides and
-        // triggers the re-diff retry — re-reading latestVersion here would
-        // let that interleaved commit (e.g. a concurrent compact) be
-        // silently built over with a stale diff, resurrecting files it
-        // removed.
-        claimVersion(t, table, current.version + 1, lines)
-      }
+      // Claim exactly the version AFTER the one the diff was computed
+      // against (writers only claim latestVersion+1): a commit landing
+      // between the replay above and this claim then collides and
+      // triggers the re-diff retry — re-reading latestVersion here would
+      // let that interleaved commit (e.g. a concurrent compact) be
+      // silently built over with a stale diff, resurrecting files it
+      // removed.
+      if (readds.nonEmpty || removes.nonEmpty)
+        commitVersion(t, table, current, current.version + 1, Commit("RESTORE",
+          Seq("version" -> asOfVersion.toString), adds = readds, removes = removes))
       (readds.size, removes.size)
     })
   }
@@ -866,8 +813,7 @@ object DeltaSink {
       store: CommitStore = CommitStore.Local): (Int, Int) = {
     import org.apache.spark.sql.functions._
     val dir = new File(table)
-    val state = resolve(spark, table, None)
-    requireWritable(state.minWriter, table)
+    val state = writable(spark, table)
     // ROW TRACKING: an id-preserving compaction MATERIALIZES `_row_id`
     // AND `_row_commit_version` into the rewritten parquet (spec:
     // dataChange=false rewrites must carry row lineage explicitly) — the
@@ -919,10 +865,7 @@ object DeltaSink {
     // a post-delete compact must size for the survivors, not the masked
     // rows; no data scan either way); maxRecordsPerFile still caps each
     // file, so the result is the minimal file count at the declared size.
-    val tailRows = tail.map { a =>
-      Option(a.stats).map(s => mapper.readTree(s).path("numRecords").asLong(0L))
-        .getOrElse(0L) - a.dv.map(_.cardinality).getOrElse(0L)
-    }.sum
+    val tailRows = tail.map(liveRowsOf).sum
     val nTailFiles = math.max(1,
       ((tailRows + maxRecordsPerFile - 1) / maxRecordsPerFile).toInt)
     val source =
@@ -943,30 +886,28 @@ object DeltaSink {
     // record the new clustered generation (this txn + the carried ones
     // still live) in the same commit; a one-off ZORDER over a clustered
     // table RESETS the generations — its layout is not the declared key's
-    val domainLines =
+    val domains =
       if (liquid) {
         val liveGens = (prevGens.filter(g => carried.exists(_.path.contains(g)))
           .toSeq.sorted :+ txn)
-        val colsJson = clusterPhys.map(esc).mkString("[", ",", "]")
-        val gensJson = liveGens.map(esc).mkString("[", ",", "]")
-        Seq(domainJson(LiquidDomain,
-          s"""{"columns":$colsJson,"generations":$gensJson}"""))
+        Seq(LiquidDomain ->
+          s"""{"columns":${jsonList(clusterPhys)},"generations":${jsonList(liveGens)}}""")
       } else if (zorderBy.nonEmpty && state.domains.contains(LiquidDomain))
-        Seq(domainJson(LiquidDomain,
-          s"""{"columns":[],"generations":[]}"""))
+        Seq(LiquidDomain -> """{"columns":[],"generations":[]}""")
       else Nil
-    commitRewrite(spark, store, table, state.version, tail.map(_.path).toSet,
+    commitRewrite(spark, store, table, state, tail,
       superseded = s"concurrent compaction of $table; compaction aborted",
       contended = s"concurrent writers on $table; compaction aborted") { t =>
       val adds = writeStaged(t, dir, toPhysical(packed, state.schema),
         state.partitionColumns, maxRecordsPerFile, txn, txnNames())
-      (rewriteLines(tail, adds) ++ domainLines, (tail.size, adds.size))
+      (Commit("OPTIMIZE", Seq("zOrderBy" -> jsonList(clusterCols)), adds = adds,
+        removes = tail, dataChange = false, domains = domains), (tail.size, adds.size))
     }
   }
 
-  /** Commits a layout rewrite ([[compact]], [[reorgPurge]]) read at
-    * `readVersion`: `stage` writes the new files and returns the commit's
-    * lines with the verb's result, then up to [[Txn.Retries]] lost claims
+  /** Commits a layout rewrite ([[compact]], [[reorgPurge]]) of `inputs`,
+    * read from `state`: `stage` writes the new files and returns the
+    * commit with the verb's result, then up to [[Txn.Retries]] lost claims
     * retry before the transaction fails with `contended`. The rewrite
     * stays valid only while every file it read is STILL live — a
     * concurrent append only adds files (compatible; ours remove nothing of
@@ -981,33 +922,24 @@ object DeltaSink {
     * closing the window.
     */
   private def commitRewrite[A](spark: SparkSession, store: CommitStore,
-      table: String, readVersion: Long, inputPaths: Set[String],
+      table: String, state: Snapshot, inputs: Seq[AddEntry],
       superseded: String, contended: String)(
-      stage: Txn => (Seq[String], A)): A =
+      stage: Txn => (Commit, A)): A =
     Txn(store, Txn.Retries, e => new IllegalStateException(contended, e)) { t =>
-      val (lines, result) = stage(t)
-      var validatedThrough = readVersion
+      val (commit, result) = stage(t)
+      val inputPaths = inputs.map(_.path).toSet
+      var base = state
       t.attempt { _ =>
         val latest = latestVersion(table)
-        if (latest > validatedThrough) {
-          val liveNow = resolve(spark, table, None).live.map(_.path).toSet
-          validatedThrough = latest
-          if (!inputPaths.subsetOf(liveNow)) throw new IllegalStateException(superseded)
+        if (latest > base.version) {
+          base = resolve(spark, table, None)
+          if (!inputPaths.subsetOf(base.live.map(_.path).toSet))
+            throw new IllegalStateException(superseded)
         }
-        claimVersion(t, table, latest + 1, lines)
+        commitVersion(t, table, base, latest + 1, commit)
       }
       result
     }
-
-  /** A layout rewrite's log lines: `inputs` removed, `adds` added, both
-    * without a data change.
-    */
-  private def rewriteLines(inputs: Seq[AddEntry], adds: Seq[AddEntry]): Seq[String] = {
-    val now = System.currentTimeMillis()
-    inputs.map(a =>
-      s"""{"remove":{"path":${esc(a.path)},"deletionTimestamp":$now,"dataChange":false}}""") ++
-      adds.map(a => addJson(a, dataChange = false))
-  }
 
   /** REORG … APPLY (PURGE) — materialize deletion vectors: rewrites ONLY
     * the DV-carrying live files as their survivor rows and drops the DVs,
@@ -1026,8 +958,7 @@ object DeltaSink {
       maxRecordsPerFile: Long = MaxRecordsPerFile,
       store: CommitStore = CommitStore.Local): (Int, Long) = {
     val dir = new File(table)
-    val state = resolve(spark, table, None)
-    requireWritable(state.minWriter, table)
+    val state = writable(spark, table)
     val dvAdds = state.live.filter(_.dv.isDefined)
     if (dvAdds.isEmpty) return (0, 0L)
     // a row-tracked table's DV debt retires through COMPACT, whose
@@ -1040,10 +971,7 @@ object DeltaSink {
     // survivors of the touched files only — the clean files never enter
     // the job; bin sizing from log stats (numRecords − DV cardinality),
     // no data scan to plan
-    val survivorRows = dvAdds.map { a =>
-      Option(a.stats).map(s => mapper.readTree(s).path("numRecords").asLong(0L))
-        .getOrElse(0L) - a.dv.map(_.cardinality).getOrElse(0L)
-    }.sum
+    val survivorRows = dvAdds.map(liveRowsOf).sum
     val nFiles = math.max(1,
       ((survivorRows + maxRecordsPerFile - 1) / maxRecordsPerFile).toInt)
     val survivors = readState(spark, table, state.copy(live = dvAdds), store)
@@ -1051,13 +979,14 @@ object DeltaSink {
     // DV-masked survivors are arbitrarily skewed across the touched
     // files — round-robin repartition keeps every bin under the cap
     // (the same reasoning as compact's DV branch)
-    commitRewrite(spark, store, table, state.version, dvAdds.map(_.path).toSet,
+    commitRewrite(spark, store, table, state, dvAdds,
       superseded = s"concurrent rewrite of $table; reorg aborted",
       contended = s"concurrent writers on $table; reorg aborted") { t =>
       val adds = writeStaged(t, dir,
         toPhysical(survivors.repartition(nFiles), state.schema),
         state.partitionColumns, maxRecordsPerFile, txn, txnNames())
-      (rewriteLines(dvAdds, adds), (dvAdds.size, purgedRows))
+      (Commit("REORG", Seq("applyPurge" -> "true"), adds = adds, removes = dvAdds,
+        dataChange = false), (dvAdds.size, purgedRows))
     }
   }
 
@@ -1105,8 +1034,7 @@ object DeltaSink {
     import org.apache.spark.sql.functions._
     require(keys.nonEmpty, "merge requires at least one key column")
     val dir = new File(table)
-    val state = resolve(spark, table, None)
-    requireWritable(state.minWriter, table)
+    val state = writable(spark, table)
     val tableCols = state.schema.fieldNames.toSeq
     // Delete-marked source rows remove their match and insert nothing.
     // The key-uniqueness guard rides the rewrite itself (a window count +
@@ -1175,10 +1103,7 @@ object DeltaSink {
       val adds = writeStaged(t, dir,
         toPhysical(withConstraintCheck(newData, state.configuration), state.schema),
         state.partitionColumns, MaxRecordsPerFile, txn, txnNames())
-      val now = System.currentTimeMillis()
-      val removes = touched.map(a =>
-        s"""{"remove":{"path":${esc(a.path)},"deletionTimestamp":$now,"dataChange":true}}""")
-      if ((removes ++ adds).nonEmpty) { // else nothing to change
+      if ((touched ++ adds).nonEmpty) { // else nothing to change
         // CHANGE DATA FEED: the merge's row-level change images, written as
         // CDC files in the SAME commit (Delta CDF's design — computing the
         // images at merge time costs two delta-sized joins over the touched
@@ -1216,8 +1141,9 @@ object DeltaSink {
           writeStaged(t, dir, toPhysical(cdcDf, state.schema), Nil,
             MaxRecordsPerFile, txn, cdcNames)
         }
-        claimVersion(t, table, state.version + 1,
-          removes ++ adds.map(a => addJson(a)) ++ cdcAdds.map(cdcJson))
+        commitVersion(t, table, state, state.version + 1, Commit("MERGE",
+          Seq("matchKeys" -> jsonList(keys)), adds = adds, removes = touched,
+          cdc = cdcAdds))
       }
       (touched.size, state.live.size - touched.size, adds.size)
     }
@@ -1262,8 +1188,7 @@ object DeltaSink {
       store: CommitStore, changeDataFeed: Boolean): Long = {
     import org.apache.spark.sql.functions.{coalesce, expr, input_file_name, lit}
     val dir = new File(table)
-    val state = resolve(spark, table, None)
-    requireWritable(state.minWriter, table)
+    val state = writable(spark, table)
     val fileCol = s"__graft_rf_${java.util.UUID.randomUUID().toString.take(8)}"
     // which files hold a match: URI→path suffix match, same contract as merge
     val hitPaths = readState(spark, table, state, store)
@@ -1293,14 +1218,19 @@ object DeltaSink {
       val matchedRows =
         if (changeDataFeed) cdcAdds.map(rowsOf).sum / imageRowsPerMatch
         else matched.count()
-      val now = System.currentTimeMillis()
-      val removes = touched.map(a =>
-        s"""{"remove":{"path":${esc(a.path)},"deletionTimestamp":$now,"dataChange":true}}""")
-      claimVersion(t, table, state.version + 1,
-        removes ++ adds.map(a => addJson(a)) ++ cdcAdds.map(cdcJson))
+      val (operation, rowsMetric) = dmlOperation(replacement)
+      commitVersion(t, table, state, state.version + 1, Commit(operation,
+        Seq("predicate" -> predicate), adds = adds, removes = touched, cdc = cdcAdds,
+        metrics = Seq(rowsMetric -> matchedRows)))
       matchedRows
     }
   }
+
+  /** A row-level DML commit's operation and row-count metric: an UPDATE
+    * when the matched rows have a replacement, else a DELETE.
+    */
+  private def dmlOperation(replacement: Option[DataFrame]): (String, String) =
+    if (replacement.isDefined) ("UPDATE", "numUpdatedRows") else ("DELETE", "numDeletedRows")
 
   /** UPDATE WHERE — row-level update (Delta UPDATE semantics,
     * copy-on-write): ONE commit rewrites only the files containing a
@@ -1402,8 +1332,7 @@ object DeltaSink {
       changeDataFeed: Boolean): Long = {
     import org.apache.spark.sql.functions.{col, expr, lit}
     val dir = new File(table)
-    val state = resolve(spark, table, None)
-    requireWritable(state.minWriter, table)
+    val state = writable(spark, table)
     // (file → new deleted positions) against the MERGED view; each row's
     // rel path arrives by its file's keys, never by parsing the reader's URI
     val matched = DvPlane.attach(
@@ -1459,36 +1388,16 @@ object DeltaSink {
           dv = Some(DvInfo("u", encoded, Some(d.offset.toInt), d.size,
             d.cardinality)))
       }
-      // v3/v7 protocols must LIST every active table feature (spec rule):
-      // a DV bump on a column-mapped table carries columnMapping too (and
-      // any features an earlier protocol action already tracked), or a
-      // spec-compliant external reader would stop applying the mapping
-      def features(tracked: Seq[String]) =
-        (tracked ++ Seq("deletionVectors") ++
-          (if (mappingEnabled(state.schema)) Seq("columnMapping") else Nil))
-          .distinct.sorted.map(esc).mkString("[", ",", "]")
-      val bump =
-        if (state.minReader >= 3 && state.minWriter >= 7) Nil
-        else Seq(s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,""" +
-          s""""readerFeatures":${features(state.readerFeatures)},""" +
-          s""""writerFeatures":${features(state.writerFeatures)}}}""")
       // ROW TRACKING: an update's replacement rows are NEW rows — they take
       // fresh ids above the high-water mark (the Iceberg twin's contract);
       // the touched files' re-adds keep their baseRowId via add.copy above
-      val (dataAddsFinal, domainLine) =
-        if (!state.configuration.get(RowTrackingConf).contains("true") ||
-            dataAdds.isEmpty)
-          (dataAdds, Nil)
-        else {
-          val hwm = rowIdHighWaterMark(state.domains).getOrElse(-1L)
-          val (w, newHwm) = assignRowIds(dataAdds, hwm, state.version + 1)
-          (w, Seq(domainJson(RowTrackingDomain,
-            s"""{"rowIdHighWaterMark":$newHwm}""")))
-        }
-      claimVersion(t, table, state.version + 1,
-        bump ++ (newAdds ++ dataAddsFinal).map(a => addJson(a)) ++
-          cdcAdds.map(cdcJson) ++ domainLine)
-      descs.map(_.freshCardinality).sum
+      val (operation, rowsMetric) = dmlOperation(replacement)
+      val rows = descs.map(_.freshCardinality).sum
+      commitVersion(t, table, state, state.version + 1, Commit(operation,
+        Seq("predicate" -> predicate), adds = newAdds, newRows = dataAdds,
+        cdc = cdcAdds, features = Set("deletionVectors"),
+        metrics = Seq(rowsMetric -> rows)))
+      rows
     }
     } finally matched.unpersist(): Unit
   }
@@ -1504,7 +1413,8 @@ object DeltaSink {
     */
   def renameColumn(spark: SparkSession, table: String, from: String,
       to: String, store: CommitStore = CommitStore.Local): Unit =
-    columnMappingOp(spark, table, store, from) { (schema, idx) =>
+    columnMappingOp(spark, table, store, from, "RENAME COLUMN",
+        Seq("oldColumnPath" -> from, "newColumnPath" -> to)) { (schema, idx) =>
       require(!schema.fieldNames.contains(to), s"column $to already exists")
       StructType(schema.fields.updated(idx, schema.fields(idx).copy(name = to)))
     }
@@ -1515,16 +1425,16 @@ object DeltaSink {
     */
   def dropColumn(spark: SparkSession, table: String, column: String,
       store: CommitStore = CommitStore.Local): Unit =
-    columnMappingOp(spark, table, store, column) { (schema, idx) =>
+    columnMappingOp(spark, table, store, column, "DROP COLUMNS",
+        Seq("columns" -> jsonList(Seq(column)))) { (schema, idx) =>
       require(schema.fields.length > 1, "cannot drop the last column")
       StructType(schema.fields.patch(idx, Nil, 1))
     }
 
   private def columnMappingOp(spark: SparkSession, table: String,
-      store: CommitStore, column: String)(
-      op: (StructType, Int) => StructType): Unit = {
-    val meta = resolve(spark, table, None)
-    requireWritable(meta.minWriter, table)
+      store: CommitStore, column: String, operation: String,
+      params: Seq[(String, String)])(op: (StructType, Int) => StructType): Unit = {
+    val meta = writable(spark, table)
     require(!meta.partitionColumns.contains(column),
       s"cannot rename or drop partition column $column")
     // stored SQL expressions (CHECK constraints, generated columns) name
@@ -1590,34 +1500,12 @@ object DeltaSink {
     val idx = mapped.fieldNames.indexOf(column)
     require(idx >= 0, s"no such column: $column")
     val evolved = op(mapped, idx)
-    // protocol: v3/v7 tables must LIST every active feature (spec rule),
-    // so enabling mapping on a DV table refreshes the TRACKED feature
-    // lists with columnMapping; pre-v3 tables bump to plain (2,5) —
-    // feature lists only exist at v3+
-    val bump =
-      if (meta.minReader >= 3) {
-        def lst(fs: Seq[String]) =
-          (fs :+ "columnMapping").distinct.sorted.map(esc).mkString("[", ",", "]")
-        Seq(s"""{"protocol":{"minReaderVersion":${meta.minReader},""" +
-          s""""minWriterVersion":${meta.minWriter},""" +
-          s""""readerFeatures":${lst(meta.readerFeatures)},""" +
-          s""""writerFeatures":${lst(meta.writerFeatures)}}}""")
-      }
-      else if (meta.minReader >= 2 && meta.minWriter >= 5) Nil
-      else Seq(s"""{"protocol":{"minReaderVersion":${math.max(2, meta.minReader)},""" +
-        s""""minWriterVersion":${math.max(5, meta.minWriter)}}}""")
-    val metaLine = metaDataJson(meta.id,
-      StructType(evolved.fields.map(_.copy(nullable = true))).json,
-      meta.partitionColumns,
-      if (meta.createdTime != 0L) meta.createdTime else System.currentTimeMillis(),
-      // the spec-compliance half of the mapping (ADVICE r13): without
-      // delta.columnMapping.mode=name in configuration an external reader
-      // defaults to mode none and NULLs every post-rename read — plus the
-      // FULL replayed configuration (a metaData action replaces the map
-      // wholesale; dropping it here would strip CHECK constraints)
-      meta.configuration ++ mappingConfig(evolved))
-    strict(store, table, "column evolution")(
-      claimVersion(_, table, meta.version + 1, bump :+ metaLine))
+    // the metaData carries delta.columnMapping.mode=name (ADVICE r13):
+    // without it an external reader defaults to mode none and NULLs every
+    // post-rename read
+    strict(store, table, "column evolution")(commitVersion(_, table, meta,
+      meta.version + 1, Commit(operation, params, schema = Some(nullable(evolved)),
+        features = Set("columnMapping"))))
   }
 
   /** The table's CHECK constraints, from the replayed configuration
@@ -1670,8 +1558,7 @@ object DeltaSink {
     import org.apache.spark.sql.functions.{coalesce, expr, lit, not}
     require(name.matches("[A-Za-z0-9_]+"),
       s"constraint name must be alphanumeric: $name")
-    val meta = resolve(spark, table, None)
-    requireWritable(meta.minWriter, table)
+    val meta = writable(spark, table)
     val key = s"delta.constraints.$name"
     require(!meta.configuration.contains(key), s"constraint $name already exists")
     val bad = readStateMerged(spark, table, meta, keepLineage = false, store)
@@ -1679,15 +1566,15 @@ object DeltaSink {
       .limit(1).count()
     require(bad == 0L,
       s"cannot add constraint $name: existing rows violate ($expression)")
-    commitConstraintConfig(table, store, meta,
-      meta.configuration + (key -> expression))
+    commitConstraintConfig(table, store, meta, "ADD CONSTRAINT",
+      Seq("name" -> name, "expr" -> expression), meta.configuration + (key -> expression))
   }
 
   /** ENABLE in-commit timestamps (Delta spec §in-commit-timestamps,
     * writer feature `inCommitTimestamp`): every commit from this one on
     * leads with a commitInfo action whose `inCommitTimestamp` is the
     * commit's DURABLE clock — monotonic by construction (max(wall clock,
-    * prev + 1), stamped inside [[commitAtomic]]). Why it matters: the
+    * prev + 1), stamped by [[commitVersion]]). Why it matters: the
     * pre-ICT timestamp rule is commit-file MTIME, which an rsync, a
     * bucket migration, or a `touch` silently rewrites — after which
     * "the table at 09:00" resolves to the wrong version. ICT lives IN
@@ -1701,69 +1588,35 @@ object DeltaSink {
     */
   def enableInCommitTimestamps(spark: SparkSession, table: String,
       store: CommitStore = CommitStore.Local): Unit = {
-    val meta = resolve(spark, table, None)
-    requireWritable(meta.minWriter, table)
-    require(!meta.configuration.get("delta.enableInCommitTimestamps").contains("true"),
+    val meta = writable(spark, table)
+    require(!meta.configuration.get(IctConf).contains("true"),
       s"in-commit timestamps already enabled on $table")
-    val version = meta.version + 1
-    val ict = System.currentTimeMillis()
-    def lst(fs: Seq[String]) = fs.distinct.sorted.map(esc).mkString("[", ",", "]")
-    val bump =
-      if (meta.minWriter >= 7 && meta.writerFeatures.contains("inCommitTimestamp")) Nil
-      else Seq(s"""{"protocol":{"minReaderVersion":${meta.minReader},""" +
-        s""""minWriterVersion":7,""" +
-        s""""readerFeatures":${lst(meta.readerFeatures)},""" +
-        s""""writerFeatures":${lst(meta.writerFeatures :+ "inCommitTimestamp")}}}""")
-    val metaLine = metaDataJson(meta.id,
-      StructType(meta.schema.fields.map(_.copy(nullable = true))).json,
-      meta.partitionColumns,
-      if (meta.createdTime != 0L) meta.createdTime else ict,
-      meta.configuration ++ mappingConfig(meta.schema) ++ Map(
-        "delta.enableInCommitTimestamps" -> "true",
-        "delta.inCommitTimestampEnablementVersion" -> version.toString,
-        "delta.inCommitTimestampEnablementTimestamp" -> ict.toString))
-    val info = s"""{"commitInfo":{"inCommitTimestamp":$ict,"timestamp":$ict}}"""
-    strict(store, table, "ICT enablement")(
-      claimVersion(_, table, version, (info +: bump) :+ metaLine))
+    strict(store, table, "ICT enablement")(commitVersion(_, table, meta,
+      meta.version + 1, Commit("SET TBLPROPERTIES",
+        Seq("properties" -> s"""{"$IctConf":"true"}"""),
+        configuration = Some(meta.configuration + (IctConf -> "true")),
+        features = Set("inCommitTimestamp"))))
   }
 
   /** DROPs a CHECK constraint — metadata-only. */
   def dropCheckConstraint(spark: SparkSession, table: String, name: String,
       store: CommitStore = CommitStore.Local): Unit = {
-    val meta = resolve(spark, table, None)
-    requireWritable(meta.minWriter, table)
+    val meta = writable(spark, table)
     val key = s"delta.constraints.$name"
     require(meta.configuration.contains(key), s"no such constraint: $name")
-    commitConstraintConfig(table, store, meta, meta.configuration - key)
+    commitConstraintConfig(table, store, meta, "DROP CONSTRAINT", Seq("name" -> name),
+      meta.configuration - key)
   }
 
+  /** A CHECK-constraint change: `config` replaces the configuration and
+    * the table needs the checkConstraints feature (legacy writer 3).
+    */
   private def commitConstraintConfig(table: String, store: CommitStore,
-      meta: Snapshot, newConfig: Map[String, String]): Unit = {
-    // protocol: CHECK constraints are legacy writer v3; a v7 table lists
-    // the checkConstraints writer feature instead (spec rule: v7 must
-    // track every active feature)
-    val bump =
-      if (meta.minWriter >= 7) {
-        if (meta.writerFeatures.contains("checkConstraints")) Nil
-        else {
-          def lst(fs: Seq[String]) = fs.distinct.sorted.map(esc).mkString("[", ",", "]")
-          Seq(s"""{"protocol":{"minReaderVersion":${meta.minReader},""" +
-            s""""minWriterVersion":7,""" +
-            s""""readerFeatures":${lst(meta.readerFeatures)},""" +
-            s""""writerFeatures":${lst(meta.writerFeatures :+ "checkConstraints")}}}""")
-        }
-      }
-      else if (meta.minWriter >= 3) Nil
-      else Seq(s"""{"protocol":{"minReaderVersion":${meta.minReader},""" +
-        s""""minWriterVersion":3}}""")
-    val metaLine = metaDataJson(meta.id,
-      StructType(meta.schema.fields.map(_.copy(nullable = true))).json,
-      meta.partitionColumns,
-      if (meta.createdTime != 0L) meta.createdTime else System.currentTimeMillis(),
-      newConfig ++ mappingConfig(meta.schema))
-    strict(store, table, "constraint change")(
-      claimVersion(_, table, meta.version + 1, bump :+ metaLine))
-  }
+      meta: Snapshot, operation: String, params: Seq[(String, String)],
+      config: Map[String, String]): Unit =
+    strict(store, table, "constraint change")(commitVersion(_, table, meta,
+      meta.version + 1, Commit(operation, params, configuration = Some(config),
+        features = Set("checkConstraints"))))
 
   /** Writes a parquet checkpoint of the current log state plus the
     * `_last_checkpoint` pointer. Readers then start from the checkpoint and
@@ -1789,23 +1642,9 @@ object DeltaSink {
     // Metadata plane (protocol, metaData, txn watermarks) and data plane
     // (one add row per live file of the resolved snapshot, through
     // [[liveFrame]]) become one frame; Spark writes it as the parts.
+    val (protocol, metaData) = checkpointMeta(meta)
     val metaRows: Seq[Row] =
-      // feature lists exist only at v3/v7 (spec); carry the replayed
-      // ones so a reader starting from this checkpoint keeps them
-      (Row(Row(meta.minReader, meta.minWriter,
-        if (meta.minReader >= 3) meta.readerFeatures else null,
-        if (meta.minWriter >= 7) meta.writerFeatures else null),
-        null, null, null, null) +:
-      Row(null,
-        Row(meta.id, Row("parquet"),
-          StructType(meta.schema.fields.map(_.copy(nullable = true))).json,
-          meta.partitionColumns,
-          // the full replayed table configuration (constraints, etc.);
-          // column-mapping keys re-derive from the schema stamps so a
-          // mapped table keeps them even across older commits
-          meta.configuration ++ mappingConfig(meta.schema),
-          if (meta.createdTime != 0L) meta.createdTime else System.currentTimeMillis()),
-        null, null, null) +:
+      (Row(protocol, null, null, null, null) +: Row(null, metaData, null, null, null) +:
       meta.txns.toSeq.sortBy(_._1).map { case (app, v) =>
         Row(null, null, null, Row(app, v), null)
       }) ++
@@ -1875,30 +1714,10 @@ object DeltaSink {
       store: CommitStore = CommitStore.Local): Long = {
     import org.apache.spark.sql.functions.{col, lit, struct}
     locally {
-      val meta0 = resolve(spark, table, None)
-      requireWritable(meta0.minWriter, table)
-      if (!(meta0.minReader >= 3 && meta0.readerFeatures.contains("v2Checkpoint"))) {
-        // version-implied legacy capabilities become EXPLICIT feature
-        // names on the bump (spec rule: v3/v7 lists every active feature)
-        def active(flag: Boolean, name: String) = if (flag) Seq(name) else Nil
-        val mapped = mappingEnabled(meta0.schema)
-        val rf = (meta0.readerFeatures ++
-          active(mapped, "columnMapping") :+ "v2Checkpoint").distinct.sorted
-        val wf = (meta0.writerFeatures ++
-          active(mapped, "columnMapping") ++
-          active(meta0.configuration.keys.exists(_.startsWith("delta.constraints.")),
-            "checkConstraints") ++
-          active(meta0.schema.fields.exists(_.metadata.contains(GenExprKey)),
-            "generatedColumns") ++
-          active(meta0.configuration.get("delta.enableInCommitTimestamps")
-            .contains("true"), "inCommitTimestamp") :+ "v2Checkpoint")
-          .distinct.sorted
-        def lst(fs: Seq[String]) = fs.map(esc).mkString("[", ",", "]")
-        strict(store, table, "v2Checkpoint enablement")(claimVersion(_, table,
-          meta0.version + 1,
-          Seq(s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,""" +
-            s""""readerFeatures":${lst(rf)},"writerFeatures":${lst(wf)}}}""")))
-      }
+      val meta0 = writable(spark, table)
+      if (!(meta0.minReader >= 3 && meta0.readerFeatures.contains("v2Checkpoint")))
+        strict(store, table, "v2Checkpoint enablement")(commitVersion(_, table, meta0,
+          meta0.version + 1, Commit("UPGRADE PROTOCOL", features = Set("v2Checkpoint"))))
     }
     val meta = resolve(spark, table, None)
     val live = liveFrame(spark, meta)
@@ -1993,16 +1812,10 @@ object DeltaSink {
       } ++ written
     }
     // metadata plane + sidecar list → the manifest (driver-side, KBs)
+    val (protocol, metaData) = checkpointMeta(meta)
     val metaRows: Seq[Row] =
-      (Row(Row(meta.minReader, meta.minWriter, meta.readerFeatures,
-        meta.writerFeatures), null, null, null, null, null) +:
-      Row(null,
-        Row(meta.id, Row("parquet"),
-          StructType(meta.schema.fields.map(_.copy(nullable = true))).json,
-          meta.partitionColumns,
-          meta.configuration ++ mappingConfig(meta.schema),
-          if (meta.createdTime != 0L) meta.createdTime else System.currentTimeMillis()),
-        null, null, null, null) +:
+      (Row(protocol, null, null, null, null, null) +:
+      Row(null, metaData, null, null, null, null) +:
       Row(null, null, Row(meta.version), null, null, null) +:
       (meta.txns.toSeq.sortBy(_._1).map { case (app, v) =>
         Row(null, null, null, Row(app, v), null, null)
@@ -2048,6 +1861,19 @@ object DeltaSink {
       .foreach(reclaim)
     meta.version
   }
+
+  /** A checkpoint's protocol and metaData structs: the replayed protocol
+    * (feature lists only at reader 3 / writer 7, per the spec, so a reader
+    * starting there keeps them) and the full configuration, column-mapping
+    * keys re-derived from the schema stamps.
+    */
+  private def checkpointMeta(meta: Snapshot): (Row, Row) =
+    (Row(meta.minReader, meta.minWriter,
+      if (meta.minReader >= 3) meta.readerFeatures else null,
+      if (meta.minWriter >= 7) meta.writerFeatures else null),
+     Row(meta.id, Row("parquet"), nullable(meta.schema).json, meta.partitionColumns,
+      meta.configuration ++ mappingConfig(meta.schema),
+      if (meta.createdTime != 0L) meta.createdTime else System.currentTimeMillis()))
 
   /** Flips `_last_checkpoint` with an atomic put: a concurrent reader
     * never sees a partial pointer (it would fail the JSON parse).
@@ -2139,6 +1965,7 @@ object DeltaSink {
 
   private[sinks] val RowTrackingDomain = "delta.rowTracking"
   private val RowTrackingConf = "delta.enableRowTracking"
+  private val IctConf = "delta.enableInCommitTimestamps"
 
   /** The highest row id assigned so far (the spec's rowIdHighWaterMark,
     * stored in the `delta.rowTracking` domain metadata; -1 = none).
@@ -2147,32 +1974,12 @@ object DeltaSink {
     domains.get(RowTrackingDomain)
       .map(c => mapper.readTree(c).path("rowIdHighWaterMark").asLong(-1L))
 
-  private def domainJson(domain: String, conf: String): String =
-    s"""{"domainMetadata":{"domain":${esc(domain)},""" +
-      s""""configuration":${esc(conf)},"removed":false}}"""
-
   private def rowsOf(a: AddEntry): Long =
     Option(a.stats).map(s => mapper.readTree(s).path("numRecords").asLong(0L))
       .getOrElse(0L)
 
-  /** Assigns fresh, contiguous baseRowIds above `hwm` (add order) and
-    * stamps each add's defaultRowCommitVersion with the committing
-    * version (spec §Row Tracking: rows inherit their file's default
-    * commit version unless a rewrite materialized the per-row column);
-    * returns the re-stamped adds and the new high-water mark.
-    */
-  private def assignRowIds(adds: Seq[AddEntry], hwm: Long,
-      commitVersion: Long): (Seq[AddEntry], Long) = {
-    var cursor = hwm
-    val out = adds.map { a =>
-      val n = rowsOf(a)
-      val o = a.copy(baseRowId = Some(cursor + 1),
-        defaultRowCommitVersion = Some(commitVersion))
-      cursor += n
-      o
-    }
-    (out, cursor)
-  }
+  /** A file's rows its deletion vector leaves live. */
+  private def liveRowsOf(a: AddEntry): Long = rowsOf(a) - a.dv.fold(0L)(_.cardinality)
 
   /** ENABLE ROW TRACKING (spec writer features `rowTracking` +
     * `domainMetadata`): every row gets a STABLE id — `baseRowId +
@@ -2180,43 +1987,25 @@ object DeltaSink {
     * move) and id-materializing compaction. ONE metadata-only commit
     * re-adds every live file with a retroactive baseRowId (path order,
     * cumulative by the log's own numRecords — no data file opened),
-    * bumps the protocol (v3/v7, feature lists carried per the spec's
-    * list-every-feature rule), stamps `delta.enableRowTracking` into the
+    * bumps the protocol (writer 7 listing every active feature), stamps `delta.enableRowTracking` into the
     * configuration and seeds the `delta.rowTracking` high-water-mark
     * domain. Returns the rows assigned.
     */
   def enableRowTracking(spark: SparkSession, table: String,
       store: CommitStore = CommitStore.Local): Long = {
-    val state = resolve(spark, table, None)
-    requireWritable(state.minWriter, table)
+    val state = writable(spark, table)
     require(!state.configuration.get(RowTrackingConf).contains("true"),
       s"row tracking already enabled on $table")
     // retroactive enablement cannot recover pre-feature per-row commit
     // versions — like delta-spark's backfill, the enable commit's own
     // version stamps every re-added file
-    val (withIds, hwm) = assignRowIds(state.live.sortBy(_.path), -1L,
-      state.version + 1)
-    def features(tracked: Seq[String], extra: Seq[String]) =
-      (tracked ++ extra).distinct.sorted.map(esc).mkString("[", ",", "]")
-    val bump =
-      s"""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,""" +
-        s""""readerFeatures":${features(state.readerFeatures,
-          if (mappingEnabled(state.schema)) Seq("columnMapping") else Nil)},""" +
-        s""""writerFeatures":${features(state.writerFeatures,
-          Seq("rowTracking", "domainMetadata") ++
-            (if (mappingEnabled(state.schema)) Seq("columnMapping") else Nil))}}}"""
-    val metaLine = metaDataJson(state.id,
-      StructType(state.schema.fields.map(_.copy(nullable = true))).json,
-      state.partitionColumns,
-      if (state.createdTime != 0L) state.createdTime else System.currentTimeMillis(),
-      state.configuration ++ mappingConfig(state.schema) +
-        (RowTrackingConf -> "true"))
-    val lines = Seq(bump, metaLine) ++
-      withIds.map(a => addJson(a, dataChange = false)) :+
-      domainJson(RowTrackingDomain, s"""{"rowIdHighWaterMark":$hwm}""")
-    strict(store, table, "enableRowTracking")(
-      claimVersion(_, table, state.version + 1, lines))
-    hwm + 1
+    strict(store, table, "enableRowTracking")(commitVersion(_, table, state,
+      state.version + 1, Commit("SET TBLPROPERTIES",
+        Seq("properties" -> s"""{"$RowTrackingConf":"true"}"""),
+        newRows = state.live.sortBy(_.path), dataChange = false,
+        configuration = Some(state.configuration + (RowTrackingConf -> "true")),
+        features = Set("rowTracking", "domainMetadata"))))
+    state.live.map(rowsOf).sum
   }
 
   /** Whether the table tracks row ids (the janitor's action selector). */
@@ -2286,8 +2075,7 @@ object DeltaSink {
       store: CommitStore = CommitStore.Local): Map[String, Long] = {
     import org.apache.spark.sql.functions.col
     require(columns.nonEmpty, "writeStats needs at least one column")
-    val meta = resolve(spark, table, None)
-    requireWritable(meta.minWriter, table)
+    val meta = writable(spark, table)
     val df = read(spark, table)
     val T = graft.functions.ThetaSketch
     val aggs = columns.map(c => T.sketch(T.hashFor(col(c))).as(s"_sk_$c"))
@@ -2325,13 +2113,6 @@ object DeltaSink {
     val fileBytes = bos.toByteArray
     val statsRel = s"_delta_log/_graft_stats/stats-${java.util.UUID.randomUUID()}.puffin"
     val ndvs = blobMeta.map { case (c, _, _, ndv) => c -> ndv }.toMap
-    def lst(fs: Seq[String]) = fs.distinct.sorted.map(esc).mkString("[", ",", "]")
-    val bump =
-      if (meta.minWriter >= 7 && meta.writerFeatures.contains("domainMetadata")) Nil
-      else Seq(s"""{"protocol":{"minReaderVersion":${meta.minReader},""" +
-        s""""minWriterVersion":7,""" +
-        s""""readerFeatures":${lst(meta.readerFeatures)},""" +
-        s""""writerFeatures":${lst(meta.writerFeatures :+ "domainMetadata")}}}""")
     val ndvJson = columns.map(c => s"${esc(c)}:${ndvs(c)}")
       .mkString("{", ",", "}")
     // TABLE-RELATIVE path in the domain row, like every add-file path in
@@ -2344,7 +2125,9 @@ object DeltaSink {
     strict(store, table, "writeStats") { t =>
       t.record(Paths.get(table, statsRel))
       store.putObject(Paths.get(table, statsRel), fileBytes)
-      claimVersion(t, table, meta.version + 1, bump :+ domainJson(StatsDomain, conf))
+      commitVersion(t, table, meta, meta.version + 1, Commit("COMPUTE STATS",
+        Seq("columns" -> jsonList(columns)), domains = Seq(StatsDomain -> conf),
+        features = Set("domainMetadata")))
     }
     // the replaced stats file is dead the moment the domain row moved
     // (domain rows carry table-relative paths; resolve before reclaiming)
@@ -2410,24 +2193,15 @@ object DeltaSink {
   def clusterBy(spark: SparkSession, table: String, columns: Seq[String],
       store: CommitStore = CommitStore.Local): Unit = {
     require(columns.nonEmpty, "clusterBy needs at least one column")
-    val meta = resolve(spark, table, None)
-    requireWritable(meta.minWriter, table)
+    val meta = writable(spark, table)
     columns.foreach(c => require(meta.schema.fieldNames.contains(c),
       s"no such column: $c"))
-    def lst(fs: Seq[String]) = fs.distinct.sorted.map(esc).mkString("[", ",", "]")
-    val need = Seq("clustering", "domainMetadata")
-      .filterNot(meta.writerFeatures.contains)
-    val bump =
-      if (meta.minWriter >= 7 && need.isEmpty) Nil
-      else Seq(s"""{"protocol":{"minReaderVersion":${meta.minReader},""" +
-        s""""minWriterVersion":7,""" +
-        s""""readerFeatures":${lst(meta.readerFeatures)},""" +
-        s""""writerFeatures":${lst(meta.writerFeatures ++ need)}}}""")
     // data files carry PHYSICAL names; record those (spec contract)
-    val paths = columns
-      .map(c => s"[${esc(physName(meta.schema(c)))}]").mkString("[", ",", "]")
-    strict(store, table, "clusterBy")(claimVersion(_, table, meta.version + 1,
-      bump :+ domainJson(ClusteringDomain, s"""{"clusteringColumns":$paths}""")))
+    val paths = columns.map(c => jsonList(Seq(physName(meta.schema(c))))).mkString("[", ",", "]")
+    strict(store, table, "clusterBy")(commitVersion(_, table, meta, meta.version + 1,
+      Commit("CLUSTER BY", Seq("clusteringColumns" -> jsonList(columns)),
+        domains = Seq(ClusteringDomain -> s"""{"clusteringColumns":$paths}"""),
+        features = Set("clustering", "domainMetadata"))))
   }
 
   /** The declared clustering columns as LOGICAL names (empty when the
@@ -2517,9 +2291,10 @@ object DeltaSink {
     * of [[IcebergSink.metaTable]]("history")): version, commit timestamp
     * (in-commit timestamp when the commit carries one, else file mtime —
     * same clock as [[versionAtTimestamp]]), and the OPERATION inferred
-    * from the commit's action shape. Outside ICT stamps this engine
-    * writes no commitInfo action, so the names are honest shape classes,
-    * each unambiguous for the verbs this engine commits:
+    * from the commit's action shape (every version's leading commitInfo
+    * names its delta-spark operation too; these shape classes are the
+    * vocabulary `q_delta_history` pins), each unambiguous for the verbs
+    * this engine commits:
     * CREATE (metaData at v0) / METADATA (metaData later — constraints,
     * column mapping, schema evolution) / PROTOCOL (protocol-only) /
     * APPEND (adds only) / STREAMING (adds + txn watermark) /
@@ -3404,56 +3179,219 @@ object DeltaSink {
     paths.result()
   }
 
-  /** WRITER-side protocol gate, symmetrical to resolve()'s reader gate:
-    * committing to a table whose protocol demands writer features beyond
-    * v7/deletionVectors would violate invariants we don't implement.
+  /** The latest snapshot, behind the WRITER-side protocol gate
+    * (symmetrical to resolve()'s reader gate): committing to a table whose
+    * protocol demands a writer version beyond 7 would violate invariants
+    * we don't implement.
     */
-  private def requireWritable(minWriter: Int, table: String): Unit =
-    require(minWriter <= 7,
+  private def writable(spark: SparkSession, table: String): Snapshot = {
+    val state = resolve(spark, table, None)
+    require(state.minWriter <= 7,
       s"unsupported Delta protocol: $table requires writer version " +
-        s"$minWriter, this engine supports up to 7 (deletion vectors)")
+        s"${state.minWriter}, this engine supports up to 7 (deletion vectors)")
+    state
+  }
 
-  /** Reader features this engine implements — the v3 feature gate's
-    * allowlist (anything else refuses in [[resolve]]).
+  /** A table feature's legacy (reader, writer) protocol pair, if it has
+    * one, and whether readers must implement it (spec §Table Features).
     */
+  private case class Feature(legacy: Option[(Int, Int)], reader: Boolean)
+
+  /** THE feature table: every feature this engine writes, and
+    * `timestampNtz`, which it only reads. Its reader features are the
+    * reader gate's allowlist ([[resolve]] refuses any other).
+    */
+  private val Features: Map[String, Feature] = Map(
+    "checkConstraints" -> Feature(Some((1, 3)), reader = false), // addCheckConstraint
+    "generatedColumns" -> Feature(Some((1, 4)), reader = false), // writeGenerated
+    "columnMapping" -> Feature(Some((2, 5)), reader = true), // renameColumn, dropColumn
+    "deletionVectors" -> Feature(None, reader = true), // deleteWhereDV, updateWhereDV
+    "v2Checkpoint" -> Feature(None, reader = true), // checkpointV2
+    "variantType" -> Feature(None, reader = true), // a create with a VARIANT column
+    "timestampNtz" -> Feature(None, reader = true), // read only
+    "inCommitTimestamp" -> Feature(None, reader = false), // enableInCommitTimestamps
+    "rowTracking" -> Feature(None, reader = false), // enableRowTracking
+    "domainMetadata" -> Feature(None, reader = false), // the above, writeStats, clusterBy
+    "clustering" -> Feature(None, reader = false)) // clusterBy
+
   private val SupportedReaderFeatures =
-    Set("deletionVectors", "columnMapping", "v2Checkpoint", "timestampNtz",
-      "variantType")
+    Features.collect { case (f, Feature(_, true)) => f }.toSet
 
-  private def protocolJson: String =
-    """{"protocol":{"minReaderVersion":1,"minWriterVersion":1}}"""
+  /** The features a table with this schema and configuration uses. */
+  private def activeFeatures(schema: StructType,
+      config: Map[String, String]): Seq[String] = {
+    val rowTracked = config.get(RowTrackingConf).contains("true")
+    Seq("columnMapping" -> mappingEnabled(schema),
+      "checkConstraints" -> config.keys.exists(_.startsWith("delta.constraints.")),
+      "generatedColumns" -> schema.fields.exists(_.metadata.contains(GenExprKey)),
+      "variantType" -> hasVariant(schema),
+      "inCommitTimestamp" -> config.get(IctConf).contains("true"),
+      "rowTracking" -> rowTracked, "domainMetadata" -> rowTracked)
+      .collect { case (f, true) => f }
+  }
 
-  /** Create-time protocol for `schema`: a VARIANT column anywhere in the
-    * schema requires the `variantType` reader+writer table feature (Delta
-    * 4.0 spec §Variant Data Type — readers that can't decode the binary
-    * encoding must refuse the table); everything else keeps the minimal
-    * legacy protocol.
+  /** A VARIANT anywhere in the type (Delta 4.0 spec §Variant Data Type:
+    * readers that can't decode the binary encoding must refuse the table).
     */
-  private def protocolJsonFor(schema: StructType): String = {
-    def hasVariant(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
-      case _: org.apache.spark.sql.types.VariantType => true
-      case s: StructType => s.fields.exists(f => hasVariant(f.dataType))
-      case a: org.apache.spark.sql.types.ArrayType => hasVariant(a.elementType)
-      case m: org.apache.spark.sql.types.MapType =>
-        hasVariant(m.keyType) || hasVariant(m.valueType)
-      case _ => false
-    }
-    if (hasVariant(schema))
-      """{"protocol":{"minReaderVersion":3,"minWriterVersion":7,""" +
-        """"readerFeatures":["variantType"],"writerFeatures":["variantType"]}}"""
-    else protocolJson
+  private def hasVariant(dt: DataType): Boolean = dt match {
+    case _: VariantType => true
+    case s: StructType => s.fields.exists(f => hasVariant(f.dataType))
+    case a: ArrayType => hasVariant(a.elementType)
+    case m: MapType => hasVariant(m.keyType) || hasVariant(m.valueType)
+    case _ => false
   }
 
-  private def metaDataJson(id: String, schemaString: String,
-      partitionBy: Seq[String], now: Long,
-      config: Map[String, String] = Map.empty): String = {
-    val conf = config.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${esc(k)}:${esc(v)}" }.mkString("{", ",", "}")
-    s"""{"metaData":{"id":"$id","format":{"provider":"parquet","options":{}},""" +
-      s""""schemaString":${esc(schemaString)},""" +
-      s""""partitionColumns":${partitionBy.map(esc).mkString("[", ",", "]")},""" +
-      s""""configuration":$conf,"createdTime":$now}}"""
+  /** THE protocol rule: the protocol action of a commit over `base` that
+    * needs `need` — None when base's protocol covers it (a create always
+    * writes one). Otherwise legacy versions while every feature listed,
+    * used (`active`) or needed has a legacy pair; else writer 7 listing
+    * them all, reader 3 only for a reader feature (lists exist only at
+    * reader 3 / writer 7).
+    */
+  private def protocolLine(base: Snapshot, need: Set[String], active: Seq[String],
+      create: Boolean): Option[String] = {
+    def isReader(f: String) = Features.get(f).exists(_.reader)
+    def covered(f: String) =
+      if (base.minWriter >= 7)
+        base.writerFeatures.contains(f) && (!isReader(f) || base.readerFeatures.contains(f))
+      else Features.get(f).flatMap(_.legacy).exists { case (r, w) =>
+        base.minReader >= r && base.minWriter >= w
+      }
+    val keep = need.forall(covered)
+    if (keep && !create) return None
+    val all = (base.readerFeatures ++ base.writerFeatures ++ active ++ need).distinct
+    val legacy = all.flatMap(Features.get(_).flatMap(_.legacy))
+    val (r, w, rf, wf) =
+      if (keep) (base.minReader, base.minWriter, base.readerFeatures, base.writerFeatures)
+      else if (base.minWriter < 7 && legacy.size == all.size)
+        ((base.minReader +: legacy.map(_._1)).max,
+          (base.minWriter +: legacy.map(_._2)).max, Nil, Nil)
+      else {
+        val rf = base.readerFeatures ++ all.filter(isReader)
+        (if (rf.nonEmpty) 3 else base.minReader, 7, rf, all)
+      }
+    Some(s"""{"protocol":{"minReaderVersion":$r,"minWriterVersion":$w""" +
+      (if (r >= 3) s""","readerFeatures":${jsonList(rf.distinct.sorted)}""" else "") +
+      (if (w >= 7) s""","writerFeatures":${jsonList(wf.distinct.sorted)}""" else "") + "}}")
   }
+
+  /** One Delta log version as a verb hands it to [[commitVersion]]:
+    * operation and parameters, adds and removes (written with
+    * `dataChange`), `newRows` (adds whose rows are new), cdc files, domain
+    * metadata, the `txn` watermark, an optional schema, partition-column
+    * or configuration change, the features it needs, the verb's metrics.
+    */
+  private case class Commit(operation: String,
+      parameters: Seq[(String, String)] = Nil,
+      adds: Seq[AddEntry] = Nil, newRows: Seq[AddEntry] = Nil,
+      removes: Seq[AddEntry] = Nil, dataChange: Boolean = true,
+      cdc: Seq[AddEntry] = Nil, domains: Seq[(String, String)] = Nil,
+      txn: Option[(String, Long)] = None,
+      schema: Option[StructType] = None,
+      partitionColumns: Option[Seq[String]] = None,
+      configuration: Option[Map[String, String]] = None,
+      features: Set[String] = Set.empty,
+      metrics: Seq[(String, Long)] = Nil)
+
+  /** THE Delta commit encoder: writes log version `version` over `base`
+    * and claims it through `t`, actions in one fixed order —
+    *  - `commitInfo`: operation, parameters, [[commitMetrics]] and the
+    *    in-commit timestamp, max(wall clock, previous + 1) when the
+    *    previous version carries one (probed from its first line), the
+    *    wall clock when this commit turns the feature on (its enablement
+    *    version and timestamp then join the configuration);
+    *  - the protocol action of [[protocolLine]];
+    *  - `metaData` at version 0 or on a schema, partition or configuration
+    *    change: base's id and birth time (now if the log omits it), the
+    *    schema and the FULL configuration — a metaData action replaces it
+    *    wholesale — with the column-mapping keys re-derived;
+    *  - `txn`, removes, adds, cdc files, domain metadata. On a row-tracked
+    *    table `newRows` take contiguous baseRowIds above base's high-water
+    *    mark, which moves in the same version.
+    */
+  private def commitVersion(t: Txn, table: String, base: Snapshot, version: Long,
+      c: Commit): Unit = {
+    val now = System.currentTimeMillis()
+    val schema = c.schema.getOrElse(nullable(base.schema))
+    val conf = c.configuration.getOrElse(base.configuration)
+    val enablesIct = conf.get(IctConf).contains("true") &&
+      !base.configuration.get(IctConf).contains("true")
+    val ict =
+      if (enablesIct) Some(now)
+      else if (version == 0) None
+      else ictOfFile(versionFile(table, version - 1).toFile).map(p => math.max(now, p + 1))
+    val config = conf ++ mappingConfig(schema) ++ (if (!enablesIct) Nil else Seq(
+      "delta.inCommitTimestampEnablementVersion" -> version.toString,
+      "delta.inCommitTimestampEnablementTimestamp" -> now.toString))
+    val rowTracked = c.newRows.nonEmpty && config.get(RowTrackingConf).contains("true")
+    var hwm = rowIdHighWaterMark(base.domains).getOrElse(-1L)
+    val added = c.adds ++ (if (!rowTracked) c.newRows else c.newRows.map { a =>
+      val stamped = a.copy(baseRowId = Some(hwm + 1), defaultRowCommitVersion = Some(version))
+      hwm += rowsOf(a)
+      stamped
+    })
+    val domains = c.domains ++
+      (if (rowTracked) Seq(RowTrackingDomain -> s"""{"rowIdHighWaterMark":$hwm}""") else Nil)
+    def obj(kvs: Seq[(String, Any)]) =
+      kvs.map { case (k, v) => s"${esc(k)}:${esc(v.toString)}" }.mkString("{", ",", "}")
+    val metaData = version == 0 || c.schema.isDefined || c.partitionColumns.isDefined ||
+      c.configuration.isDefined
+    val lines = Seq(s"""{"commitInfo":{""" +
+        ict.fold("")(i => s""""inCommitTimestamp":$i,""") +
+        s""""timestamp":${ict.getOrElse(now)},"operation":${esc(c.operation)},""" +
+        s""""operationParameters":${obj(c.parameters)},""" +
+        s""""operationMetrics":${obj(commitMetrics(base, c, added))}}}""") ++
+      protocolLine(base, c.features, activeFeatures(schema, config), version == 0) ++
+      (if (!metaData) Nil else Seq(
+        s"""{"metaData":{"id":"${base.id}","format":{"provider":"parquet","options":{}},""" +
+          s""""schemaString":${esc(schema.json)},""" +
+          s""""partitionColumns":${jsonList(c.partitionColumns.getOrElse(base.partitionColumns))},""" +
+          s""""configuration":${obj(config.toSeq.sortBy(_._1))},""" +
+          s""""createdTime":${if (base.createdTime != 0L) base.createdTime else now}}}""")) ++
+      c.txn.map { case (appId, v) => s"""{"txn":{"appId":${esc(appId)},"version":$v}}""" } ++
+      c.removes.map(a => s"""{"remove":{"path":${esc(a.path)},""" +
+        s""""deletionTimestamp":$now,"dataChange":${c.dataChange}}}""") ++
+      added.map(addJson(_, c.dataChange)) ++
+      c.cdc.map(a => s"""{"cdc":{"path":${esc(a.path)},"partitionValues":{},""" +
+        s""""size":${a.size},"dataChange":false}}""") ++
+      domains.map { case (d, dc) => s"""{"domainMetadata":{"domain":${esc(d)},""" +
+        s""""configuration":${esc(dc)},"removed":false}}""" }
+    t.claim(versionFile(table, version),
+      (lines.mkString("\n") + "\n").getBytes(StandardCharsets.UTF_8))
+  }
+
+  /** A commit's `operationMetrics` in delta-spark's names, from its own
+    * actions and the verb's counts (no job runs): the WRITE trio
+    * numFiles/numOutputRows/numOutputBytes when it only adds files, else
+    * numAdded/RemovedFiles, numAdded/RemovedBytes and
+    * numDeletionVectorsAdded; numAddedChangeFiles for cdc files.
+    */
+  private def commitMetrics(base: Snapshot, c: Commit,
+      added: Seq[AddEntry]): Seq[(String, Long)] = {
+    def bytes(as: Seq[AddEntry]) = as.map(_.size).sum
+    val dvs =
+      if (!added.exists(_.dv.isDefined)) 0L
+      else {
+        val before = base.live.map(a => a.path -> a.dv).toMap
+        added.count(a => a.dv.isDefined && !before.get(a.path).contains(a.dv)).toLong
+      }
+    val files =
+      if (added.isEmpty && c.removes.isEmpty) Nil
+      else if (c.removes.isEmpty && dvs == 0)
+        Seq("numFiles" -> added.size.toLong, "numOutputRows" -> added.map(rowsOf).sum,
+          "numOutputBytes" -> bytes(added))
+      else Seq("numAddedFiles" -> added.size.toLong,
+        "numRemovedFiles" -> c.removes.size.toLong, "numAddedBytes" -> bytes(added),
+        "numRemovedBytes" -> bytes(c.removes)) ++
+        (if (dvs > 0) Seq("numDeletionVectorsAdded" -> dvs) else Nil)
+    files ++ (if (c.cdc.isEmpty) Nil else Seq("numAddedChangeFiles" -> c.cdc.size.toLong)) ++
+      c.metrics
+  }
+
+  private def jsonList(xs: Seq[String]): String = xs.map(esc).mkString("[", ",", "]")
+
+  private def nullable(schema: StructType): StructType =
+    StructType(schema.fields.map(_.copy(nullable = true)))
 
   private def addJson(a: AddEntry, dataChange: Boolean = true): String = {
     val pv = a.partitionValues.toSeq.sortBy(_._1)
@@ -3486,11 +3424,6 @@ object DeltaSink {
     txn.record(written.map(w => new File(dir, w.rel).toPath): _*)
     written.map(w => AddEntry(w.rel, partitionValuesOf(w.rel), w.size, w.mtime, w.stats))
   }
-
-  /** The log line of a change-data-feed file. */
-  private def cdcJson(a: AddEntry): String =
-    s"""{"cdc":{"path":${esc(a.path)},"partitionValues":{},""" +
-      s""""size":${a.size},"dataChange":false}}"""
 
   /** Txn-unique data-file names: task partition and file counter. */
   private def txnNames(suffix: String = ".c000.snappy.parquet"): TaskWrite.Naming =
@@ -3569,8 +3502,8 @@ object DeltaSink {
 
   /** First-line in-commit timestamp of a commit file, if the commit
     * carries one. The feature requires commitInfo to be the FIRST action
-    * of every commit, so one line is the whole probe — no replay, no
-    * full-file read.
+    * of every commit (the encoder writes it first in every version), so
+    * one line is the whole probe — no replay, no full-file read.
     */
   private val IctRe = """"inCommitTimestamp"\s*:\s*(\d+)""".r
   private def ictOfFile(f: File): Option[Long] = {
@@ -3588,44 +3521,4 @@ object DeltaSink {
       body: Txn => A): A =
     Txn(store, conflict = e => new IllegalStateException(
       s"concurrent commit on $table during $verb; re-run the $verb", e))(body)
-
-  /** Claims log version `v` of `table` with `lines` for `txn`. */
-  private def claimVersion(txn: Txn, table: String, v: Long, lines: Seq[String]): Unit =
-    txn.claim(versionFile(table, v), commitBytes(versionFile(table, v), lines))
-
-  /** The single choke point every Delta commit flows through — which is
-    * what makes in-commit timestamps (spec §in-commit-timestamps) an
-    * invariant instead of a per-verb chore: once a commit carries a
-    * leading commitInfo with `inCommitTimestamp`
-    * ([[enableInCommitTimestamps]] plants the first), EVERY subsequent
-    * commit is stamped here with max(wall clock, previous ICT + 1) — the
-    * spec's monotonicity rule — by probing just the PREVIOUS commit's
-    * first line. Commits that already lead with their own commitInfo
-    * (the enablement commit) pass through untouched.
-    */
-  private def commitAtomic(store: CommitStore, target: java.nio.file.Path,
-      lines: Seq[String]): Unit =
-    store.putIfAbsent(target, commitBytes(target, lines))
-
-  /** The bytes of commit file `target` holding `lines`, ICT-stamped. */
-  private def commitBytes(target: java.nio.file.Path,
-      lines: Seq[String]): Array[Byte] = {
-    val name = target.getFileName.toString
-    val all =
-      if (!name.matches("\\d{20}\\.json") ||
-          lines.headOption.exists(_.startsWith("""{"commitInfo""""))) lines
-      else {
-        val v = name.stripSuffix(".json").toLong
-        val prevIct =
-          if (v == 0) None
-          else ictOfFile(target.getParent.resolve(f"${v - 1}%020d.json").toFile)
-        prevIct match {
-          case Some(p) =>
-            val ict = math.max(System.currentTimeMillis(), p + 1)
-            s"""{"commitInfo":{"inCommitTimestamp":$ict,"timestamp":$ict}}""" +: lines
-          case None => lines
-        }
-      }
-    (all.mkString("\n") + "\n").getBytes(StandardCharsets.UTF_8)
-  }
 }

@@ -281,6 +281,14 @@ private[graft] object IcebergAvro {
   private def keyMetaOf(r: DataFileReader[GenericRecord]): Map[String, String] =
     KeyMetaKeys.flatMap(k => Option(r.getMetaString(k)).map(k -> _)).toMap
 
+  /** A manifest's key metadata from its Avro header alone: no entry is
+    * decoded.
+    */
+  def readKeyMeta(f: File): Map[String, String] = {
+    val r = new DataFileReader[GenericRecord](f, new GenericDatumReader[GenericRecord]())
+    try keyMetaOf(r) finally r.close()
+  }
+
   /** THE manifest reader: one open with the file's own writer schema (any
     * partition struct shape round-trips), returning the key metadata and
     * the LIVE entries — status 2 (DELETED) entries are not part of the

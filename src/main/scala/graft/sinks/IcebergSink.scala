@@ -1955,8 +1955,8 @@ object IcebergSink {
         rows.partition(_.get("content").asInstanceOf[Int] == 0)
       if (dataRows.size <= 1) return (dataRows.size, dataRows.size)
       val groups = dataRows.groupBy { r =>
-        val m = IcebergAvro.readManifest(
-          new File(requireAvro(abs(table, r.get("manifest_path").toString)))).keyMeta
+        val m = IcebergAvro.readKeyMeta(
+          new File(requireAvro(abs(table, r.get("manifest_path").toString))))
         (m.getOrElse("partition-spec-id", "0"), m.getOrElse("partition-spec", ""),
           m.getOrElse("schema", ""))
       }

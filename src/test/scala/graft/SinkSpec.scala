@@ -5230,4 +5230,151 @@ class SinkSpec extends AnyFunSuite {
     assert(IcebergSink.read(spark, table).select("id").as[Long].collect().sorted.toSeq ==
       Seq(1L, 2L))
   }
+
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** The parsed actions of Delta log version `v`, in file order. */
+  private def logActions(table: String, v: Long): Seq[com.fasterxml.jackson.databind.JsonNode] =
+    Files.readAllLines(Paths.get(table, "_delta_log", f"$v%020d.json")).asScala.toSeq
+      .map(json.readTree)
+
+  test("Delta protocol rule: legacy pairs while they suffice, else writer 7 listing every active feature") {
+    val s = spark
+    import s.implicits._
+    def lastProtocol(table: String) = (0L to DeltaSink.latestVersion(table)).reverseIterator
+      .flatMap(v => logActions(table, v).flatMap(n => Option(n.get("protocol")))).next()
+    def versions(p: com.fasterxml.jackson.databind.JsonNode) =
+      (p.get("minReaderVersion").asInt, p.get("minWriterVersion").asInt)
+    def features(p: com.fasterxml.jackson.databind.JsonNode, key: String) =
+      p.get(key).elements().asScala.map(_.asText).toSet
+    def rows() = (1 to 10).map(i => (i.toLong, i.toDouble)).toDF("id", "v")
+    // generated columns sit on legacy (1,4); table statistics need
+    // domainMetadata, which has no legacy pair: writer 7 then lists both,
+    // and a reader-1 protocol carries no readerFeatures list
+    val gen = tmp()
+    assert(DeltaSink.writeGenerated(rows(), gen, Map("w" -> "v * 2")))
+    assert(versions(lastProtocol(gen)) == ((1, 4)))
+    DeltaSink.writeStats(spark, gen, Seq("id"))
+    val p1 = lastProtocol(gen)
+    assert(versions(p1) == ((1, 7)))
+    assert(features(p1, "writerFeatures") == Set("domainMetadata", "generatedColumns"))
+    assert(!p1.has("readerFeatures"), p1.toString)
+    // a CHECK constraint sits on legacy (1,3); deletion vectors are a
+    // reader feature, so the bump goes to (3,7) and keeps checkConstraints
+    val cc = tmp()
+    assert(DeltaSink.write(rows(), cc))
+    DeltaSink.addCheckConstraint(spark, cc, "v_pos", "v > 0")
+    assert(versions(lastProtocol(cc)) == ((1, 3)))
+    DeltaSink.deleteWhereDV(spark, cc, "id = 1")
+    val p2 = lastProtocol(cc)
+    assert(versions(p2) == ((3, 7)))
+    assert(features(p2, "writerFeatures") == Set("checkConstraints", "deletionVectors"))
+    assert(features(p2, "readerFeatures") == Set("deletionVectors"))
+    // in-commit timestamps are a writer-only feature
+    val ict = tmp()
+    assert(DeltaSink.write(rows(), ict))
+    DeltaSink.enableInCommitTimestamps(spark, ict)
+    val p3 = lastProtocol(ict)
+    assert(versions(p3) == ((1, 7)))
+    assert(features(p3, "writerFeatures") == Set("inCommitTimestamp"))
+    assert(!p3.has("readerFeatures"), p3.toString)
+    // column mapping stays on its legacy pair; a covered feature writes no
+    // protocol action
+    val cm = tmp()
+    assert(DeltaSink.write(rows(), cm))
+    DeltaSink.renameColumn(spark, cm, "v", "value")
+    assert(versions(lastProtocol(cm)) == ((2, 5)))
+    DeltaSink.renameColumn(spark, cm, "value", "val")
+    assert(!logActions(cm, DeltaSink.latestVersion(cm)).exists(_.has("protocol")))
+  }
+
+  test("Delta commitInfo names every version's operation; its metrics match the log and the census") {
+    val s = spark
+    import s.implicits._
+    type J = com.fasterxml.jackson.databind.JsonNode
+    def info(table: String, v: Long): J = {
+      val first = logActions(table, v).head
+      assert(first.has("commitInfo"), s"version $v must lead with commitInfo: $first")
+      first.get("commitInfo")
+    }
+    def census(table: String): Long = DeltaSink.read(spark, table).count()
+    // version v's operation, and its file metrics against its own actions
+    // (a removed file is priced by the add that brought it)
+    def check(table: String, v: Long, op: String): Map[String, Long] = {
+      val i = info(table, v)
+      assert(i.get("operation").asText == op, i.toString)
+      assert(i.has("timestamp") && i.has("operationParameters"), i.toString)
+      val m = i.get("operationMetrics").properties().asScala
+        .map(e => e.getKey -> e.getValue.asText.toLong).toMap
+      assert(!m.contains("numRecords"))
+      val acts = logActions(table, v)
+      def of(kind: String) = acts.flatMap(n => Option(n.get(kind)))
+      val (adds, removes) = (of("add"), of("remove"))
+      val addBytes = adds.map(_.get("size").asLong).sum
+      if (removes.isEmpty && !adds.exists(_.has("deletionVector"))) {
+        assert(m("numFiles") == adds.size && m("numOutputBytes") == addBytes, m)
+        assert(m("numOutputRows") == adds.map(a =>
+          json.readTree(a.get("stats").asText).get("numRecords").asLong).sum, m)
+      } else {
+        val sizes = (0L until v).flatMap(logActions(table, _)).flatMap(n => Option(n.get("add")))
+          .map(a => a.get("path").asText -> a.get("size").asLong).toMap
+        assert(m("numAddedFiles") == adds.size && m("numAddedBytes") == addBytes, m)
+        assert(m("numRemovedFiles") == removes.size, m)
+        assert(m("numRemovedBytes") == removes.map(r => sizes(r.get("path").asText)).sum, m)
+        assert(m.getOrElse("numDeletionVectorsAdded", 0L) ==
+          adds.count(_.has("deletionVector")), m)
+      }
+      assert(m.getOrElse("numAddedChangeFiles", 0L) == of("cdc").size, m)
+      m
+    }
+    val table = tmp()
+    // the verb, then its version's checked metrics and the rows it removed
+    def step(op: String)(verb: => Unit): (Map[String, Long], Long) = {
+      val before = census(table)
+      verb
+      (check(table, DeltaSink.latestVersion(table), op), before - census(table))
+    }
+    val base = (1 to 100).map(i => (i.toLong, i % 7, i.toDouble)).toDF("id", "g", "v")
+    assert(DeltaSink.write(base.coalesce(2), table))
+    assert(info(table, 0).get("operation").asText == "CREATE TABLE")
+    assert(check(table, 1, "WRITE")("numOutputRows") == census(table))
+    assert(info(table, 1).get("operationParameters").get("mode").asText == "ErrorIfExists")
+    val (appended, a) = step("WRITE") {
+      DeltaSink.append((101 to 120).map(i => (i.toLong, i % 7, i.toDouble))
+        .toDF("id", "g", "v"), table)
+    }
+    assert(appended("numOutputRows") == 20L && a == -20L)
+    val (deleted, d) = step("DELETE")(DeltaSink.deleteWhere(spark, table, "id % 10 = 0"))
+    assert(deleted("numDeletedRows") == 12L && d == 12L)
+    assert(info(table, DeltaSink.latestVersion(table)).get("operationParameters")
+      .get("predicate").asText == "id % 10 = 0")
+    val (dvDeleted, dd) = step("DELETE")(DeltaSink.deleteWhereDV(spark, table, "id % 10 = 1"))
+    assert(dvDeleted("numDeletedRows") == 12L && dd == 12L)
+    assert(dvDeleted("numDeletionVectorsAdded") > 0)
+    val (updated, u) = step("UPDATE") {
+      DeltaSink.updateWhere(spark, table, "id % 10 = 2", Map("v" -> "-1.0"))
+    }
+    assert(u == 0L && updated("numUpdatedRows") ==
+      DeltaSink.read(spark, table).filter(col("v") === -1.0).count())
+    var merged = (0, 0, 0)
+    val (mergeM, mg) = step("MERGE") {
+      merged = DeltaSink.merge(spark, table,
+        Seq((3L, 3, 30.0), (500L, 3, 5.0)).toDF("id", "g", "v"), Seq("id"))
+    }
+    assert(mg == -1L && mergeM("numRemovedFiles") == merged._1 &&
+      mergeM("numAddedFiles") == merged._3)
+    var compacted = (0, 0)
+    val (optimized, o) = step("OPTIMIZE") { compacted = DeltaSink.compact(spark, table) }
+    assert(o == 0L && optimized("numRemovedFiles") == compacted._1 &&
+      optimized("numAddedFiles") == compacted._2)
+    val clone = tmp()
+    val cloned = DeltaSink.cloneTable(spark, table, clone)
+    assert(info(clone, 0).get("operation").asText == "CLONE")
+    val cm = check(clone, 1, "CLONE")
+    assert(cm("numFiles") == cloned && cm("numOutputRows") == census(clone))
+    var restored = (0, 0)
+    val (restoreM, _) = step("RESTORE") { restored = DeltaSink.restore(spark, table, 1L) }
+    assert(restoreM("numAddedFiles") == restored._1 &&
+      restoreM("numRemovedFiles") == restored._2 && census(table) == 100L)
+  }
 }
